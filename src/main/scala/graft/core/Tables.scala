@@ -39,7 +39,7 @@ object Tables {
     // scan (a cast wrapper would block pushdown).
     val path = s"$dir/$name.parquet"
     val reader = spark.read.option("inferTimestampNTZ", "false")
-    val key = (path, new java.io.File(path).lastModified,
+    val key = (path, modificationTime(spark, path),
       spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").getOrElse(""))
     val cached = schemaCache.get(key)
     val df =
@@ -55,6 +55,16 @@ object Tables {
     df.schema.fields.find(f => f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType)
       .map(_ => df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)")))
       .getOrElse(df)
+  }
+
+  /** The Hadoop modification stamp of `path` (0 when it does not exist;
+    * the read then fails as usual). Unlike `java.io.File.lastModified`,
+    * it resolves `file:` URIs and non-local filesystems. */
+  private def modificationTime(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+    catch { case _: java.io.FileNotFoundException => 0L }
   }
 
   /** Normalize an event-time column to TimestampType: parquet written as

@@ -330,10 +330,8 @@ object EmbedDiagnostics {
                   labelCol: String): DataFrame = {
     // tight-loop sum-of-squares kernel — identical IEEE sum (cast each
     // element to double, multiply, accumulate in index order) to the
-    // interpreted aggregate(transform(...)) it replaces; in anisotropy
-    // this expression sits INSIDE the normalize lambda and was being
-    // re-evaluated per element (O(d²) interpreted work per row, the
-    // whole query's single-task hot spot)
+    // interpreted aggregate(transform(...)) it replaces; here it runs
+    // once per row to give that row's L2 norm
     val norm = sqrt(graft.functions.VecKernels.sqnormCast(col(vecCol)))
     df.filter(col(vecCol).isNotNull)
       .select(col(labelCol).as("label"), round(norm, 6).as("__n"))

@@ -1,6 +1,6 @@
 package graft.stores
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One artifact's catalog row — the persistent analogue of the
   * reference's Artifact metadata (tags / health tags / owner / status /
@@ -20,13 +20,12 @@ case class ArtifactRow(
     health_tags: Seq[String],
     meta: Map[String, String])
 
-/** Persistent artifact registry: a small parquet-backed catalog table,
-  * one row per artifact. This plays the role of the Glue catalog +
-  * resource tags in the reference — every mutation is a read-modify-write
-  * of driver-side metadata (bounded: one row per artifact, like Glue),
-  * installed as an immutable numbered generation dir (one atomic rename;
-  * see the layout note inside) so concurrent readers never lose a file
-  * set they already resolved.
+/** Persistent artifact registry: a [[MetaTable]] with one row per
+  * artifact. This plays the role of the Glue catalog + resource tags in
+  * the reference — every mutation is a locked read-modify-write of
+  * driver-side metadata installed as a new immutable generation, and
+  * every read is served from the generation cache (see [[MetaTable]]
+  * for the protocol shared with [[ParameterStore]]).
   *
   * Semantics matched to `artifact.py`:
   *  - tags are ordered and duplicate-free on add (`add_tag`, :308-321)
@@ -36,187 +35,19 @@ case class ArtifactRow(
   *    ready (`:395-409`)
   *  - `summary` merges the basic fields with the free-form meta (`:411-425`)
   */
-object Registry {
-  /** JVM-wide rows cache keyed by immutable generation-dir path. A
-    * generation's content can never change after its rename makes it
-    * visible, so hits are exact (never stale) — cross-process writers
-    * surface as NEW generation paths, which fresh listings resolve.
-    * Bounded defensively; entries are a handful of metadata rows. */
-  private val genCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[ArtifactRow]]()
-  private def cachePut(key: String, rs: Seq[ArtifactRow]): Unit = {
-    if (genCache.size > 8192) genCache.clear()
-    genCache.put(key, rs); ()
-  }
-}
-
 class Registry(spark: SparkSession, root: String) {
   import spark.implicits._
 
-  private val path = root + "/_registry"
-  private def hPath(s: String) = new org.apache.hadoop.fs.Path(s)
-  private def fs = hPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val table = new MetaTable[ArtifactRow](spark, root + "/_registry")
 
   private def now() = new java.sql.Timestamp(System.currentTimeMillis())
 
-  // ── storage layout: immutable numbered GENERATION dirs ──
-  //
-  // The r13 swap (write tmp → rotate to _bak → rename into place) made
-  // WRITES crash-safe but left readers racing the rotation: a reader
-  // that listed the live dir's part-files lost them to the rename/delete
-  // before its scan task ran — the 10× bench ladder reproduced exactly
-  // that as FileScanRDD FILE_NOT_EXIST task failures inside q91/q94's
-  // concurrent inferences (r13 verdict item 1). Generations remove the
-  // race instead of retrying it: every write lands as a NEW immutable
-  // subdir `gen-<n>-<uuid>` (made visible by one atomic rename), readers
-  // resolve the newest generation with a fresh listing, and the writer
-  // GCs only generations at least two behind — so a file set a reader
-  // resolved stays on disk for two full write cycles. The same
-  // immutability makes reads cacheable: a generation's rows can never
-  // change, so one JVM-wide map (gen path → rows) turns every repeat
-  // read into zero Spark jobs (the Glue-catalog role this class plays
-  // is driver-side metadata in the reference too).
-  private def genNum(st: org.apache.hadoop.fs.FileStatus): Long =
-    st.getPath.getName.split("-")(1).toLong
-
-  private def listing(): Seq[org.apache.hadoop.fs.FileStatus] =
-    if (!fs.exists(hPath(path))) Seq.empty else fs.listStatus(hPath(path)).toSeq
-
-  /** Newest readable copy: max generation dir; a flat part-file layout
-    * written by the pre-generation code reads as the zeroth generation
-    * (the dir itself — not cached, it is mutable). */
-  private def readSource(): Option[String] = {
-    val st = listing()
-    val gens = st.filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-"))
-    if (gens.nonEmpty) Some(gens.maxBy(genNum).getPath.toString)
-    else if (st.exists(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
-      Some(fs.makeQualified(hPath(path)).toString)
-    else None
-  }
-
-  private val qualifiedDir = () => fs.makeQualified(hPath(path)).toString
-
-  private def rows(): Seq[ArtifactRow] = {
-    // residual READ-SIDE GUARD: a reader that resolved generation n−1
-    // just before n landed can still lose it to the GC two writes later;
-    // every generation is complete, so a loser re-resolves and retries.
-    var attempt = 0
-    while (attempt < 8) {
-      readSource() match {
-        case None => return Seq.empty
-        case Some(src) =>
-          val hit = Registry.genCache.get(src)
-          if (hit != null) return hit
-          try {
-            val rs = spark.read.parquet(src).as[ArtifactRow].collect().toSeq
-            if (src != qualifiedDir()) Registry.cachePut(src, rs)
-            return rs
-          } catch { case scala.util.control.NonFatal(_) =>
-            attempt += 1; Thread.sleep(20) }
-      }
-    }
-    readSource() // last try, loud
-      .map(src => spark.read.parquet(src).as[ArtifactRow].collect().toSeq)
-      .getOrElse(Seq.empty)
-  }
-
-  private def swapIn(updated: Seq[ArtifactRow]): Unit = {
-    val st = listing()
-    val gens = st.filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-"))
-    val next = if (gens.isEmpty) 0L else gens.map(genNum).max + 1
-    val uuid = java.util.UUID.randomUUID().toString
-    val tmp = s"$path/.tmp-$uuid" // dot-dir: invisible to readers until renamed
-    updated.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    val genDir = hPath(f"$path/gen-$next%09d-$uuid")
-    fs.rename(hPath(tmp), genDir)
-    // the writer KNOWS the rows it just installed: seed the cache so the
-    // read-back that every get/update does costs no Spark job at all
-    Registry.cachePut(fs.makeQualified(genDir).toString, updated)
-    // GC: generations two or more behind (in-flight readers may still
-    // hold the previous one), plus any flat pre-generation part-files
-    gens.filter(g => genNum(g) <= next - 2)
-      .foreach(g => fs.delete(g.getPath, true))
-    st.filter(_.isFile).foreach(s => fs.delete(s.getPath, false))
-  }
-
-  /** Mutual exclusion for the read-modify-write cycle: an atomic
-    * create-if-absent lockfile (the filesystem analogue of the
-    * reference's Glue DDL retry/backoff — athena_source.py:253-288).
-    * A lock older than `staleMs` is treated as a crashed writer's
-    * leftover and broken. */
-  private def tryAcquire(lock: org.apache.hadoop.fs.Path, token: String): Boolean = {
-    val scheme = lock.toUri.getScheme
-    if (scheme == null || scheme == "file") {
-      // Hadoop's RawLocalFileSystem.createNewFile is check-then-act;
-      // java.nio Files.createFile is the actually-atomic local primitive
-      try {
-        val p = java.nio.file.Paths.get(lock.toUri.getPath)
-        java.nio.file.Files.createFile(p)
-        java.nio.file.Files.write(p, token.getBytes("UTF-8"))
-        true
-      } catch { case _: java.io.IOException => false }
-    } else // HDFS/object stores: create(overwrite=false) is atomic server-side
-      try {
-        val out = fs.create(lock, false)
-        out.write(token.getBytes("UTF-8")); out.close(); true
-      } catch { case _: Exception => false }
-  }
-
-  private def lockToken(lock: org.apache.hadoop.fs.Path): Option[String] =
-    try {
-      val in = fs.open(lock)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        Some(new String(buf, 0, math.max(n, 0), "UTF-8"))
-      } finally in.close()
-    } catch { case _: Exception => None }
-
-  private def withLock[T](staleMs: Long = 60000L, timeoutMs: Long = 30000L)(f: => T): T = {
-    val lock = hPath(path + "_lock")
-    // a unique token identifies THIS acquisition: after breaking a stale
-    // lock, the (possibly still-live) previous holder's release must not
-    // free the lock out from under the new holder — each writer deletes
-    // only the lockfile carrying its own token
-    val token = java.util.UUID.randomUUID().toString
-    fs.mkdirs(lock.getParent) // first-ever write: the root may not exist yet
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var acquired = false
-    while (!acquired) {
-      acquired = tryAcquire(lock, token)
-      if (!acquired) {
-        val stale = try {
-          System.currentTimeMillis() - fs.getFileStatus(lock).getModificationTime > staleMs
-        } catch { case _: Exception => false } // holder released between checks
-        // break a stale lock by atomic RENAME, not delete: two waiters
-        // that both judged it stale would otherwise both delete — the
-        // second delete landing AFTER the first waiter re-acquired,
-        // destroying a live lock and letting both enter the critical
-        // section. Rename succeeds for exactly one breaker; the loser
-        // just loops back to tryAcquire.
-        if (stale) {
-          val broken = hPath(lock.toString + ".stale-" + token)
-          try { if (fs.rename(lock, broken)) fs.delete(broken, false) }
-          catch { case _: Exception => () }
-        }
-        else if (System.currentTimeMillis() > deadline)
-          throw new IllegalStateException(
-            s"registry lock at $lock not released within ${timeoutMs}ms")
-        else Thread.sleep(20)
-      }
-    }
-    try f finally {
-      if (lockToken(lock).contains(token)) fs.delete(lock, false)
-    }
-  }
-
   private def update(name: String)(f: ArtifactRow => ArtifactRow): Unit =
-    withLock() {
-      val existing = rows()
+    table.update { existing =>
       val row = existing.find(_.name == name).getOrElse(
         ArtifactRow(name, "unknown", "unknown", "unknown", "unknown",
           now(), now(), Seq.empty, Seq.empty, Map.empty))
-      swapIn(existing.filterNot(_.name == name) :+ f(row).copy(modified = now()))
+      existing.filterNot(_.name == name) :+ f(row).copy(modified = now())
     }
 
   /** Create-or-touch the registry row (`created` is set once). */
@@ -233,12 +64,11 @@ class Registry(spark: SparkSession, root: String) {
       owner = owner, status = "ready", health_tags = Seq.empty,
       meta = r.meta ++ meta))
 
-  def get(name: String): Option[ArtifactRow] = rows().find(_.name == name)
-  def listNames(): Seq[String] = rows().map(_.name).sorted
+  def get(name: String): Option[ArtifactRow] = table.rows().find(_.name == name)
+  def listNames(): Seq[String] = table.rows().map(_.name).sorted
   def list(): DataFrame =
-    rows().sortBy(_.name).toDS().toDF()
-  def delete(name: String): Unit =
-    withLock() { swapIn(rows().filterNot(_.name == name)) }
+    table.rows().sortBy(_.name).toDS().toDF()
+  def delete(name: String): Unit = table.update(_.filterNot(_.name == name))
 
   /** Merge new keys into the artifact's free-form metadata
     * (reference: `upsert_workbench_meta`, artifact.py:238-276). */

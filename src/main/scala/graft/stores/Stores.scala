@@ -7,7 +7,9 @@ import org.apache.spark.sql.types._
 /** Storage layer — the reference's four stores re-based on parquet dirs.
   *
   * All stores are path-keyed directories of parquet (the reference keys
-  * S3 prefixes the same way); no driver-side materialization anywhere.
+  * S3 prefixes the same way). Data stores never materialize on the
+  * driver; the metadata-sized ones ([[ParameterStore]], [[Registry]])
+  * are [[MetaTable]]s, read and written on the driver.
   */
 object Stores {
   /** Coerce a frame to a fixed schema: shared columns cast, missing
@@ -19,15 +21,14 @@ object Stores {
       else lit(null).cast(f.dataType).as(f.name)
     }.toIndexedSeq: _*)
 
-  /** Per-root JVM mutation lock for the read-modify-swap stores
-    * ([[ParameterStore]]) and the shared append table
+  /** Per-root JVM mutation lock for the shared append table
     * ([[InferenceStore]]): lifecycle operators may drive several
     * endpoints' inferences CONCURRENTLY (guide §2.6 — overlap
-    * independent jobs), and two unsynchronized swaps/appends on the
-    * same root lose updates (swap) or collide in _temporary (append).
-    * The Registry already carries its own file-based lock; these two
-    * get the cheap in-process form (cross-process safety is out of
-    * scope exactly as it is for the reference's SSM/parquet stores). */
+    * independent jobs), and two unsynchronized appends on the same root
+    * collide in _temporary. The metadata stores ([[Registry]],
+    * [[ParameterStore]]) carry [[MetaTable]]'s file-based lock instead;
+    * this is the cheap in-process form (cross-process safety is out of
+    * scope exactly as it is for the reference's parquet store). */
   private val rootLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[stores] def lockFor(root: String): Object =
@@ -105,52 +106,28 @@ class DFStore(spark: SparkSession, root: String) {
 class Reports(spark: SparkSession, dfStoreRoot: String)
   extends DFStore(spark, dfStoreRoot + "/reports")
 
+/** One parameter: a key and its JSON value. */
+case class ParamRow(key: String, value: String)
+
 /** Key-value JSON parameter store
   * (reference: src/workbench/api/parameter_store.py:1-92, AWS SSM-backed).
-  * Stored as a single small parquet KV table; values are JSON strings.
+  * A [[MetaTable]] of (key, value) rows, values JSON strings: the same
+  * generation protocol, lock and generation cache as [[Registry]], so
+  * `get`, `listKeys` and the read inside `upsert` cost no Spark job once
+  * this JVM has written or read the current generation.
   */
 class ParameterStore(spark: SparkSession, root: String) {
   import spark.implicits._
-  private val path = root + "/_parameters"
-  private def hPath(s: String) = new org.apache.hadoop.fs.Path(s)
-  private def fs = hPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val table = new MetaTable[ParamRow](spark, root + "/_parameters")
 
-  /** Read main, falling back to the backup generation — a crash between
-    * the two swap renames leaves the previous state readable. */
-  private def table(): DataFrame = {
-    val candidates = Seq(path, path + "_bak").filter(p => fs.exists(hPath(p)))
-    candidates.headOption.map(spark.read.parquet(_))
-      .getOrElse(Seq.empty[(String, String)].toDF("key", "value"))
-  }
+  def upsert(key: String, jsonValue: String): Unit =
+    table.update(_.filterNot(_.key == key) :+ ParamRow(key, jsonValue))
 
-  /** Write-new → rotate-old-to-backup → rename-new-into-place. Unlike a
-    * delete-then-rename there is no window where no readable generation
-    * exists; worst case after a crash is the previous state. */
-  private def swapIn(updated: DataFrame): Unit = {
-    val tmp = path + "_tmp"; val bak = path + "_bak"
-    updated.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    fs.delete(hPath(bak), true)
-    if (fs.exists(hPath(path))) fs.rename(hPath(path), hPath(bak))
-    fs.rename(hPath(tmp), hPath(path))
-    fs.delete(hPath(bak), true)
-  }
+  def get(key: String): Option[String] = table.rows().find(_.key == key).map(_.value)
 
-  private val lock = Stores.lockFor(path)
+  def delete(key: String): Unit = table.update(_.filterNot(_.key == key))
 
-  def upsert(key: String, jsonValue: String): Unit = lock.synchronized {
-    swapIn(table().filter(col("key") =!= key)
-      .unionByName(Seq((key, jsonValue)).toDF("key", "value")))
-  }
-
-  def get(key: String): Option[String] = lock.synchronized {
-    table().filter(col("key") === key).collect().headOption.map(_.getString(1))
-  }
-
-  def delete(key: String): Unit =
-    lock.synchronized { swapIn(table().filter(col("key") =!= key)) }
-
-  def listKeys(): Seq[String] =
-    lock.synchronized { table().select("key").as[String].collect().toSeq }
+  def listKeys(): Seq[String] = table.rows().map(_.key)
 }
 
 /** Append-only inference results table with the reference's fixed schema

@@ -205,6 +205,50 @@ class ReviewRegressionSpec extends SparkSpec {
     assert(reg.listNames() == Seq("newcomer", "survivor", "third"))
     val after = fs.listStatus(dir).filter(_.getPath.getName.startsWith("gen-"))
     assert(after.length <= 2, "old generations must be GC'd to at most previous+current")
+    // a .tmp-* dir older than the stale-lock age is a crashed writer's and
+    // is GC'd; a fresh one may belong to a live writer and stays
+    val old = new org.apache.hadoop.fs.Path(dir, ".tmp-old-crash")
+    fs.mkdirs(old)
+    fs.setTimes(old, System.currentTimeMillis() - 600000L, -1)
+    reg.upsert("fourth", "data_source")
+    assert(!fs.exists(old), "stale .tmp-* dir not collected")
+    assert(fs.exists(new org.apache.hadoop.fs.Path(dir, ".tmp-crashed")),
+      "a fresh .tmp-* dir was collected under a possibly live writer")
+  }
+
+  test("registry and parameter writes whose install rename fails throw and leave state intact") {
+    val local = java.nio.file.Files.createTempDirectory("graft-renamefail").toString
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.refuserename.impl", classOf[RenameRefusingFs].getName)
+    val root = "refuserename://" + local
+    val reg = new graft.stores.Registry(spark, root)
+    val ps = new graft.stores.ParameterStore(spark, root)
+    reg.upsert("survivor", "data_source")
+    ps.upsert("k", "1")
+    RenameRefusingFs.refuse = true
+    try {
+      intercept[java.io.IOException](reg.upsert("lost", "data_source"))
+      intercept[java.io.IOException](ps.upsert("k", "2"))
+    } finally RenameRefusingFs.refuse = false
+    assert(reg.listNames() == Seq("survivor"))
+    assert(ps.get("k").contains("1"))
+    for (d <- Seq("_registry", "_parameters")) {
+      val names = new java.io.File(local, d).list().toSeq
+      assert(!names.exists(_.startsWith(".tmp-")), s"$d kept the failed tmp dir: $names")
+    }
+    reg.upsert("after", "data_source")
+    assert(reg.listNames() == Seq("after", "survivor"))
+  }
+
+  test("Tables.load sees a table rewritten in place behind a file: URI") {
+    val local = java.nio.file.Files.createTempDirectory("graft-tables-uri").toString
+    val dir = "file://" + local
+    Seq((1, "a")).toDF("id", "s").write.parquet(s"$local/t.parquet")
+    assert(graft.core.Tables.load(spark, dir, "t").columns.toSeq == Seq("id", "s"))
+    Thread.sleep(1100) // coarse filesystem timestamps
+    Seq((1, "a", 2.0)).toDF("id", "s", "extra")
+      .write.mode("overwrite").parquet(s"$local/t.parquet")
+    assert(graft.core.Tables.load(spark, dir, "t").columns.toSeq == Seq("id", "s", "extra"))
   }
 
   test("registry survives concurrent writers and readers (r13 ladder FileScanRDD race)") {
@@ -387,3 +431,15 @@ class ReviewRegressionSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 }
+
+/** Local filesystem under the `refuserename` scheme whose rename into a
+  * `gen-*` dir reports failure while `refuse` is set — the
+  * `FileSystem.rename` returns-false contract, which the local
+  * filesystem does not produce on demand. */
+class RenameRefusingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("refuserename:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    if (RenameRefusingFs.refuse && dst.getName.startsWith("gen-")) false
+    else super.rename(src, dst)
+}
+object RenameRefusingFs { @volatile var refuse = false }
