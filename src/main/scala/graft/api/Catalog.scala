@@ -96,9 +96,18 @@ class Catalog(val spark: SparkSession, val root: String) {
     registry.deleteMetaKey(base, s"$ViewSqlKey$view")
   }
 
+  /** External session-catalog table over the onboarded dir. Its schema
+    * comes from one footer on the driver; only a partitioned dir leaves
+    * it to `CREATE TABLE`'s own inference job. */
   private def registerTable(name: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    spark.sql(s"CREATE TABLE `$name` USING parquet LOCATION '${tablePath(name)}'")
+    graft.stores.DriverParquet.schemaOf(spark, tablePath(name)) match {
+      case Some(schema) =>
+        spark.catalog.createTable(s"`$name`", "parquet", schema,
+          Map("path" -> tablePath(name)))
+      case None =>
+        spark.sql(s"CREATE TABLE `$name` USING parquet LOCATION '${tablePath(name)}'")
+    }
   }
 
   /** Open an onboarded artifact (stats cache reads/writes through the

@@ -10,12 +10,14 @@ import org.apache.spark.sql.functions._
   *
   * Inference results are cached in a catalog-owned parquet directory
   * keyed on `cacheKeyColumn`. `inference(df)` splits the eval rows into
-  * cache hits and misses with one anti-join against the cache keys, runs
-  * the wrapped endpoint on the DISTINCT missed keys only, appends the
-  * new results to the cache, and left-joins the up-to-date cache back
-  * onto the eval frame. Key comparisons are NULL-SAFE (`<=>`): a null
-  * key is one more cache entry, computed once and served like any other,
-  * not a permanent every-call miss.
+  * cache hits and misses with one anti-join against the cache keys,
+  * local-checkpoints the DISTINCT missed keys once (their count decides
+  * the all-hits short-circuit and feeds the fan-out guard), runs the
+  * wrapped endpoint on them only, appends the new results to the cache,
+  * and left-joins the up-to-date cache back onto the eval frame. Key
+  * comparisons are NULL-SAFE (`<=>`): a null key is one more cache
+  * entry, computed once and served like any other, not a permanent
+  * every-call miss.
   *
   * Spark-first divergences from the pandas reference:
   *  - the reference chunks uncached rows (snapshot=500) and rewrites the
@@ -26,8 +28,9 @@ import org.apache.spark.sql.functions._
   *  - keep-last key dedup is a row_number window partitioned by the key
   *    (one keyed shuffle of the cache side) instead of pandas
   *    `drop_duplicates(keep="last")`
-  *  - the cache is never materialized on the driver; the returned frame
-  *    is lazy like every other operator
+  *  - the cache is never materialized on the driver (its schema comes
+  *    from one parquet footer); the returned frame is lazy like every
+  *    other operator
   *
   * Caveats shared with the reference:
   *  - one writer per endpoint cache at a time (the reference's client
@@ -142,12 +145,12 @@ class InferenceCache(val endpoint: Endpoint,
         df.join(ck, key <=> col("__cache_key"), "left_anti")
       case None => df
     }
-    val toCompute = misses.dropDuplicates(cacheKeyColumn)
-    // all-hits short-circuit: limit-1 probe of the anti-join beats an
-    // unconditional endpoint run + empty append + manifest rewrite on
-    // every warm call
-    val hasMisses = existing.isEmpty || !toCompute.isEmpty
-    if (hasMisses) {
+    // the distinct miss set, checkpointed ONCE: its row count is the
+    // all-hits short-circuit (no endpoint run, empty append or manifest
+    // rewrite on a warm call) and the fan-out guard's input side below
+    val (toCompute, missCount) =
+      InferenceCache.checkpointed(misses.dropDuplicates(cacheKeyColumn))
+    if (existing.isEmpty || missCount > 0L) {
       val out = endpoint.inference(toCompute, captureName, idColumn)
       // endpoints that canonicalize the key column return the original
       // input value in `outputKeyColumn` — cache under THAT value so
@@ -159,8 +162,8 @@ class InferenceCache(val endpoint: Endpoint,
       // checkpoint the endpoint output: the appended frame is miss-only
       // (small by nature), and pinning it lets the fan-out check below
       // count it without re-running the endpoint transform
-      val stamped = keyed.withColumn(TsCol, lit(System.currentTimeMillis()))
-        .localCheckpoint()
+      val (stamped, outCount) = InferenceCache.checkpointed(
+        keyed.withColumn(TsCol, lit(System.currentTimeMillis())))
       // key-uniqueness provenance (see latestPerKey), judged BEFORE the
       // append mutates the directory: a guarded append keeps a
       // fresh-or-provably-unique cache unique; a stale stamp (someone
@@ -173,7 +176,7 @@ class InferenceCache(val endpoint: Endpoint,
       // exactly one row per distinct input key; an endpoint that fans
       // rows out would append duplicate keys, so such an append records
       // false and future reads take the keyed window as before
-      val oneRowPerKey = stamped.count() == toCompute.count()
+      val oneRowPerKey = outCount == missCount
       // the append is the ONE action that runs the endpoint transform;
       // both hit- and miss-rows are then served from the updated cache
       store.append(cachePath,
@@ -239,5 +242,15 @@ class InferenceCache(val endpoint: Endpoint,
     if (kept.isEmpty) store.delete(cachePath)
     else store.upsert(cachePath, kept)
     removed
+  }
+}
+
+private object InferenceCache {
+  /** `df` local-checkpointed and its row count, from ONE job: the count
+    * runs over the checkpoint's own RDD and materializes it (an eager
+    * checkpoint's count plus a `Dataset.count()` would be three). */
+  private def checkpointed(df: DataFrame): (DataFrame, Long) = {
+    val cp = df.localCheckpoint(eager = false)
+    (cp, cp.rdd.count())
   }
 }

@@ -106,7 +106,8 @@ class Model(val catalog: Catalog, val name: String) {
     val p = new org.apache.hadoop.fs.Path(
       catalog.inferencePath(name, capture) + "/" + file)
     val fs = p.getFileSystem(catalog.spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(catalog.spark.read.parquet(p.toString)) else None
+    if (fs.exists(p)) Some(graft.stores.DriverParquet.read(catalog.spark, p.toString))
+    else None
   }
   /** Stored metrics for a capture (model_core.py:305-345). */
   def getInferenceMetrics(capture: String = "default"): Option[DataFrame] =
@@ -142,8 +143,8 @@ class Model(val catalog: Catalog, val name: String) {
           org.apache.spark.sql.types.DoubleType),
         org.apache.spark.sql.types.StructField("rank",
           org.apache.spark.sql.types.IntegerType)))
-      catalog.spark.createDataFrame(
-        catalog.spark.sparkContext.parallelize(rows.toList, 1), schema)
+      // a local relation: collecting it runs no Spark job
+      catalog.spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     }
 }
 
@@ -272,9 +273,9 @@ class Endpoint(val catalog: Catalog, val name: String) {
     // a captured run has 4-5 consumers (predictions write, metrics,
     // confusion matrix, InferenceStore append, data capture) plus the
     // caller — materialize ONCE instead of re-running the transform/
-    // residual plan per consumer (same reasoning as driftReport's
-    // persist; localCheckpoint so the blocks outlive this method for
-    // the caller and are GC-reclaimed when the frame is dropped)
+    // residual plan per consumer (localCheckpoint so the blocks outlive
+    // this method for the caller and are GC-reclaimed when the frame is
+    // dropped)
     val withRes =
       if (captureName.isDefined || mon.captureEnabled) withRes0.localCheckpoint(true)
       else withRes0
@@ -440,7 +441,10 @@ class Endpoint(val catalog: Catalog, val name: String) {
     preds.select(keep.map(col).toIndexedSeq: _*)
       .write.mode("overwrite").parquet(dir + "/predictions")
     metrics.foreach { mt =>
-      mt.write.mode("overwrite").parquet(dir + "/metrics")
+      // metadata-sized: collected ONCE, written on the driver and reused
+      // for the metrics-into-meta upsert below
+      val mtRows = mt.collect()
+      graft.stores.DriverParquet.writeTable(catalog.spark, dir + "/metrics", mt.schema, mtRows)
       // metrics-into-meta: the dashboard-facing summary the reference
       // stores on the model package (model_core.py details/metrics).
       // The 'all'-row-vs-head convention is owned by
@@ -449,7 +453,7 @@ class Endpoint(val catalog: Catalog, val name: String) {
       // Locale.ROOT: the f-interpolator honors the JVM default locale,
       // and a comma-decimal locale would store "0,123456" — unparseable
       // by every downstream .toDouble
-      ModelComparison.metricsRowOf(mt).foreach { cells =>
+      ModelComparison.metricsRowOf(mt.columns.toSeq, mtRows).foreach { cells =>
         val kv = cells.map { case (c, v) =>
           s"graft_metric/$capture/$c" ->
             String.format(java.util.Locale.ROOT, "%.6f", Double.box(v))

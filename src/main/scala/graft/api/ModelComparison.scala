@@ -22,16 +22,20 @@ object ModelComparison {
     * row, regressors their single row. Shared by the comparison/contest
     * stack and `captureRun`'s metrics-into-meta — ONE place owns the
     * 'all'-row convention. */
-  private[api] def metricsRowOf(df: DataFrame): Option[Seq[(String, Double)]] = {
-    val rows = df.collect() // metrics frames are metadata-sized
-    val classIdx = df.columns.indexOf("class")
+  private[api] def metricsRowOf(df: DataFrame): Option[Seq[(String, Double)]] =
+    metricsRowOf(df.columns.toSeq, df.collect()) // metrics frames are metadata-sized
+
+  /** [[metricsRowOf]] over already-collected rows of a frame with `columns`. */
+  private[api] def metricsRowOf(columns: Seq[String],
+                                rows: Array[Row]): Option[Seq[(String, Double)]] = {
+    val classIdx = columns.indexOf("class")
     val rowOpt =
       if (classIdx >= 0)
         rows.find(r => !r.isNullAt(classIdx) && r.getString(classIdx) == "all")
           .orElse(rows.headOption)
       else rows.headOption
     rowOpt.map { r =>
-      df.columns.zipWithIndex.toSeq.collect {
+      columns.zipWithIndex.collect {
         case (c, i) if !r.isNullAt(i) && r.get(i).isInstanceOf[Number] =>
           c -> r.get(i).asInstanceOf[Number].doubleValue
       }

@@ -1,8 +1,8 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
 
 /** Monitor artifact: endpoint data-capture + baseline + drift, composing
   * [[graft.sources.DataCapture]] with the quality pack
@@ -13,10 +13,17 @@ import org.apache.spark.sql.types.StructType
   *
   * The SageMaker machinery (processing jobs, schedules, CloudWatch)
   * collapses into: capture = JSONL records the endpoint writes on
-  * inference; baseline = parquet + one stats/constraints table; checks =
-  * one aggregate pass over current data joined against the persisted
-  * constraints. Everything lives under the catalog root, so a new
-  * session reopens the monitor by name.
+  * inference; baseline = parquet + statistics and constraints tables;
+  * checks = one aggregate pass over current data joined against the
+  * persisted constraints. Everything lives under the catalog root, so a
+  * new session reopens the monitor by name.
+  *
+  * Every result here is metadata-sized (one row per column), so each
+  * call runs one aggregate pass per frame it scans and finishes on the
+  * driver: the statistics and constraints tables are written by
+  * [[graft.stores.DriverParquet]], drift and constraint reports come back
+  * as local relations, and stored tables are read with their schema from
+  * one footer.
   */
 class Monitor(val catalog: Catalog, val endpointName: String) {
   private def spark: SparkSession = catalog.spark
@@ -56,51 +63,50 @@ class Monitor(val catalog: Catalog, val endpointName: String) {
   /** Persist the baseline rows, their descriptive statistics, and
     * suggested constraints (per column: completeness + observed
     * [min, max] range — the useful core of SageMaker's
-    * suggest_baseline constraints.json). */
+    * suggest_baseline constraints.json). The statistics and the
+    * constraints come from ONE aggregate pass (the statistics'
+    * expressions are [[graft.eda.Eda.descriptiveStats]]'), whose single
+    * row is reshaped and written on the driver. */
   def createBaseline(df: DataFrame, cols: Seq[String],
                      recreate: Boolean = false): Unit = {
     if (baselineExists && !recreate) return
-    // three consumers of the same input (baseline write, statistics,
-    // constraints) — materialize the upstream plan once instead of
-    // re-running it per consumer (same values, one scan)
+    // two consumers of the same input (baseline write, the statistics
+    // pass) — materialize the upstream plan once
     val src = df.persist()
     try {
       src.write.mode("overwrite").parquet(s"$baselineDir/baseline")
-      graft.eda.Eda.descriptiveStats(src, cols)
-        .write.mode("overwrite").parquet(s"$baselineDir/statistics")
-      // ONE aggregate pass for all columns, stacked to long form on the
-      // driver (metadata-sized: one row per column)
       val n = count(lit(1))
-      val aggs = cols.flatMap(c => Seq(
+      val aggs = graft.eda.Eda.statsAggs(cols) ++ cols.flatMap(c => Seq(
         (count(col(c)) / n).cast("double").as(s"${c}__completeness"),
         min(col(c)).cast("double").as(s"${c}__lower"),
         max(col(c)).cast("double").as(s"${c}__upper")))
-      val row = src.agg(aggs.head, aggs.tail: _*).head()
-      smallTable(cols, row, Seq("completeness", "lower", "upper"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$baselineDir/constraints")
+      val row = graft.eda.Eda.statsFinish(
+        graft.eda.Eda.statsInput(src, cols).agg(aggs.head, aggs.tail: _*), cols)
+        .collect().head
+      for ((table, metrics) <- Seq("statistics" -> graft.eda.Eda.StatNames,
+          "constraints" -> Seq("completeness", "lower", "upper"))) {
+        val (schema, rows) = longForm(cols, row, metrics)
+        graft.stores.DriverParquet.writeTable(spark, s"$baselineDir/$table", schema, rows)
+      }
     } finally df.unpersist(false)
   }
 
-  /** Long-form (column_name, metric…) table from one wide agg row —
-    * metadata-sized driver reshape, no extra scans. */
-  private def smallTable(cols: Seq[String], row: org.apache.spark.sql.Row,
-                         metrics: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, StringType, StructField}
+  /** Long-form (column_name, metric…) rows from one wide agg row whose
+    * `<c>__<metric>` fields are doubles — a metadata-sized driver
+    * reshape, no extra scans. */
+  private def longForm(cols: Seq[String], row: Row,
+                       metrics: Seq[String]): (StructType, Seq[Row]) = {
     def g(c: String, k: String): Any = {
       val i = row.fieldIndex(s"${c}__$k")
       if (row.isNullAt(i)) null else row.getDouble(i)
     }
-    val rows = cols.map(c =>
-      org.apache.spark.sql.Row.fromSeq(c +: metrics.map(g(c, _))))
-    spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](
-        java.util.Arrays.asList(rows: _*)),
-      StructType(StructField("column_name", StringType) +:
-        metrics.map(m => StructField(m, DoubleType))))
+    (StructType(StructField("column_name", StringType) +:
+      metrics.map(m => StructField(m, DoubleType))),
+      cols.map(c => Row.fromSeq(c +: metrics.map(g(c, _)))))
   }
 
   private def readIf(p: String): Option[DataFrame] =
-    if (exists(p)) Some(spark.read.parquet(p)) else None
+    if (exists(p)) Some(graft.stores.DriverParquet.read(spark, p)) else None
   def getBaseline(): Option[DataFrame] = readIf(s"$baselineDir/baseline")
   def getStatistics(): Option[DataFrame] = readIf(s"$baselineDir/statistics")
   def getConstraints(): Option[DataFrame] = readIf(s"$baselineDir/constraints")
@@ -120,7 +126,8 @@ class Monitor(val catalog: Catalog, val endpointName: String) {
       min(col(c)).cast("double").as(s"${c}__min"),
       max(col(c)).cast("double").as(s"${c}__max")))
     val row = current.agg(aggs.head, aggs.tail: _*).head()
-    val observed = smallTable(cols, row, Seq("completeness", "min", "max"))
+    val (schema, rows) = longForm(cols, row, Seq("completeness", "min", "max"))
+    val observed = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
       .withColumnRenamed("completeness", "observed_completeness")
       .withColumnRenamed("min", "observed_min")
       .withColumnRenamed("max", "observed_max")
@@ -156,22 +163,8 @@ class Monitor(val catalog: Catalog, val endpointName: String) {
                   bins: Int = 10, threshold: Double = 0.1): DataFrame = {
     val base = getBaseline().getOrElse(
       throw new IllegalStateException(s"no baseline for $endpointName — run createBaseline"))
-    // `current` is usually the parsed capture (JSON scan + per-line CSV
-    // parse) and both PSI and the drift flags scan it — persist for the
-    // report's duration and return the metadata-sized (one row per
-    // column) result eagerly so the cache can be released here. The
-    // baseline side is scanned three times too (percentile edges,
-    // bucket counts, drift stats) — same treatment.
-    val cur = current.persist()
-    val bse = base.persist()
-    try {
-      val out = graft.eda.Quality.psiDrift(cur, bse, cols, bins)
-        .join(graft.eda.Quality.detectDrift(cur, bse, cols, threshold),
-          Seq("column_name"))
-        .orderBy("column_name")
-      val rows = out.collect()
-      spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), out.schema)
-    } finally { cur.unpersist(false); bse.unpersist(false) }
+    // three aggregate passes (baseline edges + stats, baseline bucket
+    // counts, current bucket counts + stats), finished on the driver
+    graft.eda.Quality.driftReport(current, base, cols, bins, threshold)
   }
 }

@@ -24,6 +24,29 @@ object Eda {
     * the scale path for 100 TB (sketch mergeable, bounded memory).
     */
   def descriptiveStats(df: DataFrame, cols: Seq[String], exact: Boolean = true): DataFrame = {
+    val aggs = statsAggs(cols, exact)
+    val wide = statsFinish(statsInput(df, cols, exact).agg(aggs.head, aggs.tail: _*), cols, exact)
+    // Pivot col__stat names back to one row per column, like the
+    // reference's result reshaping (descriptive_stats.py:40-83).
+    val stackExpr = cols.map { c =>
+      (Seq(s"'$c'") ++ StatNames.map(s => s"`${c}__$s`")).mkString(", ")
+    }.mkString(", ")
+    wide.selectExpr(
+      s"stack(${cols.size}, $stackExpr) as (column_name, ${StatNames.mkString(", ")})")
+  }
+
+  /** The statistics of [[descriptiveStats]], in output order. */
+  val StatNames: Seq[String] = Seq("min", "q1", "median", "q3", "max", "mean", "stddev")
+
+  // [[descriptiveStats]] in three parts, so a caller can add its own
+  // aggregates to the same pass (Monitor.createBaseline takes its
+  // constraints from it): the per-row projection below the aggregate,
+  // the aggregate expressions over it, and the projection that finishes
+  // the one wide row into `<c>__<stat>` columns for every stat in
+  // [[StatNames]] (other columns pass through).
+
+  private[graft] def statsInput(df: DataFrame, cols: Seq[String],
+                                exact: Boolean = true): DataFrame = {
     // exact path: graft.functions.ExactPercentiles — one primitive buffer
     // per column serves all three quantiles (~10× the built-in Percentile,
     // same interpolation rule). approx path: mergeable sketch for scale.
@@ -43,34 +66,38 @@ object Eda {
     // interpreted per row because ExactPercentiles already forces this
     // aggregate off whole-stage codegen. Identical values: the
     // DECIMAL(18,2) unscaled long IS the cents lattice.
-    val exactIn =
-      if (!exact) df
-      else df.select(
-        cols.map(c => col(c)) ++
-          cols.map(c => when(!isnan(col(c).cast("double")), col(c))
-            .cast(DecimalType(18, 2)).as(s"${c}__clat")) ++
-          cols.map(c => col(c).cast("double").as(s"${c}__dlat")): _*)
-    val aggs: Seq[Column] =
-      if (exact) cols.flatMap { c =>
-        Seq(
-          min(col(c)).cast("double").as(s"${c}__min"),
-          graft.functions.ExactPercentiles
-            .exactPercentiles(col(s"${c}__dlat"), Seq(0.25, 0.5, 0.75))
-            .as(s"${c}__pct"),
-          max(col(c)).cast("double").as(s"${c}__max"),
-          graft.functions.LatticeMoments
-            .latticeMoments(col(s"${c}__clat"), isnan(col(s"${c}__dlat")))
-            .as(s"${c}__mom"))
-      }
-      else cols.flatMap { c =>
-        Seq(
-          min(col(c)).cast("double").as(s"${c}__min"),
-          expr(s"approx_percentile($c, array(0.25, 0.5, 0.75), 10000)")
-            .cast("array<double>").as(s"${c}__pct"),
-          max(col(c)).cast("double").as(s"${c}__max"),
-          avg(col(c)).cast("double").as(s"${c}__mean"),
-          stddev(col(c)).cast("double").as(s"${c}__stddev"))
-      }
+    if (!exact) df
+    else df.select(
+      cols.map(c => col(c)) ++
+        cols.map(c => when(!isnan(col(c).cast("double")), col(c))
+          .cast(DecimalType(18, 2)).as(s"${c}__clat")) ++
+        cols.map(c => col(c).cast("double").as(s"${c}__dlat")): _*)
+  }
+
+  private[graft] def statsAggs(cols: Seq[String], exact: Boolean = true): Seq[Column] =
+    if (exact) cols.flatMap { c =>
+      Seq(
+        min(col(c)).cast("double").as(s"${c}__min"),
+        graft.functions.ExactPercentiles
+          .exactPercentiles(col(s"${c}__dlat"), Seq(0.25, 0.5, 0.75))
+          .as(s"${c}__pct"),
+        max(col(c)).cast("double").as(s"${c}__max"),
+        graft.functions.LatticeMoments
+          .latticeMoments(col(s"${c}__clat"), isnan(col(s"${c}__dlat")))
+          .as(s"${c}__mom"))
+    }
+    else cols.flatMap { c =>
+      Seq(
+        min(col(c)).cast("double").as(s"${c}__min"),
+        expr(s"approx_percentile($c, array(0.25, 0.5, 0.75), 10000)")
+          .cast("array<double>").as(s"${c}__pct"),
+        max(col(c)).cast("double").as(s"${c}__max"),
+        avg(col(c)).cast("double").as(s"${c}__mean"),
+        stddev(col(c)).cast("double").as(s"${c}__stddev"))
+    }
+
+  private[graft] def statsFinish(wide0: DataFrame, cols: Seq[String],
+                                 exact: Boolean = true): DataFrame = {
     val pds = graft.core.Lattice.sparkPortableDoubleSigned _
     def momentCols(c: String): Seq[Column] =
       if (!exact) Seq.empty
@@ -87,7 +114,6 @@ object Eda {
               sqrt(greatest((s2 - s1 * s1 / nd) / (nd - 1), lit(0.0))))
             .as(s"${c}__stddev"))
       }
-    val wide0 = exactIn.agg(aggs.head, aggs.tail: _*)
     val wide1 = // flatten the moment structs back to the lattice names
       if (!exact) wide0
       else wide0.select(col("*") +: cols.flatMap(c => Seq(
@@ -95,19 +121,11 @@ object Eda {
         col(s"${c}__mom.nanc").as(s"${c}__nanc"),
         col(s"${c}__mom.s1").as(s"${c}__s1i"),
         col(s"${c}__mom.s2").as(s"${c}__s2i"))): _*)
-    val wide = wide1
+    wide1
       .select(col("*") +: cols.flatMap(c => Seq(
         element_at(col(s"${c}__pct"), 1).as(s"${c}__q1"),
         element_at(col(s"${c}__pct"), 2).as(s"${c}__median"),
         element_at(col(s"${c}__pct"), 3).as(s"${c}__q3")) ++ momentCols(c)): _*)
-    // Pivot col__stat names back to one row per column, like the
-    // reference's result reshaping (descriptive_stats.py:40-83).
-    val stats = Seq("min", "q1", "median", "q3", "max", "mean", "stddev")
-    val stackExpr = cols.map { c =>
-      (Seq(s"'$c'") ++ stats.map(s => s"`${c}__$s`")).mkString(", ")
-    }.mkString(", ")
-    wide.selectExpr(
-      s"stack(${cols.size}, $stackExpr) as (column_name, ${stats.mkString(", ")})")
   }
 
   /** COUNT(DISTINCT c) for every column in one SELECT

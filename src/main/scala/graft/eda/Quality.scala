@@ -38,32 +38,18 @@ object Quality {
   }
 
   /** Per-column range/mean drift vs a baseline frame
-    * (reference: pandas_utils.py:545-629). Both sides reduced to one
-    * stats row each, joined on column name — two scans total regardless
-    * of column count.
+    * (reference: pandas_utils.py:545-629): (column_name, base_mean,
+    * cur_mean, mean_drift, drifted), one row per column in `cols` order.
+    *
+    * Runs its passes at call time: ONE min/max/mean aggregate per frame,
+    * collected to the driver, where the drift arithmetic runs; the result
+    * is a local relation (see [[driftReport]]).
     */
   def detectDrift(current: DataFrame, baseline: DataFrame, cols: Seq[String],
                   threshold: Double = 0.1): DataFrame = {
-    def statsOf(df: DataFrame, tag: String): DataFrame = {
-      val aggs = cols.flatMap(c => Seq(
-        min(col(c)).cast("double").as(s"${c}__min"),
-        max(col(c)).cast("double").as(s"${c}__max"),
-        avg(col(c)).cast("double").as(s"${c}__mean")))
-      val wide = df.agg(aggs.head, aggs.tail: _*)
-      val stackExpr = cols.map(c =>
-        s"'$c', `${c}__min`, `${c}__max`, `${c}__mean`").mkString(", ")
-      wide.selectExpr(
-        s"stack(${cols.size}, $stackExpr) as (column_name, ${tag}_min, ${tag}_max, ${tag}_mean)")
-    }
-    val cur = statsOf(current, "cur")
-    val base = statsOf(baseline, "base")
-    cur.join(base, Seq("column_name"))
-      .withColumn("range_base", col("base_max") - col("base_min"))
-      .withColumn("mean_drift",
-        round(abs(col("cur_mean") - col("base_mean")) /
-          when(col("range_base") === 0, lit(1.0)).otherwise(col("range_base")), 6))
-      .withColumn("drifted", col("mean_drift") > threshold)
-      .select("column_name", "base_mean", "cur_mean", "mean_drift", "drifted")
+    val d = Drift.measure(current, baseline, cols, bins = None, stats = true)
+    Drift.table(current, Drift.NameField +: Drift.DetectFields,
+      cols.map(c => c +: d.detect(c, threshold)))
   }
 
   /** Population Stability Index drift per column — the distributional
@@ -71,53 +57,170 @@ object Quality {
     * extension; standard monitoring practice for training-data drift):
     * bucket both frames by the BASELINE's quantile edges, then
     * PSI = Σ (p_i − q_i)·ln(p_i/q_i) with a 1e-4 floor on empty-bucket
-    * fractions. Rule of thumb: <0.1 stable, 0.1–0.25 moderate, >0.25
-    * drifted.
+    * fractions. Nulls are excluded per column. Rule of thumb: <0.1
+    * stable, 0.1–0.25 moderate, >0.25 drifted. Returns (column_name,
+    * psi) ordered by column name, for the columns holding a non-null
+    * value on either side.
     *
-    * Scale shape: ONE edge aggregate over the baseline (exact
-    * interpolating percentiles — swap for approx at 100 TB), then one
-    * stacked groupBy per frame for ALL columns' bucket counts; the PSI
-    * arithmetic runs over bins×columns rows (metadata-sized).
+    * Runs its passes at call time: ONE edge aggregate over the baseline
+    * (exact interpolating percentiles — swap for approx at 100 TB), then
+    * one bucket-count aggregate per frame over a projected bucket index;
+    * the PSI arithmetic runs on the driver over the bins×columns counts.
     */
   def psiDrift(current: DataFrame, baseline: DataFrame, cols: Seq[String],
                bins: Int = 10): DataFrame = {
-    val probs = (1 until bins).map(_.toDouble / bins)
-    val edgeRow = baseline.select(cols.map(c =>
-      graft.functions.ExactPercentiles
-        .exactPercentiles(col(c).cast("double"), probs).as(c)): _*).head()
-    val edges: Map[String, Seq[Double]] = cols.zipWithIndex.map { case (c, i) =>
-      c -> (if (edgeRow.isNullAt(i)) Seq.empty[Double]
-            else edgeRow.getSeq[java.lang.Double](i)
-              .filter(_ != null).map(_.doubleValue()))
-    }.toMap
-    def bucketCounts(df: DataFrame, frac: String): DataFrame = {
-      // nulls are EXCLUDED per column (null bucket → filtered) — folding
-      // them into bucket 1 would make null-rate drift masquerade as
-      // low-value distribution drift
-      val bucketed = df.select(cols.map { c =>
-        when(col(c).isNull, lit(null)).otherwise(
-          edges(c).foldLeft(lit(1)) { (acc, e) =>
-            acc + when(col(c).cast("double") > e, 1).otherwise(0)
-          }).as(s"__b_$c")
-      }: _*)
-      val stackExpr = cols.map(c => s"'$c', `__b_$c`").mkString(", ")
-      bucketed
-        .selectExpr(s"stack(${cols.size}, $stackExpr) as (column_name, bucket)")
-        .filter(col("bucket").isNotNull)
-        .groupBy("column_name", "bucket").agg(count(lit(1)).as("__n"))
-        .withColumn(frac, col("__n") /
-          sum("__n").over(org.apache.spark.sql.expressions.Window
-            .partitionBy("column_name")))
-        .drop("__n")
+    val d = Drift.measure(current, baseline, cols, Some(bins), stats = false)
+    Drift.table(current, Seq(Drift.NameField, Drift.PsiField),
+      Drift.byName(cols).flatMap(c => d.psi(c).map(v => Seq(c, v))))
+  }
+
+  /** [[psiDrift]] and [[detectDrift]] joined on column name (the
+    * monitor's drift report): (column_name, psi, base_mean, cur_mean,
+    * mean_drift, drifted) ordered by column name. The same three
+    * aggregate passes as [[psiDrift]] carry the min/max/mean too, so
+    * the report costs no more passes than PSI alone. */
+  def driftReport(current: DataFrame, baseline: DataFrame, cols: Seq[String],
+                  bins: Int = 10, threshold: Double = 0.1): DataFrame = {
+    val d = Drift.measure(current, baseline, cols, Some(bins), stats = true)
+    Drift.table(current, Drift.NameField +: Drift.PsiField +: Drift.DetectFields,
+      Drift.byName(cols).flatMap(c => d.psi(c).map(v => Seq(c, v) ++ d.detect(c, threshold))))
+  }
+
+  /** The drift passes shared by [[detectDrift]], [[psiDrift]] and
+    * [[driftReport]]: every pass is one global aggregate whose single
+    * row comes back to the driver, which finishes the metadata-sized
+    * (one row per column) result. The driver arithmetic repeats Spark's
+    * expression semantics: `log` is `StrictMath.log`, `round` is decimal
+    * HALF_UP, `>` orders NaN above every value. */
+  private object Drift {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+    import org.apache.spark.sql.types._
+
+    val NameField = StructField("column_name", StringType)
+    val PsiField = StructField("psi", DoubleType)
+    val DetectFields: Seq[StructField] = Seq(StructField("base_mean", DoubleType),
+      StructField("cur_mean", DoubleType), StructField("mean_drift", DoubleType),
+      StructField("drifted", BooleanType))
+
+    /** Per frame: min/max/mean per column (null when all-null) and, for
+      * PSI, the bucket counts (bucket k at index k − 1). */
+    final case class Side(stats: Map[String, Array[java.lang.Double]],
+                          counts: Map[String, Array[Long]])
+
+    final class Measured(base: Side, cur: Side) {
+      /** (base_mean, cur_mean, mean_drift, drifted). */
+      def detect(c: String, threshold: Double): Seq[Any] = {
+        val Array(bMin, bMax, bMean) = base.stats(c)
+        val cMean = cur.stats(c)(2)
+        val drift =
+          if (bMin == null || bMax == null || bMean == null || cMean == null) null
+          else {
+            val range = bMax - bMin
+            Double.box(round6(math.abs(cMean - bMean) / (if (range == 0.0) 1.0 else range)))
+          }
+        Seq(bMean, cMean, drift,
+          if (drift == null) null
+          else Boolean.box(SQLOrderingUtil.compareDoubles(drift, threshold) > 0))
+      }
+
+      /** PSI over the buckets present on either side; `None` when the
+        * column has no non-null value on both. */
+      def psi(c: String): Option[java.lang.Double] = {
+        val (p, q) = (base.counts(c), cur.counts(c))
+        val (np, nq) = (p.sum, q.sum)
+        if (np + nq == 0L) None
+        else {
+          def frac(n: Long, total: Long) =
+            math.max(if (n == 0L) 0.0 else n.toDouble / total.toDouble, 1e-4)
+          var acc = 0.0
+          for (k <- q.indices) {
+            if (p(k) > 0L || q(k) > 0L) {
+              val (fp, fq) = (frac(p(k), np), frac(q(k), nq))
+              acc += (fp - fq) * StrictMath.log(fp / fq)
+            }
+          }
+          Some(round6(acc))
+        }
+      }
     }
-    val p = bucketCounts(baseline, "p")
-    val q = bucketCounts(current, "q")
-    p.join(q, Seq("column_name", "bucket"), "full")
-      .withColumn("p", greatest(coalesce(col("p"), lit(0.0)), lit(1e-4)))
-      .withColumn("q", greatest(coalesce(col("q"), lit(0.0)), lit(1e-4)))
-      .groupBy("column_name")
-      .agg(round(sum((col("p") - col("q")) * log(col("p") / col("q"))), 6).as("psi"))
-      .orderBy("column_name")
+
+    /** Spark's `round(x, 6)` on a double. */
+    private def round6(x: Double): Double =
+      if (x.isNaN || x.isInfinite) x else graft.ml.Metrics.round6(x)
+
+    /** `cols` in Spark's string order (UTF-8 bytes), as `orderBy` sorts. */
+    def byName(cols: Seq[String]): Seq[String] =
+      cols.sortWith((a, b) => org.apache.spark.unsafe.types.UTF8String.fromString(a)
+        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0)
+
+    private def statAggs(cols: Seq[String]): Seq[Column] = cols.flatMap(c => Seq(
+      min(col(c)).cast("double").as(s"${c}__min"),
+      max(col(c)).cast("double").as(s"${c}__max"),
+      avg(col(c)).cast("double").as(s"${c}__mean")))
+
+    /** Bucket index 1 + #{edges e : x > e}; null for a null value. */
+    private def bucketIndex(c: String, edges: Seq[Double]): Column =
+      when(col(c).isNull, lit(null)).otherwise(
+        edges.foldLeft(lit(1)) { (acc, e) =>
+          acc + when(col(c).cast("double") > e, 1).otherwise(0)
+        })
+
+    private def countAggs(cols: Seq[String], edges: Map[String, Seq[Double]]): Seq[Column] =
+      cols.flatMap(c => (1 to edges(c).size + 1).map(k =>
+        count(when(col(s"__b_$c") === k, 1)).as(s"${c}__n$k")))
+
+    /** One global aggregate, its row returned to the driver. */
+    private def pass(df: DataFrame, aggs: Seq[Column]): Row =
+      df.agg(aggs.head, aggs.tail: _*).collect().head
+
+    private def statsOf(row: Row, cols: Seq[String]): Map[String, Array[java.lang.Double]] =
+      cols.map(c => c -> Array("min", "max", "mean").map { k =>
+        val i = row.fieldIndex(s"${c}__$k")
+        if (row.isNullAt(i)) null else Double.box(row.getDouble(i))
+      }).toMap
+
+    private def countsOf(row: Row, cols: Seq[String],
+                         edges: Map[String, Seq[Double]]): Map[String, Array[Long]] =
+      cols.map(c => c -> (1 to edges(c).size + 1)
+        .map(k => row.getLong(row.fieldIndex(s"${c}__n$k"))).toArray).toMap
+
+    /** With `stats`, min/max/mean of both frames; with `bins`, the bucket
+      * counts of both frames over the baseline's quantile edges. One
+      * aggregate over `current`, one over `baseline` (two with `bins`). */
+    def measure(current: DataFrame, baseline: DataFrame, cols: Seq[String],
+                bins: Option[Int], stats: Boolean): Measured = {
+      val probs = bins.toSeq.flatMap(b => (1 until b).map(_.toDouble / b))
+      val edgeAggs = if (bins.isEmpty) Nil else cols.map(c =>
+        graft.functions.ExactPercentiles
+          .exactPercentiles(col(c).cast("double"), probs).as(s"${c}__edges"))
+      val statCols = if (stats) cols else Nil
+      val baseRow = pass(baseline, edgeAggs ++ statAggs(statCols))
+      val edges: Map[String, Seq[Double]] =
+        if (bins.isEmpty) cols.map(_ -> Seq.empty[Double]).toMap
+        else cols.map { c =>
+          val i = baseRow.fieldIndex(s"${c}__edges")
+          c -> (if (baseRow.isNullAt(i)) Seq.empty[Double]
+                else baseRow.getSeq[java.lang.Double](i)
+                  .filter(_ != null).map(_.doubleValue()))
+        }.toMap
+      def bucketed(df: DataFrame) =
+        df.select(cols.map(col) ++ cols.map(c => bucketIndex(c, edges(c)).as(s"__b_$c")): _*)
+      val baseCounts =
+        if (bins.isEmpty) Map.empty[String, Array[Long]]
+        else countsOf(pass(bucketed(baseline), countAggs(cols, edges)), cols, edges)
+      val curRow =
+        if (bins.isEmpty) pass(current, statAggs(statCols))
+        else pass(bucketed(current), countAggs(cols, edges) ++ statAggs(statCols))
+      new Measured(Side(statsOf(baseRow, statCols), baseCounts),
+        Side(statsOf(curRow, statCols),
+          if (bins.isEmpty) Map.empty else countsOf(curRow, cols, edges)))
+    }
+
+    /** The driver rows as a local relation (collecting it runs no job). */
+    def table(like: DataFrame, fields: Seq[StructField], rows: Seq[Seq[Any]]): DataFrame =
+      like.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows.map(Row.fromSeq): _*), StructType(fields))
   }
 
   /** Per-feature quality metrics: null %, zero %, variance, distinct count

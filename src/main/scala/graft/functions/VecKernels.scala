@@ -1,9 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, EvalMode, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MathUtils}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Imperative vector kernels replacing the interpreted HOF pipelines
@@ -20,8 +21,11 @@ import org.apache.spark.sql.types._
   *    float, as `zip_with`'s lambda typed them), only the running sum
   *    widens to double (the `acc + v` coercion);
   *  - double arrays: all ops in double;
-  *  - int/long arrays (ruzicka): per-element least/greatest in the
-  *    integer type, the sum widens to double.
+  *  - int/long arrays: per-element ops in the integer type, the sum
+  *    widens to double. Under ANSI the subtract/multiply are exact and
+  *    overflow raises ARITHMETIC_OVERFLOW, as the HOF's integer
+  *    arithmetic does; otherwise they wrap like it. The eval mode is
+  *    captured at construction, as Spark's own arithmetic does.
   * Null semantics are the HOFs': a null ARRAY → null; a null element
   * inside an arithmetic lambda poisons the whole accumulation → null;
   * length mismatch (zip_with pads with null) → null — EXCEPT ruzicka's
@@ -54,8 +58,30 @@ object VecKernels {
 
 private[functions] trait VecPairExpr extends BinaryExpression with CodegenFallback {
   override def dataType: DataType = DoubleType
+  // null elements and length mismatches return null on non-null inputs
+  override def nullable: Boolean = true
   protected def elemType: DataType =
     left.dataType.asInstanceOf[ArrayType].elementType
+
+  /** Σ f(x_i, y_i) over int/long arrays, as the HOF evaluates it:
+    * zip_with runs the lambda at EVERY index where both elements are
+    * non-null, so an ANSI overflow raises even when a null element or a
+    * length mismatch (null padding) then makes the sum null. */
+  protected def integralSum(a: ArrayData, b: ArrayData,
+                            int: (Int, Int) => Int, long: (Long, Long) => Long): Any = {
+    val na = a.numElements(); val nb = b.numElements()
+    var poisoned = na != nb
+    var acc = 0.0
+    var i = 0
+    while (i < math.min(na, nb)) {
+      if (a.isNullAt(i) || b.isNullAt(i)) poisoned = true
+      else if (elemType == IntegerType) acc += int(a.getInt(i), b.getInt(i)).toDouble
+      else acc += long(a.getLong(i), b.getLong(i)).toDouble
+      i += 1
+    }
+    if (poisoned) null else acc
+  }
+
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     (left.dataType, right.dataType) match {
@@ -72,10 +98,24 @@ private[functions] trait VecPairExpr extends BinaryExpression with CodegenFallba
 }
 
 /** sqrt(aggregate(zip_with(a, b, (x,y) => (x-y)*(x-y)), 0.0, _+_)) */
-case class EuclidDistExpr(left: Expression, right: Expression) extends VecPairExpr {
+case class EuclidDistExpr(left: Expression, right: Expression,
+                          evalMode: EvalMode.Value = EvalMode.fromSQLConf(SQLConf.get))
+  extends VecPairExpr {
   override def prettyName: String = "graft_euclid"
+  private val ansi = evalMode == EvalMode.ANSI
+  private def sqInt(x: Int, y: Int): Int =
+    if (ansi) { val d = MathUtils.subtractExact(x, y); MathUtils.multiplyExact(d, d) }
+    else (x - y) * (x - y)
+  private def sqLong(x: Long, y: Long): Long =
+    if (ansi) { val d = MathUtils.subtractExact(x, y); MathUtils.multiplyExact(d, d) }
+    else (x - y) * (x - y)
   override def nullSafeEval(av: Any, bv: Any): Any = {
     val a = av.asInstanceOf[ArrayData]; val b = bv.asInstanceOf[ArrayData]
+    if (elemType == IntegerType || elemType == LongType)
+      return integralSum(a, b, sqInt, sqLong) match {
+        case acc: Double => math.sqrt(acc)
+        case _ => null
+      }
     val n = a.numElements()
     if (b.numElements() != n) return null // zip_with null-pad poisons the sum
     var acc = 0.0
@@ -95,20 +135,6 @@ case class EuclidDistExpr(left: Expression, right: Expression) extends VecPairEx
           acc += d * d
           i += 1
         }
-      case IntegerType =>
-        while (i < n) {
-          if (a.isNullAt(i) || b.isNullAt(i)) return null
-          val d = a.getInt(i) - b.getInt(i)
-          acc += (d * d).toDouble
-          i += 1
-        }
-      case _ =>
-        while (i < n) {
-          if (a.isNullAt(i) || b.isNullAt(i)) return null
-          val d = a.getLong(i) - b.getLong(i)
-          acc += (d * d).toDouble
-          i += 1
-        }
     }
     math.sqrt(acc)
   }
@@ -117,10 +143,18 @@ case class EuclidDistExpr(left: Expression, right: Expression) extends VecPairEx
 }
 
 /** aggregate(zip_with(a, b, (x,y) => x*y), 0.0, _+_) */
-case class DotProdExpr(left: Expression, right: Expression) extends VecPairExpr {
+case class DotProdExpr(left: Expression, right: Expression,
+                       evalMode: EvalMode.Value = EvalMode.fromSQLConf(SQLConf.get))
+  extends VecPairExpr {
   override def prettyName: String = "graft_dot"
+  private val ansi = evalMode == EvalMode.ANSI
+  private def mulInt(x: Int, y: Int): Int = if (ansi) MathUtils.multiplyExact(x, y) else x * y
+  private def mulLong(x: Long, y: Long): Long =
+    if (ansi) MathUtils.multiplyExact(x, y) else x * y
   override def nullSafeEval(av: Any, bv: Any): Any = {
     val a = av.asInstanceOf[ArrayData]; val b = bv.asInstanceOf[ArrayData]
+    if (elemType == IntegerType || elemType == LongType)
+      return integralSum(a, b, mulInt, mulLong)
     val n = a.numElements()
     if (b.numElements() != n) return null
     var acc = 0.0
@@ -136,18 +170,6 @@ case class DotProdExpr(left: Expression, right: Expression) extends VecPairExpr 
         while (i < n) {
           if (a.isNullAt(i) || b.isNullAt(i)) return null
           acc += a.getDouble(i) * b.getDouble(i)
-          i += 1
-        }
-      case IntegerType =>
-        while (i < n) {
-          if (a.isNullAt(i) || b.isNullAt(i)) return null
-          acc += (a.getInt(i) * b.getInt(i)).toDouble
-          i += 1
-        }
-      case _ =>
-        while (i < n) {
-          if (a.isNullAt(i) || b.isNullAt(i)) return null
-          acc += (a.getLong(i) * b.getLong(i)).toDouble
           i += 1
         }
     }
@@ -211,6 +233,7 @@ case class SqNormCastExpr(child: Expression)
   extends UnaryExpression with CodegenFallback {
   override def prettyName: String = "graft_sqnorm"
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true // a null element returns null
   private def elemType: DataType =
     child.dataType.asInstanceOf[ArrayType].elementType
   override def checkInputDataTypes()
@@ -252,6 +275,7 @@ case class SqNormMulExpr(child: Expression)
   extends UnaryExpression with CodegenFallback {
   override def prettyName: String = "graft_sqnorm_mul"
   override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true // a null element returns null
   private def elemType: DataType =
     child.dataType.asInstanceOf[ArrayType].elementType
   override def checkInputDataTypes()

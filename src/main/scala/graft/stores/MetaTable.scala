@@ -35,11 +35,10 @@ import org.apache.spark.sql.{Encoder, SparkSession}
   * zero Spark jobs, and the writer seeds it with the rows it just wrote.
   * A generation another JVM wrote is read once with `spark.read.parquet`.
   *
-  * The generation's single part file is written on the driver through
-  * Spark's own parquet writer (`ParquetUtils.prepareWrite` + the
-  * `OutputWriterFactory`, fed by the row encoder's serializer): the file
-  * is what a one-task `coalesce(1).write.parquet` would produce, footer
-  * schema metadata included, without the job.
+  * The generation's single part file is written on the driver by
+  * [[DriverParquet.writeFile]], fed by the row encoder's serializer: the
+  * file is what a one-task `coalesce(1).write.parquet` would produce,
+  * footer schema metadata included, without the job.
   */
 private[stores] final class MetaTable[T: Encoder](spark: SparkSession, path: String) {
   import MetaTable._
@@ -100,7 +99,9 @@ private[stores] final class MetaTable[T: Encoder](spark: SparkSession, path: Str
     val next = if (gens.isEmpty) 0L else gens.map(genNum).max + 1
     val uuid = java.util.UUID.randomUUID().toString
     val tmp = new Path(dir, s".tmp-$uuid")
-    writeParquet(new Path(tmp, s"part-00000-$uuid-c000"), updated)
+    val serializer = encoder.createSerializer()
+    DriverParquet.writeFile(spark, new Path(tmp, s"part-00000-$uuid-c000"),
+      encoder.schema, updated.iterator.map(serializer))
     val genDir = new Path(dir, f"gen-$next%09d-$uuid")
     if (!fs.rename(tmp, genDir)) {
       fs.delete(tmp, true)
@@ -117,23 +118,6 @@ private[stores] final class MetaTable[T: Encoder](spark: SparkSession, path: Str
     st.filter(_.isFile).foreach(s => fs.delete(s.getPath, false))
     st.filter(s => s.isDirectory && s.getPath.getName.startsWith(".tmp-") &&
       s.getModificationTime < cutoff).foreach(s => fs.delete(s.getPath, true))
-  }
-
-  /** One part file at `file` (+ the codec's extension), written on the
-    * driver by Spark's parquet writer for the encoder's schema. */
-  private def writeParquet(file: Path, rows: Seq[T]): Unit = {
-    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
-    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
-    val sqlConf = spark.sessionState.conf
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val factory = ParquetUtils.prepareWrite(sqlConf, job, encoder.schema,
-      new ParquetOptions(Map.empty[String, String], sqlConf))
-    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
-    val writer = factory.newInstance(
-      file.toString + factory.getFileExtension(ctx), encoder.schema, ctx)
-    val serializer = encoder.createSerializer()
-    try rows.foreach(r => writer.write(serializer(r))) finally writer.close()
   }
 
   /** Mutual exclusion for the read-modify-write cycle: an atomic

@@ -60,7 +60,9 @@ class DFStore(spark: SparkSession, root: String) {
   def append(key: String, df: DataFrame): Unit =
     df.write.mode(SaveMode.Append).parquet(pathFor(key))
 
-  def get(key: String): DataFrame = spark.read.parquet(pathFor(key))
+  /** The key's rows, with the schema read from one footer on the driver
+    * ([[DriverParquet.read]]) instead of Spark's inference job. */
+  def get(key: String): DataFrame = DriverParquet.read(spark, pathFor(key))
 
   /** True only when the key holds READABLE data (at least one committed
     * parquet file). A bare directory left by an aborted first write —

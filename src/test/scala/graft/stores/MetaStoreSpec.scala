@@ -2,7 +2,6 @@ package graft.stores
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** The metadata-table primitive behind [[Registry]] and [[ParameterStore]]:
   * warm cycles run no Spark job, the driver-written part file reads back
@@ -14,34 +13,6 @@ class MetaStoreSpec extends SparkSpec {
   private def tmpRoot(tag: String) =
     java.nio.file.Files.createTempDirectory(s"graft-meta-$tag").toString
   private def fs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Spark jobs started by `f` on this thread. Listener delivery is
-    * asynchronous but ordered, so a sentinel job in another group marks
-    * the point where every earlier job start has been seen. */
-  private def jobsDuring(f: => Unit): Int = {
-    val group = "meta-" + java.util.UUID.randomUUID()
-    val sentinel = group + "-sentinel"
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => n.incrementAndGet()
-          case Some(`sentinel`) => seen.countDown()
-          case _ => ()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "metadata store cycle")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "drain")
-      try spark.range(1).rdd.count() finally sc.clearJobGroup()
-      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      n.get()
-    } finally sc.removeSparkListener(l)
-  }
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
   private val sample = Seq(
