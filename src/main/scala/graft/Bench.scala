@@ -112,17 +112,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.NanosPushdown.install(spark)
     // session warmup: first-codegen/parquet-reader/shuffle-infra init used
     // to land on whichever query the hash map put first (q07 measured ~5s
     // of pure session warmup in round 1). No data is cached — measured

@@ -10,11 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *   spark-submit --conf spark.sql.extensions=graft.GraftSparkExtension …
   * }}}
   *
-  * injects (a) every graft SQL function
-  * ([[graft.functions.SqlFunctions]]) and (b) the NanosPushdown
-  * optimizer rule (predicate pushdown through the nanos→timestamp
-  * conversion the TIMESTAMP(NANOS) parquet tables need) into EVERY
-  * session of the application — no per-session install calls. */
+  * injects every graft SQL function ([[graft.functions.SqlFunctions]])
+  * into EVERY session of the application — no per-session install
+  * calls. */
 class GraftSparkExtension extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     graft.functions.SqlFunctions.functions.foreach { case (name, builder) =>
@@ -24,6 +22,5 @@ class GraftSparkExtension extends (SparkSessionExtensions => Unit) {
         (es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
           builder(es)))
     }
-    ext.injectOptimizerRule(_ => graft.plans.NanosPushdown)
   }
 }

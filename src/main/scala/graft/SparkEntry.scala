@@ -64,7 +64,9 @@ object SparkEntry {
 
   private val lineitemNumeric = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Built once: every entry is a closure, so building the map reads
+    * no later `val` of this object. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ───────── EDA pack (SURVEY §2.4) ─────────
     "q01_pricing_summary" -> ((s, dir) => {
       t(s, dir, "lineitem")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -27,16 +26,8 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.NanosPushdown.install(spark)
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -58,7 +49,7 @@ object Verify {
     val work = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val par = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR",
-      math.min(8, 2 * cpus.toInt).max(2).toString).toInt
+      math.min(8, 2 * graft.core.Session.cores).max(2).toString).toInt
     val pool = Executors.newFixedThreadPool(par)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     val t0 = System.nanoTime

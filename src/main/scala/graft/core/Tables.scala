@@ -22,39 +22,26 @@ object Tables {
   // data is still scanned from parquet on every action (Spark's own
   // session FileStatusCache already memoizes the directory listing the
   // same way).
-  // The key carries the directory's modification stamp and the one
-  // session conf that changes parquet type mapping here (legacy
-  // nanosAsLong), so files regenerated in-place in the same JVM (e.g.
-  // a rebuilt scale-ladder replica) or a differently-configured second
-  // session can never be served a stale schema.
+  // The key carries the directory's modification stamp, so files
+  // regenerated in-place in the same JVM (e.g. a rebuilt scale-ladder
+  // replica) can never be served a stale schema.
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, String), org.apache.spark.sql.types.StructType]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long), org.apache.spark.sql.types.StructType]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // inferTimestampNTZ=false: current testdata stores `ts` as parquet
-    // timestamp[us] without UTC adjustment, which Spark 4 would read as
-    // TIMESTAMP_NTZ — and withWatermark rejects NTZ event times. Reading
-    // it as TimestampType directly (session TZ is UTC everywhere) keeps
-    // the column watermark-able AND keeps ts predicates pushable to the
-    // scan (a cast wrapper would block pushdown).
+    // The tables store `ts`, `l_shipdate` and `o_orderdate` as parquet
+    // timestamp[us] without UTC adjustment, which Spark 4 reads as
+    // TIMESTAMP_NTZ; kernels that need an instant (watermarks, epoch
+    // arithmetic) convert with `ltzTs`.
     val path = s"$dir/$name.parquet"
-    val reader = spark.read.option("inferTimestampNTZ", "false")
-    val key = (path, modificationTime(spark, path),
-      spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").getOrElse(""))
+    val key = (path, modificationTime(spark, path))
     val cached = schemaCache.get(key)
-    val df =
-      if (cached != null) reader.schema(cached).parquet(path)
-      else {
-        val d = reader.parquet(path)
-        schemaCache.put(key, d.schema)
-        d
-      }
-    // Older testdata was TIMESTAMP(NANOS), read as raw Long via the
-    // nanosAsLong legacy conf (set in Verify/Bench/tests); convert the
-    // raw nanos back to a proper timestamp (micros, Spark's native unit).
-    df.schema.fields.find(f => f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType)
-      .map(_ => df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)")))
-      .getOrElse(df)
+    if (cached != null) spark.read.schema(cached).parquet(path)
+    else {
+      val d = spark.read.parquet(path)
+      schemaCache.put(key, d.schema)
+      d
+    }
   }
 
   /** The Hadoop modification stamp of `path` (0 when it does not exist;

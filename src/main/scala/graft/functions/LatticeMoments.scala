@@ -11,6 +11,7 @@ import org.apache.spark.sql.types._
   * Σx and Σx² over unscaled DECIMAL(18,2) values ("cents"), plus the
   * count and NaN-count the lattice mean/stddev need. Plain Java longs
   * with carry arithmetic — no BigDecimal anywhere on the per-row path.
+  * An add that wraps past ±2¹²⁷ throws rather than leave a wrapped sum.
   */
 final class MomentBuffer {
   var cnt = 0L; var nanc = 0L
@@ -20,14 +21,22 @@ final class MomentBuffer {
   @inline private def carry(a: Long, b: Long, sum: Long): Long =
     ((a & b) | ((a | b) & ~sum)) >>> 63
 
+  /** High word of a 128-bit add. The add wrapped exactly when both
+    * operands have one sign and the result has the other. */
+  @inline private def addHi(a: Long, b: Long, c: Long): Long = {
+    val hi = a + b + c
+    if (((a ^ hi) & (b ^ hi)) < 0) throw LatticeMoments.overflow()
+    hi
+  }
+
   def addS1(vhi: Long, vlo: Long): Unit = {
     val lo = s1lo + vlo
-    s1hi = s1hi + vhi + carry(s1lo, vlo, lo)
+    s1hi = addHi(s1hi, vhi, carry(s1lo, vlo, lo))
     s1lo = lo
   }
   def addS2(vhi: Long, vlo: Long): Unit = {
     val lo = s2lo + vlo
-    s2hi = s2hi + vhi + carry(s2lo, vlo, lo)
+    s2hi = addHi(s2hi, vhi, carry(s2lo, vlo, lo))
     s2lo = lo
   }
   def add(cents: Long): Unit = {
@@ -60,7 +69,11 @@ final class MomentBuffer {
   * the portable-double conversion downstream (and the DuckDB oracle)
   * are untouched. A sum needing more than 38 digits throws, mirroring
   * the ANSI Decimal-sum overflow the old tree would hit at the same
-  * magnitude (≥10³⁸ requires ~10²⁴ rows of max-magnitude cents).
+  * magnitude: Σcents² passes 10³⁸ after about 100 rows of
+  * max-magnitude DECIMAL(18,2) values (|cents| < 10¹⁸), and wraps the
+  * 128-bit accumulator after about 170, which [[MomentBuffer]] detects
+  * and throws on. Σcents stays below 10³⁸ for any row count a Long
+  * can hold.
   *
   * Children: `cents` DECIMAL(18,2) (the NaN-guarded cast), `nan`
   * BOOLEAN (`isnan(CAST(col AS DOUBLE))`). Output struct:
@@ -104,9 +117,7 @@ case class LatticeMoments(
     val bytes = ByteBuffer.allocate(16).putLong(hi).putLong(lo).array()
     val bi = new java.math.BigInteger(bytes)
     val d = Decimal(new java.math.BigDecimal(bi))
-    if (!d.changePrecision(38, 0))
-      throw new ArithmeticException(
-        "lattice moment sum exceeds DECIMAL(38,0)")
+    if (!d.changePrecision(38, 0)) throw LatticeMoments.overflow()
     d
   }
 
@@ -140,6 +151,9 @@ case class LatticeMoments(
 
 object LatticeMoments {
   import org.apache.spark.sql.GraftExprBridge
+
+  private[functions] def overflow(): ArithmeticException =
+    new ArithmeticException("lattice moment sum exceeds DECIMAL(38,0)")
 
   /** Column API: struct(cnt, nanc, s1, s2) of the cents lattice of
     * `cents` (a NaN-guarded DECIMAL(18,2) column; `nan` flags NaN input

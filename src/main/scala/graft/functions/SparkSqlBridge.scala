@@ -29,19 +29,14 @@ object GraftExprBridge {
         "graft.functions.SqlFunctions", name),
       exprs => builder(exprs))
 
-  /** Test-only views into a SparkSessionExtensions instance (its
+  /** Test-only view into a SparkSessionExtensions instance (its
     * accessors are package-private): the function names an extension
-    * registers, and the optimizer rules it builds. `spark.sql
-    * .extensions` is a STATIC conf — a suite sharing one SparkContext
-    * cannot exercise it through session construction. */
+    * registers. `spark.sql.extensions` is a STATIC conf — a suite
+    * sharing one SparkContext cannot exercise it through session
+    * construction. */
   def extensionFunctionNames(ext: SparkSessionExtensions): Set[String] = {
     val reg = new org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry
     ext.registerFunctions(reg)
     reg.listFunction().map(_.funcName).toSet
   }
-
-  def extensionOptimizerRules(ext: SparkSessionExtensions, spark: SparkSession)
-      : Seq[org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
-    ext.buildOptimizerRules(spark)
 }

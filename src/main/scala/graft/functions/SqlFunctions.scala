@@ -12,8 +12,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
   * Two installation paths:
   *  - [[install]] on a live session (tests, notebooks);
   *  - `spark.sql.extensions=graft.GraftSparkExtension` at session build
-  *    (cluster deployment) — also injects the NanosPushdown optimizer
-  *    rule, so one config line wires the whole library into plain SQL.
+  *    (cluster deployment), so one config line wires the whole library
+  *    into plain SQL.
   */
 object SqlFunctions {
 

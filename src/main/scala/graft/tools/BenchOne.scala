@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time a handful of SparkEntry queries in isolation (same session confs
   * as Bench, same warmup) — for pinning down bench-ordering effects vs
   * real regressions. Usage: runMain graft.tools.BenchOne <sfDir> <q> [<q>…]
@@ -10,17 +8,8 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.NanosPushdown.install(spark)
     spark.range(1000).selectExpr("sum(id)").collect()
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)

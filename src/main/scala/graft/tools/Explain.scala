@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump the formatted physical plan of SparkEntry queries — the
@@ -10,17 +9,8 @@ import org.apache.spark.sql.execution.ExplainMode
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.NanosPushdown.install(spark)
     args.tail.foreach { name =>
       println(s"========== $name ==========")
       println(graft.SparkEntry.queries(name)(spark, sfDir)

@@ -30,14 +30,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     scale(spark, src, out, factor)
     graft.core.Tables.names.foreach { n =>

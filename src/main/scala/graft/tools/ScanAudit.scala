@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Fleet-wide plan audit: for EVERY SparkEntry query, count parquet
   * scans, shuffles (Exchange), corpus-frame single-partition exchanges
   * and cartesian products in the compiled physical plan — the
@@ -17,16 +15,8 @@ object ScanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val topN = args.lift(1).map(_.toInt).getOrElse(40)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.NanosPushdown.install(spark)
     val rows = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         try {

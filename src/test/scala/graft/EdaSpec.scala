@@ -64,6 +64,28 @@ class EdaSpec extends SparkSpec {
     }
   }
 
+  test("LatticeMoments: a Σx² that wraps 128 bits raises instead of returning") {
+    import org.apache.spark.sql.types.DecimalType
+    val big = BigDecimal("9999999999999999.99")
+    def rows(n: Int) = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq.fill(n)(Tuple1(big)), 1))
+      .select(col("_1").cast(DecimalType(18, 2)).as("x"))
+    def moments(df: org.apache.spark.sql.DataFrame) = df.agg(
+      graft.functions.LatticeMoments.latticeMoments(col("x"), lit(false)).as("m"))
+      .select("m.s2").head().getDecimal(0)
+    // below the wrap the sum is exact
+    val cents = java.math.BigInteger.valueOf(999999999999999999L)
+    assert(moments(rows(50)).toBigIntegerExact ==
+      cents.pow(2).multiply(java.math.BigInteger.valueOf(50)))
+    // ~250 rows wrap Σcents² past 2^127 to a value inside ±10^38: in one
+    // partition's updates, and in the merge of four partials
+    for (df <- Seq(rows(250), rows(250).repartition(4))) {
+      val e = intercept[Exception](moments(df))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains("exceeds DECIMAL(38,0)")), e)
+    }
+  }
+
   test("columnStatsFull: nested value_counts and correlations maps") {
     val cust = Tables.load(spark, sf, "customer")
       .select("c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment")

@@ -22,7 +22,7 @@ class PlanQualitySpec extends SparkSpec {
     assert(pushedFiltersNonEmpty(plan), plan)
   }
 
-  test("q15: temporal-split timestamp filter reaches the scan via NanosPushdown") {
+  test("q15: temporal-split timestamp filter reaches the parquet scan") {
     val plan = SparkEntry.queries("q15_temporal_split")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(pushedFiltersNonEmpty(plan), plan)

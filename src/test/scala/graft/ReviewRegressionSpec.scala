@@ -8,32 +8,11 @@ import graft.views.Views
 import org.apache.spark.sql.functions._
 
 /** Regressions for the round-1 code-review findings — inputs the clean
-  * synthetic test data never exercises (nulls, NaN, pre-epoch
-  * timestamps, empty frames, degenerate media).
+  * synthetic test data never exercises (nulls, NaN, empty frames,
+  * degenerate media).
   */
 class ReviewRegressionSpec extends SparkSpec {
   import spark.implicits._
-
-  test("NanosPushdown: pre-epoch (negative nanos) comparisons match unrewritten results") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-nanos").toString
-    // raw nanos column incl. negatives around the -1us boundary
-    val nanos = Seq(-2000L, -1500L, -1000L, -999L, -1L, 0L, 500L, 1000L, 1500L)
-    nanos.toDF("ts").write.mode("overwrite").parquet(tmp)
-    val df = spark.read.parquet(tmp)
-      .withColumn("tsm", expr("timestamp_micros(ts div 1000)"))
-    // rule is installed in this session; compare against driver-side truth
-    for (cutUs <- Seq(-2L, -1L, 0L, 1L)) {
-      val cut = expr(s"timestamp_micros(${cutUs}L)")
-      def got(c: org.apache.spark.sql.Column) =
-        df.filter(c).select("ts").as[Long].collect().toSet
-      def expected(p: Long => Boolean) =
-        nanos.filter(n => p(n / 1000L)).toSet // Scala / truncates like div
-      assert(got(col("tsm") <= cut) == expected(_ <= cutUs), s"<= $cutUs")
-      assert(got(col("tsm") < cut) == expected(_ < cutUs), s"< $cutUs")
-      assert(got(col("tsm") >= cut) == expected(_ >= cutUs), s">= $cutUs")
-      assert(got(col("tsm") > cut) == expected(_ > cutUs), s"> $cutUs")
-    }
-  }
 
   test("resolveNames: simultaneous substitution, no cascade") {
     val out = Views.resolveNames("SELECT * FROM a JOIN b",
