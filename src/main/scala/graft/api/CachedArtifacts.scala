@@ -30,12 +30,7 @@ private[graft] class ArtifactCache(catalog: Catalog, val ttlMs: Long,
   private val retired = new java.util.ArrayDeque[Any]()
 
   private def release(v: Any): Unit = v match {
-    case df: DataFrame =>
-      // localCheckpoint persists the underlying RDD directly (not via the
-      // CacheManager), so unpersist the checkpointed RDD itself
-      df.queryExecution.logical.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(false))
+    case df: DataFrame => graft.core.Checkpoints.release(df)
     case Some(inner) => release(inner)
     case _ => ()
   }

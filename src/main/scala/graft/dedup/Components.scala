@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -10,8 +11,8 @@ import org.apache.spark.sql.functions._
   * Iterative min-label propagation (each vertex takes the smallest label
   * in its neighborhood until fixpoint) — every step is a join + groupBy,
   * fully distributed; iteration count is bounded by the graph diameter,
-  * which for near-dup clusters is small. Labels are persisted per
-  * iteration and the previous generation unpersisted.
+  * which for near-dup clusters is small. Labels are checkpointed per
+  * iteration and the previous generation released.
   */
 object Components {
 
@@ -44,9 +45,11 @@ object Components {
         .localCheckpoint(true)
       changed = next.join(labels.withColumnRenamed("component", "__old"), Seq("id"))
         .filter(col("component") =!= col("__old")).count()
+      Checkpoints.release(labels)
       labels = next
       iter += 1
     }
+    Checkpoints.release(edges)
     // non-convergence must be loud — silently returning partial
     // components would under-deduplicate downstream
     if (changed > 0) {
@@ -96,6 +99,7 @@ object Components {
       val nextSig = signature(next)
       converged = nextSig == sig // fixpoint: both transforms were identity
       sig = nextSig
+      Checkpoints.release(edges)
       edges = next
       iter += 1
     }
@@ -152,15 +156,11 @@ object Components {
 
   /** Deduplicate `df` by near-dup clusters: keep one canonical row
     * (minimum id) per component, plus every row not in any component.
-    * Uses the star algorithm (scale path); pass `useStar = false` for
-    * the propagation baseline.
+    * Components come from [[connectedComponentsStar]], so pair ids must
+    * cast to long.
     */
-  def dedupByPairs(df: DataFrame, idCol: String, pairs: DataFrame,
-                   maxIterations: Int = 50, useStar: Boolean = true): DataFrame = {
-    val comps =
-      if (useStar) connectedComponentsStar(pairs, maxIterations)
-      else connectedComponents(pairs, maxIterations)
-    val losers = comps.filter(col("id") =!= col("component"))
+  def dedupByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val losers = connectedComponentsStar(pairs).filter(col("id") =!= col("component"))
       .select(col("id").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")
   }

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -157,7 +158,7 @@ object SpectralEmbedding {
         (for (i <- 0 until k; j <- i until k)
           yield sum(col(vCols(i)) * col(vCols(j))))
       val row = joined.agg(aggExprs.head, aggExprs.tail: _*).head()
-      if (prevJoined != null) prevJoined.unpersist()
+      if (prevJoined != null) Checkpoints.release(prevJoined)
       prevJoined = joined
       val d = Array.tabulate(k)(row.getDouble)
       val g = Array.ofDim[Double](k, k)
@@ -189,8 +190,7 @@ object SpectralEmbedding {
     // the result is now self-contained: release every intermediate
     // checkpoint so repeated embed() calls don't accumulate storage
     // blocks for the life of the session
-    Seq(sym, degrees, sEdges, u1).foreach(_.unpersist())
-    if (prevJoined != null) prevJoined.unpersist()
+    (Seq(sym, degrees, sEdges, u1) ++ Option(prevJoined)).foreach(Checkpoints.release)
     out
   }
 }

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   *   1. candidate pairs: [[FuzzyJoin.fuzzyJoin]] (segment-blocked
   *      equi-join — corpus-linear, never n²)
   *   2. transitive closure: [[Components.connectedComponents]]
-  *      (big-star/small-star, O(log n) rounds)
+  *      (min-label propagation, O(diameter) rounds; it takes the string
+  *      names as ids, which the long-keyed star variant cannot)
   *   3. election: smallest name per cluster wins (deterministic; swap
   *      in a frequency- or recency-keyed vote by pre-sorting ids)
   */

@@ -1,5 +1,6 @@
 package graft.proximity
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,14 +10,82 @@ import org.apache.spark.sql.functions._
   * standard "which nodes anchor the corpus" centrality used to pick
   * representative documents from a similarity graph.
   *
-  * Scale shape: per iteration, ONE shuffle to join ranks onto edges by
-  * src and ONE map-side-combined groupBy on dst — the canonical
-  * distributed PageRank. Rank state lives in a DataFrame (persisted per
-  * round, previous round unpersisted), never on the driver; the only
-  * driver scalars are node count and per-round dangling mass (two tiny
-  * aggregates). Deterministic: fixed iteration count, no RNG.
+  * Every algorithm starts from the shared prologue below, and the
+  * iterative ones run one round loop ([[iterate]]). Scale shape: per
+  * PageRank round, ONE shuffle to join ranks onto edges by src and ONE
+  * map-side-combined groupBy on dst. State lives in checkpointed
+  * DataFrames, never on the driver; the dangling mass is a 1-row
+  * cross-joined aggregate, so the only driver scalar is the node count.
+  * Intermediate checkpoints are released once the result no longer
+  * reads them. Deterministic: fixed iteration count, no RNG.
   */
 object Graph {
+
+  /** (src, dst) edges and their node set (id), both checkpointed. */
+  private def directed(edges0: DataFrame): (DataFrame, DataFrame) = {
+    val edges = edges0.select(col("src"), col("dst")).localCheckpoint(true)
+    val nodes = edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).distinct().localCheckpoint(true)
+    (edges, nodes)
+  }
+
+  /** The canonical undirected edge set (a, b), a < b: direction dropped,
+    * self-loops dropped, parallel edges deduped. Lazy: callers that read
+    * it more than once checkpoint it, since each read would otherwise
+    * recompute the upstream edges (for the proximity graph, a KNN
+    * self-join). The self-loop filter is on (a, b), not (src, dst): a
+    * (src, dst) filter is pushed into the edge plan and picks up
+    * per-join null filters, so the copies of an uncheckpointed set
+    * ([[Truss]]) stop matching for exchange reuse. */
+  private[proximity] def undirected(edges0: DataFrame): DataFrame =
+    edges0.select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") =!= col("b")).distinct()
+
+  /** Both orientations of an [[undirected]] set, as (u, v). */
+  private[proximity] def symmetrized(und: DataFrame, u: String = "src",
+                                     v: String = "dst"): DataFrame =
+    und.select(col("a").as(u), col("b").as(v))
+      .unionByName(und.select(col("b").as(u), col("a").as(v)))
+
+  /** (id, `name`): rows per `u` value — over a [[symmetrized]] frame,
+    * the undirected degree. */
+  private[proximity] def degrees(sym: DataFrame, name: String,
+                                 u: String = "src"): DataFrame =
+    sym.groupBy(col(u).as("id")).agg(count(lit(1)).as(name))
+
+  /** Up to `rounds` rounds of `step` from the checkpointed `state`.
+    * Each next state is checkpointed eagerly — persist alone keeps the
+    * whole nested-join lineage, and ~10 rounds of plan nesting OOM the
+    * driver during analysis — then the previous one is released. Stops
+    * early once `done(previous, next)` holds. */
+  @annotation.tailrec
+  private def iterate(state: DataFrame, rounds: Int,
+                      done: (DataFrame, DataFrame) => Boolean = (_, _) => false)
+                     (step: DataFrame => DataFrame): DataFrame =
+    if (rounds == 0) state
+    else {
+      val next = step(state).localCheckpoint(true)
+      val stop = done(state, next)
+      Checkpoints.release(state)
+      if (stop) next else iterate(next, rounds - 1, done)(step)
+    }
+
+  /** One PageRank-family round over rank state `pr` (id, pr): the mass
+    * parked on dangling nodes (no out-edges) as a 1-row aggregate
+    * (`__dm`), which the caller cross-joins instead of running a
+    * per-round `.first()` action, and each dst's inflow Σ pr/outdeg
+    * (dst, `__c`). */
+  private def rankFlows(edges: DataFrame, outDeg: DataFrame,
+                        pr: DataFrame): (DataFrame, DataFrame) = {
+    val dangling = pr.join(outDeg, pr("id") === outDeg("src"), "left_anti")
+      .agg(coalesce(sum("pr"), lit(0.0)).as("__dm"))
+    val contrib = edges.join(outDeg, "src")
+      .join(pr, edges("src") === pr("id"))
+      .groupBy(col("dst"))
+      .agg(sum(col("pr") / col("__deg")).as("__c"))
+    (dangling, contrib)
+  }
 
   /** Standard damped PageRank with dangling-mass redistribution.
     * @param edges directed (src, dst) edge list; parallel edges count once
@@ -25,40 +94,21 @@ object Graph {
   def pageRank(edges0: DataFrame, iters: Int = 5,
                damping: Double = 0.85): DataFrame = {
     require(iters >= 1 && damping >= 0 && damping < 1)
-    // localCheckpoint per round (the Components precedent): persist alone
-    // keeps the whole nested-join lineage, and ~10 rounds of plan nesting
-    // OOMs the driver during analysis — checkpoint TRUNCATES it.
-    val edges = edges0.select(col("src"), col("dst")).localCheckpoint(true)
-    val nodes = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct().localCheckpoint(true)
+    val (edges, nodes) = directed(edges0)
     val n = nodes.count().toDouble
     val outDeg = edges.groupBy("src").agg(count(lit(1)).as("__deg")).localCheckpoint(true)
-    var pr = nodes.withColumn("pr", lit(1.0 / n)).localCheckpoint(true)
-    var t = 0
-    while (t < iters) {
-      // mass parked on dangling nodes (no out-edges) spreads uniformly.
-      // The mass rides a 1-row cross-joined aggregate (the established
-      // scalar-frame pattern) instead of a per-iteration .first() driver
-      // action: one job per round instead of two, identical arithmetic
-      // (same aggregate subtree, same double division by n).
-      val dangling = pr.join(outDeg, pr("id") === outDeg("src"), "left_anti")
-        .agg(coalesce(sum("pr"), lit(0.0)).as("__dm"))
-      val contrib = edges.join(outDeg, "src")
-        .join(pr, edges("src") === pr("id"))
-        .groupBy(col("dst"))
-        .agg(sum(col("pr") / col("__deg")).as("__c"))
-      val next = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
+    val pr0 = nodes.withColumn("pr", lit(1.0 / n)).localCheckpoint(true)
+    val pr = iterate(pr0, iters) { pr =>
+      // mass parked on dangling nodes spreads uniformly
+      val (dangling, contrib) = rankFlows(edges, outDeg, pr)
+      nodes.join(contrib, nodes("id") === contrib("dst"), "left")
         .crossJoin(dangling)
         .select(col("id"),
           (lit((1 - damping) / n) +
             lit(damping) * (coalesce(col("__c"), lit(0.0)) +
               col("__dm") / lit(n.toDouble))).as("pr"))
-        .localCheckpoint(true) // eager: materialized, lineage cut
-      pr.unpersist()
-      pr = next
-      t += 1
     }
-    edges.unpersist(); outDeg.unpersist(); nodes.unpersist()
+    Seq(edges, outDeg, nodes).foreach(Checkpoints.release)
     pr
   }
 
@@ -72,26 +122,19 @@ object Graph {
     */
   def labelPropagation(edges0: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1)
-    val edges = edges0.select(col("src"), col("dst")).localCheckpoint(true)
-    val nodes = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct().localCheckpoint(true)
-    var lab = nodes.withColumn("label", col("id")).localCheckpoint(true)
-    var t = 0
-    while (t < iters) {
+    val (edges, nodes) = directed(edges0)
+    val lab0 = nodes.withColumn("label", col("id")).localCheckpoint(true)
+    val lab = iterate(lab0, iters) { lab =>
       val votes = edges.join(lab, edges("src") === lab("id"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("__n"))
       // argmax label per dst: max count, then smallest label
       val best = votes.groupBy(col("dst"))
         .agg(min(struct((-col("__n")).as("negn"), col("label"))).as("__b"))
         .select(col("dst"), col("__b.label").as("__newlab"))
-      val next = lab.join(best, lab("id") === best("dst"), "left")
+      lab.join(best, lab("id") === best("dst"), "left")
         .select(col("id"), coalesce(col("__newlab"), col("label")).as("label"))
-        .localCheckpoint(true)
-      lab.unpersist()
-      lab = next
-      t += 1
     }
-    edges.unpersist(); nodes.unpersist()
+    Seq(edges, nodes).foreach(Checkpoints.release)
     lab
   }
 
@@ -120,9 +163,16 @@ object Graph {
     * by the proximity graph's per-node edge caps.
     */
   def triangleCount(edges0: DataFrame): DataFrame = {
-    val und = edges0.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
+    val und = undirected(edges0).localCheckpoint(true)
+    val out = triangles(und)
+    Checkpoints.release(und)
+    out
+  }
+
+  /** [[triangleCount]] over a checkpointed canonical edge set. The
+    * result is checkpointed: a lazy plan over `und` would pin its
+    * blocks for as long as the result lives. */
+  private def triangles(und: DataFrame): DataFrame = {
     // two-path (a<b<c): (a,b) + (b,c) → close with (a,c)
     val tri = und.as("e1")
       .join(und.as("e2"), col("e1.b") === col("e2.a"))
@@ -132,13 +182,9 @@ object Graph {
     val nodes = und.select(col("a").as("id")).union(und.select(col("b").as("id"))).distinct()
     val perNode = tri.select(explode(array(col("x"), col("y"), col("z"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("triangles"))
-    // eager result + release: returning a lazy plan over the checkpointed
-    // edge set would pin its cached blocks for the session's lifetime
-    val out = nodes.join(perNode, Seq("id"), "left")
+    nodes.join(perNode, Seq("id"), "left")
       .select(col("id"), coalesce(col("triangles"), lit(0L)).as("triangles"))
       .localCheckpoint(true)
-    und.unpersist()
-    out
   }
 
   /** ANSI-SQL equivalent of [[triangleCount]]. */
@@ -188,9 +234,7 @@ object Graph {
   def personalizedPageRank(edges0: DataFrame, seeds0: DataFrame,
                            iters: Int = 5, damping: Double = 0.85): DataFrame = {
     require(iters >= 1 && damping >= 0 && damping < 1)
-    val edges = edges0.select(col("src"), col("dst")).localCheckpoint(true)
-    val nodes = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct().localCheckpoint(true)
+    val (edges, nodes) = directed(edges0)
     val seeds = seeds0.select(col("id")).distinct()
       .join(nodes, Seq("id")).localCheckpoint(true)
     val s = seeds.count().toDouble
@@ -200,29 +244,18 @@ object Graph {
     val e = nodes.join(seeds.withColumn("__e", lit(1.0 / s)), Seq("id"), "left")
       .select(col("id"), coalesce(col("__e"), lit(0.0)).as("__e"))
       .localCheckpoint(true)
-    var pr = e.select(col("id"), col("__e").as("pr")).localCheckpoint(true)
-    var t = 0
-    while (t < iters) {
-      // dangling mass as a 1-row cross-joined aggregate, not a per-round
-      // .first() action (same rewrite as pageRank: one job per round,
-      // identical arithmetic)
-      val dangling = pr.join(outDeg, pr("id") === outDeg("src"), "left_anti")
-        .agg(coalesce(sum("pr"), lit(0.0)).as("__dm"))
-      val contrib = edges.join(outDeg, "src")
-        .join(pr, edges("src") === pr("id"))
-        .groupBy(col("dst"))
-        .agg(sum(col("pr") / col("__deg")).as("__c"))
-      val next = e.join(contrib, e("id") === contrib("dst"), "left")
+    Checkpoints.release(seeds)
+    val pr0 = e.select(col("id"), col("__e").as("pr")).localCheckpoint(true)
+    val pr = iterate(pr0, iters) { pr =>
+      // dangling mass returns to the seeds
+      val (dangling, contrib) = rankFlows(edges, outDeg, pr)
+      e.join(contrib, e("id") === contrib("dst"), "left")
         .crossJoin(dangling)
         .select(e("id"),
           ((lit(1 - damping) + lit(damping) * col("__dm")) * col("__e") +
             lit(damping) * coalesce(col("__c"), lit(0.0))).as("pr"))
-        .localCheckpoint(true)
-      pr.unpersist()
-      pr = next
-      t += 1
     }
-    edges.unpersist(); outDeg.unpersist(); nodes.unpersist(); e.unpersist()
+    Seq(edges, outDeg, nodes, e).foreach(Checkpoints.release)
     pr
   }
 
@@ -292,7 +325,7 @@ object Graph {
       frontier = next
       hop += 1
     }
-    edges.unpersist()
+    Checkpoints.release(edges)
     visited
   }
 
@@ -320,29 +353,19 @@ object Graph {
     */
   def kcorePeel(edges0: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    val und = edges0.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")).distinct()
-    var edges = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(true)
-    var r = 0
-    var stable = false
-    while (r < rounds && !stable) {
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("__d"))
-      val keep = deg.filter(col("__d") >= k).select(col("src").as("__keep"))
+    val sym = symmetrized(undirected(edges0)).localCheckpoint(true)
+    val keeps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val core = iterate(sym, rounds, (prev, next) => next.count() == prev.count()) { edges =>
+      val keep = degrees(edges, "__d").filter(col("__d") >= k).select(col("id"))
         .localCheckpoint(true)
-      val next = edges
-        .join(keep.withColumnRenamed("__keep", "src"), Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("__keep", "dst"), Seq("dst"), "left_semi")
-        .localCheckpoint(true)
-      stable = next.count() == edges.count()
-      edges.unpersist()
-      edges = next
-      r += 1
+      keeps += keep
+      edges
+        .join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+        .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
     }
-    edges.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).cast("int").as("degree"))
+    keeps.foreach(Checkpoints.release)
+    degrees(core, "degree")
+      .withColumn("degree", col("degree").cast("int"))
       .filter(col("degree") >= k)
   }
 
@@ -371,17 +394,9 @@ object Graph {
     * Aggregates only; the corr is over the edge table.
     */
   def degreeStats(edges0: DataFrame): DataFrame = {
-    // checkpoint the symmetrized edge list: deg and the two joins
-    // reference it 4x, and each reference would otherwise recompute the
-    // full upstream edge construction (for the proximity graph, a KNN
-    // self-join) — the q292 lesson applied here
-    val und = edges0.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")).distinct()
-      .localCheckpoint(true)
-    val dir = und.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
-    val deg = dir.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+    val und = undirected(edges0).localCheckpoint(true)
+    val dir = symmetrized(und)
+    val deg = degrees(dir, "deg")
     dir
       .join(deg.select(col("id").as("src"), col("deg").as("__ds")), Seq("src"))
       .join(deg.select(col("id").as("dst"), col("deg").as("__dd")), Seq("dst"))
@@ -407,13 +422,9 @@ object Graph {
     * deg(b) ≥ 2 by construction, so ln(deg) never hits zero. Returns
     * (src, dst, common_neighbors, jaccard, adamic_adar). */
   def linkPrediction(edges0: DataFrame): DataFrame = {
-    val und = edges0.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")).distinct()
-      .localCheckpoint(true)
-    val adj = und.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(und.select(col("b").as("u"), col("a").as("v")))
-    val deg = adj.groupBy(col("u").as("id")).agg(count(lit(1)).as("deg"))
+    val und = undirected(edges0).localCheckpoint(true)
+    val adj = symmetrized(und, "u", "v")
+    val deg = degrees(adj, "deg", "u")
     // two-paths a —b— c with a < c, scored per shared neighbor b
     val paths = adj.as("e1").join(adj.as("e2"),
         col("e1.v") === col("e2.u") && col("e1.u") < col("e2.v"))
@@ -438,7 +449,7 @@ object Graph {
           .as("jaccard"),
         round(col("__aa"), 6).as("adamic_adar"))
       .localCheckpoint(true)
-    und.unpersist()
+    Checkpoints.release(und)
     out
   }
 
@@ -449,16 +460,11 @@ object Graph {
     * no new shuffle shape. Returns
     * (id, degree, triangles, clustering_coeff). */
   def clusteringCoefficient(edges0: DataFrame): DataFrame = {
-    val tri = triangleCount(edges0)
-    // checkpointed for the same reason as degreeStats (deg references
-    // it twice; edges0 is expensive for the proximity graph)
-    val und = edges0.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")).distinct()
-      .localCheckpoint(true)
-    val deg = und.select(col("a").as("id"))
-      .unionByName(und.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("degree"))
+    // one checkpointed edge set feeds the triangles and the degrees, so
+    // edges0 is evaluated once
+    val und = undirected(edges0).localCheckpoint(true)
+    val tri = triangles(und)
+    val deg = degrees(symmetrized(und), "degree")
     tri.join(deg, "id")
       .select(col("id"), col("degree"), col("triangles"),
         round(coalesce(
@@ -527,19 +533,14 @@ object Graph {
     require(rounds >= 0)
     val edges = edges0.select(col("src"), col("dst"),
       col("w").cast("double").as("w")).localCheckpoint(true)
-    var dist = sources.select(col("id")).distinct()
+    val dist0 = sources.select(col("id")).distinct()
       .withColumn("dist", lit(0.0)).localCheckpoint(true)
-    var r = 0
-    while (r < rounds) {
+    val dist = iterate(dist0, rounds) { dist =>
       val relax = dist.join(edges, dist("id") === edges("src"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      val next = dist.union(relax).groupBy("id")
-        .agg(min("dist").as("dist")).localCheckpoint(true)
-      dist.unpersist()
-      dist = next
-      r += 1
+      dist.union(relax).groupBy("id").agg(min("dist").as("dist"))
     }
-    edges.unpersist()
+    Checkpoints.release(edges)
     dist.select(col("id"), round(col("dist"), 6).as("dist"))
   }
 
@@ -570,10 +571,7 @@ object Graph {
     * edge-list-sized. Returns
     * (community, n_nodes, n_intra, deg_sum, q_c 6dp). */
   def modularity(edges0: DataFrame, labels: DataFrame): DataFrame = {
-    val und = edges0.select(
-        least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct().localCheckpoint(true)
+    val und = undirected(edges0).localCheckpoint(true)
     val m = und.count().toDouble
     val lab = labels.select(col("id"), col("label")).localCheckpoint(true)
     val intra = und
@@ -581,9 +579,7 @@ object Graph {
       .join(lab.select(col("id").as("b"), col("label").as("__lb")), "b")
       .filter(col("__la") === col("__lb"))
       .groupBy(col("__la").as("community")).agg(count(lit(1)).as("n_intra"))
-    val deg = und.select(col("a").as("id"))
-      .union(und.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("__d"))
+    val deg = degrees(symmetrized(und), "__d")
       .join(lab, "id")
       .groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_nodes"), sum("__d").as("deg_sum"))
@@ -594,7 +590,7 @@ object Graph {
           (col("deg_sum") / lit(2.0 * m)) * (col("deg_sum") / lit(2.0 * m)),
           6).as("q_c"))
       .localCheckpoint(true)
-    und.unpersist(); lab.unpersist()
+    Seq(und, lab).foreach(Checkpoints.release)
     out
   }
 
@@ -634,53 +630,41 @@ object Graph {
     *
     * Scale shape per round: two src/dst-keyed joins + two groupBys —
     * the PageRank shuffle budget exactly — with the two normalizing
-    * sums as driver scalars (the [[pageRank]] dangling-mass precedent)
-    * and localCheckpoints truncating lineage per round. Returns
-    * (id, hub 6dp, authority 6dp). */
+    * sums as 1-row cross-joined aggregates (the [[pageRank]]
+    * dangling-mass pattern) and localCheckpoints truncating lineage per
+    * half-step. Returns (id, hub 6dp, authority 6dp). */
   def hits(edges0: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, "hits needs at least one round")
-    val edges = edges0.filter(col("src") =!= col("dst"))
-      .select("src", "dst").distinct().localCheckpoint(true)
-    val nodes = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct().localCheckpoint(true)
-    // L1 norm as a 1-row cross-joined aggregate instead of a per-round
-    // .first() action: the old form both ran an extra driver action AND
-    // recomputed the ar/hr join+groupBy a second time inside the
-    // normalized frame — in-plan, the repeated subtree is deduped by
-    // exchange reuse. null/zero → 1.0 exactly as before.
-    def l1(scored: DataFrame): DataFrame = {
+    val (edges, nodes) =
+      directed(edges0.filter(col("src") =!= col("dst")).select("src", "dst").distinct())
+    // one half-step: push `v` along the edges from the `from` end to the
+    // `to` end and L1-normalize it as `out`. The norm is a 1-row
+    // cross-joined aggregate, not a per-round .first() action; the
+    // repeated sum subtree is deduped by exchange reuse. A null or zero
+    // sum divides by 1.0.
+    def halfStep(state: DataFrame, v: String, from: String, to: String,
+                 out: String): DataFrame = {
+      val scored = edges.join(state.select(col("id").as(from), col(v)), from)
+        .groupBy(col(to).as("id")).agg(sum(v).as("__s"))
       val sm = coalesce(sum("__s"), lit(0.0))
-      scored.agg(when(sm === 0.0, lit(1.0)).otherwise(sm).as("__l1"))
+      nodes.join(scored, Seq("id"), "left")
+        .crossJoin(scored.agg(when(sm === 0.0, lit(1.0)).otherwise(sm).as("__l1")))
+        .select(col("id"),
+          (coalesce(col("__s"), lit(0.0)) / col("__l1")).as(out))
     }
-    var hub = nodes.withColumn("h", lit(1.0)).localCheckpoint(true)
     var auth: DataFrame = null
-    var t = 0
-    while (t < iters) {
-      val ar = edges.join(hub.select(col("id").as("src"), col("h")), "src")
-        .groupBy(col("dst").as("id")).agg(sum("h").as("__s"))
-      val aNew = nodes.join(ar, Seq("id"), "left")
-        .crossJoin(l1(ar))
-        .select(col("id"),
-          (coalesce(col("__s"), lit(0.0)) / col("__l1")).as("a"))
-        .localCheckpoint(true)
-      if (auth != null) auth.unpersist()
+    val hub0 = nodes.withColumn("h", lit(1.0)).localCheckpoint(true)
+    val hub = iterate(hub0, iters) { hub =>
+      val aNew = halfStep(hub, "h", "src", "dst", "a").localCheckpoint(true)
+      if (auth != null) Checkpoints.release(auth)
       auth = aNew
-      val hr = edges.join(auth.select(col("id").as("dst"), col("a")), "dst")
-        .groupBy(col("src").as("id")).agg(sum("a").as("__s"))
-      val hNew = nodes.join(hr, Seq("id"), "left")
-        .crossJoin(l1(hr))
-        .select(col("id"),
-          (coalesce(col("__s"), lit(0.0)) / col("__l1")).as("h"))
-        .localCheckpoint(true)
-      hub.unpersist()
-      hub = hNew
-      t += 1
+      halfStep(auth, "a", "dst", "src", "h")
     }
     val out = hub.join(auth, Seq("id"))
       .select(col("id"), round(col("h"), 6).as("hub"),
         round(col("a"), 6).as("authority"))
       .localCheckpoint(true)
-    edges.unpersist(); nodes.unpersist(); hub.unpersist(); auth.unpersist()
+    Seq(edges, nodes, hub, auth).foreach(Checkpoints.release)
     out
   }
 
@@ -721,17 +705,9 @@ object Graph {
     * convention that makes the correlation symmetric). Returns one
     * row: (n_nodes, n_edges, assortativity 6dp). */
   def assortativity(edges0: DataFrame): DataFrame = {
-    // checkpoint the undirected edge list: sym/deg/paired reference it
-    // ~6x and each reference recomputed the full KNN-join upstream —
-    // the r13 baseline plan had 64 Exchanges for a one-row result
-    val und = edges0.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
-    val sym = und.select(col("a").as("src"), col("b").as("dst"))
-      .union(und.select(col("b").as("src"), col("a").as("dst")))
-    val deg = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
+    val und = undirected(edges0).localCheckpoint(true)
+    val sym = symmetrized(und)
+    val deg = degrees(sym, "deg")
     val paired = sym
       .join(deg.select(col("id").as("src"), col("deg").as("__dx")), "src")
       .join(deg.select(col("id").as("dst"), col("deg").as("__dy")), "dst")

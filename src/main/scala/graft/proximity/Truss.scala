@@ -21,13 +21,9 @@ object Truss {
     * the max-support row first. `edges` must be (src, dst) undirected
     * (either orientation; dedup happens here). */
   def supportHistogram(edges: DataFrame): DataFrame = {
-    val canon = edges.select(
-        least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    val canon = Graph.undirected(edges)
     // adjacency in both directions for the wedge walk
-    val adj = canon.select(col("a").as("u"), col("b").as("v"))
-      .unionByName(canon.select(col("b").as("u"), col("a").as("v")))
+    val adj = Graph.symmetrized(canon, "u", "v")
     // wedges through w: (u, w), (w, v) with u < v, then the closing
     // edge (u, v) must exist
     val wedges = adj.select(col("u").as("x"), col("v").as("__w"))
@@ -67,13 +63,8 @@ object Truss {
     * then per k (a small literal grid) one semi-joined edge count.
     * Returns (k, n_nodes, n_edges_within, phi 6dp). */
   def richClub(edges: DataFrame, ks: Seq[Int]): DataFrame = {
-    val canon = edges.select(
-        least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
-    val deg = canon.select(col("a").as("id"))
-      .unionByName(canon.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("__d"))
+    val canon = Graph.undirected(edges)
+    val deg = Graph.degrees(Graph.symmetrized(canon), "__d")
     val kFrame = edges.sparkSession.createDataFrame(
       ks.map(Tuple1(_))).toDF("k")
     val nodesAtK = kFrame.join(deg, col("__d") > col("k"))

@@ -1,0 +1,104 @@
+package graft
+
+import graft.core.Checkpoints
+import graft.dedup.Components
+import graft.ml.SpectralEmbedding
+import graft.proximity.{Graph, Truss}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+
+/** The graph family's shared core: every intermediate local checkpoint
+  * is released once the returned frame no longer reads it, the
+  * canonical edge set is built in one place, and [[Checkpoints.release]]
+  * frees what `unpersist` does not. */
+class GraphCoreSpec extends SparkSpec {
+  import spark.implicits._
+
+  // a triangle 1-2-3 with a parallel edge (1,2) twice, both orientations
+  // of 1-2, a self-loop on 4, and a tail 3-4-5-3
+  private lazy val edges = Seq((1L, 2L), (1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L),
+      (3L, 4L), (4L, 4L), (4L, 5L), (5L, 3L))
+    .toDF("src", "dst").withColumn("w", lit(0.5))
+  private lazy val pairs = edges.select(col("src").as("id_a"), col("dst").as("id_b"))
+  private lazy val ids = Seq(1L, 4L).toDF("id")
+
+  private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def checkpointsIn(df: DataFrame): Set[Int] =
+    df.queryExecution.logical.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+
+  private val entryPoints: Seq[(String, () => DataFrame)] = Seq(
+    "Graph.pageRank" -> (() => Graph.pageRank(edges)),
+    "Graph.labelPropagation" -> (() => Graph.labelPropagation(edges)),
+    "Graph.triangleCount" -> (() => Graph.triangleCount(edges)),
+    "Graph.personalizedPageRank" -> (() => Graph.personalizedPageRank(edges, ids)),
+    "Graph.bfsDepths" -> (() => Graph.bfsDepths(edges, ids, 3)),
+    "Graph.kcorePeel" -> (() => Graph.kcorePeel(edges, k = 2, rounds = 3)),
+    "Graph.degreeStats" -> (() => Graph.degreeStats(edges)),
+    "Graph.linkPrediction" -> (() => Graph.linkPrediction(edges)),
+    "Graph.clusteringCoefficient" -> (() => Graph.clusteringCoefficient(edges)),
+    "Graph.ssspWeighted" -> (() => Graph.ssspWeighted(edges, ids, 3)),
+    "Graph.modularity" -> (() => Graph.modularity(edges,
+      Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L)).toDF("id", "label"))),
+    "Graph.hits" -> (() => Graph.hits(edges)),
+    "Graph.assortativity" -> (() => Graph.assortativity(edges)),
+    "Truss.supportHistogram" -> (() => Truss.supportHistogram(edges)),
+    "Truss.richClub" -> (() => Truss.richClub(edges, Seq(1, 2))),
+    "Components.connectedComponents" -> (() => Components.connectedComponents(pairs)),
+    "Components.connectedComponentsStar" ->
+      (() => Components.connectedComponentsStar(pairs)),
+    "Components.dedupByPairs" -> (() => Components.dedupByPairs(
+      Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("id"), "id", pairs)),
+    "SpectralEmbedding.embed" -> (() => SpectralEmbedding.embed(edges, "src", "dst",
+      iters = 3)))
+
+  entryPoints.foreach { case (name, run) =>
+    test(s"$name keeps only the checkpoints its result reads") {
+      val before = persisted()
+      val out = run()
+      val added = persisted() -- before
+      val read = checkpointsIn(out)
+      assert(added.subsetOf(read), s"left persisted: ${added -- read}")
+      // and nothing the result reads was released
+      assert(out.collect().nonEmpty)
+    }
+  }
+
+  test("clusteringCoefficient evaluates its input plan once") {
+    val rows = spark.sparkContext.longAccumulator("clustering-input-rows")
+    val tick = udf { (x: Long) => rows.add(1); x }.asNondeterministic()
+    val counted = edges.select(tick(col("src")).as("src"), col("dst"))
+    val cc = Graph.clusteringCoefficient(counted)
+    assert(cc.collect().length == 5)
+    assert(rows.value == edges.count())
+  }
+
+  test("Checkpoints.release frees a local checkpoint that unpersist leaves") {
+    val before = persisted()
+    val cp = spark.range(10).toDF().localCheckpoint(true)
+    val added = persisted() -- before
+    assert(added.size == 1 && added == checkpointsIn(cp))
+    cp.unpersist()
+    cp.unpersist(blocking = true)
+    assert(added.subsetOf(persisted()))
+    Checkpoints.release(cp)
+    assert(added.intersect(persisted()).isEmpty)
+  }
+
+  test("one canonical undirected edge set; no unpersist in Graph or Truss") {
+    val dir = new java.io.File("src/main/scala/graft/proximity")
+    assert(dir.isDirectory, dir.getAbsolutePath)
+    val src = dir.listFiles.toSeq.filter(_.getName.endsWith(".scala")).map { f =>
+      f.getName -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    }.toMap
+    val canon = """least(col("src"), col("dst"))"""
+    val uses = src.map { case (f, s) =>
+      f -> java.util.regex.Pattern.quote(canon).r.findAllMatchIn(s).size
+    }.filter(_._2 > 0)
+    assert(uses.values.sum == 1, uses)
+    Seq("Graph.scala", "Truss.scala").foreach { f =>
+      assert(!src(f).contains(".unpersist("), f)
+    }
+  }
+}
