@@ -618,8 +618,7 @@ object SparkEntry {
       // (pandas_utils.py:1045-1075, 270-307)
       val df = t(s, dir, "events").select(col("event_id"),
         array(col("value") % 1, lit(1.0) - col("value") % 1).as("pred_proba"))
-      graft.ml.Models.withConfidence(
-        graft.ml.Models.expandProba(df, "pred_proba", Seq("no", "yes")), "pred_proba")
+      graft.ml.Models.probaColumns(df, "pred_proba", Seq("no", "yes"))
         .select(col("event_id"),
           round(col("no_proba"), 6).as("no_proba"),
           round(col("yes_proba"), 6).as("yes_proba"),

@@ -107,16 +107,9 @@ class DataSource(val spark: SparkSession, val name: String, df: DataFrame,
     * missing) and event_time stamp
     * (reference: pandas_to_features.py:94-129). */
   def toFeatures(fsName: String, idColumn: String = "auto_id",
-                 eventTimeColumn: String = "event_time"): FeatureSet = {
-    val withId =
-      if (normalized.columns.contains(idColumn)) normalized
-      else normalized.withColumn(idColumn, monotonically_increasing_id())
-    val withTs =
-      if (withId.columns.contains(eventTimeColumn)) withId
-      else withId.withColumn(eventTimeColumn, current_timestamp())
-    new FeatureSet(spark, fsName, Transforms.clampFeatureTypes(withTs),
+                 eventTimeColumn: String = "event_time"): FeatureSet =
+    new FeatureSet(spark, fsName, FeatureSet.stamped(normalized, idColumn, eventTimeColumn),
       idColumn, eventTimeColumn)
-  }
 }
 
 object DataSource {
@@ -162,4 +155,19 @@ class FeatureSet(val spark: SparkSession, val name: String, df: DataFrame,
     Transforms.temporalSplit(snapshot(), eventTimeColumn, cutoff)
 
   def asDataSource: DataSource = new DataSource(spark, name + "_ds", df)
+}
+
+private[api] object FeatureSet {
+  /** A FeatureSet's frame: the id column generated when missing, event
+    * time stamped when missing, feature types clamped
+    * (pandas_to_features.py:94-129, 243-280). */
+  def stamped(df: DataFrame, idColumn: String, eventTimeColumn: String): DataFrame = {
+    val withId =
+      if (df.columns.contains(idColumn)) df
+      else df.withColumn(idColumn, monotonically_increasing_id())
+    val withTs =
+      if (withId.columns.contains(eventTimeColumn)) withId
+      else withId.withColumn(eventTimeColumn, current_timestamp())
+    Transforms.clampFeatureTypes(withTs)
+  }
 }

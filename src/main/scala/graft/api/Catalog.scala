@@ -58,8 +58,18 @@ class Catalog(val spark: SparkSession, val root: String) {
   def onboard(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
               owner: String = "unknown", input: String = "dataframe"): DataSource = {
     val clean = sanitize(name)
-    val normalized = Transforms.normalizeColumnNames(df)
-    val w = normalized.write.mode("overwrite")
+    persistTable(clean, Transforms.normalizeColumnNames(df), partitionBy,
+      "data_source", input, owner, Map.empty)
+    dataSource(clean)
+  }
+
+  /** The onboarding tail of every table-backed artifact: the parquet
+    * write, the session-catalog table, the stats drop, the registry row
+    * and the display + computation views, in that order. */
+  private def persistTable(clean: String, df: DataFrame, partitionBy: Seq[String],
+                           artifactType: String, input: String, owner: String,
+                           meta: Map[String, String]): Unit = {
+    val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(tablePath(clean))
     registerTable(clean)
@@ -68,11 +78,10 @@ class Catalog(val spark: SparkSession, val root: String) {
     dropStats(clean)
     // one registry write, not five read-modify-write cycles — no window
     // where a reader sees a half-initialized row
-    registry.onboardRow(clean, "data_source", input, owner)
+    registry.onboardRow(clean, artifactType, input, owner, meta)
     val cols = spark.table(clean).columns.toSeq
     createView(clean, "display", subsetViewSql(clean, cols))
     createView(clean, "computation", subsetViewSql(clean, cols))
-    dataSource(clean)
   }
 
   /** `SELECT c1..cN FROM base` with the 30-column cap and bookkeeping
@@ -125,27 +134,12 @@ class Catalog(val spark: SparkSession, val root: String) {
                       owner: String = "unknown",
                       input: String = "dataframe"): FeatureSet = {
     val clean = sanitize(name)
-    val normalized = Transforms.normalizeColumnNames(df)
-    val withId =
-      if (normalized.columns.contains(idColumn)) normalized
-      else normalized.withColumn(idColumn,
-        org.apache.spark.sql.functions.monotonically_increasing_id())
-    val withTs =
-      if (withId.columns.contains(eventTimeColumn)) withId
-      else withId.withColumn(eventTimeColumn,
-        org.apache.spark.sql.functions.current_timestamp())
-    val clamped = Transforms.clampFeatureTypes(withTs)
-    clamped.write.mode("overwrite").parquet(tablePath(clean))
-    registerTable(clean)
-    dropStats(clean)
     // id/event-time meta rides in the SAME registry write — a crash
     // between two writes would leave a 'ready' FeatureSet that silently
     // reopens with default columns
-    registry.onboardRow(clean, "feature_set", input, owner, Map(
+    persistTable(clean, FeatureSet.stamped(Transforms.normalizeColumnNames(df),
+        idColumn, eventTimeColumn), Nil, "feature_set", input, owner, Map(
       "graft_id_column" -> idColumn, "graft_event_time_column" -> eventTimeColumn))
-    val cols = spark.table(clean).columns.toSeq
-    createView(clean, "display", subsetViewSql(clean, cols))
-    createView(clean, "computation", subsetViewSql(clean, cols))
     featureSet(clean)
   }
 
@@ -324,17 +318,10 @@ class Catalog(val spark: SparkSession, val root: String) {
   def toModel(featureSet: String, modelName: String, modelType: String,
               target: String, features: Seq[String],
               owner: String = "unknown", algo: String = "linear"): Model = {
-    val df = spark.table(sanitize(featureSet))
-    val fitted = modelType match {
-      case "classifier" => graft.ml.Models.trainClassifier(df, features, target, algo)
-      case _ => graft.ml.Models.trainRegressor(df, features, target, algo)
-    }
-    val labels = fitted.stages.collectFirst {
-      case si: org.apache.spark.ml.feature.StringIndexerModel =>
-        si.labelsArray(0).toSeq
-    }.getOrElse(Nil)
-    onboardModel(modelName, fitted, modelType, target, features, labels,
-      owner, input = sanitize(featureSet), algo = algo)
+    val fitted = graft.ml.Models.train(spark.table(sanitize(featureSet)),
+      modelType, features, target, algo)
+    onboardModel(modelName, fitted, modelType, target, features,
+      graft.ml.Models.classLabels(fitted), owner, input = sanitize(featureSet), algo = algo)
   }
 
   /** Reopen a registered model artifact by name (restart path). */

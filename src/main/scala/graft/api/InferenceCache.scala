@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,7 +15,9 @@ import org.apache.spark.sql.functions._
   * local-checkpoints the DISTINCT missed keys once (their count decides
   * the all-hits short-circuit and feeds the fan-out guard), runs the
   * wrapped endpoint on them only, appends the new results to the cache,
-  * and left-joins the up-to-date cache back onto the eval frame. Key
+  * and left-joins the up-to-date cache back onto the eval frame, which
+  * then reads only the cache parquet: every checkpoint the call made is
+  * released before it returns. Key
   * comparisons are NULL-SAFE (`<=>`): a null key is one more cache
   * entry, computed once and served like any other, not a permanent
   * every-call miss.
@@ -186,8 +189,12 @@ class InferenceCache(val endpoint: Endpoint,
       catalog.paramStore.upsert(uniqueKey,
         if (wasUnique && !keyRewritten && oneRowPerKey) s"true:${cacheStamp()}"
         else "false")
-      stamped.unpersist()
+      // the append has committed: nothing reads the endpoint output (or a
+      // capture checkpoint the endpoint made) again
+      Checkpoints.release(stamped)
+      Checkpoints.release(keyed)
     }
+    Checkpoints.release(toCompute)
 
     val latest = latestPerKey(store.get(cachePath))
     val featureCols = latest.columns
@@ -241,6 +248,7 @@ class InferenceCache(val endpoint: Endpoint,
     val kept = cache.filter(!matches).localCheckpoint(true)
     if (kept.isEmpty) store.delete(cachePath)
     else store.upsert(cachePath, kept)
+    Checkpoints.release(kept)
     removed
   }
 }

@@ -242,33 +242,13 @@ class Endpoint(val catalog: Catalog, val name: String) {
                 idColumn: Option[String] = None): DataFrame = {
     val m = model
     val raw = m.transform(df)
-    val isClassifier = m.modelType == "classifier"
-
     // classifier post-processing: per-label proba columns + confidence
     // from the probability vector; index→label when labels are known
-    val preds0 =
-      if (isClassifier && raw.columns.contains("pred_proba")) {
-        val arr = raw.withColumn("__proba",
-          org.apache.spark.ml.functions.vector_to_array(col("pred_proba")))
-        val expanded =
-          if (m.classLabels.nonEmpty)
-            graft.ml.Models.expandProba(arr, "__proba", m.classLabels)
-          else arr
-        expanded.withColumn("confidence", array_max(col("__proba"))).drop("__proba")
-      } else raw
     val preds =
-      if (isClassifier && m.classLabels.nonEmpty &&
-          preds0.schema("prediction").dataType
-            .isInstanceOf[org.apache.spark.sql.types.NumericType])
-        preds0.withColumn("prediction", element_at(
-          array(m.classLabels.map(lit): _*), col("prediction").cast("int") + 1))
-      else preds0
-
-    val hasTarget = preds.columns.contains(m.target)
-    val withRes0 =
-      if (hasTarget && !isClassifier)
-        graft.ml.Metrics.withResiduals(preds, m.target, "prediction")
-      else preds
+      if (m.modelType == "classifier")
+        graft.ml.Models.labelPredictions(raw, m.classLabels, confidence = true)
+      else raw
+    val withRes0 = withResiduals(m, preds)
     val mon = monitor
     // a captured run has 4-5 consumers (predictions write, metrics,
     // confusion matrix, InferenceStore append, data capture) plus the
@@ -281,17 +261,8 @@ class Endpoint(val catalog: Catalog, val name: String) {
       else withRes0
 
     captureName.foreach { capture =>
-      val metrics =
-        if (!hasTarget) None
-        else if (isClassifier)
-          Some(graft.ml.Metrics.classificationMetricsFull(
-            withRes, m.target, "prediction",
-            if (m.classLabels.nonEmpty) m.classLabels
-            else withRes.select(m.target).distinct()
-              .collect().map(_.get(0).toString).sorted.toSeq))
-        else Some(graft.ml.Metrics.regressionMetrics(withRes, m.target, "prediction"))
-      captureRun(m, capture, withRes, metrics, idColumn,
-        cm = if (hasTarget && isClassifier)
+      captureRun(m, capture, withRes, metricsPack(m, withRes), idColumn,
+        cm = if (withRes.columns.contains(m.target) && m.modelType == "classifier")
           Some(graft.ml.Metrics.confusionMatrix(withRes, m.target, "prediction"))
         else None)
     }
@@ -375,52 +346,47 @@ class Endpoint(val catalog: Catalog, val name: String) {
       m.flavor match {
         case "formula" => m.transform(te)
         case _ =>
-          val p = m.modelType match {
-            case "classifier" =>
-              graft.ml.Models.trainClassifier(tr, m.features, m.target, m.algo)
-            case _ => graft.ml.Models.trainRegressor(tr, m.features, m.target, m.algo)
-          }
+          val p = graft.ml.Models.train(tr, m.modelType, m.features, m.target, m.algo)
           val out = p.transform(te)
           // classifier: map the prediction index (and the proba vector's
           // positions) back through THIS fold's StringIndexer labels —
           // each fold fits its own frequency-ordered indexer, so raw
           // indices/vector slots from different folds are NOT comparable
           // and must never be stitched; label-NAMED columns are
-          val foldLabels = p.stages.collectFirst {
-            case si: org.apache.spark.ml.feature.StringIndexerModel =>
-              si.labelsArray(0).toSeq
-          }.getOrElse(Nil)
-          if (m.modelType == "classifier" && foldLabels.nonEmpty) {
-            val arr = out.withColumn("__proba",
-              org.apache.spark.ml.functions.vector_to_array(col("pred_proba")))
-            graft.ml.Models.expandProba(arr, "__proba", foldLabels)
-              .drop("__proba", "pred_proba")
-              .withColumn("prediction", element_at(
-                array(foldLabels.map(lit): _*), col("prediction").cast("int") + 1))
-          } else out
+          if (m.modelType == "classifier")
+            graft.ml.Models.labelPredictions(out, graft.ml.Models.classLabels(p),
+              confidence = false)
+          else out
       }
     }
-    val hasTarget = oof.columns.contains(m.target)
-    val isClassifier = m.modelType == "classifier"
-    val withRes =
-      if (hasTarget && !isClassifier)
-        graft.ml.Metrics.withResiduals(oof, m.target, "prediction")
-      else oof
+    val withRes = withResiduals(m, oof)
     if (capture) {
-      val metrics =
-        if (!hasTarget) None
-        else if (isClassifier)
-          Some(graft.ml.Metrics.classificationMetricsFull(
-            withRes.withColumn("prediction", col("prediction").cast("string")),
-            m.target, "prediction",
-            if (m.classLabels.nonEmpty) m.classLabels
-            else withRes.select(m.target).distinct()
-              .collect().map(_.get(0).toString).sorted.toSeq))
-        else Some(graft.ml.Metrics.regressionMetrics(withRes, m.target, "prediction"))
+      val metrics = metricsPack(m,
+        if (m.modelType == "classifier")
+          withRes.withColumn("prediction", col("prediction").cast("string"))
+        else withRes)
       captureRun(m, "full_cross_fold", withRes, metrics, Some(idColumn), cm = None)
     }
     withRes
   }
+
+  /** A regressor's residual columns, when its target is present. */
+  private def withResiduals(m: Model, preds: DataFrame): DataFrame =
+    if (preds.columns.contains(m.target) && m.modelType != "classifier")
+      graft.ml.Metrics.withResiduals(preds, m.target, "prediction")
+    else preds
+
+  /** The standard metrics pack over scored predictions; `None` without
+    * the target. A classifier is scored over its stored labels, or the
+    * frame's own sorted distinct targets when it has none. */
+  private def metricsPack(m: Model, scored: DataFrame): Option[DataFrame] =
+    if (!scored.columns.contains(m.target)) None
+    else if (m.modelType == "classifier")
+      Some(graft.ml.Metrics.classificationMetricsFull(scored, m.target, "prediction",
+        if (m.classLabels.nonEmpty) m.classLabels
+        else scored.select(m.target).distinct()
+          .collect().map(_.get(0).toString).sorted.toSeq))
+    else Some(graft.ml.Metrics.regressionMetrics(scored, m.target, "prediction"))
 
   /** Persist one inference run: the column-selected prediction frame,
     * the metrics table, the classifier confusion matrix, the run name on

@@ -27,7 +27,7 @@ object Hpo {
 
   /** Backend-agnostic knob specs (hpo_harness.py:45-99). Values are
     * carried as Double in configs — integer knobs are floored on
-    * application ([[Models.trainRegressorTuned]]). */
+    * application ([[Models.trainRegressor]]). */
   sealed trait ParamSpec
   final case class IntRange(low: Int, high: Int, step: Int = 1) extends ParamSpec {
     require(low < high, s"IntRange needs low < high, got low=$low, high=$high")
@@ -114,7 +114,8 @@ object Hpo {
       Row.fromSeq(t.trial +: knobs.map(t.config) :+ t.metric :+
         (t.config == res.best && t.metric == res.bestMetric))
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toList, 1), schema)
+    // a local relation: collecting it runs no Spark job
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Score an explicit config list instead of sampling
@@ -148,7 +149,7 @@ object Hpo {
                        target: String, algo: String, k: Int = 3,
                        seed: Long = 42L): Config => Double = { cfg =>
     val oof = CrossFold.run(df, idCol, k) { (train, test) =>
-      Models.trainRegressorTuned(train, features, target, algo, cfg, seed)
+      Models.trainRegressor(train, features, target, algo, cfg, seed)
         .transform(test)
         .select(col(idCol), col(target), col("prediction"))
     }
@@ -165,19 +166,11 @@ object Hpo {
                         target: String, algo: String, k: Int = 3,
                         seed: Long = 42L): Config => Double = { cfg =>
     val oof = CrossFold.run(df, idCol, k) { (train, test) =>
-      val m = Models.trainClassifierTuned(train, features, target, algo, cfg, seed)
-      val labels = m.stages.collectFirst {
-        case si: org.apache.spark.ml.feature.StringIndexerModel => si.labelsArray(0)
-      }.getOrElse(Array.empty[String])
-      val labelExpr = labels.zipWithIndex
-        .foldLeft(lit(null).cast("string")) { case (acc, (lbl, i)) =>
-          when(col("prediction") === i.toDouble, lit(lbl)).otherwise(acc)
-        }
-      m.transform(test)
-        .withColumn("predicted_label", labelExpr)
-        .select(col(idCol), col(target), col("predicted_label"))
+      val m = Models.trainClassifier(train, features, target, algo, cfg, seed)
+      Models.labelPredictions(m.transform(test), Models.classLabels(m), confidence = false)
+        .select(col(idCol), col(target), col("prediction"))
     }
-    oof.agg(avg(when(col(target) === col("predicted_label"), 1.0).otherwise(0.0)))
+    oof.agg(avg(when(col(target) === col("prediction"), 1.0).otherwise(0.0)))
       .head.getDouble(0)
   }
 }

@@ -1,12 +1,15 @@
 package graft.ml
 
-import org.apache.spark.ml.{Pipeline, PipelineModel}
+import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.ml.classification.{GBTClassifier, LogisticRegression, RandomForestClassifier}
 import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.feature.{PCA, StandardScaler, StringIndexer, VectorAssembler}
+import org.apache.spark.ml.feature.{PCA, StandardScaler, StringIndexer, StringIndexerModel, VectorAssembler}
+import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.ml.param.IntParam
 import org.apache.spark.ml.regression.{GBTRegressor, LinearRegression, RandomForestRegressor}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.NumericType
 
 /** ML loop: MLlib pipelines replacing the reference's SageMaker
   * train/deploy/infer cycle (reference: src/workbench/core/transforms/
@@ -14,6 +17,13 @@ import org.apache.spark.sql.functions._
   * endpoint_core.py) — training and inference stay in-cluster, so the
   * reference's 100-row HTTP batching and error-isolation machinery
   * disappears entirely.
+  *
+  * The model loop's decisions live here once: the estimator per (kind,
+  * algo) and its knob table ([[trainRegressor]], [[trainClassifier]]),
+  * the fit for a registered model type ([[train]]), the fitted label
+  * indexer's labels ([[classLabels]]) and the prediction-to-label
+  * mapping ([[labelPredictions]]). Onboarding, cross-fold refits and HPO
+  * trials all fit and label through them.
   */
 object Models {
 
@@ -28,152 +38,109 @@ object Models {
     * (random forest), "linear" (the deterministic default that anchors
     * the oracle checks). Tree fits are seeded — reproducible within
     * MLlib, though coordinates are engine-specific (rows-only checks).
-    */
-  def trainRegressor(df: DataFrame, features: Seq[String], target: String,
-                     algo: String = "linear", seed: Long = 42L): PipelineModel = {
-    val est: org.apache.spark.ml.PipelineStage = algo match {
-      case "linear" => new LinearRegression().setFeaturesCol("__scaled")
-        .setLabelCol(target).setPredictionCol("prediction")
-      case "rf" => new RandomForestRegressor().setSeed(seed)
-        .setFeaturesCol("__scaled").setLabelCol(target).setPredictionCol("prediction")
-      case "gbt" => new GBTRegressor().setSeed(seed)
-        .setFeaturesCol("__scaled").setLabelCol(target).setPredictionCol("prediction")
-      case other => throw new IllegalArgumentException(
-        s"unknown regressor algo '$other' (linear | rf | gbt)")
-    }
-    val pipeline = new Pipeline().setStages(Array(
-      new VectorAssembler().setInputCols(features.toArray).setOutputCol("__features"),
-      new StandardScaler().setInputCol("__features").setOutputCol("__scaled"),
-      est))
-    pipeline.fit(df)
-  }
-
-  /** [[trainRegressor]] with explicit hyperparameters — the estimator-side
-    * half of the HPO trial contract (reference: the per-framework knob
+    *
+    * `params` are explicit hyperparameters — the estimator-side half of
+    * the HPO trial contract (reference: the per-framework knob
     * application in src/workbench/training/xgb_hpo.py:36-52 merged into
     * the fit by hpo_runner.py:81-89 `merge_config`). Knob names follow
-    * MLlib param names; unknown knobs fail loudly so a typo'd search
-    * space can't silently search nothing. */
-  def trainRegressorTuned(df: DataFrame, features: Seq[String], target: String,
-                          algo: String, params: Map[String, Double],
-                          seed: Long = 42L): PipelineModel = {
-    val est: org.apache.spark.ml.PipelineStage = algo match {
-      case "gbt" =>
-        val g = new GBTRegressor().setSeed(seed).setFeaturesCol("__scaled")
-          .setLabelCol(target).setPredictionCol("prediction")
-        params.foreach {
-          case ("maxDepth", v) => g.setMaxDepth(v.toInt)
-          case ("maxIter", v) => g.setMaxIter(v.toInt)
-          case ("stepSize", v) => g.setStepSize(v)
-          case ("subsamplingRate", v) => g.setSubsamplingRate(v)
-          case ("minInstancesPerNode", v) => g.setMinInstancesPerNode(v.toInt)
-          case (k, _) => throw new IllegalArgumentException(s"unknown gbt knob '$k'")
-        }
-        g
-      case "rf" =>
-        val r = new RandomForestRegressor().setSeed(seed).setFeaturesCol("__scaled")
-          .setLabelCol(target).setPredictionCol("prediction")
-        params.foreach {
-          case ("maxDepth", v) => r.setMaxDepth(v.toInt)
-          case ("numTrees", v) => r.setNumTrees(v.toInt)
-          case ("subsamplingRate", v) => r.setSubsamplingRate(v)
-          case ("minInstancesPerNode", v) => r.setMinInstancesPerNode(v.toInt)
-          case (k, _) => throw new IllegalArgumentException(s"unknown rf knob '$k'")
-        }
-        r
-      case "linear" =>
-        val l = new LinearRegression().setFeaturesCol("__scaled")
-          .setLabelCol(target).setPredictionCol("prediction")
-        params.foreach {
-          case ("regParam", v) => l.setRegParam(v)
-          case ("elasticNetParam", v) => l.setElasticNetParam(v)
-          case (k, _) => throw new IllegalArgumentException(s"unknown linear knob '$k'")
-        }
-        l
-      case other => throw new IllegalArgumentException(
-        s"unknown regressor algo '$other' (linear | rf | gbt)")
-    }
+    * MLlib param names, integer knobs are floored, and unknown knobs
+    * fail loudly so a typo'd search space can't silently search
+    * nothing. */
+  def trainRegressor(df: DataFrame, features: Seq[String], target: String,
+                     algo: String = "linear", params: Map[String, Double] = Map.empty,
+                     seed: Long = 42L): PipelineModel =
     new Pipeline().setStages(Array(
       new VectorAssembler().setInputCols(features.toArray).setOutputCol("__features"),
       new StandardScaler().setInputCol("__features").setOutputCol("__scaled"),
-      est)).fit(df)
-  }
+      estimator("regressor", algo, target, params, seed))).fit(df)
 
   /** Train a classification pipeline (label-index → assemble → estimator).
     * `algo`: "logistic" (default; also accepts "linear" as the alias the
     * regressor side uses), "rf", or "gbt" (binary targets only — MLlib's
-    * GBTClassifier limit, matching XGBoost's binary:logistic default). */
+    * GBTClassifier limit, matching XGBoost's binary:logistic default).
+    * `params` as for [[trainRegressor]]. */
   def trainClassifier(df: DataFrame, features: Seq[String], target: String,
-                      algo: String = "logistic", seed: Long = 42L): PipelineModel = {
-    val est: org.apache.spark.ml.PipelineStage = algo match {
-      case "logistic" | "linear" => new LogisticRegression()
-        .setFeaturesCol("__features").setLabelCol("__label")
-        .setPredictionCol("prediction").setProbabilityCol("pred_proba")
-      case "rf" => new RandomForestClassifier().setSeed(seed)
-        .setFeaturesCol("__features").setLabelCol("__label")
-        .setPredictionCol("prediction").setProbabilityCol("pred_proba")
-      case "gbt" => new GBTClassifier().setSeed(seed)
-        .setFeaturesCol("__features").setLabelCol("__label")
-        .setPredictionCol("prediction").setProbabilityCol("pred_proba")
-      case other => throw new IllegalArgumentException(
-        s"unknown classifier algo '$other' (logistic | rf | gbt)")
-    }
-    val pipeline = new Pipeline().setStages(Array(
-      new StringIndexer().setInputCol(target).setOutputCol("__label"),
-      new VectorAssembler().setInputCols(features.toArray).setOutputCol("__features"),
-      est))
-    pipeline.fit(df)
-  }
-
-  /** [[trainClassifier]] with explicit hyperparameters — classifier side
-    * of the HPO trial contract (see [[trainRegressorTuned]]). */
-  def trainClassifierTuned(df: DataFrame, features: Seq[String], target: String,
-                           algo: String, params: Map[String, Double],
-                           seed: Long = 42L): PipelineModel = {
-    val est: org.apache.spark.ml.PipelineStage = algo match {
-      case "logistic" | "linear" =>
-        val l = new LogisticRegression().setFeaturesCol("__features")
-          .setLabelCol("__label").setPredictionCol("prediction")
-          .setProbabilityCol("pred_proba")
-        params.foreach {
-          case ("regParam", v) => l.setRegParam(v)
-          case ("elasticNetParam", v) => l.setElasticNetParam(v)
-          case ("maxIter", v) => l.setMaxIter(v.toInt)
-          case (k, _) => throw new IllegalArgumentException(s"unknown logistic knob '$k'")
-        }
-        l
-      case "rf" =>
-        val r = new RandomForestClassifier().setSeed(seed)
-          .setFeaturesCol("__features").setLabelCol("__label")
-          .setPredictionCol("prediction").setProbabilityCol("pred_proba")
-        params.foreach {
-          case ("maxDepth", v) => r.setMaxDepth(v.toInt)
-          case ("numTrees", v) => r.setNumTrees(v.toInt)
-          case ("subsamplingRate", v) => r.setSubsamplingRate(v)
-          case ("minInstancesPerNode", v) => r.setMinInstancesPerNode(v.toInt)
-          case (k, _) => throw new IllegalArgumentException(s"unknown rf knob '$k'")
-        }
-        r
-      case "gbt" =>
-        val g = new GBTClassifier().setSeed(seed)
-          .setFeaturesCol("__features").setLabelCol("__label")
-          .setPredictionCol("prediction").setProbabilityCol("pred_proba")
-        params.foreach {
-          case ("maxDepth", v) => g.setMaxDepth(v.toInt)
-          case ("maxIter", v) => g.setMaxIter(v.toInt)
-          case ("stepSize", v) => g.setStepSize(v)
-          case ("subsamplingRate", v) => g.setSubsamplingRate(v)
-          case ("minInstancesPerNode", v) => g.setMinInstancesPerNode(v.toInt)
-          case (k, _) => throw new IllegalArgumentException(s"unknown gbt knob '$k'")
-        }
-        g
-      case other => throw new IllegalArgumentException(
-        s"unknown classifier algo '$other' (logistic | rf | gbt)")
-    }
+                      algo: String = "logistic", params: Map[String, Double] = Map.empty,
+                      seed: Long = 42L): PipelineModel =
     new Pipeline().setStages(Array(
       new StringIndexer().setInputCol(target).setOutputCol("__label"),
       new VectorAssembler().setInputCols(features.toArray).setOutputCol("__features"),
-      est)).fit(df)
+      estimator("classifier", algo, target, params, seed))).fit(df)
+
+  /** Fit the standard pipeline for a registered model type: "classifier"
+    * trains [[trainClassifier]], anything else [[trainRegressor]]. */
+  def train(df: DataFrame, modelType: String, features: Seq[String], target: String,
+            algo: String): PipelineModel = modelType match {
+    case "classifier" => trainClassifier(df, features, target, algo)
+    case _ => trainRegressor(df, features, target, algo)
+  }
+
+  /** Tunable knobs per estimator family, by MLlib param name. */
+  private val Knobs: Map[String, Set[String]] = Map(
+    "gbt" -> Set("maxDepth", "maxIter", "stepSize", "subsamplingRate", "minInstancesPerNode"),
+    "rf" -> Set("maxDepth", "numTrees", "subsamplingRate", "minInstancesPerNode"),
+    "linear" -> Set("regParam", "elasticNetParam"),
+    "logistic" -> Set("regParam", "elasticNetParam", "maxIter"))
+
+  /** The final pipeline stage: one constructor per (kind, algo), the
+    * kind's column wiring (a regressor reads the scaled vector and the
+    * raw target, a classifier the assembled vector and the indexed
+    * label), then the family's knobs from `params`. */
+  private def estimator(kind: String, algo: String, target: String,
+                        params: Map[String, Double], seed: Long): PipelineStage = {
+    val (family, est): (String, PipelineStage) = (kind, algo) match {
+      case ("regressor", "linear") => ("linear", new LinearRegression())
+      case ("regressor", "rf") => ("rf", new RandomForestRegressor().setSeed(seed))
+      case ("regressor", "gbt") => ("gbt", new GBTRegressor().setSeed(seed))
+      case ("regressor", other) => throw new IllegalArgumentException(
+        s"unknown regressor algo '$other' (linear | rf | gbt)")
+      case (_, "logistic" | "linear") => ("logistic", new LogisticRegression())
+      case (_, "rf") => ("rf", new RandomForestClassifier().setSeed(seed))
+      case (_, "gbt") => ("gbt", new GBTClassifier().setSeed(seed))
+      case (_, other) => throw new IllegalArgumentException(
+        s"unknown classifier algo '$other' (logistic | rf | gbt)")
+    }
+    val wiring =
+      if (kind == "regressor")
+        Seq("featuresCol" -> "__scaled", "labelCol" -> target, "predictionCol" -> "prediction")
+      else Seq("featuresCol" -> "__features", "labelCol" -> "__label",
+        "predictionCol" -> "prediction", "probabilityCol" -> "pred_proba")
+    wiring.foreach { case (k, v) => est.set(est.getParam(k), v) }
+    params.foreach { case (k, v) =>
+      if (!Knobs(family).contains(k))
+        throw new IllegalArgumentException(s"unknown $family knob '$k'")
+      val p = est.getParam(k)
+      est.set(p, if (p.isInstanceOf[IntParam]) Int.box(v.toInt) else Double.box(v))
+    }
+    est
+  }
+
+  /** The fitted label indexer's labels in index order; empty for a
+    * pipeline without one (every regressor). */
+  def classLabels(pipeline: PipelineModel): Seq[String] =
+    pipeline.stages.collectFirst {
+      case si: StringIndexerModel => si.labelsArray(0).toSeq
+    }.getOrElse(Nil)
+
+  /** A fitted classifier's output in label terms, given its pipeline's
+    * [[classLabels]]: one `<label>_proba` column per label from the
+    * `pred_proba` vector, and a numeric `prediction` index replaced by
+    * its label (an index always falls inside its own pipeline's
+    * labels). `confidence` keeps `pred_proba` and adds the rowwise max
+    * probability; without it `pred_proba` is dropped. */
+  def labelPredictions(out: DataFrame, labels: Seq[String],
+                       confidence: Boolean): DataFrame = {
+    val expanded =
+      if (!out.columns.contains("pred_proba")) out
+      else {
+        val arr = out.withColumn("__proba", vector_to_array(col("pred_proba")))
+        if (confidence) probaColumns(arr, "__proba", labels).drop("__proba")
+        else expandProba(arr, "__proba", labels).drop("__proba", "pred_proba")
+      }
+    if (labels.nonEmpty && expanded.schema("prediction").dataType.isInstanceOf[NumericType])
+      expanded.withColumn("prediction", element_at(
+        array(labels.map(lit): _*), col("prediction").cast("int") + 1))
+    else expanded
   }
 
   /** Per-feature importance from a fitted pipeline — the model-side half
@@ -236,8 +203,7 @@ object Models {
     val scaled = new StandardScaler().setInputCol("__features").setOutputCol("__scaled")
       .setWithMean(true).fit(assembled).transform(assembled)
     val pca = new PCA().setK(2).setInputCol("__scaled").setOutputCol("__pc").fit(scaled)
-    pca.transform(scaled).withColumn("__arr",
-      org.apache.spark.ml.functions.vector_to_array(col("__pc")))
+    pca.transform(scaled).withColumn("__arr", vector_to_array(col("__pc")))
       .withColumn("x", col("__arr")(0)).withColumn("y", col("__arr")(1))
       .drop("__features", "__scaled", "__pc", "__arr")
   }
@@ -271,6 +237,10 @@ object Models {
     * (reference: pandas_utils.py:270-307). */
   def withConfidence(df: DataFrame, probaCol: String): DataFrame =
     df.withColumn("confidence", array_max(col(probaCol)))
+
+  /** [[expandProba]] then [[withConfidence]] over one array column. */
+  def probaColumns(df: DataFrame, probaCol: String, labels: Seq[String]): DataFrame =
+    withConfidence(expandProba(df, probaCol, labels), probaCol)
 
   /** Per-task loss weights inversely proportional to non-null/non-NaN
     * target coverage, mean-normalized to 1 — equalizes each task's

@@ -16,11 +16,14 @@ import org.apache.spark.sql.functions._
   * computed by BLOCK (simultaneous orthogonal) ITERATION: all k
   * columns advance together, and S's top eigenvector is known in
   * closed form (u1 ∝ sqrt(degree), eigenvalue 1 on a connected graph)
-  * so deflation against it is analytic. Each round is exactly ONE
-  * job regardless of k: the edge-join + dst-groupBy propagating every
-  * column (the PageRank shape) is lazily localCheckpointed and the
-  * single materializing action is the aggregate yielding the u1 dots
-  * plus the k×k column Gram matrix. The Cholesky-based
+  * so deflation against it is analytic. Each round has ONE
+  * materializing action regardless of k: the edge-join + dst-groupBy
+  * propagating every column (the PageRank shape) is lazily
+  * localCheckpointed and the action is the aggregate yielding the u1
+  * dots plus the k×k column Gram matrix. Under adaptive execution that
+  * action runs each shuffle and broadcast stage as its own job, so a
+  * job listener counts about 10 jobs per round, and the exact number
+  * varies with timing. The Cholesky-based
   * orthonormalization coefficients travel in a broadcast ONE-ROW
   * frame rather than as plan literals, so every round compiles to the
   * same generated code (plan-literal coefficients forced a fresh
@@ -87,9 +90,10 @@ object SpectralEmbedding {
     // matrix G. The Gram-Schmidt / Cholesky factor is applied as a
     // linear combination whose coefficients ride a broadcast one-row
     // frame (k×k, k ≤ 8) — identical plan text every round, so the
-    // whole loop shares one codegen compile. One job per round
-    // REGARDLESS of k, column j converging to the (j+1)-th
-    // eigenvector of S.
+    // whole loop shares one codegen compile. One action per round
+    // REGARDLESS of k (adaptive execution splits it into about 10
+    // stage jobs), column j converging to the (j+1)-th eigenvector
+    // of S.
     val vCols = (1 to k).map(j => s"v$j")
     val u1j = u1.select(col("id"), col("v").as("__u"))
     val spark = edges.sparkSession
@@ -151,7 +155,7 @@ object SpectralEmbedding {
           vCols.map(c => coalesce(col(c), lit(0.0)).as(c)): _*)
         .join(u1j, "id")
         .localCheckpoint(false) // lazy: the aggregate below materializes it
-      // ONE aggregate (= the round's one job): d_j = <v_j, u1> and
+      // ONE aggregate (= the round's one action): d_j = <v_j, u1> and
       // G_ij = <v_i, v_j>
       val aggExprs =
         vCols.map(c => sum(col(c) * col("__u"))) ++

@@ -45,7 +45,8 @@ object Doremi {
     }
     val spark = excess.sparkSession
     val out = rows.zipWithIndex.map { case ((d, _), i) => Row(d, alpha(i)) }
-    spark.createDataFrame(spark.sparkContext.parallelize(out.toSeq, 1),
+    // a local relation: collecting it runs no Spark job
+    spark.createDataFrame(java.util.Arrays.asList(out: _*),
       StructType(Seq(StructField(domainCol, StringType), StructField("weight", DoubleType))))
   }
 

@@ -44,7 +44,7 @@ class HpoSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       Hpo.runSearch(Map("d" -> Hpo.IntRange(1, 2)), 0)(_ => 0.0))
     intercept[IllegalArgumentException] {
-      graft.ml.Models.trainRegressorTuned(fixture, Seq("x"), "target",
+      graft.ml.Models.trainRegressor(fixture, Seq("x"), "target",
         "gbt", Map("nope" -> 1.0))
     }
   }
@@ -98,11 +98,11 @@ class HpoSpec extends SparkSpec {
     val rfCfg = Hpo.sample(Hpo.defaultSpace("rf"), rng)
     val linCfg = Hpo.sample(Hpo.defaultSpace("linear"), rng)
     val small = fixture.limit(120)
-    graft.ml.Models.trainRegressorTuned(small, Seq("x"), "target",
+    graft.ml.Models.trainRegressor(small, Seq("x"), "target",
       "gbt", gbtCfg.updated("maxIter", 5.0))
-    graft.ml.Models.trainRegressorTuned(small, Seq("x"), "target",
+    graft.ml.Models.trainRegressor(small, Seq("x"), "target",
       "rf", rfCfg.updated("numTrees", 5.0))
-    graft.ml.Models.trainRegressorTuned(small, Seq("x"), "target", "linear", linCfg)
+    graft.ml.Models.trainRegressor(small, Seq("x"), "target", "linear", linCfg)
     intercept[IllegalArgumentException](Hpo.defaultSpace("xgboost"))
   }
 

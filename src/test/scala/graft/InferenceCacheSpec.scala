@@ -17,6 +17,36 @@ class InferenceCacheSpec extends SparkSpec {
     m.toEndpoint(name + "-end")
   }
 
+  test("inference releases its checkpoints on all-miss, partial-hit and all-hit calls") {
+    def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def checkpointsIn(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.queryExecution.logical.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.toSet
+    val cat = freshCatalog()
+    val cache = new InferenceCache(formulaEndpoint(cat), "k")
+    val some = Seq((1L, 10.0), (2L, 20.0)).toDF("k", "x")
+    val more = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0)).toDF("k", "x")
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "all-miss" -> (() => cache.inference(some)),
+      "partial-hit" -> (() => cache.inference(more)),
+      "all-hit" -> (() => cache.inference(more)),
+      "captured partial-hit" -> (() => cache.inference(
+        Seq((3L, 30.0), (4L, 40.0)).toDF("k", "x"), captureName = Some("run"))))
+      .foreach { case (name, run) =>
+        val before = persisted()
+        val out = run()
+        val added = persisted() -- before
+        assert(added.subsetOf(checkpointsIn(out)), s"$name left persisted: $added")
+        assert(out.count() > 0)
+      }
+    assert(cache.cacheSize() == 4)
+    val before = persisted()
+    assert(cache.deleteEntries(Seq(4L)) == 1L)
+    assert((persisted() -- before).isEmpty, "deleteEntries left its survivors persisted")
+    assert(cache.cacheSize() == 3)
+  }
+
   test("miss-only compute: second call serves hits from the cache") {
     val cat = freshCatalog()
     val ep = formulaEndpoint(cat)
