@@ -17,9 +17,10 @@ package graft.core
   * both engines. Domain: NONNEGATIVE sums (Spark `div` truncates
   * toward zero, DuckDB `//` floors — they only agree above zero).
   *
-  * Both fragments reference the aggregate by COLUMN NAME, so call
+  * The fragments reference the aggregate by COLUMN NAME, so call
   * sites aggregate the raw decimal sum first and convert in a
-  * follow-up select.
+  * follow-up select. This object holds the Spark SQL half; the DuckDB
+  * half, with `//` in place of `div`, is [[graft.oracle.LatticeOracle]].
   */
 object Lattice {
   /** 2^50 — the split point. */
@@ -30,20 +31,11 @@ object Lattice {
   def sparkPortableDouble(col: String): String =
     s"(CAST(($col div $Split) AS DOUBLE) * $Split + CAST(($col % $Split) AS DOUBLE))"
 
-  /** DuckDB fragment: stable double of a named nonnegative HUGEINT (or
-    * integer-valued) column. */
-  def duckPortableDouble(col: String): String =
-    s"(CAST(($col // $Split) AS DOUBLE) * $Split + CAST(($col % $Split) AS DOUBLE))"
-
-  /** Sign-safe variants: negate into the nonnegative domain first
+  /** Sign-safe variant: negate into the nonnegative domain first
     * (exact), convert, negate back (exact) — `div`/`//` only agree on
-    * nonnegative operands, so the plain forms above must never see a
+    * nonnegative operands, so the plain form above must never see a
     * negative sum. */
   def sparkPortableDoubleSigned(col: String): String =
     s"(CASE WHEN $col >= 0 THEN ${sparkPortableDouble(col)} " +
       s"ELSE -${sparkPortableDouble(s"(-$col)")} END)"
-
-  def duckPortableDoubleSigned(col: String): String =
-    s"(CASE WHEN $col >= 0 THEN ${duckPortableDouble(col)} " +
-      s"ELSE -${duckPortableDouble(s"(-$col)")} END)"
 }

@@ -43,33 +43,6 @@ object Contamination {
       .orderBy(col("overlap").desc, col("doc_id")).limit(topK)
   }
 
-  /** DuckDB twin of [[evalOverlap]]; mirrors
-    * [[graft.functions.Signatures.wordShingles]] tokenization
-    * (lowercase, split on whitespace runs, n-word joins). `evalPred`
-    * is a SQL boolean over the documents table. */
-  def evalOverlapOracleSql(evalPred: String, n: Int = 8,
-                           topK: Int = 20): String =
-    s"""WITH toks AS (SELECT doc_id, $evalPred AS e,
-            list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0) AS ws
-          FROM documents),
-        sh0 AS (SELECT doc_id, e,
-            UNNEST(CASE WHEN len(ws) < $n THEN
-              [array_to_string(ws, ' ')]
-              ELSE [array_to_string(ws[i:i+$n-1], ' ')
-                FOR i IN range(1, len(ws) - $n + 2)] END) AS sh
-          FROM toks),
-        sh AS (SELECT DISTINCT doc_id, e, sh FROM sh0),
-        train AS (SELECT DISTINCT sh FROM sh WHERE NOT e),
-        ev AS (SELECT s.doc_id, s.sh,
-            CASE WHEN t.sh IS NOT NULL THEN 1 ELSE 0 END AS hit
-          FROM sh s LEFT JOIN train t USING (sh) WHERE s.e)
-        SELECT doc_id, COUNT(*) AS n_shingles,
-          CAST(SUM(hit) AS BIGINT) AS n_hit,
-          ROUND(SUM(hit) / CAST(COUNT(*) AS DOUBLE), 4) AS overlap
-        FROM ev GROUP BY doc_id
-        ORDER BY overlap DESC, doc_id LIMIT $topK"""
-
   /** Asymmetric shingle CONTAINMENT on a bounded candidate set:
     * c(A→B) = |sh(A) ∩ sh(B)| / |sh(A)| — the sub-document-duplication
     * measure symmetric Jaccard misses (a doc quoted whole inside a
@@ -106,39 +79,6 @@ object Contamination {
         col("jaccard") < col("containment"))
       .orderBy("doc_a", "doc_b")
   }
-
-  /** DuckDB twin of [[containmentPairs]]; `pred` filters documents
-    * to the same bounded set the engine query uses. */
-  def containmentPairsOracleSql(pred: String = "TRUE", n: Int = 3,
-                                minC: Double = 0.8): String =
-    s"""WITH toks AS (SELECT doc_id,
-            list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0) AS ws
-          FROM documents WHERE $pred),
-        sh0 AS (SELECT doc_id,
-            UNNEST(CASE WHEN len(ws) < $n THEN
-              [array_to_string(ws, ' ')]
-              ELSE [array_to_string(ws[i:i+$n-1], ' ')
-                FOR i IN range(1, len(ws) - $n + 2)] END) AS sh
-          FROM toks),
-        sh AS (SELECT DISTINCT doc_id, sh FROM sh0),
-        sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh
-          GROUP BY doc_id),
-        inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            COUNT(*) AS inter
-          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id <> b.doc_id
-          GROUP BY a.doc_id, b.doc_id),
-        j AS (SELECT i.doc_a, i.doc_b, sa.sz AS n_a, sb.sz AS n_b,
-            i.inter,
-            ROUND(i.inter / CAST(sa.sz AS DOUBLE), 4) AS containment,
-            ROUND(i.inter / CAST(sa.sz + sb.sz - i.inter AS DOUBLE), 4)
-              AS jaccard
-          FROM inter i
-          JOIN sizes sa ON i.doc_a = sa.doc_id
-          JOIN sizes sb ON i.doc_b = sb.doc_id)
-        SELECT * FROM j
-        WHERE containment >= $minC AND jaccard < containment
-        ORDER BY doc_a, doc_b"""
 
   /** Benchmark-contamination sweep: [[evalOverlap]] for SEVERAL
     * benchmark predicates at once — "which eval set leaks most into
@@ -184,39 +124,5 @@ object Contamination {
       .localCheckpoint(true)
     sh.unpersist()
     out
-  }
-
-  /** DuckDB twin of [[contaminationSweep]]; each benchmark is a
-    * (name, SQL predicate over documents). */
-  def contaminationSweepOracleSql(benchmarks: Seq[(String, String)],
-                                  n: Int = 8): String = {
-    val parts = benchmarks.map { case (nm, pred) =>
-      s"""SELECT '$nm' AS benchmark, n_eval, mean_overlap,
-           n_contaminated FROM (
-         WITH toks AS (SELECT doc_id, $pred AS e,
-             list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-               x -> length(x) > 0) AS ws
-           FROM documents),
-         sh0 AS (SELECT doc_id, e,
-             UNNEST(CASE WHEN len(ws) < $n THEN
-               [array_to_string(ws, ' ')]
-               ELSE [array_to_string(ws[i:i+$n-1], ' ')
-                 FOR i IN range(1, len(ws) - $n + 2)] END) AS sh
-           FROM toks),
-         sh AS (SELECT DISTINCT doc_id, e, sh FROM sh0),
-         train AS (SELECT DISTINCT sh FROM sh WHERE NOT e),
-         ev AS (SELECT s.doc_id, COUNT(*) AS nn,
-             SUM(CASE WHEN t.sh IS NOT NULL THEN 1 ELSE 0 END) AS h
-           FROM sh s LEFT JOIN train t USING (sh) WHERE s.e
-           GROUP BY s.doc_id)
-         SELECT COUNT(*) AS n_eval,
-           ROUND(CAST(SUM(CAST(ROUND(CAST(h AS DOUBLE) / nn, 9)
-             AS DECIMAL(28,9))) AS DOUBLE) / COUNT(*), 6)
-             AS mean_overlap,
-           CAST(SUM(CASE WHEN h * 2 >= nn THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_contaminated
-         FROM ev)"""
-    }.mkString("\n UNION ALL ")
-    s"""SELECT * FROM ($parts) ORDER BY benchmark"""
   }
 }

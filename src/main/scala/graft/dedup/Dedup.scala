@@ -471,78 +471,6 @@ object Dedup {
           .as("cross_share"))
   }
 
-  /** DuckDB twin of [[crossSourceDupShare]]; `docsCte` yields
-    * (id, text, src). */
-  def crossSourceDupShareOracleSql(docsCte: String, shingleSize: Int = 8,
-                                   maxDf: Int = 20): String = {
-    val n = shingleSize
-    s"""WITH docs AS ($docsCte),
-        tok AS (SELECT CAST(id AS BIGINT) AS id, src,
-            list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0) AS toks
-          FROM docs),
-        sh AS (SELECT DISTINCT id, unnest(
-            CASE WHEN len(toks) < $n THEN [array_to_string(toks, ' ')]
-            ELSE [array_to_string(toks[i:i+${n - 1}], ' ')
-              for i in range(1, len(toks) - ${n - 2})] END) AS g
-          FROM tok),
-        rare AS (SELECT g FROM sh GROUP BY g
-          HAVING COUNT(*) BETWEEN 2 AND $maxDf),
-        lk AS (SELECT sh.id, sh.g FROM sh JOIN rare USING (g)),
-        pairs AS (SELECT DISTINCT x.id AS a, y.id AS b
-          FROM lk x JOIN lk y ON x.g = y.g AND x.id < y.id),
-        j AS (SELECT sa.src AS s1, sb.src AS s2 FROM pairs
-          JOIN tok sa ON pairs.a = sa.id
-          JOIN tok sb ON pairs.b = sb.id)
-        SELECT COUNT(*) AS n_pairs,
-          CAST(SUM(CASE WHEN s1 != s2 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_cross,
-          ROUND(CASE WHEN COUNT(*) > 0 THEN
-            CAST(SUM(CASE WHEN s1 != s2 THEN 1 ELSE 0 END) AS DOUBLE)
-              / COUNT(*) END, 6) AS cross_share
-        FROM j"""
-  }
-
-  /** DuckDB twin of [[dedupCompleteness]]; `docsCte` yields
-    * (id, text). */
-  def dedupCompletenessOracleSql(docsCte: String, nA: Int = 5,
-                                 nB: Int = 8, maxDf: Int = 20): String = {
-    def det(n: Int, tag: String) =
-      s"""sh$tag AS (SELECT DISTINCT id, unnest(
-            CASE WHEN len(toks) < $n THEN [array_to_string(toks, ' ')]
-            ELSE [array_to_string(toks[i:i+${n - 1}], ' ')
-              for i in range(1, len(toks) - ${n - 2})] END) AS g
-          FROM tok),
-        rare$tag AS (SELECT g FROM sh$tag GROUP BY g
-          HAVING COUNT(*) BETWEEN 2 AND $maxDf),
-        lk$tag AS (SELECT sh$tag.id, sh$tag.g FROM sh$tag
-          JOIN rare$tag USING (g)),
-        p$tag AS (SELECT DISTINCT x.id AS a, y.id AS b
-          FROM lk$tag x JOIN lk$tag y ON x.g = y.g AND x.id < y.id)"""
-    s"""WITH docs AS ($docsCte),
-        tok AS (SELECT CAST(id AS BIGINT) AS id,
-            list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0) AS toks
-          FROM docs),
-        ${det(nA, "a")},
-        ${det(nB, "b")},
-        c AS (SELECT
-            (SELECT COUNT(*) FROM pa) AS n_a,
-            (SELECT COUNT(*) FROM pb) AS n_b,
-            (SELECT COUNT(*) FROM pa JOIN pb USING (a, b)) AS n_both),
-        e AS (SELECT n_a, n_b, n_both,
-            CAST(FLOOR(CAST((n_a + 1) * (n_b + 1) AS DOUBLE)
-              / (n_both + 1) - 1.0) AS BIGINT) AS est FROM c)
-        SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-          CAST(n_both AS BIGINT) AS n_both,
-          est AS est_total_pairs,
-          ROUND(CASE WHEN est > 0 THEN
-            CAST(n_a AS DOUBLE) / est END, 6) AS recall_a,
-          ROUND(CASE WHEN est > 0 THEN
-            CAST(n_b AS DOUBLE) / est END, 6) AS recall_b
-        FROM e"""
-  }
-
   /** First-seen duplicate share per group: a doc is a DUPLICATE when
     * an earlier doc (smaller id — ingest order) anywhere in the corpus
     * carries the same exact content hash; the per-source share is the
@@ -570,20 +498,6 @@ object Dedup {
       .orderBy("group")
   }
 
-  /** DuckDB twin of [[firstSeenDupShare]]; `docsCte` yields
-    * (id, g, text). */
-  def firstSeenDupShareOracleSql(docsCte: String): String =
-    s"""WITH base AS (SELECT CAST(id AS BIGINT) AS id, g,
-            md5(text) AS fp FROM ($docsCte) WHERE text IS NOT NULL),
-        fs AS (SELECT fp, MIN(id) AS first_id FROM base GROUP BY fp)
-        SELECT base.g AS "group", COUNT(*) AS n_docs,
-          CAST(SUM(CASE WHEN base.id > fs.first_id THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_dups,
-          ROUND(SUM(CASE WHEN base.id > fs.first_id THEN 1 ELSE 0 END)
-            / CAST(COUNT(*) AS DOUBLE), 6) AS dup_share
-        FROM base JOIN fs USING (fp)
-        GROUP BY base.g ORDER BY "group""""
-
   /** Exact-duplicate cluster-size histogram: group docs by content
     * hash, then count clusters and docs at each cluster size — the
     * dedup-planning read-out (a fat head of size-2 clusters wants
@@ -600,14 +514,6 @@ object Dedup {
         sum("cluster_size").as("n_docs"))
       .orderBy("cluster_size")
   }
-
-  /** DuckDB twin of [[dupClusterSizes]]; `docsCte` yields text. */
-  def dupClusterSizesOracleSql(docsCte: String): String =
-    s"""WITH cl AS (SELECT md5(text) AS fp, COUNT(*) AS cluster_size
-          FROM ($docsCte) WHERE text IS NOT NULL GROUP BY fp)
-        SELECT cluster_size, COUNT(*) AS n_clusters,
-          CAST(SUM(cluster_size) AS BIGINT) AS n_docs
-        FROM cl GROUP BY cluster_size ORDER BY cluster_size"""
 
   /** Similarity-threshold sweep: exact Jaccard of every candidate
     * pair, banded on the integer lattice (band = ⌊10·J⌋ via
@@ -649,31 +555,6 @@ object Dedup {
       .orderBy("band")
   }
 
-  /** DuckDB twin of [[jaccardBandSweep]]; `docsCte` yields (id, text).
-    */
-  def jaccardBandSweepOracleSql(docsCte: String,
-                                minBand: Int = 1): String =
-    s"""WITH docs AS (SELECT id, list_distinct(list_filter(
-            string_split_regex(lower(trim(text)), '\\s+'),
-            x -> length(x) > 0)) AS w
-          FROM ($docsCte)),
-        d AS (SELECT id, w FROM docs WHERE len(w) > 0),
-        tok AS (SELECT id, unnest(w) AS t FROM d),
-        sizes AS (SELECT id, COUNT(*) AS sz FROM tok GROUP BY id),
-        common AS (SELECT a.id AS ia, b.id AS ib, COUNT(*) AS c
-          FROM tok a JOIN tok b ON a.t = b.t AND a.id < b.id
-          GROUP BY a.id, b.id),
-        banded AS (SELECT (10 * c) // (sa.sz + sb.sz - c) AS band
-          FROM common
-          JOIN sizes sa ON sa.id = ia JOIN sizes sb ON sb.id = ib),
-        hist AS (SELECT band, COUNT(*) AS n_pairs FROM banded
-          WHERE band >= $minBand GROUP BY band)
-        SELECT CAST(band AS BIGINT) AS band, n_pairs,
-          CAST(SUM(n_pairs) OVER (ORDER BY band DESC
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS n_at_or_above
-        FROM hist ORDER BY band"""
-
   /** Dedup savings projection per group: if exact dedup keeps the
     * FIRST doc (smallest id) of every content-hash cluster, how many
     * tokens does each source shed — the pipeline-economics table that
@@ -699,25 +580,6 @@ object Dedup {
           6))
       .orderBy("group")
   }
-
-  /** DuckDB twin of [[dedupSavings]]; `docsCte` yields (id, g, text).
-    */
-  def dedupSavingsOracleSql(docsCte: String): String =
-    s"""WITH base AS (SELECT CAST(id AS BIGINT) AS id, g,
-            md5(text) AS fp,
-            CAST(len(list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0)) AS BIGINT) AS tok
-          FROM ($docsCte) WHERE text IS NOT NULL),
-        fs AS (SELECT fp, MIN(id) AS first_id FROM base GROUP BY fp)
-        SELECT base.g AS "group", COUNT(*) AS n_docs,
-          CAST(SUM(tok) AS BIGINT) AS n_tokens,
-          CAST(SUM(CASE WHEN base.id > fs.first_id THEN tok ELSE 0 END)
-            AS BIGINT) AS tokens_removed,
-          ROUND(SUM(CASE WHEN base.id > fs.first_id THEN tok ELSE 0
-            END) / CAST(SUM(tok) AS DOUBLE), 6) AS savings
-        FROM base JOIN fs USING (fp)
-        GROUP BY base.g ORDER BY "group""""
 
   /** Directed duplicate-ATTRIBUTION matrix: under keep-first dedup
     * (global min doc id wins its fingerprint cluster), how many rows
@@ -758,26 +620,5 @@ object Dedup {
       .agg(sum("__losers").as("n_dup_rows"))
       .filter(col("n_dup_rows") > 0)
       .orderBy("winner_source", "dup_source")
-  }
-
-  /** DuckDB twin of [[dupAttribution]] over the documents table. */
-  def dupAttributionOracleSql(prefixChars: Int = 0): String = {
-    val norm = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
-    val fp = if (prefixChars > 0) s"md5(substr($norm, 1, $prefixChars))"
-             else s"md5($norm)"
-    s"""WITH g AS (SELECT $fp AS fp,
-            source AS src, doc_id AS id
-          FROM documents),
-        cells AS (SELECT fp, src, COUNT(*) AS n, MIN(id) AS mid
-          FROM g GROUP BY fp, src),
-        w AS (SELECT fp, src AS winner_source FROM cells
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY fp ORDER BY mid) = 1)
-        SELECT winner_source, src AS dup_source,
-          CAST(SUM(n - CASE WHEN src = winner_source THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_dup_rows
-        FROM cells JOIN w USING (fp)
-        GROUP BY winner_source, dup_source
-        HAVING SUM(n - CASE WHEN src = winner_source THEN 1 ELSE 0 END) > 0
-        ORDER BY winner_source, dup_source"""
   }
 }

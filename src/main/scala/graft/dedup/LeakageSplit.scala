@@ -92,54 +92,4 @@ object LeakageSplit {
     edges.unpersist(); lab.unpersist(); assigned.unpersist()
     out
   }
-
-  /** DuckDB twin of [[leakageSafeSplit]]; `docsCte` must yield
-    * (id, text). Shingles, min-label rounds, and the md5 fold are
-    * re-derived identically. */
-  def leakageSafeSplitOracleSql(docsCte: String, shingleSize: Int = 8,
-                                maxDf: Int = 5, iters: Int = 4,
-                                trainFraction: Double = 0.8,
-                                seed: Long = 42L): String = {
-    val cut = f"${math.min((trainFraction * 4294967296L).toLong, 4294967295L)}%08x"
-    val n = shingleSize
-    val rounds = (1 to iters).map { t =>
-      s"""nm$t AS (SELECT e.a, MIN(l.label) AS nl
-            FROM sym e JOIN lb${t - 1} l ON e.b = l.id GROUP BY e.a),
-          lb$t AS MATERIALIZED (SELECT l.id,
-              LEAST(l.label, COALESCE(nm$t.nl, l.label)) AS label
-            FROM lb${t - 1} l LEFT JOIN nm$t ON l.id = nm$t.a)"""
-    }.mkString(",\n")
-    s"""WITH docs AS ($docsCte),
-        tok AS (SELECT CAST(id AS BIGINT) AS id,
-            list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0) AS toks
-          FROM docs),
-        sh0 AS (SELECT id, CASE WHEN len(toks) < $n
-              THEN [array_to_string(toks, ' ')]
-            ELSE [array_to_string(toks[i:i+${n - 1}], ' ')
-              for i in range(1, len(toks) - ${n - 2})] END AS s
-          FROM tok),
-        sh AS (SELECT DISTINCT id, unnest(s) AS g FROM sh0),
-        rare AS (SELECT g FROM sh GROUP BY g
-          HAVING COUNT(*) BETWEEN 2 AND $maxDf),
-        lk AS (SELECT sh.id, sh.g FROM sh JOIN rare USING (g)),
-        edges AS (SELECT DISTINCT x.id AS a, y.id AS b
-          FROM lk x JOIN lk y ON x.g = y.g AND x.id < y.id),
-        sym AS MATERIALIZED (SELECT a, b FROM edges
-          UNION ALL SELECT b, a FROM edges),
-        lb0 AS (SELECT id, id AS label FROM tok),
-        $rounds,
-        asg AS (SELECT id, label,
-            CASE WHEN substring(md5(CAST(label AS VARCHAR) || ':$seed'),
-              1, 8) < '$cut' THEN 'train' ELSE 'test' END AS split
-          FROM lb$iters),
-        cross_cnt AS (SELECT COALESCE(SUM(CASE WHEN sa.split != sb.split
-              THEN 1 ELSE 0 END), 0) AS n_cross_pairs
-          FROM edges e JOIN asg sa ON e.a = sa.id
-          JOIN asg sb ON e.b = sb.id)
-        SELECT split, COUNT(*) AS n_docs,
-          COUNT(DISTINCT label) AS n_components,
-          CAST(ANY_VALUE(c.n_cross_pairs) AS BIGINT) AS n_cross_pairs
-        FROM asg CROSS JOIN cross_cnt c GROUP BY split"""
-  }
 }

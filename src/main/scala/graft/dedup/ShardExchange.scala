@@ -137,31 +137,6 @@ object ShardExchange {
       .orderBy("shard_id")
   }
 
-  /** DuckDB twin of [[exchangeReport]] for shards split from `table`
-    * by `pmod(idExpr, nShards)` with shard_id 's<k>' and ingest order
-    * = k; `textExpr` names the text column. */
-  def exchangeReportOracleSql(idExpr: String, textExpr: String,
-                              table: String, nShards: Int): String =
-    s"""WITH docs AS (SELECT CAST($idExpr AS BIGINT) AS id,
-            md5(regexp_replace(lower(trim($textExpr)), '\\s+', ' ', 'g'))
-              AS fp,
-            CAST($idExpr % $nShards AS INT) AS sh FROM $table),
-        man AS (SELECT sh, fp, MIN(id) AS first_id, COUNT(*) AS n_local
-          FROM docs GROUP BY sh, fp),
-        win AS (SELECT fp, sh AS wsh FROM man
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY fp
-            ORDER BY sh, first_id) = 1)
-        SELECT 's' || CAST(m.sh AS VARCHAR) AS shard_id,
-          CAST(SUM(m.n_local) AS BIGINT) AS n_docs,
-          COUNT(*) AS n_manifest,
-          CAST(SUM(CASE WHEN w.wsh = m.sh THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_winners,
-          CAST(SUM(CASE WHEN w.wsh <> m.sh THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_lost,
-          CAST(SUM(m.n_local) - COUNT(*) AS BIGINT) AS n_dup_rows
-        FROM man m JOIN win w USING (fp)
-        GROUP BY m.sh ORDER BY shard_id"""
-
   /** Cross-shard NEAR-dup audit: how much near-duplicate pair mass
     * CROSSES shard boundaries — the number that decides whether a
     * sharded ingest can near-dedup shard-locally (cross mass ≈ 0) or
@@ -185,34 +160,6 @@ object ShardExchange {
       .select("shard_x", "shard_y", "within", "n_pairs")
       .orderBy("shard_x", "shard_y")
   }
-
-  /** DuckDB twin of [[crossShardNearDups]] (brute-force pair join —
-    * oracle-bounded input expected); `docsCte` yields (id, text). */
-  def crossShardNearDupsOracleSql(docsCte: String, nShards: Int,
-                                  threshold: Double): String =
-    s"""WITH docs AS (SELECT id, list_distinct(list_filter(
-            string_split_regex(lower(trim(text)), '\\s+'),
-            x -> length(x) > 0)) AS w
-          FROM ($docsCte)),
-        d AS (SELECT id, w FROM docs WHERE len(w) > 0),
-        tok AS (SELECT id, unnest(w) AS t FROM d),
-        sizes AS (SELECT id, COUNT(*) AS sz FROM tok GROUP BY id),
-        common AS (SELECT a.id AS ia, b.id AS ib, COUNT(*) AS c
-          FROM tok a JOIN tok b ON a.t = b.t AND a.id < b.id
-          GROUP BY a.id, b.id),
-        pairs AS (SELECT ia, ib FROM common
-          JOIN sizes sa ON sa.id = ia JOIN sizes sb ON sb.id = ib
-          WHERE ROUND(CAST(c AS DOUBLE) / (sa.sz + sb.sz - c), 6)
-            >= $threshold),
-        cl AS (SELECT
-            LEAST(ia % $nShards, ib % $nShards) AS shard_x,
-            GREATEST(ia % $nShards, ib % $nShards) AS shard_y
-          FROM pairs)
-        SELECT CAST(shard_x AS INT) AS shard_x,
-          CAST(shard_y AS INT) AS shard_y,
-          (shard_x = shard_y) AS within, COUNT(*) AS n_pairs
-        FROM cl GROUP BY shard_x, shard_y
-        ORDER BY shard_x, shard_y"""
 
   /** Exchange bucket-skew audit: the manifest row count per fp_bucket
     * — the partition-balance check that decides whether the 256-bucket
@@ -241,30 +188,6 @@ object ShardExchange {
           col("n_rows").cast("double") / col("n_buckets")), 6)
           .as("skew"))
   }
-
-  /** DuckDB twin of [[bucketSkew]] over shards split from `table` by
-    * `pmod(idExpr, nShards)` (the [[exchangeReport]] construction —
-    * the global manifest's bucket histogram is shard-independent). */
-  def bucketSkewOracleSql(idExpr: String, textExpr: String,
-                          table: String): String =
-    s"""WITH fps AS (SELECT DISTINCT
-            md5(regexp_replace(lower(trim($textExpr)), '\\s+', ' ', 'g'))
-              AS fp FROM $table),
-        per AS (SELECT substr(fp, 1, 2) AS b, COUNT(*) AS n
-          FROM fps GROUP BY b),
-        ranked AS (SELECT n, ROW_NUMBER() OVER (ORDER BY n) AS r
-          FROM per),
-        tot AS (SELECT COUNT(*) AS n_buckets,
-            CAST(SUM(n) AS BIGINT) AS n_rows,
-            CAST(MIN(n) AS BIGINT) AS min_rows,
-            CAST(MAX(n) AS BIGINT) AS max_rows FROM per),
-        med AS (SELECT MIN(n) AS p50_rows FROM ranked CROSS JOIN tot
-          WHERE 2 * r >= tot.n_buckets)
-        SELECT tot.n_buckets, tot.n_rows, tot.min_rows,
-          CAST(med.p50_rows AS BIGINT) AS p50_rows, tot.max_rows,
-          ROUND(CAST(tot.max_rows AS DOUBLE)
-            / (CAST(tot.n_rows AS DOUBLE) / tot.n_buckets), 6) AS skew
-        FROM tot CROSS JOIN med"""
 
   /** Shard-pair fingerprint OVERLAP matrix: for every unordered shard
     * pair, the count of distinct fingerprints both shards hold and the
@@ -306,25 +229,4 @@ object ShardExchange {
           .as("jaccard"))
       .orderBy("shard_a", "shard_b")
   }
-
-  /** DuckDB twin of [[shardPairOverlap]] with shards split from
-    * `table` by `idExpr % nShards`. */
-  def shardPairOverlapOracleSql(idExpr: String, textExpr: String,
-                                table: String, nShards: Int): String =
-    s"""WITH m AS (SELECT DISTINCT $idExpr % $nShards AS shard,
-            md5(regexp_replace(lower(trim($textExpr)), '\\s+', ' ', 'g'))
-              AS fp
-          FROM $table),
-        sz AS (SELECT shard, COUNT(*) AS n FROM m GROUP BY shard),
-        sh AS (SELECT a.shard AS sa, b.shard AS sb, COUNT(*) AS ns
-          FROM m a JOIN m b ON a.fp = b.fp AND a.shard < b.shard
-          GROUP BY sa, sb)
-        SELECT x.shard AS shard_a, y.shard AS shard_b,
-          x.n AS n_a, y.n AS n_b,
-          COALESCE(ns, 0) AS n_shared,
-          ROUND(CAST(COALESCE(ns, 0) AS DOUBLE)
-            / (x.n + y.n - COALESCE(ns, 0)), 6) AS jaccard
-        FROM sz x JOIN sz y ON x.shard < y.shard
-        LEFT JOIN sh ON sa = x.shard AND sb = y.shard
-        ORDER BY shard_a, shard_b"""
 }

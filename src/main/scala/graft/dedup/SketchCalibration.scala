@@ -63,32 +63,4 @@ object SketchCalibration {
           .as("mean_abs_err"))
       .orderBy("decile")
   }
-
-  /** DuckDB twin of [[minhashReliability]] over the documents table. */
-  def minhashReliabilityOracleSql(numHashes: Int = 16,
-                                  idCap: Int = 200): String =
-    s"""WITH base AS (SELECT doc_id,
-            list_distinct(list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0)) AS ws
-          FROM documents
-          WHERE doc_id < $idCap AND text IS NOT NULL),
-        nz AS (SELECT doc_id, ws,
-            [list_min(list_transform(ws, s ->
-               md5(CAST(i AS VARCHAR) || '|' || s)))
-             FOR i IN range(0, $numHashes)] AS mins
-          FROM base WHERE len(ws) > 0),
-        p AS (SELECT
-            CAST(len([1 FOR j IN range(1, $numHashes + 1)
-              IF a.mins[j] = b.mins[j]]) AS BIGINT) AS m,
-            CAST(len(list_intersect(a.ws, b.ws)) AS BIGINT) AS i,
-            CAST(len(list_distinct(list_concat(a.ws, b.ws)))
-              AS BIGINT) AS u
-          FROM nz a JOIN nz b ON a.doc_id < b.doc_id)
-        SELECT (10 * m) // $numHashes AS decile, COUNT(*) AS n_pairs,
-          ROUND(AVG(CAST(m AS DOUBLE) / $numHashes), 6) AS mean_est,
-          ROUND(AVG(CAST(i AS DOUBLE) / u), 6) AS mean_exact,
-          ROUND(AVG(ABS(CAST(m AS DOUBLE) / $numHashes
-            - CAST(i AS DOUBLE) / u)), 6) AS mean_abs_err
-        FROM p GROUP BY decile ORDER BY decile"""
 }

@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   */
 object Winnowing {
 
-  private val posPad = 9999999999L // 10^10 - 1: inverted-position suffix
+  private[graft] val posPad = 9999999999L // 10^10 - 1: inverted-position suffix
 
   /** Per-document token staging: (__id, keepCols…, __ws, __m) with
     * __m = k-gram count; documents shorter than k + w - 1 tokens have
@@ -147,58 +147,4 @@ object Winnowing {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .orderBy("n_shared")
   }
-
-  /** DuckDB twin of [[sharedSpectrum]]. */
-  def sharedSpectrumOracleSql(k: Int = 3, w: Int = 4,
-                              maxDf: Int = 10): String =
-    s"""WITH pairs AS (${candidatePairsOracleSql(k, w, 1, maxDf)}),
-        spec AS (SELECT n_shared, COUNT(*) AS n_pairs
-          FROM pairs GROUP BY n_shared)
-        SELECT n_shared, n_pairs,
-          CAST(SUM(n_pairs) OVER (ORDER BY n_shared DESC
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS n_pairs_at_least
-        FROM spec ORDER BY n_shared"""
-
-  private def selectedSql(k: Int, w: Int, srcCol: String): String =
-    s"""toks AS (SELECT doc_id, $srcCol,
-            list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0) AS ws
-          FROM documents WHERE text IS NOT NULL),
-        st AS (SELECT doc_id, $srcCol, ws,
-            CAST(len(ws) - ${k - 1} AS BIGINT) AS m
-          FROM toks WHERE len(ws) >= ${k + w - 1}),
-        keys AS (SELECT doc_id, $srcCol, m,
-            [md5(array_to_string(ws[i:i+${k - 1}], ' ')) ||
-               lpad(CAST($posPad - i AS VARCHAR), 10, '0')
-             FOR i IN range(1, CAST(m AS INT) + 1)] AS ks
-          FROM st),
-        sel AS (SELECT doc_id, $srcCol, m,
-            list_distinct([list_min(ks[s:s+${w - 1}])
-              FOR s IN range(1, CAST(m - $w + 2 AS INT))]) AS fps
-          FROM keys)"""
-
-  /** DuckDB twin of [[densityBySource]] over the documents table. */
-  def densityOracleSql(k: Int = 3, w: Int = 4): String =
-    s"""WITH ${selectedSql(k, w, "source")}
-        SELECT source, COUNT(*) AS n_docs,
-          CAST(SUM(m) AS BIGINT) AS n_kgrams,
-          CAST(SUM(len(fps)) AS BIGINT) AS n_fingerprints,
-          ROUND(CAST(SUM(len(fps)) AS DOUBLE) / SUM(m), 6) AS density
-        FROM sel GROUP BY source ORDER BY source"""
-
-  /** DuckDB twin of [[candidatePairs]] over the documents table. */
-  def candidatePairsOracleSql(k: Int = 3, w: Int = 4, minShared: Int = 2,
-                              maxDf: Int = 10): String =
-    s"""WITH ${selectedSql(k, w, "source")},
-        fpd AS (SELECT DISTINCT doc_id, substr(f, 1, 32) AS h
-          FROM (SELECT doc_id, unnest(fps) AS f FROM sel)),
-        dfq AS (SELECT h, COUNT(*) AS df FROM fpd GROUP BY h
-          HAVING COUNT(*) BETWEEN 2 AND $maxDf),
-        keep AS (SELECT doc_id, fpd.h FROM fpd JOIN dfq USING (h))
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          COUNT(*) AS n_shared
-        FROM keep a JOIN keep b ON a.h = b.h AND a.doc_id < b.doc_id
-        GROUP BY 1, 2 HAVING COUNT(*) >= $minShared
-        ORDER BY id_a, id_b"""
 }

@@ -66,34 +66,4 @@ object Agreement {
             col("n_ratings").cast("double") * (col("n_ratings") - 1))),
           6).as("alpha"))
   }
-
-  /** DuckDB twin of [[krippendorffAlpha]]; `srcCte` yields (u, c). */
-  def krippendorffAlphaOracleSql(srcCte: String): String =
-    s"""WITH base AS (SELECT u, CAST(c AS VARCHAR) AS c FROM ($srcCte)
-          WHERE u IS NOT NULL AND c IS NOT NULL),
-        cells AS (SELECT u, c, COUNT(*) AS nuc FROM base GROUP BY u, c),
-        units AS (SELECT u, SUM(nuc) AS mu FROM cells GROUP BY u),
-        nu AS (SELECT COUNT(*) AS n_units FROM units),
-        pair AS (SELECT cells.u, cells.c, cells.nuc, units.mu
-          FROM cells JOIN units USING (u) WHERE units.mu >= 2),
-        dn AS (SELECT COUNT(DISTINCT u) AS n_pairable,
-            CAST(SUM(CAST(ROUND(CAST(nuc AS DOUBLE) * (mu - nuc)
-              / (mu - 1), 9) AS DECIMAL(28,9))) AS DOUBLE) AS do_num
-          FROM pair),
-        marg AS (SELECT c, SUM(nuc) AS nc FROM pair GROUP BY c),
-        tot AS (SELECT COUNT(*) AS n_values,
-            CAST(SUM(nc) AS BIGINT) AS n_ratings,
-            CAST(SUM(nc * nc) AS BIGINT) AS sq FROM marg)
-        SELECT CAST(nu.n_units AS BIGINT) AS n_units,
-          CAST(dn.n_pairable AS BIGINT) AS n_pairable,
-          tot.n_ratings, tot.n_values,
-          ROUND(dn.do_num / tot.n_ratings, 6) AS d_o,
-          ROUND(CAST(tot.n_ratings * tot.n_ratings - tot.sq AS DOUBLE)
-            / (CAST(tot.n_ratings AS DOUBLE) * (tot.n_ratings - 1)), 6)
-            AS d_e,
-          ROUND(1.0 - (dn.do_num / tot.n_ratings)
-            / (CAST(tot.n_ratings * tot.n_ratings - tot.sq AS DOUBLE)
-              / (CAST(tot.n_ratings AS DOUBLE)
-                * (tot.n_ratings - 1))), 6) AS alpha
-        FROM dn CROSS JOIN tot CROSS JOIN nu"""
 }

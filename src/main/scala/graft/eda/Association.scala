@@ -1,5 +1,6 @@
 package graft.eda
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -130,46 +131,7 @@ object Association {
         round(sum("__t").cast("double"), 6).as("mi"))
       .orderBy("col_a", "col_b")
       .localCheckpoint(true)
-    cells.unpersist()
+    Checkpoints.release(cells)
     out
-  }
-
-  /** DuckDB twin of [[miMatrix]] over `table`; `cols` must be
-    * string/integer columns. */
-  def miMatrixOracleSql(table: String, cols: Seq[String]): String = {
-    val pairs = for {
-      i <- cols.indices; j <- (i + 1) until cols.size
-    } yield (cols(i), cols(j))
-    val unions = pairs.map { case (a, b) =>
-      s"""SELECT '$a' AS ca, '$b' AS cb, CAST($a AS VARCHAR) AS va,
-           CAST($b AS VARCHAR) AS vb FROM $table
-         WHERE $a IS NOT NULL AND $b IS NOT NULL"""
-    }.mkString("\n UNION ALL ")
-    s"""WITH stacked AS ($unions),
-        cells AS (SELECT ca, cb, va, vb, COUNT(*) AS n
-          FROM stacked GROUP BY ca, cb, va, vb),
-        ma AS (SELECT ca, cb, va, SUM(n) AS na FROM cells
-          GROUP BY ca, cb, va),
-        mb AS (SELECT ca, cb, vb, SUM(n) AS nb FROM cells
-          GROUP BY ca, cb, vb),
-        nt AS (SELECT ca, cb, SUM(n) AS ntot FROM cells
-          GROUP BY ca, cb),
-        terms AS (SELECT cells.ca, cells.cb, nt.ntot,
-            CAST(ROUND((CAST(cells.n AS DOUBLE)
-                / CAST(nt.ntot AS DOUBLE))
-              * LN((CAST(cells.n AS DOUBLE)
-                  * CAST(nt.ntot AS DOUBLE))
-                / (CAST(ma.na AS DOUBLE) * CAST(mb.nb AS DOUBLE))), 12)
-              AS DECIMAL(20,12)) AS t
-          FROM cells
-          JOIN ma ON ma.ca = cells.ca AND ma.cb = cells.cb
-            AND ma.va = cells.va
-          JOIN mb ON mb.ca = cells.ca AND mb.cb = cells.cb
-            AND mb.vb = cells.vb
-          JOIN nt ON nt.ca = cells.ca AND nt.cb = cells.cb)
-        SELECT ca AS col_a, cb AS col_b,
-          CAST(ANY_VALUE(ntot) AS BIGINT) AS n,
-          ROUND(CAST(SUM(t) AS DOUBLE), 6) AS mi
-        FROM terms GROUP BY ca, cb ORDER BY col_a, col_b"""
   }
 }

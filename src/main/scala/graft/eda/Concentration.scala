@@ -1,5 +1,6 @@
 package graft.eda
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -72,32 +73,6 @@ object Concentration {
           round(col("__top") / col("__t"), 6)).as("top_share"))
   }
 
-  /** DuckDB mirror of [[concentration]]: `rowsCte` must yield
-    * (grp, x). */
-  def concentrationOracleSql(rowsCte: String, topFrac: Double): String =
-    s"""WITH rows0 AS ($rowsCte),
-        ranked AS (SELECT grp, CAST(x AS DOUBLE) AS x,
-            CAST(CAST(x AS DECIMAL(18,2)) * 100 AS HUGEINT) AS xc,
-            ROW_NUMBER() OVER (PARTITION BY grp ORDER BY x ASC) AS i,
-            ROW_NUMBER() OVER (PARTITION BY grp ORDER BY x DESC) AS ri,
-            COUNT(*) OVER (PARTITION BY grp) AS ng
-          FROM rows0 WHERE x IS NOT NULL),
-        agg0 AS (SELECT grp, COUNT(*) AS n, SUM(x) AS sx,
-            SUM(xc) AS sxc, SUM(i * x) AS siw, SUM(x * x) AS sxx,
-            SUM(CASE WHEN ri <= CEIL(ng * $topFrac)
-              THEN x ELSE 0.0 END) AS stop
-          FROM ranked GROUP BY grp)
-        SELECT grp AS "group", n,
-          ROUND(${graft.core.Lattice.duckPortableDouble("sxc")} / 100.0,
-            2) AS total,
-          CASE WHEN sx != 0 THEN ROUND(
-            2.0 * siw / (n * sx) - (n + 1.0) / n, 6) END AS gini,
-          CASE WHEN sx != 0 THEN
-            ROUND(sxx / (sx * sx), 6) END AS hhi,
-          CASE WHEN sx != 0 THEN
-            ROUND(stop / sx, 6) END AS top_share
-        FROM agg0"""
-
   /** Theil-T inequality with its EXACT between/within decomposition —
     * the question [[concentration]]'s Gini can't answer: how much of
     * total inequality lives BETWEEN groups (sources, segments,
@@ -149,35 +124,6 @@ object Concentration {
         round(col("__b"), 6).as("theil_between"))
   }
 
-  /** DuckDB mirror of [[theilDecomposition]]; `rowsCte` must yield
-    * (grp, x). */
-  def theilDecompositionOracleSql(rowsCte: String): String =
-    s"""WITH rows0 AS ($rowsCte),
-        g AS (SELECT grp, COUNT(*) AS n,
-            SUM(CAST(x AS DECIMAL(18,2))) AS s,
-            SUM(CAST(x AS DOUBLE) * LN(CAST(x AS DOUBLE))) AS l
-          FROM rows0 WHERE x IS NOT NULL AND x > 0 GROUP BY grp),
-        tot AS (SELECT SUM(n) AS nn, SUM(s) AS ss, SUM(l) AS ll FROM g),
-        sc AS (SELECT grp, n,
-            CAST(s AS DOUBLE) / n AS mug,
-            CAST(ss AS DOUBLE) / nn AS mu,
-            CAST(s AS DOUBLE) / CAST(ss AS DOUBLE) AS share,
-            l / CAST(s AS DOUBLE) - LN(CAST(s AS DOUBLE) / n) AS tg,
-            ll / CAST(ss AS DOUBLE) - LN(CAST(ss AS DOUBLE) / nn) AS ttot
-          FROM g CROSS JOIN tot),
-        parts AS (SELECT SUM(share * tg) AS w,
-            SUM(share * LN(mug / mu)) AS b
-          FROM sc)
-        SELECT grp, n, ROUND(mug, 6) AS mean,
-          ROUND(share, 6) AS mass_share,
-          ROUND(share * tg, 6) AS within_term,
-          ROUND(share * LN(mug / mu), 6) AS between_term,
-          ROUND(tg, 6) AS theil_group,
-          ROUND(ttot, 6) AS theil_total,
-          ROUND(w, 6) AS theil_within,
-          ROUND(b, 6) AS theil_between
-        FROM sc CROSS JOIN parts"""
-
   /** Hill estimator of the Pareto tail index over the top-k order
     * statistics: α̂ = k / Σᵢ₌₁..k ln(xᵢ/x₍k₊₁₎) — "how heavy is this
     * tail" in one number (α < 2 = infinite variance: means and
@@ -212,24 +158,9 @@ object Concentration {
         round(when(col("__s") > 0, lit(k.toDouble) / col("__s")), 6)
           .as("hill_alpha"))
       .localCheckpoint(true)
-    top.unpersist()
+    Checkpoints.release(top)
     out
   }
-
-  /** DuckDB twin of [[hillTailIndex]]; `srcCte` must yield (v). */
-  def hillTailIndexOracleSql(srcCte: String, k: Int = 100): String =
-    s"""WITH pos AS (SELECT CAST(v AS DOUBLE) AS v FROM ($srcCte)
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))
-            AND v > 0),
-        top AS (SELECT v FROM pos ORDER BY v DESC LIMIT ${k + 1}),
-        th AS (SELECT MIN(v) AS xk1 FROM top),
-        s AS (SELECT SUM(LN(v / xk1)) AS s FROM top CROSS JOIN th
-          WHERE v > xk1)
-        SELECT (SELECT COUNT(*) FROM pos) AS n,
-          CAST($k AS BIGINT) AS k,
-          ROUND(th.xk1, 6) AS x_k1,
-          ROUND(CASE WHEN s.s > 0 THEN $k.0 / s.s END, 6) AS hill_alpha
-        FROM th CROSS JOIN s"""
 
   /** Atkinson inequality index at ε = 1: A = 1 − geomean/mean over
     * positive values, per group — the welfare-weighted cousin of
@@ -255,22 +186,6 @@ object Concentration {
           .as("atkinson"))
       .orderBy("group")
   }
-
-  /** DuckDB twin of [[atkinson]]; `srcCte` must yield (grp, v). */
-  def atkinsonOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        base AS (SELECT grp AS "group",
-            CAST(CAST(v AS DOUBLE) AS DECIMAL(18,2)) AS v,
-            CAST(ROUND(LN(CAST(v AS DOUBLE)), 6) AS DECIMAL(28,6))
-              AS lg
-          FROM src WHERE v IS NOT NULL AND CAST(v AS DOUBLE) > 0),
-        g AS (SELECT "group", COUNT(*) AS n,
-            CAST(SUM(v) AS DOUBLE) / COUNT(*) AS m,
-            CAST(SUM(lg) AS DOUBLE) / COUNT(*) AS ml
-          FROM base GROUP BY "group")
-        SELECT "group", n, ROUND(m, 6) AS mean,
-          ROUND(1.0 - EXP(ml) / m, 6) AS atkinson
-        FROM g ORDER BY "group""""
 
   /** Lorenz-curve deciles per group WITHOUT a per-group sort window:
     * the nine exact decile edges come from ONE percentile aggregate
@@ -306,29 +221,6 @@ object Concentration {
       .select(col("group"), col("decile"), col("n"), col("cum_share"))
       .orderBy("group", "decile")
   }
-
-  /** DuckDB twin of [[lorenzDeciles]]; `srcCte` must yield (grp, v).
-    */
-  def lorenzDecilesOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT grp AS g, CAST(v AS DOUBLE) AS v
-          FROM ($srcCte) WHERE v IS NOT NULL
-            AND CAST(v AS DOUBLE) >= 0),
-        ed AS (SELECT g, quantile_cont(v,
-            [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS e
-          FROM src GROUP BY g),
-        bk AS (SELECT src.g,
-            len(list_filter(ed.e, x -> src.v > x)) + 1 AS decile,
-            CAST(src.v AS DECIMAL(18,2)) AS d
-          FROM src JOIN ed ON src.g = ed.g),
-        cells AS (SELECT g, decile, COUNT(*) AS n, SUM(d) AS s
-          FROM bk GROUP BY g, decile)
-        SELECT g AS "group", CAST(decile AS INT) AS decile, n,
-          ROUND(CAST(SUM(s) OVER (PARTITION BY g ORDER BY decile
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS DOUBLE)
-            / CAST(SUM(s) OVER (PARTITION BY g) AS DOUBLE), 6)
-            AS cum_share
-        FROM cells ORDER BY "group", decile"""
 
   /** Gini mean difference per group: GMD = E|X−X′| over all pairs,
     * plus the derived Gini coefficient GMD/(2·mean) — the
@@ -379,38 +271,4 @@ object Concentration {
           .as("gini"))
       .orderBy("group")
   }
-
-  /** DuckDB twin of [[giniMeanDifference]]; `srcCte` yields (g, v). */
-  def giniMeanDifferenceOracleSql(srcCte: String): String =
-    s"""WITH cells AS (SELECT g,
-            CAST(CAST(v AS DECIMAL(18,2)) * 100 AS BIGINT) AS vc,
-            COUNT(*) AS c
-          FROM ($srcCte) WHERE v IS NOT NULL GROUP BY g, 2),
-        pre AS (SELECT g, vc, c,
-            COALESCE(SUM(c) OVER (PARTITION BY g ORDER BY vc
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              AS cumn,
-            COALESCE(SUM(CAST(c AS DECIMAL(12,0))
-                * CAST(vc AS DECIMAL(12,0)))
-              OVER (PARTITION BY g ORDER BY vc
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-              CAST(0 AS DECIMAL(25,0))) AS cums
-          FROM cells),
-        a AS (SELECT g, SUM(c) AS n,
-            CAST(SUM(CAST(c AS DECIMAL(12,0))
-              * CAST(vc AS DECIMAL(12,0))) AS DOUBLE) AS tot,
-            CAST(SUM(CAST(c AS DECIMAL(12,0))
-              * (CAST(vc AS DECIMAL(12,0))
-                 * CAST(cumn AS DECIMAL(12,0))
-                 - CAST(cums AS DECIMAL(25,0)))) AS DOUBLE) AS ps
-          FROM pre GROUP BY g HAVING SUM(c) > 1)
-        SELECT g AS "group", CAST(n AS BIGINT) AS n,
-          ROUND(tot / CAST(n AS DOUBLE) / 100.0, 6) AS mean,
-          ROUND(2.0 * ps / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1))
-            / 100.0, 6) AS gmd,
-          ROUND(CASE WHEN tot / CAST(n AS DOUBLE) / 100.0 <> 0.0 THEN
-            (2.0 * ps / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1))
-              / 100.0)
-            / (2.0 * (tot / CAST(n AS DOUBLE) / 100.0)) END, 6) AS gini
-        FROM a ORDER BY "group""""
 }

@@ -48,30 +48,4 @@ object Copula {
       .drop("__nt")
       .orderBy("u_decile", "v_decile")
   }
-
-  /** DuckDB twin of [[copulaGrid]]. */
-  def copulaGridOracleSql(xExpr: String, yExpr: String,
-                          table: String): String =
-    s"""WITH base AS (SELECT CAST($xExpr AS DOUBLE) AS x,
-            CAST($yExpr AS DOUBLE) AS y
-          FROM $table
-          WHERE $xExpr IS NOT NULL AND NOT isnan(CAST($xExpr AS DOUBLE))
-            AND $yExpr IS NOT NULL
-            AND NOT isnan(CAST($yExpr AS DOUBLE))),
-        r AS (SELECT
-            RANK() OVER (ORDER BY x)
-              + (COUNT(*) OVER (PARTITION BY x) - 1) / 2.0 AS ru,
-            RANK() OVER (ORDER BY y)
-              + (COUNT(*) OVER (PARTITION BY y) - 1) / 2.0 AS rv,
-            COUNT(*) OVER () AS nt
-          FROM base),
-        cells AS (SELECT
-            (CAST(2 * ru AS BIGINT) - 1) * 10 // (2 * nt) AS u_decile,
-            (CAST(2 * rv AS BIGINT) - 1) * 10 // (2 * nt) AS v_decile,
-            nt
-          FROM r)
-        SELECT u_decile, v_decile, COUNT(*) AS n,
-          ROUND(COUNT(*) * 100.0 / MAX(nt), 6) AS density_ratio
-        FROM cells GROUP BY u_decile, v_decile
-        ORDER BY u_decile, v_decile"""
 }

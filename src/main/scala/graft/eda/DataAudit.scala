@@ -37,25 +37,6 @@ object DataAudit {
       .orderBy("determinant", "dependent")
   }
 
-  /** DuckDB twin of [[fdAudit]] over `table`. */
-  def fdAuditOracleSql(table: String,
-                       pairs: Seq[(String, String)]): String = {
-    val unions = pairs.map { case (d, p) =>
-      s"""SELECT '$d' AS det, '$p' AS dep, CAST($d AS VARCHAR) AS dv,
-           CAST($p AS VARCHAR) AS pv FROM $table"""
-    }.mkString("\n UNION ALL ")
-    s"""WITH stacked AS ($unions),
-        g AS (SELECT det, dep, dv, COUNT(DISTINCT pv) AS nd
-          FROM stacked GROUP BY det, dep, dv)
-        SELECT det AS determinant, dep AS dependent,
-          COUNT(*) AS n_groups,
-          CAST(SUM(CASE WHEN nd > 1 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_violating,
-          ROUND(SUM(CASE WHEN nd > 1 THEN 1 ELSE 0 END)
-            / CAST(COUNT(*) AS DOUBLE), 6) AS violation_rate
-        FROM g GROUP BY det, dep ORDER BY determinant, dependent"""
-  }
-
   /** Key-candidate scan: per column its distinct count, null count and
     * uniqueness ratio — the "which columns could be a primary key /
     * join key" profile. All columns stack into ONE
@@ -79,28 +60,6 @@ object DataAudit {
       .withColumn("is_unique_key",
         col("n_null") === 0 && col("n_distinct") === col("n_rows"))
       .orderBy("column")
-  }
-
-  /** DuckDB twin of [[keyCandidates]] over `table`. */
-  def keyCandidatesOracleSql(table: String,
-                             cols: Seq[String]): String = {
-    val unions = cols.map(c =>
-      s"SELECT '$c' AS c, CAST($c AS VARCHAR) AS v FROM $table")
-      .mkString("\n UNION ALL ")
-    s"""WITH stacked AS ($unions),
-        g AS (SELECT c, v, COUNT(*) AS n FROM stacked GROUP BY c, v)
-        SELECT c AS "column", CAST(SUM(n) AS BIGINT) AS n_rows,
-          CAST(SUM(CASE WHEN v IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_distinct,
-          CAST(SUM(CASE WHEN v IS NULL THEN n ELSE 0 END) AS BIGINT)
-            AS n_null,
-          ROUND(SUM(CASE WHEN v IS NOT NULL THEN 1 ELSE 0 END)
-            / CAST(SUM(n) - SUM(CASE WHEN v IS NULL THEN n ELSE 0 END)
-              AS DOUBLE), 6) AS uniqueness,
-          (SUM(CASE WHEN v IS NULL THEN n ELSE 0 END) = 0
-            AND SUM(CASE WHEN v IS NOT NULL THEN 1 ELSE 0 END)
-              = SUM(n)) AS is_unique_key
-        FROM g GROUP BY c ORDER BY "column""""
   }
 
   /** Herfindahl–Hirschman concentration index per group: Σ shareᵢ²
@@ -128,22 +87,6 @@ object DataAudit {
       .orderBy("group")
   }
 
-  /** DuckDB twin of [[herfindahl]]; `srcCte` yields (grp, ent, v). */
-  def herfindahlOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        ent AS (SELECT grp, ent,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS t
-          FROM src WHERE v IS NOT NULL AND CAST(v AS DOUBLE) > 0
-          GROUP BY grp, ent),
-        tot AS (SELECT grp, CAST(SUM(CAST(t AS DECIMAL(28,2)))
-            AS DOUBLE) AS g FROM ent GROUP BY grp)
-        SELECT ent.grp AS "group", COUNT(*) AS n_entities,
-          ROUND(CAST(SUM(CAST(ROUND(ent.t / tot.g, 9)
-            AS DECIMAL(10,9)) * CAST(ROUND(ent.t / tot.g, 9)
-            AS DECIMAL(10,9))) AS DOUBLE), 6) AS hhi
-        FROM ent JOIN tot USING (grp)
-        GROUP BY ent.grp ORDER BY "group""""
-
   /** Cross-table consistency audit: recompute each order's total from
     * its lines (Σ round(extprice·(1−disc)·(1+tax), 2), exact decimal
     * sum) and compare against the orders table's own total — the
@@ -170,23 +113,6 @@ object DataAudit {
       round(sum(round(col("__rel"), 9).cast(DecimalType(28, 9)))
         .cast("double") / count(lit(1)), 6).as("mean_rel_diff"))
   }
-
-  /** DuckDB twin of [[consistencyAudit]]. */
-  def consistencyAuditOracleSql(tol: Double = 1e-6): String =
-    s"""WITH rec AS (SELECT l_orderkey AS k,
-            CAST(SUM(CAST(ROUND(l_extendedprice * (1.0 - l_discount)
-              * (1.0 + l_tax), 2) AS DECIMAL(18,2))) AS DOUBLE) AS r
-          FROM lineitem GROUP BY l_orderkey),
-        j AS (SELECT ABS(rec.r - CAST(o.o_totalprice AS DOUBLE))
-            / CAST(o.o_totalprice AS DOUBLE) AS rel
-          FROM orders o JOIN rec ON o.o_orderkey = rec.k)
-        SELECT COUNT(*) AS n_orders,
-          CAST(SUM(CASE WHEN rel > $tol THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_mismatch,
-          ROUND(MAX(rel), 6) AS max_rel_diff,
-          ROUND(CAST(SUM(CAST(ROUND(rel, 9) AS DECIMAL(28,9)))
-            AS DOUBLE) / COUNT(*), 6) AS mean_rel_diff
-        FROM j"""
 
   /** Neyman allocation for stratified sampling: n_h ∝ N_h·σ_h — the
     * eval-set design table ("spend your labeling budget where the
@@ -220,28 +146,6 @@ object DataAudit {
       .orderBy("stratum")
   }
 
-  /** DuckDB twin of [[neymanAllocation]]; `srcCte` yields (s, v). */
-  def neymanAllocationOracleSql(srcCte: String, budget: Long): String =
-    s"""WITH src AS ($srcCte),
-        per AS (SELECT s AS stratum, COUNT(*) AS n_pop,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))
-              * CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s2
-          FROM src WHERE v IS NOT NULL GROUP BY s
-          HAVING COUNT(*) > 1),
-        ws AS (SELECT stratum, n_pop,
-            SQRT((s2 - CAST(n_pop AS DOUBLE) * (s1 / n_pop)
-              * (s1 / n_pop)) / (CAST(n_pop AS DOUBLE) - 1)) AS sig
-          FROM per),
-        w2 AS (SELECT stratum, n_pop, sig,
-            CAST(n_pop AS DOUBLE) * sig AS w FROM ws),
-        tot AS (SELECT SUM(w) AS tw, SUM(n_pop) AS tn FROM w2)
-        SELECT stratum, n_pop, ROUND(sig, 6) AS sigma,
-          ROUND(w / tw, 6) AS share_neyman,
-          CAST(FLOOR($budget.0 * w / tw) AS BIGINT) AS n_neyman,
-          ROUND(CAST(n_pop AS DOUBLE) / tn, 6) AS share_prop
-        FROM w2 CROSS JOIN tot ORDER BY stratum"""
-
   /** Deterministic stratified subsample: the k rows per group with
     * the smallest md5(id) — reproducible on any engine and any run
     * (the q37 smart-sample idea, made oracle-checkable because both
@@ -257,17 +161,6 @@ object DataAudit {
       .filter(col("sample_rank") <= k)
       .orderBy("group", "sample_rank")
   }
-
-  /** DuckDB twin of [[deterministicSample]]; `srcCte` yields (g, id).
-    */
-  def deterministicSampleOracleSql(srcCte: String, k: Int): String =
-    s"""WITH src AS ($srcCte),
-        r AS (SELECT g AS "group", id,
-            ROW_NUMBER() OVER (PARTITION BY g
-              ORDER BY md5(CAST(id AS VARCHAR)), id) AS sample_rank
-          FROM src)
-        SELECT * FROM r WHERE sample_rank <= $k
-        ORDER BY "group", sample_rank"""
 
   /** Leaderboard churn: Jaccard overlap of the top-k entities (by an
     * exact decimal value sum) between two periods — "is the ranking
@@ -290,21 +183,6 @@ object DataAudit {
       lit(inter).as("n_overlap"),
       round(lit(inter.toDouble) / (2 * k - inter), 6).as("jaccard"))
   }
-
-  /** DuckDB twin of [[topkChurn]]; `aCte`/`bCte` yield (e, v). */
-  def topkChurnOracleSql(aCte: String, bCte: String, k: Int): String =
-    s"""WITH ta AS (SELECT e FROM (SELECT e,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS t
-          FROM ($aCte) GROUP BY e)
-          ORDER BY t DESC, e LIMIT $k),
-        tb AS (SELECT e FROM (SELECT e,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS t
-          FROM ($bCte) GROUP BY e)
-          ORDER BY t DESC, e LIMIT $k),
-        i AS (SELECT COUNT(*) AS nov FROM ta JOIN tb USING (e))
-        SELECT $k AS k, CAST(nov AS BIGINT) AS n_overlap,
-          ROUND(CAST(nov AS DOUBLE) / (2 * $k - nov), 6) AS jaccard
-        FROM i"""
 
   /** Co-missingness pattern audit: for every column pair, the 2×2
     * null-indicator table and its phi coefficient — nulls that arrive
@@ -340,33 +218,5 @@ object DataAudit {
     g.select(col("col_a"), col("col_b"), col("n"), col("n_both_null"),
         col("n_only_a"), col("n_only_b"), round(phi, 6).as("phi"))
       .orderBy("col_a", "col_b")
-  }
-
-  /** DuckDB twin of [[missingnessPattern]] over `table`. */
-  def missingnessPatternOracleSql(table: String,
-                                  cols: Seq[String]): String = {
-    val pairs = for {
-      i <- cols.indices; j <- (i + 1) until cols.size
-    } yield (cols(i), cols(j))
-    val unions = pairs.map { case (a, b) =>
-      s"""SELECT '$a' AS ca, '$b' AS cb,
-           CASE WHEN $a IS NULL THEN 1 ELSE 0 END AS ma,
-           CASE WHEN $b IS NULL THEN 1 ELSE 0 END AS mb FROM $table"""
-    }.mkString("\n UNION ALL ")
-    s"""WITH stacked AS ($unions),
-        g AS (SELECT ca AS col_a, cb AS col_b, COUNT(*) AS n,
-            CAST(SUM(ma * mb) AS BIGINT) AS bothn,
-            CAST(SUM(ma * (1 - mb)) AS BIGINT) AS onlya,
-            CAST(SUM((1 - ma) * mb) AS BIGINT) AS onlyb
-          FROM stacked GROUP BY ca, cb)
-        SELECT col_a, col_b, n, bothn AS n_both_null,
-          onlya AS n_only_a, onlyb AS n_only_b,
-          ROUND(CAST(bothn * n - (bothn + onlya) * (bothn + onlyb)
-              AS DOUBLE)
-            / SQRT(CAST((bothn + onlya) * (n - bothn - onlya)
-                AS DOUBLE)
-              * CAST((bothn + onlyb) * (n - bothn - onlyb)
-                AS DOUBLE)), 6) AS phi
-        FROM g ORDER BY col_a, col_b"""
   }
 }

@@ -45,28 +45,6 @@ object Integrity {
         col("n_orphan_rows"), col("n_orphan_keys"), col("orphan_rate"))
   }
 
-  /** DuckDB twin of ONE [[fkAudit]] edge; compose edges with UNION ALL
-    * (matching the Spark side's union of per-edge frames). */
-  def fkAuditOracleSql(childTable: String, childKey: String,
-                       parentTable: String, parentKey: String,
-                       edge: String): String =
-    s"""SELECT '$edge' AS edge,
-          CAST(SUM(c) AS BIGINT) AS n_rows,
-          CAST(SUM(CASE WHEN k IS NULL THEN c ELSE 0 END) AS BIGINT)
-            AS n_null_rows,
-          CAST(SUM(CASE WHEN k IS NOT NULL AND pk IS NULL THEN c
-            ELSE 0 END) AS BIGINT) AS n_orphan_rows,
-          CAST(SUM(CASE WHEN k IS NOT NULL AND pk IS NULL THEN 1
-            ELSE 0 END) AS BIGINT) AS n_orphan_keys,
-          ROUND(CAST(SUM(CASE WHEN k IS NOT NULL AND pk IS NULL THEN c
-              ELSE 0 END) AS DOUBLE)
-            / SUM(CASE WHEN k IS NOT NULL THEN c ELSE 0 END), 6)
-            AS orphan_rate
-        FROM (SELECT $childKey AS k, COUNT(*) AS c FROM $childTable
-              GROUP BY $childKey) ck
-        LEFT JOIN (SELECT DISTINCT $parentKey AS pk FROM $parentTable) pp
-          ON ck.k = pp.pk"""
-
   /** Denormalized-total RECONCILIATION audit: recompute each order's
     * total from its line items as sum(extendedprice x (1-discount) x
     * (1+tax)) and grade it against the stored `o_totalprice`, rolled
@@ -111,28 +89,4 @@ object Integrity {
         round(max("__ad").cast("double") / 1e6, 4).as("max_abs_diff_usd"))
       .orderBy("o_orderstatus")
   }
-
-  /** DuckDB twin of [[reconcileOrderTotals]] (`tolUnits` = tolerance
-    * in 1e-6-dollar lattice units, i.e. tolUsd * 1e6). */
-  def reconcileOrderTotalsOracleSql(tolUnits: Long = 10000L): String =
-    s"""WITH per AS (SELECT l_orderkey,
-            CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-              * (100 - CAST(ROUND(l_discount * 100) AS BIGINT))
-              * (100 + CAST(ROUND(l_tax * 100) AS BIGINT))) AS BIGINT)
-              AS recon
-          FROM lineitem GROUP BY l_orderkey),
-        j AS (SELECT o_orderstatus, recon,
-            ABS(recon - CAST(ROUND(o_totalprice * 100) AS BIGINT)
-              * 10000) AS ad
-          FROM orders LEFT JOIN per ON o_orderkey = l_orderkey)
-        SELECT o_orderstatus, COUNT(*) AS n_orders,
-          CAST(SUM(CASE WHEN recon IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_no_lines,
-          CAST(SUM(CASE WHEN ad > $tolUnits THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_mismatch,
-          ROUND(CAST(SUM(ad) AS DOUBLE) / COUNT(ad) / 1000000.0, 4)
-            AS mean_abs_diff_usd,
-          ROUND(CAST(MAX(ad) AS DOUBLE) / 1000000.0, 4)
-            AS max_abs_diff_usd
-        FROM j GROUP BY o_orderstatus ORDER BY o_orderstatus"""
 }

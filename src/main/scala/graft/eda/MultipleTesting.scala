@@ -1,5 +1,6 @@
 package graft.eda
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -63,7 +64,7 @@ object MultipleTesting {
     val out = applyBh(withP.filter(col("p_value").isNotNull),
         Seq("group_a", "group_b"), alpha, k * (k - 1) / 2)
       .localCheckpoint(true)
-    stats.unpersist()
+    Checkpoints.release(stats)
     out
   }
 
@@ -196,41 +197,7 @@ object MultipleTesting {
       .withColumn("significant", col("p_holm") <= alpha)
       .orderBy("holm_rank")
       .localCheckpoint(true)
-    stats.unpersist()
+    Checkpoints.release(stats)
     out
   }
-
-  /** DuckDB twin of [[pairwiseTestsHolm]]; `srcCte` yields (g, v). */
-  def pairwiseTestsHolmOracleSql(srcCte: String,
-                                 alpha: Double = 0.05): String =
-    s"""WITH base AS (SELECT g, CAST(v AS DOUBLE) AS v FROM ($srcCte)
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        stats AS (SELECT g, COUNT(*) AS n, AVG(v) AS m,
-            VAR_SAMP(v) AS va FROM base GROUP BY g),
-        mm AS (SELECT COUNT(*) * (COUNT(*) - 1) / 2 AS m FROM stats),
-        pairs AS (SELECT a.g AS group_a, b.g AS group_b,
-            (a.m - b.m) / SQRT(a.va / a.n + b.va / b.n) AS z
-          FROM stats a JOIN stats b ON a.g < b.g),
-        wp0 AS (SELECT group_a, group_b, z,
-            1.0 / (1.0 + 0.2316419 * ABS(z)) AS kk FROM pairs),
-        withp AS (SELECT group_a, group_b, ROUND(z, 6) AS z_stat,
-            ROUND(2.0 * (0.3989422804014327 *
-              EXP(-0.5 * ABS(z) * ABS(z)) *
-              (kk * (0.319381530 + kk * (-0.356563782 +
-                kk * (1.781477937 + kk * (-1.821255978 +
-                  kk * 1.330274429)))))), 6) AS p_value
-          FROM wp0),
-        ranked AS (SELECT *, ROW_NUMBER() OVER
-            (ORDER BY p_value, group_a, group_b) AS holm_rank
-          FROM withp WHERE p_value IS NOT NULL),
-        adj AS (SELECT ranked.*, ROUND(LEAST(1.0,
-            MAX(CAST(mm.m - holm_rank + 1 AS DOUBLE) * p_value)
-              OVER (ORDER BY holm_rank
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 6)
-            AS p_holm
-          FROM ranked CROSS JOIN mm)
-        SELECT group_a, group_b, z_stat, p_value,
-          CAST(holm_rank AS INT) AS holm_rank, p_holm,
-          (p_holm <= $alpha) AS significant
-        FROM adj ORDER BY holm_rank"""
 }

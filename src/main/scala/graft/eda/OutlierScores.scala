@@ -137,29 +137,4 @@ object OutlierScores {
       .orderBy(col("hbos_score").desc, col("__id")).limit(k)
       .select(col("__id").as(idCol), col("hbos_score"))
   }
-
-  /** DuckDB twin of [[hbosTopK]]; `longCte` must yield (id, f, v)
-    * already exploded/filtered like the operator's long frame. */
-  def hbosOracleSql(longCte: String, bins: Int, k: Int): String =
-    s"""WITH long AS ($longCte),
-        bounds AS (SELECT f, MIN(v) AS lo, MAX(v) AS hi,
-            COUNT(*) AS nf
-          FROM long GROUP BY f),
-        binned AS (SELECT long.id, long.f,
-            CASE WHEN hi > lo THEN
-              LEAST($bins - 1, CAST(FLOOR((v - lo) / (hi - lo) * $bins)
-                AS BIGINT))
-            ELSE 0 END AS bin
-          FROM long JOIN bounds ON long.f = bounds.f),
-        hist AS (SELECT f, bin, COUNT(*) AS cnt, ANY_VALUE(nf) AS nf
-          FROM (SELECT binned.*, bounds.nf FROM binned
-            JOIN bounds ON binned.f = bounds.f)
-          GROUP BY f, bin),
-        sc AS (SELECT id,
-            ROUND(SUM(LN(CAST(nf AS DOUBLE) / cnt)), 6) AS hbos_score
-          FROM binned JOIN hist ON binned.f = hist.f
-            AND binned.bin = hist.bin
-          GROUP BY id)
-        SELECT id, hbos_score FROM sc
-        ORDER BY hbos_score DESC, id LIMIT $k"""
 }

@@ -53,36 +53,6 @@ object ProcessControl {
         sum((abs(col("__side9")) === 9).cast("long")).as("n_rule2"))
   }
 
-  /** DuckDB twin of [[shewhartI]]. */
-  def shewhartIOracleSql(tsExpr: String, valueExpr: String,
-                         table: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              / COUNT(*) AS m
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        mr AS (SELECT day, m,
-            ABS(m - LAG(m, 1) OVER (ORDER BY day)) AS mrv FROM d),
-        st AS (SELECT COUNT(*) AS n_days,
-            CAST(SUM(CAST(ROUND(m, 6) AS DECIMAL(28,6))) AS DOUBLE)
-              / COUNT(m) AS center,
-            CAST(SUM(CAST(ROUND(mrv, 6) AS DECIMAL(28,6))) AS DOUBLE)
-              / COUNT(mrv) / 1.128 AS sigma
-          FROM mr),
-        sides AS (SELECT m, mrv, center, sigma, n_days,
-            CASE WHEN COUNT(*) OVER (ORDER BY day
-                ROWS BETWEEN 8 PRECEDING AND CURRENT ROW) = 9 THEN
-              SUM(SIGN(m - center)) OVER (ORDER BY day
-                ROWS BETWEEN 8 PRECEDING AND CURRENT ROW) END AS s9
-          FROM mr CROSS JOIN st)
-        SELECT ANY_VALUE(n_days) AS n_days,
-          ROUND(ANY_VALUE(center), 6) AS center,
-          ROUND(ANY_VALUE(sigma), 6) AS sigma_hat,
-          CAST(SUM(CASE WHEN ABS(m - center) > 3.0 * sigma
-            THEN 1 ELSE 0 END) AS BIGINT) AS n_rule1,
-          CAST(SUM(CASE WHEN ABS(s9) = 9 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_rule2
-        FROM sides"""
-
   /** Process capability per group against fixed spec limits:
     * Cp = (USL−LSL)/6σ (potential — the spread the spec allows over
     * the spread the process uses) and Cpk = min(USL−μ, μ−LSL)/3σ
@@ -117,32 +87,6 @@ object ProcessControl {
           .as("cpk"))
       .orderBy("group")
   }
-
-  /** DuckDB twin of [[capability]]; `srcCte` must yield (grp, v). */
-  def capabilityOracleSql(srcCte: String, lsl: Double,
-                          usl: Double): String =
-    s"""WITH src AS ($srcCte),
-        gi AS (SELECT grp AS "group", COUNT(*) AS n,
-            SUM(CAST(CAST(v AS DECIMAL(18,2)) * 100 AS HUGEINT)) AS s1i,
-            SUM(CAST(CAST(v AS DECIMAL(18,2)) * 100 AS HUGEINT)
-              * CAST(CAST(v AS DECIMAL(18,2)) * 100 AS HUGEINT)) AS s2i
-          FROM src WHERE v IS NOT NULL GROUP BY grp),
-        g AS (SELECT "group", n,
-            ${graft.core.Lattice.duckPortableDouble("s1i")} / 100.0 AS s1,
-            ${graft.core.Lattice.duckPortableDouble("s2i")} / 10000.0 AS s2
-          FROM gi),
-        c AS (SELECT "group", n, CAST(n AS DOUBLE) AS nd,
-            s1 / CAST(n AS DOUBLE) AS mu,
-            SQRT((s2 - CAST(n AS DOUBLE) * (s1 / CAST(n AS DOUBLE))
-              * (s1 / CAST(n AS DOUBLE))) / (CAST(n AS DOUBLE) - 1))
-              AS sig
-          FROM g WHERE n > 1)
-        SELECT "group", n, ROUND(mu, 6) AS mean, ROUND(sig, 6) AS sigma,
-          ROUND(CASE WHEN sig > 0 THEN ($usl - $lsl) / (6.0 * sig)
-            END, 6) AS cp,
-          ROUND(CASE WHEN sig > 0 THEN
-            LEAST($usl - mu, mu - $lsl) / (3.0 * sig) END, 6) AS cpk
-        FROM c ORDER BY "group""""
 
   /** Grubbs extreme-outlier statistic per group:
     * G = max|x−μ|/σ, with the offending value (deterministic
@@ -191,33 +135,4 @@ object ProcessControl {
           .as("extreme_value"))
       .orderBy("group")
   }
-
-  /** DuckDB twin of [[grubbs]]; `srcCte` must yield (grp, v). */
-  def grubbsOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        base AS (SELECT grp AS g, CAST(v AS DOUBLE) AS v,
-            CAST(CAST(v AS DECIMAL(18,2)) * 100 AS HUGEINT) AS xd
-          FROM src WHERE v IS NOT NULL),
-        moi AS (SELECT g, COUNT(*) AS n, SUM(xd) AS s1i,
-            SUM(xd * xd) AS s2i
-          FROM base GROUP BY g HAVING COUNT(*) > 2),
-        mo AS (SELECT g, n,
-            ${graft.core.Lattice.duckPortableDouble("s1i")} / 100.0 AS s1,
-            ${graft.core.Lattice.duckPortableDouble("s2i")} / 10000.0 AS s2
-          FROM moi),
-        m2 AS (SELECT g, n, s1 / CAST(n AS DOUBLE) AS mu,
-            SQRT((s2 - CAST(n AS DOUBLE) * (s1 / CAST(n AS DOUBLE))
-              * (s1 / CAST(n AS DOUBLE))) / (CAST(n AS DOUBLE) - 1))
-              AS sig
-          FROM mo),
-        dev AS (SELECT base.g, m2.n, m2.sig, base.v,
-            ABS(base.v - m2.mu) AS d
-          FROM base JOIN m2 USING (g)),
-        mx AS (SELECT g, MAX(d) AS dm FROM dev GROUP BY g)
-        SELECT dev.g AS "group", ANY_VALUE(dev.n) AS n,
-          ROUND(CASE WHEN ANY_VALUE(dev.sig) > 0 THEN
-            ANY_VALUE(mx.dm) / ANY_VALUE(dev.sig) END, 6) AS g_stat,
-          MIN(CASE WHEN dev.d = mx.dm THEN dev.v END) AS extreme_value
-        FROM dev JOIN mx USING (g)
-        GROUP BY dev.g ORDER BY dev.g"""
 }

@@ -457,23 +457,6 @@ object Quality {
       .limit(topK)
   }
 
-  /** DuckDB twin of [[sliceScan]]; `unitsCte` yields (a, b, v). */
-  def sliceScanOracleSql(unitsCte: String, minN: Long,
-                         topK: Int): String =
-    s"""WITH base AS (SELECT CAST(a AS VARCHAR) AS a,
-            CAST(b AS VARCHAR) AS b, CAST(v AS DOUBLE) AS v
-          FROM ($unitsCte)
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        cells AS (SELECT a, b, COUNT(*) AS n, AVG(v) AS m
-          FROM base GROUP BY a, b HAVING COUNT(*) >= $minN),
-        g AS (SELECT AVG(v) AS gm, stddev_pop(v) AS gs FROM base)
-        SELECT a AS slice_a, b AS slice_b, CAST(n AS BIGINT) AS n,
-          ROUND(m, 6) AS mean,
-          ROUND(CASE WHEN gs > 0 THEN
-            (m - gm) * SQRT(CAST(n AS DOUBLE)) / gs END, 6) AS z
-        FROM cells CROSS JOIN g
-        ORDER BY ABS(z) DESC, slice_a, slice_b LIMIT $topK"""
-
   /** PSI drift TIMELINE: population-stability index of each day's
     * value distribution against the first `baselineDays` days, on a
     * fixed-width bin grid with add-one smoothing over the union of
@@ -528,43 +511,4 @@ object Quality {
         col("psi"))
       .orderBy("day")
   }
-
-  /** DuckDB twin of [[psiTimeline]]. */
-  def psiTimelineOracleSql(tsExpr: String, valueExpr: String,
-                           table: String, binWidth: Double,
-                           baselineDays: Int = 7): String =
-    s"""WITH ev AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(FLOOR(CAST($valueExpr AS DOUBLE) / $binWidth)
-              AS BIGINT) AS b
-          FROM $table WHERE $valueExpr IS NOT NULL),
-        cut AS (SELECT MIN(day) + $baselineDays AS c FROM ev),
-        base AS (SELECT b, COUNT(*) AS cb FROM ev CROSS JOIN cut
-          WHERE day < cut.c GROUP BY b),
-        bt AS (SELECT SUM(cb) AS nb FROM base),
-        dc AS (SELECT day, b, COUNT(*) AS cd FROM ev CROSS JOIN cut
-          WHERE day >= cut.c GROUP BY day, b),
-        dt AS (SELECT day, SUM(cd) AS nd FROM dc GROUP BY day),
-        bins AS (SELECT dt.day, base.b FROM dt CROSS JOIN base
-          UNION SELECT day, b FROM dc),
-        cells AS (SELECT bins.day, bins.b,
-            COALESCE(dc.cd, 0) AS cd, COALESCE(base.cb, 0) AS cb
-          FROM bins
-          LEFT JOIN dc ON dc.day = bins.day AND dc.b = bins.b
-          LEFT JOIN base ON base.b = bins.b),
-        ku AS (SELECT day, COUNT(*) AS k FROM cells GROUP BY day),
-        terms AS (SELECT cells.day, dt.nd,
-            CAST(ROUND((
-              (cd + 1) / CAST(dt.nd + ku.k AS DOUBLE)
-              - (cb + 1) / CAST(bt.nb + ku.k AS DOUBLE))
-              * LN(((cd + 1) / CAST(dt.nd + ku.k AS DOUBLE))
-                / ((cb + 1) / CAST(bt.nb + ku.k AS DOUBLE))), 12)
-              AS DECIMAL(20,12)) AS term
-          FROM cells
-          JOIN dt ON dt.day = cells.day
-          JOIN ku ON ku.day = cells.day
-          CROSS JOIN bt)
-        SELECT CAST(day AS VARCHAR) AS day,
-          CAST(ANY_VALUE(nd) AS BIGINT) AS n,
-          ROUND(CAST(SUM(term) AS DOUBLE), 6) AS psi
-        FROM terms GROUP BY day ORDER BY day"""
 }

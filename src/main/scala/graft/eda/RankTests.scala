@@ -83,51 +83,6 @@ object RankTests {
           6).as("p_value"))
   }
 
-  /** DuckDB twin of [[brunnerMunzel]]. `a`/`b` must be SQL string
-    * literals' content (quoted here). */
-  def brunnerMunzelOracleSql(groupExpr: String, valueExpr: String,
-                             table: String, a: String,
-                             b: String): String =
-    s"""WITH base AS (SELECT $groupExpr AS g,
-            CAST($valueExpr AS DOUBLE) AS v
-          FROM $table WHERE $groupExpr IN ('$a', '$b')
-            AND $valueExpr IS NOT NULL
-            AND NOT isnan(CAST($valueExpr AS DOUBLE))),
-        r AS (SELECT g,
-            RANK() OVER (ORDER BY v)
-              + (COUNT(*) OVER (PARTITION BY v) - 1) / 2.0 AS rc,
-            RANK() OVER (PARTITION BY g ORDER BY v)
-              + (COUNT(*) OVER (PARTITION BY g, v) - 1) / 2.0 AS rw
-          FROM base),
-        s AS (SELECT g, COUNT(*) AS n, AVG(rc) AS mc,
-            VAR_SAMP(rc - rw) AS s FROM r GROUP BY g),
-        p AS (SELECT
-            MAX(CASE WHEN g = '$a' THEN n END) AS nx,
-            MAX(CASE WHEN g = '$b' THEN n END) AS ny,
-            MAX(CASE WHEN g = '$a' THEN mc END) AS mcx,
-            MAX(CASE WHEN g = '$b' THEN mc END) AS mcy,
-            MAX(CASE WHEN g = '$a' THEN s END) AS sx,
-            MAX(CASE WHEN g = '$b' THEN s END) AS sy
-          FROM s),
-        w AS (SELECT nx, ny, mcx, mcy, sx, sy,
-            nx * ny * (mcy - mcx)
-              / ((nx + ny) * SQRT(nx * sx + ny * sy)) AS wst
-          FROM p),
-        k AS (SELECT *,
-            1.0 / (1.0 + 0.2316419 * ABS(wst)) AS kk FROM w)
-        SELECT CAST(nx AS BIGINT) AS n_x, CAST(ny AS BIGINT) AS n_y,
-          ROUND((mcy - (ny + 1) / 2.0) / nx, 6) AS p_hat,
-          ROUND(wst, 6) AS w_stat,
-          ROUND(POW(nx * sx + ny * sy, 2)
-            / (POW(nx * sx, 2) / (nx - 1)
-               + POW(ny * sy, 2) / (ny - 1)), 4) AS df_sat,
-          ROUND(2.0 * (0.3989422804014327
-            * EXP(-0.5 * ABS(wst) * ABS(wst))
-            * (kk * (0.319381530 + kk * (-0.356563782
-              + kk * (1.781477937 + kk * (-1.821255978
-                + kk * 1.330274429)))))), 6) AS p_value
-        FROM k"""
-
   /** Cucconi joint location-scale test: U from Σ(rank of b)², V from
     * Σ(contrary rank)², combined with their known correlation ρ.
     * Returns one row: (n_x, n_y, u_stat 6dp, v_stat 6dp, c_stat 6dp,
@@ -168,46 +123,4 @@ object RankTests {
         round(col("__c"), 6).as("c_stat"),
         round(exp(-col("__c")), 6).as("p_value"))
   }
-
-  /** DuckDB twin of [[cucconi]]. */
-  def cucconiOracleSql(groupExpr: String, valueExpr: String,
-                       table: String, a: String, b: String): String =
-    s"""WITH base AS (SELECT $groupExpr AS g,
-            CAST($valueExpr AS DOUBLE) AS v
-          FROM $table WHERE $groupExpr IN ('$a', '$b')
-            AND $valueExpr IS NOT NULL
-            AND NOT isnan(CAST($valueExpr AS DOUBLE))),
-        r AS (SELECT g,
-            RANK() OVER (ORDER BY v)
-              + (COUNT(*) OVER (PARTITION BY v) - 1) / 2.0 AS rc
-          FROM base),
-        s AS (SELECT
-            CAST(SUM(CASE WHEN g = '$a' THEN 1 ELSE 0 END) AS BIGINT)
-              AS n1,
-            CAST(SUM(CASE WHEN g = '$b' THEN 1 ELSE 0 END) AS BIGINT)
-              AS n2,
-            SUM(CASE WHEN g = '$b' THEN rc END) AS sr,
-            SUM(CASE WHEN g = '$b' THEN rc * rc END) AS sr2,
-            COUNT(*) AS nn
-          FROM r),
-        f AS (SELECT n1, n2, nn,
-            (6.0 * sr2 - n2 * (nn + 1) * (2.0 * nn + 1))
-              / SQRT(n1 * n2 * (nn + 1) * (2.0 * nn + 1)
-                     * (8.0 * nn + 11) / 5.0) AS u,
-            (6.0 * (n2 * (nn + 1) * (nn + 1) - 2.0 * (nn + 1) * sr
-                    + sr2)
-               - n2 * (nn + 1) * (2.0 * nn + 1))
-              / SQRT(n1 * n2 * (nn + 1) * (2.0 * nn + 1)
-                     * (8.0 * nn + 11) / 5.0) AS v,
-            2.0 * (nn * nn - 4)
-              / ((2.0 * nn + 1) * (8.0 * nn + 11)) - 1 AS rho
-          FROM s),
-        c AS (SELECT n1, n2, u, v,
-            (u * u + v * v - 2.0 * rho * u * v)
-              / (2.0 * (1.0 - rho * rho)) AS cst
-          FROM f)
-        SELECT n1 AS n_x, n2 AS n_y, ROUND(u, 6) AS u_stat,
-          ROUND(v, 6) AS v_stat, ROUND(cst, 6) AS c_stat,
-          ROUND(EXP(-cst), 6) AS p_value
-        FROM c"""
 }

@@ -136,23 +136,6 @@ object Robust {
       min(when(col("__cw") * 4 >= col("__tw") * 3, col("v"))).as("w_p75"))
   }
 
-  /** DuckDB twin of [[weightedQuantiles]]; `srcCte` must yield
-    * (grp, v, w). */
-  def weightedQuantilesOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        byv AS (SELECT grp, CAST(v AS DOUBLE) AS v,
-            SUM(CAST(w AS DECIMAL(18,2))) AS w
-          FROM src WHERE v IS NOT NULL AND w > 0 GROUP BY 1, 2),
-        c AS (SELECT grp, v, w,
-            SUM(w) OVER (PARTITION BY grp ORDER BY v) AS cw,
-            SUM(w) OVER (PARTITION BY grp) AS tw
-          FROM byv)
-        SELECT grp, CAST(MAX(tw) AS DOUBLE) AS total_w,
-          MIN(CASE WHEN cw * 4 >= tw THEN v END) AS w_p25,
-          MIN(CASE WHEN cw * 2 >= tw THEN v END) AS w_median,
-          MIN(CASE WHEN cw * 4 >= tw * 3 THEN v END) AS w_p75
-        FROM c GROUP BY grp"""
-
   /** Distribution-free 95% CI for the MEDIAN from order statistics
     * (the binomial/sign construction with the normal approximation to
     * the ranks, j = ⌊(n − z√n)/2⌋, k = ⌈1 + (n + z√n)/2⌉): no
@@ -191,30 +174,6 @@ object Robust {
         round(col("__xk"), 6).as("ci_hi"))
   }
 
-  /** DuckDB twin of [[medianCi]] — same rank math, same cum-count
-    * order statistics. */
-  def medianCiOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT CAST(v AS DOUBLE) AS v FROM ($srcCte)
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM src),
-        rk AS (SELECT n,
-            GREATEST(1, CAST(FLOOR((n - 1.959964 * SQRT(CAST(n AS
-              DOUBLE))) / 2.0) AS BIGINT)) AS j,
-            LEAST(n, CAST(CEIL(1.0 + (n + 1.959964 * SQRT(CAST(n AS
-              DOUBLE))) / 2.0) AS BIGINT)) AS k,
-            (n + 1) // 2 AS m1, (n + 2) // 2 AS m2
-          FROM nn),
-        cum AS (SELECT v, SUM(c) OVER (ORDER BY v) AS cn FROM
-          (SELECT v, COUNT(*) AS c FROM src GROUP BY v))
-        SELECT rk.n,
-          ROUND((MIN(CASE WHEN cn >= rk.m1 THEN v END)
-            + MIN(CASE WHEN cn >= rk.m2 THEN v END)) / 2.0, 6)
-            AS median,
-          ROUND(MIN(CASE WHEN cn >= rk.j THEN v END), 6) AS ci_lo,
-          ROUND(MIN(CASE WHEN cn >= rk.k THEN v END), 6) AS ci_hi
-        FROM cum CROSS JOIN rk
-        GROUP BY rk.n"""
-
   /** Quantile alignment map between two samples: for each probe
     * quantile q the exact percentile of A, of B, and the shift
     * B − A — the lookup table quantile normalization / batch-effect
@@ -242,23 +201,6 @@ object Robust {
         round(element_at(col("__eb"), col("__i")) -
           element_at(col("__ea"), col("__i")), 6).as("shift"))
       .orderBy("q")
-  }
-
-  /** DuckDB twin of [[quantileMap]]; `aCte`/`bCte` yield v. */
-  def quantileMapOracleSql(aCte: String, bCte: String,
-                           qs: Seq[Double] =
-                             (1 to 9).map(_ / 10.0)): String = {
-    val qList = qs.mkString("[", ", ", "]")
-    s"""WITH ea AS (SELECT quantile_cont(CAST(v AS DOUBLE), $qList)
-            AS e FROM ($aCte) WHERE v IS NOT NULL),
-        eb AS (SELECT quantile_cont(CAST(v AS DOUBLE), $qList) AS e
-          FROM ($bCte) WHERE v IS NOT NULL),
-        kf AS (SELECT UNNEST($qList) AS q,
-            UNNEST(range(1, ${qs.size + 1})) AS i)
-        SELECT q, ROUND(ea.e[i], 6) AS a_quantile,
-          ROUND(eb.e[i], 6) AS b_quantile,
-          ROUND(eb.e[i] - ea.e[i], 6) AS shift
-        FROM kf CROSS JOIN ea CROSS JOIN eb ORDER BY q"""
   }
 
   /** Per-group robust location/spread profile: exact median, the RAW
@@ -293,22 +235,6 @@ object Robust {
           .as("robust_cv"))
       .orderBy("group")
   }
-
-  /** DuckDB twin of [[robustSpread]]; `srcCte` yields (grp, v). */
-  def robustSpreadOracleSql(srcCte: String): String =
-    s"""WITH base AS (SELECT grp AS "group", CAST(v AS DOUBLE) AS v
-          FROM ($srcCte) WHERE v IS NOT NULL
-            AND NOT isnan(CAST(v AS DOUBLE))),
-        med AS (SELECT "group", COUNT(*) AS n,
-            quantile_cont(v, 0.5) AS m FROM base GROUP BY "group"),
-        mad AS (SELECT base."group",
-            quantile_cont(ABS(base.v - med.m), 0.5) AS md
-          FROM base JOIN med USING ("group") GROUP BY base."group")
-        SELECT med."group", med.n, ROUND(med.m, 6) AS median,
-          ROUND(mad.md, 6) AS mad,
-          ROUND(CASE WHEN ABS(med.m) > 0 THEN
-            mad.md * 1.4826 / ABS(med.m) END, 6) AS robust_cv
-        FROM med JOIN mad USING ("group") ORDER BY med."group""""
 
   /** Winsorized Pearson correlation: both columns clamp at their own
     * rank-based percentile bounds (DISCRETE order statistics at pLo /
@@ -386,56 +312,4 @@ object Robust {
     g.select(col("n"), round(r("r"), 6).as("r_raw"),
       round(r("w"), 6).as("r_winsorized"))
   }
-
-  /** DuckDB twin of [[winsorizedCorr]]; `srcCte` yields (x, y). */
-  def winsorizedCorrOracleSql(srcCte: String, pLo: Double = 0.05,
-                              pHi: Double = 0.95): String =
-    s"""WITH base AS (SELECT
-            CAST(CAST(x AS DECIMAL(18,2)) * 100 AS BIGINT) AS x,
-            CAST(CAST(y AS DECIMAL(18,2)) * 100 AS BIGINT) AS y
-          FROM ($srcCte) WHERE x IS NOT NULL AND y IS NOT NULL),
-        nt AS (SELECT COUNT(*) AS n FROM base),
-        ks AS (SELECT GREATEST(1, CAST(CEIL($pLo * n) AS BIGINT)) AS klo,
-            GREATEST(1, CAST(CEIL($pHi * n) AS BIGINT)) AS khi FROM nt),
-        rx AS (SELECT x, ROW_NUMBER() OVER (ORDER BY x) AS r FROM base),
-        ry AS (SELECT y, ROW_NUMBER() OVER (ORDER BY y) AS r FROM base),
-        bx AS (SELECT MAX(CASE WHEN rx.r = ks.klo THEN x END) AS xl,
-            MAX(CASE WHEN rx.r = ks.khi THEN x END) AS xh
-          FROM rx CROSS JOIN ks),
-        by2 AS (SELECT MAX(CASE WHEN ry.r = ks.klo THEN y END) AS yl,
-            MAX(CASE WHEN ry.r = ks.khi THEN y END) AS yh
-          FROM ry CROSS JOIN ks),
-        w AS (SELECT base.x, base.y,
-            LEAST(GREATEST(base.x, bx.xl), bx.xh) AS xw,
-            LEAST(GREATEST(base.y, by2.yl), by2.yh) AS yw
-          FROM base CROSS JOIN bx CROSS JOIN by2),
-        g AS (SELECT COUNT(*) AS n,
-            CAST(SUM(CAST(x AS DECIMAL(12,0))
-              * CAST(x AS DECIMAL(12,0))) AS DOUBLE) AS sxxr,
-            CAST(SUM(CAST(y AS DECIMAL(12,0))
-              * CAST(y AS DECIMAL(12,0))) AS DOUBLE) AS syyr,
-            CAST(SUM(CAST(x AS DECIMAL(12,0))
-              * CAST(y AS DECIMAL(12,0))) AS DOUBLE) AS sxyr,
-            CAST(SUM(x) AS DOUBLE) AS sxr, CAST(SUM(y) AS DOUBLE) AS syr,
-            CAST(SUM(CAST(xw AS DECIMAL(12,0))
-              * CAST(xw AS DECIMAL(12,0))) AS DOUBLE) AS sxxw,
-            CAST(SUM(CAST(yw AS DECIMAL(12,0))
-              * CAST(yw AS DECIMAL(12,0))) AS DOUBLE) AS syyw,
-            CAST(SUM(CAST(xw AS DECIMAL(12,0))
-              * CAST(yw AS DECIMAL(12,0))) AS DOUBLE) AS sxyw,
-            CAST(SUM(xw) AS DOUBLE) AS sxw, CAST(SUM(yw) AS DOUBLE)
-              AS syw
-          FROM w)
-        SELECT CAST(n AS BIGINT) AS n,
-          ROUND(CASE WHEN (sxxr - sxr * sxr / n) > 0
-              AND (syyr - syr * syr / n) > 0 THEN
-            (sxyr - sxr * syr / n)
-              / SQRT((sxxr - sxr * sxr / n) * (syyr - syr * syr / n))
-            END, 6) AS r_raw,
-          ROUND(CASE WHEN (sxxw - sxw * sxw / n) > 0
-              AND (syyw - syw * syw / n) > 0 THEN
-            (sxyw - sxw * syw / n)
-              / SQRT((sxxw - sxw * sxw / n) * (syyw - syw * syw / n))
-            END, 6) AS r_winsorized
-        FROM g"""
 }

@@ -56,37 +56,6 @@ object ShapeTests {
       .orderBy("group")
   }
 
-  /** DuckDB twin of [[jarqueBera]]; `srcCte` must yield (grp, v). */
-  def jarqueBeraOracleSql(srcCte: String, scale: Int = 0): String = {
-    val f = s"ROUND(CAST(v AS DOUBLE) * ${math.pow(10, scale)}, 0)"
-    s"""WITH src AS ($srcCte),
-        base AS (SELECT grp AS "group", CAST($f AS HUGEINT) AS x
-          FROM src WHERE v IS NOT NULL
-            AND NOT isnan(CAST(v AS DOUBLE))),
-        g AS (SELECT "group", COUNT(*) AS n,
-            CAST(SUM(x) AS DOUBLE) AS s1,
-            CAST(SUM(x * x) AS DOUBLE) AS s2,
-            CAST(SUM(x * x * x) AS DOUBLE) AS s3,
-            CAST(SUM(x * x * x * x) AS DOUBLE) AS s4
-          FROM base GROUP BY "group"),
-        mo AS (SELECT "group", n, CAST(n AS DOUBLE) AS nd,
-            s1 / n AS m, s2, s3, s4 FROM g),
-        cm AS (SELECT "group", n, nd, m,
-            s2 / nd - m * m AS m2,
-            s3 / nd - 3.0 * m * (s2 / nd) + 2.0 * m * m * m AS m3,
-            s4 / nd - 4.0 * m * (s3 / nd) + 6.0 * m * m * (s2 / nd)
-              - 3.0 * m * m * m * m AS m4
-          FROM mo),
-        sk AS (SELECT "group", n, nd,
-            CASE WHEN m2 > 0 THEN m3 / (SQRT(m2) * m2) END AS skew,
-            CASE WHEN m2 > 0 THEN m4 / (m2 * m2) - 3.0 END AS kurt
-          FROM cm)
-        SELECT "group", n, ROUND(skew, 6) AS skew,
-          ROUND(kurt, 6) AS ex_kurtosis,
-          ROUND(nd / 6.0 * (skew * skew + kurt * kurt / 4.0), 6) AS jb
-        FROM sk ORDER BY "group""""
-  }
-
   /** Mood's median test: split every value on the POOLED median and
     * χ²-test the per-group above/at-or-below contingency (the robust
     * k-group location test that needs no variance assumption at all —
@@ -120,29 +89,6 @@ object ShapeTests {
             (bg - eb) * (bg - eb) / eb), 6).as("chi2"))
   }
 
-  /** DuckDB twin of [[moodMedian]]; `srcCte` must yield (grp, v). */
-  def moodMedianOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        base AS (SELECT grp, CAST(v AS DOUBLE) AS v FROM src
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        med AS (SELECT quantile_cont(v, 0.5) AS m FROM base),
-        cells AS (SELECT grp, COUNT(*) AS ng,
-            SUM(CASE WHEN v > (SELECT m FROM med) THEN 1 ELSE 0 END)
-              AS ag
-          FROM base GROUP BY grp),
-        tot AS (SELECT SUM(ng) AS n, SUM(ag) AS a, COUNT(*) AS k
-          FROM cells)
-        SELECT CAST(k AS BIGINT) AS k, CAST(n AS BIGINT) AS n,
-          CAST(a AS BIGINT) AS n_above,
-          ROUND(SUM(
-            (ag - CAST(ng AS DOUBLE) * a / n)
-              * (ag - CAST(ng AS DOUBLE) * a / n)
-              / (CAST(ng AS DOUBLE) * a / n)
-            + ((ng - ag) - CAST(ng AS DOUBLE) * (n - a) / n)
-              * ((ng - ag) - CAST(ng AS DOUBLE) * (n - a) / n)
-              / (CAST(ng AS DOUBLE) * (n - a) / n)), 6) AS chi2
-        FROM cells CROSS JOIN tot GROUP BY k, n, a"""
-
   /** Wilcoxon signed-rank test over PRE-PAIRED observations (xCol,
     * yCol per row): d = x − y, zeros dropped, |d| tie-average-ranked
     * through the bucketed kernel ([[graft.ml.Metrics.avgRanks]] — no
@@ -175,33 +121,6 @@ object ShapeTests {
           sqrt(nd * (nd + 1) * (lit(2.0) * nd + 1) / lit(24.0) -
             col("__t3t").cast("double") / lit(48.0)), 6).as("z_stat"))
   }
-
-  /** DuckDB twin of [[wilcoxonSignedRank]]; `srcCte` yields (x, y). */
-  def wilcoxonSignedRankOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        d AS (SELECT CAST(x AS DOUBLE) - CAST(y AS DOUBLE) AS d
-          FROM src WHERE x IS NOT NULL AND y IS NOT NULL
-            AND NOT isnan(CAST(x AS DOUBLE))
-            AND NOT isnan(CAST(y AS DOUBLE))),
-        nz AS (SELECT ABS(d) AS ad,
-            CASE WHEN d > 0 THEN 1 ELSE 0 END AS pos
-          FROM d WHERE d <> 0),
-        m AS (SELECT ad, COUNT(*) AS n FROM nz GROUP BY ad),
-        r AS (SELECT ad, n,
-            SUM(n) OVER (ORDER BY ad) - n
-              + (CAST(n AS DOUBLE) + 1) / 2 AS avg_rank FROM m),
-        j AS (SELECT nz.pos, r.avg_rank FROM nz JOIN r USING (ad)),
-        a AS (SELECT COUNT(*) AS n_pairs,
-            SUM(CASE WHEN pos = 1 THEN avg_rank END) AS wp FROM j),
-        t AS (SELECT SUM(CAST(n AS HUGEINT) * n * n - n) AS t3t FROM m)
-        SELECT n_pairs,
-          ROUND(COALESCE(wp, 0.0), 6) AS w_plus,
-          ROUND((COALESCE(wp, 0.0)
-            - CAST(n_pairs AS DOUBLE) * (n_pairs + 1) / 4.0)
-            / SQRT(CAST(n_pairs AS DOUBLE) * (n_pairs + 1)
-              * (2.0 * n_pairs + 1) / 24.0
-              - CAST(t3t AS DOUBLE) / 48.0), 6) AS z_stat
-        FROM a CROSS JOIN t"""
 
   /** Wald–Wolfowitz runs test on an ORDERED series (one row per order
     * key, e.g. a daily aggregate): signs vs the series median (ties at
@@ -243,35 +162,6 @@ object ShapeTests {
           .as("z_stat"))
   }
 
-  /** DuckDB twin of [[runsTest]]; `srcCte` must yield (o, v). */
-  def runsTestOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        base AS (SELECT o, CAST(v AS DOUBLE) AS v FROM src
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        med AS (SELECT quantile_cont(v, 0.5) AS m FROM base),
-        signs AS (SELECT o,
-            CASE WHEN v > (SELECT m FROM med) THEN 1 ELSE 0 END AS s
-          FROM base WHERE v <> (SELECT m FROM med)),
-        runs AS (SELECT s,
-            CASE WHEN LAG(s) OVER (ORDER BY o) IS NULL
-              OR LAG(s) OVER (ORDER BY o) <> s THEN 1 ELSE 0 END AS chg
-          FROM signs),
-        a AS (SELECT COUNT(*) AS n, SUM(s) AS n_above,
-            SUM(1 - s) AS n_below, SUM(chg) AS r FROM runs),
-        z AS (SELECT n, n_above, n_below, r,
-            CAST(n_above AS DOUBLE) AS n1, CAST(n_below AS DOUBLE) AS n2
-          FROM a)
-        SELECT n, CAST(n_above AS BIGINT) AS n_above,
-          CAST(n_below AS BIGINT) AS n_below, CAST(r AS BIGINT) AS runs,
-          ROUND(CASE WHEN
-              2.0 * n1 * n2 * (2.0 * n1 * n2 - (n1 + n2))
-                / ((n1 + n2) * (n1 + n2) * ((n1 + n2) - 1)) > 0 THEN
-            (CAST(r AS DOUBLE) - (2.0 * n1 * n2 / (n1 + n2) + 1))
-              / SQRT(2.0 * n1 * n2 * (2.0 * n1 * n2 - (n1 + n2))
-                / ((n1 + n2) * (n1 + n2) * ((n1 + n2) - 1))) END, 6)
-            AS z_stat
-        FROM z"""
-
   /** Paired sign test over pre-paired (xCol, yCol) rows: the
     * assumption-free floor under [[wilcoxonSignedRank]] (no symmetry
     * needed — only the sign of each difference). Zeros drop;
@@ -290,24 +180,6 @@ object ShapeTests {
       round((col("n_pos") - col("n_neg")).cast("double") /
         sqrt(col("n_pairs").cast("double")), 6).as("z_stat"))
   }
-
-  /** DuckDB twin of [[signTest]]; `srcCte` must yield (x, y). */
-  def signTestOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT CAST(x AS DOUBLE) AS x,
-            CAST(y AS DOUBLE) AS y FROM ($srcCte)
-          WHERE x IS NOT NULL AND y IS NOT NULL
-            AND NOT isnan(CAST(x AS DOUBLE))
-            AND NOT isnan(CAST(y AS DOUBLE))
-            AND CAST(x AS DOUBLE) <> CAST(y AS DOUBLE)),
-        g AS (SELECT COUNT(*) AS n_pairs,
-            SUM(CASE WHEN x > y THEN 1 ELSE 0 END) AS n_pos,
-            SUM(CASE WHEN x < y THEN 1 ELSE 0 END) AS n_neg
-          FROM src)
-        SELECT n_pairs, CAST(n_pos AS BIGINT) AS n_pos,
-          CAST(n_neg AS BIGINT) AS n_neg,
-          ROUND(CAST(n_pos - n_neg AS DOUBLE)
-            / SQRT(CAST(n_pairs AS DOUBLE)), 6) AS z_stat
-        FROM g"""
 
   /** Bimodality coefficient per group: BC = (g₁² + 1) /
     * (g₂ + 3(n−1)²/((n−2)(n−3))) with population-moment skew g₁ and
@@ -350,43 +222,6 @@ object ShapeTests {
       .orderBy("group")
   }
 
-  /** DuckDB twin of [[bimodalityCoefficient]]; `srcCte` yields
-    * (grp, v). */
-  def bimodalityCoefficientOracleSql(srcCte: String,
-                                     scale: Int = 0): String = {
-    val f = s"ROUND(CAST(v AS DOUBLE) * ${math.pow(10, scale)}, 0)"
-    s"""WITH src AS ($srcCte),
-        base AS (SELECT grp AS "group", CAST($f AS HUGEINT) AS x
-          FROM src WHERE v IS NOT NULL
-            AND NOT isnan(CAST(v AS DOUBLE))),
-        g AS (SELECT "group", COUNT(*) AS n,
-            CAST(SUM(x) AS DOUBLE) AS s1,
-            CAST(SUM(x * x) AS DOUBLE) AS s2,
-            CAST(SUM(x * x * x) AS DOUBLE) AS s3,
-            CAST(SUM(x * x * x * x) AS DOUBLE) AS s4
-          FROM base GROUP BY "group"),
-        mo AS (SELECT "group", n, CAST(n AS DOUBLE) AS nd,
-            s1 / n AS m, s2, s3, s4 FROM g WHERE n > 3),
-        cm AS (SELECT "group", n, nd, m,
-            s2 / nd - m * m AS m2,
-            s3 / nd - 3.0 * m * (s2 / nd) + 2.0 * m * m * m AS m3,
-            s4 / nd - 4.0 * m * (s3 / nd) + 6.0 * m * m * (s2 / nd)
-              - 3.0 * m * m * m * m AS m4
-          FROM mo),
-        sk AS (SELECT "group", n, nd, m2,
-            m3 / (SQRT(m2) * m2) AS skew,
-            m4 / (m2 * m2) - 3.0 AS kurt FROM cm),
-        b AS (SELECT "group", n, m2,
-            (skew * skew + 1)
-              / (kurt + 3.0 * (nd - 1) * (nd - 1)
-                / ((nd - 2) * (nd - 3))) AS bc
-          FROM sk)
-        SELECT "group", n,
-          ROUND(CASE WHEN m2 > 0 THEN bc END, 6) AS bc,
-          CASE WHEN m2 > 0 THEN bc > 5.0 / 9 END AS is_bimodal
-        FROM b ORDER BY "group""""
-  }
-
   /** Paired rank-biserial correlation: the effect size under the
     * Wilcoxon signed-rank test (q349) — r = (W⁺ − W⁻)/(W⁺ + W⁻), the
     * share of signed-rank mass favoring the positive direction.
@@ -425,27 +260,4 @@ object ShapeTests {
         (col("__w2p") + col("__w2m")).cast("double")), 6)
         .as("rank_biserial"))
   }
-
-  /** DuckDB twin of [[rankBiserial]]; `srcCte` yields (x, y). */
-  def rankBiserialOracleSql(srcCte: String): String =
-    s"""WITH d AS (SELECT CAST(x AS DOUBLE) - CAST(y AS DOUBLE) AS dd
-          FROM ($srcCte)
-          WHERE x IS NOT NULL AND NOT isnan(CAST(x AS DOUBLE))
-            AND y IS NOT NULL AND NOT isnan(CAST(y AS DOUBLE))),
-        nz AS (SELECT dd FROM d WHERE dd <> 0.0),
-        cells AS (SELECT ABS(dd) AS ad, COUNT(*) AS c,
-            SUM(CASE WHEN dd > 0 THEN 1 ELSE 0 END) AS cp
-          FROM nz GROUP BY ad),
-        wr AS (SELECT c, cp,
-            2 * COALESCE(SUM(c) OVER (ORDER BY ad
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              + c + 1 AS r2
-          FROM cells),
-        g AS (SELECT CAST(SUM(c) AS BIGINT) AS n_pairs,
-            SUM(cp * r2) AS w2p, SUM((c - cp) * r2) AS w2m FROM wr)
-        SELECT n_pairs, CAST(w2p AS DOUBLE) / 2 AS w_plus,
-          CAST(w2m AS DOUBLE) / 2 AS w_minus,
-          ROUND(CAST(w2p - w2m AS DOUBLE) / (w2p + w2m), 6)
-            AS rank_biserial
-        FROM g"""
 }

@@ -1,5 +1,6 @@
 package graft.eda
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,35 +30,36 @@ object SkewReport {
     val counts = df.groupBy(col(key)).agg(count(lit(1)).as("__c"))
       .localCheckpoint(true) // reused 4×; also avoids the self-lineage
                              // attribute collision a shared plan invites
-    val t = counts.agg(sum("__c"), count(lit(1)), max("__c")).head()
-    val spark0 = df.sparkSession
-    if (t.isNullAt(0)) // empty input: a zero-row report, not an NPE
-      return spark0.range(0).select(lit(0L).as("n_rows"), lit(0L).as("n_keys"),
-        lit(0.0).as("max_key_share"), lit(0.0).as("top5_share"),
-        lit(0.0).as("gini"))
-    val (nRows, nKeys, mx) = (t.getLong(0), t.getLong(1), t.getLong(2))
-    val t5 = counts.orderBy(desc("__c"), asc(key)).limit(5)
-      .agg(sum("__c")).head().getLong(0)
-    // rank kernel over the count table: one row per key, score = its
-    // count. The kernel groups ties to (score, n=__f) pairs and yields
-    // each tie group's average 1-based rank, so the group's rank-sum
-    // is n·avg_rank = f·F_prev + f(f+1)/2 in the kernel's closed form.
-    val ranked = graft.ml.Metrics.rankedScores(
-      counts.select(lit("g").as("__grp"), col("__c"), lit(0).as("__lbl")),
-      "__grp", "__lbl", "__c", buckets = 1024,
-      smallMaxRows = rankSmallMaxRows)
-    val g = ranked.agg(sum(col("score") *
-        (lit(2.0) * col("n") * col("avg_rank") - col("n") * lit(nKeys + 1.0))))
-      .head().getDouble(0)
-    counts.unpersist()
-    val spark = df.sparkSession
-    def r6(x: Double) =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    spark.range(1).select(
-      lit(nRows).as("n_rows"), lit(nKeys).as("n_keys"),
-      lit(r6(mx.toDouble / nRows)).as("max_key_share"),
-      lit(r6(t5.toDouble / nRows)).as("top5_share"),
-      lit(r6(g / (nKeys.toDouble * nRows))).as("gini"))
+    try {
+      val t = counts.agg(sum("__c"), count(lit(1)), max("__c")).head()
+      val spark0 = df.sparkSession
+      if (t.isNullAt(0)) // empty input: a zero-row report, not an NPE
+        return spark0.range(0).select(lit(0L).as("n_rows"), lit(0L).as("n_keys"),
+          lit(0.0).as("max_key_share"), lit(0.0).as("top5_share"),
+          lit(0.0).as("gini"))
+      val (nRows, nKeys, mx) = (t.getLong(0), t.getLong(1), t.getLong(2))
+      val t5 = counts.orderBy(desc("__c"), asc(key)).limit(5)
+        .agg(sum("__c")).head().getLong(0)
+      // rank kernel over the count table: one row per key, score = its
+      // count. The kernel groups ties to (score, n=__f) pairs and yields
+      // each tie group's average 1-based rank, so the group's rank-sum
+      // is n·avg_rank = f·F_prev + f(f+1)/2 in the kernel's closed form.
+      val ranked = graft.ml.Metrics.rankedScores(
+        counts.select(lit("g").as("__grp"), col("__c"), lit(0).as("__lbl")),
+        "__grp", "__lbl", "__c", buckets = 1024,
+        smallMaxRows = rankSmallMaxRows)
+      val g = ranked.agg(sum(col("score") *
+          (lit(2.0) * col("n") * col("avg_rank") - col("n") * lit(nKeys + 1.0))))
+        .head().getDouble(0)
+      val spark = df.sparkSession
+      def r6(x: Double) =
+        BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      spark.range(1).select(
+        lit(nRows).as("n_rows"), lit(nKeys).as("n_keys"),
+        lit(r6(mx.toDouble / nRows)).as("max_key_share"),
+        lit(r6(t5.toDouble / nRows)).as("top5_share"),
+        lit(r6(g / (nKeys.toDouble * nRows))).as("gini"))
+    } finally Checkpoints.release(counts)
   }
 
   /** Exact output cardinality of `left ⋈ right` on `key` WITHOUT
@@ -111,23 +113,4 @@ object SkewReport {
         round(col("max_rows").cast("double") / col("n_rows"), 6)
           .as("top_share"))
   }
-
-  /** DuckDB twin of [[shardSkewAudit]]; `srcCte` must yield k. */
-  def shardSkewAuditOracleSql(srcCte: String,
-                              hexChars: Int = 2): String =
-    s"""WITH sh AS (SELECT substring(md5(CAST(k AS VARCHAR)), 1,
-            $hexChars) AS s, COUNT(*) AS n
-          FROM ($srcCte) WHERE k IS NOT NULL GROUP BY s),
-        g AS (SELECT COUNT(*) AS ns, SUM(n) AS nr, MAX(n) AS mx,
-            MIN(n) AS mn, SUM(n * n) AS s2 FROM sh)
-        SELECT ns AS n_shards, CAST(nr AS BIGINT) AS n_rows,
-          mx AS max_rows, mn AS min_rows,
-          ROUND(CAST(mx AS DOUBLE)
-            / (CAST(nr AS DOUBLE) / CAST(ns AS DOUBLE)), 6)
-            AS skew_ratio,
-          ROUND(SQRT(CAST(s2 AS DOUBLE) / ns
-              - (CAST(nr AS DOUBLE) / ns) * (CAST(nr AS DOUBLE) / ns))
-            / (CAST(nr AS DOUBLE) / CAST(ns AS DOUBLE)), 6) AS cv,
-          ROUND(CAST(mx AS DOUBLE) / nr, 6) AS top_share
-        FROM g"""
 }

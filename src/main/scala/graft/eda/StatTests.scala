@@ -3,6 +3,7 @@ package graft.eda
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints
 import graft.ml.Metrics
 
 /** Classical hypothesis tests over DataFrame columns — the statistical
@@ -232,7 +233,7 @@ object StatTests {
                (col("__n") * (col("__n") - 1) / 2.0 - col("__ty")))), 6)
           .as("tau_b"))
       .localCheckpoint(true)
-    cells.unpersist()
+    Checkpoints.release(cells)
     out
   }
 
@@ -277,27 +278,6 @@ object StatTests {
           .as("f_bf"))
   }
 
-  /** DuckDB twin of [[brownForsythe]]; `srcCte` must yield (grp, v). */
-  def brownForsytheOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        base AS (SELECT grp, CAST(v AS DOUBLE) AS v FROM src
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        med AS (SELECT grp, quantile_cont(v, 0.5) AS m
-          FROM base GROUP BY grp),
-        dev AS (SELECT base.grp, ABS(base.v - med.m) AS d
-          FROM base JOIN med ON base.grp = med.grp),
-        pg AS (SELECT grp, COUNT(*) AS ng, AVG(d) AS mg,
-            COALESCE(VAR_SAMP(d), 0) AS vg
-          FROM dev GROUP BY grp),
-        gm AS (SELECT SUM(ng * mg) / SUM(ng) AS m FROM pg),
-        agg AS (SELECT COUNT(*) AS k, SUM(ng) AS n,
-            SUM(ng * (mg - gm.m) * (mg - gm.m)) AS ssb,
-            SUM((ng - 1) * vg) AS ssw
-          FROM pg CROSS JOIN gm GROUP BY gm.m)
-        SELECT CAST(k AS BIGINT) AS k, CAST(n AS BIGINT) AS n,
-          ROUND((ssb / (k - 1)) / (ssw / (n - k)), 6) AS f_bf
-        FROM agg"""
-
   /** Two-sample Cramér–von Mises statistic
     * T = (n·m/N²)·Σ_z c(z)·(F_n(z) − G_m(z))² summed over the pooled
     * distinct values (each weighted by its pooled tie count) — the
@@ -332,29 +312,6 @@ object StatTests {
           ((col("n_a") + col("n_b")) * (col("n_a") + col("n_b"))) *
           col("__s"), 6).as("cvm"))
   }
-
-  /** DuckDB twin of [[cramerVonMises]]; `aCte`/`bCte` must yield v. */
-  def cramerVonMisesOracleSql(aCte: String, bCte: String): String =
-    s"""WITH s AS (
-          SELECT CAST(v AS DOUBLE) AS v, 1 AS isa FROM ($aCte)
-            WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))
-          UNION ALL
-          SELECT CAST(v AS DOUBLE), 0 FROM ($bCte)
-            WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        m AS (SELECT v, COUNT(*) AS n, SUM(isa) AS ca,
-            SUM(1 - isa) AS cb
-          FROM s GROUP BY v),
-        c AS (SELECT n,
-            SUM(ca) OVER (ORDER BY v) AS cuma,
-            SUM(cb) OVER (ORDER BY v) AS cumb FROM m),
-        t2 AS (SELECT SUM(ca) AS na, SUM(cb) AS nb FROM m)
-        SELECT CAST(t2.na AS BIGINT) AS n_a, CAST(t2.nb AS BIGINT) AS n_b,
-          ROUND(CAST(t2.na AS DOUBLE) * t2.nb
-            / ((t2.na + t2.nb) * (t2.na + t2.nb))
-            * SUM(n * (CAST(cuma AS DOUBLE) / na - CAST(cumb AS DOUBLE)
-              / nb) * (CAST(cuma AS DOUBLE) / na - CAST(cumb AS DOUBLE)
-              / nb)), 6) AS cvm
-        FROM c CROSS JOIN t2 GROUP BY t2.na, t2.nb"""
 
   /** Welch's heteroscedastic one-way ANOVA — the k-group mean test
     * that does NOT assume equal variances, i.e. the test to run when
@@ -396,29 +353,6 @@ object StatTests {
         .as("df2"))
   }
 
-  /** DuckDB twin of [[welchAnova]]; `srcCte` must yield (grp, v). */
-  def welchAnovaOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        base AS (SELECT grp, CAST(v AS DOUBLE) AS v FROM src
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        pg0 AS (SELECT grp, COUNT(*) AS ng, AVG(v) AS mg,
-            var_samp(v) AS vg FROM base GROUP BY grp),
-        pg AS (SELECT *, ng / vg AS w FROM pg0
-          WHERE ng >= 2 AND vg > 0),
-        gm AS (SELECT SUM(w) AS ww, SUM(w * mg) / SUM(w) AS mw FROM pg),
-        g AS (SELECT COUNT(*) AS k, SUM(ng) AS n,
-            SUM(w * (mg - mw) * (mg - mw)) AS a,
-            SUM((1.0 - w / ww) * (1.0 - w / ww) / (ng - 1)) AS s
-          FROM pg CROSS JOIN gm)
-        SELECT CAST(k AS BIGINT) AS k, CAST(n AS BIGINT) AS n,
-          ROUND(CASE WHEN k >= 2 AND s > 0 THEN
-            (a / (k - 1)) /
-              (1.0 + 2.0 * (k - 2) / (CAST(k AS DOUBLE) * k - 1) * s)
-            END, 6) AS f_welch,
-          ROUND(CASE WHEN s > 0 THEN
-            (CAST(k AS DOUBLE) * k - 1) / (3.0 * s) END, 6) AS df2
-        FROM g"""
-
   /** 1-D Wasserstein-1 (earth-mover) distance between two samples:
     * W₁ = Σⱼ |F_A(vⱼ) − F_B(vⱼ)| · (vⱼ₊₁ − vⱼ) over the pooled
     * distinct-value ladder — the METRIC companion to q92 KS / q320
@@ -455,27 +389,6 @@ object StatTests {
       .agg(first("__na").as("n_a"), first("__nb").as("n_b"),
         round(sum(abs(fa - fb) * col("__dv")), 6).as("w1"))
   }
-
-  /** DuckDB twin of [[wasserstein1]]; `aCte`/`bCte` must yield v. */
-  def wasserstein1OracleSql(aCte: String, bCte: String): String =
-    s"""WITH s AS (
-          SELECT CAST(v AS DOUBLE) AS v, 1 AS isa FROM ($aCte)
-            WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))
-          UNION ALL
-          SELECT CAST(v AS DOUBLE), 0 FROM ($bCte)
-            WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        m AS (SELECT v, SUM(isa) AS ca, SUM(1 - isa) AS cb
-          FROM s GROUP BY v),
-        c AS (SELECT v,
-            SUM(ca) OVER (ORDER BY v) AS cuma,
-            SUM(cb) OVER (ORDER BY v) AS cumb,
-            LEAD(v) OVER (ORDER BY v) AS nxt FROM m),
-        t2 AS (SELECT SUM(ca) AS na, SUM(cb) AS nb FROM m)
-        SELECT CAST(t2.na AS BIGINT) AS n_a, CAST(t2.nb AS BIGINT) AS n_b,
-          ROUND(SUM(ABS(CAST(cuma AS DOUBLE) / na
-            - CAST(cumb AS DOUBLE) / nb)
-            * COALESCE(nxt - v, 0.0)), 6) AS w1
-        FROM c CROSS JOIN t2 GROUP BY t2.na, t2.nb"""
 
   /** Two-sample Anderson–Darling A² (Scholz–Stephens 1987 eq. 7, the
     * ties-adjusted A²akN for k = 2): like [[cramerVonMises]] it
@@ -523,37 +436,6 @@ object StatTests {
           .as("ad"))
   }
 
-  /** DuckDB twin of [[andersonDarling2]]; `aCte`/`bCte` must yield v. */
-  def andersonDarling2OracleSql(aCte: String, bCte: String): String =
-    s"""WITH s AS (
-          SELECT CAST(v AS DOUBLE) AS v, 1 AS isa FROM ($aCte)
-            WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))
-          UNION ALL
-          SELECT CAST(v AS DOUBLE), 0 FROM ($bCte)
-            WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        m AS (SELECT v, COUNT(*) AS n, SUM(isa) AS ca,
-            SUM(1 - isa) AS cb FROM s GROUP BY v),
-        c AS (SELECT n, ca, cb,
-            SUM(n) OVER (ORDER BY v) - n AS bef,
-            SUM(ca) OVER (ORDER BY v) - ca AS befa FROM m),
-        t2 AS (SELECT SUM(ca) AS na, SUM(cb) AS nb,
-            CAST(SUM(ca) + SUM(cb) AS DOUBLE) AS nn FROM m),
-        terms AS (SELECT na, nb, nn,
-            CAST(n AS DOUBLE) AS l,
-            CAST(bef AS DOUBLE) + n / 2.0 AS ba,
-            CAST(befa AS DOUBLE) + ca / 2.0 AS maa,
-            CAST(bef - befa AS DOUBLE) + (n - ca) / 2.0 AS mab
-          FROM c CROSS JOIN t2)
-        SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-          ROUND((nn - 1) / nn * (
-            SUM(CASE WHEN ba * (nn - ba) - nn * l / 4.0 > 0 THEN
-              (l / nn) * (nn * maa - na * ba) * (nn * maa - na * ba)
-                / (ba * (nn - ba) - nn * l / 4.0) END) / na
-            + SUM(CASE WHEN ba * (nn - ba) - nn * l / 4.0 > 0 THEN
-              (l / nn) * (nn * mab - nb * ba) * (nn * mab - nb * ba)
-                / (ba * (nn - ba) - nn * l / 4.0) END) / nb), 6) AS ad
-        FROM terms GROUP BY na, nb, nn"""
-
   /** Tukey HSD studentized statistics for every group pair after a
     * one-way layout: q = |μᵢ−μⱼ| / sqrt(MSW/2 · (1/nᵢ + 1/nⱼ))
     * (Tukey–Kramer form for unequal n). Per-group moments are exact
@@ -591,29 +473,6 @@ object StatTests {
       .orderBy("g1", "g2")
   }
 
-  /** DuckDB twin of [[tukeyHsd]]; `srcCte` must yield (grp, v). */
-  def tukeyHsdOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        g AS (SELECT CAST(grp AS VARCHAR) AS g, COUNT(*) AS n,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))
-              * CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s2
-          FROM src WHERE v IS NOT NULL GROUP BY grp
-          HAVING COUNT(*) > 1),
-        mo AS (SELECT g, n, s1 / CAST(n AS DOUBLE) AS mu,
-            s2 - CAST(n AS DOUBLE) * (s1 / CAST(n AS DOUBLE))
-              * (s1 / CAST(n AS DOUBLE)) AS ss
-          FROM g),
-        msw AS (SELECT SUM(ss) / CAST(SUM(n) - COUNT(*) AS DOUBLE)
-            AS msw FROM mo)
-        SELECT a.g AS g1, b.g AS g2,
-          ROUND(a.mu - b.mu, 6) AS mean_diff,
-          ROUND(ABS(a.mu - b.mu) / SQRT(msw.msw / 2
-            * (1.0 / CAST(a.n AS DOUBLE) + 1.0 / CAST(b.n AS DOUBLE))),
-            6) AS q_stat
-        FROM mo a JOIN mo b ON a.g < b.g CROSS JOIN msw
-        ORDER BY g1, g2"""
-
   /** Two-sample Poisson rate test with exposure: X events in T units
     * of exposure per arm; conditional on X = X₁+X₂, X₁ ~
     * Binomial(X, T₁/(T₁+T₂)), so z = (X₁ − X·π)/sqrt(X·π(1−π)) — the
@@ -641,32 +500,6 @@ object StatTests {
         (col("x1").cast("double") - x * pi) /
           sqrt(x * pi * (lit(1.0) - pi))), 6).as("z_stat"))
   }
-
-  /** DuckDB twin of [[poissonRateTest]]; `srcCte` must yield
-    * (arm BOOLEAN, ev, expo). */
-  def poissonRateTestOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        g AS (SELECT
-            SUM(CASE WHEN arm THEN CAST(ev AS BIGINT) END) AS x1,
-            SUM(CASE WHEN arm THEN CAST(expo AS BIGINT) END) AS t1,
-            SUM(CASE WHEN NOT arm THEN CAST(ev AS BIGINT) END) AS x2,
-            SUM(CASE WHEN NOT arm THEN CAST(expo AS BIGINT) END) AS t2
-          FROM src),
-        c AS (SELECT CAST(x1 AS BIGINT) AS x1, CAST(t1 AS BIGINT) AS t1,
-            CAST(x2 AS BIGINT) AS x2, CAST(t2 AS BIGINT) AS t2,
-            CAST(t1 AS DOUBLE) / (CAST(t1 AS DOUBLE)
-              + CAST(t2 AS DOUBLE)) AS pi,
-            CAST(x1 + x2 AS DOUBLE) AS x,
-            CAST(x1 AS DOUBLE) / CAST(t1 AS DOUBLE) AS r1,
-            CAST(x2 AS DOUBLE) / CAST(t2 AS DOUBLE) AS r2
-          FROM g)
-        SELECT x1, t1, x2, t2, ROUND(r1, 6) AS rate1,
-          ROUND(r2, 6) AS rate2,
-          ROUND(CASE WHEN r2 > 0 THEN r1 / r2 END, 6) AS rate_ratio,
-          ROUND(CASE WHEN x > 0 THEN
-            (CAST(x1 AS DOUBLE) - x * pi) / SQRT(x * pi * (1.0 - pi))
-            END, 6) AS z_stat
-        FROM c"""
 
   /** Fleiss' kappa for nRaters ratings per item (chance-corrected
     * multi-rater categorical agreement — the k-rater generalization
@@ -706,34 +539,6 @@ object StatTests {
         .as("kappa"))
   }
 
-  /** DuckDB twin of [[fleissKappa]]; `srcCte` must yield (item, cat).
-    */
-  def fleissKappaOracleSql(srcCte: String, nRaters: Int): String =
-    s"""WITH src AS ($srcCte),
-        cells AS (SELECT item, cat, COUNT(*) AS nij
-          FROM src GROUP BY item, cat),
-        items AS (SELECT item, SUM(nij) AS r, SUM(nij * nij) AS sq
-          FROM cells GROUP BY item HAVING SUM(nij) = $nRaters),
-        ct AS (SELECT c.cat, SUM(c.nij) AS cj
-          FROM cells c JOIN items USING (item) GROUP BY c.cat),
-        nf AS (SELECT COUNT(*) AS n_items, SUM(sq) AS sqsum
-          FROM items),
-        pe AS (SELECT ANY_VALUE(n_items) AS n_items,
-            ANY_VALUE(sqsum) AS sqs,
-            SUM((CAST(cj AS DOUBLE) / (n_items * $nRaters))
-              * (CAST(cj AS DOUBLE) / (n_items * $nRaters))) AS pev
-          FROM ct CROSS JOIN nf)
-        SELECT CAST(n_items AS BIGINT) AS n_items,
-          $nRaters AS n_raters,
-          ROUND((CAST(sqs AS DOUBLE) - CAST(n_items AS DOUBLE)
-            * $nRaters) / (CAST(n_items AS DOUBLE) * $nRaters
-            * ($nRaters - 1)), 6) AS p_bar,
-          ROUND(pev, 6) AS p_e,
-          ROUND(((CAST(sqs AS DOUBLE) - CAST(n_items AS DOUBLE)
-            * $nRaters) / (CAST(n_items AS DOUBLE) * $nRaters
-            * ($nRaters - 1)) - pev) / (1.0 - pev), 6) AS kappa
-        FROM pe"""
-
   /** Cliff's delta + Vargha–Delaney A — the EFFECT SIZE companions to
     * [[mannWhitneyU]]'s p-value: δ = P(a > b) − P(a < b),
     * A = P(a > b) + P(a = b)/2. Computed entirely on the pooled
@@ -769,29 +574,6 @@ object StatTests {
           (col("n_a") * col("n_b")).cast("double"), 6).as("vd_a"))
   }
 
-  /** DuckDB twin of [[cliffsDelta]]; `aCte`/`bCte` must yield v. */
-  def cliffsDeltaOracleSql(aCte: String, bCte: String): String =
-    s"""WITH s AS (
-          SELECT CAST(v AS DOUBLE) AS v, 1 AS isa FROM ($aCte)
-            WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))
-          UNION ALL
-          SELECT CAST(v AS DOUBLE), 0 FROM ($bCte)
-            WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        m AS (SELECT v, COUNT(*) AS n, SUM(isa) AS ca,
-            SUM(1 - isa) AS cb FROM s GROUP BY v),
-        c AS (SELECT ca, cb,
-            SUM(cb) OVER (ORDER BY v) - cb AS bbelow FROM m),
-        t2 AS (SELECT SUM(ca) AS na, SUM(cb) AS nb FROM m),
-        agg AS (SELECT ANY_VALUE(na) AS na, ANY_VALUE(nb) AS nb,
-            SUM(ca * (bbelow - (nb - bbelow - cb))) AS d
-          FROM c CROSS JOIN t2)
-        SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-          ROUND(CAST(d AS DOUBLE) / (CAST(na AS DOUBLE) * nb), 6)
-            AS cliffs_delta,
-          ROUND((CAST(d AS DOUBLE) / 2 + CAST(na AS DOUBLE) * nb / 2)
-            / (CAST(na AS DOUBLE) * nb), 6) AS vd_a
-        FROM agg"""
-
   /** Hodges–Lehmann two-sample shift estimate: the weighted median of
     * all pairwise differences a − b, computed on the DISTINCT-VALUE
     * pair grid (cellA × cellB with count weights) — quadratic only in
@@ -820,25 +602,6 @@ object StatTests {
       .agg(first("__tw").as("n_pairs"), round(min("__d"), 6)
         .as("hl_shift"))
   }
-
-  /** DuckDB twin of [[hodgesLehmann]]; `aCte`/`bCte` must yield v. */
-  def hodgesLehmannOracleSql(aCte: String, bCte: String): String =
-    s"""WITH ca AS (SELECT CAST(v AS DOUBLE) AS va, COUNT(*) AS na
-          FROM ($aCte) WHERE v IS NOT NULL
-            AND NOT isnan(CAST(v AS DOUBLE)) GROUP BY va),
-        cb AS (SELECT CAST(v AS DOUBLE) AS vb, COUNT(*) AS nb
-          FROM ($bCte) WHERE v IS NOT NULL
-            AND NOT isnan(CAST(v AS DOUBLE)) GROUP BY vb),
-        grid AS (SELECT va - vb AS d, SUM(na * nb) AS w
-          FROM ca CROSS JOIN cb GROUP BY va - vb),
-        c AS (SELECT d, SUM(w) OVER (ORDER BY d
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-          FROM grid),
-        t AS (SELECT SUM(w) AS tw FROM grid)
-        SELECT CAST(t.tw AS BIGINT) AS n_pairs,
-          ROUND(MIN(c.d), 6) AS hl_shift
-        FROM c CROSS JOIN t WHERE c.cum * 2 >= t.tw
-        GROUP BY t.tw"""
 
   /** Two-way factorial ANOVA (classical cell-mean decomposition):
     * SSA/SSB from marginal means, the interaction SS from cell means,
@@ -901,47 +664,6 @@ object StatTests {
       round(col("__ssab") / dfab / mse, 6).as("f_interaction"))
   }
 
-  /** DuckDB twin of [[twoWayAnova]]; `srcCte` yields (a, b, v). */
-  def twoWayAnovaOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        cells AS (SELECT a, b, COUNT(*) AS n,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))
-              * CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s2
-          FROM src WHERE v IS NOT NULL GROUP BY a, b),
-        wm AS (SELECT a, b, n, s1 / CAST(n AS DOUBLE) AS m,
-            s2 - CAST(n AS DOUBLE) * (s1 / CAST(n AS DOUBLE))
-              * (s1 / CAST(n AS DOUBLE)) AS ssw, s1 FROM cells),
-        am AS (SELECT a, SUM(n) AS na,
-            SUM(s1) / CAST(SUM(n) AS DOUBLE) AS ma FROM wm GROUP BY a),
-        bm AS (SELECT b, SUM(n) AS nb,
-            SUM(s1) / CAST(SUM(n) AS DOUBLE) AS mb FROM wm GROUP BY b),
-        gr AS (SELECT SUM(n) AS nt,
-            SUM(s1) / CAST(SUM(n) AS DOUBLE) AS mg, SUM(ssw) AS sse,
-            COUNT(*) AS ncell FROM wm),
-        j AS (SELECT wm.n, wm.m, am.ma, bm.mb, gr.mg
-          FROM wm JOIN am USING (a) JOIN bm USING (b) CROSS JOIN gr),
-        sab AS (SELECT SUM(CAST(n AS DOUBLE)
-            * (m - ma - mb + mg) * (m - ma - mb + mg)) AS ssab
-          FROM j),
-        sa AS (SELECT COUNT(*) AS ka, SUM(CAST(na AS DOUBLE)
-            * (ma - mg) * (ma - mg)) AS ssa
-          FROM am CROSS JOIN gr),
-        sb AS (SELECT COUNT(*) AS kb, SUM(CAST(nb AS DOUBLE)
-            * (mb - mg) * (mb - mg)) AS ssb
-          FROM bm CROSS JOIN gr),
-        f AS (SELECT ka, kb, nt, ncell, sse, ssa, ssb, ssab,
-            CAST(ka - 1 AS DOUBLE) AS dfa, CAST(kb - 1 AS DOUBLE)
-              AS dfb,
-            CAST(nt - ncell AS DOUBLE) AS dfe
-          FROM sa CROSS JOIN sb CROSS JOIN sab CROSS JOIN gr)
-        SELECT CAST(ka AS BIGINT) AS a_levels,
-          CAST(kb AS BIGINT) AS b_levels, CAST(nt AS BIGINT) AS n,
-          ROUND(ssa / dfa / (sse / dfe), 6) AS f_a,
-          ROUND(ssb / dfb / (sse / dfe), 6) AS f_b,
-          ROUND(ssab / (dfa * dfb) / (sse / dfe), 6) AS f_interaction
-        FROM f"""
-
   /** Kendall's W — concordance of k "raters" each ranking the same m
     * items (tie-corrected): W = 12·S / (k²(m³−m) − k·ΣTⱼ), S the
     * spread of per-item rank sums. 1 = every rater agrees, 0 = no
@@ -991,34 +713,6 @@ object StatTests {
             kd * col("__tt").cast("double")), 6).as("w"))
   }
 
-  /** DuckDB twin of [[kendallW]]; `srcCte` yields (r, i, v). */
-  def kendallWOracleSql(srcCte: String): String =
-    s"""WITH base AS (SELECT r, i, CAST(v AS DOUBLE) AS v
-          FROM ($srcCte) WHERE v IS NOT NULL
-            AND NOT isnan(CAST(v AS DOUBLE))),
-        kk AS (SELECT COUNT(DISTINCT r) AS k FROM base),
-        complete AS (SELECT i FROM base GROUP BY i
-          HAVING COUNT(*) = (SELECT k FROM kk)),
-        kept AS (SELECT base.* FROM base JOIN complete USING (i)),
-        cells AS (SELECT r, v, COUNT(*) AS n FROM kept GROUP BY r, v),
-        rk AS (SELECT r, v,
-            CAST(SUM(n) OVER (PARTITION BY r ORDER BY v) - n
-              AS DOUBLE) + (CAST(n AS DOUBLE) + 1) / 2 AS rnk
-          FROM cells),
-        tt AS (SELECT SUM(CAST(n AS HUGEINT) * n * n - n) AS t
-          FROM cells),
-        pi AS (SELECT kept.i, SUM(rk.rnk) AS ri
-          FROM kept JOIN rk ON kept.r = rk.r AND kept.v = rk.v
-          GROUP BY kept.i),
-        g AS (SELECT COUNT(*) AS m, SUM(ri) AS sr,
-            SUM(ri * ri) AS srr FROM pi)
-        SELECT CAST(kk.k AS BIGINT) AS k, CAST(g.m AS BIGINT) AS m,
-          ROUND(12.0 * (g.srr - g.sr * g.sr / g.m)
-            / (CAST(kk.k AS DOUBLE) * kk.k
-              * (CAST(g.m AS DOUBLE) * g.m * g.m - g.m)
-              - kk.k * CAST(tt.t AS DOUBLE)), 6) AS w
-        FROM g CROSS JOIN kk CROSS JOIN tt"""
-
   /** Win ratio (Pocock 2012): over all treatment×control pairs, wins
     * (t beats c) over losses, with the log-scale SE approximation
     * sqrt(1/W + 1/L) — the composite-endpoint effect measure that
@@ -1057,33 +751,6 @@ object StatTests {
           .as("log_se"))
   }
 
-  /** DuckDB twin of [[winRatio]]; `tCte`/`cCte` yield v. */
-  def winRatioOracleSql(tCte: String, cCte: String): String =
-    s"""WITH s AS (
-          SELECT CAST(v AS DOUBLE) AS v, 1 AS isa FROM ($tCte)
-            WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))
-          UNION ALL
-          SELECT CAST(v AS DOUBLE), 0 FROM ($cCte)
-            WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        m AS (SELECT v, COUNT(*) AS n, SUM(isa) AS ct,
-            SUM(1 - isa) AS cc FROM s GROUP BY v),
-        c AS (SELECT ct, cc,
-            SUM(cc) OVER (ORDER BY v) - cc AS below FROM m),
-        t2 AS (SELECT SUM(ct) AS nt, SUM(cc) AS nc FROM m),
-        agg AS (SELECT ANY_VALUE(nt) AS nt, ANY_VALUE(nc) AS nc,
-            SUM(ct * below) AS w,
-            SUM(ct * (nc - below - cc)) AS l,
-            SUM(ct * cc) AS ti
-          FROM c CROSS JOIN t2)
-        SELECT CAST(nt AS BIGINT) AS n_t, CAST(nc AS BIGINT) AS n_c,
-          CAST(w AS BIGINT) AS wins, CAST(l AS BIGINT) AS losses,
-          CAST(ti AS BIGINT) AS ties,
-          ROUND(CASE WHEN l > 0 THEN CAST(w AS DOUBLE) / l END, 6)
-            AS win_ratio,
-          ROUND(CASE WHEN w > 0 AND l > 0 THEN
-            SQRT(1.0 / w + 1.0 / l) END, 6) AS log_se
-        FROM agg"""
-
   /** Theil's uncertainty coefficient U(y|x) = I(x;y)/H(y) — the
     * ASYMMETRIC, [0,1]-normalized "how much of y does knowing x
     * explain", the categorical effect size Cramér's V can't give a
@@ -1116,35 +783,9 @@ object StatTests {
           (col("__hx") + col("__hy") - col("__hxy")) / col("__hy")), 6)
           .as("u_y_given_x"))
       .localCheckpoint(true)
-    cells.unpersist()
+    Checkpoints.release(cells)
     out
   }
-
-  /** DuckDB twin of [[uncertaintyCoefficient]]; `srcCte` yields
-    * (x, y). */
-  def uncertaintyCoefficientOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT CAST(x AS VARCHAR) AS x,
-            CAST(y AS VARCHAR) AS y FROM ($srcCte)
-          WHERE x IS NOT NULL AND y IS NOT NULL),
-        cells AS (SELECT x, y, COUNT(*) AS n FROM src GROUP BY x, y),
-        t AS (SELECT SUM(n) AS tn FROM cells),
-        hx AS (SELECT -SUM((CAST(n AS DOUBLE) / tn)
-            * LN(CAST(n AS DOUBLE) / tn)) AS h
-          FROM (SELECT x, SUM(n) AS n FROM cells GROUP BY x)
-          CROSS JOIN t),
-        hy AS (SELECT -SUM((CAST(n AS DOUBLE) / tn)
-            * LN(CAST(n AS DOUBLE) / tn)) AS h
-          FROM (SELECT y, SUM(n) AS n FROM cells GROUP BY y)
-          CROSS JOIN t),
-        hxy AS (SELECT -SUM((CAST(n AS DOUBLE) / tn)
-            * LN(CAST(n AS DOUBLE) / tn)) AS h
-          FROM cells CROSS JOIN t)
-        SELECT CAST(t.tn AS BIGINT) AS n, ROUND(hx.h, 6) AS h_x,
-          ROUND(hy.h, 6) AS h_y,
-          ROUND(hx.h + hy.h - hxy.h, 6) AS mi,
-          ROUND(CASE WHEN hy.h > 0 THEN (hx.h + hy.h - hxy.h) / hy.h
-            END, 6) AS u_y_given_x
-        FROM t CROSS JOIN hx CROSS JOIN hy CROSS JOIN hxy"""
 
   /** Cochran–Mantel–Haenszel test + MH pooled odds ratio for K
     * stratified 2×2 tables: CMH χ² = (|Σ(aₖ − E aₖ)| − 0.5)²/ΣVar,
@@ -1184,34 +825,6 @@ object StatTests {
             col("__var")), 6).as("cmh_chi2"))
   }
 
-  /** DuckDB twin of [[cmhTest]]; `srcCte` yields (s, e, o) with
-    * e/o in {0,1}. */
-  def cmhTestOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT s, CAST(e AS BIGINT) AS e,
-            CAST(o AS BIGINT) AS o FROM ($srcCte)),
-        cells AS (SELECT s, SUM(e * o) AS a, SUM(e * (1 - o)) AS b,
-            SUM((1 - e) * o) AS c, SUM((1 - e) * (1 - o)) AS d
-          FROM src GROUP BY s),
-        c2 AS (SELECT a, b, c, d, a + b + c + d AS n FROM cells
-          WHERE a + b + c + d > 1),
-        c3 AS (SELECT a, b, c, d, n, CAST(n AS DOUBLE) AS nd,
-            CAST(a + b AS DOUBLE) AS r1, CAST(a + c AS DOUBLE) AS c1
-          FROM c2),
-        g AS (SELECT COUNT(*) AS k_strata, SUM(n) AS n,
-            SUM(CAST(a AS DOUBLE) - r1 * c1 / nd) AS dev,
-            SUM(r1 * (nd - r1) * c1 * (nd - c1)
-              / (nd * nd * (nd - 1))) AS var,
-            SUM(CAST(a AS DOUBLE) * d / nd) AS num,
-            SUM(CAST(b AS DOUBLE) * c / nd) AS den
-          FROM c3)
-        SELECT CAST(k_strata AS BIGINT) AS k_strata,
-          CAST(n AS BIGINT) AS n,
-          ROUND(CASE WHEN den > 0 THEN num / den END, 6) AS or_mh,
-          ROUND(CASE WHEN var > 0 THEN
-            (ABS(dev) - 0.5) * (ABS(dev) - 0.5) / var END, 6)
-            AS cmh_chi2
-        FROM g"""
-
   /** Index of dispersion (variance-to-mean ratio) for COUNT data per
     * group, with the χ² Poissonity statistic (n−1)·VMR — VMR ≈ 1 is
     * Poisson, ≫ 1 overdispersed (clumped), ≪ 1 regular. Counts are
@@ -1234,24 +847,6 @@ object StatTests {
         round(when(m > 0, (nd - 1) * v / m), 6).as("chi2"))
       .orderBy("group")
   }
-
-  /** DuckDB twin of [[dispersionIndex]]; `srcCte` yields (grp, c). */
-  def dispersionIndexOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT grp, CAST(c AS BIGINT) AS x FROM ($srcCte)
-          WHERE c IS NOT NULL),
-        g AS (SELECT grp AS "group", COUNT(*) AS n,
-            CAST(SUM(x) AS DOUBLE) AS s1,
-            CAST(SUM(x * x) AS DOUBLE) AS s2
-          FROM src GROUP BY grp HAVING COUNT(*) > 1),
-        c2 AS (SELECT "group", n, CAST(n AS DOUBLE) AS nd,
-            s1 / n AS m,
-            (s2 - CAST(n AS DOUBLE) * (s1 / n) * (s1 / n))
-              / (CAST(n AS DOUBLE) - 1) AS v
-          FROM g)
-        SELECT "group", n, ROUND(m, 6) AS mean,
-          ROUND(CASE WHEN m > 0 THEN v / m END, 6) AS vmr,
-          ROUND(CASE WHEN m > 0 THEN (nd - 1) * v / m END, 6) AS chi2
-        FROM c2 ORDER BY "group""""
 
   /** Friedman test + Page's L for k treatments over b blocks (ranks
     * within each block): Friedman χ² = 12/(bk(k+1))·ΣRⱼ² − 3b(k+1)
@@ -1299,37 +894,6 @@ object StatTests {
         round((col("__l") - muL) / sdL, 6).as("page_z"))
   }
 
-  /** DuckDB twin of [[friedmanPage]]; `srcCte` yields (b, t, v) with
-    * t a 0-based ordered treatment index. */
-  def friedmanPageOracleSql(srcCte: String): String =
-    s"""WITH base AS (SELECT b, CAST(t AS BIGINT) AS t,
-            CAST(v AS DOUBLE) AS v FROM ($srcCte)
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        kk AS (SELECT COUNT(DISTINCT t) AS k FROM base),
-        complete AS (SELECT b FROM base GROUP BY b
-          HAVING COUNT(*) = (SELECT k FROM kk)),
-        kept AS (SELECT base.* FROM base JOIN complete USING (b)),
-        rk AS (SELECT b, t,
-            CAST(RANK() OVER (PARTITION BY b ORDER BY v) AS DOUBLE)
-              + (CAST(COUNT(*) OVER (PARTITION BY b, v) AS DOUBLE)
-                - 1) / 2 AS r
-          FROM kept),
-        pt AS (SELECT t, SUM(r) AS rt FROM rk GROUP BY t),
-        g AS (SELECT COUNT(*) AS k, SUM(rt * rt) AS srr,
-            SUM((t + 1) * rt) AS l FROM pt),
-        bb AS (SELECT COUNT(*) AS b FROM complete),
-        f AS (SELECT bb.b, g.k, g.srr, g.l,
-            CAST(bb.b AS DOUBLE) AS bd, CAST(g.k AS DOUBLE) AS kd
-          FROM g CROSS JOIN bb)
-        SELECT CAST(b AS BIGINT) AS b, CAST(k AS BIGINT) AS k,
-          ROUND(12.0 / (bd * kd * (kd + 1)) * srr
-            - 3.0 * bd * (kd + 1), 6) AS friedman_chi2,
-          ROUND(l, 6) AS page_l,
-          ROUND((l - bd * kd * (kd + 1) * (kd + 1) / 4)
-            / SQRT(bd * kd * kd * (kd + 1) * (kd + 1) * (kd - 1)
-              / 144.0), 6) AS page_z
-        FROM f"""
-
   /** Coefficient of variation with McKay's approximate CI — the
     * "relative noise" number (CV = σ/μ) a metric owner quotes across
     * groups of different scales, with honest bounds:
@@ -1367,42 +931,6 @@ object StatTests {
         round(mckay(chi2q(-1.959964)), 6).as("hi"))
       .orderBy("group")
   }
-
-  /** DuckDB twin of [[cvWithCi]]; `srcCte` yields (grp, v). */
-  def cvWithCiOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        g AS (SELECT grp AS "group", COUNT(*) AS n,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))
-              * CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s2
-          FROM src WHERE v IS NOT NULL GROUP BY grp
-          HAVING COUNT(*) > 3),
-        c AS (SELECT "group", n, CAST(n AS DOUBLE) AS nd,
-            s1 / n AS m,
-            (s2 - CAST(n AS DOUBLE) * (s1 / n) * (s1 / n))
-              / (CAST(n AS DOUBLE) - 1) AS v
-          FROM g),
-        cv AS (SELECT "group", n, nd, SQRT(v) / m AS cv FROM c),
-        q AS (SELECT "group", n, nd, cv,
-            (nd - 1) * (1.0 - 2.0 / (9.0 * (nd - 1))
-              + 1.959964 * SQRT(2.0 / (9.0 * (nd - 1))))
-              * (1.0 - 2.0 / (9.0 * (nd - 1))
-              + 1.959964 * SQRT(2.0 / (9.0 * (nd - 1))))
-              * (1.0 - 2.0 / (9.0 * (nd - 1))
-              + 1.959964 * SQRT(2.0 / (9.0 * (nd - 1)))) AS qhi,
-            (nd - 1) * (1.0 - 2.0 / (9.0 * (nd - 1))
-              + -1.959964 * SQRT(2.0 / (9.0 * (nd - 1))))
-              * (1.0 - 2.0 / (9.0 * (nd - 1))
-              + -1.959964 * SQRT(2.0 / (9.0 * (nd - 1))))
-              * (1.0 - 2.0 / (9.0 * (nd - 1))
-              + -1.959964 * SQRT(2.0 / (9.0 * (nd - 1)))) AS qlo
-          FROM cv)
-        SELECT "group", n, ROUND(cv, 6) AS cv,
-          ROUND(cv / SQRT((qhi / (nd - 1)) * (1.0 + cv * cv)
-            - cv * cv * qhi / (nd - 1)), 6) AS lo,
-          ROUND(cv / SQRT((qlo / (nd - 1)) * (1.0 + cv * cv)
-            - cv * cv * qlo / (nd - 1)), 6) AS hi
-        FROM q ORDER BY "group""""
 
   /** One-sample Kolmogorov–Smirnov against a Uniform(lo, hi) null:
     * D = max over distinct values of max(|F̂(v) − F₀(v)|,
@@ -1442,27 +970,6 @@ object StatTests {
           .as("ks_lambda"),
         col("__ne").as("n_excluded"))
   }
-
-  /** DuckDB twin of [[ksUniform]]; `srcCte` yields v. */
-  def ksUniformOracleSql(srcCte: String, lo: Double,
-                         hi: Double): String =
-    s"""WITH vals AS (SELECT CAST(v AS DOUBLE) AS v FROM ($srcCte)
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        ex AS (SELECT COALESCE(SUM(CASE WHEN v < $lo OR v > $hi
-            THEN 1 ELSE 0 END), 0) AS ne FROM vals),
-        src AS (SELECT v FROM vals WHERE v >= $lo AND v <= $hi),
-        m AS (SELECT v, COUNT(*) AS n FROM src GROUP BY v),
-        t AS (SELECT SUM(n) AS nt FROM m),
-        c AS (SELECT v, n, SUM(n) OVER (ORDER BY v) AS cum FROM m),
-        d AS (SELECT MAX(GREATEST(
-            ABS(CAST(cum AS DOUBLE) / nt - (v - $lo) / ($hi - $lo)),
-            ABS(CAST(cum - n AS DOUBLE) / nt
-              - (v - $lo) / ($hi - $lo)))) AS dd, ANY_VALUE(nt) AS n
-          FROM c CROSS JOIN t)
-        SELECT CAST(n AS BIGINT) AS n, ROUND(dd, 6) AS d_stat,
-          ROUND(SQRT(CAST(n AS DOUBLE)) * dd, 6) AS ks_lambda,
-          CAST(ne AS BIGINT) AS n_excluded
-        FROM d CROSS JOIN ex"""
 
   /** Two-sample energy distance E = 2·E|X−Y| − E|X−X′| − E|Y−Y′| —
     * the rotation/shift-sensitive distribution distance that is zero
@@ -1516,36 +1023,6 @@ object StatTests {
         .as("energy"))
   }
 
-  /** DuckDB twin of [[energyDistance]]; `aCte`/`bCte` must yield v. */
-  def energyDistanceOracleSql(aCte: String, bCte: String): String =
-    s"""WITH ca AS (SELECT CAST(CAST(v AS DECIMAL(18,2)) * 100
-            AS BIGINT) AS v, COUNT(*) AS c
-          FROM ($aCte) WHERE v IS NOT NULL GROUP BY 1),
-        cb AS (SELECT CAST(CAST(v AS DECIMAL(18,2)) * 100
-            AS BIGINT) AS v, COUNT(*) AS c
-          FROM ($bCte) WHERE v IS NOT NULL GROUP BY 1),
-        cells AS (SELECT COALESCE(ca.v, cb.v) AS v,
-            COALESCE(ca.c, 0) AS wa, COALESCE(cb.c, 0) AS wb
-          FROM ca FULL JOIN cb ON ca.v = cb.v),
-        g AS (SELECT
-            SUM(CAST(l.wa * r.wb AS DECIMAL(20,0))
-              * CAST(ABS(l.v - r.v) AS DECIMAL(18,0))) AS sxy,
-            SUM(CAST(l.wa * r.wa AS DECIMAL(20,0))
-              * CAST(ABS(l.v - r.v) AS DECIMAL(18,0))) AS sxx,
-            SUM(CAST(l.wb * r.wb AS DECIMAL(20,0))
-              * CAST(ABS(l.v - r.v) AS DECIMAL(18,0))) AS syy,
-            SUM(CASE WHEN l.v = r.v THEN l.wa ELSE 0 END) AS na,
-            SUM(CASE WHEN l.v = r.v THEN l.wb ELSE 0 END) AS nb
-          FROM cells l CROSS JOIN cells r)
-        SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-          ROUND(CAST(sxy AS DOUBLE)
-            / (CAST(na AS DOUBLE) * nb) / 100.0, 6) AS e_between,
-          ROUND((2.0 * CAST(sxy AS DOUBLE) / (CAST(na AS DOUBLE) * nb)
-            - CAST(sxx AS DOUBLE) / (CAST(na AS DOUBLE) * na)
-            - CAST(syy AS DOUBLE) / (CAST(nb AS DOUBLE) * nb))
-            / 100.0, 6) AS energy
-        FROM g"""
-
   /** Sample-size / power design for a two-proportion z-test: from the
     * observed baseline conversion rate, the n-per-arm needed to detect
     * an absolute lift `delta` at (alpha, power) — the proportions twin
@@ -1571,27 +1048,6 @@ object StatTests {
       (nArm * 2).as("total_n"))
   }
 
-  /** DuckDB twin of [[powerProportions]]; `srcCte` yields conv. */
-  def powerProportionsOracleSql(srcCte: String, delta: Double,
-                                zAlpha: Double = 1.959964,
-                                zBeta: Double = 0.841621): String =
-    s"""WITH g AS (SELECT COUNT(*) AS n,
-            SUM(CASE WHEN CAST(conv AS INT) = 1 THEN 1 ELSE 0 END)
-              AS s
-          FROM ($srcCte) WHERE conv IS NOT NULL),
-        c AS (SELECT n, CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS p1
-          FROM g),
-        d AS (SELECT n, p1, p1 + $delta AS p2,
-            (p1 + p1 + $delta) / 2 AS pbar FROM c),
-        e AS (SELECT n, p1, p2,
-            CAST(CEIL(POWER($zAlpha * SQRT(2.0 * pbar * (1.0 - pbar))
-              + $zBeta * SQRT(p1 * (1.0 - p1) + p2 * (1.0 - p2)), 2)
-              / ($delta * $delta)) AS BIGINT) AS narm
-          FROM d)
-        SELECT n, ROUND(p1, 6) AS p_base, ROUND(p2, 6) AS p_target,
-          narm AS n_per_arm, narm * 2 AS total_n
-        FROM e"""
-
   /** Abramowitz–Stegun 26.2.17 upper normal tail — the same
     * polynomial [[MultipleTesting]] uses, duplicated here so both
     * engines (and both files) share one closed form. */
@@ -1602,15 +1058,6 @@ object StatTests {
         k * lit(1.330274429)))))
     lit(0.3989422804014327) * exp(lit(-0.5) * x * x) * poly
   }
-
-  /** SQL text of [[phiUpperAS]] over a column expression. */
-  private def phiUpperSql(x: String): String =
-    s"""(0.3989422804014327 * EXP(-0.5 * ($x) * ($x)) *
-        ((1.0 / (1.0 + 0.2316419 * ($x))) * (0.319381530
-          + (1.0 / (1.0 + 0.2316419 * ($x))) * (-0.356563782
-          + (1.0 / (1.0 + 0.2316419 * ($x))) * (1.781477937
-          + (1.0 / (1.0 + 0.2316419 * ($x))) * (-1.821255978
-          + (1.0 / (1.0 + 0.2316419 * ($x))) * 1.330274429))))))"""
 
   /** Lilliefors normality test: the one-sample KS statistic against
     * Normal(μ̂, σ̂) with BOTH parameters estimated from the data — the
@@ -1658,42 +1105,6 @@ object StatTests {
           6).as("d_stat"))
   }
 
-  /** DuckDB twin of [[lilliefors]]; `srcCte` yields v. */
-  def lillieforsOracleSql(srcCte: String): String = {
-    val phiPos = phiUpperSql("(v - mu) / sig")
-    val phiNeg = phiUpperSql("-((v - mu) / sig)")
-    s"""WITH base AS (SELECT CAST(v AS DOUBLE) AS v,
-            CAST(CAST(v AS DECIMAL(18,2)) * 100 AS HUGEINT) AS xd
-          FROM ($srcCte)
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        moi AS (SELECT COUNT(*) AS n, SUM(xd) AS s1i,
-            SUM(xd * xd) AS s2i FROM base),
-        mo AS (SELECT n,
-            ${graft.core.Lattice.duckPortableDouble("s1i")} / 100.0 AS s1,
-            ${graft.core.Lattice.duckPortableDouble("s2i")} / 10000.0 AS s2
-          FROM moi),
-        mm AS (SELECT n, s1 / n AS mu,
-            SQRT((s2 - n * (s1 / n) * (s1 / n)) / (n - 1)) AS sig
-          FROM mo),
-        cells AS (SELECT v, COUNT(*) AS c FROM base GROUP BY v),
-        cum AS (SELECT v, c, SUM(c) OVER (ORDER BY v) AS cm
-          FROM cells),
-        gaps AS (SELECT n, mu, sig,
-            GREATEST(
-              ABS(CAST(cm AS DOUBLE) / n
-                - (CASE WHEN (v - mu) / sig >= 0
-                    THEN 1.0 - $phiPos ELSE $phiNeg END)),
-              ABS(CAST(cm - c AS DOUBLE) / n
-                - (CASE WHEN (v - mu) / sig >= 0
-                    THEN 1.0 - $phiPos ELSE $phiNeg END))) AS gap
-          FROM cum CROSS JOIN mm)
-        SELECT CAST(ANY_VALUE(n) AS BIGINT) AS n,
-          ROUND(ANY_VALUE(mu), 6) AS mean,
-          ROUND(ANY_VALUE(sig), 6) AS sigma,
-          ROUND(MAX(gap), 6) AS d_stat
-        FROM gaps"""
-  }
-
   /** ROC operating-point finder: for each target sensitivity (whole
     * percents), the HIGHEST score threshold whose recall of positives
     * reaches the target — with its achieved sensitivity, specificity
@@ -1730,36 +1141,6 @@ object StatTests {
             .as("precision"))
     }
     targets.reduce(_ unionByName _).orderBy("target_sens")
-  }
-
-  /** DuckDB twin of [[operatingPoints]]; `srcCte` yields (s, y). */
-  def operatingPointsOracleSql(srcCte: String,
-                               targetsPct: Seq[Int] = Seq(80, 90, 95)): String = {
-    val tList = targetsPct.mkString("[", ", ", "]")
-    s"""WITH base AS (SELECT CAST(s AS DOUBLE) AS s,
-            CASE WHEN CAST(y AS INT) = 1 THEN 1 ELSE 0 END AS y
-          FROM ($srcCte) WHERE s IS NOT NULL AND y IS NOT NULL),
-        cells AS (SELECT s, COUNT(*) AS c, SUM(y) AS p
-          FROM base GROUP BY s),
-        tot AS (SELECT SUM(c) AS nt, SUM(p) AS np FROM cells),
-        cum AS (SELECT s,
-            SUM(c) OVER (ORDER BY s DESC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cge,
-            SUM(p) OVER (ORDER BY s DESC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pge
-          FROM cells),
-        ts AS (SELECT UNNEST($tList) AS t),
-        pick AS (SELECT ts.t, MAX(cum.s) AS thr
-          FROM ts CROSS JOIN tot JOIN cum ON cum.pge * 100 >= tot.np * ts.t
-          GROUP BY ts.t)
-        SELECT CAST(pick.t AS DOUBLE) / 100 AS target_sens,
-          ROUND(pick.thr, 6) AS threshold,
-          ROUND(CAST(cum.pge AS DOUBLE) / tot.np, 6) AS sensitivity,
-          ROUND(CAST(tot.nt - tot.np - (cum.cge - cum.pge) AS DOUBLE)
-            / CAST(tot.nt - tot.np AS DOUBLE), 6) AS specificity,
-          ROUND(CAST(cum.pge AS DOUBLE) / cum.cge, 6) AS precision
-        FROM pick JOIN cum ON cum.s = pick.thr CROSS JOIN tot
-        ORDER BY target_sens"""
   }
 
   /** Jonckheere–Terpstra ordered-alternative test: with groups in a
@@ -1808,31 +1189,6 @@ object StatTests {
           .as("z_stat"))
     }
 
-  /** DuckDB twin of [[jonckheereTerpstra]]; `srcCte` yields (g, v). */
-  def jonckheereTerpstraOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT CAST(g AS BIGINT) AS g,
-            CAST(v AS BIGINT) AS v FROM ($srcCte)
-          WHERE g IS NOT NULL AND v IS NOT NULL),
-        cells AS (SELECT g, v, COUNT(*) AS n FROM src GROUP BY g, v),
-        jt AS (SELECT COALESCE(SUM(CASE WHEN a.v < b.v
-              THEN a.n * b.n END), 0) * 2
-            + COALESCE(SUM(CASE WHEN a.v = b.v
-              THEN a.n * b.n END), 0) AS jt2
-          FROM cells a JOIN cells b ON b.g > a.g),
-        sizes AS (SELECT g, SUM(n) AS ng FROM cells GROUP BY g),
-        mo AS (SELECT COUNT(*) AS k, SUM(ng) AS nn,
-            SUM(ng * ng) AS sq, SUM(ng * ng * (2 * ng + 3)) AS cu
-          FROM sizes)
-        SELECT CAST(nn AS BIGINT) AS n, CAST(k AS BIGINT) AS n_groups,
-          CAST(jt2 AS DOUBLE) / 2 AS jt,
-          ROUND(CASE WHEN (CAST(nn AS DOUBLE) * nn * (2.0 * nn + 3)
-              - CAST(cu AS DOUBLE)) / 72 > 0 THEN
-            (CAST(jt2 AS DOUBLE) / 2
-              - (CAST(nn AS DOUBLE) * nn - CAST(sq AS DOUBLE)) / 4)
-            / SQRT((CAST(nn AS DOUBLE) * nn * (2.0 * nn + 3)
-              - CAST(cu AS DOUBLE)) / 72) END, 6) AS z_stat
-        FROM mo CROSS JOIN jt"""
-
   /** Two-sample KS drift PER GROUP in one pipeline — q92's single-pair
     * test, swept across segments ("which event types' value
     * distributions moved after the split"). The rank kernel is the
@@ -1865,28 +1221,6 @@ object StatTests {
           col("__cumb").cast("double") / col("__nb"))), 6).as("d_stat"))
       .orderBy("group")
   }
-
-  /** DuckDB twin of [[ksByGroup]]; `srcCte` yields (g, a, v). */
-  def ksByGroupOracleSql(srcCte: String): String =
-    s"""WITH base AS (SELECT g,
-            CASE WHEN CAST(a AS INT) = 1 THEN 1 ELSE 0 END AS a,
-            CAST(v AS DOUBLE) AS v FROM ($srcCte)
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))
-            AND a IS NOT NULL),
-        cells AS (SELECT g, v, SUM(a) AS ca, SUM(1 - a) AS cb
-          FROM base GROUP BY g, v),
-        cum AS (SELECT g, v,
-            SUM(ca) OVER (PARTITION BY g ORDER BY v) AS cuma,
-            SUM(cb) OVER (PARTITION BY g ORDER BY v) AS cumb,
-            SUM(ca) OVER (PARTITION BY g) AS na,
-            SUM(cb) OVER (PARTITION BY g) AS nb
-          FROM cells)
-        SELECT g AS "group", CAST(ANY_VALUE(na) AS BIGINT) AS n_a,
-          CAST(ANY_VALUE(nb) AS BIGINT) AS n_b,
-          ROUND(MAX(ABS(CAST(cuma AS DOUBLE) / na
-            - CAST(cumb AS DOUBLE) / nb)), 6) AS d_stat
-        FROM cum WHERE na > 0 AND nb > 0
-        GROUP BY g ORDER BY "group""""
 
   /** Cost-optimal operating threshold: over all distinct score
     * thresholds (predict positive at score ≥ t), the one minimizing
@@ -1922,34 +1256,6 @@ object StatTests {
         least(col("__np") * costFn,
           (col("__nt") - col("__np")) * costFp).as("baseline_cost"))
   }
-
-  /** DuckDB twin of [[costCurve]]; `srcCte` yields (s, y). */
-  def costCurveOracleSql(srcCte: String, costFp: Long,
-                         costFn: Long): String =
-    s"""WITH base AS (SELECT CAST(s AS DOUBLE) AS s,
-            CASE WHEN CAST(y AS INT) = 1 THEN 1 ELSE 0 END AS y
-          FROM ($srcCte) WHERE s IS NOT NULL AND y IS NOT NULL),
-        cells AS (SELECT s, COUNT(*) AS c, SUM(y) AS p
-          FROM base GROUP BY s),
-        tot AS (SELECT SUM(c) AS nt, SUM(p) AS np FROM cells),
-        cum AS (SELECT s,
-            SUM(c) OVER (ORDER BY s DESC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cge,
-            SUM(p) OVER (ORDER BY s DESC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pge
-          FROM cells),
-        costs AS (SELECT s, cge, pge, nt, np,
-            $costFp * (cge - pge) + $costFn * (np - pge) AS cost
-          FROM cum CROSS JOIN tot),
-        mn AS (SELECT MIN(cost) AS m FROM costs)
-        SELECT CAST(nt AS BIGINT) AS n, ROUND(s, 6) AS best_threshold,
-          CAST(cge - pge AS BIGINT) AS n_fp,
-          CAST(np - pge AS BIGINT) AS n_fn,
-          CAST(cost AS BIGINT) AS min_cost,
-          CAST(LEAST(np * $costFn, (nt - np) * $costFp) AS BIGINT)
-            AS baseline_cost
-        FROM costs CROSS JOIN mn WHERE cost = mn.m
-        ORDER BY s DESC LIMIT 1"""
 
   /** 1-Wasserstein (earth-mover) drift PER GROUP in one pipeline —
     * q345's transport distance, swept across segments the way
@@ -1991,32 +1297,6 @@ object StatTests {
       .orderBy("group")
   }
 
-  /** DuckDB twin of [[wassersteinByGroup]]; `srcCte` yields
-    * (g, a, v). */
-  def wassersteinByGroupOracleSql(srcCte: String): String =
-    s"""WITH base AS (SELECT g,
-            CASE WHEN CAST(a AS INT) = 1 THEN 1 ELSE 0 END AS a,
-            CAST(v AS DOUBLE) AS v FROM ($srcCte)
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))
-            AND a IS NOT NULL),
-        cells AS (SELECT g, v, SUM(a) AS ca, SUM(1 - a) AS cb
-          FROM base GROUP BY g, v),
-        cum AS (SELECT g, v,
-            SUM(ca) OVER (PARTITION BY g ORDER BY v) AS cuma,
-            SUM(cb) OVER (PARTITION BY g ORDER BY v) AS cumb,
-            SUM(ca) OVER (PARTITION BY g) AS na,
-            SUM(cb) OVER (PARTITION BY g) AS nb,
-            COALESCE(LEAD(v) OVER (PARTITION BY g ORDER BY v) - v,
-              0.0) AS dv
-          FROM cells)
-        SELECT g AS "group", CAST(ANY_VALUE(na) AS BIGINT) AS n_a,
-          CAST(ANY_VALUE(nb) AS BIGINT) AS n_b,
-          ROUND(CAST(SUM(CAST(ROUND(
-            ABS(CAST(cuma AS DOUBLE) / na - CAST(cumb AS DOUBLE) / nb)
-              * dv, 9) AS DECIMAL(28,9))) AS DOUBLE), 6) AS w1
-        FROM cum WHERE na > 0 AND nb > 0
-        GROUP BY g ORDER BY "group""""
-
   /** Two-sample variance-ratio F test: F = s²_A/s²_B with the larger
     * group structure left to the caller — the classical spread
     * comparison the Brown–Forsythe battery (q296) robustifies; here
@@ -2048,32 +1328,4 @@ object StatTests {
       round(vb, 6).as("var_b"),
       round(try_divide(va, vb), 6).as("f_stat"))
   }
-
-  /** DuckDB twin of [[varianceRatio]]; `srcCte` yields (arm, v). */
-  def varianceRatioOracleSql(srcCte: String, armA: String,
-                             armB: String): String =
-    s"""WITH src AS (SELECT arm, CAST(v AS DECIMAL(18,2)) AS v
-          FROM ($srcCte)
-          WHERE v IS NOT NULL AND arm IN ('$armA', '$armB')),
-        g AS (SELECT
-            CAST(SUM(CASE WHEN arm = '$armA' THEN 1 ELSE 0 END)
-              AS BIGINT) AS na,
-            CAST(SUM(CASE WHEN arm = '$armB' THEN 1 ELSE 0 END)
-              AS BIGINT) AS nb,
-            CAST(SUM(CASE WHEN arm = '$armA' THEN v END) AS DOUBLE)
-              AS sa,
-            CAST(SUM(CASE WHEN arm = '$armB' THEN v END) AS DOUBLE)
-              AS sb,
-            CAST(SUM(CASE WHEN arm = '$armA' THEN v * v END)
-              AS DOUBLE) AS qa,
-            CAST(SUM(CASE WHEN arm = '$armB' THEN v * v END)
-              AS DOUBLE) AS qb
-          FROM src),
-        v2 AS (SELECT na, nb,
-            (qa - na * (sa / na) * (sa / na)) / (na - 1) AS va,
-            (qb - nb * (sb / nb) * (sb / nb)) / (nb - 1) AS vb
-          FROM g)
-        SELECT na AS n_a, nb AS n_b, ROUND(va, 6) AS var_a,
-          ROUND(vb, 6) AS var_b, ROUND(va / vb, 6) AS f_stat
-        FROM v2"""
 }

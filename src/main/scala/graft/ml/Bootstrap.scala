@@ -65,34 +65,4 @@ object Bootstrap {
     units.unpersist()
     out
   }
-
-  /** DuckDB mirror of [[subsampleCi]]: `unitsCte` must yield
-    * (grp, id, y). */
-  def subsampleCiOracleSql(unitsCte: String, b: Int): String =
-    s"""WITH units AS (SELECT grp, id, CAST(y AS DECIMAL(18,2)) AS y
-           FROM ($unitsCte) WHERE y IS NOT NULL),
-        reps AS (SELECT UNNEST(range(1, ${b + 1})) AS rep),
-        kept AS (SELECT grp, y, rep FROM units CROSS JOIN reps
-          WHERE substr(md5(CAST(id AS VARCHAR) || ':' ||
-            CAST(rep AS VARCHAR)), 1, 1) < '8'),
-        pr AS (SELECT grp, rep,
-            CAST(SUM(y) AS DOUBLE) / COUNT(*) AS m
-          FROM kept GROUP BY grp, rep),
-        rk AS (SELECT grp, m,
-            ROW_NUMBER() OVER (PARTITION BY grp ORDER BY m ASC, rep ASC)
-              AS r,
-            COUNT(*) OVER (PARTITION BY grp) AS nr
-          FROM pr),
-        ci AS (SELECT grp,
-            MAX(CASE WHEN r = CEIL(0.025 * nr) THEN m END) AS lo,
-            MAX(CASE WHEN r = CEIL(0.975 * nr) THEN m END) AS hi,
-            CAST(MAX(nr) AS BIGINT) AS n_reps
-          FROM rk GROUP BY grp),
-        fl AS (SELECT grp, COUNT(*) AS n_units,
-            CAST(SUM(y) AS DOUBLE) / COUNT(*) AS mean
-          FROM units GROUP BY grp)
-        SELECT fl.grp AS "group", fl.n_units,
-          ROUND(fl.mean, 6) AS mean, ROUND(ci.lo, 6) AS ci_lo,
-          ROUND(ci.hi, 6) AS ci_hi, COALESCE(ci.n_reps, 0) AS n_reps
-        FROM fl LEFT JOIN ci USING (grp)"""
 }

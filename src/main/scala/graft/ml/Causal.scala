@@ -53,34 +53,6 @@ object Causal {
       round(when(abs(czd) > 0, czy / czd), 6).as("beta_iv"))
   }
 
-  /** DuckDB twin of [[ivWald]]; `srcCte` must yield (z, d, y) with
-    * z/d in {0,1}. */
-  def ivWaldOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT CAST(z AS BIGINT) AS z,
-            CAST(d AS BIGINT) AS d, CAST(y AS DECIMAL(18,2)) AS y
-          FROM ($srcCte) WHERE y IS NOT NULL),
-        g AS (SELECT COUNT(*) AS n, SUM(z) AS sz, SUM(d) AS sd,
-            SUM(z * d) AS szd, CAST(SUM(y) AS DOUBLE) AS sy,
-            CAST(SUM(CASE WHEN z = 1 THEN y END) AS DOUBLE) AS szy
-          FROM src),
-        c AS (SELECT n, CAST(n AS DOUBLE) AS nd,
-            CAST(sz AS DOUBLE) / n AS mz, CAST(sd AS DOUBLE) / n AS md,
-            sy / n AS my, szd, szy, sd FROM g),
-        m AS (SELECT n, nd, mz, md,
-            CAST(szd AS DOUBLE) / nd - mz * md AS czd,
-            szy / nd - mz * my AS czy,
-            mz - mz * mz AS vz,
-            CAST(sd AS DOUBLE) - nd * md * md AS sdd FROM c),
-        f AS (SELECT n, nd, czd, czy, vz, sdd,
-            czd / vz AS fs, nd * vz AS szz, nd * czd AS szdc FROM m)
-        SELECT n, ROUND(fs, 6) AS first_stage,
-          ROUND(CASE WHEN sdd - fs * szdc > 0 THEN
-            fs * fs / (((sdd - fs * szdc) / (nd - 2)) / szz) END, 6)
-            AS first_stage_f,
-          ROUND(CASE WHEN ABS(czd) > 0 THEN czy / czd END, 6)
-            AS beta_iv
-        FROM f"""
-
   /** Sharp regression discontinuity at a known cutoff: fit separate
     * local lines on each side of the cutoff within ±bandwidth (exact
     * decimal moments per side), and report the jump — the difference
@@ -119,42 +91,6 @@ object Causal {
       round(intercept("r") - intercept("l"), 6).as("effect"))
   }
 
-  /** DuckDB twin of [[rddSharp]]; `srcCte` must yield (x, y). */
-  def rddSharpOracleSql(srcCte: String, cutoff: Double,
-                        bandwidth: Double): String =
-    s"""WITH base AS (SELECT CAST(x AS DOUBLE) - $cutoff AS x,
-            CAST(y AS DECIMAL(18,2)) AS y,
-            (CAST(x AS DOUBLE) - $cutoff >= 0) AS r
-          FROM ($srcCte) WHERE x IS NOT NULL AND y IS NOT NULL
-            AND ABS(CAST(x AS DOUBLE) - $cutoff) <= $bandwidth),
-        g AS (SELECT
-            SUM(CASE WHEN NOT r THEN 1 ELSE 0 END) AS nl,
-            SUM(CASE WHEN NOT r THEN x END) AS sxl,
-            CAST(SUM(CASE WHEN NOT r THEN y END) AS DOUBLE) AS syl,
-            SUM(CASE WHEN NOT r THEN x * x END) AS sxxl,
-            SUM(CASE WHEN NOT r THEN x * CAST(y AS DOUBLE) END)
-              AS sxyl,
-            SUM(CASE WHEN r THEN 1 ELSE 0 END) AS nr,
-            SUM(CASE WHEN r THEN x END) AS sxr,
-            CAST(SUM(CASE WHEN r THEN y END) AS DOUBLE) AS syr,
-            SUM(CASE WHEN r THEN x * x END) AS sxxr,
-            SUM(CASE WHEN r THEN x * CAST(y AS DOUBLE) END) AS sxyr
-          FROM base),
-        c AS (SELECT nl, nr,
-            syl / nl - ((sxyl - nl * (sxl / nl) * (syl / nl))
-              / (sxxl - nl * (sxl / nl) * (sxl / nl))) * (sxl / nl)
-              AS il,
-            syr / nr - ((sxyr - nr * (sxr / nr) * (syr / nr))
-              / (sxxr - nr * (sxr / nr) * (sxr / nr))) * (sxr / nr)
-              AS ir
-          FROM g)
-        SELECT CAST(nl AS BIGINT) AS n_left,
-          CAST(nr AS BIGINT) AS n_right,
-          ROUND(il, 6) AS left_at_cutoff,
-          ROUND(ir, 6) AS right_at_cutoff,
-          ROUND(ir - il, 6) AS effect
-        FROM c"""
-
   /** Intra-cluster correlation (one-way ANOVA estimator) + Kish
     * design effect DEFF = 1 + (m̄−1)·ICC — "how many effective
     * observations does a cluster-randomized design really have".
@@ -187,30 +123,6 @@ object Causal {
       round(icc, 6).as("icc"),
       round(lit(1.0) + (m0 - 1) * icc, 6).as("deff"))
   }
-
-  /** DuckDB twin of [[iccDesignEffect]]; `srcCte` yields (c, y). */
-  def iccDesignEffectOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT c, CAST(y AS DECIMAL(18,2)) AS y
-          FROM ($srcCte) WHERE y IS NOT NULL),
-        per AS (SELECT c, COUNT(*) AS m,
-            CAST(SUM(y) AS DOUBLE) AS s1,
-            CAST(SUM(y * y) AS DOUBLE) AS s2
-          FROM src GROUP BY c),
-        g AS (SELECT COUNT(*) AS k, SUM(m) AS n,
-            SUM(m * m) AS smm, SUM(s1) AS t1, SUM(s2) AS t2,
-            SUM(s1 * s1 / CAST(m AS DOUBLE)) AS sb FROM per),
-        c2 AS (SELECT k, n, CAST(k AS DOUBLE) AS kd,
-            CAST(n AS DOUBLE) AS nd, smm, t1, t2, sb FROM g),
-        c3 AS (SELECT k, n, kd, nd,
-            (nd - CAST(smm AS DOUBLE) / nd) / (kd - 1) AS m0,
-            (sb - t1 * t1 / nd) / (kd - 1) AS msb,
-            (t2 - sb) / (nd - kd) AS msw FROM c2)
-        SELECT CAST(k AS BIGINT) AS k, CAST(n AS BIGINT) AS n,
-          ROUND(m0, 6) AS m0,
-          ROUND((msb - msw) / (msb + (m0 - 1) * msw), 6) AS icc,
-          ROUND(1.0 + (m0 - 1)
-            * ((msb - msw) / (msb + (m0 - 1) * msw)), 6) AS deff
-        FROM c3"""
 
   /** Baron–Kenny mediation with the Sobel test, fully closed-form:
     * a = slope of m ~ x, (b, c&apos;) from the 2-regressor y ~ m + x,
@@ -263,47 +175,6 @@ object Causal {
       round(ab / sqrt(b * b * seA2 + a * a * seB2), 6).as("sobel_z"))
   }
 
-  /** DuckDB twin of [[sobelMediation]]; `srcCte` yields (x, m, y). */
-  def sobelMediationOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT CAST(x AS DECIMAL(9,0)) AS x,
-            CAST(m AS DECIMAL(18,2)) AS m, CAST(y AS DECIMAL(18,2)) AS y
-          FROM ($srcCte) WHERE x IS NOT NULL AND m IS NOT NULL
-            AND y IS NOT NULL),
-        g AS (SELECT COUNT(*) AS n, CAST(SUM(x) AS DOUBLE) AS sx,
-            CAST(SUM(m) AS DOUBLE) AS sm, CAST(SUM(y) AS DOUBLE) AS sy,
-            CAST(SUM(x * x) AS DOUBLE) AS sxx0,
-            CAST(SUM(m * m) AS DOUBLE) AS smm0,
-            CAST(SUM(x * m) AS DOUBLE) AS sxm0,
-            CAST(SUM(x * y) AS DOUBLE) AS sxy0,
-            CAST(SUM(m * y) AS DOUBLE) AS smy0,
-            CAST(SUM(y * y) AS DOUBLE) AS syy0
-          FROM src),
-        c AS (SELECT n, CAST(n AS DOUBLE) AS nd,
-            sx / n AS mx, sm / n AS mm, sy / n AS my,
-            sxx0, smm0, sxm0, sxy0, smy0, syy0 FROM g),
-        cc AS (SELECT n, nd,
-            sxx0 - nd * mx * mx AS sxx, smm0 - nd * mm * mm AS smm,
-            sxm0 - nd * mx * mm AS sxm, sxy0 - nd * mx * my AS sxy,
-            smy0 - nd * mm * my AS smy, syy0 - nd * my * my AS syy
-          FROM c),
-        e AS (SELECT n, nd, sxx, smm, sxm, sxy, smy, syy,
-            sxm / sxx AS a,
-            (smy * sxx - sxy * sxm) / (smm * sxx - sxm * sxm) AS b,
-            (sxy * smm - smy * sxm) / (smm * sxx - sxm * sxm)
-              AS cprime,
-            smm * sxx - sxm * sxm AS det
-          FROM cc),
-        f AS (SELECT n, a, b, cprime,
-            ((smm - a * sxm) / (nd - 2)) / sxx AS sea2,
-            ((syy - b * smy - cprime * sxy) / (nd - 3)) * sxx / det
-              AS seb2
-          FROM e)
-        SELECT n, ROUND(a, 6) AS a, ROUND(b, 6) AS b,
-          ROUND(cprime, 6) AS c_direct, ROUND(a * b, 6) AS indirect,
-          ROUND(a * b / SQRT(b * b * sea2 + a * a * seb2), 6)
-            AS sobel_z
-        FROM f"""
-
   /** Empirical-Bayes (normal–normal) shrinkage of per-group means —
     * the James–Stein idea with unequal group sizes: method-of-moments
     * τ̂² = max(0, var(group means) − mean(σ²/n_g)), then each group's
@@ -342,30 +213,6 @@ object Causal {
         round(w, 6).as("weight"))
       .orderBy("group")
   }
-
-  /** DuckDB twin of [[ebShrinkMeans]]; `srcCte` yields (grp, v). */
-  def ebShrinkMeansOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        per AS (SELECT grp AS "group", COUNT(*) AS n,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))
-              * CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s2
-          FROM src WHERE v IS NOT NULL GROUP BY grp
-          HAVING COUNT(*) > 1),
-        wm AS (SELECT "group", n, s1 / CAST(n AS DOUBLE) AS m,
-            (s2 - CAST(n AS DOUBLE) * (s1 / CAST(n AS DOUBLE))
-              * (s1 / CAST(n AS DOUBLE))) / (CAST(n AS DOUBLE) - 1)
-              / CAST(n AS DOUBLE) AS se2
-          FROM per),
-        hyper AS (SELECT COUNT(*) AS k, AVG(m) AS gm,
-            GREATEST(SUM(m * m) / COUNT(*) - AVG(m) * AVG(m)
-              - AVG(se2), 0.0) AS tau2
-          FROM wm)
-        SELECT "group", n, ROUND(m, 6) AS raw_mean,
-          ROUND((tau2 / (tau2 + se2)) * m
-            + (1.0 - tau2 / (tau2 + se2)) * gm, 6) AS shrunk_mean,
-          ROUND(tau2 / (tau2 + se2), 6) AS weight
-        FROM wm CROSS JOIN hyper ORDER BY "group""""
 
   /** Stratified ATE (g-formula standardization over one discrete
     * confounder): per stratum the treated-vs-control mean gap, then
@@ -408,37 +255,6 @@ object Causal {
           .as("adjusted_ate"))
   }
 
-  /** DuckDB twin of [[stratifiedAte]]; `srcCte` yields (s, tr, y). */
-  def stratifiedAteOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT s, CAST(tr AS INT) AS tr,
-            CAST(y AS DECIMAL(18,2)) AS y
-          FROM ($srcCte) WHERE y IS NOT NULL),
-        cells AS (SELECT s, COUNT(*) AS n,
-            SUM(CASE WHEN tr = 1 THEN 1 ELSE 0 END) AS nt,
-            CAST(SUM(CASE WHEN tr = 1 THEN y END) AS DOUBLE) AS st,
-            CAST(SUM(CASE WHEN tr <> 1 THEN y END) AS DOUBLE) AS sc
-          FROM src GROUP BY s),
-        naive AS (SELECT
-            CAST(SUM(CASE WHEN tr = 1 THEN y END) AS DOUBLE)
-              / SUM(CASE WHEN tr = 1 THEN 1 END)
-            - CAST(SUM(CASE WHEN tr <> 1 THEN y END) AS DOUBLE)
-              / SUM(CASE WHEN tr <> 1 THEN 1 END) AS nv
-          FROM src),
-        f AS (SELECT (nt > 0 AND nt < n) AS ok, n, nt, st, sc
-          FROM cells)
-        SELECT CAST(SUM(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_strata,
-          CAST(SUM(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_dropped,
-          CAST(SUM(CASE WHEN ok THEN n END) AS BIGINT) AS n_units,
-          ROUND(ANY_VALUE(nv), 6) AS naive_diff,
-          ROUND(CAST(SUM(CAST(ROUND(CASE WHEN ok THEN
-              (st / nt - sc / (n - nt)) * n END, 9)
-              AS DECIMAL(38,9))) AS DOUBLE)
-            / CAST(SUM(CASE WHEN ok THEN n END) AS DOUBLE), 6)
-            AS adjusted_ate
-        FROM f CROSS JOIN naive"""
-
   /** Common-support audit for a treated/control comparison on a
     * pre-binned score: the histogram overlap coefficient
     * OVL = Σ_bins min(p_treat, p_ctrl) and the share of treated units
@@ -475,23 +291,4 @@ object Causal {
         round(col("__off").cast("double") / col("n_treat"), 6)
           .as("treat_off_support"))
   }
-
-  /** DuckDB twin of [[propensityOverlap]]; `srcCte` yields (b, tr). */
-  def propensityOverlapOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT b, CAST(tr AS INT) AS tr FROM ($srcCte)
-          WHERE b IS NOT NULL),
-        bins AS (SELECT b,
-            SUM(CASE WHEN tr = 1 THEN 1 ELSE 0 END) AS nt,
-            SUM(CASE WHEN tr <> 1 THEN 1 ELSE 0 END) AS nc
-          FROM src GROUP BY b),
-        tot AS (SELECT SUM(nt) AS tn, SUM(nc) AS cn FROM bins)
-        SELECT CAST(ANY_VALUE(tn) AS BIGINT) AS n_treat,
-          CAST(ANY_VALUE(cn) AS BIGINT) AS n_ctrl,
-          COUNT(*) AS n_bins,
-          ROUND(CAST(SUM(LEAST(nt * cn, nc * tn))
-            AS DOUBLE) / (CAST(ANY_VALUE(tn) AS DOUBLE)
-              * ANY_VALUE(cn)), 6) AS overlap,
-          ROUND(CAST(SUM(CASE WHEN nc = 0 THEN nt ELSE 0 END)
-            AS DOUBLE) / ANY_VALUE(tn), 6) AS treat_off_support
-        FROM bins CROSS JOIN tot"""
 }

@@ -41,30 +41,6 @@ object EvalExtras {
       round((tpr + tnr) / 2, 6).as("balanced_acc"))
   }
 
-  /** DuckDB twin of [[mccSummary]]; `srcCte` yields (p, l) in {0,1}.
-    */
-  def mccSummaryOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        g AS (SELECT
-            SUM(p * l) AS tp, SUM(p * (1 - l)) AS fp,
-            SUM((1 - p) * l) AS fn, SUM((1 - p) * (1 - l)) AS tn
-          FROM src),
-        c AS (SELECT tp, fp, fn, tn,
-            CAST(tp AS DOUBLE) AS tpd, CAST(fp AS DOUBLE) AS fpd,
-            CAST(fn AS DOUBLE) AS fnd, CAST(tn AS DOUBLE) AS tnd
-          FROM g)
-        SELECT CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-          CAST(fn AS BIGINT) AS fn, CAST(tn AS BIGINT) AS tn,
-          ROUND(CASE WHEN SQRT((tpd + fpd) * (tpd + fnd) * (tnd + fpd)
-              * (tnd + fnd)) > 0 THEN
-            (tpd * tnd - fpd * fnd) / SQRT((tpd + fpd) * (tpd + fnd)
-              * (tnd + fpd) * (tnd + fnd)) END, 6) AS mcc,
-          ROUND(tpd / (tpd + fnd) + tnd / (tnd + fpd) - 1, 6)
-            AS youden_j,
-          ROUND((tpd / (tpd + fnd) + tnd / (tnd + fpd)) / 2, 6)
-            AS balanced_acc
-        FROM c"""
-
   /** Standardized mean-difference effect sizes for two groups:
     * Cohen's d (pooled SD), Hedges' g (small-sample-corrected,
     * J = 1 − 3/(4·df − 1)), Glass's Δ (control-SD only) — the numbers
@@ -98,36 +74,6 @@ object EvalExtras {
         .as("glass_delta"))
   }
 
-  /** DuckDB twin of [[effectSizes]]; `aCte`/`bCte` yield v. */
-  def effectSizesOracleSql(aCte: String, bCte: String): String =
-    s"""WITH ga AS (SELECT COUNT(*) AS na,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s1a,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))
-              * CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s2a
-          FROM ($aCte) WHERE v IS NOT NULL),
-        gb AS (SELECT COUNT(*) AS nb,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s1b,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))
-              * CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s2b
-          FROM ($bCte) WHERE v IS NOT NULL),
-        c AS (SELECT na, nb, CAST(na AS DOUBLE) AS nad,
-            CAST(nb AS DOUBLE) AS nbd,
-            s1a / na AS ma, s1b / nb AS mb,
-            s2a - na * (s1a / na) * (s1a / na) AS ssa,
-            s2b - nb * (s1b / nb) * (s1b / nb) AS ssb
-          FROM ga CROSS JOIN gb),
-        e AS (SELECT na, nb, ma, mb,
-            (ma - mb) / SQRT((ssa + ssb) / (nad + nbd - 2)) AS d,
-            1.0 - 3.0 / (4.0 * (nad + nbd - 2) - 1) AS j,
-            SQRT(ssb / (nbd - 1)) AS sb
-          FROM c)
-        SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-          ROUND(ma - mb, 6) AS mean_diff, ROUND(d, 6) AS cohens_d,
-          ROUND(d * j, 6) AS hedges_g,
-          ROUND(CASE WHEN sb > 0 THEN (ma - mb) / sb END, 6)
-            AS glass_delta
-        FROM e"""
-
   /** Sample-ratio-mismatch guardrail: χ² (1 df) of the observed
     * variant split against an expected share — the FIRST check on any
     * A/B readout (an SRM invalidates everything downstream). One
@@ -152,28 +98,6 @@ object EvalExtras {
       round((na - ea) / sqrt(n * expectedShareA *
         (1 - expectedShareA)), 6).as("z_stat"))
   }
-
-  /** DuckDB twin of [[srmCheck]]; `srcCte` yields (arm) in {0,1}. */
-  def srmCheckOracleSql(srcCte: String,
-                        expectedShareA: Double = 0.5): String =
-    s"""WITH src AS ($srcCte),
-        g AS (SELECT SUM(CAST(arm AS BIGINT)) AS na,
-            SUM(1 - CAST(arm AS BIGINT)) AS nb FROM src),
-        c AS (SELECT na, nb, CAST(na AS DOUBLE) AS nad,
-            CAST(nb AS DOUBLE) AS nbd,
-            CAST(na + nb AS DOUBLE) AS n FROM g)
-        SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-          $expectedShareA AS expected_share,
-          ROUND(nad / n, 6) AS observed_share,
-          ROUND((nad - n * $expectedShareA) * (nad - n * $expectedShareA)
-              / (n * $expectedShareA)
-            + (nbd - n * (1 - $expectedShareA))
-              * (nbd - n * (1 - $expectedShareA))
-              / (n * (1 - $expectedShareA)), 6) AS chi2,
-          ROUND((nad - n * $expectedShareA)
-            / SQRT(n * $expectedShareA * (1 - $expectedShareA)), 6)
-            AS z_stat
-        FROM c"""
 
   /** Threshold selection over EVERY distinct score in one pass:
     * at threshold v (predict positive when score ≥ v) compute
@@ -219,39 +143,6 @@ object EvalExtras {
       .orderBy("criterion")
   }
 
-  /** DuckDB twin of [[bestThresholds]]; `srcCte` yields (s, l). */
-  def bestThresholdsOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT CAST(s AS DOUBLE) AS v,
-            CAST(l AS INT) AS l FROM ($srcCte)
-          WHERE s IS NOT NULL AND NOT isnan(CAST(s AS DOUBLE))),
-        m AS (SELECT v, COUNT(*) AS n, SUM(l) AS np FROM src
-          GROUP BY v),
-        t AS (SELECT SUM(np) AS tp_all, SUM(n - np) AS tn_all FROM m),
-        c AS (SELECT v,
-            SUM(np) OVER (ORDER BY v) - np AS befp,
-            SUM(n - np) OVER (ORDER BY v) - (n - np) AS befn
-          FROM m),
-        r AS (SELECT c.v AS score,
-            CAST(t.tp_all - c.befp AS DOUBLE) / t.tp_all AS tpr,
-            CAST(t.tn_all - c.befn AS DOUBLE) / t.tn_all AS fpr,
-            CAST(t.tp_all - c.befp AS DOUBLE)
-              / ((t.tp_all - c.befp) + (t.tn_all - c.befn)) AS prec
-          FROM c CROSS JOIN t),
-        r2 AS (SELECT score, tpr, fpr, prec, tpr - fpr AS jstat,
-            COALESCE(2.0 * prec * tpr / (prec + tpr), 0.0) AS f1
-          FROM r),
-        yj AS (SELECT 'youden' AS criterion, score, tpr, fpr, prec,
-            jstat AS crit FROM r2
-          ORDER BY jstat DESC, score ASC LIMIT 1),
-        bf AS (SELECT 'f1' AS criterion, score, tpr, fpr, prec,
-            f1 AS crit FROM r2
-          ORDER BY f1 DESC, score ASC LIMIT 1)
-        SELECT criterion, ROUND(score, 6) AS threshold,
-          ROUND(tpr, 6) AS tpr, ROUND(fpr, 6) AS fpr,
-          ROUND(prec, 6) AS "precision", ROUND(crit, 6) AS score
-        FROM (SELECT * FROM yj UNION ALL SELECT * FROM bf)
-        ORDER BY criterion"""
-
   /** Ties-exact average precision (area under the PR curve by the
     * step convention, tie groups collapsed): AP = Σ_v
     * (pos_at_v / n_pos) · precision(≥ v) — ONE aggregate over the
@@ -274,25 +165,6 @@ object EvalExtras {
         round(sum(col("n_pos").cast("double") / col("__np") *
           (tpAt / allAt)), 6).as("ap"))
   }
-
-  /** DuckDB twin of [[averagePrecision]]; `srcCte` yields (s, l). */
-  def averagePrecisionOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT CAST(s AS DOUBLE) AS v,
-            CAST(l AS INT) AS l FROM ($srcCte)
-          WHERE s IS NOT NULL AND NOT isnan(CAST(s AS DOUBLE))),
-        m AS (SELECT v, COUNT(*) AS n, SUM(l) AS np FROM src
-          GROUP BY v),
-        t AS (SELECT SUM(np) AS npos, SUM(n) AS nt FROM m),
-        c AS (SELECT np, n,
-            SUM(np) OVER (ORDER BY v) - np AS befp,
-            SUM(n) OVER (ORDER BY v) - n AS bef
-          FROM m)
-        SELECT CAST(t.nt AS BIGINT) AS n, CAST(t.npos AS BIGINT)
-            AS n_pos,
-          ROUND(SUM(CAST(c.np AS DOUBLE) / t.npos
-            * (CAST(t.npos - c.befp AS DOUBLE)
-              / CAST(t.nt - c.bef AS DOUBLE))), 6) AS ap
-        FROM c CROSS JOIN t GROUP BY t.nt, t.npos"""
 
   /** Equalized-odds fairness audit: per protected group the TPR and
     * FPR at a fixed decision, plus the max pairwise gaps — the
@@ -325,21 +197,6 @@ object EvalExtras {
       .orderBy("group")
   }
 
-  /** DuckDB twin of [[equalizedOdds]]; `srcCte` yields (g, p, l). */
-  def equalizedOddsOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        per AS (SELECT g AS "group", COUNT(*) AS n,
-            CAST(SUM(p * l) AS DOUBLE)
-              / (SUM(p * l) + SUM((1 - p) * l)) AS tpr,
-            CAST(SUM(p * (1 - l)) AS DOUBLE)
-              / (SUM(p * (1 - l)) + SUM((1 - p) * (1 - l))) AS fpr
-          FROM src GROUP BY g),
-        gaps AS (SELECT MAX(tpr) - MIN(tpr) AS tg,
-            MAX(fpr) - MIN(fpr) AS fg FROM per)
-        SELECT "group", n, ROUND(tpr, 6) AS tpr, ROUND(fpr, 6) AS fpr,
-          ROUND(tg, 6) AS tpr_gap, ROUND(fg, 6) AS fpr_gap
-        FROM per CROSS JOIN gaps ORDER BY "group""""
-
   /** Split-half reliability with the Spearman-Brown step-up: each
     * entity's measurements split by a deterministic parity rule into
     * two half-scores (decimal-exact means), Pearson r between the
@@ -368,26 +225,6 @@ object EvalExtras {
         round(lit(2.0) * col("__r") / (lit(1.0) + col("__r")), 6)
           .as("spearman_brown"))
   }
-
-  /** DuckDB twin of [[splitHalfReliability]]; `srcCte` yields
-    * (id, item, v). */
-  def splitHalfReliabilityOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        per AS (SELECT id,
-            CAST(SUM(CASE WHEN item % 2 = 0 THEN
-                CAST(v AS DECIMAL(18,2)) END) AS DOUBLE)
-              / SUM(CASE WHEN item % 2 = 0 THEN 1 END) AS h1,
-            CAST(SUM(CASE WHEN item % 2 <> 0 THEN
-                CAST(v AS DECIMAL(18,2)) END) AS DOUBLE)
-              / SUM(CASE WHEN item % 2 <> 0 THEN 1 END) AS h2
-          FROM src WHERE v IS NOT NULL GROUP BY id),
-        ok AS (SELECT * FROM per WHERE h1 IS NOT NULL
-          AND h2 IS NOT NULL)
-        SELECT COUNT(*) AS n_entities,
-          ROUND(corr(h1, h2), 6) AS half_corr,
-          ROUND(2.0 * corr(h1, h2) / (1.0 + corr(h1, h2)), 6)
-            AS spearman_brown
-        FROM ok"""
 
   /** Best decision stump by Gini impurity over every distinct
     * threshold in one pass: split at v (left = score < v), weighted
@@ -443,36 +280,6 @@ object EvalExtras {
         round(col("__w.__pr"), 6).as("p_right"))
   }
 
-  /** DuckDB twin of [[giniStump]]; `srcCte` yields (f, l). */
-  def giniStumpOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT CAST(f AS DOUBLE) AS v,
-            CAST(l AS INT) AS l FROM ($srcCte)
-          WHERE f IS NOT NULL AND NOT isnan(CAST(f AS DOUBLE))),
-        m AS (SELECT v, COUNT(*) AS n, SUM(l) AS np FROM src
-          GROUP BY v),
-        t AS (SELECT SUM(np) AS tp, SUM(n) AS nt FROM m),
-        c AS (SELECT v,
-            SUM(n) OVER (ORDER BY v) - n AS bef,
-            SUM(np) OVER (ORDER BY v) - np AS befp
-          FROM m),
-        g AS (SELECT c.v AS score, c.bef, c.befp, t.nt, t.tp
-          FROM c CROSS JOIN t WHERE c.bef > 0),
-        sc AS (SELECT score, bef, befp, nt, tp,
-            CAST(CAST(befp AS HUGEINT) * (bef - befp) AS DOUBLE)
-                / CAST(bef AS DOUBLE)
-              + CAST(CAST(tp - befp AS HUGEINT)
-                  * ((nt - bef) - (tp - befp)) AS DOUBLE)
-                / CAST(nt - bef AS DOUBLE) AS f
-          FROM g)
-        SELECT ROUND(score, 6) AS threshold,
-          CAST(bef AS BIGINT) AS n_left,
-          CAST(nt - bef AS BIGINT) AS n_right,
-          ROUND(2.0 * f / CAST(nt AS DOUBLE), 6) AS gini,
-          ROUND(CAST(befp AS DOUBLE) / CAST(bef AS DOUBLE), 6) AS p_left,
-          ROUND(CAST(tp - befp AS DOUBLE) / CAST(nt - bef AS DOUBLE), 6)
-            AS p_right
-        FROM sc ORDER BY f, score LIMIT 1"""
-
   /** Linear calibration audit: calibration-in-the-large
     * (mean(pred) − rate) and the linear calibration slope/intercept
     * of label ~ pred (the linear-probability cousin of logistic
@@ -503,27 +310,6 @@ object EvalExtras {
       round(slope, 6).as("cal_slope"),
       round(ml - slope * mp, 6).as("cal_intercept"))
   }
-
-  /** DuckDB twin of [[linearCalibration]]; `srcCte` yields (p, l). */
-  def linearCalibrationOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT
-            CAST(ROUND(CAST(p AS DOUBLE), 6) AS DECIMAL(10,6)) AS p,
-            CAST(l AS BIGINT) AS l
-          FROM ($srcCte) WHERE p IS NOT NULL),
-        g AS (SELECT COUNT(*) AS n, CAST(SUM(p) AS DOUBLE) AS sp,
-            CAST(SUM(l) AS DOUBLE) AS sl,
-            CAST(SUM(p * p) AS DOUBLE) AS spp,
-            CAST(SUM(CASE WHEN l = 1 THEN p END) AS DOUBLE) AS spl
-          FROM src),
-        c AS (SELECT n, CAST(n AS DOUBLE) AS nd, sp / n AS mp,
-            sl / n AS ml, spp, spl FROM g),
-        s2 AS (SELECT n, mp, ml,
-            (spl - nd * mp * ml) / (spp - nd * mp * mp) AS slope
-          FROM c)
-        SELECT n, ROUND(mp, 6) AS mean_pred, ROUND(ml, 6) AS base_rate,
-          ROUND(mp - ml, 6) AS citl, ROUND(slope, 6) AS cal_slope,
-          ROUND(ml - slope * mp, 6) AS cal_intercept
-        FROM s2"""
 
   /** Partial AUC in the screening regime: trapezoid ROC area over the
     * threshold steps whose cumulative FPR stays within `maxFprPct`% —
@@ -571,37 +357,4 @@ object EvalExtras {
           try_divide(col("__afpr").cast("double"),
             col("__nn").cast("double"))), 6).as("pauc_norm"))
   }
-
-  /** DuckDB twin of [[partialAuc]]; `srcCte` yields (s, y). */
-  def partialAucOracleSql(srcCte: String,
-                          maxFprPct: Int = 10): String =
-    s"""WITH base AS (SELECT CAST(s AS DOUBLE) AS s,
-            CASE WHEN CAST(y AS INT) = 1 THEN 1 ELSE 0 END AS y
-          FROM ($srcCte) WHERE s IS NOT NULL AND y IS NOT NULL),
-        cells AS (SELECT s, COUNT(*) AS c, SUM(y) AS p
-          FROM base GROUP BY s),
-        tot AS (SELECT SUM(c) AS nt, SUM(p) AS np FROM cells),
-        cum AS (SELECT s, c, p,
-            SUM(c) OVER (ORDER BY s DESC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cge,
-            SUM(p) OVER (ORDER BY s DESC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pge
-          FROM cells),
-        g AS (SELECT ANY_VALUE(tot.nt) AS n, ANY_VALUE(tot.np) AS np,
-            ANY_VALUE(tot.nt - tot.np) AS nn,
-            COALESCE(MAX(CASE WHEN (cge - pge) * 100
-              <= (tot.nt - tot.np) * $maxFprPct
-              THEN cge - pge END), 0) AS afpr,
-            CAST(COALESCE(SUM(CASE WHEN (cge - pge) * 100
-                <= (tot.nt - tot.np) * $maxFprPct THEN
-              CAST(c - p AS DECIMAL(19,0))
-                * CAST(2 * pge - p AS DECIMAL(19,0)) END),
-              CAST(0 AS DECIMAL(38,0))) AS DOUBLE) AS num
-          FROM cum CROSS JOIN tot)
-        SELECT CAST(n AS BIGINT) AS n, CAST(np AS BIGINT) AS n_pos,
-          ROUND(CAST(afpr AS DOUBLE) / nn, 6) AS achieved_fpr,
-          ROUND(num / (2.0 * nn * np), 6) AS pauc,
-          ROUND((num / (2.0 * nn * np))
-            / (CAST(afpr AS DOUBLE) / nn), 6) AS pauc_norm
-        FROM g"""
 }

@@ -197,40 +197,6 @@ object Experiments {
         round(col("__att"), 6).as("att"))
   }
 
-  /** DuckDB twin of [[stratifiedAte]]; `unitsCte` must yield
-    * (treated, y, x). */
-  def stratifiedAteOracleSql(unitsCte: String, nStrata: Int = 5): String =
-    s"""WITH units AS ($unitsCte),
-        u AS (SELECT CAST(treated AS INT) AS t,
-            CAST(y AS DECIMAL(18,2)) AS y, CAST(x AS DOUBLE) AS x
-          FROM units WHERE y IS NOT NULL AND x IS NOT NULL),
-        byv AS (SELECT x, COUNT(*) AS c FROM u GROUP BY x),
-        smap AS (SELECT x,
-            CAST(FLOOR(COALESCE(SUM(c) OVER (ORDER BY x
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-              * $nStrata / (SELECT SUM(c) FROM byv)) AS INT) + 1
-              AS stratum
-          FROM byv),
-        g AS (SELECT stratum, COUNT(*) AS n,
-            CAST(SUM(t) AS BIGINT) AS n_treated,
-            SUM(CASE WHEN t = 1 THEN y END) AS st,
-            SUM(CASE WHEN t = 0 THEN y END) AS sc
-          FROM u JOIN smap USING (x) GROUP BY stratum),
-        sc2 AS (SELECT stratum, n, n_treated,
-            CAST(st AS DOUBLE) / n_treated AS mt,
-            CAST(sc AS DOUBLE) / (n - n_treated) AS mc,
-            CASE WHEN n_treated > 0 AND n_treated < n THEN
-              CAST(st AS DOUBLE) / n_treated -
-                CAST(sc AS DOUBLE) / (n - n_treated) END AS diff
-          FROM g),
-        tot AS (SELECT SUM(diff * n) / SUM(n) AS ate,
-            SUM(diff * n_treated) / SUM(n_treated) AS att
-          FROM sc2 WHERE diff IS NOT NULL)
-        SELECT stratum, n, n_treated, ROUND(mt, 6) AS mean_treated,
-          ROUND(mc, 6) AS mean_control, ROUND(diff, 6) AS diff,
-          ROUND(ate, 6) AS ate, ROUND(att, 6) AS att
-        FROM sc2 CROSS JOIN tot"""
-
   /** Delta-method confidence interval for a RATIO metric per arm —
     * revenue per session, clicks per impression: any metric whose
     * denominator varies per unit, where the naive mean-of-ratios and
@@ -270,37 +236,6 @@ object Experiments {
       round(r - lit(1.96) * se, 6).as("ci_lo"),
       round(r + lit(1.96) * se, 6).as("ci_hi"))
   }
-
-  /** DuckDB twin of [[ratioMetricCi]]; `unitsCte` must yield
-    * (arm, y, x). */
-  def ratioMetricCiOracleSql(unitsCte: String): String =
-    s"""WITH units AS ($unitsCte),
-        g AS (SELECT arm, COUNT(*) AS n,
-            SUM(CAST(y AS DECIMAL(18,2))) AS sy,
-            SUM(CAST(x AS DECIMAL(18,2))) AS sx,
-            SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS syy,
-            SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS sxx,
-            SUM(CAST(y AS DOUBLE) * CAST(x AS DOUBLE)) AS syx
-          FROM units GROUP BY arm),
-        sc AS (SELECT arm, n,
-            CAST(sy AS DOUBLE) AS syd, CAST(sx AS DOUBLE) AS sxd,
-            CAST(sy AS DOUBLE) / n AS my, CAST(sx AS DOUBLE) / n AS mx,
-            CAST(sy AS DOUBLE) / CAST(sx AS DOUBLE) AS r,
-            syy, sxx, syx
-          FROM g),
-        v AS (SELECT arm, n, syd, sxd, r,
-            CASE WHEN n >= 2 AND sxd != 0 THEN
-              SQRT(GREATEST((
-                (syy - n * my * my) / (n - 1)
-                - 2 * r * ((syx - n * my * mx) / (n - 1))
-                + r * r * ((sxx - n * mx * mx) / (n - 1)))
-                / (n * mx * mx), 0)) END AS se
-          FROM sc)
-        SELECT arm, n, syd AS num_total, sxd AS den_total,
-          ROUND(r, 6) AS ratio, ROUND(se, 6) AS se,
-          ROUND(r - 1.96 * se, 6) AS ci_lo,
-          ROUND(r + 1.96 * se, 6) AS ci_hi
-        FROM v"""
 
   /** Nearest-neighbor CALIPER MATCHING on a scalar covariate — the
     * third leg of the observational stool after [[stratifiedAte]]
@@ -368,54 +303,6 @@ object Experiments {
         .as("mean_matched_control"))
   }
 
-  /** DuckDB twin of [[caliperMatch]]; `unitsCte` must yield
-    * (treated, y, x). */
-  def caliperMatchOracleSql(unitsCte: String, caliper: Double): String =
-    s"""WITH units AS ($unitsCte),
-        u AS (SELECT CAST(treated AS INT) AS t, y,
-            CAST(x AS DOUBLE) AS x
-          FROM units WHERE y IS NOT NULL AND x IS NOT NULL),
-        byx AS (SELECT x,
-            SUM(CASE WHEN t = 1 THEN 1 ELSE 0 END) AS nt,
-            SUM(CASE WHEN t = 1 THEN CAST(y AS DECIMAL(18,2)) END) AS syt,
-            MAX(CASE WHEN t = 0 THEN CAST(y AS DOUBLE) END) AS cyrep
-          FROM u GROUP BY x),
-        w AS (SELECT x, nt, syt,
-            LAST_VALUE(CASE WHEN cyrep IS NOT NULL THEN x END IGNORE NULLS)
-              OVER (ORDER BY x
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS bx,
-            LAST_VALUE(cyrep IGNORE NULLS)
-              OVER (ORDER BY x
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS by,
-            FIRST_VALUE(CASE WHEN cyrep IS NOT NULL THEN x END IGNORE NULLS)
-              OVER (ORDER BY x
-                ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS fx,
-            FIRST_VALUE(cyrep IGNORE NULLS)
-              OVER (ORDER BY x
-                ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS fy
-          FROM byx),
-        m AS (SELECT x, nt, syt,
-            CASE WHEN bx IS NOT NULL AND (fx IS NULL OR x - bx <= fx - x)
-              THEN by ELSE fy END AS cy,
-            CASE WHEN bx IS NOT NULL AND (fx IS NULL OR x - bx <= fx - x)
-              THEN x - bx ELSE fx - x END AS d
-          FROM w WHERE nt > 0),
-        s AS (SELECT nt, syt, cy,
-            (cy IS NOT NULL AND d <= $caliper) AS ok
-          FROM m)
-        SELECT CAST(SUM(nt) AS BIGINT) AS n_treated,
-          CAST(SUM(CASE WHEN ok THEN nt ELSE 0 END) AS BIGINT)
-            AS n_matched,
-          ROUND((SUM(CASE WHEN ok THEN CAST(syt AS DOUBLE) END)
-              - SUM(CASE WHEN ok THEN nt ELSE 0 END * cy))
-            / SUM(CASE WHEN ok THEN nt ELSE 0 END), 6) AS att,
-          ROUND(SUM(CASE WHEN ok THEN CAST(syt AS DOUBLE) END)
-            / SUM(CASE WHEN ok THEN nt ELSE 0 END), 6) AS mean_treated,
-          ROUND(SUM(CASE WHEN ok THEN nt ELSE 0 END * cy)
-            / SUM(CASE WHEN ok THEN nt ELSE 0 END), 6)
-            AS mean_matched_control
-        FROM s"""
-
   /** Raking / iterative proportional fitting (Deming & Stephan 1940):
     * calibrate per-cell sample weights so the weighted sample margins
     * match the POPULATION margins on two categorical dimensions — the
@@ -461,38 +348,6 @@ object Experiments {
       round(col("n_sample") * col("__w"), 6).as("weighted_n"))
   }
 
-  /** DuckDB twin of [[rakeWeights]]; `sampleCte`/`popCte` must yield
-    * (r, c). The IPF cycles are unrolled identically. */
-  def rakeWeightsOracleSql(sampleCte: String, popCte: String,
-                           iters: Int = 3): String = {
-    val rounds = (1 to iters).map { t =>
-      s"""tr$t AS (SELECT r, SUM(n_sample * w) AS tr
-            FROM w${t - 1} GROUP BY r),
-          wr$t AS (SELECT w.r, w.c, w.n_sample, w.pr, w.pc,
-              w.w * w.pr / tr$t.tr AS w
-            FROM w${t - 1} w JOIN tr$t ON w.r = tr$t.r),
-          tc$t AS (SELECT c, SUM(n_sample * w) AS tc
-            FROM wr$t GROUP BY c),
-          w$t AS (SELECT w.r, w.c, w.n_sample, w.pr, w.pc,
-              w.w * w.pc / tc$t.tc AS w
-            FROM wr$t w JOIN tc$t ON w.c = tc$t.c)"""
-    }.mkString(",\n")
-    s"""WITH s AS ($sampleCte), p AS ($popCte),
-        popr AS (SELECT r, CAST(COUNT(*) AS DOUBLE) AS pr
-          FROM p GROUP BY r),
-        popc AS (SELECT c, CAST(COUNT(*) AS DOUBLE) AS pc
-          FROM p GROUP BY c),
-        w0 AS (SELECT s.r, s.c, COUNT(*) AS n_sample,
-            ANY_VALUE(popr.pr) AS pr, ANY_VALUE(popc.pc) AS pc, 1.0 AS w
-          FROM s JOIN popr ON s.r = popr.r JOIN popc ON s.c = popc.c
-          GROUP BY s.r, s.c),
-        $rounds
-        SELECT r, c, CAST(n_sample AS BIGINT) AS n_sample,
-          ROUND(w, 6) AS weight,
-          ROUND(n_sample * w, 6) AS weighted_n
-        FROM w$iters"""
-  }
-
   /** Quantile treatment effects: the per-decile difference between
     * the treated and control outcome distributions — WHERE the effect
     * lives (bottom lift vs top-tail lift), which the single ATE
@@ -522,25 +377,6 @@ object Experiments {
         round(col("q_ctrl"), 6).as("q_ctrl"),
         round(col("q_treat") - col("q_ctrl"), 6).as("qte"))
       .orderBy("p")
-  }
-
-  /** DuckDB twin of [[quantileTreatmentEffects]]; `unitsCte` must
-    * yield (g, v). */
-  def qteOracleSql(unitsCte: String, treatGroup: String,
-                   ctrlGroup: String): String = {
-    val ps = (1 to 9).map(_ / 10.0).mkString("[", ", ", "]")
-    s"""WITH base AS (SELECT g, CAST(v AS DOUBLE) AS v FROM ($unitsCte)
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))
-            AND g IN ('$treatGroup', '$ctrlGroup')),
-        qt AS (SELECT quantile_cont(v, $ps) AS q FROM base
-          WHERE g = '$treatGroup'),
-        qc AS (SELECT quantile_cont(v, $ps) AS q FROM base
-          WHERE g = '$ctrlGroup'),
-        ix AS (SELECT UNNEST(range(1, 10)) AS i)
-        SELECT CAST(i AS DOUBLE) / 10.0 AS p, ROUND(qt.q[i], 6) AS q_treat,
-          ROUND(qc.q[i], 6) AS q_ctrl,
-          ROUND(qt.q[i] - qc.q[i], 6) AS qte
-        FROM ix CROSS JOIN qt CROSS JOIN qc ORDER BY p"""
   }
 
   /** Exact Bayesian A/B read-out for binary outcomes under uniform
@@ -619,52 +455,6 @@ object Experiments {
       round(least(col("p"), lit(1.0)), 6).as("prob_b_beats_a"))
   }
 
-  /** DuckDB twin of [[bayesianAb]]; `unitsCte` must yield (arm, conv).
-    * Builds the identical log-factorial ladder and Cook sum. */
-  def bayesianAbOracleSql(unitsCte: String, armA: String,
-                          armB: String): String =
-    s"""WITH units AS (SELECT * FROM ($unitsCte)
-          WHERE arm IN ('$armA', '$armB') AND conv IS NOT NULL),
-        cts AS (SELECT
-            CAST(SUM(CASE WHEN arm = '$armA' THEN 1 ELSE 0 END)
-              AS BIGINT) AS na,
-            CAST(SUM(CASE WHEN arm = '$armA' AND conv = 1 THEN 1 ELSE 0
-              END) AS BIGINT) AS sa,
-            CAST(SUM(CASE WHEN arm = '$armB' THEN 1 ELSE 0 END)
-              AS BIGINT) AS nb,
-            CAST(SUM(CASE WHEN arm = '$armB' AND conv = 1 THEN 1 ELSE 0
-              END) AS BIGINT) AS sb
-          FROM units),
-        par AS (SELECT na, sa, nb, sb, 1 + sa AS aa, 1 + na - sa AS ba,
-            1 + sb AS ab, 1 + nb - sb AS bb FROM cts),
-        lf AS MATERIALIZED (SELECT i,
-            SUM(LN(GREATEST(i, 1))) OVER (ORDER BY i
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lf
-          FROM (SELECT UNNEST(range(0,
-            (SELECT aa + ab + ba + bb FROM par) + 1)) AS i)),
-        ks AS (SELECT UNNEST(range(0, (SELECT ab FROM par))) AS i),
-        t AS (SELECT
-            (l1.lf + lbab.lf - l3.lf
-              - LN(CAST(par.bb AS DOUBLE) + ks.i)
-              - (l2.lf + lbb.lf - l4.lf)
-              - (laa.lf + lba.lf - laba.lf)) AS lt
-          FROM ks CROSS JOIN par
-          JOIN lf l1 ON l1.i = par.aa - 1 + ks.i
-          JOIN lf l2 ON l2.i = ks.i
-          JOIN lf l3 ON l3.i = par.aa + par.ba + par.bb - 1 + ks.i
-          JOIN lf l4 ON l4.i = ks.i + par.bb
-          JOIN lf lbab ON lbab.i = par.ba + par.bb - 1
-          JOIN lf lbb ON lbb.i = par.bb - 1
-          JOIN lf laa ON laa.i = par.aa - 1
-          JOIN lf lba ON lba.i = par.ba - 1
-          JOIN lf laba ON laba.i = par.aa + par.ba - 1)
-        SELECT par.na AS n_a, par.sa AS s_a, par.nb AS n_b, par.sb AS s_b,
-          ROUND(CAST(par.aa AS DOUBLE) / (par.aa + par.ba), 6) AS mean_a,
-          ROUND(CAST(par.ab AS DOUBLE) / (par.ab + par.bb), 6) AS mean_b,
-          ROUND(LEAST((SELECT SUM(EXP(lt)) FROM t), 1.0), 6)
-            AS prob_b_beats_a
-        FROM par"""
-
   /** Effective sample size and Kish design effect per group under a
     * row-weight column: ESS = (Σw)²/Σw², deff = n·Σw²/(Σw)² — the
     * "how many docs is this weighted corpus really worth" read-out
@@ -693,20 +483,6 @@ object Experiments {
           (col("__s1") * col("__s1")), 6).as("deff"))
       .orderBy("group")
   }
-
-  /** DuckDB twin of [[essProfile]]; `srcCte` must yield (g, w). */
-  def essProfileOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        g AS (SELECT g AS "group", COUNT(*) AS n,
-            CAST(SUM(CAST(w AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-            CAST(SUM(CAST(w AS DECIMAL(18,2))
-              * CAST(w AS DECIMAL(18,2))) AS DOUBLE) AS s2
-          FROM src WHERE w IS NOT NULL AND CAST(w AS DOUBLE) > 0
-          GROUP BY g)
-        SELECT "group", n, ROUND(s1, 6) AS sum_w,
-          ROUND(s1 * s1 / s2, 6) AS ess,
-          ROUND(CAST(n AS DOUBLE) * s2 / (s1 * s1), 6) AS deff
-        FROM g ORDER BY "group""""
 
   /** TOST equivalence test (two one-sided Welch z-tests against a
     * ±margin): the A/B question significance tests cannot answer —
@@ -748,39 +524,4 @@ object Experiments {
       round(tUp, 6).as("t_upper"),
       (tLo > zCrit && tUp < -zCrit).as("equivalent"))
   }
-
-  /** DuckDB twin of [[tostEquivalence]]; `srcCte` yields (arm, v). */
-  def tostEquivalenceOracleSql(srcCte: String, armA: String,
-                               armB: String, margin: Double,
-                               zCrit: Double = 1.644854): String =
-    s"""WITH src AS (SELECT arm, CAST(v AS DECIMAL(18,2)) AS v
-          FROM ($srcCte)
-          WHERE v IS NOT NULL AND arm IN ('$armA', '$armB')),
-        g AS (SELECT
-            CAST(SUM(CASE WHEN arm = '$armA' THEN 1 ELSE 0 END)
-              AS BIGINT) AS na,
-            CAST(SUM(CASE WHEN arm = '$armB' THEN 1 ELSE 0 END)
-              AS BIGINT) AS nb,
-            CAST(SUM(CASE WHEN arm = '$armA' THEN v END) AS DOUBLE)
-              AS sa,
-            CAST(SUM(CASE WHEN arm = '$armB' THEN v END) AS DOUBLE)
-              AS sb,
-            CAST(SUM(CASE WHEN arm = '$armA' THEN v * v END) AS DOUBLE)
-              AS qa,
-            CAST(SUM(CASE WHEN arm = '$armB' THEN v * v END) AS DOUBLE)
-              AS qb
-          FROM src),
-        c AS (SELECT na, nb,
-            sa / na - sb / nb AS diff,
-            SQRT(((qa - na * (sa / na) * (sa / na)) / (na - 1)) / na
-              + ((qb - nb * (sb / nb) * (sb / nb)) / (nb - 1)) / nb)
-              AS se
-          FROM g)
-        SELECT na AS n_a, nb AS n_b, ROUND(diff, 6) AS diff,
-          ROUND(se, 6) AS se,
-          ROUND((diff + $margin) / se, 6) AS t_lower,
-          ROUND((diff - $margin) / se, 6) AS t_upper,
-          ((diff + $margin) / se > $zCrit
-            AND (diff - $margin) / se < -$zCrit) AS equivalent
-        FROM c"""
 }

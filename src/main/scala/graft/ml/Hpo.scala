@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, StructField, StructType}
@@ -153,8 +154,9 @@ object Hpo {
         .transform(test)
         .select(col(idCol), col(target), col("prediction"))
     }
-    oof.agg(sqrt(avg(pow(col(target) - col("prediction"), 2))).as("rmse"))
+    try oof.agg(sqrt(avg(pow(col(target) - col("prediction"), 2))).as("rmse"))
       .head.getDouble(0)
+    finally Checkpoints.release(oof)
   }
 
   /** Classifier trial function: out-of-fold accuracy (use mode = "max").
@@ -170,7 +172,8 @@ object Hpo {
       Models.labelPredictions(m.transform(test), Models.classLabels(m), confidence = false)
         .select(col(idCol), col(target), col("prediction"))
     }
-    oof.agg(avg(when(col(target) === col("prediction"), 1.0).otherwise(0.0)))
+    try oof.agg(avg(when(col(target) === col("prediction"), 1.0).otherwise(0.0)))
       .head.getDouble(0)
+    finally Checkpoints.release(oof)
   }
 }

@@ -129,54 +129,6 @@ object InfoGain {
         round(col("__gp") - col("gini_split"), 6).as("gain"))
   }
 
-  /** DuckDB twin of [[bestSplit]]; `srcCte` must yield (x, y). The
-    * thresholds are re-derived with the same quantile/rounding rule. */
-  def bestSplitOracleSql(srcCte: String, candidates: Int = 19): String = {
-    val ps = (1 to candidates).map(_.toDouble / (candidates + 1))
-      .mkString("[", ", ", "]")
-    s"""WITH base AS (SELECT CAST(x AS DOUBLE) AS x,
-            CAST(y AS BIGINT) AS y FROM ($srcCte)
-          WHERE x IS NOT NULL AND y IS NOT NULL
-            AND NOT isnan(CAST(x AS DOUBLE))),
-        th AS (SELECT DISTINCT ROUND(UNNEST(
-            quantile_cont(x, $ps)), 6) AS t FROM base),
-        tot AS (SELECT COUNT(*) AS n, SUM(y) AS p FROM base),
-        sp AS (SELECT th.t,
-            SUM(CASE WHEN base.x <= th.t THEN 1 ELSE 0 END) AS nl,
-            SUM(CASE WHEN base.x <= th.t THEN base.y ELSE 0 END) AS pl
-          FROM base CROSS JOIN th GROUP BY th.t),
-        sc AS (SELECT t, nl, tot.n - nl AS nr, pl, tot.p - pl AS pr,
-            tot.n AS n, tot.p AS p
-          FROM sp CROSS JOIN tot),
-        gn AS (SELECT t, nl, nr,
-            CASE WHEN n > 0 THEN 1.0
-              - (CAST(p AS DOUBLE)/CAST(n AS DOUBLE))
-                * (CAST(p AS DOUBLE)/CAST(n AS DOUBLE))
-              - (1.0 - CAST(p AS DOUBLE)/CAST(n AS DOUBLE))
-                * (1.0 - CAST(p AS DOUBLE)/CAST(n AS DOUBLE))
-              ELSE 0.0 END AS gp,
-            CAST(nl AS DOUBLE)/CAST(n AS DOUBLE) *
-              (CASE WHEN nl > 0 THEN 1.0
-                - (CAST(pl AS DOUBLE)/CAST(nl AS DOUBLE))
-                  * (CAST(pl AS DOUBLE)/CAST(nl AS DOUBLE))
-                - (1.0 - CAST(pl AS DOUBLE)/CAST(nl AS DOUBLE))
-                  * (1.0 - CAST(pl AS DOUBLE)/CAST(nl AS DOUBLE))
-                ELSE 0.0 END) +
-            CAST(nr AS DOUBLE)/CAST(n AS DOUBLE) *
-              (CASE WHEN nr > 0 THEN 1.0
-                - (CAST(pr AS DOUBLE)/CAST(nr AS DOUBLE))
-                  * (CAST(pr AS DOUBLE)/CAST(nr AS DOUBLE))
-                - (1.0 - CAST(pr AS DOUBLE)/CAST(nr AS DOUBLE))
-                  * (1.0 - CAST(pr AS DOUBLE)/CAST(nr AS DOUBLE))
-                ELSE 0.0 END) AS gs
-          FROM sc)
-        SELECT t AS threshold, CAST(nl AS BIGINT) AS n_left,
-          CAST(nr AS BIGINT) AS n_right,
-          ROUND(gp, 6) AS gini_parent, ROUND(gs, 6) AS gini_split,
-          ROUND(gp - gs, 6) AS gain
-        FROM gn ORDER BY gs, t LIMIT 1"""
-  }
-
   /** Gini split sweep over MANY pre-binned features at once: for each
     * feature, the binary split (bins ≤ t vs > t) with the largest
     * Gini-impurity decrease against a binary label — q412's stump,
@@ -228,46 +180,5 @@ object InfoGain {
         round(first("__parent"), 6).as("gini_parent"),
         round(first("__mx"), 6).as("gini_decrease"))
       .orderBy("feature")
-  }
-
-  /** DuckDB twin of [[giniSweep]] over `table`; features must cast
-    * to BIGINT bins. */
-  def giniSweepOracleSql(table: String, features: Seq[String],
-                         labelExpr: String): String = {
-    val unions = features.map(f =>
-      s"""SELECT '$f' AS f, CAST($f AS BIGINT) AS b,
-           CASE WHEN $labelExpr = 1 THEN 1 ELSE 0 END AS y
-         FROM $table WHERE ($labelExpr) IS NOT NULL
-           AND CAST($f AS BIGINT) IS NOT NULL""")
-      .mkString("\n UNION ALL ")
-    s"""WITH stacked AS ($unions),
-        bins AS (SELECT f, b, COUNT(*) AS n, SUM(y) AS p
-          FROM stacked GROUP BY f, b),
-        cum AS (SELECT f, b,
-            SUM(n) OVER (PARTITION BY f ORDER BY b) AS cn,
-            SUM(p) OVER (PARTITION BY f ORDER BY b) AS cp,
-            SUM(n) OVER (PARTITION BY f) AS tn,
-            SUM(p) OVER (PARTITION BY f) AS tp
-          FROM bins),
-        sc AS (SELECT f, b, tn,
-            2.0 * (CAST(tp AS DOUBLE) / tn)
-              * (1.0 - CAST(tp AS DOUBLE) / tn) AS parent,
-            2.0 * (CAST(tp AS DOUBLE) / tn)
-              * (1.0 - CAST(tp AS DOUBLE) / tn)
-            - ((CAST(cn AS DOUBLE) / tn)
-                * (2.0 * (CAST(cp AS DOUBLE) / cn)
-                  * (1.0 - CAST(cp AS DOUBLE) / cn))
-              + (CAST(tn - cn AS DOUBLE) / tn)
-                * (2.0 * (CAST(tp - cp AS DOUBLE) / (tn - cn))
-                  * (1.0 - CAST(tp - cp AS DOUBLE) / (tn - cn))))
-              AS dec
-          FROM cum WHERE cn < tn),
-        mx AS (SELECT f, MAX(dec) AS m FROM sc GROUP BY f)
-        SELECT sc.f AS feature, CAST(ANY_VALUE(sc.tn) AS BIGINT) AS n,
-          MIN(sc.b) AS best_bin,
-          ROUND(ANY_VALUE(sc.parent), 6) AS gini_parent,
-          ROUND(ANY_VALUE(mx.m), 6) AS gini_decrease
-        FROM sc JOIN mx ON sc.f = mx.f AND sc.dec = mx.m
-        GROUP BY sc.f ORDER BY feature"""
   }
 }

@@ -83,45 +83,4 @@ object Isotonic {
         round(col("__iso"), 6).as("iso_prob"))
       .orderBy("bucket")
   }
-
-  /** DuckDB twin of [[calibrate]]. `labelExpr` must be a boolean
-    * SQL expression. */
-  def calibrateOracleSql(scoreExpr: String, labelExpr: String,
-                         table: String, buckets: Int = 20): String =
-    s"""WITH src AS (SELECT CAST($scoreExpr AS DOUBLE) AS v,
-            ($labelExpr) AS y
-          FROM $table
-          WHERE $scoreExpr IS NOT NULL
-            AND NOT isnan(CAST($scoreExpr AS DOUBLE))
-            AND ($labelExpr) IS NOT NULL),
-        bounds AS (SELECT MIN(v) AS lo, MAX(v) AS hi FROM src),
-        cells AS (SELECT
-            CASE WHEN hi = lo THEN 0
-                 ELSE CAST(LEAST(FLOOR((v - lo) / ((hi - lo) / $buckets)),
-                   $buckets - 1) AS INT) END AS b,
-            COUNT(*) AS n,
-            CAST(SUM(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT)
-              AS n_pos,
-            SUM(v) AS sv
-          FROM src CROSS JOIN bounds GROUP BY 1),
-        pre AS (SELECT b,
-            CAST(SUM(n) OVER (ORDER BY b) AS BIGINT) AS cw,
-            CAST(SUM(n_pos) OVER (ORDER BY b) AS BIGINT) AS cp
-          FROM cells),
-        iv AS (SELECT jm.b + 1 AS j, k.b AS k,
-            CAST(k.cp - jm.cp AS DOUBLE) / (k.cw - jm.cw) AS a
-          FROM pre k JOIN pre jm ON jm.b < k.b
-          UNION ALL
-          SELECT 0 AS j, b AS k, CAST(cp AS DOUBLE) / cw AS a
-          FROM pre),
-        mk AS (SELECT c.b AS i, iv.j, MIN(iv.a) AS m
-          FROM cells c JOIN iv ON iv.j <= c.b AND iv.k >= c.b
-          GROUP BY c.b, iv.j),
-        iso AS (SELECT i, MAX(m) AS iso FROM mk GROUP BY i)
-        SELECT c.b AS bucket, c.n, c.n_pos,
-          ROUND(c.sv / c.n, 6) AS mean_score,
-          ROUND(CAST(c.n_pos AS DOUBLE) / c.n, 6) AS frac_pos,
-          ROUND(iso.iso, 6) AS iso_prob
-        FROM cells c JOIN iso ON iso.i = c.b
-        ORDER BY bucket"""
 }

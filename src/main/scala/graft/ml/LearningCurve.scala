@@ -83,43 +83,4 @@ object LearningCurve {
         round(lit(1.0) - try_divide(sse, sst), 6).as("r2_test"))
       .orderBy("frac")
   }
-
-  /** DuckDB twin of [[simpleOlsCurve]] — same two-level cell
-    * aggregation so float summation structure matches. */
-  def simpleOlsCurveOracleSql(xExpr: String, yExpr: String,
-                              keyExpr: String, table: String,
-                              fractions: Seq[Int] = Seq(10, 20, 40, 80),
-                              testFrom: Int = 80): String = {
-    val frList = fractions.mkString("[", ", ", "]")
-    s"""WITH b AS (SELECT
-            ((((($keyExpr) % 1000000007) + 1000000007) % 1000000007)
-              * 2654435761) % 100 AS bucket,
-            CAST($xExpr AS DOUBLE) AS x, CAST($yExpr AS DOUBLE) AS y
-          FROM $table
-          WHERE $xExpr IS NOT NULL AND $yExpr IS NOT NULL),
-        cells AS (SELECT bucket, COUNT(*) AS n, SUM(x) AS sx,
-            SUM(y) AS sy, SUM(x*y) AS sxy, SUM(x*x) AS sxx,
-            SUM(y*y) AS syy
-          FROM b GROUP BY bucket),
-        fr AS (SELECT unnest($frList) AS frac),
-        tr AS (SELECT frac, CAST(SUM(n) AS BIGINT) AS tn,
-            SUM(sx) AS tsx, SUM(sy) AS tsy, SUM(sxy) AS tsxy,
-            SUM(sxx) AS tsxx
-          FROM fr JOIN cells ON bucket < frac GROUP BY frac),
-        te AS (SELECT CAST(SUM(n) AS BIGINT) AS hn, SUM(sx) AS hsx,
-            SUM(sy) AS hsy, SUM(sxy) AS hsxy, SUM(sxx) AS hsxx,
-            SUM(syy) AS hsyy
-          FROM cells WHERE bucket >= $testFrom),
-        co AS (SELECT frac, tn, hn, hsx, hsy, hsxy, hsxx, hsyy,
-            (tn * tsxy - tsx * tsy) / (tn * tsxx - tsx * tsx) AS slope,
-            (tsy - ((tn * tsxy - tsx * tsy) /
-              (tn * tsxx - tsx * tsx)) * tsx) / tn AS a
-          FROM tr CROSS JOIN te)
-        SELECT frac, tn AS n_train, hn AS n_test,
-          ROUND(slope, 6) AS slope, ROUND(a, 6) AS intercept,
-          ROUND(1.0 - (hsyy - 2*a*hsy - 2*slope*hsxy + 2*a*slope*hsx
-              + a*a*hn + slope*slope*hsxx)
-            / (hsyy - hsy*hsy/hn), 6) AS r2_test
-        FROM co ORDER BY frac"""
-  }
 }

@@ -91,41 +91,6 @@ object Preference {
     out
   }
 
-  /** DuckDB mirror of [[bradleyTerry]]: `matchesCte` must yield
-    * (item_a, item_b, wins_a, wins_b); the MM rounds unroll as chained
-    * CTEs (the PageRank-oracle pattern, `proximity/Graph.scala:158`).
-    * Every CTE is MATERIALIZED: each round references the previous
-    * strengths TWICE (the pᵢ/pⱼ self-join), so DuckDB's default CTE
-    * inlining would expand the chain 2^iters times — enough to exhaust
-    * file handles re-scanning the base table at iters = 8. */
-  def bradleyTerryOracleSql(matchesCte: String, iters: Int): String = {
-    val rounds = (1 to iters).map { t =>
-      s"""d$t AS MATERIALIZED (SELECT s.i, SUM(s.nij / (pi.p + pj.p)) AS den
-            FROM sym s JOIN p${t - 1} pi ON s.i = pi.i
-            JOIN p${t - 1} pj ON s.j = pj.i GROUP BY s.i),
-          r$t AS MATERIALIZED (SELECT w.i, w.wi / d.den AS raw
-            FROM wins w JOIN d$t d ON w.i = d.i),
-          p$t AS MATERIALIZED (SELECT i,
-            raw / (SELECT SUM(raw) FROM r$t) AS p FROM r$t)"""
-    }.mkString(",\n")
-    s"""WITH m AS MATERIALIZED ($matchesCte),
-        sym AS MATERIALIZED (SELECT i, j, SUM(w) AS w, SUM(nij) AS nij
-          FROM (
-            SELECT item_a AS i, item_b AS j, CAST(wins_a AS DOUBLE) AS w,
-              CAST(wins_a + wins_b AS DOUBLE) AS nij FROM m
-            UNION ALL
-            SELECT item_b, item_a, CAST(wins_b AS DOUBLE),
-              CAST(wins_a + wins_b AS DOUBLE) FROM m) GROUP BY i, j),
-        wins AS MATERIALIZED (SELECT i, SUM(w) AS wi, SUM(nij) AS ni
-          FROM sym GROUP BY i),
-        p0 AS MATERIALIZED (SELECT i,
-          1.0 / (SELECT COUNT(*) FROM wins) AS p FROM wins),
-        $rounds
-        SELECT w.i AS item, CAST(w.ni AS BIGINT) AS n_matches,
-          w.wi AS n_wins, ROUND(p.p, 6) AS strength
-        FROM wins w JOIN p$iters p ON w.i = p.i"""
-  }
-
   /** Position-bias audit over an ORDERED pair log (one row per
     * comparison, `firstCol` shown first): per first-shown item the
     * first-position win rate, against the pooled first-win rate, with
@@ -224,26 +189,4 @@ object Preference {
           (col("__we").cast("double") / (col("__t") * col("__t"))), 6)
           .as("kappa_w"))
   }
-
-  /** DuckDB twin of [[weightedKappa]]; `srcCte` yields (a, b). */
-  def weightedKappaOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT CAST(a AS BIGINT) AS a,
-            CAST(b AS BIGINT) AS b FROM ($srcCte)
-          WHERE a IS NOT NULL AND b IS NOT NULL),
-        cells AS (SELECT a, b, COUNT(*) AS n FROM src GROUP BY a, b),
-        ma AS (SELECT a, SUM(n) AS na FROM cells GROUP BY a),
-        mb AS (SELECT b, SUM(n) AS nb FROM cells GROUP BY b),
-        t AS (SELECT SUM(n) AS tn FROM cells),
-        o AS (SELECT SUM((a - b) * (a - b) * n) AS wo FROM cells),
-        e AS (SELECT SUM((ma.a - mb.b) * (ma.a - mb.b)
-            * ma.na * mb.nb) AS we
-          FROM ma CROSS JOIN mb)
-        SELECT CAST(tn AS BIGINT) AS n,
-          ROUND(CAST(wo AS DOUBLE) / tn, 6) AS po_w,
-          ROUND(CAST(we AS DOUBLE) / (CAST(tn AS DOUBLE) * tn), 6)
-            AS pe_w,
-          ROUND(1.0 - (CAST(wo AS DOUBLE) / tn)
-            / (CAST(we AS DOUBLE) / (CAST(tn AS DOUBLE) * tn)), 6)
-            AS kappa_w
-        FROM t CROSS JOIN o CROSS JOIN e"""
 }

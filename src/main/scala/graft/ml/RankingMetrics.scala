@@ -90,39 +90,4 @@ object RankingMetrics {
         round(coalesce(col("n_overlap"), lit(0L)) / lit(k.toDouble), 6)
           .as("recall_at_k"))
   }
-
-  /** DuckDB mirror of [[evaluate]]: `runsCte` must yield
-    * (query, doc, score, rel). */
-  def evaluateOracleSql(runsCte: String, k: Int): String =
-    s"""WITH runs AS ($runsCte),
-        ranked AS (SELECT query, doc, score, CAST(rel AS INT) AS rel,
-            ROW_NUMBER() OVER (PARTITION BY query
-              ORDER BY score DESC, doc ASC) AS rnk,
-            SUM(CAST(rel AS INT)) OVER (PARTITION BY query
-              ORDER BY score DESC, doc ASC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumrel
-          FROM runs),
-        ideals AS (SELECT n, SUM(1.0 / log2(n + 1))
-            OVER (ORDER BY n ROWS BETWEEN UNBOUNDED PRECEDING
-              AND CURRENT ROW) AS idcg
-          FROM (SELECT UNNEST(range(1, $k + 1)) AS n)),
-        perq AS (SELECT query,
-            COUNT(*) AS n_docs,
-            CAST(SUM(rel) AS BIGINT) AS n_rel,
-            CAST(SUM(CASE WHEN rnk <= $k THEN rel ELSE 0 END) AS DOUBLE)
-              AS relk,
-            COALESCE(MAX(CASE WHEN rel = 1 THEN 1.0 / rnk END), 0.0) AS rr,
-            SUM(CASE WHEN rel = 1
-              THEN CAST(cumrel AS DOUBLE) / rnk END) AS apnum,
-            SUM(CASE WHEN rnk <= $k AND rel = 1
-              THEN 1.0 / log2(rnk + 1) END) AS dcg
-          FROM ranked GROUP BY query)
-        SELECT query, n_docs, n_rel,
-          ROUND(relk / $k, 6) AS p_at_k,
-          CASE WHEN n_rel > 0 THEN ROUND(relk / n_rel, 6) END AS r_at_k,
-          ROUND(rr, 6) AS rr,
-          CASE WHEN n_rel > 0 THEN ROUND(apnum / n_rel, 6) END AS ap,
-          CASE WHEN n_rel > 0
-            THEN ROUND(COALESCE(dcg, 0.0) / i.idcg, 6) END AS ndcg_at_k
-        FROM perq LEFT JOIN ideals i ON LEAST(n_rel, $k) = i.n"""
 }

@@ -55,46 +55,6 @@ object RegressionDiagnostics {
       .select(col("__id").as(idCol), col("leverage"), col("cooks_d"))
   }
 
-  /** DuckDB twin of [[leverageCooks]]; `srcCte` yields (id, x, y). */
-  def leverageCooksOracleSql(srcCte: String, k: Int = 20): String =
-    s"""WITH src AS (SELECT * FROM ($srcCte)
-          WHERE x IS NOT NULL AND y IS NOT NULL),
-        m AS (SELECT COUNT(*) AS n,
-            CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-            CAST(SUM(CAST(y AS DECIMAL(18,2))) AS DOUBLE) AS sy,
-            CAST(SUM(CAST(x AS DECIMAL(18,2))
-              * CAST(x AS DECIMAL(18,2))) AS DOUBLE) AS sxx,
-            CAST(SUM(CAST(x AS DECIMAL(18,2))
-              * CAST(y AS DECIMAL(18,2))) AS DOUBLE) AS sxy,
-            CAST(SUM(CAST(y AS DECIMAL(18,2))
-              * CAST(y AS DECIMAL(18,2))) AS DOUBLE) AS syy
-          FROM src),
-        c AS (SELECT n, CAST(n AS DOUBLE) AS nd, sx / n AS mx,
-            sy / n AS my,
-            sxx - n * (sx / n) * (sx / n) AS cxx,
-            sxy - n * (sx / n) * (sy / n) AS cxy,
-            syy - n * (sy / n) * (sy / n) AS cyy FROM m),
-        c2 AS (SELECT *, cxy / cxx AS b,
-            (cyy - (cxy / cxx) * cxy) / (nd - 2) AS s2 FROM c),
-        r AS (SELECT src.id,
-            ROUND(1.0 / nd + (CAST(src.x AS DOUBLE) - mx)
-              * (CAST(src.x AS DOUBLE) - mx) / cxx, 6) AS leverage,
-            ROUND((CAST(src.y AS DOUBLE) - (my - b * mx)
-                - b * CAST(src.x AS DOUBLE))
-              * (CAST(src.y AS DOUBLE) - (my - b * mx)
-                - b * CAST(src.x AS DOUBLE))
-              * (1.0 / nd + (CAST(src.x AS DOUBLE) - mx)
-                * (CAST(src.x AS DOUBLE) - mx) / cxx)
-              / (2.0 * s2
-                * (1.0 - (1.0 / nd + (CAST(src.x AS DOUBLE) - mx)
-                  * (CAST(src.x AS DOUBLE) - mx) / cxx))
-                * (1.0 - (1.0 / nd + (CAST(src.x AS DOUBLE) - mx)
-                  * (CAST(src.x AS DOUBLE) - mx) / cxx))), 6)
-              AS cooks_d
-          FROM src CROSS JOIN c2)
-        SELECT id, leverage, cooks_d FROM r
-        ORDER BY cooks_d DESC, id LIMIT $k"""
-
   /** Breusch–Pagan heteroscedasticity LM test on simple OLS y ~ x:
     * regress the squared residuals on x, LM = n·R². The OLS line
     * comes from the exact-decimal moment aggregate; residual squares
@@ -125,34 +85,6 @@ object RegressionDiagnostics {
       .select(col("n"), round(col("__r2"), 6).as("r2_aux"),
         round(col("n").cast("double") * col("__r2"), 6).as("lm"))
   }
-
-  /** DuckDB twin of [[breuschPagan]]; `srcCte` must yield (x, y). */
-  def breuschPaganOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT * FROM ($srcCte)
-          WHERE x IS NOT NULL AND y IS NOT NULL),
-        m AS (SELECT COUNT(*) AS n,
-            CAST(SUM(CAST(x AS DECIMAL(18,2))) AS DOUBLE) AS sx,
-            CAST(SUM(CAST(y AS DECIMAL(18,2))) AS DOUBLE) AS sy,
-            CAST(SUM(CAST(x AS DECIMAL(18,2))
-              * CAST(x AS DECIMAL(18,2))) AS DOUBLE) AS sxx,
-            CAST(SUM(CAST(x AS DECIMAL(18,2))
-              * CAST(y AS DECIMAL(18,2))) AS DOUBLE) AS sxy
-          FROM src),
-        c AS (SELECT n, CAST(n AS DOUBLE) AS nd, sx / n AS mx,
-            sy / n AS my,
-            (sxy - n * (sx / n) * (sy / n))
-              / (sxx - n * (sx / n) * (sx / n)) AS b FROM m),
-        u AS (SELECT CAST(src.x AS DOUBLE) AS x,
-            ROUND((CAST(src.y AS DOUBLE) - (my - b * mx)
-              - b * CAST(src.x AS DOUBLE))
-              * (CAST(src.y AS DOUBLE) - (my - b * mx)
-                - b * CAST(src.x AS DOUBLE)), 2) AS uu, c.n
-          FROM src CROSS JOIN c)
-        SELECT ANY_VALUE(n) AS n,
-          ROUND(corr(uu, x) * corr(uu, x), 6) AS r2_aux,
-          ROUND(CAST(ANY_VALUE(n) AS DOUBLE)
-            * (corr(uu, x) * corr(uu, x)), 6) AS lm
-        FROM u"""
 
   /** Exact 2-D PCA from the closed-form 2×2 covariance eigensystem:
     * λ₁,₂ = (σx²+σy²)/2 ± sqrt(((σx²−σy²)/2)² + σxy²), explained
@@ -203,49 +135,6 @@ object RegressionDiagnostics {
       round(when(abs(col("__cxy")) > 0,
         (l1 - col("__vx")) / col("__cxy")), 6).as("axis_slope"))
   }
-
-  /** DuckDB twin of [[pca2d]]; `srcCte` must yield (x, y). */
-  def pca2dOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT
-            CAST(CAST(x AS DECIMAL(18,2)) * 100 AS HUGEINT) AS xc,
-            CAST(CAST(y AS DECIMAL(18,2)) * 100 AS HUGEINT) AS yc
-          FROM ($srcCte)
-          WHERE x IS NOT NULL AND y IS NOT NULL
-            AND NOT isnan(CAST(x AS DOUBLE))
-            AND NOT isnan(CAST(y AS DOUBLE))),
-        mi AS (SELECT COUNT(*) AS n, SUM(xc) AS sx_i, SUM(yc) AS sy_i,
-            SUM(xc * xc) AS sxx_i, SUM(yc * yc) AS syy_i,
-            SUM(xc * yc) AS sxy_i FROM src),
-        mc AS (SELECT n,
-            ${graft.core.Lattice.duckPortableDoubleSigned("sx_i")}
-              / 100.0 AS sx,
-            ${graft.core.Lattice.duckPortableDoubleSigned("sy_i")}
-              / 100.0 AS sy,
-            ${graft.core.Lattice.duckPortableDoubleSigned("sxx_i")}
-              / 10000.0 AS sxx,
-            ${graft.core.Lattice.duckPortableDoubleSigned("syy_i")}
-              / 10000.0 AS syy,
-            ${graft.core.Lattice.duckPortableDoubleSigned("sxy_i")}
-              / 10000.0 AS sxy
-          FROM mi),
-        m AS (SELECT n,
-            (sxx - sx * sx / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE)
-              AS vx,
-            (syy - sy * sy / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE)
-              AS vy,
-            (sxy - sx * sy / CAST(n AS DOUBLE)) / CAST(n AS DOUBLE)
-              AS cxy
-          FROM mc),
-        e AS (SELECT n, vx, vy, cxy,
-            (vx + vy) / 2 + SQRT((vx - vy) * (vx - vy) / 4 + cxy * cxy)
-              AS l1,
-            (vx + vy) / 2 - SQRT((vx - vy) * (vx - vy) / 4 + cxy * cxy)
-              AS l2 FROM m)
-        SELECT n, ROUND(l1, 6) AS lambda1, ROUND(l2, 6) AS lambda2,
-          ROUND(l1 / (l1 + l2), 6) AS evr,
-          ROUND(CASE WHEN ABS(cxy) > 0 THEN (l1 - vx) / cxy END, 6)
-            AS axis_slope
-        FROM e"""
 
   /** Model-order check by AIC: simple y ~ x vs quadratic y ~ x + x².
     * x must sit on an integer lattice (the Jarque–Bera constraint) so
@@ -310,54 +199,4 @@ object RegressionDiagnostics {
       round(aic2, 6).as("aic_quad"),
       round(aic2 - aic1, 6).as("delta_aic"))
   }
-
-  /** DuckDB twin of [[aicQuadratic]]; `srcCte` must yield (x, y). */
-  def aicQuadraticOracleSql(srcCte: String): String =
-    s"""WITH src AS (SELECT
-            CAST(ROUND(CAST(x AS DOUBLE), 0) AS HUGEINT) AS x,
-            CAST(CAST(y AS DECIMAL(18,2)) * 100 AS HUGEINT) AS yc
-          FROM ($srcCte)
-          WHERE x IS NOT NULL AND y IS NOT NULL),
-        gi AS (SELECT COUNT(*) AS n,
-            SUM(x) AS su_i, SUM(x * x) AS sv_i, SUM(yc) AS sy_i,
-            SUM(x * x * x) AS suv_i, SUM(x * x * x * x) AS svv_i,
-            SUM(x * yc) AS syu_i, SUM(x * x * yc) AS syv_i,
-            SUM(yc * yc) AS syy_i
-          FROM src),
-        g AS (SELECT n,
-            ${graft.core.Lattice.duckPortableDouble("su_i")} AS su,
-            ${graft.core.Lattice.duckPortableDouble("sv_i")} AS sv,
-            ${graft.core.Lattice.duckPortableDouble("sy_i")} / 100.0 AS sy,
-            ${graft.core.Lattice.duckPortableDouble("suv_i")} AS suv,
-            ${graft.core.Lattice.duckPortableDouble("svv_i")} AS svv,
-            ${graft.core.Lattice.duckPortableDouble("syu_i")} / 100.0 AS syu,
-            ${graft.core.Lattice.duckPortableDouble("syv_i")} / 100.0 AS syv,
-            ${graft.core.Lattice.duckPortableDouble("syy_i")} / 10000.0 AS syy0
-          FROM gi),
-        c AS (SELECT n, CAST(n AS DOUBLE) AS nd, su / CAST(n AS DOUBLE)
-              AS mu, sv / CAST(n AS DOUBLE) AS mv,
-            sy / CAST(n AS DOUBLE) AS my,
-            sv, svv, suv, syu, syv, syy0 FROM g),
-        c2 AS (SELECT n, nd,
-            sv - nd * mu * mu AS suu, svv - nd * mv * mv AS svvc,
-            suv - nd * mu * mv AS suvc, syu - nd * my * mu AS syuc,
-            syv - nd * my * mv AS syvc, syy0 - nd * my * my AS syyc
-          FROM c),
-        s AS (SELECT n, nd, syyc, suu, syuc,
-            (syuc * svvc - syvc * suvc) / (suu * svvc - suvc * suvc)
-              AS b1,
-            (syvc * suu - syuc * suvc) / (suu * svvc - suvc * suvc)
-              AS b2,
-            syvc FROM c2)
-        SELECT n,
-          ROUND(syyc - syuc * syuc / suu, 6) AS rss_lin,
-          ROUND(syyc - b1 * syuc - b2 * syvc, 6) AS rss_quad,
-          ROUND(nd * LN((syyc - syuc * syuc / suu) / nd) + 4.0, 6)
-            AS aic_lin,
-          ROUND(nd * LN((syyc - b1 * syuc - b2 * syvc) / nd) + 6.0, 6)
-            AS aic_quad,
-          ROUND((nd * LN((syyc - b1 * syuc - b2 * syvc) / nd) + 6.0)
-            - (nd * LN((syyc - syuc * syuc / suu) / nd) + 4.0), 6)
-            AS delta_aic
-        FROM s"""
 }

@@ -84,63 +84,6 @@ object Ridge {
         round((b1 * c1 + b2 * c2) / syyC, 6)).as("explained"))
   }
 
-  /** DuckDB mirror of [[ridge2]]: `rowsCte` must yield
-    * (grp, x1, x2, y). */
-  def ridge2OracleSql(rowsCte: String, lambda: Double): String = {
-    val l = lambda
-    // the same expression tree, spelled once per use exactly as the
-    // Column DSL expands it (moment aliases keep it readable)
-    val pdd = graft.core.Lattice.duckPortableDoubleSigned _
-    val defs =
-      s"""mi AS (SELECT grp, COUNT(*) AS ni,
-            SUM(x1c) AS sx1_i, SUM(x2c) AS sx2_i, SUM(yc) AS sy_i,
-            SUM(x1c * x1c) AS sx1x1_i, SUM(x2c * x2c) AS sx2x2_i,
-            SUM(x1c * x2c) AS sx1x2_i,
-            SUM(x1c * yc) AS sx1y_i, SUM(x2c * yc) AS sx2y_i,
-            SUM(yc * yc) AS syy_i
-          FROM rows0 GROUP BY grp),
-        mm AS (SELECT grp, CAST(ni AS DOUBLE) AS n, ni,
-            ${pdd("sx1_i")} / 100.0 AS sx1,
-            ${pdd("sx2_i")} / 100.0 AS sx2,
-            ${pdd("sy_i")} / 100.0 AS sy,
-            ${pdd("sx1x1_i")} / 10000.0 AS sx1x1,
-            ${pdd("sx2x2_i")} / 10000.0 AS sx2x2,
-            ${pdd("sx1x2_i")} / 10000.0 AS sx1x2,
-            ${pdd("sx1y_i")} / 10000.0 AS sx1y,
-            ${pdd("sx2y_i")} / 10000.0 AS sx2y,
-            ${pdd("syy_i")} / 10000.0 AS syy
-          FROM mi),
-        ex AS (SELECT grp, ni, n,
-            sx1x1 - n * (sx1 / n) * (sx1 / n) + $l AS s11,
-            sx2x2 - n * (sx2 / n) * (sx2 / n) + $l AS s22,
-            sx1x2 - n * (sx1 / n) * (sx2 / n) AS s12,
-            sx1y - n * (sx1 / n) * (sy / n) AS c1,
-            sx2y - n * (sx2 / n) * (sy / n) AS c2,
-            syy - n * (sy / n) * (sy / n) AS syyc,
-            sx1 / n AS m1, sx2 / n AS m2, sy / n AS my
-          FROM mm),
-        sol AS (SELECT grp, ni, n, m1, m2, my, c1, c2, syyc,
-            s11 * s22 - s12 * s12 AS det,
-            (s22 * c1 - s12 * c2) / (s11 * s22 - s12 * s12) AS b1,
-            (s11 * c2 - s12 * c1) / (s11 * s22 - s12 * s12) AS b2
-          FROM ex)"""
-    s"""WITH rows0 AS (SELECT grp,
-            CAST(CAST(x1 AS DECIMAL(18,2)) * 100 AS HUGEINT) AS x1c,
-            CAST(CAST(x2 AS DECIMAL(18,2)) * 100 AS HUGEINT) AS x2c,
-            CAST(CAST(y AS DECIMAL(18,2)) * 100 AS HUGEINT) AS yc
-          FROM ($rowsCte)
-          WHERE x1 IS NOT NULL AND x2 IS NOT NULL AND y IS NOT NULL),
-        $defs
-        SELECT grp AS "group", ni AS n,
-          CASE WHEN ni >= 3 AND det != 0
-            THEN ROUND(my - b1 * m1 - b2 * m2, 6) END AS b0,
-          CASE WHEN ni >= 3 AND det != 0 THEN ROUND(b1, 6) END AS b1,
-          CASE WHEN ni >= 3 AND det != 0 THEN ROUND(b2, 6) END AS b2,
-          CASE WHEN ni >= 3 AND det != 0 AND syyc != 0
-            THEN ROUND((b1 * c1 + b2 * c2) / syyc, 6) END AS explained
-        FROM sol"""
-  }
-
   /** Chow structural-break test for the simple regression y ~ x: did
     * the (intercept, slope) change between the two regimes a boolean
     * split column defines? F = ((SSE_pooled − SSE₁ − SSE₂)/2) /
@@ -201,59 +144,6 @@ object Ridge {
       round(f, 6).as("f_chow"))
   }
 
-  /** DuckDB twin of [[chowTest]]; `srcCte` must yield (x, y, s) with
-    * s the boolean regime flag. */
-  def chowTestOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        m AS (SELECT
-            SUM(CASE WHEN s THEN 1 ELSE 0 END) AS na,
-            SUM(CASE WHEN s THEN CAST(x AS DOUBLE) END) AS sxa,
-            SUM(CASE WHEN s THEN CAST(y AS DOUBLE) END) AS sya,
-            SUM(CASE WHEN s THEN CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-              END) AS sxxa,
-            SUM(CASE WHEN s THEN CAST(y AS DOUBLE) * CAST(y AS DOUBLE)
-              END) AS syya,
-            SUM(CASE WHEN s THEN CAST(x AS DOUBLE) * CAST(y AS DOUBLE)
-              END) AS sxya,
-            SUM(CASE WHEN NOT s THEN 1 ELSE 0 END) AS nb,
-            SUM(CASE WHEN NOT s THEN CAST(x AS DOUBLE) END) AS sxb,
-            SUM(CASE WHEN NOT s THEN CAST(y AS DOUBLE) END) AS syb,
-            SUM(CASE WHEN NOT s THEN CAST(x AS DOUBLE) * CAST(x AS DOUBLE)
-              END) AS sxxb,
-            SUM(CASE WHEN NOT s THEN CAST(y AS DOUBLE) * CAST(y AS DOUBLE)
-              END) AS syyb,
-            SUM(CASE WHEN NOT s THEN CAST(x AS DOUBLE) * CAST(y AS DOUBLE)
-              END) AS sxyb
-          FROM src
-          WHERE x IS NOT NULL AND y IS NOT NULL AND s IS NOT NULL),
-        e AS (SELECT na, nb,
-            CASE WHEN na >= 3 AND sxxa - sxa*sxa/na > 0 THEN
-              (syya - sya*sya/na)
-                - (sxya - sxa*sya/na) * (sxya - sxa*sya/na)
-                  / (sxxa - sxa*sxa/na) END AS ssea,
-            CASE WHEN nb >= 3 AND sxxb - sxb*sxb/nb > 0 THEN
-              (syyb - syb*syb/nb)
-                - (sxyb - sxb*syb/nb) * (sxyb - sxb*syb/nb)
-                  / (sxxb - sxb*sxb/nb) END AS sseb,
-            CASE WHEN na + nb >= 3
-                AND (sxxa+sxxb) - (sxa+sxb)*(sxa+sxb)/(na+nb) > 0 THEN
-              ((syya+syyb) - (sya+syb)*(sya+syb)/(na+nb))
-                - ((sxya+sxyb) - (sxa+sxb)*(sya+syb)/(na+nb))
-                  * ((sxya+sxyb) - (sxa+sxb)*(sya+syb)/(na+nb))
-                  / ((sxxa+sxxb) - (sxa+sxb)*(sxa+sxb)/(na+nb))
-            END AS ssep,
-            (syya+syyb) - (sya+syb)*(sya+syb)/(na+nb) AS syyc
-          FROM m)
-        SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-          ROUND(CASE WHEN syyc > 0 THEN 1 - ssep / syyc END, 6)
-            AS r2_pooled,
-          ROUND(CASE WHEN syyc > 0 THEN 1 - (ssea + sseb) / syyc END, 6)
-            AS r2_split,
-          ROUND(CASE WHEN ssea + sseb > 0 THEN
-            ((ssep - ssea - sseb) / 2.0)
-              / ((ssea + sseb) / (na + nb - 4)) END, 6) AS f_chow
-        FROM e"""
-
   /** Variance inflation factors for a 3-feature design — the
     * multicollinearity gate before trusting [[ridge2]]-style
     * coefficients (VIF > 10 = the slope is noise). Closed form from
@@ -297,34 +187,6 @@ object Ridge {
       .select(col("p.feature").as("feature"),
         round(col("p.r2"), 6).as("r2_others"),
         round(col("p.v"), 6).as("vif"))
-  }
-
-  /** DuckDB twin of [[vif3]]; `srcCte` must yield (x1, x2, x3) and the
-    * feature labels are passed through for the output rows. */
-  def vif3OracleSql(srcCte: String, n1: String, n2: String,
-                    n3: String): String = {
-    def r2(rab: String, rac: String, rbc: String): String =
-      s"""CASE WHEN 1.0 - $rbc * $rbc > 1e-12 THEN
-          ($rab * $rab + $rac * $rac - 2.0 * $rab * $rac * $rbc)
-            / (1.0 - $rbc * $rbc) END"""
-    def rowFor(name: String, rab: String, rac: String, rbc: String) =
-      s"""SELECT '$name' AS feature,
-          ROUND(${r2(rab, rac, rbc)}, 6) AS r2_others,
-          ROUND(CASE WHEN 1.0 - (${r2(rab, rac, rbc)}) > 1e-12 THEN
-            1.0 / (1.0 - (${r2(rab, rac, rbc)})) END, 6) AS vif
-        FROM m"""
-    s"""WITH src AS (SELECT CAST(x1 AS DOUBLE) AS x1,
-            CAST(x2 AS DOUBLE) AS x2, CAST(x3 AS DOUBLE) AS x3
-          FROM ($srcCte)
-          WHERE x1 IS NOT NULL AND x2 IS NOT NULL AND x3 IS NOT NULL
-            AND NOT isnan(CAST(x1 AS DOUBLE))
-            AND NOT isnan(CAST(x2 AS DOUBLE))
-            AND NOT isnan(CAST(x3 AS DOUBLE))),
-        m AS (SELECT corr(x1, x2) AS r12, corr(x1, x3) AS r13,
-            corr(x2, x3) AS r23 FROM src)
-        ${rowFor(n1, "r12", "r13", "r23")}
-        UNION ALL ${rowFor(n2, "r12", "r23", "r13")}
-        UNION ALL ${rowFor(n3, "r13", "r23", "r12")}"""
   }
 
   /** k-fold cross-validated ridge-λ selection WITHOUT a second data
@@ -403,64 +265,5 @@ object Ridge {
       .groupBy("lambda")
       .agg(round(lit(1.0) - sum("__sse") / sum("__sst"), 6).as("cv_r2"))
       .orderBy("lambda")
-  }
-
-  /** DuckDB twin of [[ridgeCv]]; `srcCte` must yield (id, x1, x2, y).
-    * Same fold map, same moment algebra. */
-  def ridgeCvOracleSql(srcCte: String,
-                       lambdas: Seq[Double] = Seq(0, 0.5, 1, 2, 4, 8),
-                       folds: Int = 5, seed: Long = 42L): String = {
-    val hexChars = "0123456789abcdef"
-    val foldCase = hexChars.zipWithIndex.map { case (c, i) =>
-      s"WHEN substring(md5(CAST(id AS VARCHAR) || ':$seed'), 1, 1) = '$c' THEN ${i % folds}"
-    }.mkString("CASE ", " ", " ELSE 0 END")
-    val lamList = lambdas.mkString("[", ", ", "]")
-    s"""WITH src AS (SELECT id, CAST(x1 AS DOUBLE) AS x1,
-            CAST(x2 AS DOUBLE) AS x2, CAST(y AS DOUBLE) AS y
-          FROM ($srcCte)
-          WHERE x1 IS NOT NULL AND x2 IS NOT NULL AND y IS NOT NULL),
-        fm AS (SELECT $foldCase AS f,
-            CAST(COUNT(*) AS DOUBLE) AS n,
-            SUM(x1) AS sx1, SUM(x2) AS sx2, SUM(y) AS sy,
-            SUM(x1 * x1) AS sx1x1, SUM(x2 * x2) AS sx2x2,
-            SUM(x1 * x2) AS sx1x2,
-            SUM(x1 * y) AS sx1y, SUM(x2 * y) AS sx2y, SUM(y * y) AS syy
-          FROM src GROUP BY 1),
-        tot AS (SELECT SUM(n) AS t_n, SUM(sx1) AS t_sx1,
-            SUM(sx2) AS t_sx2, SUM(sy) AS t_sy, SUM(sx1x1) AS t_sx1x1,
-            SUM(sx2x2) AS t_sx2x2, SUM(sx1x2) AS t_sx1x2,
-            SUM(sx1y) AS t_sx1y, SUM(sx2y) AS t_sx2y, SUM(syy) AS t_syy
-          FROM fm),
-        tr AS (SELECT fm.*, t_n - n AS r_n, t_sx1 - sx1 AS r_sx1,
-            t_sx2 - sx2 AS r_sx2, t_sy - sy AS r_sy,
-            t_sx1x1 - sx1x1 AS r_sx1x1, t_sx2x2 - sx2x2 AS r_sx2x2,
-            t_sx1x2 - sx1x2 AS r_sx1x2, t_sx1y - sx1y AS r_sx1y,
-            t_sx2y - sx2y AS r_sx2y, t_syy - syy AS r_syy
-          FROM fm CROSS JOIN tot),
-        lam AS (SELECT UNNEST($lamList) AS lambda),
-        ex AS (SELECT tr.*, lam.lambda,
-            r_sx1x1 - r_n * (r_sx1 / r_n) * (r_sx1 / r_n) + lam.lambda
-              AS s11,
-            r_sx2x2 - r_n * (r_sx2 / r_n) * (r_sx2 / r_n) + lam.lambda
-              AS s22,
-            r_sx1x2 - r_n * (r_sx1 / r_n) * (r_sx2 / r_n) AS s12,
-            r_sx1y - r_n * (r_sx1 / r_n) * (r_sy / r_n) AS c1,
-            r_sx2y - r_n * (r_sx2 / r_n) * (r_sy / r_n) AS c2,
-            r_sx1 / r_n AS m1, r_sx2 / r_n AS m2, r_sy / r_n AS my
-          FROM tr CROSS JOIN lam),
-        sol AS (SELECT *,
-            (s22 * c1 - s12 * c2) / (s11 * s22 - s12 * s12) AS b1,
-            (s11 * c2 - s12 * c1) / (s11 * s22 - s12 * s12) AS b2
-          FROM ex),
-        sb AS (SELECT *, my - b1 * m1 - b2 * m2 AS b0 FROM sol),
-        ev AS (SELECT lambda,
-            syy + n * b0 * b0 + b1 * b1 * sx1x1 + b2 * b2 * sx2x2
-              - 2.0 * b0 * sy - 2.0 * b1 * sx1y - 2.0 * b2 * sx2y
-              + 2.0 * b0 * b1 * sx1 + 2.0 * b0 * b2 * sx2
-              + 2.0 * b1 * b2 * sx1x2 AS sse,
-            syy - sy * sy / n AS sst
-          FROM sb)
-        SELECT lambda, ROUND(1.0 - SUM(sse) / SUM(sst), 6) AS cv_r2
-        FROM ev GROUP BY lambda ORDER BY lambda"""
   }
 }

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -333,70 +334,6 @@ object Stats {
         round((lit(1.0) - col("__m")) * col("__s"), 6).as("beta"))
   }
 
-  /** DuckDB twin of [[ebRates]]; `unitsCte` must yield
-    * (grp, success). */
-  def ebRatesOracleSql(unitsCte: String): String =
-    s"""WITH units AS ($unitsCte),
-        g AS (SELECT grp, COUNT(*) AS n,
-            SUM(CASE WHEN success = 1 THEN 1 ELSE 0 END) AS x,
-            CAST(SUM(CASE WHEN success = 1 THEN 1 ELSE 0 END) AS DOUBLE)
-              / COUNT(*) AS raw
-          FROM units GROUP BY grp),
-        pr AS (SELECT AVG(raw) AS m,
-            AVG(raw * raw) - AVG(raw) * AVG(raw) AS v
-          FROM g),
-        ps AS (SELECT m, v,
-            CASE WHEN v > 0 AND v < m * (1 - m)
-              THEN m * (1 - m) / v - 1 END AS s
-          FROM pr)
-        SELECT g.grp, g.n, CAST(g.x AS BIGINT) AS x,
-          ROUND(g.raw, 6) AS raw_rate,
-          ROUND(COALESCE((g.x + ps.m * ps.s) / (g.n + ps.s), g.raw), 6)
-            AS shrunk_rate,
-          ROUND(ps.m * ps.s, 6) AS alpha,
-          ROUND((1 - ps.m) * ps.s, 6) AS beta
-        FROM g CROSS JOIN ps"""
-
-  /** DuckDB twin of [[logRank]]; `lifeCte` must yield
-    * (grp, duration, event). */
-  def logRankOracleSql(lifeCte: String): String =
-    s"""WITH life AS ($lifeCte),
-        bygt AS (SELECT grp, CAST(duration AS DOUBLE) AS t,
-            COUNT(*) AS n,
-            SUM(CASE WHEN event = 1 THEN 1 ELSE 0 END) AS d
-          FROM life GROUP BY 1, 2),
-        grid AS (SELECT g.grp, ts.t, COALESCE(b.n, 0) AS n,
-            COALESCE(b.d, 0) AS d
-          FROM (SELECT DISTINCT t FROM bygt) ts
-          CROSS JOIN (SELECT DISTINCT grp FROM bygt) g
-          LEFT JOIN bygt b ON b.grp = g.grp AND b.t = ts.t),
-        risk AS (SELECT grp, t, n, d,
-            SUM(n) OVER (PARTITION BY grp ORDER BY t DESC) AS n_g
-          FROM grid),
-        pooled AS (SELECT grp, t, n, d, n_g,
-            SUM(n_g) OVER (PARTITION BY t) AS n_tot,
-            SUM(d) OVER (PARTITION BY t) AS d_tot
-          FROM risk),
-        terms AS (SELECT grp, n, d,
-            d_tot * (CAST(n_g AS DOUBLE) / n_tot) AS e,
-            CASE WHEN n_tot > 1 THEN
-              d_tot * (CAST(n_g AS DOUBLE) / n_tot) *
-                (1 - CAST(n_g AS DOUBLE) / n_tot) *
-                CAST(n_tot - d_tot AS DOUBLE) / (n_tot - 1)
-              ELSE 0 END AS v
-          FROM pooled WHERE d_tot > 0),
-        sizes AS (SELECT grp, CAST(SUM(n) AS BIGINT) AS n_subjects
-          FROM grid GROUP BY grp),
-        per AS (SELECT grp,
-            CAST(SUM(d) AS BIGINT) AS observed,
-            SUM(e) AS ee, SUM(v) AS vv
-          FROM terms GROUP BY grp)
-        SELECT per.grp, n_subjects, observed, ROUND(ee, 6) AS expected,
-          ROUND(CASE WHEN vv > 0
-            THEN (observed - ee) * (observed - ee) / vv
-            ELSE 0 END, 6) AS chi2_logrank
-        FROM per JOIN sizes ON per.grp = sizes.grp"""
-
   /** Per-group PARTIAL correlation r_xy·z — the x↔y association with a
     * confounder z held fixed: r_xy·z = (r_xy − r_xz·r_yz) /
     * √((1−r_xz²)(1−r_yz²)). The follow-up question to the q07/q197
@@ -443,40 +380,6 @@ object Stats {
         .as("partial_r"))
   }
 
-  /** DuckDB twin of [[partialCorr]]; `srcCte` must yield
-    * (grp, x, y, z). */
-  def partialCorrOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        m AS (SELECT grp, COUNT(*) AS n,
-            SUM(CAST(x AS DOUBLE)) AS sx, SUM(CAST(y AS DOUBLE)) AS sy,
-            SUM(CAST(z AS DOUBLE)) AS sz,
-            SUM(CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) AS sxx,
-            SUM(CAST(y AS DOUBLE) * CAST(y AS DOUBLE)) AS syy,
-            SUM(CAST(z AS DOUBLE) * CAST(z AS DOUBLE)) AS szz,
-            SUM(CAST(x AS DOUBLE) * CAST(y AS DOUBLE)) AS sxy,
-            SUM(CAST(x AS DOUBLE) * CAST(z AS DOUBLE)) AS sxz,
-            SUM(CAST(y AS DOUBLE) * CAST(z AS DOUBLE)) AS syz
-          FROM src
-          WHERE x IS NOT NULL AND y IS NOT NULL AND z IS NOT NULL
-          GROUP BY grp),
-        rr AS (SELECT grp, n,
-            CASE WHEN sxx - sx*sx/n > 0 AND syy - sy*sy/n > 0 THEN
-              (sxy - sx*sy/n) / SQRT((sxx - sx*sx/n) * (syy - sy*sy/n))
-            END AS rxy,
-            CASE WHEN sxx - sx*sx/n > 0 AND szz - sz*sz/n > 0 THEN
-              (sxz - sx*sz/n) / SQRT((sxx - sx*sx/n) * (szz - sz*sz/n))
-            END AS rxz,
-            CASE WHEN syy - sy*sy/n > 0 AND szz - sz*sz/n > 0 THEN
-              (syz - sy*sz/n) / SQRT((syy - sy*sy/n) * (szz - sz*sz/n))
-            END AS ryz
-          FROM m)
-        SELECT grp, n, ROUND(rxy, 6) AS r_xy, ROUND(rxz, 6) AS r_xz,
-          ROUND(ryz, 6) AS r_yz,
-          ROUND(CASE WHEN (1 - rxz*rxz) * (1 - ryz*ryz) > 0 THEN
-            (rxy - rxz*ryz) / SQRT((1 - rxz*rxz) * (1 - ryz*ryz))
-          END, 6) AS partial_r
-        FROM rr"""
-
   /** McNemar's paired test: do classifiers A and B disagree more than
     * chance on the SAME rows? Only the discordant cells matter:
     * χ² = (|b−c|−1)²/(b+c) with continuity correction, b = A-only
@@ -503,30 +406,6 @@ object Stats {
       round(when(col("only_a") + col("only_b") > 0,
         (abs(b - c) - 1.0) * (abs(b - c) - 1.0) / (b + c)), 6))
   }
-
-  /** DuckDB twin of [[mcnemar]]; `srcCte` must yield
-    * (label, pred_a, pred_b). */
-  def mcnemarOracleSql(srcCte: String): String =
-    s"""WITH src AS ($srcCte),
-        g AS (SELECT COUNT(*) AS n,
-            SUM(CASE WHEN pred_a = label AND pred_b = label
-              THEN 1 ELSE 0 END) AS both_correct,
-            SUM(CASE WHEN pred_a = label AND pred_b != label
-              THEN 1 ELSE 0 END) AS only_a,
-            SUM(CASE WHEN pred_a != label AND pred_b = label
-              THEN 1 ELSE 0 END) AS only_b,
-            SUM(CASE WHEN pred_a != label AND pred_b != label
-              THEN 1 ELSE 0 END) AS both_wrong
-          FROM src WHERE label IS NOT NULL)
-        SELECT n, CAST(both_correct AS BIGINT) AS both_correct,
-          CAST(only_a AS BIGINT) AS only_a,
-          CAST(only_b AS BIGINT) AS only_b,
-          CAST(both_wrong AS BIGINT) AS both_wrong,
-          ROUND(CASE WHEN only_a + only_b > 0 THEN
-            (ABS(CAST(only_a AS DOUBLE) - only_b) - 1)
-              * (ABS(CAST(only_a AS DOUBLE) - only_b) - 1)
-              / (only_a + only_b) END, 6) AS chi2_mcnemar
-        FROM g"""
 
   /** Cronbach's alpha internal-consistency coefficient over a
     * (subject, item, score) long frame: α = k/(k−1)·(1 − Σ item
@@ -573,38 +452,6 @@ object Stats {
             (lit(1.0) - col("sum_item_var") / col("total_var"))), 6)
           .as("alpha"))
   }
-
-  /** DuckDB twin of [[cronbachAlpha]]; `cellCte` must yield
-    * (subj, item, score). */
-  def cronbachAlphaOracleSql(cellCte: String): String =
-    s"""WITH src AS ($cellCte),
-        cell AS (SELECT subj, item,
-            SUM(CAST(score AS DECIMAL(18,2))) AS v
-          FROM src WHERE score IS NOT NULL GROUP BY subj, item),
-        kk AS (SELECT COUNT(DISTINCT item) AS k FROM cell),
-        comp AS (SELECT subj, COUNT(*) AS ni,
-            CAST(SUM(v) AS DOUBLE) AS tot
-          FROM cell GROUP BY subj),
-        compk AS (SELECT c.subj, c.tot FROM comp c CROSS JOIN kk
-          WHERE c.ni = kk.k),
-        cc AS (SELECT cell.item, CAST(cell.v AS DOUBLE) AS v
-          FROM cell JOIN compk ON cell.subj = compk.subj),
-        iv AS (SELECT SUM(vr) AS sum_item_var FROM (
-            SELECT item,
-              (SUM(v * v) - SUM(v) * SUM(v) / COUNT(*))
-                / (COUNT(*) - 1) AS vr
-            FROM cc GROUP BY item)),
-        tv AS (SELECT COUNT(*) AS n_subjects,
-            (SUM(tot * tot) - SUM(tot) * SUM(tot) / COUNT(*))
-              / (COUNT(*) - 1) AS total_var
-          FROM compk)
-        SELECT kk.k, tv.n_subjects,
-          ROUND(iv.sum_item_var, 6) AS sum_item_var,
-          ROUND(tv.total_var, 6) AS total_var,
-          ROUND(CASE WHEN tv.total_var > 0 THEN
-            (CAST(kk.k AS DOUBLE) / (kk.k - 1))
-              * (1 - iv.sum_item_var / tv.total_var) END, 6) AS alpha
-        FROM tv CROSS JOIN iv CROSS JOIN kk"""
 
   /** Fisher's EXACT test for a 2×2 table — the small-count regime
     * where q156's chi-square approximation breaks (any expected cell
@@ -681,56 +528,6 @@ object Stats {
       round(least(col("p"), lit(1.0)), 6).as("p_value"))
   }
 
-  /** DuckDB twin of [[fisherExact]]; `unitsCte` must yield (r, c)
-    * binary columns. Builds the identical log-factorial ladder. */
-  def fisherExactOracleSql(unitsCte: String): String =
-    s"""WITH units AS (SELECT * FROM ($unitsCte)
-          WHERE r IS NOT NULL AND c IS NOT NULL),
-        cells AS (SELECT
-            CAST(SUM(CASE WHEN r = 1 AND c = 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS a,
-            CAST(SUM(CASE WHEN r = 1 AND c != 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS b,
-            CAST(SUM(CASE WHEN r != 1 AND c = 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS cc,
-            CAST(SUM(CASE WHEN r != 1 AND c != 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS d
-          FROM units),
-        nn AS (SELECT a, b, cc, d, a + b + cc + d AS n FROM cells),
-        lf AS MATERIALIZED (SELECT i,
-            SUM(LN(GREATEST(i, 1))) OVER (ORDER BY i
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lf
-          FROM (SELECT UNNEST(range(0, (SELECT n FROM nn) + 1)) AS i)),
-        ks AS (SELECT UNNEST(range(
-            GREATEST(0, (SELECT a + cc FROM nn) - (SELECT cc + d FROM nn)),
-            LEAST((SELECT a + b FROM nn), (SELECT a + cc FROM nn)) + 1))
-            AS k),
-        lp AS MATERIALIZED (SELECT ks.k,
-            lr1.lf + lr2.lf + lc1.lf + lc2.lf - lnn.lf
-              - lk.lf - lak.lf - lck.lf - ldk.lf AS lp
-          FROM ks
-          CROSS JOIN nn
-          JOIN lf lk ON lk.i = ks.k
-          JOIN lf lak ON lak.i = nn.a + nn.b - ks.k
-          JOIN lf lck ON lck.i = nn.a + nn.cc - ks.k
-          JOIN lf ldk ON ldk.i = nn.cc + nn.d - nn.a - nn.cc + ks.k
-          JOIN lf lr1 ON lr1.i = nn.a + nn.b
-          JOIN lf lr2 ON lr2.i = nn.cc + nn.d
-          JOIN lf lc1 ON lc1.i = nn.a + nn.cc
-          JOIN lf lc2 ON lc2.i = nn.b + nn.d
-          JOIN lf lnn ON lnn.i = nn.n),
-        obs AS (SELECT lp AS lpobs FROM lp
-          CROSS JOIN nn WHERE lp.k = nn.a)
-        SELECT CAST(nn.a AS BIGINT) AS a, CAST(nn.b AS BIGINT) AS b,
-          CAST(nn.cc AS BIGINT) AS c, CAST(nn.d AS BIGINT) AS d,
-          CASE WHEN nn.b > 0 AND nn.cc > 0 THEN
-            ROUND(CAST(nn.a AS DOUBLE) * nn.d / (CAST(nn.b AS DOUBLE)
-              * nn.cc), 6) END AS odds_ratio,
-          ROUND(LEAST((SELECT SUM(EXP(lp)) FROM lp CROSS JOIN obs
-            WHERE EXP(lp) <= EXP(obs.lpobs) * (1 + 1e-7)), 1.0), 6)
-            AS p_value
-        FROM nn"""
-
   /** Restricted mean survival time: RMST(τ) = ∫₀^τ S(t)dt over the
     * [[kaplanMeier]] curve — "average time survived in the first τ",
     * the hazard-free effect size regulators now prefer to medians —
@@ -762,41 +559,6 @@ object Stats {
         .as("rmst_frac"),
       col("median_t"))
   }
-
-  /** DuckDB twin of [[rmst]]; `lifeCte` yields (dur, event). */
-  def rmstOracleSql(lifeCte: String, tau: Double): String =
-    s"""WITH life AS ($lifeCte),
-        byt AS (SELECT CAST(dur AS DOUBLE) AS t, COUNT(*) AS n,
-            SUM(CASE WHEN event = 1 THEN 1 ELSE 0 END) AS d
-          FROM life GROUP BY 1),
-        ar AS (SELECT t, d, SUM(n) OVER (ORDER BY t DESC) AS r FROM byt),
-        km0 AS (SELECT t, 1.0 - CAST(d AS DOUBLE) / r AS factor
-          FROM ar WHERE d > 0),
-        km1 AS (SELECT t,
-            SUM(CASE WHEN factor <= 0 THEN 1 ELSE 0 END)
-              OVER (ORDER BY t) AS zeros,
-            SUM(CASE WHEN factor > 0 THEN LN(factor) END)
-              OVER (ORDER BY t) AS lsum
-          FROM km0),
-        km AS (SELECT t, CASE WHEN zeros > 0 THEN 0.0
-            ELSE ROUND(EXP(lsum), 6) END AS s
-          FROM km1 WHERE t <= $tau),
-        st AS (SELECT t, s,
-            COALESCE(LAG(t, 1) OVER (ORDER BY t), 0.0) AS tp,
-            COALESCE(LAG(s, 1) OVER (ORDER BY t), 1.0) AS sp
-          FROM km),
-        g AS (SELECT SUM(sp * (t - tp)) AS area, MAX(t) AS tl,
-            MIN(CASE WHEN s <= 0.5 THEN t END) AS median_t,
-            ANY_VALUE(ls) AS slast
-          FROM st CROSS JOIN (SELECT s AS ls FROM st
-            ORDER BY t DESC LIMIT 1))
-        SELECT $tau AS tau,
-          ROUND(COALESCE(area, 0.0) + COALESCE(slast, 1.0)
-            * ($tau - COALESCE(tl, 0.0)), 6) AS rmst,
-          ROUND((COALESCE(area, 0.0) + COALESCE(slast, 1.0)
-            * ($tau - COALESCE(tl, 0.0))) / $tau, 6) AS rmst_frac,
-          median_t
-        FROM g"""
 
   /** Simpson's-paradox detector for the simple slope of y on x: the
     * per-group slopes (one 6-moment groupBy) vs the OVERALL slope
@@ -860,61 +622,6 @@ object Stats {
         .as("strict_paradox"))
   }
 
-  /** DuckDB twin of [[simpsonDetector]]; `unitsCte` yields (g, x, y). */
-  def simpsonDetectorOracleSql(unitsCte: String,
-                               minN: Long = 30): String =
-    s"""WITH units AS (SELECT g,
-            CAST(CAST(x AS DECIMAL(18,2)) * 100 AS HUGEINT) AS xc,
-            CAST(CAST(y AS DECIMAL(18,2)) * 100 AS HUGEINT) AS yc
-          FROM ($unitsCte)
-          WHERE x IS NOT NULL AND y IS NOT NULL
-            AND NOT isnan(CAST(x AS DOUBLE))
-            AND NOT isnan(CAST(y AS DOUBLE))),
-        grpi AS (SELECT g, COUNT(*) AS n, SUM(xc) AS sx_i,
-            SUM(yc) AS sy_i, SUM(xc * xc) AS sxx_i,
-            SUM(xc * yc) AS sxy_i
-          FROM units GROUP BY g HAVING COUNT(*) >= $minN),
-        grp AS (SELECT g, n, sx_i, sy_i, sxx_i, sxy_i,
-            ${graft.core.Lattice.duckPortableDoubleSigned("sx_i")}
-              / 100.0 AS sx,
-            ${graft.core.Lattice.duckPortableDoubleSigned("sy_i")}
-              / 100.0 AS sy,
-            ${graft.core.Lattice.duckPortableDoubleSigned("sxx_i")}
-              / 10000.0 AS sxx,
-            ${graft.core.Lattice.duckPortableDoubleSigned("sxy_i")}
-              / 10000.0 AS sxy
-          FROM grpi),
-        sl AS (SELECT *,
-            (sxy - sx * sy / CAST(n AS DOUBLE))
-              / (sxx - sx * sx / CAST(n AS DOUBLE)) AS b FROM grp),
-        ai AS (SELECT COUNT(*) AS k, SUM(n) AS nt, SUM(sx_i) AS sxt_i,
-            SUM(sy_i) AS syt_i, SUM(sxx_i) AS sxxt_i,
-            SUM(sxy_i) AS sxyt_i,
-            SUM(CASE WHEN b > 0 THEN 1 ELSE 0 END) AS np,
-            SUM(CASE WHEN b < 0 THEN 1 ELSE 0 END) AS nn
-          FROM sl),
-        a AS (SELECT k, nt, np, nn,
-            ${graft.core.Lattice.duckPortableDoubleSigned("sxt_i")}
-              / 100.0 AS sxt,
-            ${graft.core.Lattice.duckPortableDoubleSigned("syt_i")}
-              / 100.0 AS syt,
-            ${graft.core.Lattice.duckPortableDoubleSigned("sxxt_i")}
-              / 10000.0 AS sxxt,
-            ${graft.core.Lattice.duckPortableDoubleSigned("sxyt_i")}
-              / 10000.0 AS sxyt
-          FROM ai),
-        o AS (SELECT *,
-            (sxyt - sxt * syt / CAST(nt AS DOUBLE))
-              / (sxxt - sxt * sxt / CAST(nt AS DOUBLE)) AS ov FROM a)
-        SELECT CAST(k AS BIGINT) AS n_groups, ROUND(ov, 6)
-            AS overall_slope,
-          CAST(np AS BIGINT) AS n_pos, CAST(nn AS BIGINT) AS n_neg,
-          ROUND(CASE WHEN k > 0 THEN
-            CAST(CASE WHEN ov > 0 THEN nn ELSE np END AS DOUBLE) / k
-            END, 6) AS reversal_share,
-          (ov > 0 AND nn = k) OR (ov < 0 AND np = k) AS strict_paradox
-        FROM o"""
-
   /** Measurement agreement between two numeric readings of the same
     * quantity: Bland–Altman bias and 95% limits of agreement on the
     * differences, plus Lin's concordance correlation coefficient
@@ -943,26 +650,6 @@ object Stats {
       round(when(col("__vx") > 0 && col("__vy") > 0, r), 6)
         .as("pearson_r"))
   }
-
-  /** DuckDB twin of [[agreement]]; `unitsCte` yields (x, y). */
-  def agreementOracleSql(unitsCte: String): String =
-    s"""WITH units AS (SELECT CAST(x AS DOUBLE) AS x,
-            CAST(y AS DOUBLE) AS y FROM ($unitsCte)
-          WHERE x IS NOT NULL AND y IS NOT NULL
-            AND NOT isnan(CAST(x AS DOUBLE))
-            AND NOT isnan(CAST(y AS DOUBLE))),
-        g AS (SELECT COUNT(*) AS n, AVG(x) AS mx, AVG(y) AS my,
-            var_pop(x) AS vx, var_pop(y) AS vy,
-            covar_pop(x, y) AS cxy,
-            stddev_samp(x - y) AS sd, AVG(x - y) AS bias
-          FROM units)
-        SELECT CAST(n AS BIGINT) AS n, ROUND(bias, 6) AS bias,
-          ROUND(bias - 1.959964 * sd, 6) AS loa_lo,
-          ROUND(bias + 1.959964 * sd, 6) AS loa_hi,
-          ROUND(2.0 * cxy / (vx + vy + (mx - my) * (mx - my)), 6) AS ccc,
-          ROUND(CASE WHEN vx > 0 AND vy > 0 THEN
-            cxy / SQRT(vx * vy) END, 6) AS pearson_r
-        FROM g"""
 
   /** Cochran–Armitage test for TREND in proportions across ordered
     * groups (dose, tenure bucket, cohort age): z² = [Σsᵢ(xᵢ−x̄)]² /
@@ -994,27 +681,6 @@ object Stats {
         6).as("z_trend"))
   }
 
-  /** DuckDB twin of [[cochranArmitage]]; `unitsCte` yields (x, conv). */
-  def cochranArmitageOracleSql(unitsCte: String): String =
-    s"""WITH units AS (SELECT CAST(x AS DOUBLE) AS x, conv
-          FROM ($unitsCte) WHERE x IS NOT NULL AND conv IS NOT NULL),
-        g AS (SELECT x, COUNT(*) AS n,
-            SUM(CASE WHEN conv = 1 THEN 1 ELSE 0 END) AS s
-          FROM units GROUP BY x),
-        t AS (SELECT SUM(n) AS nt, SUM(s) AS st,
-            SUM(x * n) / SUM(n) AS xbar FROM g),
-        m AS (SELECT COUNT(*) AS k, ANY_VALUE(nt) AS n,
-            ANY_VALUE(CAST(st AS DOUBLE) / nt) AS p,
-            SUM(s * (x - xbar)) AS num,
-            SUM(n * (x - xbar) * (x - xbar)) AS den
-          FROM g CROSS JOIN t)
-        SELECT CAST(k AS BIGINT) AS k, CAST(n AS BIGINT) AS n,
-          CAST(CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 ELSE 0 END
-            AS BIGINT) AS slope_sign,
-          ROUND(CASE WHEN p > 0 AND p < 1 AND den > 0 THEN
-            num / SQRT(p * (1.0 - p) * den) END, 6) AS z_trend
-        FROM m"""
-
   /** Goodman–Kruskal gamma: ordinal association between two ordered
     * categorical columns from the contingency-cell table — concordant
     * vs discordant pairs, ties dropped (the ordinal sibling of q198's
@@ -1044,27 +710,9 @@ object Stats {
           (col("nc") - col("nd")).cast("double") /
             (col("nc") + col("nd"))), 6).as("gamma"))
       .localCheckpoint(true)
-    cells.unpersist()
+    Checkpoints.release(cells)
     out
   }
-
-  /** DuckDB twin of [[gkGamma]]; `unitsCte` yields (r, c). */
-  def gkGammaOracleSql(unitsCte: String): String =
-    s"""WITH units AS (SELECT CAST(r AS BIGINT) AS r,
-            CAST(c AS BIGINT) AS c FROM ($unitsCte)
-          WHERE r IS NOT NULL AND c IS NOT NULL),
-        cells AS (SELECT r, c, COUNT(*) AS n FROM units GROUP BY r, c),
-        nc AS (SELECT COALESCE(SUM(a.n * b.n), 0) AS nc
-          FROM cells a JOIN cells b ON b.r > a.r AND b.c > a.c),
-        nd AS (SELECT COALESCE(SUM(a.n * b.n), 0) AS nd
-          FROM cells a JOIN cells b ON b.r > a.r AND b.c < a.c),
-        t AS (SELECT SUM(n) AS n FROM cells)
-        SELECT CAST(t.n AS BIGINT) AS n, CAST(nc AS BIGINT)
-            AS n_concordant,
-          CAST(nd AS BIGINT) AS n_discordant,
-          ROUND(CASE WHEN nc + nd > 0 THEN
-            CAST(nc - nd AS DOUBLE) / (nc + nd) END, 6) AS gamma
-        FROM t CROSS JOIN nc CROSS JOIN nd"""
 
   /** Krippendorff's alpha for binary annotations with MISSING ratings
     * (items rated by varying rater counts) — the agreement measure
@@ -1092,25 +740,6 @@ object Stats {
       round(when(o1 > 0 && o0 > 0,
         lit(1.0) - (nD - 1) * col("__dsum") / (o1 * o0)), 6).as("alpha"))
   }
-
-  /** DuckDB twin of [[krippendorffAlpha]]; `unitsCte` yields
-    * (item, rating). */
-  def krippendorffAlphaOracleSql(unitsCte: String): String =
-    s"""WITH units AS (SELECT item, rating FROM ($unitsCte)
-          WHERE rating IS NOT NULL),
-        it AS (SELECT item, COUNT(*) AS m,
-            SUM(CASE WHEN rating = 1 THEN 1 ELSE 0 END) AS o
-          FROM units GROUP BY item HAVING COUNT(*) >= 2),
-        g AS (SELECT COUNT(*) AS ni, SUM(m) AS nr, SUM(o) AS o1,
-            SUM(CAST(o * (m - o) AS DOUBLE) / (m - 1)) AS dsum
-          FROM it)
-        SELECT CAST(ni AS BIGINT) AS n_items,
-          CAST(nr AS BIGINT) AS n_ratings,
-          ROUND(CASE WHEN o1 > 0 AND nr - o1 > 0 THEN
-            1.0 - (CAST(nr AS DOUBLE) - 1) * dsum
-              / (CAST(o1 AS DOUBLE) * (CAST(nr AS DOUBLE) - o1)) END, 6)
-            AS alpha
-        FROM g"""
 
   /** Weibull survival fit by median-rank regression over the
     * [[kaplanMeier]] estimate: ln(−ln S(t)) is linear in ln t under a
@@ -1149,47 +778,6 @@ object Stats {
       round(when(ok && shape =!= 0.0, -b0 / shape), 6).as("ln_scale"),
       round(when(ok && syy > 0, sxy * sxy / (sxx * syy)), 6).as("r2"))
   }
-
-  /** DuckDB twin of [[weibullFit]]; `lifeCte` must yield
-    * (dur, event) — re-derives the same KM frame. */
-  def weibullFitOracleSql(lifeCte: String): String =
-    s"""WITH life AS ($lifeCte),
-        byt AS (SELECT CAST(dur AS DOUBLE) AS t, COUNT(*) AS n,
-            SUM(CASE WHEN event = 1 THEN 1 ELSE 0 END) AS d
-          FROM life GROUP BY 1),
-        ar AS (SELECT t, d, SUM(n) OVER (ORDER BY t DESC) AS r FROM byt),
-        km0 AS (SELECT t, d, r, 1.0 - CAST(d AS DOUBLE) / r AS factor
-          FROM ar WHERE d > 0),
-        km1 AS (SELECT t,
-            SUM(CASE WHEN factor <= 0 THEN 1 ELSE 0 END)
-              OVER (ORDER BY t) AS zeros,
-            SUM(CASE WHEN factor > 0 THEN LN(factor) END)
-              OVER (ORDER BY t) AS lsum
-          FROM km0),
-        km AS (SELECT t, CASE WHEN zeros > 0 THEN 0.0
-            ELSE ROUND(EXP(lsum), 6) END AS s FROM km1),
-        pts AS (SELECT LN(t) AS x, LN(-LN(s)) AS y FROM km
-          WHERE s > 0 AND s < 1 AND t > 0),
-        g AS (SELECT COUNT(*) AS k, SUM(x) AS sx, SUM(y) AS sy,
-            SUM(x * x) AS sxx, SUM(y * y) AS syy, SUM(x * y) AS sxy
-          FROM pts),
-        e AS (SELECT k, sx, sy,
-            sxx - sx * sx / CAST(k AS DOUBLE) AS cxx,
-            syy - sy * sy / CAST(k AS DOUBLE) AS cyy,
-            sxy - sx * sy / CAST(k AS DOUBLE) AS cxy
-          FROM g),
-        f AS (SELECT k, cxx, cyy, cxy, cxy / cxx AS shape,
-            sy / CAST(k AS DOUBLE) - (cxy / cxx) * sx / CAST(k AS DOUBLE)
-              AS b0
-          FROM e)
-        SELECT CAST(k AS BIGINT) AS n_points,
-          ROUND(CASE WHEN k >= 3 AND cxx > 0 THEN shape END, 6)
-            AS shape,
-          ROUND(CASE WHEN k >= 3 AND cxx > 0 AND shape != 0 THEN
-            -b0 / shape END, 6) AS ln_scale,
-          ROUND(CASE WHEN k >= 3 AND cxx > 0 AND cyy > 0 THEN
-            cxy * cxy / (cxx * cyy) END, 6) AS r2
-        FROM f"""
 
   /** Scalar calibration read-outs over equal-width probability bins:
     * ECE (the headline miscalibration number), exact Brier score, and
@@ -1231,33 +819,6 @@ object Stats {
       round(col("__unc"), 6).as("uncertainty"))
   }
 
-  /** DuckDB twin of [[eceBrier]]; `unitsCte` must yield (p, y). */
-  def eceBrierOracleSql(unitsCte: String, bins: Int = 10): String =
-    s"""WITH base AS (SELECT
-            LEAST($bins - 1, CAST(FLOOR(CAST(p AS DOUBLE) * $bins)
-              AS BIGINT)) AS b,
-            CAST(p AS DOUBLE) AS p, CAST(y AS DOUBLE) AS y
-          FROM ($unitsCte)
-          WHERE p IS NOT NULL AND y IS NOT NULL
-            AND NOT isnan(CAST(p AS DOUBLE))),
-        cells AS (SELECT b, COUNT(*) AS n, AVG(p) AS pb, AVG(y) AS yb,
-            SUM((p - y) * (p - y)) AS sq
-          FROM base GROUP BY b),
-        tot AS (SELECT SUM(n) AS nt,
-            SUM(yb * n) / SUM(n) AS ybar FROM cells),
-        g AS (SELECT ANY_VALUE(nt) AS n,
-            SUM(n / CAST(nt AS DOUBLE) * ABS(pb - yb)) AS ece,
-            SUM(sq) / ANY_VALUE(CAST(nt AS DOUBLE)) AS brier,
-            SUM(n / CAST(nt AS DOUBLE) * (pb - yb) * (pb - yb)) AS rel,
-            SUM(n / CAST(nt AS DOUBLE) * (yb - ybar) * (yb - ybar))
-              AS res,
-            ANY_VALUE(ybar * (1.0 - ybar)) AS unc
-          FROM cells CROSS JOIN tot)
-        SELECT CAST(n AS BIGINT) AS n, ROUND(ece, 6) AS ece,
-          ROUND(brier, 6) AS brier, ROUND(rel, 6) AS reliability,
-          ROUND(res, 6) AS resolution, ROUND(unc, 6) AS uncertainty
-        FROM g"""
-
   /** Effect sizes for a two-group proportion comparison: Cohen's h
     * (the arcsine-stabilized difference, the standard "is this lift
     * big" scale for rates) and the risk ratio with its log-method 95%
@@ -1291,39 +852,6 @@ object Stats {
       round(when(ok, exp(lnRr + lit(1.959964) * se)), 6).as("rr_hi"))
   }
 
-  /** DuckDB twin of [[proportionEffects]]; `unitsCte` yields
-    * (g, conv). */
-  def proportionEffectsOracleSql(unitsCte: String, groupA: String,
-                                 groupB: String): String =
-    s"""WITH units AS (SELECT * FROM ($unitsCte)
-          WHERE g IN ('$groupA', '$groupB') AND conv IS NOT NULL),
-        c AS (SELECT
-            CAST(SUM(CASE WHEN g = '$groupA' THEN 1 ELSE 0 END)
-              AS BIGINT) AS na,
-            CAST(SUM(CASE WHEN g = '$groupA' AND conv = 1 THEN 1
-              ELSE 0 END) AS BIGINT) AS sa,
-            CAST(SUM(CASE WHEN g = '$groupB' THEN 1 ELSE 0 END)
-              AS BIGINT) AS nb,
-            CAST(SUM(CASE WHEN g = '$groupB' AND conv = 1 THEN 1
-              ELSE 0 END) AS BIGINT) AS sb
-          FROM units),
-        e AS (SELECT na, nb, sa, sb,
-            CAST(sa AS DOUBLE) / na AS pa,
-            CAST(sb AS DOUBLE) / nb AS pb FROM c),
-        f AS (SELECT *, LN(pa / pb) AS lnrr,
-            SQRT((1.0 - pa) / (na * pa) + (1.0 - pb) / (nb * pb)) AS se
-          FROM e)
-        SELECT na AS n_a, nb AS n_b, ROUND(pa, 6) AS p_a,
-          ROUND(pb, 6) AS p_b,
-          ROUND(2.0 * ASIN(SQRT(pa)) - 2.0 * ASIN(SQRT(pb)), 6)
-            AS cohens_h,
-          ROUND(CASE WHEN sa > 0 AND sb > 0 THEN EXP(lnrr) END, 6) AS rr,
-          ROUND(CASE WHEN sa > 0 AND sb > 0 THEN
-            EXP(lnrr - 1.959964 * se) END, 6) AS rr_lo,
-          ROUND(CASE WHEN sa > 0 AND sb > 0 THEN
-            EXP(lnrr + 1.959964 * se) END, 6) AS rr_hi
-        FROM f"""
-
   /** Negative-binomial overdispersion diagnosis for a count column:
     * dispersion = var/mean (1 = Poisson), the method-of-moments NB
     * size r = m²/(v − m), and the zero-inflation check — observed
@@ -1352,24 +880,6 @@ object Stats {
         .as("p0_nb"),
       round(col("__z").cast("double") / col("n"), 6).as("p0_obs"))
   }
-
-  /** DuckDB twin of [[nbFit]]; `countsCte` must yield (c). */
-  def nbFitOracleSql(countsCte: String): String =
-    s"""WITH src AS (SELECT CAST(c AS DOUBLE) AS c FROM ($countsCte)
-          WHERE c IS NOT NULL),
-        g AS (SELECT COUNT(*) AS n, AVG(c) AS m, var_samp(c) AS v,
-            SUM(CASE WHEN c = 0 THEN 1 ELSE 0 END) AS z
-          FROM src),
-        e AS (SELECT *, m * m / (v - m) AS r, v > m AND m > 0 AS ok
-          FROM g)
-        SELECT CAST(n AS BIGINT) AS n, ROUND(m, 6) AS mean,
-          ROUND(v, 6) AS variance,
-          ROUND(CASE WHEN m > 0 THEN v / m END, 6) AS dispersion,
-          ROUND(CASE WHEN ok THEN r END, 6) AS r_mom,
-          ROUND(CASE WHEN ok THEN EXP(r * LN(r / (r + m))) END, 6)
-            AS p0_nb,
-          ROUND(CAST(z AS DOUBLE) / n, 6) AS p0_obs
-        FROM e"""
 
   /** Deterministic 1-D two-means ("is this column bimodal, and where
     * does it split?"): centroids init at the exact 25th/75th
@@ -1411,33 +921,6 @@ object Stats {
         round(col("__nl").cast("double") / col("n"), 6).as("share_lo"),
         round(when(col("__s") > 0, lit(cHi - cLo) / col("__s")), 6)
           .as("separation"))
-  }
-
-  /** DuckDB twin of [[twoMeans1d]] — identical unrolled rounds with
-    * 6dp-quantized centroids. */
-  def twoMeans1dOracleSql(srcCte: String, iters: Int = 3): String = {
-    val rounds = (1 to iters).map { t =>
-      s"""c$t AS MATERIALIZED (SELECT
-            COALESCE(ROUND(AVG(CASE WHEN v <= (lo + hi) / 2.0 THEN v
-              END), 6), ANY_VALUE(lo)) AS lo,
-            COALESCE(ROUND(AVG(CASE WHEN v > (lo + hi) / 2.0 THEN v
-              END), 6), ANY_VALUE(hi)) AS hi
-          FROM src CROSS JOIN c${t - 1})"""
-    }.mkString(",\n")
-    s"""WITH src AS (SELECT CAST(v AS DOUBLE) AS v FROM ($srcCte)
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))),
-        c0 AS (SELECT ROUND(quantile_cont(v, 0.25), 6) AS lo,
-            ROUND(quantile_cont(v, 0.75), 6) AS hi FROM src),
-        $rounds
-        SELECT (SELECT COUNT(*) FROM src) AS n,
-          lo AS c_lo, hi AS c_hi,
-          ROUND((SELECT SUM(CASE WHEN v <= (lo + hi) / 2.0 THEN 1
-              ELSE 0 END) FROM src) /
-            CAST((SELECT COUNT(*) FROM src) AS DOUBLE), 6) AS share_lo,
-          ROUND(CASE WHEN (SELECT stddev_samp(v) FROM src) > 0 THEN
-            (hi - lo) / (SELECT stddev_samp(v) FROM src) END, 6)
-            AS separation
-        FROM c$iters"""
   }
 
   /** Yuen's trimmed-mean two-sample t — the robust alternative to
@@ -1525,79 +1008,6 @@ object Stats {
         .as("df"))
   }
 
-  /** DuckDB twin of [[yuenT]]; `srcCte` must yield (g, v); groups are
-    * inlined as string literals. */
-  def yuenTOracleSql(srcCte: String, groupA: String, groupB: String,
-                     trim: Double = 0.2): String = {
-    val hi = 1 - trim
-    s"""WITH src AS ($srcCte),
-        base AS (SELECT g, CAST(v AS DOUBLE) AS v FROM src
-          WHERE v IS NOT NULL AND NOT isnan(CAST(v AS DOUBLE))
-            AND g IN ('$groupA', '$groupB')),
-        bd AS (SELECT g, quantile_cont(v, $trim) AS lo,
-            quantile_cont(v, $hi) AS hi FROM base GROUP BY g),
-        w AS (SELECT base.g, v,
-            CAST(CAST(v AS DECIMAL(18,2)) * 100 AS HUGEINT) AS vcnt,
-            lo, hi, v >= lo AND v <= hi AS keep
-          FROM base JOIN bd ON base.g = bd.g),
-        m AS (SELECT
-            SUM(CASE WHEN g = '$groupA' THEN 1 ELSE 0 END) AS na,
-            SUM(CASE WHEN g = '$groupA' AND keep THEN 1 ELSE 0 END) AS ha,
-            SUM(CASE WHEN g = '$groupA' AND keep THEN vcnt END) AS stca,
-            SUM(CASE WHEN g = '$groupA' AND keep THEN vcnt * vcnt END)
-              AS svvca,
-            SUM(CASE WHEN g = '$groupA' AND v < lo THEN 1 ELSE 0 END)
-              AS cba,
-            SUM(CASE WHEN g = '$groupA' AND v > hi THEN 1 ELSE 0 END)
-              AS caa,
-            MIN(CASE WHEN g = '$groupA' THEN lo END) AS loa,
-            MIN(CASE WHEN g = '$groupA' THEN hi END) AS hia,
-            SUM(CASE WHEN g = '$groupB' THEN 1 ELSE 0 END) AS nb,
-            SUM(CASE WHEN g = '$groupB' AND keep THEN 1 ELSE 0 END) AS hb,
-            SUM(CASE WHEN g = '$groupB' AND keep THEN vcnt END) AS stcb,
-            SUM(CASE WHEN g = '$groupB' AND keep THEN vcnt * vcnt END)
-              AS svvcb,
-            SUM(CASE WHEN g = '$groupB' AND v < lo THEN 1 ELSE 0 END)
-              AS cbb,
-            SUM(CASE WHEN g = '$groupB' AND v > hi THEN 1 ELSE 0 END)
-              AS cab,
-            MIN(CASE WHEN g = '$groupB' THEN lo END) AS lob,
-            MIN(CASE WHEN g = '$groupB' THEN hi END) AS hib
-          FROM w),
-        cvt AS (SELECT m.*,
-            ${graft.core.Lattice.duckPortableDoubleSigned("stca")} / 100.0
-              AS sta,
-            ${graft.core.Lattice.duckPortableDoubleSigned("stcb")} / 100.0
-              AS stb,
-            ${graft.core.Lattice.duckPortableDoubleSigned("svvca")}
-              / 10000.0 AS svva,
-            ${graft.core.Lattice.duckPortableDoubleSigned("svvcb")}
-              / 10000.0 AS svvb
-          FROM m),
-        sw0 AS (SELECT *,
-            sta + cba * loa + caa * hia AS swa,
-            svva + cba * (loa * loa) + caa * (hia * hia) AS swwa,
-            stb + cbb * lob + cab * hib AS swb,
-            svvb + cbb * (lob * lob) + cab * (hib * hib) AS swwb
-          FROM cvt),
-        e AS (SELECT na, nb, ha, hb,
-            sta / ha AS mta, stb / hb AS mtb,
-            (swwa - swa * swa / na) / (na - 1)
-              * (na - 1) / (CAST(ha AS DOUBLE) * (ha - 1)) AS da,
-            (swwb - swb * swb / nb) / (nb - 1)
-              * (nb - 1) / (CAST(hb AS DOUBLE) * (hb - 1)) AS db
-          FROM sw0)
-        SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-          CAST(ha AS BIGINT) AS h_a, CAST(hb AS BIGINT) AS h_b,
-          ROUND(mta, 6) AS mt_a, ROUND(mtb, 6) AS mt_b,
-          ROUND(CASE WHEN ha >= 2 AND hb >= 2 AND da + db > 0 THEN
-            (mta - mtb) / SQRT(da + db) END, 6) AS t_yuen,
-          ROUND(CASE WHEN ha >= 2 AND hb >= 2 AND da + db > 0 THEN
-            (da + db) * (da + db)
-              / (da * da / (ha - 1) + db * db / (hb - 1)) END, 6) AS df
-        FROM e"""
-  }
-
   /** Cochran–Mantel–Haenszel: the pooled 2×2 association test across
     * strata — "is exposure associated with outcome AFTER controlling
     * for the stratifying confounder?" The stratified sibling of
@@ -1644,37 +1054,6 @@ object Stats {
         .as("chi2_cmh"))
   }
 
-  /** DuckDB twin of [[cmh]]; `unitsCte` must yield (s, r, c). */
-  def cmhOracleSql(unitsCte: String): String =
-    s"""WITH units AS (SELECT * FROM ($unitsCte)
-          WHERE r IS NOT NULL AND c IS NOT NULL AND s IS NOT NULL),
-        cells AS (SELECT s,
-            CAST(SUM(CASE WHEN r = 1 AND c = 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS a,
-            CAST(SUM(CASE WHEN r = 1 AND c != 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS b,
-            CAST(SUM(CASE WHEN r != 1 AND c = 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS cc,
-            CAST(SUM(CASE WHEN r != 1 AND c != 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS d
-          FROM units GROUP BY s),
-        f AS (SELECT *, a + b + cc + d AS n FROM cells
-          WHERE a + b + cc + d >= 2),
-        g AS (SELECT COUNT(*) AS k_strata, SUM(n) AS n,
-            SUM(a * d / CAST(n AS DOUBLE)) AS ornum,
-            SUM(b * cc / CAST(n AS DOUBLE)) AS orden,
-            SUM(a) AS sa,
-            SUM((a + b) * (a + cc) / CAST(n AS DOUBLE)) AS se,
-            SUM(CAST(a + b AS DOUBLE) * (cc + d) * (a + cc) * (b + d)
-              / (CAST(n AS DOUBLE) * n * (n - 1))) AS sv
-          FROM f)
-        SELECT CAST(k_strata AS BIGINT) AS k_strata,
-          CAST(n AS BIGINT) AS n,
-          ROUND(CASE WHEN orden > 0 THEN ornum / orden END, 6) AS or_cmh,
-          ROUND(CASE WHEN sv > 0 THEN
-            (sa - se) * (sa - se) / sv END, 6) AS chi2_cmh
-        FROM g"""
-
   /** Cochran's Q: do k correlated binary raters/classifiers (one row
     * per subject, k 0/1 flag columns) have the same marginal positive
     * rate? The k-rater generalization of [[mcnemar]] (k = 2 reduces to
@@ -1702,29 +1081,6 @@ object Stats {
     val den = lit(k.toDouble) * col("__sr") - col("__srr")
     g.select(col("__n").as("n"), lit(k.toLong).as("k"),
       round(when(den > 0, num / den), 6).as("q_stat"))
-  }
-
-  /** DuckDB twin of [[cochranQ]]; `unitsCte` must yield flag columns
-    * named f1..fk (0/1). */
-  def cochranQOracleSql(unitsCte: String, k: Int): String = {
-    val fs = (1 to k).map(i => s"f$i")
-    val rSum = fs.map(f => s"CASE WHEN $f = 1 THEN 1.0 ELSE 0.0 END")
-      .mkString(" + ")
-    val cSums = fs.zipWithIndex.map { case (f, i) =>
-      s"SUM(CASE WHEN $f = 1 THEN 1.0 ELSE 0.0 END) AS c$i" }
-      .mkString(", ")
-    val sumC2 = (0 until k).map(i => s"c$i * c$i").mkString(" + ")
-    val notNull = fs.map(f => s"$f IS NOT NULL").mkString(" AND ")
-    s"""WITH units AS (SELECT * FROM ($unitsCte) WHERE $notNull),
-        rs AS (SELECT $rSum AS r FROM units),
-        g AS (SELECT (SELECT COUNT(*) FROM units) AS n,
-            (SELECT SUM(r) FROM rs) AS sr,
-            (SELECT SUM(r * r) FROM rs) AS srr, $cSums FROM units)
-        SELECT CAST(n AS BIGINT) AS n, CAST($k AS BIGINT) AS k,
-          ROUND(CASE WHEN $k * sr - srr > 0 THEN
-            ($k - 1.0) * ($k.0 * ($sumC2) - sr * sr)
-              / ($k * sr - srr) END, 6) AS q_stat
-        FROM g LIMIT 1"""
   }
 
   /** Competing-risks cumulative incidence (Aalen–Johansen for two
@@ -1766,40 +1122,6 @@ object Stats {
         col("cif1"), col("cif2"))
   }
 
-  /** DuckDB twin of [[cumulativeIncidence]]; `lifeCte` yields
-    * (dur, cause). */
-  def cumulativeIncidenceOracleSql(lifeCte: String): String =
-    s"""WITH life AS ($lifeCte),
-        byt AS (SELECT CAST(dur AS DOUBLE) AS t, COUNT(*) AS n,
-            SUM(CASE WHEN cause = 1 THEN 1 ELSE 0 END) AS d1,
-            SUM(CASE WHEN cause = 2 THEN 1 ELSE 0 END) AS d2
-          FROM life GROUP BY 1),
-        ar AS (SELECT t, d1, d2,
-            SUM(n) OVER (ORDER BY t DESC) AS r FROM byt),
-        km0 AS (SELECT t, d1, d2, r,
-            1.0 - CAST(d1 + d2 AS DOUBLE) / r AS factor FROM ar),
-        km1 AS (SELECT t, d1, d2, r,
-            SUM(CASE WHEN factor <= 0 THEN 1 ELSE 0 END)
-              OVER (ORDER BY t) AS zeros,
-            SUM(CASE WHEN factor > 0 THEN LN(factor) END)
-              OVER (ORDER BY t) AS lsum
-          FROM km0),
-        km AS (SELECT t, d1, d2, r,
-            CASE WHEN zeros > 0 THEN 0.0
-              ELSE ROUND(EXP(lsum), 6) END AS s FROM km1),
-        sp AS (SELECT t, d1, d2, r,
-            COALESCE(LAG(s, 1) OVER (ORDER BY t), 1.0) AS sprev
-          FROM km)
-        SELECT t, CAST(r AS BIGINT) AS n_at_risk,
-          CAST(d1 AS BIGINT) AS d1, CAST(d2 AS BIGINT) AS d2,
-          ROUND(SUM(sprev * CAST(d1 AS DOUBLE) / r)
-            OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING
-              AND CURRENT ROW), 6) AS cif1,
-          ROUND(SUM(sprev * CAST(d2 AS DOUBLE) / r)
-            OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING
-              AND CURRENT ROW), 6) AS cif2
-        FROM sp WHERE d1 + d2 > 0"""
-
   /** Mean cumulative function for RECURRENT events (Nelson estimator):
     * MCF(t) = Σ_{s≤t} (events at s across the cohort) / n_cohort —
     * "expected errors per entity by day t", the recurrent-event twin
@@ -1825,22 +1147,6 @@ object Stats {
         round(sum("n_events").over(wcum).cast("double") / cohort, 6))
       .orderBy("day_offset")
   }
-
-  /** DuckDB twin of [[meanCumulativeFunction]]; `eventPred` selects
-    * the recurrent event rows. */
-  def meanCumulativeFunctionOracleSql(eventPred: String): String =
-    s"""WITH fst AS (SELECT user_id, MIN(CAST(ts AS DATE)) AS d0
-          FROM events GROUP BY user_id),
-        coh AS (SELECT COUNT(*) AS n FROM fst),
-        per AS (SELECT date_diff('day', fst.d0, CAST(e.ts AS DATE))
-              AS day_offset, COUNT(*) AS n_events
-          FROM events e JOIN fst ON e.user_id = fst.user_id
-          WHERE $eventPred GROUP BY 1)
-        SELECT CAST(day_offset AS INT) AS day_offset, n_events,
-          ROUND(CAST(SUM(n_events) OVER (ORDER BY day_offset
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS DOUBLE) / (SELECT n FROM coh), 6) AS mcf
-        FROM per ORDER BY day_offset"""
 
   /** Somers' D (asymmetric ordinal association, y dependent on x):
     * D_yx = (C − D) / (C + D + T_y) where T_y counts pairs tied on y
@@ -1873,31 +1179,9 @@ object Stats {
           (col("nc") - col("nd")).cast("double") /
             (col("nc") + col("nd") + col("nty"))), 6).as("somers_d"))
       .localCheckpoint(true)
-    cells.unpersist()
+    Checkpoints.release(cells)
     out
   }
-
-  /** DuckDB twin of [[somersD]]; `unitsCte` yields (x, y). */
-  def somersDOracleSql(unitsCte: String): String =
-    s"""WITH units AS (SELECT CAST(x AS BIGINT) AS x,
-            CAST(y AS BIGINT) AS y FROM ($unitsCte)
-          WHERE x IS NOT NULL AND y IS NOT NULL),
-        cells AS (SELECT x, y, COUNT(*) AS n FROM units GROUP BY x, y),
-        nc AS (SELECT COALESCE(SUM(a.n * b.n), 0) AS nc
-          FROM cells a JOIN cells b ON b.x > a.x AND b.y > a.y),
-        nd AS (SELECT COALESCE(SUM(a.n * b.n), 0) AS nd
-          FROM cells a JOIN cells b ON b.x > a.x AND b.y < a.y),
-        nty AS (SELECT COALESCE(SUM(a.n * b.n), 0) AS nty
-          FROM cells a JOIN cells b ON b.x > a.x AND b.y = a.y),
-        t AS (SELECT SUM(n) AS n FROM cells)
-        SELECT CAST(t.n AS BIGINT) AS n,
-          CAST(nc AS BIGINT) AS n_concordant,
-          CAST(nd AS BIGINT) AS n_discordant,
-          CAST(nty AS BIGINT) AS n_ties_y,
-          ROUND(CASE WHEN nc + nd + nty > 0 THEN
-            CAST(nc - nd AS DOUBLE) / (nc + nd + nty) END, 6)
-            AS somers_d
-        FROM t CROSS JOIN nc CROSS JOIN nd CROSS JOIN nty"""
 
   /** Kaplan–Meier curve with Greenwood standard errors and plain
     * ±z·se confidence bands (clamped to [0,1] — the documented
@@ -1927,38 +1211,6 @@ object Stats {
         round(least(col("survival") + lit(z) * col("__se"),
           lit(1.0)), 6).as("hi"))
   }
-
-  /** DuckDB twin of [[kaplanMeierBands]]; `lifeCte` yields
-    * (dur, event). */
-  def kaplanMeierBandsOracleSql(lifeCte: String,
-                                z: Double = 1.959964): String =
-    s"""WITH life AS ($lifeCte),
-        byt AS (SELECT CAST(dur AS DOUBLE) AS t, COUNT(*) AS n,
-            SUM(CASE WHEN event = 1 THEN 1 ELSE 0 END) AS d
-          FROM life GROUP BY 1),
-        ar AS (SELECT t, d, SUM(n) OVER (ORDER BY t DESC) AS r
-          FROM byt),
-        ev AS (SELECT * FROM ar WHERE d > 0),
-        km0 AS (SELECT t, d, r, 1.0 - CAST(d AS DOUBLE) / r AS factor
-          FROM ev),
-        km1 AS (SELECT t, d, r,
-            SUM(CASE WHEN factor <= 0 THEN 1 ELSE 0 END)
-              OVER (ORDER BY t) AS zeros,
-            SUM(CASE WHEN factor > 0 THEN LN(factor) END)
-              OVER (ORDER BY t) AS lsum,
-            COALESCE(SUM(CASE WHEN r > d THEN
-              CAST(d AS DOUBLE) / (CAST(r AS DOUBLE) * (r - d)) END)
-              OVER (ORDER BY t), 0.0) AS gw
-          FROM km0),
-        km AS (SELECT t, r, d,
-            CASE WHEN zeros > 0 THEN 0.0
-              ELSE ROUND(EXP(lsum), 6) END AS s, gw FROM km1)
-        SELECT t, CAST(r AS BIGINT) AS n_at_risk,
-          CAST(d AS BIGINT) AS n_events, s AS survival,
-          ROUND(s * SQRT(gw), 6) AS se,
-          ROUND(GREATEST(s - $z * (s * SQRT(gw)), 0.0), 6) AS lo,
-          ROUND(LEAST(s + $z * (s * SQRT(gw)), 1.0), 6) AS hi
-        FROM km"""
 
   /** Harrell's concordance index for a survival outcome against a
     * risk score: over comparable pairs (i experienced the event and
@@ -2001,33 +1253,9 @@ object Stats {
             (col("nc") + col("nd") + col("nt")).cast("double")), 6)
           .as("c_index"))
       .localCheckpoint(true)
-    cells.unpersist()
+    Checkpoints.release(cells)
     out
   }
-
-  /** DuckDB twin of [[concordanceIndex]]; `unitsCte` yields
-    * (t, e, p). */
-  def concordanceIndexOracleSql(unitsCte: String): String =
-    s"""WITH units AS (SELECT CAST(t AS BIGINT) AS t,
-            (CAST(e AS INT) = 1) AS e, CAST(p AS BIGINT) AS p
-          FROM ($unitsCte)
-          WHERE t IS NOT NULL AND e IS NOT NULL AND p IS NOT NULL),
-        cells AS (SELECT t, e, p, COUNT(*) AS n
-          FROM units GROUP BY t, e, p),
-        nc AS (SELECT COALESCE(SUM(a.n * b.n), 0) AS nc
-          FROM cells a JOIN cells b ON a.e AND b.t > a.t AND a.p > b.p),
-        nd AS (SELECT COALESCE(SUM(a.n * b.n), 0) AS nd
-          FROM cells a JOIN cells b ON a.e AND b.t > a.t AND a.p < b.p),
-        nt AS (SELECT COALESCE(SUM(a.n * b.n), 0) AS nt
-          FROM cells a JOIN cells b ON a.e AND b.t > a.t AND a.p = b.p)
-        SELECT CAST(nc + nd + nt AS BIGINT) AS n_comparable,
-          CAST(nc AS BIGINT) AS n_concordant,
-          CAST(nd AS BIGINT) AS n_discordant,
-          CAST(nt AS BIGINT) AS n_tied,
-          ROUND(CASE WHEN nc + nd + nt > 0 THEN
-            (CAST(nc AS DOUBLE) + CAST(nt AS DOUBLE) / 2)
-              / CAST(nc + nd + nt AS DOUBLE) END, 6) AS c_index
-        FROM nc CROSS JOIN nd CROSS JOIN nt"""
 
   /** Bowker symmetry test for a paired k×k categorical table — the
     * k-class generalization of [[mcnemar]]: did the per-unit category
@@ -2064,31 +1292,9 @@ object Stats {
       .select(col("n"), col("n_pairs_tested"), col("chi2"),
         col("n_pairs_tested").as("df"))
       .localCheckpoint(true)
-    cells.unpersist()
+    Checkpoints.release(cells)
     out
   }
-
-  /** DuckDB twin of [[bowker]]; `unitsCte` yields (a, b). */
-  def bowkerOracleSql(unitsCte: String): String =
-    s"""WITH units AS (SELECT CAST(a AS BIGINT) AS a,
-            CAST(b AS BIGINT) AS b FROM ($unitsCte)
-          WHERE a IS NOT NULL AND b IS NOT NULL),
-        cells AS (SELECT a, b, COUNT(*) AS n FROM units GROUP BY a, b),
-        pairs AS (SELECT COALESCE(lo.n, 0) AS x, COALESCE(hi.n, 0) AS y
-          FROM cells lo FULL JOIN cells hi
-            ON lo.a = hi.b AND lo.b = hi.a
-          WHERE COALESCE(lo.a, hi.b) < COALESCE(lo.b, hi.a)),
-        t AS (SELECT SUM(n) AS n FROM cells),
-        g AS (SELECT
-            CAST(SUM(CASE WHEN x + y > 0 THEN 1 ELSE 0 END) AS BIGINT)
-              AS np,
-            ROUND(CAST(SUM(CAST(ROUND(CASE WHEN x + y > 0 THEN
-                CAST((x - y) * (x - y) AS DOUBLE) / (x + y) END, 9)
-              AS DECIMAL(28,9))) AS DOUBLE), 6) AS chi2
-          FROM pairs)
-        SELECT CAST(t.n AS BIGINT) AS n, g.np AS n_pairs_tested,
-          g.chi2, g.np AS df
-        FROM g CROSS JOIN t"""
 
   /** Kaplan–Meier median survival PER GROUP: the life table runs
     * partitioned by group (event times from grouped integer counts,
@@ -2134,38 +1340,4 @@ object Stats {
         col("median_survival"))
       .orderBy("group")
   }
-
-  /** DuckDB twin of [[kmMedianByGroup]]; `unitsCte` yields
-    * (g, t, e). */
-  def kmMedianByGroupOracleSql(unitsCte: String): String =
-    s"""WITH base AS (SELECT g, CAST(t AS BIGINT) AS t,
-            CASE WHEN CAST(e AS INT) = 1 THEN 1 ELSE 0 END AS e
-          FROM ($unitsCte) WHERE t IS NOT NULL AND e IS NOT NULL),
-        totals AS (SELECT g, COUNT(*) AS n,
-            CAST(SUM(e) AS BIGINT) AS n_events FROM base GROUP BY g),
-        cells AS (SELECT g, t, COUNT(*) AS c, SUM(e) AS d
-          FROM base GROUP BY g, t),
-        life AS (SELECT g, t, d,
-            SUM(c) OVER (PARTITION BY g ORDER BY t DESC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS atrisk
-          FROM cells),
-        ev AS (SELECT * FROM life WHERE d > 0),
-        s AS (SELECT g, t,
-            CASE WHEN MAX(CASE WHEN d = atrisk THEN 1 ELSE 0 END)
-                OVER (PARTITION BY g ORDER BY t
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 1
-              THEN 0.0
-              ELSE EXP(COALESCE(SUM(CASE WHEN d < atrisk THEN
-                LN(1.0 - CAST(d AS DOUBLE) / atrisk) END)
-                OVER (PARTITION BY g ORDER BY t
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                0.0)) END AS sv
-          FROM ev),
-        med AS (SELECT g, MIN(CASE WHEN sv <= 0.5 THEN t END)
-            AS median_survival FROM s GROUP BY g)
-        SELECT totals.g AS "group", totals.n, totals.n_events,
-          med.median_survival
-        FROM totals LEFT JOIN med ON totals.g = med.g
-        ORDER BY "group""""
 }

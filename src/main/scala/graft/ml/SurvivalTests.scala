@@ -75,52 +75,4 @@ object SurvivalTests {
         round(try_divide(col("observed_a") - col("__esum"),
           sqrt(col("__vsum"))), 6).as("z_stat"))
   }
-
-  /** DuckDB twin of [[logRank]]; `lifeCte` yields (dur, event, arm). */
-  def logRankOracleSql(lifeCte: String, armA: String,
-                       armB: String): String =
-    s"""WITH base AS (SELECT CAST(dur AS BIGINT) AS t,
-            CASE WHEN event = 1 THEN 1 ELSE 0 END AS e,
-            CASE WHEN arm = '$armA' THEN 1 ELSE 0 END AS a
-          FROM ($lifeCte)
-          WHERE arm IN ('$armA', '$armB') AND dur IS NOT NULL),
-        cells AS (SELECT t, a, COUNT(*) AS n, SUM(e) AS d
-          FROM base GROUP BY t, a),
-        grid AS (SELECT t, g.a FROM (SELECT DISTINCT t FROM cells)
-          CROSS JOIN (SELECT UNNEST([0, 1]) AS a) g),
-        full0 AS (SELECT grid.t, grid.a,
-            COALESCE(cells.n, 0) AS n, COALESCE(cells.d, 0) AS d
-          FROM grid LEFT JOIN cells USING (t, a)),
-        risk AS (SELECT t, a, d,
-            SUM(n) OVER (PARTITION BY a ORDER BY t DESC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS r
-          FROM full0),
-        byt AS (SELECT t,
-            SUM(CASE WHEN a = 1 THEN r ELSE 0 END) AS n1,
-            SUM(CASE WHEN a = 0 THEN r ELSE 0 END) AS n0,
-            SUM(CASE WHEN a = 1 THEN d ELSE 0 END) AS d1,
-            SUM(CASE WHEN a = 0 THEN d ELSE 0 END) AS d0
-          FROM risk GROUP BY t),
-        ev AS (SELECT d1, d1 + d0 AS dt, n1, n0, n1 + n0 AS nt
-          FROM byt WHERE d1 + d0 > 0),
-        terms AS (SELECT d1,
-            CAST(ROUND(CAST(dt AS DOUBLE) * n1 / nt, 9)
-              AS DECIMAL(28,9)) AS e1,
-            CAST(ROUND(CASE WHEN nt > 1 THEN
-              CAST(dt AS DOUBLE) * n1 * n0 * (nt - dt)
-                / (CAST(nt AS DOUBLE) * nt * (nt - 1))
-              ELSE 0.0 END, 9) AS DECIMAL(28,9)) AS v1
-          FROM ev),
-        sizes AS (SELECT CAST(SUM(a) AS BIGINT) AS n_a,
-            CAST(SUM(1 - a) AS BIGINT) AS n_b FROM base),
-        agg AS (SELECT CAST(SUM(d1) AS BIGINT) AS observed_a,
-            CAST(SUM(e1) AS DOUBLE) AS esum,
-            CAST(SUM(v1) AS DOUBLE) AS vsum
-          FROM terms)
-        SELECT n_a, n_b, observed_a,
-          ROUND(esum, 6) AS expected_a,
-          ROUND(observed_a - esum, 6) AS o_minus_e,
-          ROUND(vsum, 6) AS var_sum,
-          ROUND((observed_a - esum) / SQRT(vsum), 6) AS z_stat
-        FROM agg CROSS JOIN sizes"""
 }

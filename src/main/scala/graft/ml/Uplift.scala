@@ -62,29 +62,4 @@ object Uplift {
             (sum("n_treat").over(cum).cast("double") /
               sum("n_ctrl").over(cum)), 6)).as("qini"))
   }
-
-  /** DuckDB mirror of [[qiniByBucket]]: `unitsCte` must yield
-    * (treat 0/1, score, y, tb). */
-  def qiniOracleSql(unitsCte: String, nBuckets: Int): String =
-    s"""WITH units AS ($unitsCte),
-        bucketed AS (SELECT CAST(treat AS INT) AS t, CAST(y AS DOUBLE) AS y,
-            NTILE($nBuckets) OVER (ORDER BY score DESC, tb ASC) AS b
-          FROM units),
-        perb AS (SELECT CAST(b AS INT) AS bucket,
-            CAST(SUM(t) AS BIGINT) AS n_treat,
-            CAST(SUM(1 - t) AS BIGINT) AS n_ctrl,
-            SUM(CASE WHEN t = 1 THEN y ELSE 0.0 END) AS y_treat,
-            SUM(CASE WHEN t = 0 THEN y ELSE 0.0 END) AS y_ctrl
-          FROM bucketed GROUP BY b)
-        SELECT bucket, n_treat, n_ctrl,
-          ROUND(y_treat, 6) AS y_treat, ROUND(y_ctrl, 6) AS y_ctrl,
-          CASE WHEN n_treat > 0 AND n_ctrl > 0 THEN ROUND(
-            y_treat / n_treat - y_ctrl / n_ctrl, 6) END AS uplift,
-          CASE WHEN SUM(n_ctrl) OVER cw > 0 THEN ROUND(
-            SUM(y_treat) OVER cw - SUM(y_ctrl) OVER cw *
-              (CAST(SUM(n_treat) OVER cw AS DOUBLE) /
-                SUM(n_ctrl) OVER cw), 6) END AS qini
-        FROM perb
-        WINDOW cw AS (ORDER BY bucket
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"""
 }

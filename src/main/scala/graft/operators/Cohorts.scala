@@ -69,38 +69,6 @@ object Cohorts {
       .orderBy("cohort_week")
   }
 
-  /** DuckDB twin of [[retentionHalfLife]]. */
-  def retentionHalfLifeOracleSql(userCol: String, tsCol: String,
-                                 table: String, minWeeks: Int = 3): String =
-    s"""WITH ev AS (SELECT $userCol AS u,
-            date_trunc('week', $tsCol) AS wk FROM $table),
-        coh AS (SELECT u, MIN(wk) AS cohort_week FROM ev GROUP BY u),
-        act AS (SELECT DISTINCT u, wk FROM ev),
-        r AS (SELECT cohort_week,
-            CAST(date_diff('day', cohort_week, wk) / 7 AS INT)
-              AS week_offset,
-            COUNT(DISTINCT u) AS n_active
-          FROM act JOIN coh USING (u) GROUP BY 1, 2),
-        b AS (SELECT cohort_week, n_active AS n0 FROM r
-          WHERE week_offset = 0),
-        pts AS (SELECT r.cohort_week,
-            CAST(week_offset AS DOUBLE) AS x,
-            LN(CAST(n_active AS DOUBLE) / n0) AS y
-          FROM r JOIN b USING (cohort_week)
-          WHERE week_offset >= 1 AND n_active > 0),
-        g AS (SELECT cohort_week, COUNT(*) AS nw, SUM(x) AS sx,
-            SUM(y) AS sy, SUM(x * x) AS sxx, SUM(x * y) AS sxy
-          FROM pts GROUP BY cohort_week HAVING COUNT(*) >= $minWeeks),
-        s AS (SELECT cohort_week, nw,
-            (sxy - sx * sy / CAST(nw AS DOUBLE))
-              / (sxx - sx * sx / CAST(nw AS DOUBLE)) AS slope
-          FROM g)
-        SELECT CAST(cohort_week AS TIMESTAMP) AS cohort_week,
-          CAST(nw AS BIGINT) AS n_weeks, ROUND(slope, 6) AS slope,
-          ROUND(CASE WHEN slope < 0 THEN ${math.log(2.0)} / -slope END, 6)
-            AS half_life_weeks
-        FROM s ORDER BY cohort_week"""
-
   /** Cold-start rate per segment after a split date: the share of
     * post-split active entities that were NEVER seen before the split
     * — the train/serve hygiene number (a recommender trained pre-split
@@ -126,23 +94,6 @@ object Cohorts {
         round(col("n_new").cast("double") / col("n_active"), 6))
       .orderBy("segment")
   }
-
-  /** DuckDB twin of [[coldStartRate]]; uses the events table. */
-  def coldStartRateOracleSql(entityExpr: String, segmentExpr: String,
-                             tsExpr: String, table: String,
-                             split: String): String =
-    s"""WITH pre AS (SELECT DISTINCT $entityExpr AS e FROM $table
-          WHERE $tsExpr < TIMESTAMP '$split'),
-        post AS (SELECT DISTINCT $entityExpr AS e,
-            $segmentExpr AS segment FROM $table
-          WHERE $tsExpr >= TIMESTAMP '$split')
-        SELECT segment, COUNT(*) AS n_active,
-          CAST(SUM(CASE WHEN pre.e IS NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_new,
-          ROUND(SUM(CASE WHEN pre.e IS NULL THEN 1 ELSE 0 END)
-            / CAST(COUNT(*) AS DOUBLE), 6) AS cold_rate
-        FROM post LEFT JOIN pre ON post.e = pre.e
-        GROUP BY segment ORDER BY segment"""
 
   /** Cohort LTV curve: users cohort by FIRST-event week (integer
     * epoch-week index — exact long math, no locale week rules), and
@@ -183,34 +134,6 @@ object Cohorts {
           col("n_cohort").cast("double"), 6).as("cum_ltv"))
       .orderBy("cohort_week", "week_offset")
   }
-
-  /** DuckDB twin of [[cohortLtv]]; uses the events table. */
-  def cohortLtvOracleSql(userExpr: String, tsExpr: String,
-                         valueExpr: String, table: String,
-                         maxOffset: Int = 8): String =
-    s"""WITH ev AS (SELECT $userExpr AS u,
-            CAST(date_diff('day', DATE '1970-01-01',
-              CAST($tsExpr AS DATE)) AS BIGINT) // 7 AS w,
-            CAST($valueExpr AS DECIMAL(18,2)) AS v
-          FROM $table WHERE $valueExpr IS NOT NULL),
-        fw AS (SELECT u, MIN(w) AS cw FROM ev GROUP BY u),
-        sz AS (SELECT cw, COUNT(*) AS n_cohort FROM fw GROUP BY cw),
-        cells AS (SELECT fw.cw, ev.w - fw.cw AS off,
-            COUNT(DISTINCT ev.u) AS n_active, SUM(ev.v) AS val
-          FROM ev JOIN fw ON ev.u = fw.u
-          WHERE ev.w - fw.cw <= $maxOffset
-          GROUP BY fw.cw, ev.w - fw.cw),
-        cum AS (SELECT cw, off, n_active, val,
-            SUM(val) OVER (PARTITION BY cw ORDER BY off
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cv
-          FROM cells)
-        SELECT cum.cw AS cohort_week, CAST(off AS BIGINT)
-            AS week_offset, sz.n_cohort, n_active,
-          ROUND(CAST(val AS DOUBLE), 6) AS value,
-          ROUND(CAST(cv AS DOUBLE) / CAST(sz.n_cohort AS DOUBLE), 6)
-            AS cum_ltv
-        FROM cum JOIN sz ON cum.cw = sz.cw
-        ORDER BY cohort_week, week_offset"""
 
   /** Daily GROWTH ACCOUNTING: decompose each day's active-user count
     * into new (first day ever), retained (active the previous day) and
@@ -260,44 +183,6 @@ object Cohorts {
       .orderBy("day")
   }
 
-  /** DuckDB twin of [[growthAccounting]] over the events table. */
-  def growthAccountingOracleSql(userExpr: String, tsExpr: String,
-                                table: String): String =
-    s"""WITH cells AS (SELECT DISTINCT $userExpr AS u,
-            CAST($tsExpr AS DATE) AS d
-          FROM $table),
-        l AS (SELECT u, d,
-            LAG(d) OVER (PARTITION BY u ORDER BY d) AS prev,
-            LEAD(d) OVER (PARTITION BY u ORDER BY d) AS next
-          FROM cells),
-        act AS (SELECT d AS day, COUNT(*) AS n_active,
-            CAST(SUM(CASE WHEN prev IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-              AS n_new,
-            CAST(SUM(CASE WHEN date_diff('day', prev, d) = 1 THEN 1
-              ELSE 0 END) AS BIGINT) AS n_retained,
-            CAST(SUM(CASE WHEN prev IS NOT NULL
-                AND date_diff('day', prev, d) > 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_resurrected
-          FROM l GROUP BY d),
-        ch AS (SELECT d + 1 AS day, COUNT(*) AS n_churned FROM l
-          WHERE next IS NULL OR date_diff('day', d, next) > 1
-          GROUP BY d + 1),
-        mx AS (SELECT MAX(d) AS m FROM cells),
-        mg AS (SELECT COALESCE(act.day, ch.day) AS day,
-            COALESCE(n_active, 0) AS n_active,
-            COALESCE(n_new, 0) AS n_new,
-            COALESCE(n_retained, 0) AS n_retained,
-            COALESCE(n_resurrected, 0) AS n_resurrected,
-            COALESCE(n_churned, 0) AS n_churned
-          FROM act FULL OUTER JOIN ch ON act.day = ch.day)
-        SELECT strftime(day, '%Y-%m-%d') AS day,
-          CAST(n_active AS BIGINT) AS n_active,
-          CAST(n_new AS BIGINT) AS n_new,
-          CAST(n_retained AS BIGINT) AS n_retained,
-          CAST(n_resurrected AS BIGINT) AS n_resurrected,
-          CAST(n_churned AS BIGINT) AS n_churned
-        FROM mg CROSS JOIN mx WHERE day <= m ORDER BY day"""
-
   /** Monthly stickiness — the DAU/MAU engagement ratio: how much of
     * the month's audience shows up on an average day. Definitionally
     * stickiness = mean(DAU)/MAU = user_days / (n_days · MAU); both
@@ -330,19 +215,4 @@ object Cohorts {
           (col("n_days") * col("mau")), 6))
       .orderBy("month")
   }
-
-  /** DuckDB twin of [[stickiness]]. */
-  def stickinessOracleSql(userExpr: String, tsExpr: String,
-                          table: String): String =
-    s"""WITH dd AS (SELECT DISTINCT
-            strftime(date_trunc('month', $tsExpr), '%Y-%m-01') AS month,
-            CAST($tsExpr AS DATE) AS day, $userExpr AS u
-          FROM $table)
-        SELECT month, COUNT(DISTINCT day) AS n_days,
-          COUNT(DISTINCT u) AS mau, COUNT(*) AS user_days,
-          ROUND(CAST(COUNT(*) AS DOUBLE) / COUNT(DISTINCT day), 6)
-            AS avg_dau,
-          ROUND(CAST(COUNT(*) AS DOUBLE) /
-            (COUNT(DISTINCT day) * COUNT(DISTINCT u)), 6) AS stickiness
-        FROM dd GROUP BY month ORDER BY month"""
 }

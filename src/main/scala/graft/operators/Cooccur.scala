@@ -103,32 +103,4 @@ object Cooccur {
         col("item_c"))
       .limit(topK)
   }
-
-  /** DuckDB twin of [[itemTriples]]; `itemsCte` must yield (b, i). */
-  def itemTriplesOracleSql(itemsCte: String, minSupport: Long,
-                           maxBasketSize: Int, topK: Int): String =
-    s"""WITH items0 AS (SELECT DISTINCT b, i FROM ($itemsCte)),
-        ok AS (SELECT b FROM items0 GROUP BY b
-          HAVING COUNT(*) <= $maxBasketSize),
-        kept AS (SELECT items0.b, items0.i FROM items0 JOIN ok USING (b)),
-        nb AS (SELECT COUNT(DISTINCT b) AS n FROM kept),
-        ic AS (SELECT i, COUNT(*) AS ci FROM kept GROUP BY i),
-        fp AS (SELECT x.i AS a, y.i AS bb FROM kept x
-          JOIN kept y ON x.b = y.b AND x.i < y.i
-          GROUP BY x.i, y.i HAVING COUNT(*) >= $minSupport),
-        pb AS (SELECT x.b, x.i AS a, y.i AS bb FROM kept x
-          JOIN kept y ON x.b = y.b AND x.i < y.i
-          JOIN fp ON fp.a = x.i AND fp.bb = y.i),
-        tr AS (SELECT pb.a, pb.bb, z.i AS c, COUNT(*) AS n_triple
-          FROM pb JOIN kept z ON z.b = pb.b AND z.i > pb.bb
-          GROUP BY pb.a, pb.bb, z.i HAVING COUNT(*) >= $minSupport)
-        SELECT tr.a AS item_a, tr.bb AS item_b, tr.c AS item_c,
-          CAST(tr.n_triple AS BIGINT) AS n_triple,
-          ROUND(CAST(tr.n_triple AS DOUBLE) * nb.n * nb.n
-            / (ca.ci * cb.ci * cc.ci), 6) AS lift
-        FROM tr CROSS JOIN nb
-        JOIN ic ca ON ca.i = tr.a
-        JOIN ic cb ON cb.i = tr.bb
-        JOIN ic cc ON cc.i = tr.c
-        ORDER BY n_triple DESC, item_a, item_b, item_c LIMIT $topK"""
 }

@@ -44,21 +44,4 @@ object Downsample {
         max(col(valCol)).as("v_high"))
       .orderBy("series", "bucket")
   }
-
-  /** DuckDB twin of [[m4]]. */
-  def m4OracleSql(seriesExpr: String, tsExpr: String, ordExpr: String,
-                  valExpr: String, table: String): String =
-    s"""SELECT $seriesExpr AS series,
-          strftime(date_trunc('hour', $tsExpr), '%Y-%m-%d %H:00')
-            AS bucket,
-          COUNT(*) AS n,
-          arg_min($valExpr, lpad(CAST(epoch_us($tsExpr) AS VARCHAR),
-            20, '0') || lpad(CAST($ordExpr AS VARCHAR), 20, '0'))
-            AS v_open,
-          arg_max($valExpr, lpad(CAST(epoch_us($tsExpr) AS VARCHAR),
-            20, '0') || lpad(CAST($ordExpr AS VARCHAR), 20, '0'))
-            AS v_close,
-          MIN($valExpr) AS v_low, MAX($valExpr) AS v_high
-        FROM $table WHERE $valExpr IS NOT NULL
-        GROUP BY 1, 2 ORDER BY 1, 2"""
 }

@@ -174,20 +174,6 @@ object Events {
         col("new_entities"), col("cum_entities"))
   }
 
-  /** DuckDB twin of [[cumulativeDistinct]]; `evCte` must yield
-    * (u, day). */
-  def cumulativeDistinctOracleSql(evCte: String): String =
-    s"""WITH ev AS ($evCte),
-        perday AS (SELECT day, COUNT(*) AS n_events FROM ev GROUP BY day),
-        fs AS (SELECT MIN(day) AS day FROM ev GROUP BY u),
-        nw AS (SELECT day, COUNT(*) AS nn FROM fs GROUP BY day)
-        SELECT CAST(p.day AS TIMESTAMP) AS day, p.n_events,
-          COALESCE(nw.nn, 0) AS new_entities,
-          CAST(SUM(COALESCE(nw.nn, 0)) OVER (ORDER BY p.day
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS cum_entities
-        FROM perday p LEFT JOIN nw USING (day)"""
-
   /** Inter-event burstiness (Goh–Barabási 2008): per entity the gap
     * CV and B = (σ−μ)/(σ+μ) over inter-event seconds — B ≈ −1 is a
     * metronome, 0 a Poisson stream, → 1 extreme bursts. The SHAPE
@@ -220,28 +206,6 @@ object Events {
       round(sum((col("__b") > 0).cast("long")).cast("double") /
         count(lit(1)), 6).as("share_bursty"))
   }
-
-  /** DuckDB twin of [[interEventBurstiness]]. */
-  def interEventBurstinessOracleSql(userCol: String, tsCol: String,
-                                    table: String): String =
-    s"""WITH ev AS (SELECT $userCol AS u, epoch_us($tsCol) AS t
-          FROM $table),
-        g AS (SELECT u,
-            (t - LAG(t, 1) OVER (PARTITION BY u ORDER BY t))
-              / 1000000.0 AS gp
-          FROM ev),
-        per0 AS (SELECT u, COUNT(*) AS n, AVG(gp) AS m,
-            stddev_pop(gp) AS s
-          FROM g WHERE gp IS NOT NULL GROUP BY u),
-        per AS (SELECT ROUND((s - m) / (s + m), 6) AS b
-          FROM per0 WHERE n >= 2 AND (m + s) > 0)
-        SELECT COUNT(*) AS n_entities,
-          ROUND(CAST(SUM(CAST(b AS DECIMAL(28,6))) AS DOUBLE)
-            / COUNT(*), 6) AS mean_b,
-          ROUND(quantile_cont(b, 0.5), 6) AS p50_b,
-          ROUND(SUM(CASE WHEN b > 0 THEN 1 ELSE 0 END)
-            / CAST(COUNT(*) AS DOUBLE), 6) AS share_bursty
-        FROM per"""
 
   /** Reorder-gap profile: per-entity gaps between consecutive order
     * dates (integer days via an entity-keyed lag), summarized to
@@ -281,34 +245,6 @@ object Events {
         col("p90_days"))
   }
 
-  /** DuckDB twin of [[reorderGaps]]. */
-  def reorderGapsOracleSql(entityExpr: String, dateExpr: String,
-                           table: String): String =
-    s"""WITH gaps AS (SELECT $entityExpr AS e,
-            date_diff('day', LAG(CAST($dateExpr AS DATE))
-              OVER (PARTITION BY $entityExpr
-                ORDER BY CAST($dateExpr AS DATE)),
-              CAST($dateExpr AS DATE)) AS gap
-          FROM $table WHERE $dateExpr IS NOT NULL),
-        nz AS (SELECT e, gap FROM gaps WHERE gap IS NOT NULL),
-        ne AS (SELECT COUNT(DISTINCT e) AS n_entities FROM nz),
-        cells AS (SELECT gap, COUNT(*) AS c FROM nz GROUP BY gap),
-        cum AS (SELECT gap, SUM(c) OVER (ORDER BY gap) AS cm
-          FROM cells),
-        tot AS (SELECT SUM(c) AS n FROM cells)
-        SELECT CAST(COALESCE(ANY_VALUE(ne.n_entities), 0) AS BIGINT)
-            AS n_entities,
-          CAST(ANY_VALUE(tot.n) AS BIGINT) AS n_gaps,
-          CAST(MIN(CASE WHEN cm * 4 >= n THEN gap END) AS BIGINT)
-            AS p25_days,
-          CAST(MIN(CASE WHEN cm * 2 >= n THEN gap END) AS BIGINT)
-            AS p50_days,
-          CAST(MIN(CASE WHEN cm * 4 >= n * 3 THEN gap END) AS BIGINT)
-            AS p75_days,
-          CAST(MIN(CASE WHEN cm * 10 >= n * 9 THEN gap END) AS BIGINT)
-            AS p90_days
-        FROM cum CROSS JOIN tot CROSS JOIN ne"""
-
   /** Inter-event latency percentiles PER TYPE: entity-keyed lag gaps
     * in whole seconds, then type-1 p50/p90/p99 with integer-lattice
     * thresholds, partitioned by event type — the ops-latency table
@@ -345,29 +281,4 @@ object Events {
           .as("p99_s"))
       .orderBy("event_type")
   }
-
-  /** DuckDB twin of [[latencyPercentiles]]. */
-  def latencyPercentilesOracleSql(entityExpr: String, tsExpr: String,
-                                  typeExpr: String,
-                                  table: String): String =
-    s"""WITH gaps AS (SELECT $typeExpr AS event_type,
-            (epoch_us($tsExpr) - LAG(epoch_us($tsExpr))
-              OVER (PARTITION BY $entityExpr, $typeExpr
-                ORDER BY epoch_us($tsExpr))) // 1000000 AS gap
-          FROM $table),
-        nz AS (SELECT event_type, gap FROM gaps WHERE gap IS NOT NULL),
-        cells AS (SELECT event_type, gap, COUNT(*) AS c
-          FROM nz GROUP BY event_type, gap),
-        cum AS (SELECT event_type, gap,
-            SUM(c) OVER (PARTITION BY event_type ORDER BY gap) AS cm,
-            SUM(c) OVER (PARTITION BY event_type) AS n
-          FROM cells)
-        SELECT event_type, CAST(ANY_VALUE(n) AS BIGINT) AS n_gaps,
-          CAST(MIN(CASE WHEN cm * 2 >= n THEN gap END) AS BIGINT)
-            AS p50_s,
-          CAST(MIN(CASE WHEN cm * 10 >= n * 9 THEN gap END) AS BIGINT)
-            AS p90_s,
-          CAST(MIN(CASE WHEN cm * 100 >= n * 99 THEN gap END)
-            AS BIGINT) AS p99_s
-        FROM cum GROUP BY event_type ORDER BY event_type"""
 }

@@ -205,36 +205,6 @@ object Forecast {
           .as("seasonal_strength"))
   }
 
-  /** DuckDB twin of [[seasonalityStrength]] — re-derives the same
-    * decomposition (7-day centered MA, per-dow seasonal). */
-  def seasonalityStrengthOracleSql(tsExpr: String, valueExpr: String,
-                                   table: String): String =
-    s"""WITH d0 AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              / COUNT(*) AS mean
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        tr AS (SELECT day, mean, dayofweek(day) AS dow,
-            CASE WHEN COUNT(*) OVER w = 7 THEN AVG(mean) OVER w END
-              AS trend
-          FROM d0
-          WINDOW w AS (ORDER BY day ROWS BETWEEN 3 PRECEDING
-            AND 3 FOLLOWING)),
-        se AS (SELECT dow, AVG(mean - trend) AS seas FROM tr
-          WHERE trend IS NOT NULL GROUP BY dow),
-        f AS (SELECT ROUND(tr.mean, 6) AS mean, ROUND(trend, 6) AS trend,
-            ROUND(seas, 6) AS seasonal,
-            ROUND(tr.mean - trend - seas, 6) AS residual
-          FROM tr JOIN se USING (dow) WHERE trend IS NOT NULL),
-        a AS (SELECT COUNT(*) AS n, var_samp(residual) AS vr,
-            var_samp(trend + residual) AS vtr,
-            var_samp(seasonal + residual) AS vsr FROM f)
-        SELECT CAST(n AS BIGINT) AS n_days,
-          ROUND(CASE WHEN vtr > 0 THEN
-            GREATEST(0.0, 1.0 - vr / vtr) END, 6) AS trend_strength,
-          ROUND(CASE WHEN vsr > 0 THEN
-            GREATEST(0.0, 1.0 - vr / vsr) END, 6) AS seasonal_strength
-        FROM a"""
-
   /** Sequential probability ratio test (Wald SPRT) trace over daily
     * conversion counts: per day the binomial log-likelihood-ratio
     * increment for H1: p = p1 vs H0: p = p0, its running total, and
@@ -401,52 +371,6 @@ object Forecast {
       round(col("resid"), 6).as("resid"))
   }
 
-  /** DuckDB mirror of [[holtWinters]] over the `events` table: the
-    * state recursion as a recursive CTE carrying the last `season`
-    * seasonal terms as rotating columns (the q257 pattern, widened).
-    * Every float expression tree matches the Scala fold exactly. */
-  def holtWintersOracleSql(season: Int = 7, alpha: Double = 0.25,
-                           beta: Double = 0.125,
-                           gamma: Double = 0.25): String = {
-    val m = season
-    val (a, a1, b, b1, g, g1) =
-      (alpha, 1.0 - alpha, beta, 1.0 - beta, gamma, 1.0 - gamma)
-    val sCols = (1 to m).map(i => s"s$i")
-    val initS = (1 to m).map(i =>
-      s"(SELECT total FROM idx WHERE t = $i) - sum1 / $m.0 AS s$i")
-      .mkString(",\n             ")
-    val newLvl = s"$a * (i.total - r.s1) + $a1 * (r.level + r.trend)"
-    s"""WITH RECURSIVE d AS (SELECT CAST(ts AS DATE) AS day,
-             CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-           FROM events WHERE value IS NOT NULL GROUP BY day),
-         idx AS (SELECT day, total,
-             CAST(row_number() OVER (ORDER BY day) AS INT) AS t FROM d),
-         sums AS (SELECT
-             (SELECT SUM(total) FROM idx WHERE t <= $m) AS sum1,
-             (SELECT SUM(total) FROM idx
-               WHERE t BETWEEN ${m + 1} AND ${2 * m}) AS sum2),
-         rec AS (
-           SELECT $m AS t, sum1 / $m.0 AS level,
-             (sum2 - sum1) / ${m * m}.0 AS trend,
-             $initS,
-             CAST(NULL AS DOUBLE) AS forecast
-           FROM sums WHERE (SELECT COUNT(*) FROM idx) >= ${2 * m}
-           UNION ALL
-           SELECT i.t,
-             $newLvl,
-             $b * (($newLvl) - r.level) + $b1 * r.trend,
-             ${sCols.tail.map(c => s"r.$c").mkString(", ")},
-             $g * (i.total - ($newLvl)) + $g1 * r.s1,
-             r.level + r.trend + r.s1
-           FROM rec r JOIN idx i ON i.t = r.t + 1)
-         SELECT CAST(i.day AS TIMESTAMP) AS day, i.total,
-           ROUND(r.level, 6) AS level, ROUND(r.trend, 6) AS trend,
-           ROUND(r.s$m, 6) AS seasonal,
-           ROUND(r.forecast, 6) AS forecast,
-           ROUND(i.total - r.forecast, 6) AS resid
-         FROM rec r JOIN idx i ON i.t = r.t WHERE r.t > $m"""
-  }
-
   /** Theil-Sen robust trend of the daily total: the median of all
     * pairwise slopes (day pairs i<j), plus the median-residual
     * intercept. Pair fan-out is #days² — calendar-bounded metadata, not
@@ -508,27 +432,6 @@ object Forecast {
             (col("__N") * col("__ss"))), 6).as("power"))
   }
 
-  /** DuckDB twin of [[periodogram]]; `dailyCte` must yield
-    * (day, total). */
-  def periodogramOracleSql(dailyCte: String, maxK: Int = 10): String =
-    s"""WITH d AS ($dailyCte),
-        idx AS (SELECT total,
-            ROW_NUMBER() OVER (ORDER BY day) - 1 AS t
-          FROM d),
-        st AS (SELECT COUNT(*) AS n, AVG(total) AS mu FROM idx),
-        wk AS (SELECT idx.t, idx.total - st.mu AS c, st.n, ks.k
-          FROM idx CROSS JOIN st
-          CROSS JOIN (SELECT UNNEST(range(1, ${maxK + 1})) AS k) ks),
-        g AS (SELECT k,
-            SUM(c * COS(2 * PI() * k * t / n)) AS cc,
-            SUM(c * SIN(2 * PI() * k * t / n)) AS ss,
-            SUM(c * c) AS sq, MAX(n) AS n
-          FROM wk GROUP BY k)
-        SELECT k, ROUND(CAST(n AS DOUBLE) / k, 6) AS period_days,
-          ROUND(CASE WHEN sq > 0
-            THEN (cc * cc + ss * ss) * 2.0 / (n * sq) END, 6) AS power
-        FROM g"""
-
   /** Cross-correlogram between TWO daily metrics of the same stream at
     * lags −maxLag..maxLag: r_k = Σ(x_t−x̄)(y_{t+k}−ȳ) / √(Sxx·Syy)
     * with the classic full-series normalization ([[acf]]'s convention
@@ -574,25 +477,6 @@ object Forecast {
           .as("ccf"))
   }
 
-  /** DuckDB twin of [[crossCorrelation]]; `dailyCte` must yield
-    * (day, x, y) — one row per day, doubles. */
-  def crossCorrelationOracleSql(dailyCte: String, maxLag: Int = 7): String =
-    s"""WITH d AS ($dailyCte),
-        r AS (SELECT x, y, ROW_NUMBER() OVER (ORDER BY day) AS rn FROM d),
-        st AS (SELECT AVG(x) AS mx, AVG(y) AS my,
-            SUM(x * x) AS sxx, SUM(y * y) AS syy, COUNT(*) AS n
-          FROM r),
-        ks AS (SELECT UNNEST(range(-$maxLag, ${maxLag + 1})) AS lag),
-        pairs AS (SELECT ks.lag, a.x, b.y
-          FROM r a CROSS JOIN ks JOIN r b ON b.rn = a.rn + ks.lag
-          WHERE ks.lag != 0)
-        SELECT p.lag, COUNT(p.y) AS n_pairs,
-          ROUND(SUM((p.x - st.mx) * (p.y - st.my)) /
-            SQRT((st.sxx - st.n * st.mx * st.mx) *
-              (st.syy - st.n * st.my * st.my)), 6) AS ccf
-        FROM pairs p CROSS JOIN st
-        GROUP BY p.lag, st.mx, st.my, st.sxx, st.syy, st.n"""
-
   /** Durbin–Watson residual-autocorrelation diagnostic: detrend the
     * daily TOTAL with its OLS line against the day index, then
     * DW = Σ(e_t − e_{t−1})² / Σe_t² (≈2 = independent residuals, →0 =
@@ -631,30 +515,6 @@ object Forecast {
       round(sum(col("__e") * col("__e1")) /
         sum(col("__e") * col("__e")), 6).as("rho1"))
   }
-
-  /** DuckDB twin of [[durbinWatson]]; events table columns are named
-    * inline (ts, value semantics as the operator). */
-  def durbinWatsonOracleSql(tsExpr: String, valueExpr: String,
-                            table: String): String =
-    s"""WITH d0 AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS total
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        d AS (SELECT total,
-            CAST(ROW_NUMBER() OVER (ORDER BY day) AS DOUBLE) AS i
-          FROM d0),
-        m AS (SELECT COUNT(*) AS n, SUM(i) AS si, SUM(total) AS sy,
-            SUM(i * i) AS sii, SUM(i * total) AS siy FROM d),
-        b AS (SELECT n, si, sy,
-            (siy - si * sy / n) / (sii - si * si / n) AS b1 FROM m),
-        r AS (SELECT i, b.b1,
-            total - (sy / n - b1 * si / n) - b1 * i AS e
-          FROM d CROSS JOIN b),
-        l AS (SELECT b1, e, LAG(e, 1) OVER (ORDER BY i) AS e1 FROM r)
-        SELECT COUNT(*) AS n_days, ROUND(ANY_VALUE(b1), 6) AS slope,
-          ROUND(SUM((e - e1) * (e - e1)) / SUM(e * e), 6) AS dw,
-          ROUND(SUM(e * e1) / SUM(e * e), 6) AS rho1
-        FROM l"""
 
   /** Hurst exponent by rescaled-range (R/S) analysis of the daily
     * TOTAL: for each block size n ∈ `scales`, split the series into
@@ -704,42 +564,6 @@ object Forecast {
             col("n_scales").cast("double")), 6).as("hurst"))
   }
 
-  /** DuckDB twin of [[hurstRs]]. */
-  def hurstRsOracleSql(tsExpr: String, valueExpr: String, table: String,
-                       scales: Seq[Int] = Seq(8, 16, 32, 64)): String = {
-    val scaleList = scales.mkString("[", ", ", "]")
-    s"""WITH d0 AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS total
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        d AS (SELECT total,
-            ROW_NUMBER() OVER (ORDER BY day) - 1 AS rn FROM d0),
-        ex AS (SELECT total, rn, UNNEST($scaleList) AS scale FROM d),
-        exb AS (SELECT *, rn // scale AS blk FROM ex),
-        bs AS (SELECT scale, blk, COUNT(*) AS bn, AVG(total) AS bm,
-            stddev_pop(total) AS sdev
-          FROM exb GROUP BY scale, blk
-          HAVING COUNT(*) = scale AND stddev_pop(total) > 0),
-        cum AS (SELECT e.scale, e.blk, bs.sdev,
-            SUM(e.total - bs.bm) OVER (PARTITION BY e.scale, e.blk
-              ORDER BY e.rn ROWS BETWEEN UNBOUNDED PRECEDING AND
-              CURRENT ROW) AS c
-          FROM exb e JOIN bs ON e.scale = bs.scale AND e.blk = bs.blk),
-        rsb AS (SELECT scale, blk,
-            (MAX(c) - MIN(c)) / ANY_VALUE(sdev) AS rs
-          FROM cum GROUP BY scale, blk),
-        ms AS (SELECT LN(CAST(scale AS DOUBLE)) AS x, LN(AVG(rs)) AS y
-          FROM rsb GROUP BY scale HAVING AVG(rs) > 0),
-        g AS (SELECT COUNT(*) AS k, SUM(x) AS sx, SUM(y) AS sy,
-            SUM(x * x) AS sxx, SUM(x * y) AS sxy FROM ms),
-        nd AS (SELECT COUNT(*) AS n FROM d)
-        SELECT CAST(g.k AS BIGINT) AS n_scales,
-          CAST(nd.n AS BIGINT) AS n_days,
-          ROUND((sxy - sx * sy / CAST(k AS DOUBLE))
-            / (sxx - sx * sx / CAST(k AS DOUBLE)), 6) AS hurst
-        FROM g CROSS JOIN nd"""
-  }
-
   /** Newey–West (HAC) standard error of the daily-total mean: serial
     * correlation makes the naive s/√n wildly optimistic on a trending
     * or weekly-patterned metric; the Bartlett-weighted long-run
@@ -777,36 +601,6 @@ object Forecast {
       round(when(seIid > 0, seNw / seIid), 6).as("inflation"))
   }
 
-  /** DuckDB twin of [[neweyWestSe]]. */
-  def neweyWestOracleSql(tsExpr: String, valueExpr: String,
-                         table: String, maxLag: Int = 7): String = {
-    val lagCols = (1 to maxLag).map(k =>
-      s"LAG(total, $k) OVER (ORDER BY day) AS x_$k").mkString(", ")
-    val gCols = (1 to maxLag).map(k =>
-      s"SUM((x - mm) * (x_$k - mm)) AS g$k").mkString(", ")
-    val varNw = (1 to maxLag).foldLeft("g0 / n") { (acc, k) =>
-      s"$acc + 2.0 * ${1.0 - k.toDouble / (maxLag + 1)} * (g$k / n)" }
-    s"""WITH d0 AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS total
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        m AS (SELECT AVG(total) AS mm, CAST(COUNT(*) AS DOUBLE) AS n,
-            COUNT(*) AS ni FROM d0),
-        l AS (SELECT total AS x, $lagCols FROM d0),
-        g AS (SELECT SUM((x - mm) * (x - mm)) AS g0, $gCols,
-            ANY_VALUE(n) AS n, ANY_VALUE(ni) AS ni, ANY_VALUE(mm) AS mm
-          FROM l CROSS JOIN m),
-        e AS (SELECT ni, mm, n, g0,
-            $varNw AS vnw FROM g)
-        SELECT CAST(ni AS BIGINT) AS n_days, ROUND(mm, 6) AS mean,
-          ROUND(SQRT(g0 / n / n), 6) AS se_iid,
-          ROUND(SQRT(GREATEST(0.0, vnw) / n), 6) AS se_nw,
-          ROUND(CASE WHEN SQRT(g0 / n / n) > 0 THEN
-            SQRT(GREATEST(0.0, vnw) / n) / SQRT(g0 / n / n) END, 6)
-            AS inflation
-        FROM e"""
-  }
-
   /** Croston's method for INTERMITTENT demand (many zero-demand days):
     * smooth the nonzero demand SIZES and the INTER-DEMAND INTERVALS
     * separately with the adjust-form EWMA (closed weighted sum — no
@@ -839,33 +633,6 @@ object Forecast {
       round(when(col("__p") > 0, col("__z") / col("__p")), 6)
         .as("forecast"))
   }
-
-  /** DuckDB twin of [[croston]]. */
-  def crostonOracleSql(tsExpr: String, valueExpr: String, table: String,
-                       alpha: Double = 0.25): String =
-    s"""WITH d0 AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS total
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        d AS (SELECT day, total,
-            ROW_NUMBER() OVER (ORDER BY day) AS rn,
-            date_diff('day', LAG(day, 1) OVER (ORDER BY day), day)
-              AS gap
-          FROM d0 WHERE total > 0),
-        kk AS (SELECT MAX(rn) AS k FROM d),
-        a AS (SELECT
-            SUM(POW(${1.0 - alpha}, k - rn) * total)
-              / SUM(POW(${1.0 - alpha}, k - rn)) AS z,
-            SUM(CASE WHEN gap IS NOT NULL THEN
-                POW(${1.0 - alpha}, k - rn) * gap END)
-              / SUM(CASE WHEN gap IS NOT NULL THEN
-                POW(${1.0 - alpha}, k - rn) END) AS p,
-            COUNT(*) AS n
-          FROM d CROSS JOIN kk)
-        SELECT CAST(n AS BIGINT) AS n_demand_days,
-          ROUND(z, 6) AS z_hat, ROUND(p, 6) AS p_hat,
-          ROUND(CASE WHEN p > 0 THEN z / p END, 6) AS forecast
-        FROM a"""
 
   /** Partial autocorrelation (PACF) at lags 1..`maxLag` by the
     * Durbin–Levinson recursion over the raw (unrounded) sample ACF —
@@ -910,47 +677,6 @@ object Forecast {
     frame.select(explode(array((1 to maxLag).map(k =>
         struct(lit(k).as("lag"), col(s"p${k}_$k").as("p"))): _*)).as("o"))
       .select(col("o.lag").as("lag"), round(col("o.p"), 6).as("pacf"))
-  }
-
-  /** DuckDB twin of [[pacf]] — the same named-intermediate unroll. */
-  def pacfOracleSql(tsExpr: String, valueExpr: String, table: String,
-                    maxLag: Int = 5): String = {
-    val lagCols = (1 to maxLag).map(k =>
-      s"LAG(total, $k) OVER (ORDER BY day) AS x_$k").mkString(", ")
-    val rCols = (1 to maxLag).map(k =>
-      s"""SUM((x - mm) * (x_$k - mm)) /
-          ANY_VALUE(ss - nn * mm * mm) AS r$k""").mkString(", ")
-    val steps = new StringBuilder
-    var prev = "dl1"
-    steps.append("dl1 AS (SELECT *, r1 AS p1_1 FROM r)")
-    for (k <- 2 to maxLag) {
-      val num = (1 until k).map(j => s"p${k - 1}_$j * r${k - j}")
-        .mkString(" + ")
-      val den = (1 until k).map(j => s"p${k - 1}_$j * r$j")
-        .mkString(" + ")
-      steps.append(s""",
-        dl${k}a AS (SELECT *, (r$k - ($num)) / (1.0 - ($den))
-          AS p${k}_$k FROM $prev)""")
-      val pjs = (1 until k).map(j =>
-        s"p${k - 1}_$j - p${k}_$k * p${k - 1}_${k - j} AS p${k}_$j")
-        .mkString(", ")
-      steps.append(s""",
-        dl$k AS (SELECT *, $pjs FROM dl${k}a)""")
-      prev = s"dl$k"
-    }
-    val outRows = (1 to maxLag).map(k =>
-      s"SELECT $k AS lag, ROUND(p${k}_$k, 6) AS pacf FROM $prev")
-      .mkString("\n UNION ALL ")
-    s"""WITH d0 AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS total
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        m AS (SELECT AVG(total) AS mm, SUM(total * total) AS ss,
-            COUNT(*) AS nn FROM d0),
-        l AS (SELECT total AS x, $lagCols FROM d0),
-        r AS (SELECT $rCols FROM l CROSS JOIN m),
-        ${steps.toString}
-        $outRows"""
   }
 
   /** Time-series motif discovery: the top-k most similar pairs of
@@ -1003,35 +729,6 @@ object Forecast {
     out
   }
 
-  /** DuckDB twin of [[motifs]]. */
-  def motifsOracleSql(tsExpr: String, valueExpr: String, table: String,
-                      w: Int = 7, topK: Int = 5): String = {
-    val lagCols = (0 until w).map(k =>
-      s"LAG(total, $k) OVER (ORDER BY day) AS v$k").mkString(", ")
-    val meanExpr = (0 until w).map(k => s"v$k").mkString(" + ")
-    val varExpr = (0 until w).map(k => s"(v$k - m) * (v$k - m)")
-      .mkString(" + ")
-    val zCols = (0 until w).map(k => s"(v$k - m) / s AS z$k")
-      .mkString(", ")
-    val d2 = (0 until w).map(k => s"(a.z$k - b.z$k) * (a.z$k - b.z$k)")
-      .mkString(" + ")
-    s"""WITH d0 AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS total
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        sub0 AS (SELECT day, ROW_NUMBER() OVER (ORDER BY day) AS rn,
-            $lagCols FROM d0),
-        sub1 AS MATERIALIZED (SELECT *, ($meanExpr) / $w AS m FROM sub0
-          WHERE v${w - 1} IS NOT NULL),
-        sub2 AS MATERIALIZED (SELECT *, SQRT(($varExpr) / $w) AS s FROM sub1),
-        sub AS (SELECT day, rn, $zCols FROM sub2 WHERE s > 0)
-        SELECT CAST(a.day AS TIMESTAMP) AS day_a,
-          CAST(b.day AS TIMESTAMP) AS day_b,
-          ROUND(SQRT($d2), 6) AS dist
-        FROM sub a JOIN sub b ON b.rn >= a.rn + $w
-        ORDER BY dist, day_a, day_b LIMIT $topK"""
-  }
-
   /** Gumbel (EV-I) return levels by method of moments over BLOCK
     * maxima of the daily total: β = s·√6/π, μ = m − γ·β (γ =
     * Euler–Mascheroni), and the T-block return level
@@ -1066,33 +763,6 @@ object Forecast {
         round(mu, 6).as("mu"), round(beta, 6).as("beta"),
         round(mu - beta * log(-log(lit(1.0) - lit(1.0) /
           col("t_blocks").cast("double"))), 6).as("return_level"))
-  }
-
-  /** DuckDB twin of [[gumbelReturnLevels]]. */
-  def gumbelOracleSql(tsExpr: String, valueExpr: String, table: String,
-                      blockDays: Int = 7,
-                      returns: Seq[Int] = Seq(4, 13, 52)): String = {
-    val rList = returns.mkString("[", ", ", "]")
-    val sqrt6OverPi = math.sqrt(6.0) / math.Pi
-    s"""WITH d0 AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS total
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        d AS (SELECT total,
-            (ROW_NUMBER() OVER (ORDER BY day) - 1) // $blockDays AS blk
-          FROM d0),
-        blocks AS (SELECT blk, MAX(total) AS mx, COUNT(*) AS bn
-          FROM d GROUP BY blk HAVING COUNT(*) = $blockDays),
-        m AS (SELECT AVG(mx) AS mm, stddev_samp(mx) AS s FROM blocks),
-        ts AS (SELECT UNNEST($rList) AS t)
-        SELECT CAST(ts.t AS BIGINT) AS t_blocks,
-          ROUND(mm - 0.5772156649015329 * (s * $sqrt6OverPi), 6) AS mu,
-          ROUND(s * $sqrt6OverPi, 6) AS beta,
-          ROUND((mm - 0.5772156649015329 * (s * $sqrt6OverPi))
-            - (s * $sqrt6OverPi)
-              * LN(-LN(1.0 - 1.0 / CAST(ts.t AS DOUBLE))), 6)
-            AS return_level
-        FROM m CROSS JOIN ts"""
   }
 
   /** Ljung–Box portmanteau test on the daily-total correlogram:
@@ -1133,35 +803,6 @@ object Forecast {
           (nd - col("lag"))).over(wq), 6))
       .select(col("lag"), col("n_pairs"), round(col("__r"), 6).as("acf"),
         col("q_stat"))
-  }
-
-  /** DuckDB twin of [[ljungBox]]. */
-  def ljungBoxOracleSql(tsExpr: String, valueExpr: String, table: String,
-                        maxLag: Int = 7): String = {
-    val lagCols = (1 to maxLag).map(k =>
-      s"LAG(total, $k) OVER (ORDER BY day) AS x_$k").mkString(", ")
-    val unions = (1 to maxLag).map(k =>
-      s"SELECT $k AS lag, x, x_$k AS xk FROM l").mkString(
-      "\n UNION ALL ")
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS total
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        m AS (SELECT AVG(total) AS mm, SUM(total * total) AS ss,
-            COUNT(*) AS nn FROM d),
-        l AS (SELECT total AS x, $lagCols FROM d),
-        u AS ($unions),
-        r AS (SELECT lag, COUNT(xk) AS n_pairs,
-            SUM((x - mm) * (xk - mm)) / ANY_VALUE(ss - nn * mm * mm)
-              AS r,
-            ANY_VALUE(nn) AS nn
-          FROM u, m GROUP BY lag)
-        SELECT lag, n_pairs, ROUND(r, 6) AS acf,
-          ROUND(CAST(nn AS DOUBLE) * (nn + 2) * SUM(r * r
-            / (CAST(nn AS DOUBLE) - lag)) OVER (ORDER BY lag
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6)
-            AS q_stat
-        FROM r"""
   }
 
   /** Pettitt change-point test on the daily total: the rank-based
@@ -1208,33 +849,6 @@ object Forecast {
           col("__kk") / (nd * nd * nd + nd * nd))), 6).as("p_value"))
   }
 
-  /** DuckDB twin of [[pettitt]]. */
-  def pettittOracleSql(tsExpr: String, valueExpr: String,
-                       table: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS total
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        byv AS (SELECT total, COUNT(*) AS c FROM d GROUP BY total),
-        rk AS (SELECT total,
-            CAST(SUM(c) OVER (ORDER BY total) - c AS DOUBLE)
-              + (CAST(c AS DOUBLE) + 1) / 2 AS r FROM byv),
-        nn AS (SELECT COUNT(*) AS n FROM d),
-        u AS (SELECT d.day,
-            SUM(2.0 * rk.r - (nn.n + 1)) OVER (ORDER BY d.day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS u,
-            ROW_NUMBER() OVER (ORDER BY d.day) AS t, nn.n
-          FROM d JOIN rk USING (total) CROSS JOIN nn),
-        f AS (SELECT * FROM u WHERE t < n),
-        k AS (SELECT ANY_VALUE(n) AS n, MAX(ABS(u)) AS k FROM f)
-        SELECT CAST(k.n AS BIGINT) AS n, ROUND(k.k, 6) AS k_stat,
-          CAST((SELECT MIN(day) FROM f WHERE ABS(f.u) = k.k)
-            AS TIMESTAMP) AS change_day,
-          ROUND(LEAST(1.0, 2.0 * EXP(-6.0 * k.k * k.k
-            / (CAST(k.n AS DOUBLE) * k.n * k.n
-              + CAST(k.n AS DOUBLE) * k.n))), 6) AS p_value
-        FROM k"""
-
   /** Lag-1 Granger causality on two daily series from the same event
     * stream: does yesterday's x (daily event COUNT) improve today's y
     * (daily total) beyond yesterday's y? Closed-form F of the
@@ -1275,41 +889,6 @@ object Forecast {
         (rssR - rssU) * (nd - 3) / rssU), 6).as("f_stat"))
   }
 
-  /** DuckDB twin of [[grangerLag1]]. */
-  def grangerLag1OracleSql(tsExpr: String, valueExpr: String,
-                           table: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            COUNT(*) AS n,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS total
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        l AS (SELECT total AS y,
-            LAG(total, 1) OVER (ORDER BY day) AS u,
-            LAG(CAST(n AS DOUBLE), 1) OVER (ORDER BY day) AS v
-          FROM d),
-        rows_ AS (SELECT * FROM l WHERE u IS NOT NULL
-          AND v IS NOT NULL),
-        g AS (SELECT COUNT(*) AS n, AVG(y) AS my, AVG(u) AS mu,
-            AVG(v) AS mv,
-            SUM(y * y) AS syy0, SUM(u * u) AS suu0, SUM(v * v) AS svv0,
-            SUM(y * u) AS syu0, SUM(y * v) AS syv0, SUM(u * v) AS suv0
-          FROM rows_),
-        c AS (SELECT n, CAST(n AS DOUBLE) AS nd,
-            syy0 - n * my * my AS syy, suu0 - n * mu * mu AS suu,
-            svv0 - n * mv * mv AS svv, syu0 - n * my * mu AS syu,
-            syv0 - n * my * mv AS syv, suv0 - n * mu * mv AS suv
-          FROM g),
-        s AS (SELECT n, nd, syy, suu, syu,
-            (syu * svv - syv * suv) / (suu * svv - suv * suv) AS b1,
-            (syv * suu - syu * suv) / (suu * svv - suv * suv) AS b2,
-            syv FROM c)
-        SELECT n, ROUND(b2, 6) AS beta_x,
-          ROUND(CASE WHEN syy - b1 * syu - b2 * syv > 0 THEN
-            ((syy - syu * syu / suu) - (syy - b1 * syu - b2 * syv))
-              * (nd - 3) / (syy - b1 * syu - b2 * syv) END, 6)
-            AS f_stat
-        FROM s"""
-
   /** Permutation entropy (Bandt–Pompe, order m = 3) of the daily
     * total: entropy of the ordinal-pattern distribution over sliding
     * (x_t, x_{t+1}, x_{t+2}) windows, normalized by ln(3!) — 1.0 is
@@ -1341,31 +920,6 @@ object Forecast {
         round(-sum(p * log(p)) / log(lit(6.0)), 6).as("pe"))
   }
 
-  /** DuckDB twin of [[permutationEntropy]]. */
-  def permutationEntropyOracleSql(tsExpr: String, valueExpr: String,
-                                  table: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS total
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        l AS (SELECT total AS x0,
-            LEAD(total, 1) OVER (ORDER BY day) AS x1,
-            LEAD(total, 2) OVER (ORDER BY day) AS x2
-          FROM d),
-        pt AS (SELECT
-            CAST(CASE WHEN x1 > x0 THEN 1 ELSE 0 END AS VARCHAR)
-            || CAST(CASE WHEN x2 > x0 THEN 1 ELSE 0 END AS VARCHAR)
-            || CAST(CASE WHEN x2 > x1 THEN 1 ELSE 0 END AS VARCHAR)
-              AS pattern
-          FROM l WHERE x1 IS NOT NULL AND x2 IS NOT NULL),
-        c AS (SELECT pattern, COUNT(*) AS c FROM pt GROUP BY pattern),
-        t AS (SELECT SUM(c) AS nw FROM c)
-        SELECT CAST(t.nw AS BIGINT) AS n_windows,
-          COUNT(*) AS n_patterns,
-          ROUND(-SUM((CAST(c AS DOUBLE) / nw)
-            * LN(CAST(c AS DOUBLE) / nw)) / LN(6.0), 6) AS pe
-        FROM c CROSS JOIN t GROUP BY t.nw"""
-
   /** Dickey–Fuller unit-root test (constant, no lag augmentation) on
     * the daily total: Δy_t = a + γ·y_{t−1}, t(γ̂) — γ near 0 means a
     * random walk (differencing needed before any stationary model),
@@ -1395,29 +949,6 @@ object Forecast {
       round(when(rss > 0,
         gam / sqrt((rss / (nd - 2)) / sxx)), 6).as("t_stat"))
   }
-
-  /** DuckDB twin of [[dickeyFuller]]. */
-  def dickeyFullerOracleSql(tsExpr: String, valueExpr: String,
-                            table: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS total
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        l AS (SELECT total AS y,
-            LAG(total, 1) OVER (ORDER BY day) AS y1 FROM d),
-        rows_ AS (SELECT y - y1 AS dy, y1 FROM l
-          WHERE y1 IS NOT NULL),
-        g AS (SELECT COUNT(*) AS n, AVG(dy) AS md, AVG(y1) AS m1,
-            SUM(dy * dy) AS sdd, SUM(y1 * y1) AS s11,
-            SUM(dy * y1) AS sd1 FROM rows_),
-        c AS (SELECT n, CAST(n AS DOUBLE) AS nd,
-            s11 - n * m1 * m1 AS sxx, sd1 - n * md * m1 AS sxy,
-            sdd - n * md * md AS syy FROM g)
-        SELECT n, ROUND(sxy / sxx, 6) AS gamma,
-          ROUND(CASE WHEN syy - (sxy / sxx) * sxy > 0 THEN
-            (sxy / sxx) / SQRT(((syy - (sxy / sxx) * sxy) / (nd - 2))
-              / sxx) END, 6) AS t_stat
-        FROM c"""
 
   /** Engle–Granger cointegration test between the daily COUNT (x) and
     * daily TOTAL (y) of the same stream: step 1 OLS y ~ a + b·x, step
@@ -1466,36 +997,6 @@ object Forecast {
         gam / sqrt((rss / (md - 1)) / col("__s11"))), 6).as("t_stat"))
   }
 
-  /** DuckDB twin of [[engleGranger]]. */
-  def engleGrangerOracleSql(tsExpr: String, valueExpr: String,
-                            table: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(COUNT(*) AS DOUBLE) AS x,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS y
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        ols AS (SELECT COUNT(*) AS n, AVG(x) AS mx, AVG(y) AS my,
-            (SUM(x * y) - COUNT(*) * AVG(x) * AVG(y))
-              / (SUM(x * x) - COUNT(*) * AVG(x) * AVG(x)) AS b
-          FROM d),
-        r AS (SELECT d.day,
-            d.y - (ols.my - ols.b * ols.mx) - ols.b * d.x AS e,
-            ols.n, ols.b
-          FROM d CROSS JOIN ols),
-        l AS (SELECT n, b, e,
-            LAG(e, 1) OVER (ORDER BY day) AS e1 FROM r),
-        rows_ AS (SELECT n, b, e - e1 AS de, e1 FROM l
-          WHERE e1 IS NOT NULL),
-        g AS (SELECT ANY_VALUE(n) AS n, ANY_VALUE(b) AS b,
-            COUNT(*) AS m, SUM(de * e1) AS sd1, SUM(e1 * e1) AS s11,
-            SUM(de * de) AS sdd FROM rows_)
-        SELECT CAST(n AS BIGINT) AS n, ROUND(b, 6) AS beta,
-          ROUND(sd1 / s11, 6) AS gamma,
-          ROUND(CASE WHEN sdd - (sd1 / s11) * sd1 > 0 THEN
-            (sd1 / s11) / SQRT(((sdd - (sd1 / s11) * sd1)
-              / (CAST(m AS DOUBLE) - 1)) / s11) END, 6) AS t_stat
-        FROM g"""
-
   /** Mann–Kendall trend test on the daily total: S = Σᵢ<ⱼ sgn(xⱼ−xᵢ)
     * with the tie-corrected variance and the ±1-continuity z — the
     * distribution-free "is there ANY monotone trend" companion to
@@ -1525,28 +1026,6 @@ object Forecast {
           .otherwise(lit(0.0)), 6).as("z_stat"))
   }
 
-  /** DuckDB twin of [[mannKendall]]. */
-  def mannKendallOracleSql(tsExpr: String, valueExpr: String,
-                           table: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS total
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        p AS (SELECT SUM(SIGN(b.total - a.total)) AS s
-          FROM d a JOIN d b ON a.day < b.day),
-        t AS (SELECT SUM(c * (c - 1) * (2.0 * c + 5)) AS tt,
-            SUM(c) AS n
-          FROM (SELECT COUNT(*) AS c FROM d GROUP BY total)),
-        v AS (SELECT p.s, t.n,
-            (CAST(t.n AS DOUBLE) * (t.n - 1) * (2.0 * t.n + 5) - t.tt)
-              / 18.0 AS vs
-          FROM p CROSS JOIN t)
-        SELECT CAST(n AS BIGINT) AS n, CAST(s AS BIGINT) AS s_stat,
-          ROUND(CASE WHEN s > 0 THEN (s - 1) / SQRT(vs)
-            WHEN s < 0 THEN (s + 1) / SQRT(vs) ELSE 0.0 END, 6)
-            AS z_stat
-        FROM v"""
-
   /** Upper-tail dependence between two daily series derived from the
     * same stream (x = daily count, y = daily total): the share of
     * days where BOTH sit in their own top quantile, versus the q²
@@ -1575,27 +1054,6 @@ object Forecast {
         round(col("n_joint").cast("double") / col("n_days") /
           ((1 - q) * (1 - q)), 6).as("lift"))
   }
-
-  /** DuckDB twin of [[tailDependence]]. */
-  def tailDependenceOracleSql(tsExpr: String, valueExpr: String,
-                              table: String,
-                              q: Double = 0.8): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(COUNT(*) AS DOUBLE) AS x,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS y
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        thr AS (SELECT quantile_cont(x, $q) AS tx,
-            quantile_cont(y, $q) AS ty FROM d)
-        SELECT COUNT(*) AS n_days, $q AS q,
-          CAST(SUM(CASE WHEN x > tx AND y > ty THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_joint,
-          ROUND(SUM(CASE WHEN x > tx AND y > ty THEN 1 ELSE 0 END)
-            / CAST(COUNT(*) AS DOUBLE), 6) AS joint_share,
-          ROUND(SUM(CASE WHEN x > tx AND y > ty THEN 1 ELSE 0 END)
-            / CAST(COUNT(*) AS DOUBLE) / ((1 - $q) * (1 - $q)), 6)
-            AS lift
-        FROM d CROSS JOIN thr"""
 
   /** Page–Hinkley change detector over the daily total (offline
     * two-pass form, δ = 0): m_t = Σ_{i≤t}(x_i − x̄); an upward level
@@ -1630,35 +1088,6 @@ object Forecast {
         min(when(col("__g") === col("__pg"), col("day")))
           .cast("string").as("peak_day"))
   }
-
-  /** DuckDB twin of [[pageHinkley]]. */
-  def pageHinkleyOracleSql(tsExpr: String, valueExpr: String,
-                           table: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS total
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        xb AS (SELECT CAST(SUM(CAST(total AS DECIMAL(28,2)))
-            AS DOUBLE) / COUNT(*) AS xb FROM d),
-        m AS (SELECT day,
-            SUM(total - xb) OVER (ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS m
-          FROM d CROSS JOIN xb),
-        e AS (SELECT day,
-            m - MIN(m) OVER (ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS inc,
-            MAX(m) OVER (ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - m
-              AS dec
-          FROM m),
-        p AS (SELECT COUNT(*) AS n_days, MAX(inc) AS pi, MAX(dec) AS pd,
-            MAX(GREATEST(inc, dec)) AS pg FROM e)
-        SELECT ANY_VALUE(n_days) AS n_days,
-          ROUND(ANY_VALUE(pi), 6) AS ph_inc,
-          ROUND(ANY_VALUE(pd), 6) AS ph_dec,
-          CAST(MIN(CASE WHEN GREATEST(inc, dec) = pg THEN day END)
-            AS VARCHAR) AS peak_day
-        FROM e CROSS JOIN p"""
 
   /** Pinball (quantile) loss of rank-based train-half quantile
     * forecasts evaluated on the test half of the daily series — the
@@ -1701,35 +1130,6 @@ object Forecast {
         round(col("__pl").cast("double") /
           (col("n_test") * 1000).cast("double"), 6).as("pinball"))
       .orderBy("q")
-  }
-
-  /** DuckDB twin of [[pinballEval]]. */
-  def pinballEvalOracleSql(tsExpr: String, valueExpr: String,
-                           table: String, split: String,
-                           qs: Seq[Int] = Seq(1, 5, 9)): String = {
-    val qList = qs.mkString("[", ", ", "]")
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(CAST(SUM(CAST($valueExpr AS DECIMAL(18,2)))
-              AS DECIMAL(18,2)) * 100 AS BIGINT) AS yc
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        train AS (SELECT yc,
-            ROW_NUMBER() OVER (ORDER BY yc) AS r FROM d
-          WHERE day < DATE '$split'),
-        nt AS (SELECT COUNT(*) AS n FROM train),
-        ks AS (SELECT UNNEST($qList) AS q),
-        fc AS (SELECT ks.q, train.yc AS f
-          FROM ks CROSS JOIN nt
-          JOIN train ON train.r = (ks.q * nt.n + 9) // 10),
-        test AS (SELECT yc FROM d WHERE day >= DATE '$split')
-        SELECT CAST(fc.q AS DOUBLE) / 10 AS q,
-          ROUND(CAST(ANY_VALUE(fc.f) AS DOUBLE) / 100, 6) AS forecast,
-          COUNT(*) AS n_test,
-          ROUND(CAST(SUM(CASE WHEN test.yc >= fc.f THEN
-              fc.q * (test.yc - fc.f)
-              ELSE (10 - fc.q) * (fc.f - test.yc) END) AS DOUBLE)
-            / (COUNT(*) * 1000), 6) AS pinball
-        FROM test CROSS JOIN fc
-        GROUP BY fc.q ORDER BY q"""
   }
 
   /** Single best variance changepoint (one binary-segmentation step)
@@ -1785,40 +1185,6 @@ object Forecast {
             col("n_days").cast("double"))), 6).as("var_explained"))
   }
 
-  /** DuckDB twin of [[varianceChangepoint]]. */
-  def varianceChangepointOracleSql(tsExpr: String, valueExpr: String,
-                                   table: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(CAST(SUM(CAST($valueExpr AS DECIMAL(18,2)))
-              AS DECIMAL(18,2)) * 100 AS BIGINT) AS yc
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        tot AS (SELECT COUNT(*) AS nd, SUM(yc) AS t,
-            CAST(SUM(CAST(yc AS DECIMAL(14,0))
-              * CAST(yc AS DECIMAL(14,0))) AS DOUBLE) AS ss FROM d),
-        pre AS (SELECT day,
-            COUNT(*) OVER (ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS i,
-            SUM(yc) OVER (ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS lsum
-          FROM d),
-        sc AS (SELECT day, i, lsum, nd, t, ss,
-            CAST(lsum AS DOUBLE) * lsum / i
-              + (CAST(t AS DOUBLE) - lsum)
-                * (CAST(t AS DOUBLE) - lsum) / (nd - i) AS score
-          FROM pre CROSS JOIN tot WHERE i < nd),
-        mx AS (SELECT MAX(score) AS m FROM sc)
-        SELECT CAST(nd AS BIGINT) AS n_days,
-          CAST(day AS VARCHAR) AS split_day,
-          ROUND(CAST(lsum AS DOUBLE) / i / 100.0, 6) AS mean_left,
-          ROUND((CAST(t AS DOUBLE) - lsum) / (nd - i) / 100.0, 6)
-            AS mean_right,
-          ROUND(CASE WHEN ss - CAST(t AS DOUBLE) * t / nd > 0 THEN
-            (score - CAST(t AS DOUBLE) * t / nd)
-              / (ss - CAST(t AS DOUBLE) * t / nd) END, 6)
-            AS var_explained
-        FROM sc CROSS JOIN mx WHERE score = mx.m
-        ORDER BY day LIMIT 1"""
-
   /** Theil–Sen trend PER GROUP: the median pairwise slope of each
     * group's daily series (lower-median convention — the first slope
     * whose cumulative pair count reaches half, an integer-lattice
@@ -1866,30 +1232,6 @@ object Forecast {
     out
   }
 
-  /** DuckDB twin of [[senSlopeByGroup]]. */
-  def senSlopeByGroupOracleSql(groupExpr: String, tsExpr: String,
-                               valueExpr: String,
-                               table: String): String =
-    s"""WITH d AS (SELECT $groupExpr AS g, CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS y
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY g, day),
-        dd AS (SELECT g, y,
-            CAST(date_diff('day', DATE '1970-01-01', day) AS DOUBLE)
-              AS i FROM d),
-        sl AS (SELECT a.g, (b.y - a.y) / (b.i - a.i) AS s
-          FROM dd a JOIN dd b ON a.g = b.g AND b.i > a.i),
-        rk AS (SELECT g, s,
-            ROW_NUMBER() OVER (PARTITION BY g ORDER BY s) AS r,
-            COUNT(*) OVER (PARTITION BY g) AS m FROM sl),
-        med AS (SELECT g, MIN(s) AS med, ANY_VALUE(m) AS n_pairs
-          FROM rk WHERE r * 2 = m OR r * 2 = m + 1 GROUP BY g),
-        nd AS (SELECT g, COUNT(*) AS n_days FROM d GROUP BY g)
-        SELECT med.g AS "group", nd.n_days,
-          CAST(med.n_pairs AS BIGINT) AS n_pairs,
-          ROUND(med.med, 6) AS sen_slope
-        FROM med JOIN nd ON med.g = nd.g ORDER BY "group""""
-
   /** Prediction-interval calibration of the naive Normal bands: fit
     * μ̂, σ̂ on the train half of the daily series, then the share of
     * TEST days inside μ̂ ± k·σ̂ for k = 1, 2, 3 — next to the nominal
@@ -1928,34 +1270,6 @@ object Forecast {
     }.reduce(_ unionByName _).orderBy("k")
   }
 
-  /** DuckDB twin of [[intervalCoverage]]. */
-  def intervalCoverageOracleSql(tsExpr: String, valueExpr: String,
-                                table: String, split: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(CAST(SUM(CAST($valueExpr AS DECIMAL(18,2)))
-              AS DECIMAL(18,2)) AS DOUBLE) AS y,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2)))
-              AS DECIMAL(18,2)) AS yd
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        mo AS (SELECT COUNT(*) AS n, CAST(SUM(yd) AS DOUBLE) AS s1,
-            CAST(SUM(yd * yd) AS DOUBLE) AS s2 FROM d
-          WHERE day < DATE '$split'),
-        mm AS (SELECT n, s1 / n AS mu,
-            SQRT((s2 - n * (s1 / n) * (s1 / n)) / (n - 1)) AS sig
-          FROM mo),
-        ks AS (SELECT UNNEST([1, 2, 3]) AS k),
-        cov AS (SELECT ks.k, COUNT(*) AS n_test,
-            CAST(SUM(CASE WHEN d.y >= mm.mu - ks.k * mm.sig
-              AND d.y <= mm.mu + ks.k * mm.sig THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_within
-          FROM d CROSS JOIN mm CROSS JOIN ks
-          WHERE d.day >= DATE '$split' GROUP BY ks.k)
-        SELECT k, n_test, n_within,
-          ROUND(CAST(n_within AS DOUBLE) / n_test, 6) AS coverage,
-          CASE k WHEN 1 THEN 0.682689 WHEN 2 THEN 0.954500
-            ELSE 0.997300 END AS nominal
-        FROM cov ORDER BY k"""
-
   /** Kendall turning-points randomness test on the daily total: count
     * interior days that are strict local maxima or minima (equal
     * neighbors are NOT turning points — documented tie rule), against
@@ -1992,27 +1306,6 @@ object Forecast {
           .as("z_stat"))
   }
 
-  /** DuckDB twin of [[turningPoints]]. */
-  def turningPointsOracleSql(tsExpr: String, valueExpr: String,
-                             table: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(CAST(SUM(CAST($valueExpr AS DECIMAL(18,2)))
-              AS DECIMAL(18,2)) * 100 AS BIGINT) AS yc
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        f AS (SELECT yc, LAG(yc) OVER (ORDER BY day) AS pv,
-            LEAD(yc) OVER (ORDER BY day) AS nx FROM d),
-        t AS (SELECT CAST(SUM(CASE WHEN (yc > pv AND yc > nx)
-              OR (yc < pv AND yc < nx) THEN 1 ELSE 0 END) AS BIGINT)
-              AS n_turning
-          FROM f WHERE pv IS NOT NULL AND nx IS NOT NULL),
-        nn AS (SELECT COUNT(*) AS n_days FROM d)
-        SELECT CAST(n_days AS BIGINT) AS n_days, n_turning,
-          ROUND(2.0 * (n_days - 2) / 3, 6) AS expected,
-          ROUND(CASE WHEN (16.0 * n_days - 29) / 90 > 0 THEN
-            (CAST(n_turning AS DOUBLE) - 2.0 * (n_days - 2) / 3)
-              / SQRT((16.0 * n_days - 29) / 90) END, 6) AS z_stat
-        FROM t CROSS JOIN nn"""
-
   /** Von Neumann ratio on the daily total: mean-square successive
     * difference over the variance, η = Σd²·n / (n·Σy² − (Σy)²) · (n−1)
     * /(n−1) — 2 under i.i.d., < 2 positive autocorrelation, > 2
@@ -2043,32 +1336,6 @@ object Forecast {
     g.select(col("n_days"), round(eta, 6).as("vn_ratio"),
       round(when(nd > 2, z), 6).as("z_stat"))
   }
-
-  /** DuckDB twin of [[vonNeumann]]. */
-  def vonNeumannOracleSql(tsExpr: String, valueExpr: String,
-                          table: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(CAST(SUM(CAST($valueExpr AS DECIMAL(18,2)))
-              AS DECIMAL(18,2)) * 100 AS BIGINT) AS yc
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        wd AS (SELECT yc, yc - LAG(yc) OVER (ORDER BY day) AS dd
-          FROM d),
-        g AS (SELECT COUNT(*) AS n,
-            CAST(SUM(CAST(yc AS DECIMAL(14,0))) AS DOUBLE) AS sy,
-            CAST(SUM(CAST(yc AS DECIMAL(14,0))
-              * CAST(yc AS DECIMAL(14,0))) AS DOUBLE) AS syy,
-            CAST(SUM(CAST(dd AS DECIMAL(14,0))
-              * CAST(dd AS DECIMAL(14,0))) AS DOUBLE) AS sdd
-          FROM wd),
-        e AS (SELECT n, CAST(n AS DOUBLE) AS nd,
-            (sdd / (CAST(n AS DOUBLE) - 1))
-              / ((syy - sy * sy / CAST(n AS DOUBLE))
-                / (CAST(n AS DOUBLE) - 1)) AS eta
-          FROM g)
-        SELECT CAST(n AS BIGINT) AS n_days, ROUND(eta, 6) AS vn_ratio,
-          ROUND(CASE WHEN nd > 2 THEN (eta - 2)
-            / SQRT(4.0 * (nd - 2) / (nd * nd - 1)) END, 6) AS z_stat
-        FROM e"""
 
   /** Seasonal Mann–Kendall trend test (Hirsch–Slack): q379's S and
     * tie-corrected variance computed WITHIN each day-of-week stratum
@@ -2113,36 +1380,6 @@ object Forecast {
           .otherwise(lit(0.0)), 6).as("z_stat"))
   }
 
-  /** DuckDB twin of [[seasonalMannKendall]]. */
-  def seasonalMannKendallOracleSql(tsExpr: String, valueExpr: String,
-                                   table: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            dayofweek(CAST($tsExpr AS DATE)) + 1 AS szn,
-            CAST(CAST(SUM(CAST($valueExpr AS DECIMAL(18,2)))
-              AS DECIMAL(18,2)) * 100 AS BIGINT) AS yc
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY 1, 2),
-        s AS (SELECT COALESCE(CAST(SUM(SIGN(CAST(b.yc - a.yc
-            AS DOUBLE))) AS BIGINT), 0) AS s
-          FROM d a JOIN d b ON a.szn = b.szn AND a.day < b.day),
-        per AS (SELECT szn, SUM(t) AS ns,
-            SUM(t * (t - 1) * (2 * t + 5)) AS tt
-          FROM (SELECT szn, yc, COUNT(*) AS t FROM d
-            GROUP BY szn, yc) GROUP BY szn),
-        vt AS (SELECT CAST(SUM(ns) AS BIGINT) AS n_days,
-            COUNT(*) AS n_seasons,
-            SUM(ns * (ns - 1) * (2 * ns + 5) - tt) AS v18
-          FROM per)
-        SELECT n_days, CAST(n_seasons AS BIGINT) AS n_seasons,
-          CAST(s AS BIGINT) AS s_stat,
-          ROUND(CASE WHEN s > 0 AND CAST(v18 AS DOUBLE) / 18.0 > 0
-              THEN CAST(s - 1 AS DOUBLE)
-                / SQRT(CAST(v18 AS DOUBLE) / 18.0)
-            WHEN s < 0 AND CAST(v18 AS DOUBLE) / 18.0 > 0
-              THEN CAST(s + 1 AS DOUBLE)
-                / SQRT(CAST(v18 AS DOUBLE) / 18.0)
-            ELSE 0.0 END, 6) AS z_stat
-        FROM vt CROSS JOIN s"""
-
   /** Correlogram PER GROUP: lag-1..maxLag autocorrelation of each
     * group's daily total (classic form — centered on the group mean,
     * normalized by the group sum of squares) — q200's ACF, swept
@@ -2182,42 +1419,6 @@ object Forecast {
       .select(col("__g").as("group"), col("lag"), col("n_days"),
         round(try_divide(col("__num"), col("__ss")), 6).as("acf"))
       .orderBy("group", "lag")
-  }
-
-  /** DuckDB twin of [[acfByGroup]]. */
-  def acfByGroupOracleSql(groupExpr: String, tsExpr: String,
-                          valueExpr: String, table: String,
-                          maxLag: Int = 3): String = {
-    val lagSels = (1 to maxLag).map(k =>
-      s"""SELECT g, $k AS lag,
-           CAST(SUM(CAST(ROUND(c * c_$k, 6) AS DECIMAL(38,6)))
-             AS DOUBLE) AS num
-         FROM lagged WHERE c_$k IS NOT NULL GROUP BY g""")
-      .mkString("\n UNION ALL ")
-    val lagCols = (1 to maxLag).map(k =>
-      s"LAG(c, $k) OVER (PARTITION BY g ORDER BY day) AS c_$k")
-      .mkString(", ")
-    s"""WITH d AS (SELECT $groupExpr AS g, CAST($tsExpr AS DATE) AS day,
-            CAST(SUM(CAST($valueExpr AS DECIMAL(18,2))) AS DOUBLE)
-              AS y
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY 1, 2),
-        base AS (SELECT g, day, y,
-            COUNT(*) OVER (PARTITION BY g) AS n,
-            y - CAST(SUM(CAST(y AS DECIMAL(28,2)))
-              OVER (PARTITION BY g) AS DOUBLE)
-              / COUNT(*) OVER (PARTITION BY g) AS c
-          FROM d),
-        denom AS (SELECT g, ANY_VALUE(n) AS n_days,
-            CAST(SUM(CAST(ROUND(c * c, 6) AS DECIMAL(38,6)))
-              AS DOUBLE) AS ss
-          FROM base GROUP BY g),
-        lagged AS (SELECT g, day, c, $lagCols FROM base),
-        nums AS ($lagSels)
-        SELECT nums.g AS "group", nums.lag,
-          CAST(denom.n_days AS BIGINT) AS n_days,
-          ROUND(nums.num / denom.ss, 6) AS acf
-        FROM nums JOIN denom ON nums.g = denom.g
-        ORDER BY "group", lag"""
   }
 
   /** Day-over-day streak report on the daily total: up/down day
@@ -2268,46 +1469,4 @@ object Forecast {
       .select(col("n_days"), col("n_up"), col("n_down"),
         col("longest_up"), col("longest_down"), col("current_streak"))
   }
-
-  /** DuckDB twin of [[streaks]]. */
-  def streaksOracleSql(tsExpr: String, valueExpr: String,
-                       table: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            CAST(CAST(SUM(CAST($valueExpr AS DECIMAL(18,2)))
-              AS DECIMAL(18,2)) * 100 AS BIGINT) AS yc
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        sgn AS (SELECT day,
-            CASE WHEN yc > LAG(yc) OVER (ORDER BY day) THEN 1
-              WHEN yc < LAG(yc) OVER (ORDER BY day) THEN -1
-              ELSE 0 END AS dir
-          FROM d),
-        chg AS (SELECT day, dir,
-            CASE WHEN LAG(dir) OVER (ORDER BY day) IS NULL
-              OR LAG(dir) OVER (ORDER BY day) <> dir THEN 1 ELSE 0
-              END AS ch
-          FROM sgn),
-        runs AS (SELECT day, dir,
-            COUNT(*) OVER (ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rn,
-            SUM(ch) OVER (ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-          FROM chg),
-        rl AS (SELECT grp, ANY_VALUE(dir) AS dir, COUNT(*) AS len,
-            MAX(rn) AS lastrn
-          FROM runs WHERE dir <> 0 GROUP BY grp),
-        mx AS (SELECT MAX(rn) AS m FROM runs),
-        nt AS (SELECT COUNT(*) AS n_days FROM d)
-        SELECT CAST(nt.n_days AS BIGINT) AS n_days,
-          CAST(COALESCE(SUM(CASE WHEN dir = 1 THEN len END), 0)
-            AS BIGINT) AS n_up,
-          CAST(COALESCE(SUM(CASE WHEN dir = -1 THEN len END), 0)
-            AS BIGINT) AS n_down,
-          CAST(COALESCE(MAX(CASE WHEN dir = 1 THEN len END), 0)
-            AS BIGINT) AS longest_up,
-          CAST(COALESCE(MAX(CASE WHEN dir = -1 THEN len END), 0)
-            AS BIGINT) AS longest_down,
-          CAST(COALESCE(MAX(CASE WHEN lastrn = mx.m
-            THEN dir * len END), 0) AS BIGINT) AS current_streak
-        FROM rl CROSS JOIN mx CROSS JOIN nt
-        GROUP BY nt.n_days"""
 }

@@ -72,19 +72,4 @@ object Hierarchy {
     st.unpersist()
     out
   }
-
-  /** DuckDB twin of [[flatten]] via a recursive walk-up CTE; `edgeCte`
-    * must yield (id, parent) with NULL parent for roots. */
-  def flattenOracleSql(edgeCte: String): String =
-    s"""WITH RECURSIVE t AS ($edgeCte),
-        walk AS (
-          SELECT id, id AS cur, 0 AS depth FROM t
-          UNION ALL
-          SELECT w.id, t.parent AS cur, w.depth + 1 AS depth
-          FROM walk w JOIN t ON t.id = w.cur
-          WHERE t.parent IS NOT NULL)
-        SELECT id, CAST(cur AS BIGINT) AS root,
-          CAST(MAX(depth) OVER (PARTITION BY id) AS BIGINT) AS depth
-        FROM walk
-        QUALIFY depth = MAX(depth) OVER (PARTITION BY id)"""
 }

@@ -58,36 +58,6 @@ object Intervals {
       round(max("__gap"), 6).as("max_gap_len"))
   }
 
-  /** DuckDB twin of [[coalesceIntervals]]; `ivCte` must yield
-    * (key, s, e) numeric. */
-  def coalesceIntervalsOracleSql(ivCte: String): String =
-    s"""WITH iv0 AS ($ivCte),
-        iv AS (SELECT key, CAST(s AS DOUBLE) AS s, CAST(e AS DOUBLE) AS e
-          FROM iv0 WHERE s IS NOT NULL AND e IS NOT NULL AND e >= s),
-        f AS (SELECT key, s, e,
-            CASE WHEN MAX(e) OVER (PARTITION BY key ORDER BY s, e
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-              IS NULL OR s > MAX(e) OVER (PARTITION BY key ORDER BY s, e
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-            THEN 1 ELSE 0 END AS newf
-          FROM iv),
-        isl AS (SELECT key, s, e,
-            SUM(newf) OVER (PARTITION BY key ORDER BY s, e
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-          FROM f),
-        g AS (SELECT key, island, COUNT(*) AS n,
-            MIN(s) AS lo, MAX(e) AS hi
-          FROM isl GROUP BY key, island),
-        gp AS (SELECT key, island, n, lo, hi,
-            lo - LAG(hi) OVER (PARTITION BY key ORDER BY island) AS gap
-          FROM g)
-        SELECT key, CAST(SUM(n) AS BIGINT) AS n_intervals,
-          COUNT(*) AS n_islands,
-          ROUND(SUM(hi - lo), 6) AS covered_len,
-          ROUND(MAX(hi - lo), 6) AS max_island_len,
-          ROUND(MAX(gap), 6) AS max_gap_len
-        FROM gp GROUP BY key"""
-
   /** Open-order BACKLOG curve by calendar month: each header opens at
     * `startCol`'s month and closes after the month of its detail rows'
     * max `endCol` (sweep-line +1/-1 at month grain), so `open_orders`
@@ -135,28 +105,4 @@ object Intervals {
         col("n_opened"), col("n_closed"), col("open_orders"))
       .orderBy("month")
   }
-
-  /** DuckDB twin of [[backlogByMonth]] over orders/lineitem. */
-  def backlogByMonthOracleSql(): String =
-    s"""WITH last AS (SELECT l_orderkey,
-            MAX(CAST(l_shipdate AS DATE)) AS l FROM lineitem
-          GROUP BY l_orderkey),
-        iv AS (SELECT
-            CAST(date_trunc('month', CAST(o_orderdate AS DATE)) AS DATE)
-              AS s,
-            CAST(CAST(date_trunc('month', l) AS DATE)
-              + INTERVAL 1 MONTH AS DATE) AS e
-          FROM orders JOIN last ON o_orderkey = l_orderkey),
-        op AS (SELECT s AS month, COUNT(*) AS n_opened FROM iv
-          GROUP BY s),
-        cl AS (SELECT e AS month, COUNT(*) AS n_closed FROM iv
-          GROUP BY e),
-        mg AS (SELECT COALESCE(op.month, cl.month) AS month,
-            COALESCE(n_opened, 0) AS n_opened,
-            COALESCE(n_closed, 0) AS n_closed
-          FROM op FULL OUTER JOIN cl ON op.month = cl.month)
-        SELECT strftime(month, '%Y-%m-%d') AS month, n_opened, n_closed,
-          CAST(SUM(n_opened - n_closed) OVER (ORDER BY month) AS BIGINT)
-            AS open_orders
-        FROM mg ORDER BY month"""
 }

@@ -131,69 +131,4 @@ object MarkovAttribution {
         round(col("effect") / col("__te"), 6).as("attribution_share"))
       .orderBy("channel")
   }
-
-  /** DuckDB oracle for [[removalEffect]]: the same journey truncation /
-    * transition counting, with the T-step chain evolution UNROLLED as
-    * chained CTEs (the q243 PageRank oracle pattern — DuckDB's
-    * recursive CTEs disallow aggregation in the recursive term). */
-  def removalEffectOracleSql(userCol: String, tsCol: String, typeCol: String,
-                             idCol: String, convType: String,
-                             steps: Int): String = {
-    val rounds = (1 to steps).map { t =>
-      s"""m$t AS MATERIALIZED (SELECT v.scenario, p.dst AS state, SUM(v.mass * p.p) AS mass
-            FROM m${t - 1} v JOIN ps p
-              ON v.scenario = p.scenario AND v.state = p.src
-            GROUP BY 1, 2)"""
-    }.mkString(",\n")
-    s"""WITH fc AS (SELECT $userCol AS u, $tsCol AS fts, $idCol AS fid
-          FROM events WHERE $typeCol = '$convType'
-          QUALIFY row_number() OVER (PARTITION BY $userCol
-            ORDER BY $tsCol, $idCol) = 1),
-        trunc AS (SELECT e.$userCol AS u, e.$tsCol AS ts, e.$idCol AS eid,
-            e.$typeCol AS et
-          FROM events e LEFT JOIN fc ON e.$userCol = fc.u
-          WHERE fc.u IS NULL OR (e.$tsCol, e.$idCol) <= (fc.fts, fc.fid)),
-        seqd AS (SELECT u, et, row_number() OVER w AS rn,
-            lead(et) OVER w AS nxt
-          FROM trunc WINDOW w AS (PARTITION BY u ORDER BY ts, eid)),
-        edges AS (
-          SELECT '__START__' AS src, et AS dst FROM seqd WHERE rn = 1
-          UNION ALL SELECT et, nxt FROM seqd WHERE nxt IS NOT NULL
-          UNION ALL SELECT et,
-            CASE WHEN et = '$convType' THEN '__CONV__' ELSE '__NULL__' END
-          FROM seqd WHERE nxt IS NULL),
-        counts AS (SELECT src,
-            CASE WHEN dst = '$convType' THEN '__CONV__' ELSE dst END AS dst,
-            COUNT(*) AS n
-          FROM edges WHERE src <> '$convType' GROUP BY 1, 2),
-        tot AS (SELECT src, SUM(n) AS t FROM counts GROUP BY src),
-        p AS (SELECT c.src, c.dst, CAST(c.n AS DOUBLE) / t.t AS p
-          FROM counts c JOIN tot t USING (src)),
-        ch AS (SELECT DISTINCT src AS channel FROM counts
-          WHERE src <> '__START__'),
-        scen AS (SELECT '__base__' AS scenario
-          UNION ALL SELECT 'rm_' || channel FROM ch),
-        ps AS MATERIALIZED (SELECT scenario, src, dst, SUM(p) AS p FROM (
-            SELECT s.scenario, p.src,
-              CASE WHEN s.scenario <> '__base__'
-                AND p.dst = substr(s.scenario, 4)
-                THEN '__NULL__' ELSE p.dst END AS dst, p.p
-            FROM scen s CROSS JOIN p
-            UNION ALL
-            SELECT s.scenario, a.st, a.st, 1.0
-            FROM scen s CROSS JOIN (VALUES ('__CONV__'), ('__NULL__')) a(st)
-          ) GROUP BY 1, 2, 3),
-        m0 AS (SELECT scenario, '__START__' AS state, 1.0 AS mass FROM scen),
-        $rounds,
-        cv AS (SELECT scenario, mass FROM m$steps WHERE state = '__CONV__'),
-        bs AS (SELECT mass AS bc FROM cv WHERE scenario = '__base__'),
-        eff AS (SELECT substr(scenario, 4) AS channel, bc, mass AS rc,
-            1 - mass / bc AS effect
-          FROM cv, bs WHERE scenario <> '__base__'),
-        te AS (SELECT SUM(effect) AS te FROM eff)
-        SELECT channel, ROUND(bc, 6) AS base_conv,
-          ROUND(rc, 6) AS removal_conv, ROUND(effect, 6) AS removal_effect,
-          ROUND(effect / te.te, 6) AS attribution_share
-        FROM eff, te ORDER BY channel"""
-  }
 }

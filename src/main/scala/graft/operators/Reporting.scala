@@ -359,42 +359,6 @@ object Reporting {
     out
   }
 
-  /** DuckDB twin of [[decileMigration]]. */
-  def decileMigrationOracleSql(userCol: String, tsCol: String,
-                               valueCol: String, table: String,
-                               buckets: Int = 10): String = {
-    val ps = (1 until buckets).map(_.toDouble / buckets)
-      .mkString("[", ", ", "]")
-    def bucketSql(c: String, es: String) =
-      (0 until buckets - 1).map(i =>
-        s"CASE WHEN $c > ROUND($es[${i + 1}], 6) THEN 1 ELSE 0 END")
-        .mkString(" + ")
-    s"""WITH ev AS (SELECT $userCol AS u, epoch_us($tsCol) AS t,
-            $valueCol AS v FROM $table WHERE $valueCol IS NOT NULL),
-        md AS (SELECT (MIN(t) + MAX(t)) // 2 AS mid FROM ev),
-        sp AS (SELECT u, t <= md.mid AS p1,
-            CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) AS s
-          FROM ev CROSS JOIN md GROUP BY u, t <= md.mid),
-        bp AS (SELECT u,
-            SUM(CASE WHEN p1 THEN s END) AS s1,
-            SUM(CASE WHEN NOT p1 THEN s END) AS s2
-          FROM sp GROUP BY u HAVING COUNT(*) = 2),
-        q1 AS (SELECT quantile_cont(s1, $ps) AS e FROM bp),
-        q2 AS (SELECT quantile_cont(s2, $ps) AS e FROM bp),
-        cells AS (SELECT
-            ${bucketSql("s1", "q1.e")} AS d1,
-            ${bucketSql("s2", "q2.e")} AS d2,
-            COUNT(*) AS n_users
-          FROM bp CROSS JOIN q1 CROSS JOIN q2 GROUP BY 1, 2),
-        rt AS (SELECT d1, SUM(n_users) AS r FROM cells GROUP BY d1)
-        SELECT CAST(cells.d1 AS BIGINT) AS d1,
-          CAST(cells.d2 AS BIGINT) AS d2,
-          CAST(n_users AS BIGINT) AS n_users,
-          ROUND(CAST(n_users AS DOUBLE) / rt.r, 6) AS share_of_d1
-        FROM cells JOIN rt ON cells.d1 = rt.d1
-        ORDER BY d1, d2"""
-  }
-
   /** Matched-basket price indices per month — Laspeyres (base-weighted),
     * Paasche (current-weighted) and Fisher (their geometric mean): "how
     * much of the revenue move is PRICE vs volume," the deflator every
@@ -440,32 +404,6 @@ object Reporting {
     pm.unpersist()
     out
   }
-
-  /** DuckDB twin of [[priceIndex]]; columns are inlined. */
-  def priceIndexOracleSql(dateCol: String, itemCol: String,
-                          revenueCol: String, qtyCol: String,
-                          table: String): String =
-    s"""WITH pm AS (SELECT date_trunc('month', $dateCol) AS month,
-            $itemCol AS it,
-            CAST(SUM(CAST($revenueCol AS DECIMAL(18,2))) AS DOUBLE)
-              / CAST(SUM(CAST($qtyCol AS DECIMAL(18,2))) AS DOUBLE) AS p,
-            CAST(SUM(CAST($qtyCol AS DECIMAL(18,2))) AS DOUBLE) AS q
-          FROM $table
-          WHERE $revenueCol IS NOT NULL AND $qtyCol IS NOT NULL
-          GROUP BY 1, 2
-          HAVING SUM(CAST($qtyCol AS DECIMAL(18,2))) > 0),
-        m0 AS (SELECT MIN(month) AS m0 FROM pm),
-        base AS (SELECT it, p AS p0, q AS q0 FROM pm CROSS JOIN m0
-          WHERE pm.month = m0.m0)
-        SELECT CAST(pm.month AS TIMESTAMP) AS month,
-          COUNT(*) AS n_matched,
-          ROUND(SUM(pm.p * base.q0) / SUM(base.p0 * base.q0), 6)
-            AS laspeyres,
-          ROUND(SUM(pm.p * pm.q) / SUM(base.p0 * pm.q), 6) AS paasche,
-          ROUND(SQRT((SUM(pm.p * base.q0) / SUM(base.p0 * base.q0))
-            * (SUM(pm.p * pm.q) / SUM(base.p0 * pm.q))), 6) AS fisher
-        FROM pm JOIN base USING (it)
-        GROUP BY pm.month ORDER BY pm.month"""
 
   /** Exact Shapley-value channel attribution (coalition value = number
     * of conversions among journeys whose touched-channel SET is
@@ -541,52 +479,6 @@ object Reporting {
     out
   }
 
-  /** DuckDB twin of [[shapleyAttribution]]. The coalition machinery is
-    * re-derived in SQL with the SAME exact factorial literals; channel
-    * indexes come from the same alphabetic ordering. `maxC` bounds the
-    * unrolled popcount/factorial ladders (12 matches the operator). */
-  def shapleyAttributionOracleSql(userCol: String, tsCol: String,
-                                  typeCol: String, convType: String,
-                                  table: String, maxC: Int = 12): String = {
-    val fact = (1 to 12).scanLeft(1.0)((a, k) => a * k)
-    val factCase = (k: String) => (0 to 12).map(i =>
-      s"WHEN $k = $i THEN ${fact(i)}").mkString("CASE ", " ", " END")
-    val popS = (0 until maxC).map(b => s"((v.S >> $b) & 1)").mkString(" + ")
-    s"""WITH ch AS (SELECT $typeCol AS channel,
-            CAST(ROW_NUMBER() OVER (ORDER BY $typeCol) - 1 AS BIGINT) AS i
-          FROM (SELECT DISTINCT $typeCol FROM $table
-            WHERE $typeCol != '$convType')),
-        cc AS (SELECT COUNT(*) AS c FROM ch),
-        fc AS (SELECT $userCol AS u, MIN($tsCol) AS tc FROM $table
-          WHERE $typeCol = '$convType' GROUP BY $userCol),
-        j AS (SELECT e.$userCol AS u,
-            CAST(BIT_OR(1 << ch.i) AS BIGINT) AS mask,
-            MAX(CASE WHEN fc.tc IS NOT NULL THEN 1 ELSE 0 END) AS conv
-          FROM $table e
-          JOIN ch ON e.$typeCol = ch.channel
-          LEFT JOIN fc ON e.$userCol = fc.u
-          WHERE fc.tc IS NULL OR e.$tsCol < fc.tc
-          GROUP BY e.$userCol),
-        mc AS (SELECT mask, SUM(conv) AS nc FROM j GROUP BY mask),
-        co AS (SELECT CAST(UNNEST(range(0, (1 << (SELECT c FROM cc))))
-            AS BIGINT) AS S),
-        v AS (SELECT co.S, COALESCE(SUM(mc.nc), 0) AS v
-          FROM co LEFT JOIN mc ON (mc.mask & co.S) = mc.mask
-          GROUP BY co.S),
-        t AS (SELECT ch.channel,
-            (${factCase(s"($popS)")})
-              * (${factCase(s"((SELECT c FROM cc) - 1 - ($popS))")})
-              / (${factCase("(SELECT c FROM cc)")})
-              * (v2.v - v.v) AS term
-          FROM v JOIN ch ON ((v.S >> ch.i) & 1) = 0
-          JOIN v v2 ON v2.S = (v.S | (1 << ch.i))),
-        sh AS (SELECT channel, SUM(term) AS s FROM t GROUP BY channel),
-        tot AS (SELECT SUM(s) AS tot FROM sh)
-        SELECT channel, ROUND(s, 6) AS shapley,
-          ROUND(CASE WHEN tot > 0 THEN s / tot END, 6) AS share
-        FROM sh CROSS JOIN tot ORDER BY channel"""
-  }
-
   /** Position-based (U-shaped 40/20/40) multi-touch attribution:
     * within the lookback window before each conversion, the first and
     * last touches earn 0.4 each and the middles split the remaining
@@ -638,44 +530,6 @@ object Reporting {
       .orderBy("touch_type")
   }
 
-  /** DuckDB twin of [[positionAttribution]]; uses the events table. */
-  def positionAttributionOracleSql(conversionType: String,
-                                   touchTypes: Seq[String],
-                                   lookbackDays: Int = 30): String = {
-    val touchList = touchTypes.map(t => s"'$t'").mkString(", ")
-    s"""WITH conv AS (SELECT user_id AS u, event_id AS cid,
-            epoch_us(ts) AS cts
-          FROM events WHERE event_type = '$conversionType'),
-        touch AS (SELECT user_id AS u, event_type AS t,
-            epoch_us(ts) AS tts
-          FROM events WHERE event_type IN ($touchList)),
-        paired AS (SELECT conv.cid, touch.t, touch.tts
-          FROM conv JOIN touch ON conv.u = touch.u
-          WHERE touch.tts < conv.cts
-            AND touch.tts >= conv.cts
-              - CAST($lookbackDays AS BIGINT) * 86400000000),
-        ranked AS (SELECT cid, t,
-            ROW_NUMBER() OVER (PARTITION BY cid ORDER BY tts, t) AS rn,
-            COUNT(*) OVER (PARTITION BY cid) AS k
-          FROM paired),
-        credited AS (SELECT t, cid,
-            CAST(CASE WHEN k = 1 THEN 1.0
-              WHEN rn = 1 OR rn = k THEN
-                (CASE WHEN k = 2 THEN 0.5 ELSE 0.4 END)
-              ELSE 0.2 / CAST(k - 2 AS DOUBLE) END
-              AS DECIMAL(28,18)) AS credit
-          FROM ranked),
-        untouched AS (SELECT '(none)' AS t, conv.cid,
-            CAST(1.0 AS DECIMAL(28,18)) AS credit
-          FROM conv WHERE cid NOT IN (SELECT cid FROM paired)),
-        allc AS (SELECT * FROM credited
-          UNION ALL SELECT * FROM untouched)
-        SELECT t AS touch_type,
-          ROUND(CAST(SUM(credit) AS DOUBLE), 6) AS credits,
-          CAST(COUNT(DISTINCT cid) AS BIGINT) AS n_conversions
-        FROM allc GROUP BY t ORDER BY touch_type"""
-  }
-
   /** Hour-of-week activity heatmap: (dow, hour) event counts with the
     * share of total — the capacity-planning profile behind batch
     * windows and alert baselines (Spark's dayofweek convention,
@@ -692,16 +546,6 @@ object Reporting {
         round(col("n").cast("double") / col("__t"), 6).as("share"))
       .orderBy("dow", "hour")
   }
-
-  /** DuckDB twin of [[hourlyProfile]]. */
-  def hourlyProfileOracleSql(tsExpr: String, table: String): String =
-    s"""WITH cells AS (SELECT dayofweek($tsExpr) + 1 AS dow,
-            hour($tsExpr) AS hour, COUNT(*) AS n
-          FROM $table GROUP BY 1, 2),
-        tot AS (SELECT SUM(n) AS t FROM cells)
-        SELECT CAST(dow AS INT) AS dow, CAST(hour AS INT) AS hour, n,
-          ROUND(CAST(n AS DOUBLE) / t, 6) AS share
-        FROM cells CROSS JOIN tot ORDER BY dow, hour"""
 
   /** Weekend lift: Welch comparison of weekend vs weekday DAILY
     * totals — mean ratio and t statistic, the seasonality effect size
@@ -741,32 +585,6 @@ object Reporting {
       round(try_divide(mw - md, sqrt(vw / nw + vd / nd)), 6)
         .as("t_stat"))
   }
-
-  /** DuckDB twin of [[weekendLift]]. */
-  def weekendLiftOracleSql(tsExpr: String, valueExpr: String,
-                           table: String): String =
-    s"""WITH d AS (SELECT CAST($tsExpr AS DATE) AS day,
-            SUM(CAST($valueExpr AS DECIMAL(18,2))) AS t
-          FROM $table WHERE $valueExpr IS NOT NULL GROUP BY day),
-        w AS (SELECT t, (dayofweek(day) + 1 IN (1, 7)) AS we FROM d),
-        g AS (SELECT
-            CAST(SUM(CASE WHEN we THEN 1 ELSE 0 END) AS BIGINT) AS nw,
-            CAST(SUM(CASE WHEN NOT we THEN 1 ELSE 0 END) AS BIGINT)
-              AS nd,
-            CAST(SUM(CASE WHEN we THEN t END) AS DOUBLE) AS sw,
-            CAST(SUM(CASE WHEN NOT we THEN t END) AS DOUBLE) AS sd,
-            CAST(SUM(CASE WHEN we THEN t * t END) AS DOUBLE) AS qw,
-            CAST(SUM(CASE WHEN NOT we THEN t * t END) AS DOUBLE) AS qd
-          FROM w),
-        c AS (SELECT nw, nd, sw / nw AS mw, sd / nd AS md,
-            (qw - nw * (sw / nw) * (sw / nw)) / (nw - 1) AS vw,
-            (qd - nd * (sd / nd) * (sd / nd)) / (nd - 1) AS vd
-          FROM g)
-        SELECT nw AS n_weekend, nd AS n_weekday,
-          ROUND(mw, 6) AS mean_weekend, ROUND(md, 6) AS mean_weekday,
-          ROUND(mw / md, 6) AS lift,
-          ROUND((mw - md) / SQRT(vw / nw + vd / nd), 6) AS t_stat
-        FROM c"""
 
   /** Order-to-last-ship LEAD-TIME profile per priority class: whole
     * days from header date to the max detail ship date, summarized as
@@ -852,57 +670,6 @@ object Reporting {
       .orderBy("month")
   }
 
-  /** DuckDB twin of [[newRepeatRevenue]] over the orders table. */
-  def newRepeatRevenueOracleSql(custExpr: String, tsExpr: String,
-                                valExpr: String, table: String): String =
-    s"""WITH base AS (SELECT $custExpr AS cust,
-            CAST(date_trunc('month', CAST($tsExpr AS DATE)) AS DATE) AS m,
-            CAST($valExpr AS DECIMAL(18, 2)) AS v
-          FROM $table),
-        f AS (SELECT cust, MIN(m) AS fm FROM base GROUP BY cust),
-        g AS (SELECT m,
-            ROUND(COALESCE(CAST(SUM(CASE WHEN m = fm THEN v END)
-              AS DOUBLE), 0.0), 2) AS revenue_new,
-            ROUND(COALESCE(CAST(SUM(CASE WHEN m > fm THEN v END)
-              AS DOUBLE), 0.0), 2) AS revenue_repeat,
-            COUNT(DISTINCT CASE WHEN m = fm THEN cust END)
-              AS n_new_customers,
-            COUNT(DISTINCT CASE WHEN m > fm THEN cust END)
-              AS n_repeat_customers
-          FROM base JOIN f USING (cust) GROUP BY m)
-        SELECT strftime(m, '%Y-%m-%d') AS month, revenue_new,
-          revenue_repeat, n_new_customers, n_repeat_customers,
-          ROUND(revenue_new / (revenue_new + revenue_repeat), 6)
-            AS new_revenue_share
-        FROM g ORDER BY month"""
-
-  /** DuckDB twin of [[leadTimeProfile]] over orders/lineitem. */
-  def leadTimeProfileOracleSql(): String =
-    s"""WITH last AS (SELECT l_orderkey,
-            MAX(CAST(l_shipdate AS DATE)) AS l FROM lineitem
-          GROUP BY l_orderkey),
-        leads AS (SELECT o_orderpriority AS priority,
-            CAST(date_diff('day', CAST(o_orderdate AS DATE), l)
-              AS BIGINT) AS lead
-          FROM orders JOIN last ON o_orderkey = l_orderkey),
-        cells AS (SELECT priority, lead, COUNT(*) AS c
-          FROM leads GROUP BY priority, lead),
-        cum AS (SELECT priority, lead, c,
-            SUM(c) OVER (PARTITION BY priority ORDER BY lead) AS cm,
-            SUM(c) OVER (PARTITION BY priority) AS n,
-            SUM(lead * c) OVER (PARTITION BY priority) AS days
-          FROM cells)
-        SELECT priority, CAST(ANY_VALUE(n) AS BIGINT) AS n_orders,
-          ROUND(CAST(ANY_VALUE(days) AS DOUBLE) / ANY_VALUE(n), 4)
-            AS mean_days,
-          CAST(MIN(CASE WHEN cm * 2 >= n THEN lead END) AS BIGINT)
-            AS p50_days,
-          CAST(MIN(CASE WHEN cm * 10 >= n * 9 THEN lead END) AS BIGINT)
-            AS p90_days,
-          CAST(MIN(CASE WHEN cm * 100 >= n * 99 THEN lead END)
-            AS BIGINT) AS p99_days
-        FROM cum GROUP BY priority ORDER BY priority"""
-
   /** Disjoint-dimension marginals in ONE scan via GROUPING SETS —
     * the grouping-set shape ROLLUP (q147, hierarchical) and CUBE
     * (q148, full lattice) cannot express: per-dim1 totals, per-dim2
@@ -931,16 +698,4 @@ object Reporting {
         col("n"), col("total"))
       .orderBy("lvl", dim1, dim2)
   }
-
-  /** DuckDB twin of [[marginals]]. */
-  def marginalsOracleSql(dim1: String, dim2: String, valExpr: String,
-                         table: String): String =
-    s"""SELECT GROUPING($dim1) * 2 + GROUPING($dim2) AS lvl,
-          COALESCE($dim1, 'ALL') AS $dim1,
-          COALESCE($dim2, 'ALL') AS $dim2,
-          COUNT(*) AS n,
-          CAST(SUM(CAST($valExpr AS DECIMAL(18,2))) AS DOUBLE) AS total
-        FROM $table
-        GROUP BY GROUPING SETS (($dim1), ($dim2), ())
-        ORDER BY lvl, $dim1, $dim2"""
 }

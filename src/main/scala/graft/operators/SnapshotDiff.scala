@@ -51,25 +51,6 @@ object SnapshotDiff {
       .orderBy("source", "status")
   }
 
-  /** DuckDB twin of [[diff]]; the CTEs must yield
-    * (doc_id, text, source). */
-  def diffOracleSql(oldCte: String, newCte: String): String =
-    s"""WITH old0 AS (SELECT doc_id, md5(text) AS h,
-            CAST(length(text) AS BIGINT) AS c, source FROM ($oldCte)),
-        new0 AS (SELECT doc_id, md5(text) AS h,
-            CAST(length(text) AS BIGINT) AS c, source FROM ($newCte)),
-        j AS (SELECT COALESCE(n.source, o.source) AS source,
-            CASE WHEN o.h IS NULL THEN 'added'
-                 WHEN n.h IS NULL THEN 'removed'
-                 WHEN o.h != n.h THEN 'changed'
-                 ELSE 'unchanged' END AS status,
-            COALESCE(o.c, 0) AS c_o, COALESCE(n.c, 0) AS c_n
-          FROM old0 o FULL OUTER JOIN new0 n ON o.doc_id = n.doc_id)
-        SELECT source, status, COUNT(*) AS n_docs,
-          CAST(SUM(c_o) AS BIGINT) AS chars_old,
-          CAST(SUM(c_n) AS BIGINT) AS chars_new
-        FROM j GROUP BY source, status ORDER BY source, status"""
-
   /** Incremental stats merge: per-source (n_docs, chars) for the NEW
     * snapshot computed two ways — directly, and as OLD stats + the
     * diff's delta (added: +1/+c_n; removed: −1/−c_o; changed:
@@ -110,39 +91,6 @@ object SnapshotDiff {
       .orderBy("source")
   }
 
-  /** DuckDB twin of [[incrementalStats]]. */
-  def incrementalStatsOracleSql(oldCte: String, newCte: String): String =
-    s"""WITH old0 AS (SELECT doc_id, md5(text) AS h,
-            CAST(length(text) AS BIGINT) AS c, source FROM ($oldCte)),
-        new0 AS (SELECT doc_id, md5(text) AS h,
-            CAST(length(text) AS BIGINT) AS c, source FROM ($newCte)),
-        olds AS (SELECT source, COUNT(*) AS n_old,
-            CAST(SUM(c) AS BIGINT) AS ch_old FROM old0 GROUP BY source),
-        delta AS (SELECT COALESCE(n.source, o.source) AS source,
-            CAST(SUM(CASE WHEN o.h IS NULL THEN 1
-              WHEN n.h IS NULL THEN -1 ELSE 0 END) AS BIGINT) AS dn,
-            CAST(SUM(COALESCE(n.c, 0) - COALESCE(o.c, 0)) AS BIGINT)
-              AS dc
-          FROM old0 o FULL OUTER JOIN new0 n ON o.doc_id = n.doc_id
-          GROUP BY COALESCE(n.source, o.source)),
-        direct AS (SELECT source, COUNT(*) AS n_direct,
-            CAST(SUM(c) AS BIGINT) AS chars_direct
-          FROM new0 GROUP BY source)
-        SELECT COALESCE(d.source, s.source, dl.source) AS source,
-          COALESCE(d.n_direct, 0) AS n_direct,
-          COALESCE(s.n_old, 0) + COALESCE(dl.dn, 0) AS n_merged,
-          COALESCE(d.chars_direct, 0) AS chars_direct,
-          COALESCE(s.ch_old, 0) + COALESCE(dl.dc, 0) AS chars_merged,
-          COALESCE(d.n_direct, 0) = COALESCE(s.n_old, 0)
-              + COALESCE(dl.dn, 0)
-            AND COALESCE(d.chars_direct, 0) = COALESCE(s.ch_old, 0)
-              + COALESCE(dl.dc, 0) AS consistent
-        FROM direct d
-        FULL OUTER JOIN olds s ON d.source = s.source
-        FULL OUTER JOIN delta dl
-          ON COALESCE(d.source, s.source) = dl.source
-        ORDER BY source"""
-
   /** How much did the CHANGED documents actually change? Per source:
     * count of changed docs and the mean word-set Jaccard between the
     * old and new text, on the exact millionths lattice
@@ -172,24 +120,4 @@ object SnapshotDiff {
         expr("__sj div n_changed").as("mean_jaccard_ppm"))
       .orderBy("source")
   }
-
-  /** DuckDB twin of [[changedSimilarity]]. */
-  def changedSimilarityOracleSql(oldCte: String, newCte: String): String =
-    s"""WITH old0 AS (SELECT doc_id, md5(text) AS h,
-            list_distinct(list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0)) AS w FROM ($oldCte)),
-        new0 AS (SELECT doc_id, source, md5(text) AS h,
-            list_distinct(list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0)) AS w FROM ($newCte)),
-        ch AS (SELECT n.source,
-            (1000000 * CAST(len(list_intersect(o.w, n.w)) AS BIGINT))
-              // NULLIF(CAST(len(list_distinct(list_concat(o.w, n.w)))
-                AS BIGINT), 0) AS j
-          FROM old0 o JOIN new0 n ON o.doc_id = n.doc_id
-          WHERE o.h != n.h)
-        SELECT source, COUNT(*) AS n_changed,
-          CAST(SUM(j) // COUNT(*) AS BIGINT) AS mean_jaccard_ppm
-        FROM ch GROUP BY source ORDER BY source"""
 }

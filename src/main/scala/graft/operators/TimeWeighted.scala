@@ -68,22 +68,4 @@ object TimeWeighted {
         round(sum("__vs") / sum("__n"), 6).as("mean_value"))
       .orderBy(keyCol)
   }
-
-  /** DuckDB twin of [[timeWeightedAvg]] — the flat single-window
-    * formulation (per-key lead), algebraically identical. */
-  def timeWeightedAvgOracleSql(keyExpr: String, tsExpr: String,
-                               ordExpr: String, valExpr: String,
-                               table: String): String =
-    s"""WITH e AS (SELECT $keyExpr AS k, epoch_us($tsExpr) AS t,
-            CAST($valExpr AS DOUBLE) AS v, $ordExpr AS o
-          FROM $table WHERE $valExpr IS NOT NULL),
-        w AS (SELECT k, t, v,
-            lead(t) OVER (PARTITION BY k ORDER BY t, o) AS tn
-          FROM e)
-        SELECT k AS $keyExpr, COUNT(*) AS n_events,
-          CAST(MAX(t) - MIN(t) AS BIGINT) AS span_us,
-          ROUND(SUM(v * (tn - t)) / CAST(MAX(t) - MIN(t) AS DOUBLE), 6)
-            AS twa,
-          ROUND(AVG(v), 6) AS mean_value
-        FROM w GROUP BY k ORDER BY k"""
 }

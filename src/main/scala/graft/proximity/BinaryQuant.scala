@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   */
 object BinaryQuant {
 
-  private def nWords(dim: Int) = (dim + 31) / 32
+  private[graft] def nWords(dim: Int) = (dim + 31) / 32
 
   /** Pack `vecCol` (numeric array, fixed length `dim`) into
     * ceil(dim/32) sign-bit words against the corpus midrange
@@ -86,37 +86,5 @@ object BinaryQuant {
       .localCheckpoint(true)
     packed.unpersist()
     out
-  }
-
-  /** DuckDB mirror of [[hammingTopK]] over a parquet-backed embedding
-    * table CTE (id, vec). `queryPred` filters ids into the query set. */
-  def hammingTopKOracleSql(corpusCte: String, queryPred: String,
-                           dim: Int, k: Int): String = {
-    val n = nWords(dim)
-    s"""WITH corpus AS ($corpusCte),
-        d AS (SELECT id, generate_subscripts(vec, 1) AS dd,
-            CAST(UNNEST(vec) AS DOUBLE) AS v FROM corpus),
-        thr AS (SELECT dd, (MIN(v) + MAX(v)) / 2 AS t
-          FROM d GROUP BY dd),
-        bits AS (SELECT id, CAST((dd - 1) / 32 AS INT) AS wrd,
-            SUM(CASE WHEN v > t
-              THEN CAST(1 AS BIGINT) << (
-                CASE WHEN CAST((dd - 1) / 32 AS INT) = ${n - 1}
-                  THEN ${if (dim % 32 == 0) 32 else dim % 32} ELSE 32 END
-                - 1 - ((dd - 1) % 32))
-              ELSE 0 END) AS w
-          FROM d JOIN thr USING (dd)
-          GROUP BY id, CAST((dd - 1) / 32 AS INT)),
-        ham AS (SELECT q.id AS query_id, c.id AS cand_id,
-            CAST(SUM(bit_count(xor(q.w, c.w))) AS INT) AS hamming
-          FROM (SELECT * FROM bits WHERE $queryPred) q
-          JOIN bits c ON q.wrd = c.wrd AND q.id != c.id
-          GROUP BY q.id, c.id),
-        rk AS (SELECT query_id, cand_id, hamming,
-            ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY hamming ASC, cand_id ASC) AS rank
-          FROM ham)
-        SELECT query_id, cand_id, hamming, CAST(rank AS INT) AS rank
-        FROM rk WHERE rank <= $k"""
   }
 }

@@ -58,33 +58,6 @@ object EmbedDiagnostics {
           .as("mean_cosine"))
   }
 
-  /** DuckDB twin of [[anisotropy]]; `vecsCte` must yield v (a list).
-    */
-  def anisotropyOracleSql(vecsCte: String): String =
-    s"""WITH pts0 AS (SELECT list_transform(v, x -> CAST(x AS DOUBLE))
-            AS v FROM ($vecsCte) WHERE v IS NOT NULL),
-        pts AS (SELECT
-            list_transform(v, x -> ROUND(x / SQRT(list_sum(
-              list_transform(v, y -> y * y))), 6)) AS q
-          FROM pts0),
-        ok AS (SELECT q FROM pts
-          WHERE len(list_filter(q, x -> x IS NULL OR isnan(x))) = 0),
-        rowt AS (SELECT CAST(ROUND(list_sum(
-            list_transform(q, x -> x * x)), 6) AS DECIMAL(28,6)) AS t
-          FROM ok),
-        scal AS (SELECT COUNT(*) AS n, CAST(SUM(t) AS DOUBLE) AS tt
-          FROM rowt),
-        cells AS (SELECT UNNEST(range(1, len(q) + 1)) AS p,
-            UNNEST(q) AS x FROM ok),
-        dims AS (SELECT p,
-            CAST(SUM(CAST(x AS DECIMAL(28,6))) AS DOUBLE) AS s
-          FROM cells GROUP BY p),
-        ssq AS (SELECT COUNT(*) AS dim, SUM(s * s) AS ss FROM dims)
-        SELECT CAST(n AS BIGINT) AS n, CAST(dim AS BIGINT) AS dim,
-          ROUND((ss - tt) / (CAST(n AS DOUBLE)
-            * (CAST(n AS DOUBLE) - 1)), 6) AS mean_cosine
-        FROM scal CROSS JOIN ssq"""
-
   /** Hubness of the kNN graph: in-degree (k-occurrence) distribution
     * skewness + the max hub and orphan share (Radovanović 2010 — in
     * high dimension a few points appear in EVERYONE's kNN list and
@@ -122,35 +95,6 @@ object EmbedDiagnostics {
       round(when(m2 > 0, m3 / (sqrt(m2) * m2)), 6).as("indegree_skew"))
   }
 
-  /** DuckDB twin of [[hubness]]; `knnCte` must be a WITH body whose
-    * final CTE `knn` yields (id, neighbor_id, distance) and `qs`
-    * yields the id universe. */
-  def hubnessOracleSql(knnCte: String, k: Int): String =
-    s"""WITH $knnCte,
-        indeg AS (SELECT qs.vec_id,
-            COALESCE(c.c, 0) AS c
-          FROM qs LEFT JOIN (SELECT neighbor_id, COUNT(*) AS c
-            FROM knn GROUP BY neighbor_id) c
-            ON qs.vec_id = c.neighbor_id),
-        g AS (SELECT COUNT(*) AS n, MAX(c) AS mx,
-            SUM(CASE WHEN c = 0 THEN 1 ELSE 0 END) AS orph,
-            CAST(SUM(c) AS DOUBLE) AS s1,
-            CAST(SUM(c * c) AS DOUBLE) AS s2,
-            CAST(SUM(c * c * c) AS DOUBLE) AS s3
-          FROM indeg),
-        mo AS (SELECT n, mx, orph, CAST(n AS DOUBLE) AS nd,
-            s1 / n AS m, s2, s3 FROM g),
-        cm AS (SELECT n, mx, orph, nd, m,
-            s2 / nd - m * m AS m2,
-            s3 / nd - 3.0 * m * (s2 / nd) + 2.0 * m * m * m AS m3
-          FROM mo)
-        SELECT CAST(n AS BIGINT) AS n, $k AS k,
-          CAST(mx AS BIGINT) AS max_indegree,
-          CAST(orph AS BIGINT) AS n_orphans,
-          ROUND(CASE WHEN m2 > 0 THEN m3 / (SQRT(m2) * m2) END, 6)
-            AS indegree_skew
-        FROM cm"""
-
   /** Mean local intrinsic dimension per label (Levina–Bickel 2004 MLE
     * over kNN distances): LIDᵢ = (k−1) / Σⱼ₌₁..ₖ₋₁ ln(dₖ/dⱼ),
     * averaged per label — the per-REGION companion to q338's global
@@ -186,24 +130,6 @@ object EmbedDiagnostics {
         .as("mean_lid"))
       .orderBy("label")
   }
-
-  /** DuckDB twin of [[lidByLabel]]; `knnCte` as in [[hubnessOracleSql]]
-    * with `qs` carrying (vec_id, label). */
-  def lidByLabelOracleSql(knnCte: String, k: Int): String =
-    s"""WITH $knnCte,
-        a AS (SELECT id, COUNT(*) AS kc, MIN(distance) AS dmin,
-            MAX(distance) AS dk, SUM(LN(distance)) AS slog
-          FROM knn GROUP BY id
-          HAVING COUNT(*) = $k AND MIN(distance) > 0),
-        lid AS (SELECT id,
-            ROUND(CAST($k - 1 AS DOUBLE)
-              / (CAST($k AS DOUBLE) * LN(dk) - slog), 6) AS lid
-          FROM a)
-        SELECT qs.label, COUNT(*) AS n_used,
-          ROUND(CAST(SUM(CAST(lid AS DECIMAL(28,6))) AS DOUBLE)
-            / COUNT(*), 6) AS mean_lid
-        FROM lid JOIN qs ON lid.id = qs.vec_id
-        GROUP BY qs.label ORDER BY qs.label"""
 
   /** Fisher ratio per embedding dimension: between-class variance of
     * the class means over mean within-class variance — which of the d
@@ -242,41 +168,6 @@ object EmbedDiagnostics {
       .orderBy(col("fisher_ratio").desc, col("dim")).limit(topK)
   }
 
-  /** DuckDB twin of [[fisherRatio]]; `vecsCte` must yield (label, v).
-    */
-  def fisherRatioOracleSql(vecsCte: String, topK: Int = 5): String =
-    s"""WITH src AS (SELECT label,
-            list_transform(v, x -> CAST(ROUND(CAST(x AS DOUBLE), 6)
-              AS DECIMAL(9,6))) AS q
-          FROM ($vecsCte) WHERE v IS NOT NULL),
-        cells AS (SELECT label,
-            -- 0-based to match Spark's posexplode (dim is an OUTPUT)
-            UNNEST(range(0, len(q))) AS p, UNNEST(q) AS x
-          FROM src),
-        pc AS (SELECT label, p, COUNT(*) AS n,
-            CAST(SUM(x) AS DOUBLE) AS s1,
-            CAST(SUM(x * x) AS DOUBLE) AS s2
-          FROM cells GROUP BY label, p),
-        wm AS (SELECT label, p, n,
-            s1 / CAST(n AS DOUBLE) AS m,
-            (s2 - CAST(n AS DOUBLE) * (s1 / CAST(n AS DOUBLE))
-              * (s1 / CAST(n AS DOUBLE))) / CAST(n AS DOUBLE) AS vw
-          FROM pc),
-        pd AS (SELECT p, COUNT(*) AS n_classes, SUM(n) AS nt,
-            SUM(n * m) AS sm, SUM(n * m * m) AS smm,
-            SUM(n * vw) AS svw
-          FROM wm GROUP BY p),
-        f AS (SELECT p, n_classes,
-            smm / CAST(nt AS DOUBLE)
-              - (sm / CAST(nt AS DOUBLE)) * (sm / CAST(nt AS DOUBLE))
-              AS between_v,
-            svw / CAST(nt AS DOUBLE) AS within_v
-          FROM pd)
-        SELECT CAST(p AS INT) AS dim, n_classes,
-          ROUND(CASE WHEN within_v > 0 THEN between_v / within_v END,
-            6) AS fisher_ratio
-        FROM f ORDER BY fisher_ratio DESC, dim LIMIT $topK"""
-
   /** Pairwise euclidean distances between label centroids — the k×k
     * geometry summary (which classes sit on top of each other). The
     * centroid table is the metadata output of ONE per-(label, dim)
@@ -303,24 +194,6 @@ object EmbedDiagnostics {
       .orderBy("label_a", "label_b")
   }
 
-  /** DuckDB twin of [[centroidDistances]]; `vecsCte` yields
-    * (label, v). */
-  def centroidDistancesOracleSql(vecsCte: String): String =
-    s"""WITH src AS (SELECT CAST(label AS VARCHAR) AS label,
-            list_transform(v, x -> CAST(ROUND(CAST(x AS DOUBLE), 6)
-              AS DECIMAL(9,6))) AS q
-          FROM ($vecsCte) WHERE v IS NOT NULL),
-        cells AS (SELECT label,
-            UNNEST(range(1, len(q) + 1)) AS p, UNNEST(q) AS x
-          FROM src),
-        cent AS (SELECT label, p,
-            ROUND(CAST(SUM(x) AS DOUBLE) / COUNT(*), 6) AS m
-          FROM cells GROUP BY label, p)
-        SELECT a.label AS label_a, b.label AS label_b,
-          ROUND(SQRT(SUM((a.m - b.m) * (a.m - b.m))), 6) AS dist
-        FROM cent a JOIN cent b ON a.p = b.p AND a.label < b.label
-        GROUP BY a.label, b.label ORDER BY label_a, label_b"""
-
   /** Norm hygiene per label: count, decimal-exact mean norm, exact
     * median norm, max norm — unnormalized-embedding drift (a label
     * whose norms run hot dominates dot-product retrieval even when
@@ -345,17 +218,4 @@ object EmbedDiagnostics {
         round(max("__n"), 6).as("max_norm"))
       .orderBy("label")
   }
-
-  /** DuckDB twin of [[normProfile]]; `vecsCte` yields (label, v). */
-  def normProfileOracleSql(vecsCte: String): String =
-    s"""WITH src AS (SELECT label,
-            ROUND(SQRT(list_sum(list_transform(v,
-              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 6) AS nm
-          FROM ($vecsCte) WHERE v IS NOT NULL)
-        SELECT label, COUNT(*) AS n,
-          ROUND(CAST(SUM(CAST(nm AS DECIMAL(28,6))) AS DOUBLE)
-            / COUNT(*), 6) AS mean_norm,
-          ROUND(quantile_cont(nm, 0.5), 6) AS p50_norm,
-          ROUND(MAX(nm), 6) AS max_norm
-        FROM src GROUP BY label ORDER BY label"""
 }

@@ -177,29 +177,4 @@ object Embeddings {
     pts.unpersist()
     out
   }
-
-  /** DuckDB twin of [[twoNnIntrinsicDim]]; `vecsCte` yields (id, v)
-    * with v a DOUBLE list. */
-  def twoNnOracleSql(vecsCte: String): String =
-    s"""WITH pts AS (SELECT CAST(id AS BIGINT) AS id,
-            [CAST(x AS DOUBLE) FOR x IN v] AS v
-          FROM ($vecsCte) WHERE v IS NOT NULL),
-        pr AS (SELECT a.id AS ia, b.id AS ib,
-            list_sum([(a.v[i] - b.v[i]) * (a.v[i] - b.v[i])
-              for i in range(1, len(a.v) + 1)]) AS d2
-          FROM pts a JOIN pts b ON a.id != b.id),
-        rk AS (SELECT ia, d2,
-            ROW_NUMBER() OVER (PARTITION BY ia ORDER BY d2, ib) AS r
-          FROM pr QUALIFY r <= 2),
-        mu AS (SELECT ia,
-            MIN(CASE WHEN r = 1 THEN d2 END) AS d1,
-            MIN(CASE WHEN r = 2 THEN d2 END) AS d2b
-          FROM rk GROUP BY ia HAVING MIN(CASE WHEN r = 1 THEN d2 END) > 0),
-        s AS (SELECT COUNT(*) AS nu,
-            SUM(0.5 * LN(d2b / d1)) AS s FROM mu)
-        SELECT (SELECT COUNT(*) FROM pts) AS n_points,
-          CAST(nu AS BIGINT) AS n_used,
-          ROUND(CASE WHEN s > 0 THEN CAST(nu AS DOUBLE) / s END, 6)
-            AS id_mle
-        FROM s"""
 }

@@ -138,23 +138,6 @@ object Graph {
     lab
   }
 
-  /** Unrolled ANSI-SQL equivalent of [[labelPropagation]]. */
-  def labelPropagationOracleSql(edgesCte: String, iters: Int): String = {
-    val rounds = (1 to iters).map { t =>
-      s"""v$t AS (SELECT e.dst, l.label, COUNT(*) AS n
-            FROM eg e JOIN lb${t - 1} l ON e.src = l.id GROUP BY e.dst, l.label),
-          b$t AS (SELECT dst, label AS newlab FROM v$t
-            QUALIFY row_number() OVER (PARTITION BY dst ORDER BY n DESC, label ASC) = 1),
-          lb$t AS MATERIALIZED (SELECT l.id, COALESCE(b.newlab, l.label) AS label
-            FROM lb${t - 1} l LEFT JOIN b$t b ON l.id = b.dst)"""
-    }.mkString(",\n")
-    s"""WITH eg AS MATERIALIZED ($edgesCte),
-        nodes AS (SELECT src AS id FROM eg UNION SELECT dst FROM eg),
-        lb0 AS (SELECT id, id AS label FROM nodes),
-        $rounds
-        SELECT id, label FROM lb$iters"""
-  }
-
   /** Per-node triangle count on the UNDIRECTED graph induced by the edge
     * list (direction dropped, self-loops dropped, parallel edges
     * deduped). Standard two-path + closing-edge join over the
@@ -185,44 +168,6 @@ object Graph {
     nodes.join(perNode, Seq("id"), "left")
       .select(col("id"), coalesce(col("triangles"), lit(0L)).as("triangles"))
       .localCheckpoint(true)
-  }
-
-  /** ANSI-SQL equivalent of [[triangleCount]]. */
-  def triangleCountOracleSql(edgesCte: String): String =
-    s"""WITH eg AS ($edgesCte),
-        und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM eg WHERE src != dst),
-        tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-          FROM und e1 JOIN und e2 ON e1.b = e2.a
-          JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-        nodes AS (SELECT a AS id FROM und UNION SELECT b FROM und),
-        pn AS (SELECT id, COUNT(*) AS triangles
-          FROM (SELECT x AS id FROM tri UNION ALL SELECT y FROM tri
-                UNION ALL SELECT z FROM tri) GROUP BY id)
-        SELECT nodes.id, COALESCE(pn.triangles, 0) AS triangles
-        FROM nodes LEFT JOIN pn USING (id)"""
-
-  /** Unrolled ANSI-SQL equivalent of [[pageRank]] for a fixed iteration
-    * count — the oracle form. `edgesCte` must yield (src, dst). */
-  def pageRankOracleSql(edgesCte: String, iters: Int, damping: Double): String = {
-    val d = damping
-    val n = "(SELECT COUNT(*) FROM nodes)"
-    val rounds = (1 to iters).map { t =>
-      s"""c$t AS (SELECT e.dst AS id, SUM(p.pr / o.deg) AS c
-            FROM eg e JOIN pr${t - 1} p ON e.src = p.id
-            JOIN odeg o ON e.src = o.src GROUP BY e.dst),
-          d$t AS (SELECT COALESCE(SUM(pr), 0) AS m FROM pr${t - 1}
-            WHERE id NOT IN (SELECT src FROM eg)),
-          pr$t AS MATERIALIZED (SELECT nodes.id,
-            (1 - $d) / $n + $d * (COALESCE(c.c, 0) + (SELECT m FROM d$t) / $n) AS pr
-            FROM nodes LEFT JOIN c$t c USING (id))"""
-    }.mkString(",\n")
-    s"""WITH eg AS MATERIALIZED ($edgesCte),
-        nodes AS MATERIALIZED (SELECT src AS id FROM eg UNION SELECT dst FROM eg),
-        odeg AS MATERIALIZED (SELECT src, COUNT(*) AS deg FROM eg GROUP BY src),
-        pr0 AS (SELECT id, 1.0 / $n AS pr FROM nodes),
-        $rounds
-        SELECT id, ROUND(pr, 6) AS pagerank FROM pr$iters"""
   }
 
   /** Personalized PageRank: random walks restart at the SEED set
@@ -257,37 +202,6 @@ object Graph {
     }
     Seq(edges, outDeg, nodes, e).foreach(Checkpoints.release)
     pr
-  }
-
-  /** Unrolled ANSI-SQL equivalent of [[personalizedPageRank]] for a
-    * fixed iteration count. `edgesCte` yields (src, dst); `seedsCte`
-    * yields (id). */
-  def personalizedPageRankOracleSql(edgesCte: String, seedsCte: String,
-                                    iters: Int, damping: Double): String = {
-    val d = damping
-    val rounds = (1 to iters).map { t =>
-      s"""c$t AS (SELECT e.dst AS id, SUM(p.pr / o.deg) AS c
-            FROM eg e JOIN pr${t - 1} p ON e.src = p.id
-            JOIN odeg o ON e.src = o.src GROUP BY e.dst),
-          d$t AS (SELECT COALESCE(SUM(pr), 0) AS m FROM pr${t - 1}
-            WHERE id NOT IN (SELECT src FROM eg)),
-          pr$t AS MATERIALIZED (SELECT ev.id,
-            ((1 - $d) + $d * (SELECT m FROM d$t)) * ev.e
-              + $d * COALESCE(c.c, 0) AS pr
-            FROM ev LEFT JOIN c$t c USING (id))"""
-    }.mkString(",\n")
-    s"""WITH eg AS MATERIALIZED ($edgesCte),
-        nodes AS MATERIALIZED (SELECT src AS id FROM eg UNION SELECT dst FROM eg),
-        sd AS (SELECT DISTINCT id FROM ($seedsCte) s
-          WHERE id IN (SELECT id FROM nodes)),
-        ev AS MATERIALIZED (SELECT nodes.id,
-          CASE WHEN nodes.id IN (SELECT id FROM sd)
-            THEN 1.0 / (SELECT COUNT(*) FROM sd) ELSE 0 END AS e
-          FROM nodes),
-        odeg AS MATERIALIZED (SELECT src, COUNT(*) AS deg FROM eg GROUP BY src),
-        pr0 AS (SELECT id, e AS pr FROM ev),
-        $rounds
-        SELECT id, ROUND(pr, 6) AS ppr FROM pr$iters"""
   }
 
   /** Multi-source BFS hop distances: minimum number of directed hops
@@ -329,18 +243,6 @@ object Graph {
     visited
   }
 
-  /** Recursive-CTE equivalent of [[bfsDepths]]. `sourcesCte` must yield
-    * a column `id`. */
-  def bfsDepthsOracleSql(edgesCte: String, sourcesCte: String, maxHops: Int): String =
-    s"""WITH RECURSIVE eg AS ($edgesCte),
-        src0 AS ($sourcesCte),
-        walk(id, dist) AS (
-          SELECT id, 0 FROM src0
-          UNION
-          SELECT e.dst, w.dist + 1 FROM walk w JOIN eg e ON e.src = w.id
-          WHERE w.dist < $maxHops)
-        SELECT id, CAST(MIN(dist) AS INT) AS dist FROM walk GROUP BY id"""
-
   /** Fixed-round k-core peel: repeatedly drop nodes whose UNDIRECTED
     * degree is below k (and their incident edges), `rounds` times.
     * With enough rounds this converges to the true k-core; the round
@@ -367,25 +269,6 @@ object Graph {
     degrees(core, "degree")
       .withColumn("degree", col("degree").cast("int"))
       .filter(col("degree") >= k)
-  }
-
-  /** Unrolled-CTE equivalent of [[kcorePeel]] for a fixed round count. */
-  def kcorePeelOracleSql(edgesCte: String, k: Int, rounds: Int): String = {
-    val steps = (1 to rounds).map { r =>
-      s"""d$r AS (SELECT src, COUNT(*) AS d FROM e${r - 1} GROUP BY src),
-          k$r AS (SELECT src FROM d$r WHERE d >= $k),
-          e$r AS MATERIALIZED (SELECT e.src, e.dst FROM e${r - 1} e
-            WHERE e.src IN (SELECT src FROM k$r)
-              AND e.dst IN (SELECT src FROM k$r))"""
-    }.mkString(",\n")
-    s"""WITH eg AS ($edgesCte),
-        und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM eg WHERE src != dst),
-        e0 AS (SELECT a AS src, b AS dst FROM und
-               UNION ALL SELECT b, a FROM und),
-        $steps
-        SELECT src AS id, CAST(COUNT(*) AS INT) AS degree
-        FROM e$rounds GROUP BY src HAVING COUNT(*) >= $k"""
   }
 
   /** One-row undirected degree summary + degree assortativity (Pearson
@@ -473,50 +356,6 @@ object Graph {
           .as("clustering_coeff"))
   }
 
-  /** ANSI-SQL equivalent of [[clusteringCoefficient]]. */
-  def clusteringCoefficientOracleSql(edgesCte: String): String =
-    s"""WITH eg AS ($edgesCte),
-        und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM eg WHERE src != dst),
-        tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-          FROM und e1 JOIN und e2 ON e1.b = e2.a
-          JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b),
-        nodes AS (SELECT a AS id FROM und UNION SELECT b FROM und),
-        pn AS (SELECT id, COUNT(*) AS triangles
-          FROM (SELECT x AS id FROM tri UNION ALL SELECT y FROM tri
-                UNION ALL SELECT z FROM tri) GROUP BY id),
-        deg AS (SELECT id, COUNT(*) AS degree FROM
-          (SELECT a AS id FROM und UNION ALL SELECT b FROM und) GROUP BY id)
-        SELECT d.id, d.degree, COALESCE(pn.triangles, 0) AS triangles,
-          ROUND(COALESCE(2.0 * COALESCE(pn.triangles, 0) /
-            NULLIF(d.degree * (d.degree - 1), 0), 0.0), 6)
-            AS clustering_coeff
-        FROM deg d LEFT JOIN pn USING (id)"""
-
-  /** ANSI-SQL equivalent of [[linkPrediction]]. */
-  def linkPredictionOracleSql(edgesCte: String): String =
-    s"""WITH eg AS ($edgesCte),
-        und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-          FROM eg WHERE src != dst),
-        adj AS (SELECT a AS u, b AS v FROM und
-                UNION ALL SELECT b, a FROM und),
-        deg AS (SELECT u AS id, COUNT(*) AS deg FROM adj GROUP BY u),
-        paths AS (SELECT e1.u AS a, e2.v AS c,
-            COUNT(*) AS common_neighbors,
-            SUM(1.0 / LN(dm.deg)) AS aa
-          FROM adj e1 JOIN adj e2 ON e1.v = e2.u AND e1.u < e2.v
-          JOIN deg dm ON dm.id = e1.v
-          GROUP BY e1.u, e2.v),
-        nonedge AS (SELECT p.* FROM paths p
-          WHERE NOT EXISTS (SELECT 1 FROM und
-            WHERE und.a = p.a AND und.b = p.c))
-        SELECT n.a AS src, n.c AS dst, n.common_neighbors,
-          ROUND(CAST(n.common_neighbors AS DOUBLE) /
-            (da.deg + dc.deg - n.common_neighbors), 6) AS jaccard,
-          ROUND(n.aa, 6) AS adamic_adar
-        FROM nonedge n JOIN deg da ON da.id = n.a
-        JOIN deg dc ON dc.id = n.c"""
-
   /** Weighted single-source shortest paths, Bellman-Ford style: per
     * round every reached node relaxes its out-edges
     * (dist' = min(dist, dist[src] + w)), `rounds` rounds — the
@@ -543,23 +382,6 @@ object Graph {
     Checkpoints.release(edges)
     dist.select(col("id"), round(col("dist"), 6).as("dist"))
   }
-
-  /** Recursive-CTE equivalent of [[ssspWeighted]]: path enumeration up
-    * to `rounds` hops, then MIN per node — identical left-to-right
-    * accumulation of the path sum, so every candidate distance is
-    * bit-equal to the Spark fold. `edgesCte` must yield (src, dst, w);
-    * `sourcesCte` a column `id`. */
-  def ssspWeightedOracleSql(edgesCte: String, sourcesCte: String,
-                            rounds: Int): String =
-    s"""WITH RECURSIVE eg AS ($edgesCte),
-        src0 AS ($sourcesCte),
-        walk(id, dist, hops) AS (
-          SELECT id, CAST(0 AS DOUBLE), 0 FROM src0
-          UNION ALL
-          SELECT e.dst, w.dist + e.w, w.hops + 1
-          FROM walk w JOIN eg e ON e.src = w.id
-          WHERE w.hops < $rounds)
-        SELECT id, ROUND(MIN(dist), 6) AS dist FROM walk GROUP BY id"""
 
   /** Newman modularity of a community partition, per community:
     * q_c = L_c/m − (D_c/2m)², where L_c counts intra-community
@@ -593,33 +415,6 @@ object Graph {
     Seq(und, lab).foreach(Checkpoints.release)
     out
   }
-
-  /** DuckDB mirror of [[modularity]] over a labels statement (id,
-    * label) — e.g. the [[labelPropagationOracleSql]] output nested as
-    * a CTE — and the same edges CTE. */
-  def modularityOracleSql(edgesCte: String, labelsStmt: String): String =
-    s"""WITH eg AS ($edgesCte),
-        lp AS ($labelsStmt),
-        und AS (SELECT DISTINCT LEAST(src, dst) AS a,
-            GREATEST(src, dst) AS b
-          FROM eg WHERE src != dst),
-        m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS m FROM und),
-        intra AS (SELECT la.label AS community, COUNT(*) AS n_intra
-          FROM und JOIN lp la ON und.a = la.id
-          JOIN lp lb ON und.b = lb.id
-          WHERE la.label = lb.label GROUP BY la.label),
-        deg AS (SELECT l.label AS community, COUNT(*) AS n_nodes,
-            CAST(SUM(d.d) AS BIGINT) AS deg_sum
-          FROM (SELECT id, COUNT(*) AS d FROM (
-              SELECT a AS id FROM und UNION ALL SELECT b FROM und)
-            GROUP BY id) d
-          JOIN lp l ON d.id = l.id GROUP BY l.label)
-        SELECT deg.community, deg.n_nodes,
-          COALESCE(intra.n_intra, 0) AS n_intra, deg.deg_sum,
-          ROUND(COALESCE(intra.n_intra, 0) / m.m -
-            (deg.deg_sum / (2.0 * m.m)) * (deg.deg_sum / (2.0 * m.m)), 6)
-            AS q_c
-        FROM deg LEFT JOIN intra USING (community) CROSS JOIN m"""
 
   /** HITS hubs-and-authorities (Kleinberg '99) on the DIRECTED edge
     * list — the fixed-point [[pageRank]] doesn't cover: a node is a
@@ -668,31 +463,6 @@ object Graph {
     out
   }
 
-  /** DuckDB twin of [[hits]]: the same unrolled power iteration with
-    * scalar-subquery L1 norms. */
-  def hitsOracleSql(edgesCte: String, iters: Int): String = {
-    val rounds = (1 to iters).map { t =>
-      s"""ar$t AS (SELECT e.dst AS id, SUM(h.h) AS s
-            FROM eg e JOIN h${t - 1} h ON e.src = h.id GROUP BY e.dst),
-          a$t AS MATERIALIZED (SELECT n.id,
-            COALESCE(r.s, 0) / (SELECT SUM(s) FROM ar$t) AS a
-            FROM nodes n LEFT JOIN ar$t r USING (id)),
-          hr$t AS (SELECT e.src AS id, SUM(a.a) AS s
-            FROM eg e JOIN a$t a ON e.dst = a.id GROUP BY e.src),
-          h$t AS MATERIALIZED (SELECT n.id,
-            COALESCE(r.s, 0) / (SELECT SUM(s) FROM hr$t) AS h
-            FROM nodes n LEFT JOIN hr$t r USING (id))"""
-    }.mkString(",\n")
-    s"""WITH eg0 AS ($edgesCte),
-        eg AS MATERIALIZED (SELECT DISTINCT src, dst FROM eg0 WHERE src != dst),
-        nodes AS MATERIALIZED (SELECT src AS id FROM eg UNION SELECT dst FROM eg),
-        h0 AS (SELECT id, 1.0 AS h FROM nodes),
-        $rounds
-        SELECT h$iters.id, ROUND(h$iters.h, 6) AS hub,
-          ROUND(a$iters.a, 6) AS authority
-        FROM h$iters JOIN a$iters ON h$iters.id = a$iters.id"""
-  }
-
   /** Degree assortativity (Newman '02): the Pearson correlation of
     * endpoint degrees over the UNDIRECTED edge set — positive means
     * hubs attach to hubs (social cores), negative means hub-and-spoke
@@ -727,28 +497,4 @@ object Graph {
       round(when(vx > 0 && vy > 0, cov / sqrt(vx * vy)), 6)
         .as("assortativity"))
   }
-
-  /** DuckDB twin of [[assortativity]]; `edgesCte` must yield
-    * (src, dst). */
-  def assortativityOracleSql(edgesCte: String): String =
-    s"""WITH eg0 AS ($edgesCte),
-        und AS (SELECT DISTINCT LEAST(src, dst) AS a,
-            GREATEST(src, dst) AS b
-          FROM eg0 WHERE src != dst),
-        sym AS (SELECT a AS src, b AS dst FROM und
-          UNION ALL SELECT b, a FROM und),
-        deg AS (SELECT src AS id, COUNT(*) AS deg FROM sym GROUP BY src),
-        p AS (SELECT CAST(dx.deg AS DOUBLE) AS x,
-            CAST(dy.deg AS DOUBLE) AS y
-          FROM sym JOIN deg dx ON sym.src = dx.id
-          JOIN deg dy ON sym.dst = dy.id),
-        m AS (SELECT COUNT(*) AS m2, SUM(x) AS sx, SUM(y) AS sy,
-            SUM(x*x) AS sxx, SUM(y*y) AS syy, SUM(x*y) AS sxy FROM p),
-        nn AS (SELECT COUNT(*) AS n_nodes FROM deg)
-        SELECT nn.n_nodes, CAST(m.m2 / 2 AS BIGINT) AS n_edges,
-          ROUND(CASE WHEN sxx - sx*sx/m2 > 0 AND syy - sy*sy/m2 > 0 THEN
-            (sxy - sx*sy/m2) /
-              SQRT((sxx - sx*sx/m2) * (syy - sy*sy/m2)) END, 6)
-            AS assortativity
-        FROM m CROSS JOIN nn"""
 }

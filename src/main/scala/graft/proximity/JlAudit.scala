@@ -68,40 +68,4 @@ object JlAudit {
           .as("mean_abs_err"))
       .orderBy("bucket")
   }
-
-  /** DuckDB twin of [[jlDistortion]] over the embeddings table. */
-  def jlDistortionOracleSql(k: Int = 16, idCap: Int = 500): String =
-    s"""WITH base0 AS (SELECT vec_id,
-            list_transform(embedding, v -> CAST(v AS DOUBLE)) AS x
-          FROM embeddings
-          WHERE vec_id < $idCap AND embedding IS NOT NULL),
-        base AS (SELECT vec_id, x,
-            [list_reduce(list_transform(range(0, len(x)), d ->
-               x[d + 1] * CASE WHEN substr(md5(CAST(j AS VARCHAR)
-                 || '_' || CAST(d AS VARCHAR)), 1, 1) < '8'
-                 THEN 1.0 ELSE -1.0 END),
-               (a, b) -> a + b)
-             FOR j IN range(0, $k)] AS proj,
-            SQRT(list_reduce(list_transform(x, v -> v * v),
-              (a, b) -> a + b)) AS nx
-          FROM base0),
-        b2 AS (SELECT vec_id, x, proj, nx,
-            SQRT(list_reduce(list_transform(proj, v -> v * v),
-              (a, b) -> a + b)) AS np
-          FROM base),
-        p AS (SELECT
-            list_reduce(list_transform(range(1, len(a.x) + 1), i ->
-              a.x[i] * b.x[i]), (s, t) -> s + t)
-              / (a.nx * b.nx) AS ct,
-            list_reduce(list_transform(range(1, len(a.proj) + 1), i ->
-              a.proj[i] * b.proj[i]), (s, t) -> s + t)
-              / (a.np * b.np) AS cp
-          FROM b2 a JOIN b2 b ON a.vec_id < b.vec_id)
-        SELECT GREATEST(LEAST(CAST(FLOOR((ct + 1.0) * 5) AS BIGINT),
-            9), 0) AS bucket,
-          COUNT(*) AS n_pairs,
-          ROUND(AVG(ct), 6) AS mean_true,
-          ROUND(AVG(cp), 6) AS mean_proj,
-          ROUND(AVG(ABS(ct - cp)), 6) AS mean_abs_err
-        FROM p GROUP BY bucket ORDER BY bucket"""
 }

@@ -38,25 +38,6 @@ object Truss {
       .orderBy("support")
   }
 
-  /** DuckDB twin of [[supportHistogram]]; `edgesCte` is a WITH body
-    * whose final CTE yields (src, dst). */
-  def supportHistogramOracleSql(edgesCte: String,
-                                finalCte: String): String =
-    s"""WITH $edgesCte,
-        canon AS (SELECT DISTINCT LEAST(src, dst) AS a,
-            GREATEST(src, dst) AS b
-          FROM $finalCte WHERE src <> dst),
-        adj AS (SELECT a AS u, b AS v FROM canon
-          UNION ALL SELECT b, a FROM canon),
-        wedges AS (SELECT l.u AS a, r.v AS b
-          FROM adj l JOIN adj r ON l.v = r.u WHERE l.u < r.v),
-        sup AS (SELECT w.a, w.b, COUNT(*) AS s
-          FROM wedges w JOIN canon c ON w.a = c.a AND w.b = c.b
-          GROUP BY w.a, w.b)
-        SELECT COALESCE(sup.s, 0) AS support, COUNT(*) AS n_edges
-        FROM canon LEFT JOIN sup ON canon.a = sup.a AND canon.b = sup.b
-        GROUP BY COALESCE(sup.s, 0) ORDER BY support"""
-
   /** Rich-club coefficient curve: φ(k) = 2·E_k / (N_k·(N_k−1)) where
     * N_k = nodes with degree > k and E_k = edges between them — do
     * the hubs preferentially wire to each other? One degree groupBy,
@@ -83,34 +64,5 @@ object Truss {
           lit(2.0) * coalesce(col("n_edges_within"), lit(0L)) /
             (col("n_nodes") * (col("n_nodes") - 1))), 6).as("phi"))
       .orderBy("k")
-  }
-
-  /** DuckDB twin of [[richClub]]; `edgesCte`/`finalCte` as in
-    * [[supportHistogramOracleSql]]. */
-  def richClubOracleSql(edgesCte: String, finalCte: String,
-                        ks: Seq[Int]): String = {
-    val kList = ks.mkString("[", ", ", "]")
-    s"""WITH $edgesCte,
-        canon AS (SELECT DISTINCT LEAST(src, dst) AS a,
-            GREATEST(src, dst) AS b
-          FROM $finalCte WHERE src <> dst),
-        deg AS (SELECT id, COUNT(*) AS d FROM (
-          SELECT a AS id FROM canon
-          UNION ALL SELECT b FROM canon) GROUP BY id),
-        kf AS (SELECT UNNEST($kList) AS k),
-        nk AS (SELECT kf.k, COUNT(*) AS n_nodes
-          FROM kf JOIN deg ON deg.d > kf.k GROUP BY kf.k),
-        ek AS (SELECT kf.k, COUNT(*) AS ne
-          FROM kf JOIN canon ON TRUE
-          JOIN deg da ON canon.a = da.id AND da.d > kf.k
-          JOIN deg db ON canon.b = db.id AND db.d > kf.k
-          GROUP BY kf.k)
-        SELECT CAST(nk.k AS INT) AS k, nk.n_nodes,
-          COALESCE(ek.ne, 0) AS n_edges_within,
-          ROUND(CASE WHEN nk.n_nodes > 1 THEN
-            2.0 * COALESCE(ek.ne, 0)
-              / (CAST(nk.n_nodes AS DOUBLE) * (nk.n_nodes - 1)) END, 6)
-            AS phi
-        FROM nk LEFT JOIN ek ON nk.k = ek.k ORDER BY k"""
   }
 }

@@ -79,53 +79,4 @@ object Bursts {
         round(dfPoisson / col("df"), 6).as("clumping"))
       .orderBy(col("burstiness").desc, col("term")).limit(topK)
   }
-
-  /** DuckDB twin of [[termBurstiness]]; `docsCte` yields (id, text). */
-  def termBurstinessOracleSql(docsCte: String, minCf: Long,
-                              topK: Int): String =
-    s"""WITH docs AS ($docsCte),
-        dt AS (SELECT id, term, COUNT(*) AS c FROM (
-            SELECT id, UNNEST(list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0)) AS term
-            FROM docs)
-          GROUP BY id, term),
-        nd AS (SELECT CAST(COUNT(DISTINCT id) AS DOUBLE) AS n FROM docs),
-        t AS (SELECT term, SUM(c) AS cf, COUNT(*) AS df FROM dt
-          GROUP BY term HAVING SUM(c) >= $minCf)
-        SELECT term, CAST(cf AS BIGINT) AS cf, CAST(df AS BIGINT) AS df,
-          ROUND(CAST(cf AS DOUBLE) / df, 6) AS burstiness,
-          ROUND(nd.n * (1.0 - EXP(-CAST(cf AS DOUBLE) / nd.n)) / df, 6)
-            AS clumping
-        FROM t CROSS JOIN nd
-        ORDER BY burstiness DESC, term LIMIT $topK"""
-
-  /** DuckDB twin of [[termBursts]]; `docsCte` must yield (batch, text). */
-  def termBurstsOracleSql(docsCte: String, minCount: Long = 10): String =
-    s"""WITH docs AS ($docsCte),
-        tb AS (SELECT batch, term, COUNT(*) AS n FROM (
-            SELECT batch, UNNEST(list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0)) AS term
-            FROM docs)
-          GROUP BY batch, term),
-        bv AS (SELECT batch, SUM(n) AS nb FROM tb GROUP BY batch),
-        tt AS (SELECT term, SUM(n) AS nt FROM tb GROUP BY term),
-        corp AS (SELECT SUM(nb) AS nall FROM bv),
-        j AS (SELECT tb.batch, tb.term, tb.n, bv.nb, tt.nt, corp.nall
-          FROM tb JOIN bv USING (batch) JOIN tt USING (term)
-          CROSS JOIN corp),
-        sc AS (SELECT batch, term, n, nt - n AS n_rest,
-            CAST(n AS DOUBLE) / nb AS rate_in,
-            CAST(nt - n AS DOUBLE) / (nall - nb) AS rate_rest,
-            (CAST(n AS DOUBLE) / nb - CAST(nt - n AS DOUBLE) / (nall - nb))
-              / SQRT((CAST(nt AS DOUBLE) / nall)
-                * (1 - CAST(nt AS DOUBLE) / nall)
-                * (1.0 / nb + 1.0 / (nall - nb))) AS z
-          FROM j WHERE n >= $minCount AND nall - nb > 0)
-        SELECT batch, term, CAST(n AS BIGINT) AS n_in,
-          CAST(n_rest AS BIGINT) AS n_rest,
-          ROUND(rate_in, 6) AS rate_in, ROUND(rate_rest, 6) AS rate_rest,
-          ROUND(z, 6) AS z_burst
-        FROM sc WHERE ROUND(z, 6) > 0"""
 }

@@ -47,28 +47,4 @@ object CharStats {
           .cast("double") / count(lit(1)), 6).as("share_junk"))
       .orderBy("source")
   }
-
-  /** DuckDB twin of [[charEntropyProfile]] over the documents table.
-    */
-  def charEntropyProfileOracleSql(junkBelow: Double = 2.0): String =
-    s"""WITH chars AS (SELECT source, doc_id,
-            UNNEST(string_split_regex(lower(text), '')) AS ch
-          FROM documents WHERE text IS NOT NULL),
-        nz AS (SELECT * FROM chars WHERE length(ch) > 0),
-        counts AS (SELECT source, doc_id, ch, COUNT(*) AS c
-          FROM nz GROUP BY source, doc_id, ch),
-        perdoc AS (SELECT source,
-            ROUND(LN(CAST(SUM(c) AS DOUBLE))
-              - CAST(SUM(CAST(ROUND(CAST(c AS DOUBLE)
-                * LN(CAST(c AS DOUBLE)), 6) AS DECIMAL(28,6)))
-                AS DOUBLE) / CAST(SUM(c) AS DOUBLE), 6) AS h
-          FROM counts GROUP BY source, doc_id)
-        SELECT source, COUNT(*) AS n_docs,
-          ROUND(CAST(SUM(CAST(h AS DECIMAL(28,6))) AS DOUBLE)
-            / COUNT(*), 6) AS mean_h,
-          ROUND(quantile_cont(h, 0.5), 6) AS p50_h,
-          ROUND(MIN(h), 6) AS min_h,
-          ROUND(SUM(CASE WHEN h < $junkBelow THEN 1 ELSE 0 END)
-            / CAST(COUNT(*) AS DOUBLE), 6) AS share_junk
-        FROM perdoc GROUP BY source ORDER BY source"""
 }

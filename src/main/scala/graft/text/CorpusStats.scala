@@ -104,33 +104,6 @@ object CorpusStats {
       .orderBy("bucket")
   }
 
-  /** DuckDB twin of [[noveltyCurve]] over the documents table. */
-  def noveltyCurveOracleSql(n: Int = 3, grid: Int = 16): String =
-    s"""WITH bd AS (SELECT MIN(CAST(doc_id AS BIGINT)) AS lo,
-            MAX(CAST(doc_id AS BIGINT))
-              - MIN(CAST(doc_id AS BIGINT)) + 1 AS span
-          FROM documents),
-        toks AS (SELECT
-            (CAST(doc_id AS BIGINT) - bd.lo) * $grid // bd.span AS b,
-            list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0) AS ws
-          FROM documents CROSS JOIN bd),
-        sh0 AS (SELECT b,
-            UNNEST(CASE WHEN len(ws) < $n THEN
-              [array_to_string(ws, ' ')]
-              ELSE [array_to_string(ws[i:i+$n-1], ' ')
-                FOR i IN range(1, len(ws) - $n + 2)] END) AS sh
-          FROM toks),
-        sh AS (SELECT DISTINCT b, sh FROM sh0),
-        fb AS (SELECT sh, MIN(b) AS f FROM sh GROUP BY sh)
-        SELECT CAST(sh.b AS BIGINT) AS bucket, COUNT(*) AS n_distinct,
-          CAST(SUM(CASE WHEN sh.b = fb.f THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_new,
-          ROUND(SUM(CASE WHEN sh.b = fb.f THEN 1 ELSE 0 END)
-            / CAST(COUNT(*) AS DOUBLE), 6) AS novelty
-        FROM sh JOIN fb USING (sh)
-        GROUP BY sh.b ORDER BY bucket"""
-
   /** Boilerplate mass per source: the share of each source's shingle
     * INSTANCES that belong to high-document-frequency shingles
     * (df ≥ minDf distinct docs) — how much of a feed is navigation
@@ -159,30 +132,6 @@ object CorpusStats {
           6))
       .orderBy("source")
   }
-
-  /** DuckDB twin of [[boilerplateMass]] over the documents table. */
-  def boilerplateMassOracleSql(n: Int = 3, minDf: Long = 5L): String =
-    s"""WITH toks AS (SELECT doc_id, source,
-            list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0) AS ws
-          FROM documents),
-        inst0 AS (SELECT doc_id, source,
-            UNNEST(CASE WHEN len(ws) < $n THEN
-              [array_to_string(ws, ' ')]
-              ELSE [array_to_string(ws[i:i+$n-1], ' ')
-                FOR i IN range(1, len(ws) - $n + 2)] END) AS sh
-          FROM toks),
-        -- wordShingles dedupes within a doc; mirror it
-        inst AS (SELECT DISTINCT doc_id, source, sh FROM inst0),
-        dfq AS (SELECT sh, COUNT(*) AS df
-          FROM (SELECT DISTINCT doc_id, sh FROM inst) GROUP BY sh)
-        SELECT source, COUNT(*) AS n_instances,
-          CAST(SUM(CASE WHEN df >= $minDf THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_boilerplate,
-          ROUND(SUM(CASE WHEN df >= $minDf THEN 1 ELSE 0 END)
-            / CAST(COUNT(*) AS DOUBLE), 6) AS boilerplate_share
-        FROM inst JOIN dfq USING (sh)
-        GROUP BY source ORDER BY source"""
 
   /** Mixture reweighting: given TARGET token shares per source (the
     * training-mix recipe), the per-source sampling weight that turns
@@ -271,71 +220,6 @@ object CorpusStats {
       .orderBy("source")
   }
 
-  /** DuckDB twin of [[mixtureApply]] over the documents table. */
-  def mixtureApplyOracleSql(targetShares: Map[String, Double],
-                            cap: Double = 3.0): String = {
-    val cases = targetShares.toSeq.sortBy(_._1).map { case (s, p) =>
-      s"WHEN source = '$s' THEN $p" }.mkString(" ")
-    s"""WITH base AS (SELECT source, doc_id AS id,
-            CAST(len(list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0)) AS BIGINT) AS tok
-          FROM documents WHERE text IS NOT NULL),
-        per AS (SELECT source, COUNT(*) AS n_docs,
-            CAST(SUM(tok) AS BIGINT) AS n_tokens
-          FROM base GROUP BY source),
-        tot AS (SELECT SUM(n_tokens) AS t FROM per),
-        bud AS (SELECT source, n_docs, n_tokens,
-            ROUND(LEAST(ROUND(CASE $cases ELSE 0.0 END, 6)
-                / ROUND(CAST(n_tokens AS DOUBLE) / t, 6), $cap), 6)
-              * n_tokens AS budget
-          FROM per CROSS JOIN tot),
-        ranked AS (SELECT source, id, tok,
-            SUM(tok) OVER (PARTITION BY source
-              ORDER BY md5(CAST(id AS VARCHAR)), id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-          FROM base),
-        kept AS (SELECT ranked.source, tok,
-            (cum <= bud.budget) AS keep
-          FROM ranked JOIN bud USING (source)),
-        summary AS (SELECT kept.source,
-            CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT)
-              AS n_kept,
-            CAST(SUM(CASE WHEN keep THEN tok ELSE 0 END) AS BIGINT)
-              AS tokens_kept
-          FROM kept GROUP BY kept.source),
-        kt AS (SELECT SUM(tokens_kept) AS k FROM summary)
-        SELECT bud.source, bud.n_docs, bud.n_tokens, summary.n_kept,
-          summary.tokens_kept,
-          ROUND(CAST(summary.tokens_kept AS DOUBLE) / kt.k, 6)
-            AS realized_share
-        FROM summary JOIN bud USING (source) CROSS JOIN kt
-        ORDER BY bud.source"""
-  }
-
-  /** DuckDB twin of [[mixtureReweight]] over the documents table. */
-  def mixtureReweightOracleSql(targetShares: Map[String, Double],
-                               cap: Double = 3.0): String = {
-    val cases = targetShares.toSeq.sortBy(_._1).map { case (s, p) =>
-      s"WHEN source = '$s' THEN $p" }.mkString(" ")
-    s"""WITH per AS (SELECT source, COUNT(*) AS n_docs,
-            CAST(SUM(len(list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0))) AS BIGINT) AS n_tokens
-          FROM documents WHERE text IS NOT NULL GROUP BY source),
-        tot AS (SELECT SUM(n_tokens) AS t FROM per),
-        sh AS (SELECT source, n_docs, n_tokens,
-            ROUND(CAST(n_tokens AS DOUBLE) / t, 6) AS current_share,
-            ROUND(CASE $cases ELSE 0.0 END, 6) AS target_share
-          FROM per CROSS JOIN tot),
-        w AS (SELECT *, ROUND(LEAST(target_share / current_share,
-            $cap), 6) AS weight FROM sh)
-        SELECT source, n_docs, n_tokens, current_share, target_share,
-          weight,
-          CAST(ROUND(weight * n_tokens, 0) AS BIGINT) AS expected_tokens
-        FROM w ORDER BY source"""
-  }
-
   /** Per-source token-FERTILITY profile: word-length distribution
     * summarized as mean / type-1 p50 / p90 word length plus tokens per
     * document — the chars-per-token read a tokenizer team checks before
@@ -383,38 +267,6 @@ object CorpusStats {
       .orderBy("source")
   }
 
-  /** DuckDB twin of [[tokenFertility]]. */
-  def tokenFertilityOracleSql(srcExpr: String, textExpr: String,
-                              table: String): String =
-    s"""WITH tok AS (SELECT $srcExpr AS source,
-            unnest(list_filter(
-              string_split_regex(lower(trim($textExpr)), '\\s+'),
-              x -> length(x) > 0)) AS term
-          FROM $table WHERE $textExpr IS NOT NULL),
-        cells AS (SELECT source, CAST(length(term) AS BIGINT) AS len,
-            COUNT(*) AS c
-          FROM tok GROUP BY source, len),
-        cum AS (SELECT source, len, c,
-            SUM(c) OVER (PARTITION BY source ORDER BY len) AS cm,
-            SUM(c) OVER (PARTITION BY source) AS n,
-            SUM(len * c) OVER (PARTITION BY source) AS chars
-          FROM cells),
-        per AS (SELECT source,
-            CAST(ANY_VALUE(n) AS BIGINT) AS n_tokens,
-            ROUND(CAST(ANY_VALUE(chars) AS DOUBLE) / ANY_VALUE(n), 4)
-              AS mean_word_len,
-            CAST(MIN(CASE WHEN cm * 2 >= n THEN len END) AS BIGINT)
-              AS p50_word_len,
-            CAST(MIN(CASE WHEN cm * 10 >= n * 9 THEN len END) AS BIGINT)
-              AS p90_word_len
-          FROM cum GROUP BY source),
-        nd AS (SELECT $srcExpr AS source, COUNT(*) AS n_docs
-          FROM $table WHERE $textExpr IS NOT NULL GROUP BY source)
-        SELECT source, n_docs, n_tokens, mean_word_len, p50_word_len,
-          p90_word_len,
-          ROUND(CAST(n_tokens AS DOUBLE) / n_docs, 4) AS tokens_per_doc
-        FROM nd JOIN per USING (source) ORDER BY source"""
-
   /** Length x quality occupancy GRID: documents bucketed by char
     * length (equi-width `lenWidth`, top bucket open) and by stopword
     * ratio (tenths, integer-exact `(10*n_stop) div n_tokens`), with
@@ -456,33 +308,6 @@ object CorpusStats {
           .as("mean_chars"))
       .orderBy("len_bucket", "q_bucket")
   }
-
-  /** DuckDB twin of [[lengthQualityGrid]] — `stopwordsSql` is the
-    * bracketed list literal of the same stoplist the Spark side uses. */
-  def lengthQualityGridOracleSql(textExpr: String, table: String,
-                                 stopwordsSql: String,
-                                 lenWidth: Int = 100,
-                                 maxBucket: Int = 9): String =
-    s"""WITH base AS (SELECT CAST(length($textExpr) AS BIGINT) AS nc,
-            list_filter(string_split_regex(lower(trim($textExpr)), '\\s+'),
-              x -> length(x) > 0) AS t
-          FROM $table WHERE $textExpr IS NOT NULL),
-        c AS (SELECT nc, CAST(len(t) AS BIGINT) AS nt,
-            CAST(len(list_filter(t,
-              x -> list_contains($stopwordsSql, x))) AS BIGINT) AS ns
-          FROM base),
-        b AS (SELECT LEAST(nc // $lenWidth, $maxBucket) AS len_bucket,
-            CASE WHEN nt = 0 THEN 0
-                 ELSE LEAST((10 * ns) // nt, $maxBucket) END AS q_bucket,
-            nc, nt, ns
-          FROM c)
-        SELECT len_bucket, q_bucket, COUNT(*) AS n_docs,
-          ROUND(CASE WHEN SUM(nt) = 0 THEN 0.0
-            ELSE CAST(SUM(ns) AS DOUBLE) / SUM(nt) END, 4)
-            AS stopword_ratio,
-          ROUND(CAST(SUM(nc) AS DOUBLE) / COUNT(*), 4) AS mean_chars
-        FROM b GROUP BY len_bucket, q_bucket
-        ORDER BY len_bucket, q_bucket"""
 
   /** WHERE in the document does duplicated text sit? Per doc-THIRD
     * (leading / middle / trailing, by shingle start position), the
@@ -527,35 +352,6 @@ object CorpusStats {
       .orderBy("third")
   }
 
-  /** DuckDB twin of [[dupSpanPosition]] over the documents table. */
-  def dupSpanPositionOracleSql(n: Int = 3): String =
-    s"""WITH toks AS (SELECT doc_id,
-            list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0) AS ws
-          FROM documents WHERE text IS NOT NULL),
-        st AS (SELECT doc_id, ws, CAST(len(ws) - ${n - 1} AS BIGINT) AS m
-          FROM toks WHERE len(ws) >= $n),
-        inst0 AS (SELECT doc_id, m,
-            UNNEST([struct_pack(
-                third := ((i - 1) * 3) // m,
-                sh := array_to_string(ws[i:i+${n - 1}], ' '))
-              FOR i IN range(1, m + 1)]) AS e
-          FROM st),
-        inst AS (SELECT doc_id, e.third AS third, e.sh AS sh FROM inst0),
-        cells AS (SELECT sh, third, COUNT(*) AS n
-          FROM inst GROUP BY sh, third),
-        dfq AS (SELECT sh, COUNT(*) AS df
-          FROM (SELECT DISTINCT doc_id, sh FROM inst) GROUP BY sh),
-        g AS (SELECT third,
-            CAST(SUM(n) AS BIGINT) AS n_instances,
-            CAST(SUM(CASE WHEN df >= 2 THEN n ELSE 0 END) AS BIGINT)
-              AS n_dup_instances
-          FROM cells JOIN dfq USING (sh) GROUP BY third)
-        SELECT third, n_instances, n_dup_instances,
-          ROUND(CAST(n_dup_instances AS DOUBLE) / n_instances, 6)
-            AS dup_share
-        FROM g ORDER BY third"""
-
   /** Document-frequency SPECTRUM of n-gram shingles: how many distinct
     * shingles (and what share of total instance mass) live at df=1,
     * df=2, 3–5, 6–10, 11+ — the full boilerplate-economics curve that
@@ -594,37 +390,4 @@ object CorpusStats {
           .as("instance_share"))
       .orderBy("bucket_order")
   }
-
-  /** DuckDB twin of [[ngramDfHistogram]] over the documents table. */
-  def ngramDfHistogramOracleSql(n: Int = 3): String =
-    s"""WITH toks AS (SELECT doc_id,
-            list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0) AS ws
-          FROM documents WHERE text IS NOT NULL),
-        inst0 AS (SELECT doc_id,
-            UNNEST(CASE WHEN len(ws) < $n THEN
-              [array_to_string(ws, ' ')]
-              ELSE [array_to_string(ws[i:i+${n - 1}], ' ')
-                FOR i IN range(1, len(ws) - ${n - 2})] END) AS sh
-          FROM toks),
-        per AS (SELECT doc_id, sh, COUNT(*) AS c
-          FROM inst0 GROUP BY doc_id, sh),
-        sh AS (SELECT sh, COUNT(*) AS df, CAST(SUM(c) AS BIGINT) AS inst
-          FROM per GROUP BY sh),
-        b AS (SELECT
-            CASE WHEN df = 1 THEN 0 WHEN df = 2 THEN 1
-                 WHEN df <= 5 THEN 2 WHEN df <= 10 THEN 3
-                 ELSE 4 END AS bucket_order,
-            CASE WHEN df = 1 THEN '1' WHEN df = 2 THEN '2'
-                 WHEN df <= 5 THEN '3-5' WHEN df <= 10 THEN '6-10'
-                 ELSE '11+' END AS df_bucket,
-            inst
-          FROM sh),
-        g AS (SELECT bucket_order, df_bucket, COUNT(*) AS n_shingles,
-            CAST(SUM(inst) AS BIGINT) AS n_instances
-          FROM b GROUP BY bucket_order, df_bucket),
-        t AS (SELECT SUM(n_instances) AS tt FROM g)
-        SELECT bucket_order, df_bucket, n_shingles, n_instances,
-          ROUND(CAST(n_instances AS DOUBLE) / tt, 6) AS instance_share
-        FROM g CROSS JOIN t ORDER BY bucket_order"""
 }

@@ -62,24 +62,4 @@ object Curriculum {
       .drop("__boff")
       .select("id", "domain", "score", "band", "band_pos", "global_pos")
   }
-
-  /** DuckDB mirror of [[curriculumOrder]]: `docsCte` must yield
-    * (id, domain, score). */
-  def curriculumOracleSql(docsCte: String, nBands: Int): String =
-    s"""WITH docs AS ($docsCte),
-        banded AS (SELECT id, domain, score,
-            CAST(NTILE($nBands) OVER (ORDER BY score ASC, id ASC)
-              AS INT) AS band
-          FROM docs),
-        sr AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY band, domain
-            ORDER BY score ASC, id ASC) AS srk
-          FROM banded),
-        pos AS (SELECT id, domain, score, band,
-            CAST(ROW_NUMBER() OVER (PARTITION BY band
-              ORDER BY srk ASC, domain ASC, id ASC) AS INT) AS band_pos
-          FROM sr)
-        SELECT id, domain, score, band, band_pos,
-          CAST(ROW_NUMBER() OVER (ORDER BY band ASC, band_pos ASC)
-            AS INT) AS global_pos
-        FROM pos"""
 }

@@ -228,55 +228,6 @@ object Distinctive {
         .as("r2"))
   }
 
-  /** DuckDB twin of [[heapsLaw]]; `docsCte` must yield (id, text);
-    * the id bounds are re-derived in SQL with the same long math. */
-  def heapsLawOracleSql(docsCte: String, grid: Int = 32): String =
-    s"""WITH docs AS (SELECT CAST(id AS BIGINT) AS id, text
-          FROM ($docsCte)),
-        bd AS (SELECT MIN(id) AS lo, MAX(id) - MIN(id) + 1 AS span
-          FROM docs),
-        lf AS (SELECT (docs.id - bd.lo) * $grid // bd.span AS b,
-            UNNEST(list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0)) AS t
-          FROM docs CROSS JOIN bd),
-        tb AS (SELECT b, COUNT(*) AS tok FROM lf GROUP BY b),
-        nb AS (SELECT b, COUNT(*) AS new FROM
-          (SELECT t, MIN(b) AS b FROM lf GROUP BY t) GROUP BY b),
-        pts AS (SELECT
-            CAST(CAST(ROUND(LN(CAST(SUM(tok) OVER (ORDER BY tb.b)
-              AS DOUBLE)), 9) AS DECIMAL(28,9)) * 1000000000
-              AS HUGEINT) AS xi,
-            CAST(CAST(ROUND(LN(CAST(SUM(COALESCE(new, 0))
-                OVER (ORDER BY tb.b) AS DOUBLE)), 9)
-              AS DECIMAL(28,9)) * 1000000000 AS HUGEINT) AS yi
-          FROM tb LEFT JOIN nb ON tb.b = nb.b),
-        gi AS (SELECT COUNT(*) AS k,
-            SUM(xi) AS sxi, SUM(yi) AS syi,
-            SUM(xi * xi) AS sxxi,
-            SUM(yi * yi) AS syyi,
-            SUM(xi * yi) AS sxyi
-          FROM pts),
-        g AS (SELECT k,
-            ${graft.core.Lattice.duckPortableDoubleSigned("sxi")} / 1.0e9 AS sx,
-            ${graft.core.Lattice.duckPortableDoubleSigned("syi")} / 1.0e9 AS sy,
-            ${graft.core.Lattice.duckPortableDoubleSigned("sxxi")} / 1.0e18 AS sxx,
-            ${graft.core.Lattice.duckPortableDoubleSigned("syyi")} / 1.0e18 AS syy,
-            ${graft.core.Lattice.duckPortableDoubleSigned("sxyi")} / 1.0e18 AS sxy
-          FROM gi),
-        e AS (SELECT k,
-            sxx - sx * sx / CAST(k AS DOUBLE) AS cxx,
-            syy - sy * sy / CAST(k AS DOUBLE) AS cyy,
-            sxy - sx * sy / CAST(k AS DOUBLE) AS cxy,
-            sx, sy FROM g)
-        SELECT CAST(k AS BIGINT) AS n_buckets,
-          ROUND(cxy / cxx, 6) AS beta,
-          ROUND(EXP(sy / CAST(k AS DOUBLE)
-            - (cxy / cxx) * sx / CAST(k AS DOUBLE)), 6) AS k_coef,
-          ROUND(CASE WHEN cxx > 0 AND cyy > 0 THEN
-            cxy * cxy / (cxx * cyy) END, 6) AS r2
-        FROM e"""
-
   /** Corpus predictability: unigram entropy H(w), bigram conditional
     * entropy H(w₂|w₁) and the redundancy 1 − H(w₂|w₁)/H(w) — the
     * entropy-rate read-out that separates templated/boilerplate text
@@ -315,73 +266,6 @@ object Distinctive {
           lit(1.0) - (col("__hj") - col("__hu")) / col("__hu")), 6)
           .as("redundancy"))
   }
-
-  /** DuckDB twin of [[entropyRate]]; `docsCte` must yield (text). */
-  def entropyRateOracleSql(docsCte: String): String =
-    s"""WITH docs AS ($docsCte),
-        tok AS (SELECT list_filter(
-            string_split_regex(lower(trim(text)), '\\s+'),
-            x -> length(x) > 0) AS t FROM docs),
-        pr AS (SELECT UNNEST([{'w1': t[i], 'w2': t[i+1]}
-            for i in range(1, len(t))], recursive := true)
-          FROM tok WHERE len(t) >= 2),
-        pc AS (SELECT w1, w2, COUNT(*) AS n FROM pr GROUP BY w1, w2),
-        tot AS (SELECT CAST(SUM(n) AS DOUBLE) AS nn,
-            CAST(SUM(n) AS BIGINT) AS ni FROM pc),
-        hj AS (SELECT SUM(-(n / nn) * LN(n / nn)) AS h
-          FROM pc CROSS JOIN tot),
-        um AS (SELECT w1, SUM(n) AS c1 FROM pc GROUP BY w1),
-        hu AS (SELECT SUM(-(c1 / nn) * LN(c1 / nn)) AS h
-          FROM um CROSS JOIN tot)
-        SELECT tot.ni AS n_pairs, ROUND(hu.h, 6) AS h_unigram,
-          ROUND(hj.h - hu.h, 6) AS h_cond,
-          ROUND(CASE WHEN hu.h > 0 THEN
-            1.0 - (hj.h - hu.h) / hu.h END, 6) AS redundancy
-        FROM tot CROSS JOIN hj CROSS JOIN hu"""
-
-  /** DuckDB twin of [[collocations]]; `docsCte` must yield (text). */
-  def collocationsOracleSql(docsCte: String, minCount: Long,
-                            topK: Int): String =
-    s"""WITH docs AS ($docsCte),
-        tok AS (SELECT list_filter(
-            string_split_regex(lower(trim(text)), '\\s+'),
-            x -> length(x) > 0) AS t FROM docs),
-        pr AS (SELECT UNNEST([{'w1': t[i], 'w2': t[i+1]}
-            for i in range(1, len(t))], recursive := true)
-          FROM tok WHERE len(t) >= 2),
-        pc AS (SELECT w1, w2, COUNT(*) AS n_pair FROM pr GROUP BY w1, w2),
-        c1 AS (SELECT w1, SUM(n_pair) AS n_w1 FROM pc GROUP BY w1),
-        c2 AS (SELECT w2, SUM(n_pair) AS n_w2 FROM pc GROUP BY w2),
-        nt AS (SELECT CAST(SUM(n_pair) AS DOUBLE) AS n FROM pc),
-        sc AS (SELECT pc.w1, pc.w2, pc.n_pair, c1.n_w1, c2.n_w2,
-            2.0 * (
-              (CASE WHEN pc.n_pair > 0 THEN CAST(pc.n_pair AS DOUBLE)
-                * LN(CAST(pc.n_pair AS DOUBLE)
-                  / (CAST(c1.n_w1 AS DOUBLE) * CAST(c2.n_w2 AS DOUBLE)
-                    / nt.n)) ELSE 0.0 END) +
-              (CASE WHEN c1.n_w1 - pc.n_pair > 0 THEN
-                CAST(c1.n_w1 - pc.n_pair AS DOUBLE)
-                * LN(CAST(c1.n_w1 - pc.n_pair AS DOUBLE)
-                  / (CAST(c1.n_w1 AS DOUBLE)
-                    * (nt.n - CAST(c2.n_w2 AS DOUBLE)) / nt.n))
-                ELSE 0.0 END) +
-              (CASE WHEN c2.n_w2 - pc.n_pair > 0 THEN
-                CAST(c2.n_w2 - pc.n_pair AS DOUBLE)
-                * LN(CAST(c2.n_w2 - pc.n_pair AS DOUBLE)
-                  / ((nt.n - CAST(c1.n_w1 AS DOUBLE))
-                    * CAST(c2.n_w2 AS DOUBLE) / nt.n)) ELSE 0.0 END) +
-              (CASE WHEN nt.n - c1.n_w1 - c2.n_w2 + pc.n_pair > 0 THEN
-                (nt.n - c1.n_w1 - c2.n_w2 + pc.n_pair)
-                * LN((nt.n - c1.n_w1 - c2.n_w2 + pc.n_pair)
-                  / ((nt.n - CAST(c1.n_w1 AS DOUBLE))
-                    * (nt.n - CAST(c2.n_w2 AS DOUBLE)) / nt.n))
-                ELSE 0.0 END)) AS g2
-          FROM pc JOIN c1 USING (w1) JOIN c2 USING (w2) CROSS JOIN nt
-          WHERE pc.n_pair >= $minCount)
-        SELECT w1, w2, CAST(n_pair AS BIGINT) AS n_pair,
-          CAST(n_w1 AS BIGINT) AS n_w1, CAST(n_w2 AS BIGINT) AS n_w2,
-          ROUND(g2, 6) AS g2
-        FROM sc ORDER BY g2 DESC, w1, w2 LIMIT $topK"""
 
   /** Per-source unigram KL divergence vs the corpus: KL(p_s ‖ q) over
     * a capped vocabulary with add-one smoothing — ONE number per
@@ -424,35 +308,6 @@ object Distinctive {
         round(sum("__kl").cast("double"), 6).as("kl"))
       .orderBy("source")
   }
-
-  /** DuckDB twin of [[sourceKl]] over the documents table. */
-  def sourceKlOracleSql(topK: Int = 2000): String =
-    s"""WITH tok AS (SELECT source,
-            UNNEST(list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0)) AS t
-          FROM documents),
-        vocab AS (SELECT t, COUNT(*) AS cn FROM tok GROUP BY t
-          ORDER BY cn DESC, t LIMIT $topK),
-        vs AS (SELECT COUNT(*) AS v, SUM(cn) AS nn FROM vocab),
-        per AS (SELECT source, tok.t, COUNT(*) AS cs
-          FROM tok JOIN vocab ON tok.t = vocab.t
-          GROUP BY source, tok.t),
-        st AS (SELECT source, SUM(cs) AS ns FROM per GROUP BY source),
-        grid AS (SELECT st.source, st.ns, vocab.t, vocab.cn,
-            COALESCE(per.cs, 0) AS cs
-          FROM st CROSS JOIN vocab
-          LEFT JOIN per ON per.source = st.source AND per.t = vocab.t),
-        terms AS (SELECT source, ns,
-            CAST(ROUND(
-              ((cs + 1) / CAST(ns + vs.v AS DOUBLE))
-              * LN(((cs + 1) / CAST(ns + vs.v AS DOUBLE))
-                / ((cn + 1) / CAST(nn + vs.v AS DOUBLE))), 12)
-              AS DECIMAL(20,12)) AS term
-          FROM grid CROSS JOIN vs)
-        SELECT source, CAST(ANY_VALUE(ns) AS BIGINT) AS n_tokens,
-          ROUND(CAST(SUM(term) AS DOUBLE), 6) AS kl
-        FROM terms GROUP BY source ORDER BY source"""
 
   /** [[entropyRate]] PER SOURCE: unigram entropy, bigram conditional
     * entropy and redundancy for every feed in one pipeline — "which
@@ -497,39 +352,6 @@ object Distinctive {
     pc.unpersist()
     out
   }
-
-  /** DuckDB twin of [[entropyBySource]] over the documents table. */
-  def entropyBySourceOracleSql(): String =
-    s"""WITH tok AS (SELECT source, list_filter(
-            string_split_regex(lower(trim(text)), '\\s+'),
-            x -> length(x) > 0) AS t FROM documents),
-        pr AS (SELECT source, UNNEST([{'w1': t[i], 'w2': t[i+1]}
-            for i in range(1, len(t))], recursive := true)
-          FROM tok WHERE len(t) >= 2),
-        pc AS (SELECT source, w1, w2, COUNT(*) AS n
-          FROM pr GROUP BY source, w1, w2),
-        tot AS (SELECT source, SUM(n) AS nn FROM pc GROUP BY source),
-        hj AS (SELECT pc.source, CAST(ANY_VALUE(tot.nn) AS BIGINT)
-              AS n_pairs,
-            CAST(SUM(CAST(ROUND(-(CAST(n AS DOUBLE) / nn)
-              * LN(CAST(n AS DOUBLE) / nn), 12) AS DECIMAL(20,12)))
-              AS DOUBLE) AS hjv
-          FROM pc JOIN tot ON pc.source = tot.source
-          GROUP BY pc.source),
-        m1 AS (SELECT source, w1, SUM(n) AS c1 FROM pc
-          GROUP BY source, w1),
-        hu AS (SELECT m1.source,
-            CAST(SUM(CAST(ROUND(-(CAST(c1 AS DOUBLE) / nn)
-              * LN(CAST(c1 AS DOUBLE) / nn), 12) AS DECIMAL(20,12)))
-              AS DOUBLE) AS huv
-          FROM m1 JOIN tot ON m1.source = tot.source
-          GROUP BY m1.source)
-        SELECT hj.source, hj.n_pairs, ROUND(hu.huv, 6) AS h_unigram,
-          ROUND(hj.hjv - hu.huv, 6) AS h_cond,
-          ROUND(CASE WHEN hu.huv > 0 THEN
-            1.0 - (hj.hjv - hu.huv) / hu.huv END, 6) AS redundancy
-        FROM hj JOIN hu ON hj.source = hu.source
-        ORDER BY hj.source"""
 
   /** FUNCTION-WORD fingerprint cosine between source pairs: each
     * source's frequency vector over a fixed stopword list, pairwise
@@ -577,32 +399,4 @@ object Distinctive {
             sqrt(col("__nb").cast("double"))), 6).as("cosine"))
       .orderBy("source_a", "source_b")
   }
-
-  /** DuckDB twin of [[functionWordCosine]] — `stopwordsSql` is the
-    * bracketed list literal of the same stoplist. */
-  def functionWordCosineOracleSql(srcExpr: String, textExpr: String,
-                                  table: String,
-                                  stopwordsSql: String): String =
-    s"""WITH tok AS (SELECT $srcExpr AS source,
-            unnest(list_filter(
-              string_split_regex(lower(trim($textExpr)), '\\s+'),
-              x -> list_contains($stopwordsSql, x))) AS w
-          FROM $table WHERE $textExpr IS NOT NULL),
-        cells AS (SELECT source, w, COUNT(*) AS c
-          FROM tok GROUP BY source, w),
-        norms AS (SELECT source, CAST(SUM(c * c) AS BIGINT) AS n2
-          FROM cells GROUP BY source),
-        dots AS (SELECT a.source AS source_a, b.source AS source_b,
-            CAST(SUM(a.c * b.c) AS BIGINT) AS dot
-          FROM cells a JOIN cells b
-            ON a.w = b.w AND a.source < b.source
-          GROUP BY source_a, source_b)
-        SELECT x.source AS source_a, y.source AS source_b,
-          ROUND(CAST(COALESCE(dot, 0) AS DOUBLE) /
-            (SQRT(CAST(x.n2 AS DOUBLE)) * SQRT(CAST(y.n2 AS DOUBLE))),
-            6) AS cosine
-        FROM norms x JOIN norms y ON x.source < y.source
-        LEFT JOIN dots ON dots.source_a = x.source
-          AND dots.source_b = y.source
-        ORDER BY source_a, source_b"""
 }

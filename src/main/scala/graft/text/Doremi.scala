@@ -49,25 +49,4 @@ object Doremi {
     spark.createDataFrame(java.util.Arrays.asList(out: _*),
       StructType(Seq(StructField(domainCol, StringType), StructField("weight", DoubleType))))
   }
-
-  /** Unrolled ANSI-SQL equivalent of [[weights]] for a given step count —
-    * the oracle form (each round is one chained CTE; aggregates are legal
-    * there, unlike in a recursive CTE's recursive term). `excessCte` must
-    * be a CTE body yielding (domain, excess). */
-  def oracleSql(excessCte: String, eta: Double, steps: Int,
-                smoothing: Double): String = {
-    val k = "(SELECT COUNT(*) FROM ex)"
-    val init = s"a0 AS (SELECT domain, 1.0 / $k AS alpha FROM ex)"
-    val rounds = (1 to steps).map { t =>
-      s"""l$t AS (SELECT a.domain, a.alpha * exp($eta * e.excess) AS lam
-            FROM a${t - 1} a JOIN ex e USING (domain)),
-          a$t AS (SELECT domain,
-            (1 - $smoothing) * lam / (SELECT SUM(lam) FROM l$t) + $smoothing / $k AS alpha
-            FROM l$t)"""
-    }.mkString(",\n")
-    s"""WITH ex AS ($excessCte),
-        $init,
-        $rounds
-        SELECT domain, ROUND(alpha, 6) AS weight FROM a$steps"""
-  }
 }

@@ -67,53 +67,4 @@ object FilterAgreement {
         n * n - chance), 6))
       .orderBy("source")
   }
-
-  /** DuckDB twin of [[c4GopherCells]]. `pagesCte` must be a complete
-    * CTE body exposing pages(doc_id, source, text). */
-  def c4GopherCellsOracleSql(pagesCte: String, minLineWords: Int = 5,
-                             minSentences: Int = 3): String =
-    s"""WITH pages AS ($pagesCte),
-        c4l AS (SELECT doc_id, text,
-            COALESCE(array_to_string(
-              list_filter(string_split(text, chr(10)), l ->
-                regexp_matches(trim(l), '[.!?"'']$$') AND
-                len(string_split_regex(trim(l), '\\s+')) >= $minLineWords
-                AND NOT contains(lower(l), 'javascript')),
-              chr(10)), '') AS c4_text
-          FROM pages),
-        c4f AS (SELECT doc_id,
-            (length(regexp_replace(c4_text, '[^.!?]', '', 'g'))
-               >= $minSentences AND
-             NOT contains(lower(text), 'lorem ipsum') AND
-             NOT contains(text, '{')) AS c4_pass
-          FROM c4l),
-        ${Gopher.flagsSqlCtes("pages")},
-        j AS (SELECT g.source, c4_pass, g.pass_all AS g_pass
-          FROM gflags g JOIN c4f USING (doc_id)),
-        cells AS (SELECT source, COUNT(*) AS n_docs,
-            CAST(SUM(CASE WHEN c4_pass AND g_pass THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_both,
-            CAST(SUM(CASE WHEN c4_pass AND NOT g_pass THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_c4_only,
-            CAST(SUM(CASE WHEN NOT c4_pass AND g_pass THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_gopher_only,
-            CAST(SUM(CASE WHEN NOT c4_pass AND NOT g_pass THEN 1 ELSE 0
-              END) AS BIGINT) AS n_neither
-          FROM j GROUP BY source)
-        SELECT source, n_docs, n_both, n_c4_only, n_gopher_only,
-          n_neither,
-          ROUND(CAST(n_both + n_neither AS DOUBLE) / n_docs, 6)
-            AS agree_share,
-          ROUND((CAST(n_docs AS DOUBLE) * CAST(n_both + n_neither AS DOUBLE)
-              - (CAST(n_both + n_c4_only AS DOUBLE)
-                   * CAST(n_both + n_gopher_only AS DOUBLE)
-                 + (CAST(n_docs AS DOUBLE) - CAST(n_both + n_c4_only AS DOUBLE))
-                   * (CAST(n_docs AS DOUBLE) - CAST(n_both + n_gopher_only AS DOUBLE))))
-            / (CAST(n_docs AS DOUBLE) * CAST(n_docs AS DOUBLE)
-               - (CAST(n_both + n_c4_only AS DOUBLE)
-                    * CAST(n_both + n_gopher_only AS DOUBLE)
-                  + (CAST(n_docs AS DOUBLE) - CAST(n_both + n_c4_only AS DOUBLE))
-                    * (CAST(n_docs AS DOUBLE) - CAST(n_both + n_gopher_only AS DOUBLE)))), 6)
-            AS kappa
-        FROM cells ORDER BY source"""
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object Gopher {
 
-  private val stopWords =
+  private[graft] val stopWords =
     Seq("the", "be", "to", "of", "and", "that", "have", "with")
 
   /** Count of non-overlapping occurrences of `sub` in `c`. */
@@ -98,78 +98,4 @@ object Gopher {
         round(col("pass_all").cast("double") / col("n_docs"), 6))
       .orderBy("source")
   }
-
-  /** CTE chain `base → per → flags → gflags`: per-document Gopher rule
-    * flags over the CTE `$from(doc_id, source, text)`. `gflags` exposes
-    * (doc_id, source, r_wordcount … r_stopwords, pass_all) — the SQL
-    * mirror of [[ruleCols]], shared by [[funnelOracleSql]] and the
-    * filter-agreement twin so the rule text exists once per engine. */
-  def flagsSqlCtes(from: String): String = {
-    val stopList = stopWords.map(w => s"'$w'").mkString("[", ", ", "]")
-    s"""base AS (SELECT doc_id, source,
-            list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0) AS toks,
-            text FROM $from),
-        per AS (SELECT doc_id, source,
-            CAST(len(toks) AS BIGINT) AS nw,
-            CAST(list_sum(list_transform(toks, w -> length(w)))
-              AS BIGINT) AS sl,
-            CAST((length(text) - length(replace(text, '#', '')))
-              + (length(text) - length(replace(text, '...', ''))) // 3
-              + (length(text) - length(replace(text, '…', '')))
-              AS BIGINT) AS sym,
-            list_filter(string_split(text, chr(10)),
-              l -> length(trim(l)) > 0) AS lines,
-            CAST(len(list_filter(toks,
-              w -> regexp_matches(w, '[a-z]'))) AS BIGINT) AS alphaw,
-            len(list_filter($stopList,
-              sw -> list_contains(toks, sw))) AS nstop
-          FROM base),
-        -- integer-lattice rule boundaries (10·x <= 9·n, never x/n
-        -- <= 0.9): immune to float-division drift across versions
-        flags AS (SELECT doc_id, source,
-            (nw >= 50 AND nw <= 100000) AS r_wordcount,
-            (nw > 0 AND sl >= 3 * nw AND sl <= 10 * nw) AS r_wordlen,
-            (nw > 0 AND 10 * sym <= nw) AS r_symbol,
-            (10 * CAST(len(list_filter(lines, l -> trim(l) LIKE '-%'
-                OR trim(l) LIKE '*%' OR trim(l) LIKE '•%'))
-              AS BIGINT) <= 9 * GREATEST(CAST(len(lines) AS BIGINT), 1))
-              AS r_bullet,
-            (10 * CAST(len(list_filter(lines, l -> trim(l) LIKE '%...'
-                OR trim(l) LIKE '%…'))
-              AS BIGINT) <= 3 * GREATEST(CAST(len(lines) AS BIGINT), 1))
-              AS r_ellipsis,
-            (nw > 0 AND 5 * alphaw >= 4 * nw) AS r_alpha,
-            (nstop >= 2) AS r_stopwords
-          FROM per),
-        gflags AS (SELECT *,
-            (r_wordcount AND r_wordlen AND r_symbol AND r_bullet
-              AND r_ellipsis AND r_alpha AND r_stopwords) AS pass_all
-          FROM flags)"""
-  }
-
-  /** DuckDB twin of [[funnel]] over the documents table. */
-  def funnelOracleSql(): String =
-    s"""WITH docs0 AS (SELECT doc_id, source, text FROM documents),
-        ${flagsSqlCtes("docs0")}
-        SELECT source, COUNT(*) AS n_docs,
-          CAST(SUM(CASE WHEN r_wordcount THEN 1 ELSE 0 END) AS BIGINT)
-            AS pass_wordcount,
-          CAST(SUM(CASE WHEN r_wordlen THEN 1 ELSE 0 END) AS BIGINT)
-            AS pass_wordlen,
-          CAST(SUM(CASE WHEN r_symbol THEN 1 ELSE 0 END) AS BIGINT)
-            AS pass_symbol,
-          CAST(SUM(CASE WHEN r_bullet THEN 1 ELSE 0 END) AS BIGINT)
-            AS pass_bullet,
-          CAST(SUM(CASE WHEN r_ellipsis THEN 1 ELSE 0 END) AS BIGINT)
-            AS pass_ellipsis,
-          CAST(SUM(CASE WHEN r_alpha THEN 1 ELSE 0 END) AS BIGINT)
-            AS pass_alpha,
-          CAST(SUM(CASE WHEN r_stopwords THEN 1 ELSE 0 END) AS BIGINT)
-            AS pass_stopwords,
-          CAST(SUM(CASE WHEN pass_all THEN 1 ELSE 0 END) AS BIGINT)
-            AS pass_all,
-          ROUND(SUM(CASE WHEN pass_all THEN 1 ELSE 0 END)
-            / CAST(COUNT(*) AS DOUBLE), 6) AS pass_rate
-        FROM gflags GROUP BY source ORDER BY source"""
 }

@@ -69,34 +69,4 @@ object LmScore {
           .as("avg_bits"))
       .orderBy("source")
   }
-
-  /** DuckDB twin of [[bigramCrossEntropy]] over the documents table. */
-  def bigramCrossEntropyOracleSql(k: Double = 0.5): String =
-    s"""WITH toks AS (SELECT source,
-            list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0) AS ws
-          FROM documents WHERE text IS NOT NULL),
-        t2 AS (SELECT source, ws FROM toks WHERE len(ws) >= 2),
-        bi AS (SELECT source,
-            UNNEST([ws[i] || chr(1) || ws[i + 1]
-              FOR i IN range(1, len(ws))]) AS bg
-          FROM t2),
-        bia AS (SELECT source, bg, split_part(bg, chr(1), 1) AS a
-          FROM bi),
-        cb AS (SELECT bg, COUNT(*) AS cab FROM bia GROUP BY bg),
-        cc AS (SELECT a, COUNT(*) AS ca FROM bia GROUP BY a),
-        v AS (SELECT COUNT(DISTINCT w) AS vz FROM
-          (SELECT UNNEST(ws) AS w FROM t2)),
-        nd AS (SELECT source, COUNT(*) AS n_docs FROM t2 GROUP BY source),
-        terms AS (SELECT bia.source,
-            CAST(ROUND(LN((cb.cab + $k) / (cc.ca + $k * v.vz)), 9)
-              AS DECIMAL(28,9)) AS t
-          FROM bia JOIN cb USING (bg) JOIN cc USING (a) CROSS JOIN v),
-        agg AS (SELECT source, COUNT(*) AS n_bigrams,
-            CAST(SUM(t) AS DOUBLE) AS lnsum
-          FROM terms GROUP BY source)
-        SELECT agg.source, CAST(nd.n_docs AS BIGINT) AS n_docs,
-          agg.n_bigrams,
-          ROUND(-lnsum / n_bigrams / LN(2), 6) AS avg_bits
-        FROM agg JOIN nd USING (source) ORDER BY source"""
 }

@@ -164,23 +164,4 @@ object Packing {
           (col("__tot") / nShards), 6).as("balance"))
       .orderBy("shard")
   }
-
-  /** DuckDB twin of [[snakeShards]]; `manifestCte` must yield
-    * (id, sz). */
-  def snakeShardsOracleSql(manifestCte: String, nShards: Int): String =
-    s"""WITH mf AS (SELECT id,
-            COALESCE(CAST(sz AS BIGINT), 0) AS sz FROM ($manifestCte)),
-        rk AS (SELECT id, sz,
-            ROW_NUMBER() OVER (ORDER BY sz DESC, id) - 1 AS r
-          FROM mf),
-        asg AS (SELECT sz,
-            CASE WHEN (r // $nShards) % 2 = 0 THEN r % $nShards
-              ELSE ${nShards - 1} - r % $nShards END AS shard
-          FROM rk),
-        tot AS (SELECT CAST(SUM(sz) AS DOUBLE) AS t FROM mf)
-        SELECT shard, COUNT(*) AS n_items,
-          CAST(SUM(sz) AS BIGINT) AS total_size,
-          ROUND(CAST(SUM(sz) AS DOUBLE) / (ANY_VALUE(tot.t) / $nShards), 6)
-            AS balance
-        FROM asg CROSS JOIN tot GROUP BY shard ORDER BY shard"""
 }

@@ -78,45 +78,4 @@ object Rake {
         col("rank"))
       .orderBy("source", "rank")
   }
-
-  /** DuckDB twin of [[keywordsBySource]] over the documents table. */
-  def keywordsOracleSql(stopwordsSql: String, maxLen: Int = 4,
-                        topK: Int = 10): String =
-    s"""WITH toks AS (SELECT source,
-            list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0) AS ws
-          FROM documents WHERE text IS NOT NULL),
-        inst AS (SELECT source, p AS phrase FROM (
-            SELECT source, trim(unnest(string_split(
-                array_to_string(list_transform(ws, w ->
-                  CASE WHEN list_contains($stopwordsSql, w)
-                       THEN '|' ELSE w END), ' '), '|'))) AS p
-            FROM toks)
-          WHERE length(p) > 0
-            AND len(string_split(p, ' ')) <= $maxLen),
-        cells AS (SELECT source, phrase, COUNT(*) AS n_occurrences,
-            CAST(len(string_split(phrase, ' ')) AS BIGINT) AS plen
-          FROM inst GROUP BY source, phrase),
-        pw AS (SELECT source, phrase, n_occurrences, plen,
-            unnest(string_split(phrase, ' ')) AS w
-          FROM cells),
-        wstats AS (SELECT source, w,
-            CAST(SUM(n_occurrences) AS BIGINT) AS freq,
-            CAST(SUM(n_occurrences * plen) AS BIGINT) AS deg
-          FROM pw GROUP BY source, w),
-        ws AS (SELECT source, w, (1000000 * deg) // freq AS ws6
-          FROM wstats),
-        scored AS (SELECT pw.source, pw.phrase,
-            MIN(pw.plen) AS n_words,
-            MIN(pw.n_occurrences) AS n_occurrences,
-            CAST(SUM(ws.ws6) AS BIGINT) AS s6
-          FROM pw JOIN ws ON pw.source = ws.source AND pw.w = ws.w
-          GROUP BY pw.source, pw.phrase),
-        ranked AS (SELECT *, row_number() OVER (PARTITION BY source
-            ORDER BY s6 DESC, phrase) AS rank
-          FROM scored)
-        SELECT source, phrase, n_words, n_occurrences,
-          ROUND(CAST(s6 AS DOUBLE) / 1e6, 6) AS score, rank
-        FROM ranked WHERE rank <= $topK
-        ORDER BY source, rank"""
 }

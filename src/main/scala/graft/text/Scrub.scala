@@ -120,32 +120,4 @@ object Scrub {
           count(lit(1)), 6).as("defect_rate"))
       .orderBy("source")
   }
-
-  /** DuckDB twin of [[defectScan]] over the documents table. */
-  def defectScanOracleSql(): String =
-    s"""WITH f AS (SELECT source,
-            (text LIKE '%' || chr(65533) || '%') AS repl,
-            regexp_matches(text,
-              '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]') AS ctrl,
-            regexp_matches(text, '[^\\s]{100}') AS longw,
-            (length(text) > 0 AND 2 * (length(text)
-              - length(regexp_replace(text, '[0-9]', '', 'g')))
-              >= length(text)) AS digith,
-            (length(trim(COALESCE(text, ''))) = 0) AS blank
-          FROM documents)
-        SELECT source, COUNT(*) AS n_docs,
-          CAST(SUM(CASE WHEN repl THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_replacement,
-          CAST(SUM(CASE WHEN ctrl THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_control,
-          CAST(SUM(CASE WHEN longw THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_long_word,
-          CAST(SUM(CASE WHEN digith THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_digit_heavy,
-          CAST(SUM(CASE WHEN blank THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_blank,
-          ROUND(SUM(CASE WHEN repl OR ctrl OR longw OR digith OR blank
-            THEN 1 ELSE 0 END) / CAST(COUNT(*) AS DOUBLE), 6)
-            AS defect_rate
-        FROM f GROUP BY source ORDER BY source"""
 }

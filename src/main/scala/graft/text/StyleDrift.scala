@@ -70,42 +70,4 @@ object StyleDrift {
             (lit(1.0) - coalesce(col("__sq"), lit(0.0)))), 6).as("js"))
       .orderBy("source_a", "source_b")
   }
-
-  /** DuckDB twin of [[charJsMatrix]] over the documents table. */
-  def charJsMatrixOracleSql(n: Int = 3): String =
-    s"""WITH nm AS (SELECT source AS s,
-            regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS t
-          FROM documents WHERE text IS NOT NULL),
-        cells AS (SELECT s, g, COUNT(*) AS c FROM (
-            SELECT s, unnest([t[i:i+${n - 1}]
-              FOR i IN range(1, length(t) - ${n - 2})]) AS g
-            FROM nm WHERE length(t) >= $n)
-          GROUP BY s, g),
-        totals AS (SELECT s, CAST(SUM(c) AS BIGINT) AS tot
-          FROM cells GROUP BY s),
-        joint AS (SELECT a.s AS sa, b.s AS sb,
-            COUNT(*) AS n_shared_grams,
-            SUM(CAST(a.c AS DOUBLE) / ta.tot) AS sp,
-            SUM(CAST(b.c AS DOUBLE) / tb.tot) AS sq,
-            SUM((CAST(a.c AS DOUBLE) / ta.tot) * log2(
-              2.0 * (CAST(a.c AS DOUBLE) / ta.tot)
-              / (CAST(a.c AS DOUBLE) / ta.tot
-                 + CAST(b.c AS DOUBLE) / tb.tot))) AS term_a,
-            SUM((CAST(b.c AS DOUBLE) / tb.tot) * log2(
-              2.0 * (CAST(b.c AS DOUBLE) / tb.tot)
-              / (CAST(a.c AS DOUBLE) / ta.tot
-                 + CAST(b.c AS DOUBLE) / tb.tot))) AS term_b
-          FROM cells a
-          JOIN cells b ON a.g = b.g AND a.s < b.s
-          JOIN totals ta ON a.s = ta.s
-          JOIN totals tb ON b.s = tb.s
-          GROUP BY a.s, b.s)
-        SELECT x.s AS source_a, y.s AS source_b,
-          COALESCE(n_shared_grams, 0) AS n_shared_grams,
-          ROUND(0.5 * (COALESCE(term_a, 0) + (1.0 - COALESCE(sp, 0)))
-            + 0.5 * (COALESCE(term_b, 0) + (1.0 - COALESCE(sq, 0))), 6)
-            AS js
-        FROM totals x JOIN totals y ON x.s < y.s
-        LEFT JOIN joint ON joint.sa = x.s AND joint.sb = y.s
-        ORDER BY source_a, source_b"""
 }

@@ -58,33 +58,6 @@ object Templates {
       .orderBy("source")
   }
 
-  /** DuckDB twin of [[sharedPrefixes]]. */
-  def sharedPrefixesOracleSql(srcExpr: String, textExpr: String,
-                              table: String, k: Int = 8,
-                              minDocs: Long = 2L): String =
-    s"""WITH g AS (SELECT $srcExpr AS source,
-            substr(regexp_replace(lower(trim($textExpr)), '\\s+', ' ', 'g'),
-              1, $k) AS p,
-            COUNT(*) AS c
-          FROM $table WHERE $textExpr IS NOT NULL GROUP BY source, p),
-        nd AS (SELECT $srcExpr AS source, COUNT(*) AS n_docs
-          FROM $table WHERE $textExpr IS NOT NULL GROUP BY source),
-        top AS (SELECT source, p, c FROM g
-          QUALIFY ROW_NUMBER() OVER (PARTITION BY source
-            ORDER BY c DESC, p DESC) = 1),
-        a AS (SELECT source,
-            CAST(SUM(CASE WHEN c >= $minDocs THEN 1 ELSE 0 END) AS BIGINT)
-              AS n_dup_prefixes,
-            CAST(SUM(CASE WHEN c >= $minDocs THEN c ELSE 0 END) AS BIGINT)
-              AS docs_in_dup_groups
-          FROM g GROUP BY source)
-        SELECT source, n_docs, n_dup_prefixes, docs_in_dup_groups,
-          ROUND(CAST(docs_in_dup_groups AS DOUBLE) / n_docs, 6)
-            AS dup_share,
-          top.p AS top_prefix, top.c AS top_count
-        FROM nd JOIN a USING (source) JOIN top USING (source)
-        ORDER BY source"""
-
   /** Template-family PURITY: for every shared-prefix family of >= 2
     * documents, is it one source stamping its own template
     * (single-source — strip and move on) or cross-source syndication
@@ -124,32 +97,4 @@ object Templates {
           .as("pooled_top_share"))
       .orderBy("bucket_order")
   }
-
-  /** DuckDB twin of [[templatePurity]]. */
-  def templatePurityOracleSql(srcExpr: String, textExpr: String,
-                              table: String, k: Int = 8): String =
-    s"""WITH cells AS (SELECT
-            substr(regexp_replace(lower(trim($textExpr)), '\\s+', ' ', 'g'),
-              1, $k) AS p,
-            $srcExpr AS s, COUNT(*) AS c
-          FROM $table WHERE $textExpr IS NOT NULL GROUP BY p, s),
-        fam AS (SELECT p, CAST(SUM(c) AS BIGINT) AS size,
-            COUNT(*) AS nsrc, MAX(c) AS top
-          FROM cells GROUP BY p HAVING SUM(c) >= 2),
-        b AS (SELECT
-            CASE WHEN size = 2 THEN 0 WHEN size <= 5 THEN 1
-                 ELSE 2 END AS bucket_order,
-            CASE WHEN size = 2 THEN '2' WHEN size <= 5 THEN '3-5'
-                 ELSE '6+' END AS size_bucket,
-            size, nsrc, top
-          FROM fam)
-        SELECT bucket_order, size_bucket, COUNT(*) AS n_families,
-          CAST(SUM(CASE WHEN nsrc >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-            AS n_cross_source,
-          ROUND(CAST(SUM(CASE WHEN nsrc >= 2 THEN 1 ELSE 0 END)
-            AS DOUBLE) / COUNT(*), 6) AS cross_share,
-          ROUND(CAST(SUM(top) AS DOUBLE) / SUM(size), 6)
-            AS pooled_top_share
-        FROM b GROUP BY bucket_order, size_bucket
-        ORDER BY bucket_order"""
 }

@@ -61,41 +61,6 @@ object VocabStats {
       .orderBy("k")
   }
 
-  /** DuckDB twin of [[vocabCoverage]]. */
-  def vocabCoverageOracleSql(ks: Seq[Int]): String = {
-    val kList = ks.mkString("[", ", ", "]")
-    s"""WITH toks AS (SELECT UNNEST(list_filter(
-            string_split_regex(lower(trim(text)), '\\s+'),
-            x -> length(x) > 0)) AS t
-          FROM documents),
-        tf AS (SELECT t, COUNT(*) AS f FROM toks GROUP BY t),
-        tiers AS (SELECT f, COUNT(*) AS nt FROM tf GROUP BY f),
-        tot AS (SELECT SUM(nt) AS terms, SUM(f * nt) AS tokens
-          FROM tiers),
-        above AS (SELECT b.f AS fb,
-            COALESCE(SUM(CASE WHEN t.f > b.f THEN t.nt END), 0) AS ca,
-            COALESCE(SUM(CASE WHEN t.f > b.f THEN t.f * t.nt END), 0)
-              AS ma
-          FROM tiers b LEFT JOIN tiers t ON t.f > b.f
-          GROUP BY b.f),
-        bounds AS (SELECT tiers.f AS fb, tiers.nt AS ntb, a.ca, a.ma
-          FROM tiers JOIN above a ON tiers.f = a.fb),
-        kf AS (SELECT UNNEST($kList) AS k),
-        hit AS (SELECT kf.k, tot.terms, tot.tokens,
-            ROUND(CAST(b.ma + (kf.k - b.ca) * b.fb AS DOUBLE)
-              / tot.tokens, 6) AS coverage
-          FROM kf JOIN bounds b
-            ON b.ca < kf.k AND kf.k <= b.ca + b.ntb
-          CROSS JOIN tot),
-        over_ AS (SELECT kf.k, tot.terms, tot.tokens, 1.0 AS coverage
-          FROM kf CROSS JOIN tot WHERE kf.k > tot.terms)
-        SELECT CAST(k AS INT) AS k,
-          CAST(terms AS BIGINT) AS n_terms_total,
-          CAST(tokens AS BIGINT) AS n_tokens, coverage
-        FROM (SELECT * FROM hit UNION ALL SELECT * FROM over_)
-        ORDER BY k"""
-  }
-
   /** OOV audit of a held-out split against the train vocabulary:
     * token-INSTANCE and token-TYPE OOV rates for eval docs — the
     * tokenizer-level companion to the q378 contamination audit (that
@@ -120,25 +85,4 @@ object VocabStats {
       round(sum(when(col("__hit").isNull, 1L).otherwise(0L))
         .cast("double") / count(lit(1)), 6).as("oov_type_rate"))
   }
-
-  /** DuckDB twin of [[oovRate]]; `evalPred` over documents. */
-  def oovRateOracleSql(evalPred: String): String =
-    s"""WITH toks AS (SELECT $evalPred AS e,
-            UNNEST(list_filter(
-              string_split_regex(lower(trim(text)), '\\s+'),
-              x -> length(x) > 0)) AS t
-          FROM documents),
-        train AS (SELECT DISTINCT t FROM toks WHERE NOT e),
-        ev AS (SELECT toks.t, COUNT(*) AS c FROM toks WHERE e
-          GROUP BY toks.t),
-        j AS (SELECT ev.c,
-            CASE WHEN train.t IS NULL THEN 1 ELSE 0 END AS oov
-          FROM ev LEFT JOIN train ON ev.t = train.t)
-        SELECT CAST(SUM(c) AS BIGINT) AS n_eval_tokens,
-          COUNT(*) AS n_eval_types,
-          ROUND(SUM(CASE WHEN oov = 1 THEN c ELSE 0 END)
-            / CAST(SUM(c) AS DOUBLE), 6) AS oov_token_rate,
-          ROUND(SUM(oov) / CAST(COUNT(*) AS DOUBLE), 6)
-            AS oov_type_rate
-        FROM j"""
 }

@@ -2,7 +2,8 @@ package graft
 
 import graft.core.Checkpoints
 import graft.dedup.Components
-import graft.ml.SpectralEmbedding
+import graft.eda.{Association, Concentration, MultipleTesting, SkewReport, StatTests}
+import graft.ml.{Hpo, SpectralEmbedding, Stats}
 import graft.proximity.{Graph, Truss}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
@@ -11,7 +12,9 @@ import org.apache.spark.sql.functions._
 /** The graph family's shared core: every intermediate local checkpoint
   * is released once the returned frame no longer reads it, the
   * canonical edge set is built in one place, and [[Checkpoints.release]]
-  * frees what `unpersist` does not. */
+  * frees what `unpersist` does not. The same release check covers the
+  * stats operators that checkpoint an intermediate and the HPO trial
+  * functions. */
 class GraphCoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -24,6 +27,13 @@ class GraphCoreSpec extends SparkSpec {
   private lazy val ids = Seq(1L, 4L).toDF("id")
 
   private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** `f`'s result and the ids of the RDDs it left persisted. */
+  private def persistedBy[A](f: => A): (A, Set[Int]) = {
+    val before = persisted()
+    val out = f
+    (out, persisted() -- before)
+  }
 
   private def checkpointsIn(df: DataFrame): Set[Int] =
     df.queryExecution.logical.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
@@ -53,15 +63,52 @@ class GraphCoreSpec extends SparkSpec {
     "SpectralEmbedding.embed" -> (() => SpectralEmbedding.embed(edges, "src", "dst",
       iters = 3)))
 
-  entryPoints.foreach { case (name, run) =>
+  // three groups, two ordinal codes on a shared 0..3 scale, a positive
+  // value and an event flag
+  private lazy val cells = spark.range(60).selectExpr(
+    "CAST(id % 3 AS STRING) AS g", "id % 4 AS a", "(id * 7) % 4 AS b",
+    "CAST(id * 1.5 + id % 7 + 1 AS DOUBLE) AS v", "CAST(id % 2 AS INT) AS e")
+
+  private val statsEntryPoints: Seq[(String, () => DataFrame)] = Seq(
+    "Stats.gkGamma" -> (() => Stats.gkGamma(cells, "a", "b")),
+    "Stats.somersD" -> (() => Stats.somersD(cells, "a", "b")),
+    "Stats.concordanceIndex" -> (() => Stats.concordanceIndex(cells, "v", "e", "a")),
+    "Stats.bowker" -> (() => Stats.bowker(cells, "a", "b")),
+    "StatTests.kendallTauB" -> (() => StatTests.kendallTauB(cells, "a", "b")),
+    "StatTests.uncertaintyCoefficient" ->
+      (() => StatTests.uncertaintyCoefficient(cells, "a", "b")),
+    "Association.miMatrix" -> (() => Association.miMatrix(cells, Seq("g", "a", "b"))),
+    "MultipleTesting.pairwiseTestsBH" ->
+      (() => MultipleTesting.pairwiseTestsBH(cells, "g", "v")),
+    "MultipleTesting.pairwiseTestsHolm" ->
+      (() => MultipleTesting.pairwiseTestsHolm(cells, "g", "v")),
+    "Concentration.hillTailIndex" -> (() => Concentration.hillTailIndex(cells, "v", k = 10)),
+    "SkewReport.keySkew" -> (() => SkewReport.keySkew(cells, "a")))
+
+  (entryPoints ++ statsEntryPoints).foreach { case (name, run) =>
     test(s"$name keeps only the checkpoints its result reads") {
-      val before = persisted()
-      val out = run()
-      val added = persisted() -- before
+      val (out, added) = persistedBy(run())
       val read = checkpointsIn(out)
       assert(added.subsetOf(read), s"left persisted: ${added -- read}")
       // and nothing the result reads was released
       assert(out.collect().nonEmpty)
+    }
+  }
+
+  private lazy val reg = spark.range(90).selectExpr("id", "CAST(id % 9 AS DOUBLE) AS x",
+    "CAST((id % 9) * 2 + id % 2 AS DOUBLE) AS y")
+
+  Seq(
+    "Hpo.regressorTrialFn" -> (() => Hpo.regressorTrialFn(reg, "id", Seq("x"), "y",
+      "linear", k = 3)(Map.empty)),
+    "Hpo.classifierTrialFn" -> (() => Hpo.classifierTrialFn(
+      reg.withColumn("cls", when(col("x") < 4, "low").otherwise("high")),
+      "id", Seq("x"), "cls", "logistic", k = 3)(Map.empty))
+  ).foreach { case (name, trial) =>
+    test(s"a $name trial leaves no persisted RDD") {
+      val (metric, added) = persistedBy(trial())
+      assert(!metric.isNaN)
+      assert(added.isEmpty, s"left persisted: $added")
     }
   }
 
@@ -75,9 +122,7 @@ class GraphCoreSpec extends SparkSpec {
   }
 
   test("Checkpoints.release frees a local checkpoint that unpersist leaves") {
-    val before = persisted()
-    val cp = spark.range(10).toDF().localCheckpoint(true)
-    val added = persisted() -- before
+    val (cp, added) = persistedBy(spark.range(10).toDF().localCheckpoint(true))
     assert(added.size == 1 && added == checkpointsIn(cp))
     cp.unpersist()
     cp.unpersist(blocking = true)

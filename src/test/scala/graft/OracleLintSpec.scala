@@ -82,7 +82,7 @@ class OracleLintSpec extends AnyFunSuite {
   }
 
   test("no oracle final-select column is an uncast integer SUM") {
-    val bad = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap {
+    val bad = graft.oracle.Oracle.oracleSql.toSeq.sortBy(_._1).flatMap {
       case (name, sql) =>
         finalSelectCols(sql).filter(isUncastIntSum)
           .map(c => s"$name: ${c.take(80)}")
@@ -147,7 +147,7 @@ class OracleLintSpec extends AnyFunSuite {
 
   test("unrolled-iteration oracle CTE chains are MATERIALIZED " +
     "(DuckDB inlining re-expands them exponentially)") {
-    val bad = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap {
+    val bad = graft.oracle.Oracle.oracleSql.toSeq.sortBy(_._1).flatMap {
       case (name, sql) =>
         val chains = unmaterializedChains(sql)
         if (chains.isEmpty) Nil else Seq(s"$name: ${chains.mkString(", ")}")
@@ -185,5 +185,27 @@ class OracleLintSpec extends AnyFunSuite {
           CAST(SUM(CASE WHEN x > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
         FROM g"""
     assert(finalSelectCols(fixedShape).count(isUncastIntSum) == 0)
+  }
+
+  test("only graft/oracle holds DuckDB twins, and it holds all 268") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, root.getAbsolutePath)
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val (oracle, engine) = files(root).filter(_.getName.endsWith(".scala"))
+      .map { f =>
+        root.toPath.relativize(f.toPath).toString ->
+          new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      }
+      .partition(_._1.startsWith("graft/oracle/"))
+    val leaks = engine.collect {
+      case (f, src) if """def\s+\w*[oO]racleSql\b""".r.findFirstIn(src).nonEmpty ||
+          src.contains("duckPortable") => f
+    }
+    assert(leaks.isEmpty, leaks)
+    val twins = oracle.map { case (_, src) =>
+      """def\s+\w+OracleSql\b""".r.findAllMatchIn(src).size
+    }.sum
+    assert(twins == 268)
   }
 }

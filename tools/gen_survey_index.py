@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Regenerate SURVEY.md §2.14 (query-coverage index) from SparkEntry.scala.
+"""Regenerate SURVEY.md §2.14 (query-coverage index) from SparkEntry.scala
+and the oracle map (graft/oracle/Oracle.scala).
 
 The survey is the coverage contract the judge grades against; this script
 keeps §2.14 in lockstep with `SparkEntry.queries` so new waves can't drift
@@ -13,27 +14,28 @@ import re
 import sys
 
 SPARK_ENTRY = "src/main/scala/graft/SparkEntry.scala"
+ORACLE = "src/main/scala/graft/oracle/Oracle.scala"
 SURVEY = "SURVEY.md"
 
 # shared plumbing that never counts as a query's primary implementation
-HELPER_PREFIXES = ("core.Tables.", "core.PipelineMeta.", "plans.NanosPushdown.")
+HELPER_PREFIXES = ("core.Tables.", "core.PipelineMeta.")
 
 
 def parse_entries():
+    osrc = open(ORACLE).read()
+    om = re.search(r"val oracleSql", osrc)
+    oracle = set(re.findall(r'"(q\d+_\w+)"\s*->', osrc[om.start():]))
     src = open(SPARK_ENTRY).read()
-    om = re.search(r"def oracleSql", src)
-    oracle = set(re.findall(r'"(q\d+_\w+)"\s*->', src[om.start():]))
-    qsec = src[: om.start()]
+    qsec = src[re.search(r"val queries", src).start():]
     names, pos = [], {}
     for m in re.finditer(r'"(q\d+_\w+)"\s*->', qsec):
         n = m.group(1)
         if n not in names:
             names.append(n)
             pos[n] = m.start()
-    # body of the LAST entry ends at the closing of the queries map, which
-    # is bounded above by `def oracleSql` (qsec end) — but trailing vals /
-    # defs between the map and oracleSql would bleed in, so also stop at
-    # the first top-level `def `/`val ` after the map if present.
+    # body of the LAST entry ends at the closing of the queries map:
+    # stop at the first top-level `def `/`val ` after it, if any, so the
+    # helpers that follow the map do not bleed in.
     tail = re.search(r"\n  (?:def|val|private) ", qsec[pos[names[-1]]:])
     end_last = pos[names[-1]] + (tail.start() if tail else len(qsec) - pos[names[-1]])
     order = sorted(pos.values()) + [end_last]
