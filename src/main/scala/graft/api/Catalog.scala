@@ -222,17 +222,19 @@ class Catalog(val spark: SparkSession, val root: String) {
   // ── model / endpoint artifacts (api/model.py, api/endpoint.py) ──
 
   /** Onboard a fitted MLlib pipeline as a first-class registered model
-    * artifact: MLlib persistence under `models/`, a registry row of type
-    * `model` carrying target/features/labels so ANY later session can
-    * reopen it with [[model]] (reference: model_core.py:118-172 —
-    * the model package + its workbench_meta). */
+    * artifact: the pipeline under `models/`, written by the driver with
+    * no Spark job (MLlib's local layout, `GraftModelIO`; a root on a
+    * non-`file` filesystem keeps MLlib's own job-based writer), and a
+    * registry row of type `model` carrying target/features/labels so ANY
+    * later session can reopen it with [[model]] (reference:
+    * model_core.py:118-172 — the model package + its workbench_meta). */
   def onboardModel(name: String, pipeline: org.apache.spark.ml.PipelineModel,
                    modelType: String, target: String, features: Seq[String],
                    classLabels: Seq[String] = Nil, owner: String = "unknown",
                    input: String = "dataframe",
                    algo: String = "linear"): Model = {
     val clean = sanitize(name)
-    pipeline.write.overwrite().save(modelPath(clean))
+    org.apache.spark.ml.util.GraftModelIO.save(pipeline, modelPath(clean))
     // importance-at-train-time: persisted into registry meta so the
     // read-back (Model.getFeatureImportance) needs no model reload —
     // mirroring the reference publishing SHAP artifacts from the

@@ -1,6 +1,7 @@
 package graft.api
 
 import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.util.GraftModelIO
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,7 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * Both artifacts are THIN handles over the catalog: all state lives in
   * the registry row (type/target/features/labels/runs/metrics meta) and
-  * on disk (MLlib persistence under `models/`, capture parquet under
+  * on disk (the MLlib pipeline under `models/`, written and read on the
+  * driver in MLlib's local layout by `GraftModelIO`, which falls back to
+  * MLlib's job-based persistence on a non-`file` root; capture parquet under
   * `inference/<model>/<capture>/`), so a brand-new SparkSession pointed
   * at the same catalog root reopens them with `catalog.model(name)` /
   * `catalog.endpoint(name)` — the SageMaker model-package + endpoint
@@ -51,10 +54,13 @@ class Model(val catalog: Catalog, val name: String) {
   def classLabels: Seq[String] =
     meta.get("graft_class_labels").map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
 
-  /** The fitted MLlib pipeline (loaded lazily from the catalog's model
-    * dir; `None` for formula models). */
+  /** The fitted MLlib pipeline (loaded lazily on the driver from the
+    * catalog's model dir, no Spark job on a local root; `None` for
+    * formula models). */
   lazy val pipeline: Option[PipelineModel] =
-    if (flavor == "mllib") Some(PipelineModel.load(catalog.modelPath(name))) else None
+    if (flavor == "mllib")
+      Some(GraftModelIO.load(PipelineModel.read, catalog.modelPath(name)))
+    else None
 
   /** Run the model over a frame with (a superset of) the feature
     * columns — the in-cluster replacement for endpoint HTTP predict. */

@@ -1,7 +1,11 @@
 package graft.ml
 
+import graft.stores.DriverParquet
+import org.apache.spark.ml.regression.RandomForestRegressionModel
+import org.apache.spark.ml.util.GraftModelIO
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType, StructField, StructType}
 
 /** UQ model v0: split-conformal prediction intervals + residual-aware
   * confidence, calibrated on out-of-fold predictions
@@ -121,15 +125,34 @@ object UQ {
 
     /** Persist as a one-row parquet table (the Spark-native analogue of
       * the reference's uq_metadata_v0.json). */
-    def save(spark: SparkSession, dir: String): Unit = {
-      import spark.implicits._
-      Seq((confidenceLevels, scaleFactors.toSeq.sortBy(_._1), binEdges.toSeq,
-        bins.map(c => (c.x.toSeq, c.y.toSeq)), residualPercentiles.toSeq))
-        .toDF("confidence_levels", "scale_factors", "bin_edges", "bins",
-          "residual_percentiles")
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-    }
+    def save(spark: SparkSession, dir: String): Unit =
+      writeParams(spark, dir,
+        ("confidence_levels", Doubles, confidenceLevels),
+        ("scale_factors", ScaleFactorsType, scaleFactorRows(scaleFactors)),
+        ("bin_edges", Doubles, binEdges.toSeq),
+        ("bins", ArrayType(pair(Doubles, Doubles)),
+          bins.map(c => Row(c.x.toSeq, c.y.toSeq))),
+        ("residual_percentiles", Doubles, residualPercentiles.toSeq))
   }
+
+  // one-row parameter tables: written on the driver, read back without
+  // the schema-inference job (tuple-encoder layout: pairs are `_1`/`_2`
+  // structs, as the Dataset writes of earlier builds stored them)
+  private val Doubles = ArrayType(DoubleType)
+  private def pair(a: DataType, b: DataType) =
+    StructType(Seq(StructField("_1", a), StructField("_2", b)))
+  private val ScaleFactorsType = ArrayType(pair(StringType, DoubleType))
+  private def scaleFactorRows(m: Map[String, Double]): Seq[Row] =
+    m.toSeq.sortBy(_._1).map { case (a, q) => Row(a, q) }
+
+  private def writeParams(spark: SparkSession, dir: String,
+                          fields: (String, DataType, Any)*): Unit =
+    DriverParquet.writeTable(spark, dir,
+      StructType(fields.map { case (n, t, _) => StructField(n, t) }),
+      Seq(Row.fromSeq(fields.map(_._3))))
+
+  private def readParams(spark: SparkSession, dir: String): Row =
+    DriverParquet.read(spark, dir).head()
 
   /** Fit on out-of-fold columns of `df` (uq_model_v0.py:180-256). */
   def fit(df: DataFrame, yCol: String, predCol: String, stdCol: String,
@@ -271,7 +294,7 @@ object UQ {
       confidenceLevels: Seq[Double],
       scaleFactors: Map[String, Double],
       residualPercentiles: Array[Double],
-      errorModel: org.apache.spark.ml.regression.RandomForestRegressionModel)
+      errorModel: RandomForestRegressionModel)
     extends Serializable {
 
     /** 1 − percentile-rank, same rule as v0. */
@@ -306,11 +329,11 @@ object UQ {
     }
 
     def save(spark: SparkSession, dir: String): Unit = {
-      import spark.implicits._
-      errorModel.write.overwrite().save(s"$dir/error_model")
-      Seq((confidenceLevels, scaleFactors.toSeq.sortBy(_._1), residualPercentiles.toSeq))
-        .toDF("confidence_levels", "scale_factors", "residual_percentiles")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+      GraftModelIO.save(errorModel, s"$dir/error_model")
+      writeParams(spark, s"$dir/params",
+        ("confidence_levels", Doubles, confidenceLevels),
+        ("scale_factors", ScaleFactorsType, scaleFactorRows(scaleFactors)),
+        ("residual_percentiles", Doubles, residualPercentiles.toSeq))
     }
   }
 
@@ -367,14 +390,13 @@ object UQ {
 
   /** Load a model saved by [[UQModelV1.save]]. */
   def loadV1(spark: SparkSession, dir: String): UQModelV1 = {
-    val r = spark.read.parquet(s"$dir/params").head()
+    val r = readParams(spark, s"$dir/params")
     UQModelV1(
       r.getSeq[Double](r.fieldIndex("confidence_levels")),
       r.getSeq[Row](r.fieldIndex("scale_factors"))
         .map(p => p.getString(0) -> p.getDouble(1)).toMap,
       r.getSeq[Double](r.fieldIndex("residual_percentiles")).toArray,
-      org.apache.spark.ml.regression.RandomForestRegressionModel
-        .load(s"$dir/error_model"))
+      GraftModelIO.load(RandomForestRegressionModel.read, s"$dir/error_model"))
   }
 
   // ────────────────────────── UQ v2 ──────────────────────────
@@ -402,12 +424,11 @@ object UQ {
       distancePercentiles: Array[Double],
       variancePercentiles: Array[Double]) extends Serializable {
 
-    def save(spark: SparkSession, dir: String): Unit = {
-      import spark.implicits._
-      Seq((k, distancePercentiles.toSeq, variancePercentiles.toSeq))
-        .toDF("k", "distance_percentiles", "variance_percentiles")
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-    }
+    def save(spark: SparkSession, dir: String): Unit =
+      writeParams(spark, dir,
+        ("k", IntegerType, k),
+        ("distance_percentiles", Doubles, distancePercentiles.toSeq),
+        ("variance_percentiles", Doubles, variancePercentiles.toSeq))
 
     /** AD scores + neighbor-derived intervals for every query id present
       * in `neighbors`. Queries the proximity dropped stay present with
@@ -507,7 +528,7 @@ object UQ {
 
   /** Load a model saved by [[UQModelV2.save]]. */
   def loadV2(spark: SparkSession, dir: String): UQModelV2 = {
-    val r = spark.read.parquet(dir).head()
+    val r = readParams(spark, dir)
     UQModelV2(r.getInt(r.fieldIndex("k")),
       r.getSeq[Double](r.fieldIndex("distance_percentiles")).toArray,
       r.getSeq[Double](r.fieldIndex("variance_percentiles")).toArray)
@@ -515,7 +536,7 @@ object UQ {
 
   /** Load a model saved by [[UQModelV0.save]]. */
   def load(spark: SparkSession, dir: String): UQModelV0 = {
-    val r: Row = spark.read.parquet(dir).head()
+    val r = readParams(spark, dir)
     UQModelV0(
       r.getSeq[Double](r.fieldIndex("confidence_levels")),
       r.getSeq[Row](r.fieldIndex("scale_factors"))
