@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Tables
+import graft.core.{Checkpoints, Tables}
 import graft.dedup.Dedup
 import graft.eda.Eda
 import graft.ml.Metrics
@@ -30,8 +30,10 @@ object SparkEntry {
   /** Run independent lifecycle actions concurrently (guide §2.6: Spark's
     * scheduler overlaps jobs submitted from several driver threads, so
     * one inference's straggler tail back-fills with the next one's
-    * work). Bounded pool, exceptions rethrown, pool always torn down. */
-  private def parallelEach[A](items: Seq[A])(f: A => Unit): Unit =
+    * work). Bounded pool, exceptions rethrown, pool always torn down.
+    * Each task runs in the caller's checkpoint scope. */
+  private[graft] def parallelEach[A](items: Seq[A])(f0: A => Unit): Unit = {
+    val f = Checkpoints.carry(f0)
     if (items.size == 1) f(items.head)
     else if (items.nonEmpty) {
       // (empty guard: Executors.newFixedThreadPool(0) throws)
@@ -52,6 +54,7 @@ object SparkEntry {
         throw e }
       finally pool.shutdown()
     }
+  }
 
   /** Exact decimal sum surfaced as double — deterministic across engines
     * (decimal accumulation is order-independent; the final double cast of
@@ -65,9 +68,13 @@ object SparkEntry {
 
   private val lineitemNumeric = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
+  /** One query: (session, scale-factor directory) → its result. */
+  type Query = (SparkSession, String) => DataFrame
+
   /** Built once: every entry is a closure, so building the map reads
-    * no later `val` of this object. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    * no later `val` of this object. Each entry runs in its own
+    * `Checkpoints.scoped` call, which owns the checkpoints it makes. */
+  val queries: Map[String, Query] = Map[String, Query](
     // ───────── EDA pack (SURVEY §2.4) ─────────
     "q01_pricing_summary" -> ((s, dir) => {
       t(s, dir, "lineitem")
@@ -531,13 +538,11 @@ object SparkEntry {
         .withColumn("prediction", col("label").cast("double") * 0.9 + 0.5)
         .withColumn("prediction_std", lit(0.5))
       val nn = Proximity.knnJoinAdaptive(e, e, "vec_id", "embedding", 10, "euclidean", 64)
-      val feats = graft.proximity.Analytics.residualFeatures(
+      // checkpointed (not persisted): fit + predict both read it, and
+      // the query's scope frees it once nothing reads it
+      val feats = Checkpoints.local(graft.proximity.Analytics.residualFeatures(
         nn, e, "vec_id", "label", "prediction", 10)
-        .join(e.select(col("vec_id").as("id"), col("prediction_std")), Seq("id"))
-        // localCheckpoint (not persist): fit + predict both read it, and
-        // the checkpoint is released with the DataFrame instead of
-        // pinning session storage
-        .localCheckpoint(true)
+        .join(e.select(col("vec_id").as("id"), col("prediction_std")), Seq("id")))
       // OOF via the cross-fold runner (VERDICT r2 item 4): fit v1 on
       // k−1 folds, predict the held-out fold, stitched frame covers
       // every row once
@@ -4022,7 +4027,7 @@ object SparkEntry {
       graft.operators.SnapshotDiff.changedSimilarity(
         t(s, dir, "documents").select("doc_id", "text", "source"),
         snapshotNewDf(s, dir), "doc_id", "text", "source"))
-  )
+  ).map { case (name, q) => name -> ((s, dir) => Checkpoints.scoped(q(s, dir))) }
 
   /** Deterministic "next ingestion run" snapshot of the documents
     * table (shared by q520–q522): doc_id % 20 == 3 removed,

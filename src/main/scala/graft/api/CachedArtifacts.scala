@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 
 /** Shared result cache behind the `Cached*` artifact handles and
@@ -11,8 +12,10 @@ import org.apache.spark.sql.DataFrame
   * re-onboard invalidates on the next out-of-TTL access without any
   * hook in the write path.
   *
-  * DataFrame values are materialized via `localCheckpoint(true)`
-  * (metadata-sized by construction). Displaced frames are NOT released
+  * DataFrame values are materialized with `Checkpoints.retained`
+  * (metadata-sized by construction): they outlive the call that made
+  * them, so no `Checkpoints.scoped` call owns them and this cache frees
+  * them itself. Displaced frames are NOT released
   * immediately — localCheckpoint truncates lineage, so a caller still
   * holding a previously returned frame would hit an unrecoverable
   * "checkpoint block not found" on its next action (ADVICE r4).
@@ -30,7 +33,7 @@ private[graft] class ArtifactCache(catalog: Catalog, val ttlMs: Long,
   private val retired = new java.util.ArrayDeque[Any]()
 
   private def release(v: Any): Unit = v match {
-    case df: DataFrame => graft.core.Checkpoints.release(df)
+    case df: DataFrame => Checkpoints.release(df)
     case Some(inner) => release(inner)
     case _ => ()
   }
@@ -44,8 +47,8 @@ private[graft] class ArtifactCache(catalog: Catalog, val ttlMs: Long,
   // materialize DataFrames (bare or Option-wrapped) so the cached value
   // is a RESULT, not a lazy plan that re-reads files on every use
   private def materialize(v: Any): Any = v match {
-    case df: DataFrame => df.localCheckpoint(true)
-    case Some(df: DataFrame) => Some(df.localCheckpoint(true))
+    case df: DataFrame => Checkpoints.retained(df)
+    case Some(df: DataFrame) => Some(Checkpoints.retained(df))
     case other => other
   }
 

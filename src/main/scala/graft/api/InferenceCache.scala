@@ -133,7 +133,7 @@ class InferenceCache(val endpoint: Endpoint,
     * `idColumn` forward to the wrapped endpoint for the UNCACHED rows
     * only — a captured run records just the freshly computed work. */
   def inference(df: DataFrame, captureName: Option[String] = None,
-                idColumn: Option[String] = None): DataFrame = {
+                idColumn: Option[String] = None): DataFrame = Checkpoints.scoped {
     require(df.columns.contains(cacheKeyColumn),
       s"eval frame is missing required cache_key_column '$cacheKeyColumn'")
     checkInvalidation()
@@ -189,12 +189,7 @@ class InferenceCache(val endpoint: Endpoint,
       catalog.paramStore.upsert(uniqueKey,
         if (wasUnique && !keyRewritten && oneRowPerKey) s"true:${cacheStamp()}"
         else "false")
-      // the append has committed: nothing reads the endpoint output (or a
-      // capture checkpoint the endpoint made) again
-      Checkpoints.release(stamped)
-      Checkpoints.release(keyed)
     }
-    Checkpoints.release(toCompute)
 
     val latest = latestPerKey(store.get(cachePath))
     val featureCols = latest.columns
@@ -236,21 +231,22 @@ class InferenceCache(val endpoint: Endpoint,
     * never collateral damage (pass no keys you didn't mean to drop; a
     * null key itself can only be cleared via `clearCache`). Returns
     * rows removed. */
-  def deleteEntries(keys: Seq[Any]): Long = {
-    if (!store.check(cachePath) || keys.isEmpty) return 0L
-    val cache = store.get(cachePath)
-    // isin is null-void: !isin(...) evaluates to null for a null key and
-    // a bare filter would silently drop those rows from the rewrite
-    val matches = coalesce(key.isin(keys: _*), lit(false))
-    val removed = cache.filter(matches).count()
-    if (removed == 0L) return 0L
-    // materialize survivors BEFORE overwriting the directory being read
-    val kept = cache.filter(!matches).localCheckpoint(true)
-    if (kept.isEmpty) store.delete(cachePath)
-    else store.upsert(cachePath, kept)
-    Checkpoints.release(kept)
-    removed
-  }
+  def deleteEntries(keys: Seq[Any]): Long =
+    if (!store.check(cachePath) || keys.isEmpty) 0L
+    else Checkpoints.scoped {
+      val cache = store.get(cachePath)
+      // isin is null-void: !isin(...) evaluates to null for a null key and
+      // a bare filter would silently drop those rows from the rewrite
+      val matches = coalesce(key.isin(keys: _*), lit(false))
+      val removed = cache.filter(matches).count()
+      if (removed > 0L) {
+        // materialize survivors BEFORE overwriting the directory being read
+        val kept = Checkpoints.local(cache.filter(!matches))
+        if (kept.isEmpty) store.delete(cachePath)
+        else store.upsert(cachePath, kept)
+      }
+      removed
+    }
 }
 
 private object InferenceCache {
@@ -258,7 +254,7 @@ private object InferenceCache {
     * runs over the checkpoint's own RDD and materializes it (an eager
     * checkpoint's count plus a `Dataset.count()` would be three). */
   private def checkpointed(df: DataFrame): (DataFrame, Long) = {
-    val cp = df.localCheckpoint(eager = false)
+    val cp = Checkpoints.local(df, eager = false)
     (cp, cp.rdd.count())
   }
 }

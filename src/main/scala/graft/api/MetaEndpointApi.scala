@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.core.Checkpoints
 import graft.ml.Ensemble
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -140,10 +141,9 @@ class MetaEndpointDAG {
     * their Ensemble kernel), return the output node's frame with the
     * row id stripped (meta_endpoint_dag.py:282-400 run). */
   def run(input: DataFrame,
-          invoker: (String, DataFrame) => DataFrame): DataFrame = {
+          invoker: (String, DataFrame) => DataFrame): DataFrame = Checkpoints.scoped {
     validate()
-    val stamped = input.withColumn(RowId, monotonically_increasing_id())
-      .localCheckpoint(true)
+    val stamped = Checkpoints.local(input.withColumn(RowId, monotonically_increasing_id()))
     val outputs = mutable.Map.empty[String, DataFrame]
     topologicalOrder().foreach { node =>
       outputs(node) =

@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.core.Checkpoints
 import org.apache.spark.ml.PipelineModel
 import org.apache.spark.ml.util.GraftModelIO
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -245,7 +246,7 @@ class Endpoint(val catalog: Catalog, val name: String) {
     * persist the run like `_capture_inference_results`
     * (endpoint_core.py:1033-1148). Returns the prediction frame. */
   def inference(df: DataFrame, captureName: Option[String] = None,
-                idColumn: Option[String] = None): DataFrame = {
+                idColumn: Option[String] = None): DataFrame = Checkpoints.scoped {
     val m = model
     val raw = m.transform(df)
     // classifier post-processing: per-label proba columns + confidence
@@ -259,11 +260,11 @@ class Endpoint(val catalog: Catalog, val name: String) {
     // a captured run has 4-5 consumers (predictions write, metrics,
     // confusion matrix, InferenceStore append, data capture) plus the
     // caller — materialize ONCE instead of re-running the transform/
-    // residual plan per consumer (localCheckpoint so the blocks outlive
-    // this method for the caller and are GC-reclaimed when the frame is
-    // dropped)
+    // residual plan per consumer. The returned frame reads the
+    // checkpoint, so it passes to the caller's scope; the outermost
+    // caller frees it with Checkpoints.release
     val withRes =
-      if (captureName.isDefined || mon.captureEnabled) withRes0.localCheckpoint(true)
+      if (captureName.isDefined || mon.captureEnabled) Checkpoints.local(withRes0)
       else withRes0
 
     captureName.foreach { capture =>

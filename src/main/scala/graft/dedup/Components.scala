@@ -20,17 +20,16 @@ object Components {
     * @return (id, component) — component = min id reachable from `id`;
     *         singleton vertices are not present (no edges → no dedup).
     */
-  def connectedComponents(pairs: DataFrame, maxIterations: Int = 25): DataFrame = {
+  def connectedComponents(pairs: DataFrame,
+                          maxIterations: Int = 25): DataFrame = Checkpoints.scoped {
     // localCheckpoint (not persist) per generation: it TRUNCATES lineage,
     // without which the iterated join plan doubles every round and the
     // driver OOMs building plan strings long before the data is large.
     // At cluster scale swap for reliable checkpoint() with a checkpoint dir.
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint(true)
-    var labels = edges.groupBy(col("src").as("id"))
-      .agg(least(min("dst"), first("src")).as("component"))
-      .localCheckpoint(true)
+    val edges = Checkpoints.local(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
+    var labels = Checkpoints.local(edges.groupBy(col("src").as("id"))
+      .agg(least(min("dst"), first("src")).as("component")))
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIterations) {
@@ -38,18 +37,16 @@ object Components {
       val viaNeighbor = edges
         .join(labels.select(col("id").as("dst"), col("component").as("__nc")), Seq("dst"))
         .groupBy(col("src").as("id")).agg(min("__nc").as("__minNeighbor"))
-      val next = labels.join(viaNeighbor, Seq("id"), "left")
+      val next = Checkpoints.local(labels.join(viaNeighbor, Seq("id"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("__minNeighbor"), col("component")))
-            .as("component"))
-        .localCheckpoint(true)
+            .as("component")))
       changed = next.join(labels.withColumnRenamed("component", "__old"), Seq("id"))
         .filter(col("component") =!= col("__old")).count()
       Checkpoints.release(labels)
       labels = next
       iter += 1
     }
-    Checkpoints.release(edges)
     // non-convergence must be loud — silently returning partial
     // components would under-deduplicate downstream
     if (changed > 0) {
@@ -79,15 +76,15 @@ object Components {
   /** Returns (labels, rounds) — rounds exposed so tests can assert the
     * O(log n) convergence that motivates this implementation. */
   private[graft] def starIterate(pairs: DataFrame,
-                                 maxIterations: Int): (DataFrame, Int) = {
+                                 maxIterations: Int): (DataFrame, Int) = Checkpoints.scoped {
     val init = pairs
       .select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
-    val vertices = init.select(explode(array(col("u"), col("v"))).as("id"))
-      .distinct().localCheckpoint(true)
-    var edges = init
+    val vertices = Checkpoints.local(init.select(explode(array(col("u"), col("v"))).as("id"))
+      .distinct())
+    var edges = Checkpoints.local(init
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      .distinct().localCheckpoint(true)
+      .distinct())
     var sig = signature(edges)
     var iter = 0
     var converged = false
@@ -95,7 +92,7 @@ object Components {
       // LAZY checkpoint: the signature aggregate is the action that
       // materializes it, so each round is ONE job instead of two
       // (eager-checkpoint + signature) — still truncates lineage
-      val next = smallStar(largeStar(edges)).localCheckpoint(false)
+      val next = Checkpoints.local(smallStar(largeStar(edges)), eager = false)
       val nextSig = signature(next)
       converged = nextSig == sig // fixpoint: both transforms were identity
       sig = nextSig

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -92,16 +93,15 @@ object Contamination {
   def contaminationSweep(docs: DataFrame, idCol: String,
                          textCol: String,
                          benchmarks: Seq[(String, Column)],
-                         n: Int = 8): DataFrame = {
+                         n: Int = 8): DataFrame = Checkpoints.scoped {
     import org.apache.spark.sql.types.DecimalType
     require(benchmarks.nonEmpty)
-    val sh = docs.select(
+    val sh = Checkpoints.local(docs.select(
         (col(idCol).as("__id") +:
           benchmarks.map { case (nm, pred) => pred.as(s"__e_$nm") }) :+
           explode(graft.functions.Signatures
             .wordShingles(col(textCol), n)).as("__sh"): _*)
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     val perBench = benchmarks.map { case (nm, _) =>
       val e = col(s"__e_$nm")
       val train = sh.filter(!e).select("__sh").distinct()
@@ -120,9 +120,6 @@ object Contamination {
         .select(lit(nm).as("benchmark"), col("n_eval"),
           col("mean_overlap"), col("n_contaminated"))
     }
-    val out = perBench.reduce(_ unionByName _).orderBy("benchmark")
-      .localCheckpoint(true)
-    sh.unpersist()
-    out
+    Checkpoints.local(perBench.reduce(_ unionByName _).orderBy("benchmark"))
   }
 }

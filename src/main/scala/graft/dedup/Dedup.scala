@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Checkpoints
 import graft.text.Text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -132,7 +133,7 @@ object Dedup {
   def minhashLshStats(df: DataFrame, idCol: String, textCol: String,
                       shingleSize: Int = 3, numHashes: Int = 32,
                       bands: Int = 8, threshold: Double = 0.5,
-                      maxSample: Int = 2000): DataFrame = {
+                      maxSample: Int = 2000): DataFrame = Checkpoints.scoped {
     val rowsPerBand = numHashes / bands
     val shingled = df.select(col(idCol).as("id"),
       graft.functions.Signatures.wordShingles(col(textCol), shingleSize).as("sh"))
@@ -160,15 +161,14 @@ object Dedup {
     val counts = truth.agg(count(lit(1)).as("n_true_pairs"))
       .crossJoin(candidates.agg(count(lit(1)).as("n_candidates")))
       .crossJoin(found.agg(count(lit(1)).as("n_found_pairs")))
-    val out = counts.select(lit(nDocs).as("n_docs"), col("n_candidates"),
+    val out = Checkpoints.local(counts.select(lit(nDocs).as("n_docs"), col("n_candidates"),
       col("n_true_pairs"), col("n_found_pairs"),
       round(when(col("n_true_pairs") > 0,
         col("n_found_pairs").cast("double") / col("n_true_pairs")), 6)
         .as("recall"),
       round(when(col("n_candidates") > 0,
         col("n_found_pairs").cast("double") / col("n_candidates")), 6)
-        .as("cand_precision"))
-      .localCheckpoint(true)
+        .as("cand_precision")))
     shingled.unpersist(); docs.unpersist()
     out
   }
@@ -252,12 +252,11 @@ object Dedup {
     * as jaccardPairs, provably identical results.
     */
   def jaccardJoinPrefix(df: DataFrame, idCol: String, textCol: String,
-                        threshold: Double): DataFrame = {
+                        threshold: Double): DataFrame = Checkpoints.scoped {
     require(threshold > 0 && threshold <= 1)
-    val docs = df.select(col(idCol).as("id"),
+    val docs = Checkpoints.local(df.select(col(idCol).as("id"),
         array_distinct(Text.tokens(col(textCol))).as("w"))
-      .filter(size(col("w")) > 0)
-      .localCheckpoint(true)
+      .filter(size(col("w")) > 0))
     val freq = docs.select(explode(col("w")).as("t"))
       .groupBy("t").agg(count(lit(1)).as("__f"))
     // canonical rarest-first ordering, then the t-dependent prefix
@@ -281,12 +280,9 @@ object Dedup {
     val r = docs.select(col("id").as("id_b"), col("w").as("w_b"))
     val jac = size(array_intersect(col("w_a"), col("w_b"))).cast("double") /
       size(array_union(col("w_a"), col("w_b")))
-    val out = cand.join(l, "id_a").join(r, "id_b")
+    Checkpoints.local(cand.join(l, "id_a").join(r, "id_b")
       .select(col("id_a"), col("id_b"), round(jac, 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .localCheckpoint(true)
-    docs.unpersist()
-    out
+      .filter(col("jaccard") >= threshold))
   }
 
   /** Embedding-cosine near-duplicate pairs — brute-force oracle baseline
@@ -314,7 +310,7 @@ object Dedup {
     * pairs both consider. */
   def cosinePairsLsh(df: DataFrame, idCol: String, vecCol: String,
                      threshold: Double, dim: Int,
-                     nPlanes: Int = 8, nTables: Int = 4): DataFrame = {
+                     nPlanes: Int = 8, nTables: Int = 4): DataFrame = Checkpoints.scoped {
     val toD: Column => Column = c => transform(c, x => x.cast("double"))
     // stage the signatures once (narrow cached projection — HOF lambdas
     // are interpreted and CollapseProject would inline them per branch)
@@ -334,11 +330,10 @@ object Dedup {
     // materialize the verified pairs (bounded: near-dup pairs only) so
     // the signature cache can be RELEASED here — persisting across the
     // return would leak storage for the session lifetime
-    val out = cand.select(col("id_a"), col("id_b"),
+    val out = Checkpoints.local(cand.select(col("id_a"), col("id_b"),
         round(graft.proximity.Proximity.cosine(col("__va"), col("__vb")), 6)
           .as("similarity"))
-      .filter(col("similarity") >= threshold)
-      .localCheckpoint(true)
+      .filter(col("similarity") >= threshold))
     signed.unpersist()
     out
   }
@@ -403,7 +398,7 @@ object Dedup {
     * recall_b 6dp). */
   def dedupCompleteness(df: DataFrame, idCol: String, textCol: String,
                         nA: Int = 5, nB: Int = 8,
-                        maxDf: Int = 20): DataFrame = {
+                        maxDf: Int = 20): DataFrame = Checkpoints.scoped {
     def anchorPairs(n: Int): DataFrame = {
       val sh = df.select(col(idCol).cast("long").as("id"),
           explode(graft.functions.Signatures.wordShingles(col(textCol), n))
@@ -416,10 +411,10 @@ object Dedup {
         .filter(col("a") < col("b"))
         .select("a", "b").distinct()
     }
-    val pa = anchorPairs(nA).localCheckpoint(true)
-    val pb = anchorPairs(nB).localCheckpoint(true)
+    val pa = Checkpoints.local(anchorPairs(nA))
+    val pb = Checkpoints.local(anchorPairs(nB))
     val both = pa.join(pb, Seq("a", "b"))
-    val out = pa.agg(count(lit(1)).as("n_a"))
+    Checkpoints.local(pa.agg(count(lit(1)).as("n_a"))
       .crossJoin(pb.agg(count(lit(1)).as("n_b")))
       .crossJoin(both.agg(count(lit(1)).as("n_both")))
       .select(col("n_a"), col("n_b"), col("n_both"),
@@ -431,10 +426,7 @@ object Dedup {
           .as("recall_a"),
         round(when(col("est_total_pairs") > 0,
           col("n_b").cast("double") / col("est_total_pairs")), 6)
-          .as("recall_b"))
-      .localCheckpoint(true)
-    pa.unpersist(); pb.unpersist()
-    out
+          .as("recall_b")))
   }
 
   /** Cross-source duplicate share: of the near-dup pairs the anchor

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Checkpoints
 import graft.text.Text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -72,12 +73,11 @@ object Incremental {
     * against history, record what survived, return the survivors. */
   def dedupAndIngest(spark: SparkSession, batch: DataFrame, idCol: String,
                      textCol: String, storePath: String,
-                     batchId: String): DataFrame = {
-    val survivors = newDocuments(spark, batch, idCol, textCol, storePath)
-      .localCheckpoint(true) // pin BEFORE the store grows: survivors'
-    // anti-join must read the store as it was, not re-plan lazily
-    // against the just-appended fingerprints (which would drop
-    // everything on a second action)
+                     batchId: String): DataFrame = Checkpoints.scoped {
+    // pin BEFORE the store grows: survivors' anti-join must read the
+    // store as it was, not re-plan lazily against the just-appended
+    // fingerprints (which would drop everything on a second action)
+    val survivors = Checkpoints.local(newDocuments(spark, batch, idCol, textCol, storePath))
     ingest(spark, survivors, idCol, textCol, storePath, batchId)
     survivors
   }

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -34,7 +35,7 @@ object LeakageSplit {
   def leakageSafeSplit(df: DataFrame, idCol: String, textCol: String,
                        shingleSize: Int = 8, maxDf: Int = 5,
                        iters: Int = 4, trainFraction: Double = 0.8,
-                       seed: Long = 42L): DataFrame = {
+                       seed: Long = 42L): DataFrame = Checkpoints.scoped {
     require(iters >= 1 && iters <= 8, s"iters $iters out of range")
     require(trainFraction > 0 && trainFraction < 1)
     val docs = df.select(col(idCol).cast("long").as("id"),
@@ -42,54 +43,46 @@ object LeakageSplit {
     // checkpointed: rare and linked both read the exploded shingle
     // frame, and the pair self-join reads linked twice — without the
     // checkpoints the corpus explode+distinct ran three times
-    val sh = docs.select(col("id"), explode(
+    val sh = Checkpoints.local(docs.select(col("id"), explode(
         graft.functions.Signatures.wordShingles(col("__text"), shingleSize))
         .as("g"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     val rare = sh.groupBy("g").agg(count(lit(1)).as("__df"))
       .filter(col("__df") >= 2 && col("__df") <= maxDf)
       .select("g")
-    val linked = sh.join(rare, Seq("g")).localCheckpoint(true)
-    val edges = linked.select(col("g"), col("id").as("a"))
+    val linked = Checkpoints.local(sh.join(rare, Seq("g")))
+    val edges = Checkpoints.local(linked.select(col("g"), col("id").as("a"))
       .join(linked.select(col("g"), col("id").as("b")), Seq("g"))
       .filter(col("a") < col("b"))
-      .select("a", "b").distinct().localCheckpoint(true)
+      .select("a", "b").distinct())
     val symEdges = edges.union(edges.select(col("b").as("a"),
       col("a").as("b")))
-    var lab = docs.select(col("id"), col("id").as("label"))
-      .localCheckpoint(true)
+    var lab = Checkpoints.local(docs.select(col("id"), col("id").as("label")))
     for (_ <- 1 to iters) {
       val nbrMin = symEdges.join(lab, symEdges("b") === lab("id"))
         .groupBy(col("a")).agg(min("label").as("__nl"))
-      val next = lab.join(nbrMin, lab("id") === nbrMin("a"), "left")
+      val next = Checkpoints.local(lab.join(nbrMin, lab("id") === nbrMin("a"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("__nl"), col("label")))
-            .as("label"))
-        .localCheckpoint(true)
-      lab.unpersist()
+            .as("label")))
       lab = next
     }
     // portable md5 fold on the component label (stratifiedSplit scheme)
     val cut = f"${math.min((trainFraction * 4294967296L).toLong, 4294967295L)}%08x"
     val draw = substring(md5(concat_ws(":",
       col("label").cast("string"), lit(seed.toString))), 1, 8)
-    val assigned = lab.withColumn("split",
-      when(draw < lit(cut), "train").otherwise("test"))
-      .localCheckpoint(true)
+    val assigned = Checkpoints.local(lab.withColumn("split",
+      when(draw < lit(cut), "train").otherwise("test")))
     val cross = edges
       .join(assigned.select(col("id").as("a"), col("split").as("__sa")), "a")
       .join(assigned.select(col("id").as("b"), col("split").as("__sb")), "b")
       .agg(sum(when(col("__sa") =!= col("__sb"), 1L).otherwise(0L))
         .as("n_cross_pairs"))
-    val out = assigned.groupBy("split")
+    Checkpoints.local(assigned.groupBy("split")
       .agg(count(lit(1)).as("n_docs"),
         countDistinct("label").as("n_components"))
       .crossJoin(broadcast(cross))
       .select(col("split"), col("n_docs"), col("n_components"),
-        coalesce(col("n_cross_pairs"), lit(0L)).as("n_cross_pairs"))
-      .localCheckpoint(true)
-    edges.unpersist(); lab.unpersist(); assigned.unpersist()
-    out
+        coalesce(col("n_cross_pairs"), lit(0L)).as("n_cross_pairs")))
   }
 }

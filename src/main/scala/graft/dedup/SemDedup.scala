@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.proximity.Proximity
@@ -46,7 +47,7 @@ object SemDedup {
     * cap is the backstop, not the mechanism. */
   def semDedup(emb: DataFrame, idCol: String, vecCol: String,
                nClusters: Int = 16, tau: Double = 0.97,
-               seed: Long = 42L, maxClusterSize: Int = 100000): DataFrame = {
+               seed: Long = 42L, maxClusterSize: Int = 100000): DataFrame = Checkpoints.scoped {
     require(nClusters >= 2, s"need >= 2 clusters, got $nClusters")
     require(tau > 0.0 && tau < 1.0, s"tau must be in (0,1), got $tau")
     require(maxClusterSize >= 1, s"maxClusterSize must be >= 1, got $maxClusterSize")
@@ -85,12 +86,12 @@ object SemDedup {
         .filter(col("sim_a") < col("sim_b") ||
           (col("sim_a") === col("sim_b") && col("id_a") < col("id_b")))
         .select(col("id_b").as("id")).distinct()
-      assigned
+      // materialized before unpersisting the input
+      Checkpoints.local(assigned
         .join(dropped.withColumn("__dropped", lit(true)), Seq("id"), "left")
         .withColumn("keep", col("__dropped").isNull)
         .select(col("id"), col("cluster"),
-          round(col("centroid_sim"), 6).as("centroid_sim"), col("keep"))
-        .localCheckpoint(true) // materialize before unpersisting the input
+          round(col("centroid_sim"), 6).as("centroid_sim"), col("keep")))
     } finally assigned.unpersist()
   }
 }

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Checkpoints
 import graft.text.Text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -112,7 +113,7 @@ object ShardExchange {
     * Returns (shard_id, n_docs, n_manifest, n_winners, n_lost,
     * n_dup_rows) ordered by shard_id. */
   def exchangeReport(shards: Seq[(String, Int, DataFrame)], idCol: String,
-                     textCol: String): DataFrame = {
+                     textCol: String): DataFrame = Checkpoints.scoped {
     val manifests = shards.map { case (sid, ord, df) =>
       localManifest(df, idCol, textCol, sid, ord) }
     // materialize the manifest union ONCE (manifest-sized — the ~2% of
@@ -121,7 +122,7 @@ object ShardExchange {
     // each consumer re-derives every per-shard manifest from the
     // corpus — 2N parquet scans + 2N fingerprint aggregates instead
     // of N (the q480 plan audit showed exactly that doubling)
-    val all = manifests.reduce(_ unionByName _).localCheckpoint(true)
+    val all = Checkpoints.local(manifests.reduce(_ unionByName _))
     val winners = globalAssignFrom(all)
       .select(col("fingerprint").as("__fp"),
         col("canonical_shard").as("__ws"))

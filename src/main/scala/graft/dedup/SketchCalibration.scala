@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Checkpoints
 import graft.text.Text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -31,16 +32,16 @@ object SketchCalibration {
     * mean_abs_err 6dp). */
   def minhashReliability(docs: DataFrame, idCol: String,
                          textCol: String, numHashes: Int = 16,
-                         idCap: Int = 200): DataFrame = {
-    val base = docs.filter(col(idCol) < idCap && col(textCol).isNotNull)
+                         idCap: Int = 200): DataFrame = Checkpoints.scoped {
+    // idCap rows; both sides of the pair join
+    val base = Checkpoints.local(docs.filter(col(idCol) < idCap && col(textCol).isNotNull)
       .select(col(idCol).as("__id"),
         array_distinct(Text.tokens(col(textCol))).as("__ws"))
       .filter(size(col("__ws")) > 0)
       .withColumn("__mins",
         transform(sequence(lit(0), lit(numHashes - 1)), i =>
           array_min(transform(col("__ws"), s =>
-            md5(concat(i.cast("string"), lit("|"), s))))))
-      .localCheckpoint(true) // idCap rows; both sides of the pair join
+            md5(concat(i.cast("string"), lit("|"), s)))))))
     val pairs = base.as("a").join(base.as("b"),
       col("a.__id") < col("b.__id"))
     val matches = size(filter(

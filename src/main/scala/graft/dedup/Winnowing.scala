@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Checkpoints
 import graft.text.Text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -110,13 +111,12 @@ object Winnowing {
     * prefix-filter discipline). Returns (id_a, id_b, n_shared). */
   def candidatePairs(docs: DataFrame, idCol: String, textCol: String,
                      k: Int = 3, w: Int = 4, minShared: Int = 2,
-                     maxDf: Int = 10): DataFrame = {
-    val fpd = selectedKeys(staged(docs, idCol, textCol, k, w, Nil), k, w)
+                     maxDf: Int = 10): DataFrame = Checkpoints.scoped {
+    // materialize once: both sides of the pair join read this frame,
+    // and it is the SMALL post-winnowing sketch (~2/(w+1) of k-grams)
+    val fpd = Checkpoints.local(selectedKeys(staged(docs, idCol, textCol, k, w, Nil), k, w)
       .select(col("__id"), substring(col("__fp"), 1, 32).as("__h"))
-      .distinct()
-      // materialize once: both sides of the pair join read this frame,
-      // and it is the SMALL post-winnowing sketch (~2/(w+1) of k-grams)
-      .localCheckpoint(true)
+      .distinct())
     val dfq = fpd.groupBy("__h").agg(count(lit(1)).as("__df"))
       .filter(col("__df") >= 2 && col("__df") <= maxDf)
     val keep = fpd.join(dfq, Seq("__h"))

@@ -100,7 +100,7 @@ object Association {
     * stacked-audit shape). Cast only string/integer columns — float
     * VARCHAR rendering is engine-specific. Returns
     * (col_a, col_b, n, mi 6dp) ordered. */
-  def miMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
+  def miMatrix(df: DataFrame, cols: Seq[String]): DataFrame = Checkpoints.scoped {
     import org.apache.spark.sql.types.DecimalType
     require(cols.size >= 2)
     val pairs = for {
@@ -112,15 +112,15 @@ object Association {
       }: _*)).as("s")).select(col("s.ca"), col("s.cb"), col("s.va"),
         col("s.vb"))
       .filter(col("va").isNotNull && col("vb").isNotNull)
-    val cells = stacked.groupBy("ca", "cb", "va", "vb")
-      .agg(count(lit(1)).as("__n")).localCheckpoint(true)
+    val cells = Checkpoints.local(stacked.groupBy("ca", "cb", "va", "vb")
+      .agg(count(lit(1)).as("__n")))
     val ma = cells.groupBy("ca", "cb", "va").agg(sum("__n").as("__na"))
     val mb = cells.groupBy("ca", "cb", "vb").agg(sum("__n").as("__nb"))
     val nt = cells.groupBy("ca", "cb").agg(sum("__n").as("__nt"))
     val term = (col("__n").cast("double") / col("__nt").cast("double")) *
       log((col("__n").cast("double") * col("__nt").cast("double")) /
         (col("__na").cast("double") * col("__nb").cast("double")))
-    val out = cells
+    Checkpoints.local(cells
       .join(ma, Seq("ca", "cb", "va"))
       .join(mb, Seq("ca", "cb", "vb"))
       .join(nt, Seq("ca", "cb"))
@@ -129,9 +129,6 @@ object Association {
       .groupBy(col("ca").as("col_a"), col("cb").as("col_b"))
       .agg(first("__nt").as("n"),
         round(sum("__t").cast("double"), 6).as("mi"))
-      .orderBy("col_a", "col_b")
-      .localCheckpoint(true)
-    Checkpoints.release(cells)
-    out
+      .orderBy("col_a", "col_b"))
   }
 }

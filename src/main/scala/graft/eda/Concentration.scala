@@ -138,7 +138,7 @@ object Concentration {
     * only (a log-scale statistic). Returns one row:
     * (n, k, x_k1 6dp, hill_alpha 6dp). */
   def hillTailIndex(df: DataFrame, valueCol: String,
-                    k: Int = 100): DataFrame = {
+                    k: Int = 100): DataFrame = Checkpoints.scoped {
     require(k >= 10 && k <= 100000)
     val v = col(valueCol).cast("double")
     val pos = df.filter(v.isNotNull && !isnan(v) && v > 0)
@@ -146,20 +146,16 @@ object Concentration {
     val n = pos.count()
     require(n >= 2L * k,
       s"hillTailIndex needs n >= 2k (n = $n, k = $k)")
-    val top = pos.orderBy(col("__v").desc).limit(k + 1)
-      .localCheckpoint(true)
+    val top = Checkpoints.local(pos.orderBy(col("__v").desc).limit(k + 1))
     val xk1 = top.agg(min("__v")).head().getDouble(0)
-    val out = top.filter(col("__v") > xk1)
+    Checkpoints.local(top.filter(col("__v") > xk1)
       // the k rows above the threshold; with boundary ties the frame
       // may hold fewer — sum over what the cut kept, normalize by k
       .agg(sum(log(col("__v") / xk1)).as("__s"))
       .select(lit(n).as("n"), lit(k.toLong).as("k"),
         round(lit(xk1), 6).as("x_k1"),
         round(when(col("__s") > 0, lit(k.toDouble) / col("__s")), 6)
-          .as("hill_alpha"))
-      .localCheckpoint(true)
-    Checkpoints.release(top)
-    out
+          .as("hill_alpha")))
   }
 
   /** Atkinson inequality index at ε = 1: A = 1 − geomean/mean over

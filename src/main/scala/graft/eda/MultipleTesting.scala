@@ -35,14 +35,13 @@ object MultipleTesting {
     * per unordered group pair: (group_a, group_b, z_stat, p_value,
     * bh_rank, bh_threshold, significant). */
   def pairwiseTestsBH(df: DataFrame, groupCol: String, valueCol: String,
-                      alpha: Double = 0.05): DataFrame = {
+                      alpha: Double = 0.05): DataFrame = Checkpoints.scoped {
     val base = df
       .filter(col(valueCol).isNotNull && !isnan(col(valueCol).cast("double")))
       .select(col(groupCol).as("__g"), col(valueCol).cast("double").as("__v"))
-    val stats = base.groupBy("__g")
+    val stats = Checkpoints.local(base.groupBy("__g")
       .agg(count(lit(1)).as("__n"), avg("__v").as("__m"),
-        var_samp("__v").as("__var"))
-      .localCheckpoint(true)
+        var_samp("__v").as("__var")))
     val pairs = stats.as("a").join(stats.as("b"),
         col("a.__g") < col("b.__g"))
       .select(col("a.__g").as("group_a"), col("b.__g").as("group_b"),
@@ -61,11 +60,8 @@ object MultipleTesting {
     // Null-p pairs (untestable) drop before ranking — same
     // cross-engine NULL-sort hazard as the Holm battery.
     val k = stats.count()
-    val out = applyBh(withP.filter(col("p_value").isNotNull),
-        Seq("group_a", "group_b"), alpha, k * (k - 1) / 2)
-      .localCheckpoint(true)
-    Checkpoints.release(stats)
-    out
+    Checkpoints.local(applyBh(withP.filter(col("p_value").isNotNull),
+        Seq("group_a", "group_b"), alpha, k * (k - 1) / 2))
   }
 
   /** BH step shared by the test batteries: rank the (metadata-sized)
@@ -155,16 +151,15 @@ object MultipleTesting {
     * p_holm 6dp, significant). */
   def pairwiseTestsHolm(df: DataFrame, groupCol: String,
                         valueCol: String,
-                        alpha: Double = 0.05): DataFrame = {
+                        alpha: Double = 0.05): DataFrame = Checkpoints.scoped {
     val base = df
       .filter(col(valueCol).isNotNull &&
         !isnan(col(valueCol).cast("double")))
       .select(col(groupCol).as("__g"),
         col(valueCol).cast("double").as("__v"))
-    val stats = base.groupBy("__g")
+    val stats = Checkpoints.local(base.groupBy("__g")
       .agg(count(lit(1)).as("__n"), avg("__v").as("__m"),
-        var_samp("__v").as("__var"))
-      .localCheckpoint(true)
+        var_samp("__v").as("__var")))
     val pairs = stats.as("a").join(stats.as("b"),
         col("a.__g") < col("b.__g"))
       .select(col("a.__g").as("group_a"), col("b.__g").as("group_b"),
@@ -189,15 +184,12 @@ object MultipleTesting {
       col("group_b"))
     val wCum = w.rowsBetween(Window.unboundedPreceding,
       Window.currentRow)
-    val out = withP
+    Checkpoints.local(withP
       .withColumn("holm_rank", row_number().over(w))
       .withColumn("p_holm", round(least(lit(1.0),
         max((lit(m) - col("holm_rank") + 1).cast("double") *
           col("p_value")).over(wCum)), 6))
       .withColumn("significant", col("p_holm") <= alpha)
-      .orderBy("holm_rank")
-      .localCheckpoint(true)
-    Checkpoints.release(stats)
-    out
+      .orderBy("holm_rank"))
   }
 }

@@ -26,17 +26,17 @@ object SkewReport {
     */
   def keySkew(df: DataFrame, key: String,
               rankSmallMaxRows: Long = graft.ml.Metrics.RankSmallMaxRows)
-      : DataFrame = {
-    val counts = df.groupBy(col(key)).agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true) // reused 4×; also avoids the self-lineage
-                             // attribute collision a shared plan invites
-    try {
-      val t = counts.agg(sum("__c"), count(lit(1)), max("__c")).head()
-      val spark0 = df.sparkSession
-      if (t.isNullAt(0)) // empty input: a zero-row report, not an NPE
-        return spark0.range(0).select(lit(0L).as("n_rows"), lit(0L).as("n_keys"),
-          lit(0.0).as("max_key_share"), lit(0.0).as("top5_share"),
-          lit(0.0).as("gini"))
+      : DataFrame = Checkpoints.scoped {
+    // reused 4×; also avoids the self-lineage attribute collision a
+    // shared plan invites
+    val counts = Checkpoints.local(df.groupBy(col(key)).agg(count(lit(1)).as("__c")))
+    val t = counts.agg(sum("__c"), count(lit(1)), max("__c")).head()
+    val spark = df.sparkSession
+    if (t.isNullAt(0)) // empty input: a zero-row report, not an NPE
+      spark.range(0).select(lit(0L).as("n_rows"), lit(0L).as("n_keys"),
+        lit(0.0).as("max_key_share"), lit(0.0).as("top5_share"),
+        lit(0.0).as("gini"))
+    else {
       val (nRows, nKeys, mx) = (t.getLong(0), t.getLong(1), t.getLong(2))
       val t5 = counts.orderBy(desc("__c"), asc(key)).limit(5)
         .agg(sum("__c")).head().getLong(0)
@@ -51,7 +51,6 @@ object SkewReport {
       val g = ranked.agg(sum(col("score") *
           (lit(2.0) * col("n") * col("avg_rank") - col("n") * lit(nKeys + 1.0))))
         .head().getDouble(0)
-      val spark = df.sparkSession
       def r6(x: Double) =
         BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       spark.range(1).select(
@@ -59,7 +58,7 @@ object SkewReport {
         lit(r6(mx.toDouble / nRows)).as("max_key_share"),
         lit(r6(t5.toDouble / nRows)).as("top5_share"),
         lit(r6(g / (nKeys.toDouble * nRows))).as("gini"))
-    } finally Checkpoints.release(counts)
+    }
   }
 
   /** Exact output cardinality of `left ⋈ right` on `key` WITHOUT

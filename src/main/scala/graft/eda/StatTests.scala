@@ -201,13 +201,12 @@ object StatTests {
     * x1<x2 self-join of the cell table (each unordered pair counted
     * once; equal-x pairs are x-ties by definition). Returns one row:
     * (n, n_cells, concordant, discordant, tau_b). */
-  def kendallTauB(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cells = df
+  def kendallTauB(df: DataFrame, aCol: String, bCol: String): DataFrame = Checkpoints.scoped {
+    val cells = Checkpoints.local(df
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).cast("double").as("__x"),
         col(bCol).cast("double").as("__y"))
-      .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("__c")))
     val pairs = cells.as("c1")
       .join(cells.as("c2"), col("c1.__x") < col("c2.__x"))
       .agg(
@@ -223,7 +222,7 @@ object StatTests {
       .agg(sum(col("__nx") * (col("__nx") - 1) / 2).as("__tx"))
     val ty = cells.groupBy("__y").agg(sum("__c").as("__ny"))
       .agg(sum(col("__ny") * (col("__ny") - 1) / 2).as("__ty"))
-    val out = pairs.crossJoin(margins).crossJoin(tx).crossJoin(ty)
+    Checkpoints.local(pairs.crossJoin(margins).crossJoin(tx).crossJoin(ty)
       .select(
         col("__n").as("n"), col("__ncells").as("n_cells"),
         col("__conc").as("concordant"), col("__disc").as("discordant"),
@@ -231,10 +230,7 @@ object StatTests {
           (col("__conc") - col("__disc")).cast("double"),
           sqrt((col("__n") * (col("__n") - 1) / 2.0 - col("__tx")) *
                (col("__n") * (col("__n") - 1) / 2.0 - col("__ty")))), 6)
-          .as("tau_b"))
-      .localCheckpoint(true)
-    Checkpoints.release(cells)
-    out
+          .as("tau_b")))
   }
 
   /** Brown–Forsythe variance-homogeneity test (Levene's test with the
@@ -759,12 +755,11 @@ object StatTests {
     * Returns one row: (n, h_x 6dp, h_y 6dp, mi 6dp, u_y_given_x 6dp).
     */
   def uncertaintyCoefficient(df: DataFrame, xCol: String,
-                             yCol: String): DataFrame = {
-    val cells = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
+                             yCol: String): DataFrame = Checkpoints.scoped {
+    val cells = Checkpoints.local(df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).cast("string").as("__x"),
         col(yCol).cast("string").as("__y"))
-      .agg(count(lit(1)).as("__n"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("__n")))
     val tot = cells.agg(sum("__n").as("__t"))
     def entropy(groups: DataFrame, nm: String) = groups
       .crossJoin(broadcast(tot))
@@ -775,16 +770,13 @@ object StatTests {
     val hy = entropy(cells.groupBy("__y").agg(sum("__n").as("__n")),
       "__hy")
     val hxy = entropy(cells.select(col("__n")), "__hxy")
-    val out = tot.crossJoin(hx).crossJoin(hy).crossJoin(hxy)
+    Checkpoints.local(tot.crossJoin(hx).crossJoin(hy).crossJoin(hxy)
       .select(col("__t").as("n"), round(col("__hx"), 6).as("h_x"),
         round(col("__hy"), 6).as("h_y"),
         round(col("__hx") + col("__hy") - col("__hxy"), 6).as("mi"),
         round(when(col("__hy") > 0,
           (col("__hx") + col("__hy") - col("__hxy")) / col("__hy")), 6)
-          .as("u_y_given_x"))
-      .localCheckpoint(true)
-    Checkpoints.release(cells)
-    out
+          .as("u_y_given_x")))
   }
 
   /** Cochran–Mantel–Haenszel test + MH pooled odds ratio for K
@@ -985,7 +977,7 @@ object StatTests {
     * DECIMAL(38,0) and order-free on any engine. Returns one row:
     * (n_a, n_b, e_between 6dp, energy 6dp). */
   def energyDistance(a: DataFrame, b: DataFrame,
-                     valueCol: String): DataFrame = {
+                     valueCol: String): DataFrame = Checkpoints.scoped {
     import org.apache.spark.sql.types.DecimalType
     def cells(df: DataFrame) =
       df.select(col(valueCol).cast(DecimalType(18, 2)).as("__v"))
@@ -994,11 +986,10 @@ object StatTests {
         .groupBy("__vc").agg(count(lit(1)).as("__c"))
     val ca = cells(a).select(col("__vc").as("__va"), col("__c").as("__ca"))
     val cb = cells(b).select(col("__vc").as("__vb"), col("__c").as("__cb"))
-    val all = ca.join(cb, col("__va") === col("__vb"), "full")
+    val all = Checkpoints.local(ca.join(cb, col("__va") === col("__vb"), "full")
       .select(coalesce(col("__va"), col("__vb")).as("__v"),
         coalesce(col("__ca"), lit(0L)).as("__ca"),
-        coalesce(col("__cb"), lit(0L)).as("__cb"))
-      .localCheckpoint(true)
+        coalesce(col("__cb"), lit(0L)).as("__cb")))
     val l = all.select(col("__v").as("__v1"), col("__ca").as("__ca1"),
       col("__cb").as("__cb1"))
     val r = all.select(col("__v").as("__v2"), col("__ca").as("__ca2"),
@@ -1154,13 +1145,12 @@ object StatTests {
     * scalar math; 2·JT is carried as an exact integer. Returns one
     * row: (n, n_groups, jt 1dp, z_stat 6dp). */
   def jonckheereTerpstra(df: DataFrame, groupCol: String,
-                         valueCol: String): DataFrame = {
-    val cells = df.filter(col(groupCol).isNotNull &&
+                         valueCol: String): DataFrame = Checkpoints.scoped {
+    val cells = Checkpoints.local(df.filter(col(groupCol).isNotNull &&
         col(valueCol).isNotNull)
       .groupBy(col(groupCol).cast("long").as("__g"),
         col(valueCol).cast("long").as("__v"))
-      .agg(count(lit(1)).as("__n"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("__n")))
     val a = cells.select(col("__g").as("ga"), col("__v").as("va"),
       col("__n").as("na"))
     val b = cells.select(col("__g").as("gb"), col("__v").as("vb"),

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -27,13 +28,12 @@ object Bootstrap {
     * bit-identical on any engine. Returns
     * (group, n_units, mean, ci_lo, ci_hi, n_reps) floats 6dp. */
   def subsampleCi(df: DataFrame, groupCol: String, idCol: String,
-                  valueCol: String, b: Int = 64): DataFrame = {
+                  valueCol: String, b: Int = 64): DataFrame = Checkpoints.scoped {
     require(b >= 4, s"need at least 4 replicates, got $b")
     val spark = df.sparkSession
-    val units = df.select(col(groupCol).as("__g"), col(idCol).as("__id"),
+    val units = Checkpoints.local(df.select(col(groupCol).as("__g"), col(idCol).as("__id"),
         col(valueCol).cast("decimal(18,2)").as("__y"))
-      .filter(col("__y").isNotNull)
-      .localCheckpoint(true)
+      .filter(col("__y").isNotNull))
     val reps = spark.range(1, b + 1).toDF("__rep")
     val kept = units.crossJoin(broadcast(reps))
       .filter(substring(md5(concat(col("__id").cast("string"), lit(":"),
@@ -55,14 +55,11 @@ object Bootstrap {
     val full = units.groupBy(col("__g"))
       .agg(count(lit(1)).as("n_units"),
         (sum("__y").cast("double") / count(lit(1))).as("__mean"))
-    val out = full.join(ci, Seq("__g"), "left")
+    Checkpoints.local(full.join(ci, Seq("__g"), "left")
       .select(col("__g").as("group"), col("n_units"),
         round(col("__mean"), 6).as("mean"),
         round(col("__lo"), 6).as("ci_lo"),
         round(col("__hi"), 6).as("ci_hi"),
-        coalesce(col("n_reps"), lit(0L)).as("n_reps"))
-      .localCheckpoint(true)
-    units.unpersist()
-    out
+        coalesce(col("n_reps"), lit(0L)).as("n_reps")))
   }
 }

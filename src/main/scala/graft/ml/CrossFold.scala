@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -39,25 +40,25 @@ object CrossFold {
     * column; every input row appears in exactly one fold's output
     * (provided `trainInfer` preserves rows of its second argument). */
   def run(df: DataFrame, idCol: String, k: Int)(
-      trainInfer: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+      trainInfer: (DataFrame, DataFrame) => DataFrame): DataFrame = Checkpoints.scoped {
     require(k >= 2, s"cross-fold needs k >= 2, got $k")
     require(!df.columns.contains("fold"),
       "cross-fold input already has a 'fold' column — rename it first")
     val withFold = df.withColumn("fold", foldColumn(col(idCol), k))
     withFold.persist()
     try {
-      (0 until k).map { i =>
+      val folds = (0 until k).map { i =>
         trainInfer(
           withFold.filter(col("fold") =!= i).drop("fold"),
           withFold.filter(col("fold") === i))
-      } // allowMissingColumns: fold outputs can legitimately differ in
-        // label-derived columns (a rare class absent from one fold's
-        // training data produces no {label}_proba there) — missing
-        // columns null-fill instead of failing the stitch
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-        // materialize the stitched OOF frame so the persisted input can
-        // be released before return (k MLlib fits already forced it)
-        .localCheckpoint(true)
+      }
+      // allowMissingColumns: fold outputs can legitimately differ in
+      // label-derived columns (a rare class absent from one fold's
+      // training data produces no {label}_proba there) — missing columns
+      // null-fill instead of failing the stitch. The stitched OOF frame
+      // is materialized so the persisted input can be released before
+      // return (k MLlib fits already forced it).
+      Checkpoints.local(folds.reduce(_.unionByName(_, allowMissingColumns = true)))
     } finally withFold.unpersist()
   }
 }

@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.core.Tables
+import graft.core.{Checkpoints, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -320,17 +320,16 @@ object Experiments {
     * is redistributed by construction). */
   def rakeWeights(sample: DataFrame, population: DataFrame,
                   rowCol: String, colCol: String,
-                  iters: Int = 3): DataFrame = {
+                  iters: Int = 3): DataFrame = Checkpoints.scoped {
     require(iters >= 1 && iters <= 10, s"iters $iters out of range")
     val popR = population.groupBy(col(rowCol).as("r"))
       .agg(count(lit(1)).cast("double").as("__pr"))
     val popC = population.groupBy(col(colCol).as("c"))
       .agg(count(lit(1)).cast("double").as("__pc"))
-    var cells = sample.groupBy(col(rowCol).as("r"), col(colCol).as("c"))
+    var cells = Checkpoints.local(sample.groupBy(col(rowCol).as("r"), col(colCol).as("c"))
       .agg(count(lit(1)).as("n_sample"))
       .join(popR, Seq("r")).join(popC, Seq("c"))
-      .withColumn("__w", lit(1.0))
-      .localCheckpoint(true)
+      .withColumn("__w", lit(1.0)))
     for (_ <- 1 to iters) {
       val rowTot = cells.groupBy("r")
         .agg(sum(col("n_sample") * col("__w")).as("__tr"))
@@ -339,9 +338,9 @@ object Experiments {
         .drop("__tr")
       val colTot = cells.groupBy("c")
         .agg(sum(col("n_sample") * col("__w")).as("__tc"))
-      cells = cells.join(colTot, Seq("c"))
+      cells = Checkpoints.local(cells.join(colTot, Seq("c"))
         .withColumn("__w", col("__w") * col("__pc") / col("__tc"))
-        .drop("__tc").localCheckpoint(true)
+        .drop("__tc"))
     }
     cells.select(col("r"), col("c"), col("n_sample"),
       round(col("__w"), 6).as("weight"),
@@ -396,7 +395,7 @@ object Experiments {
     * Returns one row: (n_a, s_a, n_b, s_b, mean_a 6dp, mean_b 6dp,
     * prob_b_beats_a 6dp). */
   def bayesianAb(units: DataFrame, armCol: String, convCol: String,
-                 armA: String, armB: String): DataFrame = {
+                 armA: String, armB: String): DataFrame = Checkpoints.scoped {
     import org.apache.spark.sql.expressions.Window
     val spark = units.sparkSession
     val isA = col(armCol) === armA
@@ -416,11 +415,10 @@ object Experiments {
     val (aA, bA) = (1L + sa, 1L + (na - sa))
     val (aB, bB) = (1L + sb, 1L + (nb - sb))
     val top = aA + aB + bA + bB
-    val lf = spark.range(0, top + 1)
+    val lf = Checkpoints.local(spark.range(0, top + 1)
       .withColumn("lf", sum(log(greatest(col("id"), lit(1L))))
         .over(Window.orderBy("id")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .localCheckpoint(true)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
     def lfOf(alias: String) =
       lf.select(col("id").as(alias + "_i"), col("lf").as(alias))
     // ln B(x, y) = lf(x−1) + lf(y−1) − lf(x+y−1)

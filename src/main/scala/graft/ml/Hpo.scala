@@ -148,15 +148,13 @@ object Hpo {
     * Scoring in the regime the winner is used in — OOF, not train. */
   def regressorTrialFn(df: DataFrame, idCol: String, features: Seq[String],
                        target: String, algo: String, k: Int = 3,
-                       seed: Long = 42L): Config => Double = { cfg =>
+                       seed: Long = 42L): Config => Double = cfg => Checkpoints.scoped {
     val oof = CrossFold.run(df, idCol, k) { (train, test) =>
       Models.trainRegressor(train, features, target, algo, cfg, seed)
         .transform(test)
         .select(col(idCol), col(target), col("prediction"))
     }
-    try oof.agg(sqrt(avg(pow(col(target) - col("prediction"), 2))).as("rmse"))
-      .head.getDouble(0)
-    finally Checkpoints.release(oof)
+    oof.agg(sqrt(avg(pow(col(target) - col("prediction"), 2))).as("rmse")).head.getDouble(0)
   }
 
   /** Classifier trial function: out-of-fold accuracy (use mode = "max").
@@ -166,14 +164,12 @@ object Hpo {
     * pitfall CrossFold's classifier path documents). */
   def classifierTrialFn(df: DataFrame, idCol: String, features: Seq[String],
                         target: String, algo: String, k: Int = 3,
-                        seed: Long = 42L): Config => Double = { cfg =>
+                        seed: Long = 42L): Config => Double = cfg => Checkpoints.scoped {
     val oof = CrossFold.run(df, idCol, k) { (train, test) =>
       val m = Models.trainClassifier(train, features, target, algo, cfg, seed)
       Models.labelPredictions(m.transform(test), Models.classLabels(m), confidence = false)
         .select(col(idCol), col(target), col("prediction"))
     }
-    try oof.agg(avg(when(col(target) === col("prediction"), 1.0).otherwise(0.0)))
-      .head.getDouble(0)
-    finally Checkpoints.release(oof)
+    oof.agg(avg(when(col(target) === col("prediction"), 1.0).otherwise(0.0))).head.getDouble(0)
   }
 }

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,7 +27,7 @@ object Isotonic {
     * buckets. Returns (bucket, n, n_pos, mean_score 6dp, frac_pos 6dp,
     * iso_prob 6dp) with iso_prob non-decreasing in bucket. */
   def calibrate(df: DataFrame, scoreCol: String, labelCol: String,
-                buckets: Int = 20): DataFrame = {
+                buckets: Int = 20): DataFrame = Checkpoints.scoped {
     val v = col(scoreCol).cast("double")
     val y = col(labelCol).cast("boolean")
     // bounds come from the SAME filtered frame as the cells (ADVICE r12:
@@ -35,7 +36,8 @@ object Isotonic {
     // bucket assignment); NaN scores are dropped like Copula/RankTests
     val src = df.filter(v.isNotNull && y.isNotNull && !isnan(v))
     val bounds = src.agg(min(v).as("__lo"), max(v).as("__hi"))
-    val cells = src
+    // ≤ buckets rows; read by three consumers
+    val cells = Checkpoints.local(src
       .crossJoin(broadcast(bounds))
       .withColumn("__b",
         when(col("__hi") === col("__lo"), lit(0))
@@ -46,8 +48,7 @@ object Isotonic {
       .groupBy("__b")
       .agg(count(lit(1)).as("n"),
         sum(when(y, 1L).otherwise(0L)).as("n_pos"),
-        sum(v).as("__sv"))
-      .localCheckpoint(true) // ≤ buckets rows; read by three consumers
+        sum(v).as("__sv")))
     val wPre = Window.orderBy("__b")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val pre = cells

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -35,12 +36,13 @@ object LearningCurve {
     * (frac, n_train, n_test, slope 6dp, intercept 6dp, r2_test 6dp). */
   def simpleOlsCurve(df: DataFrame, xCol: String, yCol: String,
                      keyExpr: Column, fractions: Seq[Int] = Seq(10, 20, 40, 80),
-                     testFrom: Int = 80): DataFrame = {
+                     testFrom: Int = 80): DataFrame = Checkpoints.scoped {
     val ss = df.sparkSession
     import ss.implicits._
     val x = col(xCol).cast("double")
     val y = col(yCol).cast("double")
-    val cells = df.filter(x.isNotNull && y.isNotNull)
+    // 100 rows; train and test both read it
+    val cells = Checkpoints.local(df.filter(x.isNotNull && y.isNotNull)
       // pre-mod by 1e9+7 keeps the Knuth product inside int64 for any
       // key domain (1e9·2654435761 < 2^63; a raw 1e10 key overflows)
       .select(pmod(pmod(keyExpr, lit(1000000007L)) * lit(2654435761L),
@@ -51,8 +53,7 @@ object LearningCurve {
         sum("__y").as("sy"),
         sum(col("__x") * col("__y")).as("sxy"),
         sum(col("__x") * col("__x")).as("sxx"),
-        sum(col("__y") * col("__y")).as("syy"))
-      .localCheckpoint(true) // 100 rows; train and test both read it
+        sum(col("__y") * col("__y")).as("syy")))
     val fr = fractions.toDF("frac")
     val train = fr.join(cells, col("__b") < col("frac"))
       .groupBy("frac")

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -22,7 +23,7 @@ import org.apache.spark.sql.functions._
 object Lift {
 
   def liftTable(df: DataFrame, scoreCol: String, labelCol: String,
-                bands: Int = 10): DataFrame = {
+                bands: Int = 10): DataFrame = Checkpoints.scoped {
     val base = df.select(col(scoreCol).cast("double").as("__s"),
         col(labelCol).cast("int").as("__y"))
       .filter(col("__s").isNotNull && !isnan(col("__s")) &&
@@ -40,11 +41,11 @@ object Lift {
         .map(e => BigDecimal(e).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
     val band = edges.foldLeft(lit(1))((acc, e) =>
       acc + when(col("__s") > e, 1).otherwise(0))
-    val perBand = binned(base, band).localCheckpoint(true)
+    val perBand = Checkpoints.local(binned(base, band))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("band").desc)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val out = perBand
+    Checkpoints.local(perBand
       .withColumn("__cum_pos", sum("n_pos").over(w))
       .crossJoin(perBand.agg(sum("n_pos").as("__tot_pos"),
         sum("n").as("__tot_n")))
@@ -53,10 +54,7 @@ object Lift {
         round(try_divide(col("__cum_pos"), col("__tot_pos")), 6)
           .as("cum_capture"),
         round(try_divide(col("n_pos") / col("n"),
-          col("__tot_pos") / col("__tot_n")), 6).as("lift"))
-      .localCheckpoint(true)
-    perBand.unpersist()
-    out
+          col("__tot_pos") / col("__tot_n")), 6).as("lift")))
   }
 
   /** per-band counts — split out so the frame feeding both the window

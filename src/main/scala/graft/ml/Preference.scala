@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -41,7 +42,7 @@ object Preference {
     * grows double-exponentially in `iters` and stalls planning.
     * Returns (item, n_matches, n_wins, strength 6dp). */
   def bradleyTerry(matches: DataFrame, itemA: String, itemB: String,
-                   winsA: String, winsB: String, iters: Int = 8): DataFrame = {
+                   winsA: String, winsB: String, iters: Int = 8): DataFrame = Checkpoints.scoped {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val m = matches.select(
       col(itemA).as("__a"), col(itemB).as("__b"),
@@ -49,16 +50,14 @@ object Preference {
       col(winsB).cast("double").as("__wb"))
     // symmetric view: one row per ordered (i, j) with i's wins and the
     // pair's total match count — every later pass keys on i only
-    val sym = m.select(col("__a").as("i"), col("__b").as("j"),
+    val sym = Checkpoints.local(m.select(col("__a").as("i"), col("__b").as("j"),
         col("__wa").as("w"), (col("__wa") + col("__wb")).as("nij"))
       .union(m.select(col("__b").as("i"), col("__a").as("j"),
         col("__wb").as("w"), (col("__wa") + col("__wb")).as("nij")))
       .groupBy("i", "j")
-      .agg(sum("w").as("w"), sum("nij").as("nij"))
-      .localCheckpoint(true)
-    val wins = sym.groupBy("i")
-      .agg(sum("w").as("wi"), sum("nij").as("ni"))
-      .localCheckpoint(true)
+      .agg(sum("w").as("w"), sum("nij").as("nij")))
+    val wins = Checkpoints.local(sym.groupBy("i")
+      .agg(sum("w").as("wi"), sum("nij").as("ni")))
     val k = wins.count().toDouble
     val spark = matches.sparkSession
     // k-row LocalRelation each round: actual tiny stats, auto-broadcast
@@ -82,13 +81,10 @@ object Preference {
         .select(col("i"), (col("__raw") / col("__z")).as("p")))
       t += 1
     }
-    val out = wins.join(p, "i")
+    Checkpoints.local(wins.join(p, "i")
       .select(col("i").as("item"), col("ni").cast("long").as("n_matches"),
         col("wi").cast("double").as("n_wins"),
-        round(col("p"), 6).as("strength"))
-      .localCheckpoint(true)
-    sym.unpersist(); wins.unpersist()
-    out
+        round(col("p"), 6).as("strength")))
   }
 
   /** Position-bias audit over an ORDERED pair log (one row per
@@ -103,14 +99,13 @@ object Preference {
     * (item, n_first, n_first_wins, first_win_rate, pooled_rate, z)
     * floats 6dp, z null when p₀ degenerates to 0 or 1. */
   def positionBias(pairLog: DataFrame, firstCol: String,
-                   firstWonCol: String): DataFrame = {
-    val per = pairLog.groupBy(col(firstCol).as("item"))
+                   firstWonCol: String): DataFrame = Checkpoints.scoped {
+    val per = Checkpoints.local(pairLog.groupBy(col(firstCol).as("item"))
       .agg(count(lit(1)).as("n_first"),
-        sum(col(firstWonCol).cast("long")).as("n_first_wins"))
-      .localCheckpoint(true)
+        sum(col(firstWonCol).cast("long")).as("n_first_wins")))
     val pooled = per.agg((sum("n_first_wins").cast("double") /
       sum("n_first")).as("__p0"))
-    val out = per.crossJoin(pooled)
+    Checkpoints.local(per.crossJoin(pooled)
       .select(col("item"), col("n_first"), col("n_first_wins"),
         round(col("n_first_wins").cast("double") / col("n_first"), 6)
           .as("first_win_rate"),
@@ -119,10 +114,7 @@ object Preference {
           (col("n_first_wins").cast("double") / col("n_first") -
             col("__p0")) /
             sqrt(col("__p0") * (lit(1.0) - col("__p0")) / col("n_first")),
-          6)).as("z"))
-      .localCheckpoint(true)
-    per.unpersist()
-    out
+          6)).as("z")))
   }
 
   /** Cohen's kappa between two label columns over the same rows: the
@@ -133,10 +125,9 @@ object Preference {
     * groupBy collapses the data; marginals and the three scalars ride
     * the labels²-sized confusion frame. Returns
     * (label_a, label_b, n, po 6dp, pe 6dp, kappa 6dp). */
-  def cohenKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val conf = df.groupBy(col(aCol).as("label_a"), col(bCol).as("label_b"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+  def cohenKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = Checkpoints.scoped {
+    val conf = Checkpoints.local(df.groupBy(col(aCol).as("label_a"), col(bCol).as("label_b"))
+      .agg(count(lit(1)).as("n")))
     val tot = conf.agg(sum("n").as("__N"),
       sum(when(col("label_a") === col("label_b"), col("n"))
         .otherwise(lit(0L))).as("__diag"))
@@ -146,15 +137,12 @@ object Preference {
       .crossJoin(tot)
       .agg(sum(col("__na").cast("double") / col("__N") *
         (col("__nb").cast("double") / col("__N"))).as("__pe"))
-    val out = conf.crossJoin(tot).crossJoin(pe)
+    Checkpoints.local(conf.crossJoin(tot).crossJoin(pe)
       .select(col("label_a"), col("label_b"), col("n"),
         round(col("__diag").cast("double") / col("__N"), 6).as("po"),
         round(col("__pe"), 6).as("pe"),
         round((col("__diag").cast("double") / col("__N") - col("__pe")) /
-          (lit(1.0) - col("__pe")), 6).as("kappa"))
-      .localCheckpoint(true)
-    conf.unpersist()
-    out
+          (lit(1.0) - col("__pe")), 6).as("kappa")))
   }
 
   /** Quadratic-weighted Cohen's kappa for ORDINAL ratings:

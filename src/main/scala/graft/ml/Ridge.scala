@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -206,7 +207,7 @@ object Ridge {
     * cancels. Returns (lambda, cv_r2 6dp), ordered by λ. */
   def ridgeCv(df: DataFrame, idCol: String, x1Col: String, x2Col: String,
               yCol: String, lambdas: Seq[Double] = Seq(0, 0.5, 1, 2, 4, 8),
-              folds: Int = 5, seed: Long = 42L): DataFrame = {
+              folds: Int = 5, seed: Long = 42L): DataFrame = Checkpoints.scoped {
     require(folds >= 2 && folds <= 16 && lambdas.nonEmpty)
     val (x1, x2, y) = (col(x1Col).cast("double"), col(x2Col).cast("double"),
       col(yCol).cast("double"))
@@ -215,7 +216,7 @@ object Ridge {
     // raw md5 expression would re-evaluate the hash per branch
     val fold = hexChars.zipWithIndex.foldLeft(lit(0)) { case (acc, (c, i)) =>
       when(col("__h") === c.toString, lit(i % folds)).otherwise(acc) }
-    val fm = df.filter(x1.isNotNull && x2.isNotNull && y.isNotNull)
+    val fm = Checkpoints.local(df.filter(x1.isNotNull && x2.isNotNull && y.isNotNull)
       .select(x1.as("__x1"), x2.as("__x2"), y.as("__y"),
         substring(md5(concat_ws(":",
           col(idCol).cast("string"), lit(seed.toString))), 1, 1).as("__h"))
@@ -228,8 +229,7 @@ object Ridge {
         sum(col("__x1") * col("__x2")).as("sx1x2"),
         sum(col("__x1") * col("__y")).as("sx1y"),
         sum(col("__x2") * col("__y")).as("sx2y"),
-        sum(col("__y") * col("__y")).as("syy"))
-      .localCheckpoint(true)
+        sum(col("__y") * col("__y")).as("syy")))
     val mom = Seq("n", "sx1", "sx2", "sy", "sx1x1", "sx2x2", "sx1x2",
       "sx1y", "sx2y", "syy")
     val tot = fm.agg(mom.map(c => sum(c).as(s"t_$c")).head,

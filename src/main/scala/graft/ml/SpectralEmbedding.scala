@@ -49,7 +49,7 @@ object SpectralEmbedding {
     *              well-clustered graphs; raise for tight eigengaps) */
   def embed(edges: DataFrame, srcCol: String, dstCol: String,
             weightCol: Option[String] = None, k: Int = 2,
-            iters: Int = 30): DataFrame = {
+            iters: Int = 30): DataFrame = Checkpoints.scoped {
     require(k >= 1 && k <= 8, s"k $k out of range [1,8]")
     val w = weightCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
     val half = edges
@@ -57,20 +57,18 @@ object SpectralEmbedding {
         col(dstCol).cast("long").as("dst"), w.as("w"))
       .filter(col("src") =!= col("dst"))
     // symmetrize, keeping the max weight of the two directions
-    val sym = half.unionAll(half.select(col("dst").as("src"),
+    val sym = Checkpoints.local(half.unionAll(half.select(col("dst").as("src"),
         col("src").as("dst"), col("w")))
-      .groupBy("src", "dst").agg(max("w").as("w"))
-      .localCheckpoint(true)
-    val degrees = sym.groupBy(col("src").as("id"))
-      .agg(sum("w").as("deg")).localCheckpoint(true)
+      .groupBy("src", "dst").agg(max("w").as("w")))
+    val degrees = Checkpoints.local(sym.groupBy(col("src").as("id"))
+      .agg(sum("w").as("deg")))
     // S-edges: w / sqrt(deg_src * deg_dst) — computed once, reused by
     // every iteration of every component
     val dSrc = degrees.select(col("id").as("src"), col("deg").as("__ds"))
     val dDst = degrees.select(col("id").as("dst"), col("deg").as("__dd"))
-    val sEdges = sym.join(dSrc, "src").join(dDst, "dst")
+    val sEdges = Checkpoints.local(sym.join(dSrc, "src").join(dDst, "dst")
       .select(col("src"), col("dst"),
-        (col("w") / sqrt(col("__ds") * col("__dd"))).as("s"))
-      .localCheckpoint(true)
+        (col("w") / sqrt(col("__ds") * col("__dd"))).as("s")))
 
     def norm(a: DataFrame): Double =
       math.sqrt(a.agg(sum(col("v") * col("v"))).head().getDouble(0))
@@ -79,7 +77,7 @@ object SpectralEmbedding {
     val u1raw = degrees.select(col("id"), sqrt(col("deg")).as("v"))
     val u1 = {
       val nrm = norm(u1raw)
-      u1raw.select(col("id"), (col("v") / nrm).as("v")).localCheckpoint(true)
+      Checkpoints.local(u1raw.select(col("id"), (col("v") / nrm).as("v")))
     }
 
     // ── BLOCK (simultaneous orthogonal) iteration ──────────────────
@@ -150,11 +148,11 @@ object SpectralEmbedding {
         .groupBy(col("dst").as("id"))
         .agg(sum(col("s") * col(vCols.head)).as(vCols.head),
           vCols.tail.map(c => sum(col("s") * col(c)).as(c)): _*)
-      val joined = degrees.select("id").join(sv, Seq("id"), "left")
+      // lazy: the aggregate below materializes it
+      val joined = Checkpoints.local(degrees.select("id").join(sv, Seq("id"), "left")
         .select(col("id") +:
           vCols.map(c => coalesce(col(c), lit(0.0)).as(c)): _*)
-        .join(u1j, "id")
-        .localCheckpoint(false) // lazy: the aggregate below materializes it
+        .join(u1j, "id"), eager = false)
       // ONE aggregate (= the round's one action): d_j = <v_j, u1> and
       // G_ij = <v_i, v_j>
       val aggExprs =
@@ -188,13 +186,7 @@ object SpectralEmbedding {
     val first = vFrame.orderBy("id").head()
     val flips = (1 to k).map(j =>
       if (first.getDouble(first.fieldIndex(s"v$j")) < 0) -1.0 else 1.0)
-    val out = vFrame.select(col("id") +: (1 to k).map(j =>
-        round(col(s"v$j") * flips(j - 1), 6).as(s"e$j")): _*)
-      .localCheckpoint(true)
-    // the result is now self-contained: release every intermediate
-    // checkpoint so repeated embed() calls don't accumulate storage
-    // blocks for the life of the session
-    (Seq(sym, degrees, sEdges, u1) ++ Option(prevJoined)).foreach(Checkpoints.release)
-    out
+    Checkpoints.local(vFrame.select(col("id") +: (1 to k).map(j =>
+        round(col(s"v$j") * flips(j - 1), 6).as(s"e$j")): _*))
   }
 }

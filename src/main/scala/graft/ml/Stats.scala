@@ -688,12 +688,11 @@ object Stats {
     * buckets directly). The cell×cell comparison is (r·c)² on the
     * METADATA cell table — never a row-level pair join.
     * Returns one row: (n, n_concordant, n_discordant, gamma 6dp). */
-  def gkGamma(df: DataFrame, rowCol: String, colCol: String): DataFrame = {
-    val cells = df.filter(col(rowCol).isNotNull && col(colCol).isNotNull)
+  def gkGamma(df: DataFrame, rowCol: String, colCol: String): DataFrame = Checkpoints.scoped {
+    val cells = Checkpoints.local(df.filter(col(rowCol).isNotNull && col(colCol).isNotNull)
       .groupBy(col(rowCol).cast("long").as("__r"),
         col(colCol).cast("long").as("__c"))
-      .agg(count(lit(1)).as("__n"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("__n")))
     val a = cells.select(col("__r").as("ra"), col("__c").as("ca"),
       col("__n").as("na"))
     val b = cells.select(col("__r").as("rb"), col("__c").as("cb"),
@@ -703,15 +702,12 @@ object Stats {
     val disc = a.join(b, col("rb") > col("ra") && col("cb") < col("ca"))
       .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).as("nd"))
     val n = cells.agg(sum("__n").as("n"))
-    val out = n.crossJoin(conc).crossJoin(disc)
+    Checkpoints.local(n.crossJoin(conc).crossJoin(disc)
       .select(col("n"), col("nc").as("n_concordant"),
         col("nd").as("n_discordant"),
         round(when(col("nc") + col("nd") > 0,
           (col("nc") - col("nd")).cast("double") /
-            (col("nc") + col("nd"))), 6).as("gamma"))
-      .localCheckpoint(true)
-    Checkpoints.release(cells)
-    out
+            (col("nc") + col("nd"))), 6).as("gamma")))
   }
 
   /** Krippendorff's alpha for binary annotations with MISSING ratings
@@ -1155,12 +1151,11 @@ object Stats {
     * Same contingency-cell plan: quadratic only in distinct-value
     * pairs. Returns one row: (n, n_concordant, n_discordant,
     * n_ties_y, somers_d 6dp). */
-  def somersD(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val cells = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
+  def somersD(df: DataFrame, xCol: String, yCol: String): DataFrame = Checkpoints.scoped {
+    val cells = Checkpoints.local(df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).cast("long").as("__x"),
         col(yCol).cast("long").as("__y"))
-      .agg(count(lit(1)).as("__n"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("__n")))
     val a = cells.select(col("__x").as("xa"), col("__y").as("ya"),
       col("__n").as("na"))
     val b = cells.select(col("__x").as("xb"), col("__y").as("yb"),
@@ -1172,15 +1167,12 @@ object Stats {
     val tiesY = a.join(b, col("xb") > col("xa") && col("yb") === col("ya"))
       .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).as("nty"))
     val n = cells.agg(sum("__n").as("n"))
-    val out = n.crossJoin(conc).crossJoin(disc).crossJoin(tiesY)
+    Checkpoints.local(n.crossJoin(conc).crossJoin(disc).crossJoin(tiesY)
       .select(col("n"), col("nc").as("n_concordant"),
         col("nd").as("n_discordant"), col("nty").as("n_ties_y"),
         round(when(col("nc") + col("nd") + col("nty") > 0,
           (col("nc") - col("nd")).cast("double") /
-            (col("nc") + col("nd") + col("nty"))), 6).as("somers_d"))
-      .localCheckpoint(true)
-    Checkpoints.release(cells)
-    out
+            (col("nc") + col("nd") + col("nty"))), 6).as("somers_d")))
   }
 
   /** Kaplan–Meier curve with Greenwood standard errors and plain
@@ -1226,14 +1218,13 @@ object Stats {
     * Returns one row: (n_comparable, n_concordant, n_discordant,
     * n_tied, c_index 6dp). */
   def concordanceIndex(df: DataFrame, durationCol: String,
-                       eventCol: String, scoreCol: String): DataFrame = {
-    val cells = df.filter(col(durationCol).isNotNull &&
+                       eventCol: String, scoreCol: String): DataFrame = Checkpoints.scoped {
+    val cells = Checkpoints.local(df.filter(col(durationCol).isNotNull &&
         col(eventCol).isNotNull && col(scoreCol).isNotNull)
       .groupBy(col(durationCol).cast("long").as("__t"),
         (col(eventCol).cast("int") === 1).as("__e"),
         col(scoreCol).cast("long").as("__p"))
-      .agg(count(lit(1)).as("__n"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("__n")))
     val a = cells.filter(col("__e"))
       .select(col("__t").as("ta"), col("__p").as("pa"),
         col("__n").as("na"))
@@ -1242,7 +1233,7 @@ object Stats {
     def cnt(cond: org.apache.spark.sql.Column, nm: String) =
       a.join(b, col("tb") > col("ta") && cond)
         .agg(coalesce(sum(col("na") * col("nb")), lit(0L)).as(nm))
-    val out = cnt(col("pa") > col("pb"), "nc")
+    Checkpoints.local(cnt(col("pa") > col("pb"), "nc")
       .crossJoin(cnt(col("pa") < col("pb"), "nd"))
       .crossJoin(cnt(col("pa") === col("pb"), "nt"))
       .select((col("nc") + col("nd") + col("nt")).as("n_comparable"),
@@ -1251,10 +1242,7 @@ object Stats {
         round(when(col("nc") + col("nd") + col("nt") > 0,
           (col("nc").cast("double") + col("nt").cast("double") / 2) /
             (col("nc") + col("nd") + col("nt")).cast("double")), 6)
-          .as("c_index"))
-      .localCheckpoint(true)
-    Checkpoints.release(cells)
-    out
+          .as("c_index")))
   }
 
   /** Bowker symmetry test for a paired k×k categorical table — the
@@ -1264,13 +1252,12 @@ object Stats {
     * df = #off-diagonal pairs carrying data. One (a, b) cell groupBy;
     * the pair terms quantize to DECIMAL(28,9) before the ≤k²-row sum.
     * Returns one row: (n, n_pairs_tested, chi2 6dp, df). */
-  def bowker(df: DataFrame, aCol: String, bCol: String): DataFrame = {
+  def bowker(df: DataFrame, aCol: String, bCol: String): DataFrame = Checkpoints.scoped {
     import org.apache.spark.sql.types.DecimalType
-    val cells = df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
+    val cells = Checkpoints.local(df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).cast("long").as("__a"),
         col(bCol).cast("long").as("__b"))
-      .agg(count(lit(1)).as("__n"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("__n")))
     val lo = cells.select(col("__a").as("__i"), col("__b").as("__j"),
       col("__n").as("__nij"))
     val hi = cells.select(col("__b").as("__i"), col("__a").as("__j"),
@@ -1283,17 +1270,14 @@ object Stats {
     val term = try_divide(((col("__x") - col("__y")) *
       (col("__x") - col("__y"))).cast("double"),
       (col("__x") + col("__y")).cast("double"))
-    val out = pairs.agg(
+    Checkpoints.local(pairs.agg(
         sum((col("__x") + col("__y") > 0).cast("long"))
           .as("n_pairs_tested"),
         round(sum(round(term, 9).cast(DecimalType(28, 9)))
           .cast("double"), 6).as("chi2"))
       .crossJoin(broadcast(n))
       .select(col("n"), col("n_pairs_tested"), col("chi2"),
-        col("n_pairs_tested").as("df"))
-      .localCheckpoint(true)
-    Checkpoints.release(cells)
-    out
+        col("n_pairs_tested").as("df")))
   }
 
   /** Kaplan–Meier median survival PER GROUP: the life table runs

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,7 +24,7 @@ object Cooccur {
     * per basket (distinct), N = baskets after the size cap.
     */
   def itemPairs(df: DataFrame, basketCol: String, itemCol: String,
-                minSupport: Long = 2, maxBasketSize: Int = 1000): DataFrame = {
+                minSupport: Long = 2, maxBasketSize: Int = 1000): DataFrame = Checkpoints.scoped {
     val items = df.select(col(basketCol).as("__b"), col(itemCol).as("__i"))
       .distinct()
     val sized = items.groupBy("__b").agg(count(lit(1)).as("__sz"))
@@ -31,7 +32,7 @@ object Cooccur {
     // checkpoint (itemTriples already does): nBaskets/itemCounts/pairs
     // reference kept 4x, each otherwise recomputing the corpus distinct
     // + size-cap join
-    val kept = items.join(sized, Seq("__b")).localCheckpoint(true)
+    val kept = Checkpoints.local(items.join(sized, Seq("__b")))
     val nBaskets = kept.select("__b").distinct().count()
     val itemCounts = kept.groupBy(col("__i")).agg(count(lit(1)).as("__ci"))
     val pairs = kept.select(col("__b"), col("__i").as("item_a"))
@@ -63,12 +64,12 @@ object Cooccur {
     * lift 6dp). */
   def itemTriples(df: DataFrame, basketCol: String, itemCol: String,
                   minSupport: Long = 2, maxBasketSize: Int = 1000,
-                  topK: Int = 20): DataFrame = {
+                  topK: Int = 20): DataFrame = Checkpoints.scoped {
     val items = df.select(col(basketCol).as("__b"), col(itemCol).as("__i"))
       .distinct()
     val sized = items.groupBy("__b").agg(count(lit(1)).as("__sz"))
       .filter(col("__sz") <= maxBasketSize).select("__b")
-    val kept = items.join(sized, Seq("__b")).localCheckpoint(true)
+    val kept = Checkpoints.local(items.join(sized, Seq("__b")))
     val nBaskets = kept.select("__b").distinct().count()
     val itemCounts = kept.groupBy(col("__i")).agg(count(lit(1)).as("__ci"))
     val freqPairs = kept.select(col("__b"), col("__i").as("item_a"))

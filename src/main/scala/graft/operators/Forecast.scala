@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Checkpoints, Tables}
 
 /** Time-series diagnostics over an event stream, computed on the
   * DAILY-AGGREGATED series (the reference's monitoring layer reads
@@ -154,27 +154,23 @@ object Forecast {
     * seasonal component is a 7-row aggregate joined back. Returns
     * (day, mean, trend, seasonal, residual). */
   def seasonalDecompose(events: DataFrame, tsCol: String,
-                        valueCol: String): DataFrame = {
+                        valueCol: String): DataFrame = Checkpoints.scoped {
     val d = daily(events, tsCol, valueCol)
       .select(col("day"), col("mean"), dayofweek(col("day")).as("__dow"))
     val w = Window.orderBy("day").rowsBetween(-3, 3)
-    val trended = d
+    val trended = Checkpoints.local(d
       .withColumn("__trend",
         when(count(lit(1)).over(w) === 7, avg("mean").over(w)))
-      .withColumn("__detr", col("mean") - col("__trend"))
-      .localCheckpoint(true)
+      .withColumn("__detr", col("mean") - col("__trend")))
     val seasonal = trended.filter(col("__detr").isNotNull)
       .groupBy("__dow").agg(avg("__detr").as("__seas"))
-    val out = trended.join(broadcast(seasonal), Seq("__dow"), "left")
+    Checkpoints.local(trended.join(broadcast(seasonal), Seq("__dow"), "left")
       .select(col("day").cast("timestamp").as("day"),
         round(col("mean"), 6).as("mean"),
         round(col("__trend"), 6).as("trend"),
         round(col("__seas"), 6).as("seasonal"),
         round(col("mean") - col("__trend") - col("__seas"), 6)
-          .as("residual"))
-      .localCheckpoint(true)
-    trended.unpersist()
-    out
+          .as("residual")))
   }
 
   /** Trend and seasonality STRENGTH (Hyndman's feasts measures):
@@ -245,22 +241,18 @@ object Forecast {
     * overflows past a few hundred days. Returns
     * (day, total, ewma). */
   def ewma(events: DataFrame, tsCol: String, valueCol: String,
-           alpha: Double = 0.3): DataFrame = {
+           alpha: Double = 0.3): DataFrame = Checkpoints.scoped {
     require(alpha > 0 && alpha <= 1, s"alpha in (0,1], got $alpha")
-    val d = daily(events, tsCol, valueCol)
+    val d = Checkpoints.local(daily(events, tsCol, valueCol)
       .select(col("day"), col("total"),
-        row_number().over(Window.orderBy("day")).as("__rn"))
-      .localCheckpoint(true)
+        row_number().over(Window.orderBy("day")).as("__rn")))
     val prior = d.select(col("__rn").as("__rj"), col("total").as("__xj"))
-    val out = d.join(prior, col("__rj") <= col("__rn"))
+    Checkpoints.local(d.join(prior, col("__rj") <= col("__rn"))
       .groupBy(col("day"), col("total"))
       .agg((sum(pow(lit(1.0 - alpha), col("__rn") - col("__rj")) * col("__xj")) /
         sum(pow(lit(1.0 - alpha), col("__rn") - col("__rj")))).as("__e"))
       .select(col("day").cast("timestamp").as("day"), col("total"),
-        round(col("__e"), 6).as("ewma"))
-      .localCheckpoint(true)
-    d.unpersist()
-    out
+        round(col("__e"), 6).as("ewma")))
   }
 
   /** Holt linear-trend (double exponential) smoothing of the daily
@@ -376,24 +368,20 @@ object Forecast {
     * intercept. Pair fan-out is #days² — calendar-bounded metadata, not
     * data. Exact interpolating percentile on both engines. Returns one
     * row: (n_days, n_pairs, slope_per_day, intercept). */
-  def theilSen(events: DataFrame, tsCol: String, valueCol: String): DataFrame = {
-    val d = daily(events, tsCol, valueCol)
+  def theilSen(events: DataFrame, tsCol: String, valueCol: String): DataFrame = Checkpoints.scoped {
+    val d = Checkpoints.local(daily(events, tsCol, valueCol)
       .select(datediff(col("day"), lit("1970-01-01")).cast("double").as("x"),
-        col("total").as("y"))
-      .localCheckpoint(true)
+        col("total").as("y")))
     val slopes = d.as("p1").join(d.as("p2"), col("p1.x") < col("p2.x"))
       .select(((col("p2.y") - col("p1.y")) /
         (col("p2.x") - col("p1.x"))).as("s"))
     val slope = slopes.agg(count(lit(1)).as("n_pairs"),
       percentile(col("s"), lit(0.5)).as("__sl"))
-    val out = d.crossJoin(slope)
+    Checkpoints.local(d.crossJoin(slope)
       .agg(count(lit(1)).as("n_days"), first("n_pairs").as("n_pairs"),
         round(first("__sl"), 6).as("slope_per_day"),
         round(percentile(col("y") - col("__sl") * col("x"), lit(0.5)), 6)
-          .as("intercept"))
-      .localCheckpoint(true)
-    d.unpersist()
-    out
+          .as("intercept")))
   }
 
   /** Schuster periodogram of the daily total at harmonics k = 1..maxK:
@@ -694,7 +682,7 @@ object Forecast {
     * (day_a, day_b, dist 6dp), (dist asc, day_a, day_b)
     * deterministic. */
   def motifs(events: DataFrame, tsCol: String, valueCol: String,
-             w: Int = 7, topK: Int = 5): DataFrame = {
+             w: Int = 7, topK: Int = 5): DataFrame = Checkpoints.scoped {
     require(w >= 3 && w <= 30 && topK >= 1)
     val d = daily(events, tsCol, valueCol)
     val win = Window.orderBy("day")
@@ -707,11 +695,10 @@ object Forecast {
     val varp = (0 until w).map(k =>
       (col(s"v$k") - col("__m")) * (col(s"v$k") - col("__m")))
       .reduce(_ + _) / w
-    val sub = sub1.withColumn("__s", sqrt(varp)).filter(col("__s") > 0)
+    val sub = Checkpoints.local(sub1.withColumn("__s", sqrt(varp)).filter(col("__s") > 0)
       .select(col("day") +: col("__rn") +:
         (0 until w).map(k =>
-          ((col(s"v$k") - col("__m")) / col("__s")).as(s"z$k")): _*)
-      .localCheckpoint(true)
+          ((col(s"v$k") - col("__m")) / col("__s")).as(s"z$k")): _*))
     val a = sub.select(col("day").as("day_a") +: col("__rn").as("__ra") +:
       (0 until w).map(k => col(s"z$k").as(s"a$k")): _*)
     val b = sub.select(col("day").as("day_b") +: col("__rn").as("__rb") +:
@@ -719,14 +706,11 @@ object Forecast {
     val dist2 = (0 until w).map(k =>
       (col(s"a$k") - col(s"b$k")) * (col(s"a$k") - col(s"b$k")))
       .reduce(_ + _)
-    val out = a.join(b, col("__rb") >= col("__ra") + w)
+    Checkpoints.local(a.join(b, col("__rb") >= col("__ra") + w)
       .select(col("day_a").cast("timestamp").as("day_a"),
         col("day_b").cast("timestamp").as("day_b"),
         round(sqrt(dist2), 6).as("dist"))
-      .orderBy(col("dist"), col("day_a"), col("day_b")).limit(topK)
-      .localCheckpoint(true)
-    sub.unpersist()
-    out
+      .orderBy(col("dist"), col("day_a"), col("day_b")).limit(topK))
   }
 
   /** Gumbel (EV-I) return levels by method of moments over BLOCK
@@ -1197,15 +1181,14 @@ object Forecast {
     * group-partitioned rank window. Returns (group, n_days, n_pairs,
     * sen_slope 6dp). */
   def senSlopeByGroup(events: DataFrame, groupCol: String,
-                      tsCol: String, valueCol: String): DataFrame = {
-    val d = Tables.ltzTs(events, tsCol)
+                      tsCol: String, valueCol: String): DataFrame = Checkpoints.scoped {
+    val d = Checkpoints.local(Tables.ltzTs(events, tsCol)
       .filter(col(valueCol).isNotNull)
       .groupBy(col(groupCol).as("__g"), to_date(col(tsCol)).as("__day"))
       .agg(sum(col(valueCol).cast("decimal(18,2)"))
         .cast("double").as("__y"))
       .withColumn("__i", datediff(col("__day"),
-        to_date(lit("1970-01-01"))).cast("double"))
-      .localCheckpoint(true)
+        to_date(lit("1970-01-01"))).cast("double")))
     val a = d.select(col("__g"), col("__i").as("__ia"),
       col("__y").as("__ya"))
     val b = d.select(col("__g").as("__gb"), col("__i").as("__ib"),
@@ -1219,7 +1202,7 @@ object Forecast {
     val counts = d.groupBy("__g").agg(count(lit(1)).as("n_days"))
     val ranked = slopes.withColumn("__r", row_number().over(w))
     val m = ranked.groupBy("__g").agg(max("__r").as("__m"))
-    val out = ranked.join(m, Seq("__g"))
+    ranked.join(m, Seq("__g"))
       .filter(col("__r") * 2 === col("__m") ||
         col("__r") * 2 === col("__m") + 1) // lower median rank ceil(m/2)
       .groupBy(col("__g"))
@@ -1228,8 +1211,6 @@ object Forecast {
       .select(col("__g").as("group"), col("n_days"), col("n_pairs"),
         round(col("__med"), 6).as("sen_slope"))
       .orderBy("group")
-    d.unpersist()
-    out
   }
 
   /** Prediction-interval calibration of the naive Normal bands: fit
@@ -1345,12 +1326,11 @@ object Forecast {
     * are exact integers until the final scalar. Returns one row:
     * (n_days, n_seasons, s_stat, z_stat 6dp). */
   def seasonalMannKendall(events: DataFrame, tsCol: String,
-                          valueCol: String): DataFrame = {
-    val d = daily(events, tsCol, valueCol)
+                          valueCol: String): DataFrame = Checkpoints.scoped {
+    val d = Checkpoints.local(daily(events, tsCol, valueCol)
       .select(col("day"), dayofweek(col("day")).as("__szn"),
         (col("total").cast("decimal(18,2)") * 100).cast("long")
-          .as("__yc"))
-      .localCheckpoint(true)
+          .as("__yc")))
     val a = d.select(col("__szn"), col("day").as("__da"),
       col("__yc").as("__xa"))
     val b = d.select(col("__szn").as("__sb"), col("day").as("__db"),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -44,28 +45,24 @@ object FuzzyJoin {
     * excluded. */
   def sequenceNeighbors(events: DataFrame, entityCol: String,
                         tsCol: String, typeCol: String, idCol: String,
-                        k: Int = 10): DataFrame = {
+                        k: Int = 10): DataFrame = Checkpoints.scoped {
     val ev = graft.core.Tables.ltzTs(events, tsCol)
-    val seqs = ev.groupBy(col(entityCol).as("entity"))
+    val seqs = Checkpoints.local(ev.groupBy(col(entityCol).as("entity"))
       .agg(count(lit(1)).as("n_events"),
         concat_ws("", transform(
           array_sort(collect_list(struct(
             unix_micros(col(tsCol)).as("t"), col(idCol).as("i"),
             substring(col(typeCol), 1, 1).as("c")))),
-          s => s.getField("c"))).as("seq"))
-      .localCheckpoint(true)
+          s => s.getField("c"))).as("seq")))
     val probeRow = seqs
       .orderBy(col("n_events").desc, col("entity")).limit(1)
       .head()
     val (probeId, probeSeq) =
       (probeRow.get(0), probeRow.getString(2))
-    val out = seqs.filter(col("entity") =!= lit(probeId))
+    Checkpoints.local(seqs.filter(col("entity") =!= lit(probeId))
       .select(col("entity"), length(col("seq")).as("seq_len"),
         levenshtein(col("seq"), lit(probeSeq)).as("distance"))
-      .orderBy(col("distance"), col("entity")).limit(k)
-      .localCheckpoint(true)
-    seqs.unpersist()
-    out
+      .orderBy(col("distance"), col("entity")).limit(k))
   }
 
   def fuzzyJoin(left: DataFrame, right: DataFrame, leftCol: String,

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -30,7 +31,7 @@ object Hierarchy {
     * wrong depths — is the one thing a lineage query can't have).
     * Returns (id, root, depth). */
   def flatten(df: DataFrame, idCol: String, parentCol: String,
-              maxDoublings: Int = 20): DataFrame = {
+              maxDoublings: Int = 20): DataFrame = Checkpoints.scoped {
     require(maxDoublings >= 1 && maxDoublings <= 40,
       s"maxDoublings in [1,40], got $maxDoublings")
     val nodes = df.select(col(idCol).cast("long").as("id"),
@@ -39,10 +40,9 @@ object Hierarchy {
       .select(col("id").as("__rid"))
     // state: (id, anc, d) — anc is a known ancestor d steps up, with
     // roots self-anchored so they are fixpoints of the doubling step
-    var st = nodes.select(col("id"),
+    var st = Checkpoints.local(nodes.select(col("id"),
       coalesce(col("par"), col("id")).as("anc"),
-      when(col("par").isNull, 0L).otherwise(1L).as("d"))
-      .localCheckpoint(true)
+      when(col("par").isNull, 0L).otherwise(1L).as("d")))
     def unresolvedExists(s: DataFrame): Long =
       s.join(roots, col("anc") === col("__rid"), "left_anti")
         .limit(1).count()
@@ -52,14 +52,12 @@ object Hierarchy {
       // left join: a dangling parent (anc absent from the node list)
       // keeps its state and is caught by the convergence check below
       // instead of silently vanishing from the output
-      val next = st
+      val next = Checkpoints.local(st
         .join(st.select(col("id").as("__bid"), col("anc").as("__banc"),
           col("d").as("__bd")), col("anc") === col("__bid"), "left")
         .select(col("id"),
           coalesce(col("__banc"), col("anc")).as("anc"),
-          (col("d") + coalesce(col("__bd"), lit(0L))).as("d"))
-        .localCheckpoint(true)
-      st.unpersist()
+          (col("d") + coalesce(col("__bd"), lit(0L))).as("d")))
       st = next
       unresolved = unresolvedExists(st)
       round += 1
@@ -67,9 +65,6 @@ object Hierarchy {
     require(unresolved == 0,
       s"hierarchy did not converge in $maxDoublings doublings — " +
         "chain deeper than 2^maxDoublings or a cycle")
-    val out = st.select(col("id"), col("anc").as("root"),
-      col("d").as("depth")).localCheckpoint(true)
-    st.unpersist()
-    out
+    Checkpoints.local(st.select(col("id"), col("anc").as("root"), col("d").as("depth")))
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,7 +41,7 @@ object MarkovAttribution {
     */
   def removalEffect(events: DataFrame, userCol: String, tsCol: String,
                     typeCol: String, idCol: String, convType: String,
-                    steps: Int = 12): DataFrame = {
+                    steps: Int = 12): DataFrame = Checkpoints.scoped {
     require(steps >= 1 && steps <= 64, s"steps $steps out of range")
     val ev = graft.core.Tables.ltzTs(events, tsCol)
     // truncate each journey at its first conversion (inclusive)
@@ -70,11 +71,10 @@ object MarkovAttribution {
     // ≤(k+2)² materialized frame instead of re-running the entity window
     // (the r13 plan audit caught the corpus pass running twice: once for
     // the channels collect, once for the pS checkpoint)
-    val counts = edges.filter(col("src") =!= convType)
+    val counts = Checkpoints.local(edges.filter(col("src") =!= convType)
       .withColumn("dst",
         when(col("dst") === convType, Conv).otherwise(col("dst")))
-      .groupBy("src", "dst").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .groupBy("src", "dst").agg(count(lit(1)).as("n")))
     val totals = counts.groupBy("src").agg(sum("n").as("__tot"))
     val p = counts.join(totals, "src")
       .select(col("src"), col("dst"),
@@ -89,7 +89,7 @@ object MarkovAttribution {
     // scenario expansion: base + one removal per channel, self-loops on
     // the absorbers; all scenarios evolve as one keyed frame
     val scenarios = ("__base__" +: channels.map("rm_" + _)).toSeq.toDF("scenario")
-    val pS = scenarios.crossJoin(p)
+    val pS = Checkpoints.local(scenarios.crossJoin(p)
       .select(col("scenario"), col("src"),
         when(col("scenario") =!= "__base__" &&
           col("dst") === regexp_replace(col("scenario"), "^rm_", ""),
@@ -98,20 +98,18 @@ object MarkovAttribution {
       .groupBy("scenario", "src", "dst").agg(sum("p").as("p"))
       .unionAll(scenarios.crossJoin(
         Seq(Conv, Null).toDF("s").select(col("s").as("src"), col("s").as("dst"),
-          lit(1.0).as("p"))))
-      .localCheckpoint()
+          lit(1.0).as("p")))))
     // explicit aliases: v and pS share the `scenarios` lineage, so a
     // bare column-reference join trips the ambiguous-self-join detector
     var v = scenarios.select(col("scenario"), lit(Start).as("state"),
       lit(1.0).as("mass"))
     for (_ <- 1 to steps) {
-      v = v.as("v").join(pS.as("p"),
+      v = Checkpoints.local(v.as("v").join(pS.as("p"),
           col("v.scenario") === col("p.scenario") &&
             col("v.state") === col("p.src"))
         .select(col("v.scenario").as("scenario"), col("p.dst").as("state"),
           (col("v.mass") * col("p.p")).as("mass"))
-        .groupBy("scenario", "state").agg(sum("mass").as("mass"))
-        .localCheckpoint()
+        .groupBy("scenario", "state").agg(sum("mass").as("mass")))
     }
     val conv = v.filter(col("state") === Conv)
       .select(col("scenario"), col("mass").as("conv_prob"))

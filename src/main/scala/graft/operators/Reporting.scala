@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -176,17 +177,17 @@ object Reporting {
     */
   def rfmSegments(events: DataFrame, userCol: String, tsCol: String,
                   valueCol: String, asOf: java.sql.Timestamp,
-                  bins: Int = 4): DataFrame = {
+                  bins: Int = 4): DataFrame = Checkpoints.scoped {
     require(bins >= 2)
     val ev = graft.core.Tables.ltzTs(events, tsCol)
       .filter(col(tsCol) <= lit(asOf))
-    val perUser = ev.groupBy(col(userCol).as("user"))
+    // feeds the percentile action AND the output
+    val perUser = Checkpoints.local(ev.groupBy(col(userCol).as("user"))
       .agg(
         ((lit(asOf.getTime * 1000L) - max(unix_micros(col(tsCol)))) /
           lit(86400.0 * 1e6)).as("recency_days"),
         count(lit(1)).as("frequency"),
-        sum(col(valueCol).cast(DecimalType(18, 2))).cast("double").as("monetary"))
-      .localCheckpoint(true) // feeds the percentile action AND the output
+        sum(col(valueCol).cast(DecimalType(18, 2))).cast("double").as("monetary")))
     val ps = (1 until bins).map(_.toDouble / bins)
     // ONE percentile aggregate for all three edge sets (three separate
     // driver actions here were the round-10 ladder's only unexplained
@@ -315,7 +316,7 @@ object Reporting {
     * is a ≤100-cell groupBy. Returns (d1, d2, n_users,
     * share_of_d1 6dp) ordered by (d1, d2). */
   def decileMigration(events: DataFrame, userCol: String, tsCol: String,
-                      valueCol: String, buckets: Int = 10): DataFrame = {
+                      valueCol: String, buckets: Int = 10): DataFrame = Checkpoints.scoped {
     require(buckets >= 2 && buckets <= 20)
     val ev = graft.core.Tables.ltzTs(events, tsCol)
       .filter(col(valueCol).isNotNull)
@@ -329,11 +330,10 @@ object Reporting {
         (unix_micros(col(tsCol)) <= mid).as("__p1"))
       .agg(sum(col(valueCol).cast("decimal(18,2)")).cast("double")
         .as("__s"))
-    val both = spend.groupBy("__u").agg(count(lit(1)).as("__np"),
+    val both = Checkpoints.local(spend.groupBy("__u").agg(count(lit(1)).as("__np"),
         sum(when(col("__p1"), col("__s"))).as("s1"),
         sum(when(!col("__p1"), col("__s"))).as("s2"))
-      .filter(col("__np") === 2)
-      .localCheckpoint(true)
+      .filter(col("__np") === 2))
     def edges(c: String): Seq[Double] = {
       val ps = (1 until buckets).map(_.toDouble / buckets)
       both.agg(graft.functions.ExactPercentiles
@@ -350,13 +350,11 @@ object Reporting {
         bucketOf("s2", e2).cast("long").as("d2"))
       .groupBy("d1", "d2").agg(count(lit(1)).as("n_users"))
     val rowTot = cells.groupBy("d1").agg(sum("n_users").as("__r"))
-    val out = cells.join(rowTot, Seq("d1"))
+    Checkpoints.local(cells.join(rowTot, Seq("d1"))
       .select(col("d1"), col("d2"), col("n_users"),
         round(col("n_users").cast("double") / col("__r"), 6)
           .as("share_of_d1"))
-      .orderBy("d1", "d2").localCheckpoint(true)
-    both.unpersist()
-    out
+      .orderBy("d1", "d2"))
   }
 
   /** Matched-basket price indices per month — Laspeyres (base-weighted),
@@ -372,8 +370,8 @@ object Reporting {
     * aggregate over the matched frame. Returns per month:
     * (month, n_matched, laspeyres 6dp, paasche 6dp, fisher 6dp). */
   def priceIndex(df: DataFrame, dateCol: String, itemCol: String,
-                 revenueCol: String, qtyCol: String): DataFrame = {
-    val pm = df.filter(col(revenueCol).isNotNull && col(qtyCol).isNotNull)
+                 revenueCol: String, qtyCol: String): DataFrame = Checkpoints.scoped {
+    val pm = Checkpoints.local(df.filter(col(revenueCol).isNotNull && col(qtyCol).isNotNull)
       .groupBy(trunc(col(dateCol), "month").as("month"),
         col(itemCol).as("__it"))
       .agg(sum(col(revenueCol).cast("decimal(18,2)")).as("__rev"),
@@ -382,12 +380,11 @@ object Reporting {
       .select(col("month"), col("__it"),
         (col("__rev").cast("double") / col("__qty").cast("double"))
           .as("__p"),
-        col("__qty").cast("double").as("__q"))
-      .localCheckpoint(true)
+        col("__qty").cast("double").as("__q")))
     val base = pm.crossJoin(broadcast(pm.agg(min("month").as("__m0"))))
       .filter(col("month") === col("__m0"))
       .select(col("__it"), col("__p").as("__p0"), col("__q").as("__q0"))
-    val out = pm.join(broadcast(base), Seq("__it"))
+    Checkpoints.local(pm.join(broadcast(base), Seq("__it"))
       .groupBy("month")
       .agg(count(lit(1)).as("n_matched"),
         round(sum(col("__p") * col("__q0")) /
@@ -400,9 +397,7 @@ object Reporting {
             sum(col("__p0") * col("__q")))), 6).as("fisher"))
       .select(col("month").cast("timestamp").as("month"),
         col("n_matched"), col("laspeyres"), col("paasche"), col("fisher"))
-      .orderBy("month").localCheckpoint(true)
-    pm.unpersist()
-    out
+      .orderBy("month"))
   }
 
   /** Exact Shapley-value channel attribution (coalition value = number
@@ -423,7 +418,7 @@ object Reporting {
     * Returns (channel, shapley 6dp, share 6dp), one row per channel,
     * ordered by channel. */
   def shapleyAttribution(events: DataFrame, userCol: String, tsCol: String,
-                         typeCol: String, convType: String): DataFrame = {
+                         typeCol: String, convType: String): DataFrame = Checkpoints.scoped {
     val spark = events.sparkSession
     val ev = graft.core.Tables.ltzTs(events, tsCol)
     // channel index: distinct non-conversion types, alphabetic
@@ -446,14 +441,13 @@ object Reporting {
       .groupBy(col(userCol))
       .agg(bit_or(bit).as("mask"),
         max(when(col("__tc").isNotNull, 1L).otherwise(0L)).as("conv"))
-    val maskConv = journeys.groupBy("mask")
-      .agg(sum("conv").as("__nc")).localCheckpoint(true)
+    val maskConv = Checkpoints.local(journeys.groupBy("mask")
+      .agg(sum("conv").as("__nc")))
     // v(S) = Σ_{m ⊆ S} conv(m) over all 2^c coalitions
     val coalitions = spark.range(0L, 1L << c).select(col("id").as("S"))
-    val v = coalitions.join(maskConv,
+    val v = Checkpoints.local(coalitions.join(maskConv,
         (col("mask").bitwiseAND(col("S"))) === col("mask"), "left")
-      .groupBy("S").agg(coalesce(sum("__nc"), lit(0L)).as("v"))
-      .localCheckpoint(true)
+      .groupBy("S").agg(coalesce(sum("__nc"), lit(0L)).as("v")))
     // exact factorial literals (0!..12! are exact doubles)
     val fact = (1 to 12).scanLeft(1.0)((a, k) => a * k) // fact(k) at k
     def ft(k: Column): Column = (0 to 12).foldLeft(lit(Double.NaN)) {
@@ -470,13 +464,11 @@ object Reporting {
       .groupBy("channel")
       .agg(sum(col("__w") * (col("__v2") - col("v"))).as("__sh"))
     val tot = terms.agg(sum("__sh").as("__tot"))
-    val out = terms.crossJoin(broadcast(tot))
+    Checkpoints.local(terms.crossJoin(broadcast(tot))
       .select(col("channel"), round(col("__sh"), 6).as("shapley"),
         round(when(col("__tot") > 0, col("__sh") / col("__tot")), 6)
           .as("share"))
-      .orderBy("channel").localCheckpoint(true)
-    maskConv.unpersist(); v.unpersist()
-    out
+      .orderBy("channel"))
   }
 
   /** Position-based (U-shaped 40/20/40) multi-touch attribution:

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -29,7 +30,7 @@ object Skyline {
   /** `dims`: (column, maximize?) — each dimension is normalized to
     * "smaller is better" internally. Returns the input rows (original
     * schema) that form the skyline. */
-  def skyline(df: DataFrame, dims: Seq[(String, Boolean)]): DataFrame = {
+  def skyline(df: DataFrame, dims: Seq[(String, Boolean)]): DataFrame = Checkpoints.scoped {
     require(dims.nonEmpty)
     val clean = df.filter(dims.map(d => col(d._1).isNotNull).reduce(_ && _))
     val idx = dims.map { case (name, _) => df.schema.fieldIndex(name) }
@@ -68,7 +69,7 @@ object Skyline {
 
     val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
       .encoderFor(clean.schema)
-    val local = clean.mapPartitions { it =>
+    val local = Checkpoints.local(clean.mapPartitions { it =>
       val kept = scala.collection.mutable.ArrayBuffer.empty[(Array[Double], Row)]
       it.foreach { r =>
         val k = key(r)
@@ -79,7 +80,7 @@ object Skyline {
         }
       }
       kept.iterator.map(_._2)
-    }(enc).localCheckpoint(true)
+    }(enc))
 
     // global phase: dominance anti-join over the bounded survivor set
     val domCond: Column = {
@@ -89,10 +90,8 @@ object Skyline {
       }
       pairwise.map(_._1).reduce(_ && _) && pairwise.map(_._2).reduce(_ || _)
     }
-    val out = local.as("__cand")
-      .join(local.as("__dom"), domCond, "left_anti")
-      .localCheckpoint(true)
-    local.unpersist()
+    val out = Checkpoints.local(local.as("__cand")
+      .join(local.as("__dom"), domCond, "left_anti"))
     out
   }
 }

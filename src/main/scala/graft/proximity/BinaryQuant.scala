@@ -1,5 +1,6 @@
 package graft.proximity
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -62,10 +63,9 @@ object BinaryQuant {
     * Self-matches excluded. Entirely integer arithmetic — exactly
     * reproducible. Returns (query_id, cand_id, hamming, rank). */
   def hammingTopK(corpus: DataFrame, queryIds: DataFrame, idCol: String,
-                  vecCol: String, dim: Int, k: Int = 10): DataFrame = {
+                  vecCol: String, dim: Int, k: Int = 10): DataFrame = Checkpoints.scoped {
     require(k >= 1, s"k must be >= 1, got $k")
-    val packed = packBits(corpus, idCol, vecCol, dim).drop("__thr")
-      .localCheckpoint(true)
+    val packed = Checkpoints.local(packBits(corpus, idCol, vecCol, dim).drop("__thr"))
     val n = nWords(dim)
     val q = packed.join(
         broadcast(queryIds.select(col(queryIds.columns.head).as(idCol))),
@@ -77,14 +77,11 @@ object BinaryQuant {
       .reduce(_ + _)
     val w = Window.partitionBy("query_id")
       .orderBy(col("hamming").asc, col("cand_id").asc)
-    val out = packed.crossJoin(broadcast(q))
+    Checkpoints.local(packed.crossJoin(broadcast(q))
       .filter(col("query_id") =!= col(idCol))
       .select(col("query_id"), col(idCol).as("cand_id"),
         ham.cast("int").as("hamming"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .localCheckpoint(true)
-    packed.unpersist()
-    out
+      .filter(col("rank") <= k))
   }
 }

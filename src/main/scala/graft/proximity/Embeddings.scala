@@ -1,5 +1,6 @@
 package graft.proximity
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -142,12 +143,11 @@ object Embeddings {
     * duplicates (r₁ = 0) are excluded (standard). Returns one row:
     * (n_points, n_used, id_mle 6dp). */
   def twoNnIntrinsicDim(df: DataFrame, idCol: String, vecCol: String,
-                        maxSample: Int = 2000): DataFrame = {
+                        maxSample: Int = 2000): DataFrame = Checkpoints.scoped {
     import org.apache.spark.sql.expressions.Window
-    val pts = df.filter(col(vecCol).isNotNull)
+    val pts = Checkpoints.local(df.filter(col(vecCol).isNotNull)
       .select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
-      .localCheckpoint(true)
+        transform(col(vecCol), x => x.cast("double")).as("v")))
     val n = pts.count()
     require(n <= maxSample,
       s"twoNnIntrinsicDim is an exhaustive harness — pass a sample " +
@@ -168,13 +168,10 @@ object Embeddings {
       .filter(col("__d1") > 0)
       // ln μ = ln sqrt(d2₂/d2₁) = 0.5·ln(d2₂/d2₁)
       .select((lit(0.5) * log(col("__d2b") / col("__d1"))).as("__lnmu"))
-    val out = mu.agg(count(lit(1)).as("n_used"),
+    Checkpoints.local(mu.agg(count(lit(1)).as("n_used"),
         sum("__lnmu").as("__s"))
       .select(lit(n).as("n_points"), col("n_used"),
         round(when(col("__s") > 0,
-          col("n_used").cast("double") / col("__s")), 6).as("id_mle"))
-      .localCheckpoint(true)
-    pts.unpersist()
-    out
+          col("n_used").cast("double") / col("__s")), 6).as("id_mle")))
   }
 }

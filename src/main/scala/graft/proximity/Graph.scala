@@ -23,9 +23,9 @@ object Graph {
 
   /** (src, dst) edges and their node set (id), both checkpointed. */
   private def directed(edges0: DataFrame): (DataFrame, DataFrame) = {
-    val edges = edges0.select(col("src"), col("dst")).localCheckpoint(true)
-    val nodes = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct().localCheckpoint(true)
+    val edges = Checkpoints.local(edges0.select(col("src"), col("dst")))
+    val nodes = Checkpoints.local(edges.select(col("src").as("id"))
+      .union(edges.select(col("dst").as("id"))).distinct())
     (edges, nodes)
   }
 
@@ -65,7 +65,7 @@ object Graph {
                      (step: DataFrame => DataFrame): DataFrame =
     if (rounds == 0) state
     else {
-      val next = step(state).localCheckpoint(true)
+      val next = Checkpoints.local(step(state))
       val stop = done(state, next)
       Checkpoints.release(state)
       if (stop) next else iterate(next, rounds - 1, done)(step)
@@ -92,13 +92,13 @@ object Graph {
     *              per row in the out-degree (keep it deduped upstream).
     * @return (id, pagerank) over src ∪ dst, summing to 1. */
   def pageRank(edges0: DataFrame, iters: Int = 5,
-               damping: Double = 0.85): DataFrame = {
+               damping: Double = 0.85): DataFrame = Checkpoints.scoped {
     require(iters >= 1 && damping >= 0 && damping < 1)
     val (edges, nodes) = directed(edges0)
     val n = nodes.count().toDouble
-    val outDeg = edges.groupBy("src").agg(count(lit(1)).as("__deg")).localCheckpoint(true)
-    val pr0 = nodes.withColumn("pr", lit(1.0 / n)).localCheckpoint(true)
-    val pr = iterate(pr0, iters) { pr =>
+    val outDeg = Checkpoints.local(edges.groupBy("src").agg(count(lit(1)).as("__deg")))
+    val pr0 = Checkpoints.local(nodes.withColumn("pr", lit(1.0 / n)))
+    iterate(pr0, iters) { pr =>
       // mass parked on dangling nodes spreads uniformly
       val (dangling, contrib) = rankFlows(edges, outDeg, pr)
       nodes.join(contrib, nodes("id") === contrib("dst"), "left")
@@ -108,8 +108,6 @@ object Graph {
             lit(damping) * (coalesce(col("__c"), lit(0.0)) +
               col("__dm") / lit(n.toDouble))).as("pr"))
     }
-    Seq(edges, outDeg, nodes).foreach(Checkpoints.release)
-    pr
   }
 
   /** Synchronous label propagation (community detection): every node
@@ -120,11 +118,11 @@ object Graph {
     * Per round: one src-keyed join + one (dst, label) groupBy + one
     * per-dst argmax — same shuffle budget as a PageRank round.
     */
-  def labelPropagation(edges0: DataFrame, iters: Int = 3): DataFrame = {
+  def labelPropagation(edges0: DataFrame, iters: Int = 3): DataFrame = Checkpoints.scoped {
     require(iters >= 1)
     val (edges, nodes) = directed(edges0)
-    val lab0 = nodes.withColumn("label", col("id")).localCheckpoint(true)
-    val lab = iterate(lab0, iters) { lab =>
+    val lab0 = Checkpoints.local(nodes.withColumn("label", col("id")))
+    iterate(lab0, iters) { lab =>
       val votes = edges.join(lab, edges("src") === lab("id"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("__n"))
       // argmax label per dst: max count, then smallest label
@@ -134,8 +132,6 @@ object Graph {
       lab.join(best, lab("id") === best("dst"), "left")
         .select(col("id"), coalesce(col("__newlab"), col("label")).as("label"))
     }
-    Seq(edges, nodes).foreach(Checkpoints.release)
-    lab
   }
 
   /** Per-node triangle count on the UNDIRECTED graph induced by the edge
@@ -145,11 +141,9 @@ object Graph {
     * all-pairs; degree-skew is the known hot spot and is bounded here
     * by the proximity graph's per-node edge caps.
     */
-  def triangleCount(edges0: DataFrame): DataFrame = {
-    val und = undirected(edges0).localCheckpoint(true)
-    val out = triangles(und)
-    Checkpoints.release(und)
-    out
+  def triangleCount(edges0: DataFrame): DataFrame = Checkpoints.scoped {
+    val und = Checkpoints.local(undirected(edges0))
+    triangles(und)
   }
 
   /** [[triangleCount]] over a checkpointed canonical edge set. The
@@ -165,9 +159,8 @@ object Graph {
     val nodes = und.select(col("a").as("id")).union(und.select(col("b").as("id"))).distinct()
     val perNode = tri.select(explode(array(col("x"), col("y"), col("z"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("triangles"))
-    nodes.join(perNode, Seq("id"), "left")
-      .select(col("id"), coalesce(col("triangles"), lit(0L)).as("triangles"))
-      .localCheckpoint(true)
+    Checkpoints.local(nodes.join(perNode, Seq("id"), "left")
+      .select(col("id"), coalesce(col("triangles"), lit(0L)).as("triangles")))
   }
 
   /** Personalized PageRank: random walks restart at the SEED set
@@ -177,21 +170,19 @@ object Graph {
     * groupBy; dangling mass returns to the seeds).
     * `seeds` needs column `id`; returns (id, ppr 6dp-unrounded). */
   def personalizedPageRank(edges0: DataFrame, seeds0: DataFrame,
-                           iters: Int = 5, damping: Double = 0.85): DataFrame = {
+                           iters: Int = 5, damping: Double = 0.85): DataFrame = Checkpoints.scoped {
     require(iters >= 1 && damping >= 0 && damping < 1)
     val (edges, nodes) = directed(edges0)
-    val seeds = seeds0.select(col("id")).distinct()
-      .join(nodes, Seq("id")).localCheckpoint(true)
+    val seeds = Checkpoints.local(seeds0.select(col("id")).distinct()
+      .join(nodes, Seq("id")))
     val s = seeds.count().toDouble
     require(s > 0, "personalizedPageRank needs at least one seed in the graph")
-    val outDeg = edges.groupBy("src").agg(count(lit(1)).as("__deg")).localCheckpoint(true)
+    val outDeg = Checkpoints.local(edges.groupBy("src").agg(count(lit(1)).as("__deg")))
     // e(v): the restart distribution — 1/|S| on seeds, 0 elsewhere
-    val e = nodes.join(seeds.withColumn("__e", lit(1.0 / s)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__e"), lit(0.0)).as("__e"))
-      .localCheckpoint(true)
-    Checkpoints.release(seeds)
-    val pr0 = e.select(col("id"), col("__e").as("pr")).localCheckpoint(true)
-    val pr = iterate(pr0, iters) { pr =>
+    val e = Checkpoints.local(nodes.join(seeds.withColumn("__e", lit(1.0 / s)), Seq("id"), "left")
+      .select(col("id"), coalesce(col("__e"), lit(0.0)).as("__e")))
+    val pr0 = Checkpoints.local(e.select(col("id"), col("__e").as("pr")))
+    iterate(pr0, iters) { pr =>
       // dangling mass returns to the seeds
       val (dangling, contrib) = rankFlows(edges, outDeg, pr)
       e.join(contrib, e("id") === contrib("dst"), "left")
@@ -200,8 +191,6 @@ object Graph {
           ((lit(1 - damping) + lit(damping) * col("__dm")) * col("__e") +
             lit(damping) * coalesce(col("__c"), lit(0.0))).as("pr"))
     }
-    Seq(edges, outDeg, nodes, e).foreach(Checkpoints.release)
-    pr
   }
 
   /** Multi-source BFS hop distances: minimum number of directed hops
@@ -220,26 +209,25 @@ object Graph {
     * the reachable set saturates, so the loop is O(diameter) rounds,
     * not O(maxHops) scans.
     */
-  def bfsDepths(edges0: DataFrame, sources: DataFrame, maxHops: Int): DataFrame = {
+  def bfsDepths(edges0: DataFrame, sources: DataFrame,
+                maxHops: Int): DataFrame = Checkpoints.scoped {
     require(maxHops >= 0)
-    val edges = edges0.select(col("src"), col("dst")).localCheckpoint(true)
-    var frontier = sources.select(col("id")).distinct()
-      .withColumn("dist", lit(0)).localCheckpoint(true)
+    val edges = Checkpoints.local(edges0.select(col("src"), col("dst")))
+    var frontier = Checkpoints.local(sources.select(col("id")).distinct()
+      .withColumn("dist", lit(0)))
     var visited = frontier // lazy union of cached frontiers
     var hop = 1
     var frontierEmpty = frontier.isEmpty
     while (hop <= maxHops && !frontierEmpty) {
-      val next = frontier.join(edges, frontier("id") === edges("src"))
+      val next = Checkpoints.local(frontier.join(edges, frontier("id") === edges("src"))
         .select(col("dst").as("id")).distinct()
         .join(visited, Seq("id"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .localCheckpoint(true)
+        .withColumn("dist", lit(hop)))
       frontierEmpty = next.isEmpty
       visited = visited.union(next)
       frontier = next
       hop += 1
     }
-    Checkpoints.release(edges)
     visited
   }
 
@@ -253,19 +241,15 @@ object Graph {
     * localCheckpoint'ed (the PageRank lineage discipline). Early-exits
     * when a round removes nothing.
     */
-  def kcorePeel(edges0: DataFrame, k: Int, rounds: Int): DataFrame = {
+  def kcorePeel(edges0: DataFrame, k: Int, rounds: Int): DataFrame = Checkpoints.scoped {
     require(k >= 1 && rounds >= 1)
-    val sym = symmetrized(undirected(edges0)).localCheckpoint(true)
-    val keeps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val sym = Checkpoints.local(symmetrized(undirected(edges0)))
     val core = iterate(sym, rounds, (prev, next) => next.count() == prev.count()) { edges =>
-      val keep = degrees(edges, "__d").filter(col("__d") >= k).select(col("id"))
-        .localCheckpoint(true)
-      keeps += keep
+      val keep = Checkpoints.local(degrees(edges, "__d").filter(col("__d") >= k).select(col("id")))
       edges
         .join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
     }
-    keeps.foreach(Checkpoints.release)
     degrees(core, "degree")
       .withColumn("degree", col("degree").cast("int"))
       .filter(col("degree") >= k)
@@ -276,8 +260,8 @@ object Graph {
     * each undirected edge counted both ways, the standard Newman form).
     * Aggregates only; the corr is over the edge table.
     */
-  def degreeStats(edges0: DataFrame): DataFrame = {
-    val und = undirected(edges0).localCheckpoint(true)
+  def degreeStats(edges0: DataFrame): DataFrame = Checkpoints.scoped {
+    val und = Checkpoints.local(undirected(edges0))
     val dir = symmetrized(und)
     val deg = degrees(dir, "deg")
     dir
@@ -304,8 +288,8 @@ object Graph {
     * metadata-sized aggregate broadcast back. A shared neighbor b has
     * deg(b) ≥ 2 by construction, so ln(deg) never hits zero. Returns
     * (src, dst, common_neighbors, jaccard, adamic_adar). */
-  def linkPrediction(edges0: DataFrame): DataFrame = {
-    val und = undirected(edges0).localCheckpoint(true)
+  def linkPrediction(edges0: DataFrame): DataFrame = Checkpoints.scoped {
+    val und = Checkpoints.local(undirected(edges0))
     val adj = symmetrized(und, "u", "v")
     val deg = degrees(adj, "deg", "u")
     // two-paths a —b— c with a < c, scored per shared neighbor b
@@ -317,7 +301,7 @@ object Graph {
       .groupBy("a", "c")
       .agg(count(lit(1)).as("common_neighbors"),
         sum(lit(1.0) / log(col("__dm"))).as("__aa"))
-    val out = paths
+    Checkpoints.local(paths
       // keep only NON-edges: the candidate set minus the graph itself
       .join(und, paths("a") === und("a") && paths("c") === und("b"),
         "left_anti")
@@ -330,10 +314,7 @@ object Graph {
         round(col("common_neighbors") /
           (col("__da") + col("__dc") - col("common_neighbors")), 6)
           .as("jaccard"),
-        round(col("__aa"), 6).as("adamic_adar"))
-      .localCheckpoint(true)
-    Checkpoints.release(und)
-    out
+        round(col("__aa"), 6).as("adamic_adar")))
   }
 
   /** Local clustering coefficient per node:
@@ -342,10 +323,10 @@ object Graph {
     * two-path join with the degree aggregate; one extra metadata join,
     * no new shuffle shape. Returns
     * (id, degree, triangles, clustering_coeff). */
-  def clusteringCoefficient(edges0: DataFrame): DataFrame = {
+  def clusteringCoefficient(edges0: DataFrame): DataFrame = Checkpoints.scoped {
     // one checkpointed edge set feeds the triangles and the degrees, so
     // edges0 is evaluated once
-    val und = undirected(edges0).localCheckpoint(true)
+    val und = Checkpoints.local(undirected(edges0))
     val tri = triangles(und)
     val deg = degrees(symmetrized(und), "degree")
     tri.join(deg, "id")
@@ -368,18 +349,17 @@ object Graph {
     * partitioning. `edges` needs (src, dst, w); `sources` a column
     * `id`. Returns reached (id, dist 6dp). */
   def ssspWeighted(edges0: DataFrame, sources: DataFrame,
-                   rounds: Int): DataFrame = {
+                   rounds: Int): DataFrame = Checkpoints.scoped {
     require(rounds >= 0)
-    val edges = edges0.select(col("src"), col("dst"),
-      col("w").cast("double").as("w")).localCheckpoint(true)
-    val dist0 = sources.select(col("id")).distinct()
-      .withColumn("dist", lit(0.0)).localCheckpoint(true)
+    val edges = Checkpoints.local(edges0.select(col("src"), col("dst"),
+      col("w").cast("double").as("w")))
+    val dist0 = Checkpoints.local(sources.select(col("id")).distinct()
+      .withColumn("dist", lit(0.0)))
     val dist = iterate(dist0, rounds) { dist =>
       val relax = dist.join(edges, dist("id") === edges("src"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
       dist.union(relax).groupBy("id").agg(min("dist").as("dist"))
     }
-    Checkpoints.release(edges)
     dist.select(col("id"), round(col("dist"), 6).as("dist"))
   }
 
@@ -392,10 +372,10 @@ object Graph {
     * labels onto the canonical edge set + one degree groupBy — all
     * edge-list-sized. Returns
     * (community, n_nodes, n_intra, deg_sum, q_c 6dp). */
-  def modularity(edges0: DataFrame, labels: DataFrame): DataFrame = {
-    val und = undirected(edges0).localCheckpoint(true)
+  def modularity(edges0: DataFrame, labels: DataFrame): DataFrame = Checkpoints.scoped {
+    val und = Checkpoints.local(undirected(edges0))
     val m = und.count().toDouble
-    val lab = labels.select(col("id"), col("label")).localCheckpoint(true)
+    val lab = Checkpoints.local(labels.select(col("id"), col("label")))
     val intra = und
       .join(lab.select(col("id").as("a"), col("label").as("__la")), "a")
       .join(lab.select(col("id").as("b"), col("label").as("__lb")), "b")
@@ -405,15 +385,12 @@ object Graph {
       .join(lab, "id")
       .groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_nodes"), sum("__d").as("deg_sum"))
-    val out = deg.join(intra, Seq("community"), "left")
+    Checkpoints.local(deg.join(intra, Seq("community"), "left")
       .select(col("community"), col("n_nodes"),
         coalesce(col("n_intra"), lit(0L)).as("n_intra"), col("deg_sum"),
         round(coalesce(col("n_intra"), lit(0L)) / lit(m) -
           (col("deg_sum") / lit(2.0 * m)) * (col("deg_sum") / lit(2.0 * m)),
-          6).as("q_c"))
-      .localCheckpoint(true)
-    Seq(und, lab).foreach(Checkpoints.release)
-    out
+          6).as("q_c")))
   }
 
   /** HITS hubs-and-authorities (Kleinberg '99) on the DIRECTED edge
@@ -428,7 +405,7 @@ object Graph {
     * sums as 1-row cross-joined aggregates (the [[pageRank]]
     * dangling-mass pattern) and localCheckpoints truncating lineage per
     * half-step. Returns (id, hub 6dp, authority 6dp). */
-  def hits(edges0: DataFrame, iters: Int = 3): DataFrame = {
+  def hits(edges0: DataFrame, iters: Int = 3): DataFrame = Checkpoints.scoped {
     require(iters >= 1, "hits needs at least one round")
     val (edges, nodes) =
       directed(edges0.filter(col("src") =!= col("dst")).select("src", "dst").distinct())
@@ -448,19 +425,16 @@ object Graph {
           (coalesce(col("__s"), lit(0.0)) / col("__l1")).as(out))
     }
     var auth: DataFrame = null
-    val hub0 = nodes.withColumn("h", lit(1.0)).localCheckpoint(true)
+    val hub0 = Checkpoints.local(nodes.withColumn("h", lit(1.0)))
     val hub = iterate(hub0, iters) { hub =>
-      val aNew = halfStep(hub, "h", "src", "dst", "a").localCheckpoint(true)
+      val aNew = Checkpoints.local(halfStep(hub, "h", "src", "dst", "a"))
       if (auth != null) Checkpoints.release(auth)
       auth = aNew
       halfStep(auth, "a", "dst", "src", "h")
     }
-    val out = hub.join(auth, Seq("id"))
+    Checkpoints.local(hub.join(auth, Seq("id"))
       .select(col("id"), round(col("h"), 6).as("hub"),
-        round(col("a"), 6).as("authority"))
-      .localCheckpoint(true)
-    Seq(edges, nodes, hub, auth).foreach(Checkpoints.release)
-    out
+        round(col("a"), 6).as("authority")))
   }
 
   /** Degree assortativity (Newman '02): the Pearson correlation of
@@ -474,8 +448,8 @@ object Graph {
     * undirected edge contributes both orientations — the standard
     * convention that makes the correlation symmetric). Returns one
     * row: (n_nodes, n_edges, assortativity 6dp). */
-  def assortativity(edges0: DataFrame): DataFrame = {
-    val und = undirected(edges0).localCheckpoint(true)
+  def assortativity(edges0: DataFrame): DataFrame = Checkpoints.scoped {
+    val und = Checkpoints.local(undirected(edges0))
     val sym = symmetrized(und)
     val deg = degrees(sym, "deg")
     val paired = sym

@@ -1,5 +1,6 @@
 package graft.proximity
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,7 +67,8 @@ object IvfIndex {
     * vectors read, so partition pruning happens at plan time, no DPP
     * required. Self-matches (same id) are excluded. */
   def query(spark: SparkSession, path: String, queries: DataFrame,
-            idCol: String, vecCol: String, k: Int, nProbe: Int = 4): DataFrame = {
+            idCol: String, vecCol: String, k: Int,
+            nProbe: Int = 4): DataFrame = Checkpoints.scoped {
     import org.apache.spark.sql.expressions.Window
     val cents = broadcast(spark.read.parquet(s"$path/centroids"))
     val q = queries.select(col(idCol).as("id"), toD(col(vecCol)).as("__qv"))
@@ -76,13 +78,12 @@ object IvfIndex {
     // (the most expensive pre-join stage) would execute twice — and a
     // nondeterministic queries frame could drift between the two runs,
     // probing cells outside the collected IN-filter snapshot
-    val qCells = q.crossJoin(cents)
+    val qCells = Checkpoints.local(q.crossJoin(cents)
       .withColumn("__sim", Proximity.cosine(col("__qv"), col("centroid")))
       .withColumn("__rank", row_number().over(
         Window.partitionBy("id").orderBy(desc("__sim"), asc("cell"))))
       .filter(col("__rank") <= nProbe)
-      .select(col("id"), col("__qv"), col("cell"))
-      .localCheckpoint(true)
+      .select(col("id"), col("__qv"), col("cell")))
     val probed = qCells.select("cell").distinct()
       .collect().map(_.getInt(0)).sorted
     val vecs = spark.read.parquet(s"$path/vectors")

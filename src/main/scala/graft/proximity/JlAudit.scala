@@ -1,5 +1,6 @@
 package graft.proximity
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -32,9 +33,10 @@ object JlAudit {
     * of (cos+1)/2, n_pairs, mean_true 6dp, mean_proj 6dp,
     * mean_abs_err 6dp). */
   def jlDistortion(emb: DataFrame, idCol: String, vecCol: String,
-                   k: Int = 16, idCap: Int = 500): DataFrame = {
+                   k: Int = 16, idCap: Int = 500): DataFrame = Checkpoints.scoped {
     val x = transform(col(vecCol), v => v.cast("double"))
-    val base = emb.filter(col(idCol) < idCap && col(vecCol).isNotNull)
+    // idCap rows; both sides of the pair join
+    val base = Checkpoints.local(emb.filter(col(idCol) < idCap && col(vecCol).isNotNull)
       .select(col(idCol).as("__id"), x.as("__x"))
       .withColumn("__proj",
         transform(sequence(lit(0), lit(k - 1)), j =>
@@ -47,8 +49,7 @@ object JlAudit {
       .withColumn("__nx", sqrt(foldSum(
         transform(col("__x"), v => v * v))))
       .withColumn("__np", sqrt(foldSum(
-        transform(col("__proj"), v => v * v))))
-      .localCheckpoint(true) // idCap rows; both sides of the pair join
+        transform(col("__proj"), v => v * v)))))
     val pairs = base.as("a").join(base.as("b"),
       col("a.__id") < col("b.__id"))
     val cosT = foldSum(zip_with(col("a.__x"), col("b.__x"),

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,12 +28,11 @@ object Distinctive {
     * ranking. `priorWeight` is the per-term pseudo-count α. */
   def distinctiveTerms(docs: DataFrame, sourceCol: String, textCol: String,
                        topK: Int = 5, minCount: Long = 5L,
-                       priorWeight: Double = 0.5): DataFrame = {
-    val perSource = docs
+                       priorWeight: Double = 0.5): DataFrame = Checkpoints.scoped {
+    val perSource = Checkpoints.local(docs
       .select(col(sourceCol).as("source"),
         explode(Text.tokens(col(textCol))).as("term"))
-      .groupBy("source", "term").agg(count(lit(1)).as("y_sw"))
-      .localCheckpoint(true)
+      .groupBy("source", "term").agg(count(lit(1)).as("y_sw")))
     val perTerm = perSource.groupBy("term").agg(sum("y_sw").as("y_w"))
     val totals = perSource.groupBy("source").agg(sum("y_sw").as("n_s"))
     val corpus = perSource.agg(sum("y_sw").as("n"),
@@ -56,16 +56,13 @@ object Distinctive {
         sqrt(lit(1.0) / (col("y_sw") + a) + lit(1.0) / (col("__yr") + a)), 6))
     val w = Window.partitionBy("source")
       .orderBy(col("__z").desc, col("term"))
-    val out = scored
+    Checkpoints.local(scored
       .filter(col("y_sw") >= minCount)
       .withColumn("__rk", row_number().over(w))
       .filter(col("__rk") <= topK)
       .select(col("source"), col("term"), col("y_sw").as("n_source"),
         col("__yr").as("n_rest"), round(col("__lo"), 6).as("log_odds"),
-        col("__z").as("z"))
-      .localCheckpoint(true)
-    perSource.unpersist()
-    out
+        col("__z").as("z")))
   }
 
   /** Per-source lexical-richness profile: token volume, vocabulary
@@ -115,15 +112,14 @@ object Distinctive {
     * pairs with count ≥ `minCount`: (w1, w2, n_pair, n_w1, n_w2,
     * g2 6dp). */
   def collocations(docs: DataFrame, textCol: String, minCount: Long = 5,
-                   topK: Int = 20): DataFrame = {
+                   topK: Int = 20): DataFrame = Checkpoints.scoped {
     val toks = Text.tokens(col(textCol))
     val pairs0 = docs.select(arrays_zip(
         slice(toks, lit(1), greatest(size(toks) - 1, lit(0))),
         slice(toks, lit(2), greatest(size(toks) - 1, lit(0)))).as("__z"))
       .select(explode(col("__z")).as("__p"))
       .select(col("__p.0").as("w1"), col("__p.1").as("w2"))
-    val pc = pairs0.groupBy("w1", "w2").agg(count(lit(1)).as("n_pair"))
-      .localCheckpoint(true)
+    val pc = Checkpoints.local(pairs0.groupBy("w1", "w2").agg(count(lit(1)).as("n_pair")))
     val c1 = pc.groupBy("w1").agg(sum("n_pair").as("n_w1"))
     val c2 = pc.groupBy("w2").agg(sum("n_pair").as("n_w2"))
     val nTot = pc.agg(sum("n_pair").as("__N"))
@@ -241,15 +237,14 @@ object Distinctive {
     * use the pair table's first-word margin (all tokens but each
     * text's last — documented). Natural-log entropies. Returns one
     * row: (n_pairs, h_unigram 6dp, h_cond 6dp, redundancy 6dp). */
-  def entropyRate(docs: DataFrame, textCol: String): DataFrame = {
+  def entropyRate(docs: DataFrame, textCol: String): DataFrame = Checkpoints.scoped {
     val toks = Text.tokens(col(textCol))
     val pairs0 = docs.select(arrays_zip(
         slice(toks, lit(1), greatest(size(toks) - 1, lit(0))),
         slice(toks, lit(2), greatest(size(toks) - 1, lit(0)))).as("__z"))
       .select(explode(col("__z")).as("__p"))
       .select(col("__p.0").as("w1"), col("__p.1").as("w2"))
-    val pc = pairs0.groupBy("w1", "w2").agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+    val pc = Checkpoints.local(pairs0.groupBy("w1", "w2").agg(count(lit(1)).as("n")))
     val tot = pc.agg(sum("n").as("__N"))
     val nD = col("__N").cast("double")
     val hJoint = pc.crossJoin(broadcast(tot))
@@ -281,13 +276,12 @@ object Distinctive {
     * per-source sum — order-free on any engine. Returns
     * (source, n_tokens, kl 6dp). */
   def sourceKl(docs: DataFrame, srcCol: String, textCol: String,
-               topK: Int = 2000): DataFrame = {
+               topK: Int = 2000): DataFrame = Checkpoints.scoped {
     import org.apache.spark.sql.types.DecimalType
     val tok = docs.select(col(srcCol).as("source"),
       explode(Text.tokens(col(textCol))).as("__t"))
-    val vocab = tok.groupBy("__t").agg(count(lit(1)).as("__cn"))
-      .orderBy(col("__cn").desc, col("__t")).limit(topK)
-      .localCheckpoint(true)
+    val vocab = Checkpoints.local(tok.groupBy("__t").agg(count(lit(1)).as("__cn"))
+      .orderBy(col("__cn").desc, col("__t")).limit(topK))
     val vStats = vocab.agg(count(lit(1)).as("__V"),
       sum("__cn").as("__N"))
     val perSrc = tok.join(broadcast(vocab.select("__t")), Seq("__t"))
@@ -318,7 +312,7 @@ object Distinctive {
     * Returns (source, n_pairs, h_unigram 6dp, h_cond 6dp,
     * redundancy 6dp) ordered. */
   def entropyBySource(docs: DataFrame, srcCol: String,
-                      textCol: String): DataFrame = {
+                      textCol: String): DataFrame = Checkpoints.scoped {
     import org.apache.spark.sql.types.DecimalType
     val toks = Text.tokens(col(textCol))
     val pairs0 = docs.select(col(srcCol).as("source"), arrays_zip(
@@ -326,8 +320,8 @@ object Distinctive {
         slice(toks, lit(2), greatest(size(toks) - 1, lit(0)))).as("__z"))
       .select(col("source"), explode(col("__z")).as("__p"))
       .select(col("source"), col("__p.0").as("w1"), col("__p.1").as("w2"))
-    val pc = pairs0.groupBy("source", "w1", "w2")
-      .agg(count(lit(1)).as("n")).localCheckpoint(true)
+    val pc = Checkpoints.local(pairs0.groupBy("source", "w1", "w2")
+      .agg(count(lit(1)).as("n")))
     val tot = pc.groupBy("source").agg(sum("n").as("__N"))
     def hTerm(cnt: org.apache.spark.sql.Column) = {
       val p = cnt.cast("double") / col("__N").cast("double")
@@ -341,16 +335,14 @@ object Distinctive {
       .join(tot, Seq("source"))
       .groupBy("source")
       .agg(sum(hTerm(col("__c1"))).cast("double").as("__hu"))
-    val out = hJoint.join(hUni, Seq("source"))
+    Checkpoints.local(hJoint.join(hUni, Seq("source"))
       .select(col("source"), col("n_pairs"),
         round(col("__hu"), 6).as("h_unigram"),
         round(col("__hj") - col("__hu"), 6).as("h_cond"),
         round(when(col("__hu") > 0,
           lit(1.0) - (col("__hj") - col("__hu")) / col("__hu")), 6)
           .as("redundancy"))
-      .orderBy("source").localCheckpoint(true)
-    pc.unpersist()
-    out
+      .orderBy("source"))
   }
 
   /** FUNCTION-WORD fingerprint cosine between source pairs: each

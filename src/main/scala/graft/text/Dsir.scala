@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -51,11 +52,11 @@ object Dsir {
     * construction, so the scoring join is a plain inner equi-join).
     */
   def importanceWeights(raw: DataFrame, target: DataFrame, idCol: String,
-                        textCol: String, buckets: Int = 65536): DataFrame = {
+                        textCol: String, buckets: Int = 65536): DataFrame = Checkpoints.scoped {
     // checkpoint: the raw instance table feeds BOTH the bucket counts
     // and the scoring join — without it the explode+md5 corpus pass
     // runs twice (at cluster scale swap for checkpoint() on storage)
-    val rawB = docBuckets(raw, idCol, textCol).localCheckpoint(true)
+    val rawB = Checkpoints.local(docBuckets(raw, idCol, textCol))
     val tgtB = docBuckets(target, idCol, textCol)
     val rawCnt = rawB.groupBy("__b").agg(count(lit(1)).as("__cr"))
     val tgtCnt = tgtB.groupBy("__b").agg(count(lit(1)).as("__ct"))
@@ -86,13 +87,12 @@ object Dsir {
     * slightly exceed `fraction` when weights tie). */
   def selectTopFraction(raw: DataFrame, target: DataFrame, idCol: String,
                         textCol: String, fraction: Double,
-                        buckets: Int = 65536): DataFrame = {
+                        buckets: Int = 65536): DataFrame = Checkpoints.scoped {
     require(fraction > 0 && fraction <= 1, s"fraction $fraction out of (0,1]")
     // checkpoint: the weight table feeds BOTH the percentile action and
     // the returned filter — without it the corpus-sized scoring pipeline
     // would execute twice
-    val w = importanceWeights(raw, target, idCol, textCol, buckets)
-      .localCheckpoint(true)
+    val w = Checkpoints.local(importanceWeights(raw, target, idCol, textCol, buckets))
     val cut = w.agg(graft.functions.ExactPercentiles.exactPercentiles(
       col("dsir_weight"), Seq(1.0 - fraction)).as("q"))
       .select(element_at(col("q"), 1)).first().getDouble(0)

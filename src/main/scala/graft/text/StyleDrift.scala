@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,7 +30,7 @@ object StyleDrift {
   /** Pairwise char-n-gram JS matrix. Returns (source_a, source_b,
     * n_shared_grams, js 6dp) for every unordered source pair. */
   def charJsMatrix(docs: DataFrame, srcCol: String, textCol: String,
-                   n: Int = 3): DataFrame = {
+                   n: Int = 3): DataFrame = Checkpoints.scoped {
     val norm = regexp_replace(lower(trim(col(textCol))), "\\s+", " ")
     val cells = docs.filter(col(textCol).isNotNull)
       .select(col(srcCol).as("__s"), norm.as("__t"))
@@ -39,8 +40,8 @@ object StyleDrift {
         i => col("__t").substr(i, lit(n)))).as("__g"))
       .groupBy("__s", "__g")
       .agg(count(lit(1)).as("__c"))
-    val totals = cells.groupBy("__s").agg(sum("__c").as("__tot"))
-      .localCheckpoint(true) // |sources| rows; scaffold + two joins
+    // |sources| rows; scaffold + two joins
+    val totals = Checkpoints.local(cells.groupBy("__s").agg(sum("__c").as("__tot")))
     val joint = cells.as("a")
       .join(cells.as("b"),
         col("a.__g") === col("b.__g") && col("a.__s") < col("b.__s"))

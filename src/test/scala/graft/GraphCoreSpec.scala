@@ -85,7 +85,46 @@ class GraphCoreSpec extends SparkSpec {
     "Concentration.hillTailIndex" -> (() => Concentration.hillTailIndex(cells, "v", k = 10)),
     "SkewReport.keySkew" -> (() => SkewReport.keySkew(cells, "a")))
 
-  (entryPoints ++ statsEntryPoints).foreach { case (name, run) =>
+  private def table(name: String): DataFrame = graft.core.Tables.load(spark, sf, name)
+
+  // one entry point per file whose end-of-call `unpersist()` on a local
+  // checkpoint freed nothing
+  private val scopedEntryPoints: Seq[(String, () => DataFrame)] = Seq(
+    "Forecast.seasonalDecompose" -> (() => graft.operators.Forecast.seasonalDecompose(
+      table("events"), "ts", "value")),
+    "Reporting.shapleyAttribution" -> (() => graft.operators.Reporting.shapleyAttribution(
+      table("events"), "user_id", "ts", "event_type", convType = "purchase")),
+    "Preference.cohenKappa" -> (() => graft.ml.Preference.cohenKappa(cells.select(
+      col("a").cast("string").as("x"), col("b").cast("string").as("y")), "x", "y")),
+    "LeakageSplit.leakageSafeSplit" -> (() => graft.dedup.LeakageSplit.leakageSafeSplit(
+      table("documents"), "doc_id", "text", shingleSize = 8, maxDf = 5, iters = 4,
+      trainFraction = 0.8)),
+    "Dedup.jaccardJoinPrefix" -> (() => graft.dedup.Dedup.jaccardJoinPrefix(
+      table("documents").filter(col("doc_id") < 200), "doc_id", "text", threshold = 0.5)),
+    "Distinctive.distinctiveTerms" -> (() => graft.text.Distinctive.distinctiveTerms(
+      table("documents"), "source", "text", topK = 5, minCount = 5L)),
+    "Hierarchy.flatten" -> (() => graft.operators.Hierarchy.flatten(
+      Seq((1L, None), (2L, Some(1L)), (3L, Some(2L)), (4L, Some(2L)))
+        .toDF("id", "parent"), "id", "parent")),
+    "FuzzyJoin.sequenceNeighbors" -> (() => graft.operators.FuzzyJoin.sequenceNeighbors(
+      table("events"), "user_id", "ts", "event_type", "event_id", k = 10)),
+    "Skyline.skyline" -> (() => graft.operators.Skyline.skyline(table("part"),
+      Seq("p_size" -> true, "p_retailprice" -> false))),
+    "Contamination.contaminationSweep" -> (() =>
+      graft.dedup.Contamination.contaminationSweep(table("documents"), "doc_id", "text",
+        Seq("mod50" -> (col("doc_id") % 50 === 0)))),
+    "BinaryQuant.hammingTopK" -> (() => graft.proximity.BinaryQuant.hammingTopK(
+      table("embeddings").select("vec_id", "embedding"),
+      table("embeddings").filter(col("vec_id") % 100 === 0).select("vec_id"),
+      "vec_id", "embedding", dim = 64, k = 10)),
+    "Embeddings.twoNnIntrinsicDim" -> (() => graft.proximity.Embeddings.twoNnIntrinsicDim(
+      table("embeddings").filter(col("vec_id") < 400), "vec_id", "embedding")),
+    "Lift.liftTable" -> (() => graft.ml.Lift.liftTable(cells.select(
+      (col("v") / 100).as("p"), col("e").as("y")), "p", "y", bands = 4)),
+    "Bootstrap.subsampleCi" -> (() => graft.ml.Bootstrap.subsampleCi(table("events"),
+      "event_type", "event_id", "value", b = 16)))
+
+  (entryPoints ++ statsEntryPoints ++ scopedEntryPoints).foreach { case (name, run) =>
     test(s"$name keeps only the checkpoints its result reads") {
       val (out, added) = persistedBy(run())
       val read = checkpointsIn(out)

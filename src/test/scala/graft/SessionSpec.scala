@@ -28,19 +28,30 @@ class SessionSpec extends SparkSpec {
     assert(seen.values.forall(_ == TimestampNTZType), seen)
   }
 
-  test("only core.Session and tools.Debug build a SparkSession in src/main") {
+  // source guard: (test name, token, the only src/main files that may
+  // contain it)
+  private val guarded = Seq(
+    ("only core.Session and tools.Debug build a SparkSession in src/main",
+      "SparkSession.builder", Set("graft/core/Session.scala", "graft/tools/Debug.scala")),
+    ("only core.Checkpoints makes a local checkpoint in src/main",
+      ".localCheckpoint(", Set("graft/core/Checkpoints.scala")))
+
+  private lazy val mainSources: Map[String, String] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, root.getAbsolutePath)
-    val allowed = Set("graft/core/Session.scala", "graft/tools/Debug.scala")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val builders = files(root).filter(_.getName.endsWith(".scala"))
-      .filter { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        src.contains("SparkSession.builder")
-      }
-      .map(f => root.toPath.relativize(f.toPath).toString)
-    assert(builders.toSet == allowed, builders)
+    files(root).filter(_.getName.endsWith(".scala")).map { f =>
+      root.toPath.relativize(f.toPath).toString ->
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    }.toMap
+  }
+
+  guarded.foreach { case (name, token, allowed) =>
+    test(name) {
+      val users = mainSources.collect { case (f, src) if src.contains(token) => f }
+      assert(users.toSet == allowed, users)
+    }
   }
 
   test("SparkEntry.queries is built once, with the same 522 names") {
