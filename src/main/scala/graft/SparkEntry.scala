@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Checkpoints, Tables}
+import graft.core.{Checkpoints, Lattice, Tables}
 import graft.dedup.Dedup
 import graft.eda.Eda
 import graft.ml.Metrics
@@ -58,9 +58,16 @@ object SparkEntry {
 
   /** Exact decimal sum surfaced as double — deterministic across engines
     * (decimal accumulation is order-independent; the final double cast of
-    * the same decimal value is identical everywhere).
+    * the same decimal value is identical everywhere). `Lattice.centsSum`
+    * is `sum(c.cast(DECIMAL(18,2)))` without BigDecimal on the per-row
+    * path: a DOUBLE row on the cents lattice (`n = rint(c·100)`,
+    * `|c| < 2^40`, `n / 100.0 == c`) adds `n` cents to a 128-bit sum, and
+    * every other row takes Spark's cast. The two agree because `n/100`
+    * and the cast's `Double.toString(c)` both lie within half an ulp of
+    * `c`, and below 2^40 an ulp is at most 2^-12, far inside the 0.005
+    * gap to a half-cent boundary (`core.Lattice` has the full argument).
     */
-  private def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
+  private def dsum(c: Column): Column = Lattice.centsSum(c).cast("double")
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -1787,7 +1794,7 @@ object SparkEntry {
       graft.operators.SkewJoin.saltedJoin(ev, dim, "user_id", "event_id", 8)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,2)")).cast("double")
+          Lattice.centsSum(col("value")).cast("double")
             .as("value_sum"),
           sum("user_events").as("user_events_sum"))
     }),
@@ -2194,7 +2201,7 @@ object SparkEntry {
       // revenue concentration per nation: Gini/HHI/top-10% share over
       // decimal-exact per-customer spend totals
       val spend = t(s, dir, "orders").groupBy("o_custkey")
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)"))
+        .agg(Lattice.centsSum(col("o_totalprice"))
           .cast("double").as("spend"))
       val g = spend.join(t(s, dir, "customer"),
           col("o_custkey") === col("c_custkey"))
@@ -2211,9 +2218,8 @@ object SparkEntry {
       val cut = lit("2024-01-15 00:00:00").cast("timestamp")
       val units = ev.groupBy("user_id").agg(
         sum(when(col("ts") < cut, 1L).otherwise(0L)).as("score"),
-        coalesce(sum(when(col("ts") >= cut &&
-            col("event_type") === "purchase",
-          col("value").cast("decimal(18,2)"))),
+        coalesce(Lattice.centsSum(when(col("ts") >= cut &&
+            col("event_type") === "purchase", col("value"))),
           lit(0).cast("decimal(18,2)")).cast("double").as("y"))
       graft.ml.Uplift.qiniByBucket(units, col("user_id") % 2 === 1,
         "score", "y", "user_id", nBuckets = 10)
@@ -2349,8 +2355,8 @@ object SparkEntry {
         .groupBy("user_id").agg(
           max(when(col("event_type") === "purchase", 1).otherwise(0))
             .as("treated"),
-          sum(when(col("event_type") =!= "purchase",
-            col("value").cast("decimal(18,2)"))).as("y"),
+          Lattice.centsSum(when(col("event_type") =!= "purchase",
+            col("value"))).as("y"),
           count(lit(1)).as("x"))
       graft.ml.Experiments.stratifiedAte(units, "treated", "y", "x",
         nStrata = 5)
@@ -2379,7 +2385,7 @@ object SparkEntry {
       // t-test gets wrong
       val units = t(s, dir, "events").filter(col("value").isNotNull)
         .groupBy("user_id").agg(
-          sum(col("value").cast("decimal(18,2)")).as("y"),
+          Lattice.centsSum(col("value")).as("y"),
           count(lit(1)).as("x"))
         .select(
           when(col("user_id") % 2 === 0, lit("even")).otherwise(lit("odd"))
@@ -2393,8 +2399,8 @@ object SparkEntry {
         .groupBy("user_id").agg(
           max(when(col("event_type") === "purchase", 1).otherwise(0))
             .as("treated"),
-          sum(when(col("event_type") =!= "purchase",
-            col("value").cast("decimal(18,2)"))).as("y"),
+          Lattice.centsSum(when(col("event_type") =!= "purchase",
+            col("value"))).as("y"),
           count(lit(1)).as("x"))
       graft.ml.Experiments.caliperMatch(units, "treated", "y", "x",
         caliper = 2.0)
@@ -2866,11 +2872,11 @@ object SparkEntry {
       // after mid-January (decimal-exact means so pairs are portable)
       val ev = graft.core.Tables.ltzTs(t(s, dir, "events"), "ts")
       val split = lit("2024-01-15 00:00:00").cast("timestamp")
-      val dv = col("value").cast(DecimalType(18, 2))
+      val v = col("value")
       val pairs = ev.groupBy("user_id").agg(
-          (sum(when(col("ts") < split, dv)).cast("double") /
+          (Lattice.centsSum(when(col("ts") < split, v)).cast("double") /
             sum(when(col("ts") < split, 1L))).as("x"),
-          (sum(when(col("ts") >= split, dv)).cast("double") /
+          (Lattice.centsSum(when(col("ts") >= split, v)).cast("double") /
             sum(when(col("ts") >= split, 1L))).as("y"))
         .filter(col("x").isNotNull && col("y").isNotNull)
       graft.eda.ShapeTests.wilcoxonSignedRank(pairs, "x", "y")
@@ -2880,7 +2886,7 @@ object SparkEntry {
       // it trend/cycle? Wald-Wolfowitz runs over the day frame
       val daily = t(s, dir, "lineitem")
         .groupBy(col("l_shipdate").as("day"))
-        .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
+        .agg(Lattice.centsSum(col("l_extendedprice"))
           .cast("double").as("rev"))
       graft.eda.ShapeTests.runsTest(daily, "day", "rev")
     }),
@@ -3041,11 +3047,11 @@ object SparkEntry {
       // each user's pre-vs-post change matters
       val ev = graft.core.Tables.ltzTs(t(s, dir, "events"), "ts")
       val split = lit("2024-01-15 00:00:00").cast("timestamp")
-      val dv = col("value").cast(DecimalType(18, 2))
+      val v = col("value")
       val pairs = ev.groupBy("user_id").agg(
-          (sum(when(col("ts") < split, dv)).cast("double") /
+          (Lattice.centsSum(when(col("ts") < split, v)).cast("double") /
             sum(when(col("ts") < split, 1L))).as("x"),
-          (sum(when(col("ts") >= split, dv)).cast("double") /
+          (Lattice.centsSum(when(col("ts") >= split, v)).cast("double") /
             sum(when(col("ts") >= split, 1L))).as("y"))
         .filter(col("x").isNotNull && col("y").isNotNull)
       graft.eda.ShapeTests.signTest(pairs, "x", "y")
@@ -3279,7 +3285,7 @@ object SparkEntry {
       val ev = graft.core.Tables.ltzTs(t(s, dir, "events"), "ts")
       val daily = ev.groupBy(col("event_type").as("r"),
           to_date(col("ts")).as("i"))
-        .agg(sum(col("value").cast(DecimalType(18, 2)))
+        .agg(Lattice.centsSum(col("value"))
           .cast("double").as("v"))
       graft.eda.StatTests.kendallW(daily, "r", "i", "v")
     }),
@@ -3352,7 +3358,7 @@ object SparkEntry {
       val daily = t(s, dir, "lineitem")
         .groupBy(col("l_shipdate").as("b"),
           floor(col("l_discount") * 20).as("t"))
-        .agg((sum(col("l_extendedprice").cast(DecimalType(18, 2)))
+        .agg((Lattice.centsSum(col("l_extendedprice"))
           .cast("double") / count(lit(1))).as("v"))
       graft.eda.StatTests.friedmanPage(daily, "b", "t", "v")
     }),
@@ -3494,7 +3500,7 @@ object SparkEntry {
       graft.eda.StatTests.lilliefors(
         t(s, dir, "lineitem")
           .groupBy(col("l_shipdate").as("day"))
-          .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
+          .agg(Lattice.centsSum(col("l_extendedprice"))
             .cast("double").as("rev")),
         "rev")),
     "q448_bowker" -> ((s, dir) => {
@@ -3503,11 +3509,11 @@ object SparkEntry {
       // integer-div lattice of the per-user mean in $25 steps
       val ev = graft.core.Tables.ltzTs(t(s, dir, "events"), "ts")
       val split = lit("2024-01-15 00:00:00").cast("timestamp")
-      val dv = col("value").cast(DecimalType(18, 2))
+      val v = col("value")
       val agg = ev.groupBy("user_id").agg(
-        (sum(when(col("ts") < split, dv)) * 100).cast("long").as("__sp"),
+        (Lattice.centsSum(when(col("ts") < split, v)) * 100).cast("long").as("__sp"),
         sum(when(col("ts") < split, 1L)).as("__cp"),
-        (sum(when(col("ts") >= split, dv)) * 100).cast("long").as("__sq"),
+        (Lattice.centsSum(when(col("ts") >= split, v)) * 100).cast("long").as("__sq"),
         sum(when(col("ts") >= split, 1L)).as("__cq"))
       // FLOOR division via pmod (exact in integer arithmetic): Spark's
       // `div` truncates toward zero while the DuckDB twin's `//`
@@ -3660,11 +3666,11 @@ object SparkEntry {
       // means, exact half-integer rank mass
       val ev = graft.core.Tables.ltzTs(t(s, dir, "events"), "ts")
       val split = lit("2024-01-15 00:00:00").cast("timestamp")
-      val dv = col("value").cast(DecimalType(18, 2))
+      val v = col("value")
       val pairs = ev.groupBy("user_id").agg(
-          (sum(when(col("ts") < split, dv)).cast("double") /
+          (Lattice.centsSum(when(col("ts") < split, v)).cast("double") /
             sum(when(col("ts") < split, 1L))).as("x"),
-          (sum(when(col("ts") >= split, dv)).cast("double") /
+          (Lattice.centsSum(when(col("ts") >= split, v)).cast("double") /
             sum(when(col("ts") >= split, 1L))).as("y"))
         .filter(col("x").isNotNull && col("y").isNotNull)
       graft.eda.ShapeTests.rankBiserial(pairs, "x", "y")

@@ -17,7 +17,9 @@ import org.apache.spark.storage.StorageLevel
   * exception, it frees every checkpoint registered with it that its
   * result does not read, and hands the rest to the enclosing scope. The
   * outermost scope leaves what its result reads to the caller, who may
-  * free it with [[release]] once nothing reads the result again.
+  * free it with [[release]] once nothing reads the result again. A
+  * result may not read a lazy checkpoint its own scope made and has not
+  * materialized: [[scoped]] frees the scope and throws instead.
   *
   * Two kinds of checkpoint keep explicit handling: round loops free a
   * superseded state with [[release]] to bound peak memory inside one
@@ -30,12 +32,19 @@ object Checkpoints {
     * run in the scope ([[carry]]) register concurrently. */
   private final class Scope {
     private var held = List.empty[RDD[_]]
-    def add(rdds: Seq[RDD[_]]): Unit = synchronized { held = rdds ++: held }
+    private var madeLazy = List.empty[RDD[_]]
+    def add(rdds: Seq[RDD[_]], eager: Boolean = true): Unit = synchronized {
+      held = rdds ++: held
+      if (!eager) madeLazy = rdds ++: madeLazy
+    }
     def drain(): List[RDD[_]] = synchronized {
       val out = held
       held = Nil
+      madeLazy = Nil
       out
     }
+    /** The lazy checkpoints made here that are still unmaterialized. */
+    def unmaterialized(): List[RDD[_]] = synchronized(madeLazy.filterNot(_.isCheckpointed))
   }
 
   // not inherited: a pooled thread would keep the scope of whichever
@@ -52,6 +61,12 @@ object Checkpoints {
       catch { case e: Throwable => free(scope.drain()); throw e }
       finally current.set(outer)
     val read = reads(out)
+    scope.unmaterialized().find(r => read(r.id)).foreach { r =>
+      free(scope.drain())
+      throw new IllegalStateException(s"Checkpoints.scoped result reads the lazy local " +
+        s"checkpoint $r before it is materialized; materialize it inside the scope " +
+        "that makes it, or its upstream checkpoints outlive every release")
+    }
     val (keep, drop) = scope.drain().partition(r => read(r.id))
     free(drop)
     if (outer != null) outer.add(keep)
@@ -61,13 +76,17 @@ object Checkpoints {
   /** `df` local-checkpointed (materialized now when `eager`) and
     * registered with the enclosing scope. Throws
     * `IllegalStateException` outside [[scoped]], where nothing would
-    * free it. */
+    * free it. A lazy checkpoint must be materialized inside that scope
+    * if the scope's result reads it: until then its lineage reads the
+    * upstream checkpoints, and once it is materialized outside, nothing
+    * reaches them to free them. [[scoped]] throws `IllegalStateException`
+    * naming the checkpoint, after freeing the scope, when it is not. */
   def local(df: DataFrame, eager: Boolean = true): DataFrame = {
     val scope = current.get
     if (scope == null)
       throw new IllegalStateException("Checkpoints.local called outside Checkpoints.scoped")
     val cp = df.localCheckpoint(eager)
-    scope.add(direct(cp))
+    scope.add(direct(cp), eager)
     cp
   }
 

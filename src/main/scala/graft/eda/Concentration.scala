@@ -1,6 +1,6 @@
 package graft.eda
 
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, Lattice}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -95,7 +95,7 @@ object Concentration {
     val g = df.filter(y.isNotNull && y > 0)
       .groupBy(col(groupCol).as("grp")).agg(
         count(lit(1)).as("n"),
-        sum(col(valueCol).cast("decimal(18,2)")).as("__s"),
+        Lattice.centsSum(col(valueCol)).as("__s"),
         sum(y * log(y)).as("__l"))
     val tot = g.agg(sum("n").as("__nTot"), sum("__s").as("__sTot"),
       sum("__l").as("__lTot"))

@@ -1,5 +1,6 @@
 package graft.eda
 
+import graft.core.Lattice
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -74,7 +75,7 @@ object DataAudit {
     val v = col(valueCol).cast("double")
     val ent = df.filter(v.isNotNull && v > 0)
       .groupBy(col(groupCol).as("group"), col(entityCol).as("__e"))
-      .agg(sum(v.cast(DecimalType(18, 2))).cast("double").as("__t"))
+      .agg(Lattice.centsSum(v).cast("double").as("__t"))
     val tot = ent.groupBy("group").agg(sum(col("__t")
       .cast(DecimalType(28, 2))).cast("double").as("__g"))
     ent.join(tot, Seq("group"))
@@ -101,7 +102,7 @@ object DataAudit {
       col("l_discount")) * (lit(1.0) + col("l_tax")), 2)
     val recomputed = lineitem
       .groupBy(col("l_orderkey").as("__k"))
-      .agg(sum(line.cast(DecimalType(18, 2))).cast("double").as("__r"))
+      .agg(Lattice.centsSum(line).cast("double").as("__r"))
     val joined = orders
       .select(col("o_orderkey").as("__k"),
         col("o_totalprice").cast("double").as("__t"))
@@ -173,7 +174,7 @@ object DataAudit {
                 k: Int): DataFrame = {
     def side(cond: org.apache.spark.sql.Column) = df.filter(cond)
       .groupBy(col(entityCol).as("__e"))
-      .agg(sum(col(valueCol).cast(DecimalType(18, 2)))
+      .agg(Lattice.centsSum(col(valueCol))
         .cast("double").as("__t"))
       .orderBy(col("__t").desc, col("__e")).limit(k)
       .select("__e")

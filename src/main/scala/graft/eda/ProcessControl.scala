@@ -1,5 +1,6 @@
 package graft.eda
 
+import graft.core.Lattice
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -32,7 +33,7 @@ object ProcessControl {
     val d = graft.core.Tables.ltzTs(events, tsCol)
       .filter(col(valueCol).isNotNull)
       .groupBy(to_date(col(tsCol)).as("day"))
-      .agg((sum(col(valueCol).cast(DecimalType(18, 2))).cast("double") /
+      .agg((Lattice.centsSum(col(valueCol)).cast("double") /
         count(lit(1))).as("m"))
     val w = Window.orderBy("day")
     val withMr = d.withColumn("__mr",

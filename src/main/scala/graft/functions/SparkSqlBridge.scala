@@ -17,6 +17,11 @@ object GraftExprBridge {
   def toExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** Spark's ANSI overflow error for a decimal `sum`, raised by the
+    * kernel that replaces that sum ([[graft.functions.CentsSum]]). */
+  def decimalSumOverflow(): ArithmeticException =
+    errors.QueryExecutionErrors.overflowInSumOfDecimalError(null, "try_sum")
+
   /** Register an expression-backed SQL function on a LIVE session (the
     * FunctionRegistry is package-private; this bridge is the sanctioned
     * same-package access). For config-time registration use

@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.core.{Checkpoints, Tables}
+import graft.core.{Checkpoints, Lattice, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -14,10 +14,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: both are pure aggregation pyramids — one entity-level
   * groupBy (map-side combinable) followed by constant-size variant
-  * aggregates. Sums ride DECIMAL(18,2) so every engine and every
-  * partition order produces the identical total; the few double
-  * divisions happen on those exact decimals in a fixed expression
-  * shape, making the 6dp-rounded output engine-stable.
+  * aggregates. Sums ride DECIMAL(18,2) (`Lattice.centsSum`: exact
+  * cents in a 128-bit sum) so every engine and every partition order
+  * produces the identical total; the few double divisions happen on
+  * those exact decimals in a fixed expression shape, making the
+  * 6dp-rounded output engine-stable.
   */
 object Experiments {
 
@@ -45,8 +46,8 @@ object Experiments {
     // entity rollup: exact decimal X/Y per unit (one shuffle, combiner)
     val units = e.groupBy(col(entityCol).as("__u"))
       .agg(
-        coalesce(sum(when(pre, dec(col(valueCol)))), lit(0).cast("decimal(18,2)")).as("__x"),
-        coalesce(sum(when(!pre, dec(col(valueCol)))), lit(0).cast("decimal(18,2)")).as("__y"))
+        coalesce(Lattice.centsSum(when(pre, col(valueCol))), lit(0).cast("decimal(18,2)")).as("__x"),
+        coalesce(Lattice.centsSum(when(!pre, col(valueCol))), lit(0).cast("decimal(18,2)")).as("__y"))
       .withColumn("__v", variantOf(col("__u")))
     // pooled θ and global mean-x from one constant-size aggregate
     val g = units.agg(
@@ -216,7 +217,8 @@ object Experiments {
     val x = col(denCol).cast("double")
     val g = units.groupBy(col(armCol).as("arm")).agg(
       count(lit(1)).as("n"),
-      sum(dec(col(numCol))).as("__sy"), sum(dec(col(denCol))).as("__sx"),
+      Lattice.centsSum(col(numCol)).as("__sy"),
+      Lattice.centsSum(col(denCol)).as("__sx"),
       sum(y * y).as("__syy"), sum(x * x).as("__sxx"),
       sum(y * x).as("__syx"))
     val n = col("n").cast("double")
@@ -269,7 +271,7 @@ object Experiments {
         col(covariateCol).cast("double").as("__x"))
     val byX = units.groupBy("__x").agg(
       sum(when(col("__t") === 1, 1L).otherwise(0L)).as("__nt"),
-      sum(when(col("__t") === 1, dec(col("__y")))).as("__syt"),
+      Lattice.centsSum(when(col("__t") === 1, col("__y"))).as("__syt"),
       max(when(col("__t") === 0, col("__y").cast("double"))).as("__cyRep"))
     val wB = Window.orderBy("__x")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, Lattice}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -417,14 +417,15 @@ object Stats {
     * k is read from the data (distinct items); only COMPLETE subjects
     * (all k items present after a (subject, item) sum-collapse) enter,
     * the standard listwise-complete convention. Scores ride
-    * DECIMAL(18,2) so per-subject totals are exact; variances are
+    * DECIMAL(18,2) (`Lattice.centsSum`) so per-subject totals are
+    * exact; variances are
     * double moments on the collapsed frames. Returns one row:
     * (k, n_subjects, sum_item_var, total_var, alpha) 6dp. */
   def cronbachAlpha(df: DataFrame, subjectCol: String, itemCol: String,
                     scoreCol: String): DataFrame = {
     val cell = df.filter(col(scoreCol).isNotNull)
       .groupBy(col(subjectCol).as("subj"), col(itemCol).as("item"))
-      .agg(sum(col(scoreCol).cast("decimal(18,2)")).as("__v"))
+      .agg(Lattice.centsSum(col(scoreCol)).as("__v"))
     val k = cell.select("item").distinct().count()
     require(k >= 2, s"cronbach alpha needs >= 2 items, got $k")
     val complete = cell.groupBy("subj")

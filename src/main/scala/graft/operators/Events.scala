@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Lattice
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -49,7 +50,7 @@ object Events {
       .agg(count(lit(1)).as("n_events"),
         ((unix_micros(max(col(tsCol))) - unix_micros(min(col(tsCol)))) / lit(1000000L))
           .cast("long").as("duration_sec"),
-        sum(col(valueCol).cast(DecimalType(18, 2))).cast("double").as("value_sum"))
+        Lattice.centsSum(col(valueCol)).cast("double").as("value_sum"))
 
   /** Rolling time-window features: for every event, the count and sum of
     * `valueCol` over that entity's trailing `[ts − windowSec, ts]`

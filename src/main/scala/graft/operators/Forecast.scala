@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Checkpoints, Tables}
+import graft.core.{Checkpoints, Lattice, Tables}
 
 /** Time-series diagnostics over an event stream, computed on the
   * DAILY-AGGREGATED series (the reference's monitoring layer reads
@@ -29,7 +29,7 @@ object Forecast {
       .filter(col(valueCol).isNotNull)
       .groupBy(to_date(col(tsCol)).as("day"))
       .agg(count(lit(1)).as("n"),
-        sum(col(valueCol).cast("decimal(18,2)")).as("__t"))
+        Lattice.centsSum(col(valueCol)).as("__t"))
       .select(col("day"), col("n"),
         col("__t").cast("double").as("total"),
         (col("__t").cast("double") / col("n")).as("mean"))
@@ -437,9 +437,9 @@ object Forecast {
     require(maxLag >= 1, "need at least one lag")
     val d = Tables.ltzTs(events, tsCol)
       .groupBy(to_date(col(tsCol)).as("day"))
-      .agg(coalesce(sum(xExpr.cast("decimal(18,2)")), lit(0).cast("decimal(18,2)"))
+      .agg(coalesce(Lattice.centsSum(xExpr), lit(0).cast("decimal(18,2)"))
           .cast("double").as("x"),
-        coalesce(sum(yExpr.cast("decimal(18,2)")), lit(0).cast("decimal(18,2)"))
+        coalesce(Lattice.centsSum(yExpr), lit(0).cast("decimal(18,2)"))
           .cast("double").as("y"))
     val w = Window.orderBy("day")
     val m = d.agg(avg("x").as("__mx"), avg("y").as("__my"),
@@ -1185,7 +1185,7 @@ object Forecast {
     val d = Checkpoints.local(Tables.ltzTs(events, tsCol)
       .filter(col(valueCol).isNotNull)
       .groupBy(col(groupCol).as("__g"), to_date(col(tsCol)).as("__day"))
-      .agg(sum(col(valueCol).cast("decimal(18,2)"))
+      .agg(Lattice.centsSum(col(valueCol))
         .cast("double").as("__y"))
       .withColumn("__i", datediff(col("__day"),
         to_date(lit("1970-01-01"))).cast("double")))
@@ -1374,7 +1374,7 @@ object Forecast {
     val d = Tables.ltzTs(events, tsCol)
       .filter(col(valueCol).isNotNull)
       .groupBy(col(groupCol).as("__g"), to_date(col(tsCol)).as("__day"))
-      .agg(sum(col(valueCol).cast("decimal(18,2)"))
+      .agg(Lattice.centsSum(col(valueCol))
         .cast("double").as("__y"))
     val wt = Window.partitionBy("__g")
     val wo = Window.partitionBy("__g").orderBy("__day")

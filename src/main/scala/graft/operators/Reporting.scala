@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, Lattice}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,13 +20,15 @@ object Reporting {
   /** Weekly metric report: (week, n, total 6dp, pct_change 6dp,
     * ma4 6dp) — percentage change vs the previous week and the
     * trailing 4-week moving average (current included). Sums
-    * accumulate in DECIMAL(18,2) (order-independent addition).
+    * accumulate in DECIMAL(18,2) (order-independent addition), through
+    * `Lattice.centsSum`: exact cents in a 128-bit sum, no per-row
+    * BigDecimal.
     */
   def weeklyReport(events: DataFrame, tsCol: String, valueCol: String): DataFrame = {
     val ev = graft.core.Tables.ltzTs(events, tsCol)
     val weekly = ev.groupBy(date_trunc("week", col(tsCol)).as("week"))
       .agg(count(lit(1)).as("n"),
-        sum(col(valueCol).cast(DecimalType(18, 2))).cast("double").as("__t"))
+        Lattice.centsSum(col(valueCol)).cast("double").as("__t"))
     val w = Window.orderBy("week")
     val ma = Window.orderBy("week").rowsBetween(-3, 0)
     weekly.select(col("week"), col("n"),
@@ -48,7 +50,7 @@ object Reporting {
                   aCut: Double = 0.8, bCut: Double = 0.95): DataFrame = {
     require(aCut > 0 && aCut < bCut && bCut < 1)
     val totals = df.groupBy(col(entityCol).as("entity"))
-      .agg(sum(col(valueCol).cast(DecimalType(18, 2))).cast("double").as("__t"))
+      .agg(Lattice.centsSum(col(valueCol)).cast("double").as("__t"))
     val g = totals.agg(sum("__t")).head()
     if (g.isNullAt(0))
       return df.sparkSession.range(0).select(lit("").as("entity"),
@@ -96,7 +98,7 @@ object Reporting {
       .filter(col(typeCol) === conversionType)
       .groupBy(coalesce(col("__attr"), lit("(none)")).as("touch_type"))
       .agg(count(lit(1)).as("n_conversions"),
-        round(sum(col("value").cast(DecimalType(18, 2))).cast("double"), 6)
+        round(Lattice.centsSum(col("value")).cast("double"), 6)
           .as("value_sum"))
   }
 
@@ -187,7 +189,7 @@ object Reporting {
         ((lit(asOf.getTime * 1000L) - max(unix_micros(col(tsCol)))) /
           lit(86400.0 * 1e6)).as("recency_days"),
         count(lit(1)).as("frequency"),
-        sum(col(valueCol).cast(DecimalType(18, 2))).cast("double").as("monetary")))
+        Lattice.centsSum(col(valueCol)).cast("double").as("monetary")))
     val ps = (1 until bins).map(_.toDouble / bins)
     // ONE percentile aggregate for all three edge sets (three separate
     // driver actions here were the round-10 ladder's only unexplained
@@ -328,7 +330,7 @@ object Reporting {
     val spend = ev
       .groupBy(col(userCol).as("__u"),
         (unix_micros(col(tsCol)) <= mid).as("__p1"))
-      .agg(sum(col(valueCol).cast("decimal(18,2)")).cast("double")
+      .agg(Lattice.centsSum(col(valueCol)).cast("double")
         .as("__s"))
     val both = Checkpoints.local(spend.groupBy("__u").agg(count(lit(1)).as("__np"),
         sum(when(col("__p1"), col("__s"))).as("s1"),
@@ -374,8 +376,8 @@ object Reporting {
     val pm = Checkpoints.local(df.filter(col(revenueCol).isNotNull && col(qtyCol).isNotNull)
       .groupBy(trunc(col(dateCol), "month").as("month"),
         col(itemCol).as("__it"))
-      .agg(sum(col(revenueCol).cast("decimal(18,2)")).as("__rev"),
-        sum(col(qtyCol).cast("decimal(18,2)")).as("__qty"))
+      .agg(Lattice.centsSum(col(revenueCol)).as("__rev"),
+        Lattice.centsSum(col(qtyCol)).as("__qty"))
       .filter(col("__qty") > 0)
       .select(col("month"), col("__it"),
         (col("__rev").cast("double") / col("__qty").cast("double"))
@@ -550,7 +552,7 @@ object Reporting {
     val ev = graft.core.Tables.ltzTs(events, tsCol)
     val daily = ev.filter(col(valueCol).isNotNull)
       .groupBy(to_date(col(tsCol)).as("__day"))
-      .agg(sum(col(valueCol).cast(DecimalType(18, 2))).as("__t"))
+      .agg(Lattice.centsSum(col(valueCol)).as("__t"))
       .withColumn("__we", dayofweek(col("__day")).isin(1, 7))
     val g = daily.agg(
       sum(col("__we").cast("long")).as("n_weekend"),
@@ -677,7 +679,7 @@ object Reporting {
     * sum as double). */
   def marginals(df: DataFrame, dim1: String, dim2: String,
                 valCol: String): DataFrame = {
-    val v = sum(col(valCol).cast(DecimalType(18, 2))).cast("double")
+    val v = Lattice.centsSum(col(valCol)).cast("double")
     df.groupingSets(
         Seq(Seq(col(dim1)), Seq(col(dim2)), Seq.empty[Column]),
         col(dim1), col(dim2))

@@ -1,8 +1,8 @@
 package graft.stores
 
+import graft.core.Lattice
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Incremental aggregate maintenance — the materialized-rollup pattern
   * for append-only data at 100 TB: keep a small partial-aggregate STATE
@@ -10,9 +10,10 @@ import org.apache.spark.sql.types.DecimalType
   * history. Works because count/sum/min/max are commutative monoids;
   * avg is derived at read time (sum/count), never stored.
   *
-  * Sums accumulate in DECIMAL(18,2) — distributed addition is then
-  * order-independent, so base+delta merging reproduces the full-rescan
-  * answer bit-for-bit (the Encoders.targetEncode determinism trick).
+  * Sums accumulate in DECIMAL(18,2) (`Lattice.centsSum`: exact cents
+  * in a 128-bit sum) — distributed addition is then order-independent,
+  * so base+delta merging reproduces the full-rescan answer bit-for-bit
+  * (the Encoders.targetEncode determinism trick).
   */
 object IncrementalAgg {
 
@@ -21,7 +22,7 @@ object IncrementalAgg {
   def aggState(df: DataFrame, keys: Seq[String], valueCol: String): DataFrame =
     df.groupBy(keys.map(col): _*)
       .agg(count(col(valueCol)).as("n"),
-        sum(col(valueCol).cast(DecimalType(18, 2))).as("sum_v"),
+        Lattice.centsSum(col(valueCol)).as("sum_v"),
         min(col(valueCol)).as("min_v"),
         max(col(valueCol)).as("max_v"))
 

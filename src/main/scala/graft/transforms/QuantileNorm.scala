@@ -1,5 +1,6 @@
 package graft.transforms
 
+import graft.core.Lattice
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,7 +18,8 @@ import org.apache.spark.sql.functions._
   * mean of the per-group centile means. No pooled global sort — every
   * window is per-group (the natural partitioning), and the target
   * frame is B × #groups, metadata-sized. Values ride DECIMAL(18,2)
-  * sums so the per-centile means are partition-order exact.
+  * sums (`Lattice.centsSum`) so the per-centile means are
+  * partition-order exact.
   */
 object QuantileNorm {
 
@@ -40,7 +42,7 @@ object QuantileNorm {
       (floor((col("__rn") - 1) * nBins / col("__n")) + 1).cast("int"))
     val perGroup = binned.groupBy("grp", "centile").agg(
       count(lit(1)).as("n"),
-      (sum(col("v").cast("decimal(18,2)")).cast("double") /
+      (Lattice.centsSum(col("v")).cast("double") /
         count(lit(1))).as("__mean"))
     val target = perGroup.groupBy("centile")
       .agg(avg("__mean").as("__qn"))

@@ -67,16 +67,33 @@ class CheckpointScopeSpec extends SparkSpec {
     assert(viaRdd.count() == 6)
     Checkpoints.release(viaRdd)
     assert(persisted() -- before == Set.empty)
-    // a lazy checkpoint reads its input until it is materialized
-    val n = Checkpoints.scoped {
-      val viaLazy = Checkpoints.scoped {
-        val b = Checkpoints.local(small(7))
-        Checkpoints.local(b.filter(col("id") > 2), eager = false)
-      }
-      assert((persisted() -- before).size == 2)
-      viaLazy.count()
+    // a lazy checkpoint materialized inside its scope no longer reads
+    // its input, so the scope frees the input
+    val viaLazy = Checkpoints.scoped {
+      val b = Checkpoints.local(small(7))
+      val cp = Checkpoints.local(b.filter(col("id") > 2), eager = false)
+      cp.count()
+      cp
     }
-    assert(n == 4)
+    assert((persisted() -- before).size == 1)
+    assert(viaLazy.count() == 4)
+    Checkpoints.release(viaLazy)
+    assert(persisted() -- before == Set.empty)
+  }
+
+  test("a result reading an unmaterialized lazy checkpoint throws and frees the scope") {
+    val before = persisted()
+    var lazyId = -1
+    val e = intercept[IllegalStateException] {
+      Checkpoints.scoped {
+        val b = Checkpoints.local(small(7))
+        val cp = Checkpoints.local(b.filter(col("id") > 2), eager = false)
+        lazyId = idsIn(cp).head
+        cp
+      }
+    }
+    assert(e.getMessage.contains(s"[$lazyId]"), e.getMessage)
+    // without the check, `b` stayed persisted after count() and release
     assert(persisted() -- before == Set.empty)
   }
 
