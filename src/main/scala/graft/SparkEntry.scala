@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{Checkpoints, Lattice, Tables}
+import graft.core.{Checkpoints, Lattice, Tables, TopK}
 import graft.dedup.Dedup
 import graft.eda.Eda
 import graft.ml.Metrics
@@ -141,14 +141,10 @@ object SparkEntry {
       Views.trainingView(base, roles, "c_custkey")
         .select("c_custkey", "c_name", "c_acctbal", "sample_weight", "validation")
     }),
-    "q14_topk_per_group" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_orderpriority")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      t(s, dir, "orders").withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
-        .select("o_orderpriority", "o_orderkey", "o_totalprice", "rank")
-    }),
+    "q14_topk_per_group" -> ((s, dir) =>
+      TopK(t(s, dir, "orders"), Seq(col("o_orderpriority")),
+          Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3, Some("rank"))
+        .select("o_orderpriority", "o_orderkey", "o_totalprice", "rank")),
     "q15_temporal_split" -> ((s, dir) => {
       val (train, _) = Transforms.temporalSplit(t(s, dir, "events"), "ts", "2024-03-01 00:00:00")
       train.select("event_id", "event_type", "value")
@@ -3684,12 +3680,8 @@ object SparkEntry {
       // which acquisition channel churns fastest? KM median survival
       // per first-event-type cohort
       val ev = graft.core.Tables.ltzTs(t(s, dir, "events"), "ts")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id")
-        .orderBy(unix_micros(col("ts")), col("event_id"))
-      val firstType = ev
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
+      val firstType = TopK(ev, Seq(col("user_id")),
+          Seq(unix_micros(col("ts")), col("event_id")), 1)
         .select(col("user_id"), col("event_type").as("channel"))
       val life = ev.groupBy(col("user_id")).agg(
           min(to_date(col("ts"))).as("__f"),

@@ -1,8 +1,7 @@
 package graft.api
 
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, TopK}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Result-caching wrapper around an [[Endpoint]] (reference:
@@ -124,9 +123,7 @@ class InferenceCache(val endpoint: Endpoint,
     val provenUnique = catalog.paramStore.get(uniqueKey)
       .exists(v => v.startsWith("true:") && v.stripPrefix("true:") == cacheStamp())
     if (provenUnique) cache
-    else cache.withColumn("__rn",
-        row_number().over(Window.partitionBy(key).orderBy(col(TsCol).desc)))
-      .filter(col("__rn") === 1).drop("__rn")
+    else TopK(cache, Seq(key), Seq(col(TsCol).desc), 1)
   }
 
   /** Cached inference (inference_cache.py:109-162). `captureName` /

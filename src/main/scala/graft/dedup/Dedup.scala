@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.core.Checkpoints
+import graft.proximity.Proximity.toD
 import graft.text.Text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -292,7 +293,6 @@ object Dedup {
     * the boundary deterministic across engines. */
   def cosinePairs(df: DataFrame, idCol: String, vecCol: String,
                   threshold: Double): DataFrame = {
-    val toD: Column => Column = c => transform(c, x => x.cast("double"))
     val l = df.select(col(idCol).as("id_a"), toD(col(vecCol)).as("__va"))
     val r = df.select(col(idCol).as("id_b"), toD(col(vecCol)).as("__vb"))
     l.crossJoin(r).filter(col("id_a") < col("id_b"))
@@ -311,7 +311,6 @@ object Dedup {
   def cosinePairsLsh(df: DataFrame, idCol: String, vecCol: String,
                      threshold: Double, dim: Int,
                      nPlanes: Int = 8, nTables: Int = 4): DataFrame = Checkpoints.scoped {
-    val toD: Column => Column = c => transform(c, x => x.cast("double"))
     // stage the signatures once (narrow cached projection — HOF lambdas
     // are interpreted and CollapseProject would inline them per branch)
     val vecs = df.select(col(idCol).as("id"), toD(col(vecCol)).as("__v"))

@@ -1,6 +1,6 @@
 package graft.eda
 
-import graft.core.Lattice
+import graft.core.{Lattice, TopK}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -154,12 +154,9 @@ object DataAudit {
     * row_number, k bounded. Returns (group, id, sample_rank). */
   def deterministicSample(df: DataFrame, groupCol: String,
                           idCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val h = md5(col("id").cast("string"))
-    val w = Window.partitionBy(col("group")).orderBy(h, col("id"))
-    df.select(col(groupCol).as("group"), col(idCol).as("id"))
-      .withColumn("sample_rank", row_number().over(w))
-      .filter(col("sample_rank") <= k)
+    TopK(df.select(col(groupCol).as("group"), col(idCol).as("id")),
+        Seq(col("group")), Seq(h, col("id")), k, Some("sample_rank"))
       .orderBy("group", "sample_rank")
   }
 

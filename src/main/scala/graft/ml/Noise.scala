@@ -1,7 +1,7 @@
 package graft.ml
 
+import graft.core.TopK
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Label-noise detection — the reference's cleanlab/noise-model family
@@ -26,9 +26,7 @@ object Noise {
       .groupBy(col("id"), col("__nl"))
       .agg(count(lit(1)).as("__votes"))
     // majority label per id, ties broken by label value for determinism
-    val w = Window.partitionBy("id").orderBy(desc("__votes"), asc("__nl"))
-    val majority = votes.withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") === 1)
+    val majority = TopK(votes, Seq(col("id")), Seq(desc("__votes"), asc("__nl")), 1)
       .select(col("id"), col("__nl").as("majority_label"), col("__votes"))
     val totals = neighbors.groupBy("id").agg(count(lit(1)).as("__k"))
     rows.select(col(idCol).as("id"), col(labelCol).as("label"))

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.core.TopK
 import graft.stores.DriverParquet
 import org.apache.spark.ml.regression.RandomForestRegressionModel
 import org.apache.spark.ml.util.GraftModelIO
@@ -467,15 +468,8 @@ object UQ {
   private[ml] def v2Stats(neighbors: DataFrame, targets: DataFrame,
                           idCol: String, targetCol: String, k: Int,
                           roundTo: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dedup = neighbors
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy("id", "neighbor_id").orderBy(asc("distance"))))
-      .filter(col("__rn") === 1).drop("__rn")
-    val topk = dedup
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy("id").orderBy(asc("distance"), asc("neighbor_id"))))
-      .filter(col("__rk") <= k).drop("__rk")
+    val dedup = TopK(neighbors, Seq(col("id"), col("neighbor_id")), Seq(asc("distance")), 1)
+    val topk = TopK(dedup, Seq(col("id")), Seq(asc("distance"), asc("neighbor_id")), k)
     val nt = targets.select(col(idCol).as("neighbor_id"),
       col(targetCol).cast("double").as("__nt"))
     val raw = topk.join(nt, Seq("neighbor_id"))

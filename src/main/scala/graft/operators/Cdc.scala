@@ -1,7 +1,7 @@
 package graft.operators
 
+import graft.core.TopK
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** CDC merge-apply — the lakehouse `MERGE INTO` kernel: fold a
@@ -39,11 +39,7 @@ object Cdc {
       s"changes frame is missing base columns: ${missing.mkString(", ")}")
     val opRank = when(col(opCol) === "I", 3)
       .when(col(opCol) === "U", 2).otherwise(1)
-    val w = Window.partitionBy(col(keyCol))
-      .orderBy(col(seqCol).desc, opRank.desc)
-    val latest = changes
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
+    val latest = TopK(changes, Seq(col(keyCol)), Seq(col(seqCol).desc, opRank.desc), 1)
     val touched = latest.select(col(keyCol))
     val upserts = latest.filter(col(opCol) =!= "D")
       .select(baseCols.map(col): _*)

@@ -1,7 +1,7 @@
 package graft.operators
 
+import graft.core.TopK
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deterministic weighted sampling — the reproducible form of
@@ -32,10 +32,7 @@ object Sampling {
                              weightCol: String, k: Int): DataFrame = {
     require(k >= 1)
     val key = pow(hashDraw(col(idCol)), lit(1.0) / col(weightCol).cast("double"))
-    val w = Window.partitionBy(groupCol).orderBy(col("sample_key").desc, col(idCol).asc)
-    df.withColumn("sample_key", key)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
+    TopK(df.withColumn("sample_key", key), Seq(col(groupCol)),
+      Seq(col("sample_key").desc, col(idCol).asc), k)
   }
 }

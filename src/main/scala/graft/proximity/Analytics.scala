@@ -21,9 +21,7 @@ object Analytics {
     */
   def residualFeatures(neighbors: DataFrame, rows: DataFrame, idCol: String,
                        targetCol: String, predCol: String, k: Int): DataFrame = {
-    val w = Window.partitionBy("id").orderBy(asc("distance"), asc("neighbor_id"))
-    val capped = neighbors.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k).drop("__rn")
+    val capped = Proximity.keepBest(neighbors, asc("distance"), k)
     val nTarget = rows.select(col(idCol).as("neighbor_id"),
       col(targetCol).cast("double").as("__nt"))
     val aggs = capped.join(nTarget, Seq("neighbor_id"))

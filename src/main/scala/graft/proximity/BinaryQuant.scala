@@ -1,8 +1,7 @@
 package graft.proximity
 
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, TopK}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Binary quantization for embedding search: per-dimension sign bits
@@ -75,13 +74,10 @@ object BinaryQuant {
     val ham = (0 until n).map(j =>
       bit_count(col(s"q$j").bitwiseXOR(col(s"w$j"))))
       .reduce(_ + _)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("hamming").asc, col("cand_id").asc)
-    Checkpoints.local(packed.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col(idCol))
-      .select(col("query_id"), col(idCol).as("cand_id"),
-        ham.cast("int").as("hamming"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k))
+    Checkpoints.local(TopK(packed.crossJoin(broadcast(q))
+        .filter(col("query_id") =!= col(idCol))
+        .select(col("query_id"), col(idCol).as("cand_id"),
+          ham.cast("int").as("hamming")),
+      Seq(col("query_id")), Seq(col("hamming").asc, col("cand_id").asc), k, Some("rank")))
   }
 }

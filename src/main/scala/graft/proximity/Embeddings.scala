@@ -1,6 +1,6 @@
 package graft.proximity
 
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, TopK}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -144,10 +144,8 @@ object Embeddings {
     * (n_points, n_used, id_mle 6dp). */
   def twoNnIntrinsicDim(df: DataFrame, idCol: String, vecCol: String,
                         maxSample: Int = 2000): DataFrame = Checkpoints.scoped {
-    import org.apache.spark.sql.expressions.Window
     val pts = Checkpoints.local(df.filter(col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("v")))
+      .select(col(idCol).cast("long").as("id"), Proximity.toD(col(vecCol)).as("v")))
     val n = pts.count()
     require(n <= maxSample,
       s"twoNnIntrinsicDim is an exhaustive harness — pass a sample " +
@@ -157,11 +155,9 @@ object Embeddings {
     val d2 = aggregate(
       zip_with(col("va"), col("vb"), (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, x) => acc + x)
-    val near = a.join(b, col("ia") =!= col("ib"))
-      .select(col("ia"), col("ib"), d2.as("__d2"))
-      .withColumn("__rk", row_number().over(
-        Window.partitionBy("ia").orderBy(col("__d2"), col("ib"))))
-      .filter(col("__rk") <= 2)
+    val near = TopK(a.join(b, col("ia") =!= col("ib"))
+        .select(col("ia"), col("ib"), d2.as("__d2")),
+      Seq(col("ia")), Seq(col("__d2"), col("ib")), 2, Some("__rk"))
     val mu = near.groupBy("ia")
       .agg(min(when(col("__rk") === 1, col("__d2"))).as("__d1"),
         min(when(col("__rk") === 2, col("__d2"))).as("__d2b"))

@@ -1,5 +1,6 @@
 package graft.proximity
 
+import graft.core.TopK
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,8 +38,7 @@ object Hybrid {
         round(
           coalesce(lit(1.0) / (lit(k0) + col("__rd")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(k0) + col("__rs")), lit(0.0)), 6).as("rrf_score"))
-    val w = Window.partitionBy(queryCol).orderBy(desc("rrf_score"), asc(docCol))
-    fused.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    TopK(fused, Seq(col(queryCol)), Seq(desc("rrf_score"), asc(docCol)), k, Some("rank"))
   }
 
   /** End-to-end hybrid search over a corpus with aligned text and

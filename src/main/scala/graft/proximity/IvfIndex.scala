@@ -1,6 +1,7 @@
 package graft.proximity
 
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, TopK}
+import graft.proximity.Proximity.toD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,9 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object IvfIndex {
 
-  private def toD(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    transform(c, x => x.cast("double"))
-
   /** Fit the quantizer ([[Proximity.fitQuantizer]] — bounded
     * hash-ordered sample) and materialize the index at `path`. */
   def build(refs: DataFrame, idCol: String, vecCol: String, path: String,
@@ -49,14 +47,11 @@ object IvfIndex {
     * one broadcast join + one partitioned append, no KMeans pass. */
   def append(spark: SparkSession, path: String, refs: DataFrame,
              idCol: String, vecCol: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
     val cents = broadcast(spark.read.parquet(s"$path/centroids"))
     val r = refs.select(col(idCol).as("id"), toD(col(vecCol)).as("vec"))
-    r.crossJoin(cents)
-      .withColumn("__d", Proximity.euclidean(col("vec"), col("centroid")))
-      .withColumn("__rank", row_number().over(
-        Window.partitionBy("id").orderBy(asc("__d"), asc("cell"))))
-      .filter(col("__rank") === 1)
+    TopK(r.crossJoin(cents)
+        .withColumn("__d", Proximity.euclidean(col("vec"), col("centroid"))),
+      Seq(col("id")), Seq(asc("__d"), asc("cell")), 1)
       .select(col("id"), col("vec"), col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$path/vectors")
   }
@@ -69,8 +64,6 @@ object IvfIndex {
   def query(spark: SparkSession, path: String, queries: DataFrame,
             idCol: String, vecCol: String, k: Int,
             nProbe: Int = 4): DataFrame = Checkpoints.scoped {
-    import org.apache.spark.sql.expressions.Window
-    val cents = broadcast(spark.read.parquet(s"$path/centroids"))
     val q = queries.select(col(idCol).as("id"), toD(col(vecCol)).as("__qv"))
     // materialize the probe assignment ONCE: the driver-side probed-cell
     // collect and the final join both consume it, and without the
@@ -78,25 +71,17 @@ object IvfIndex {
     // (the most expensive pre-join stage) would execute twice — and a
     // nondeterministic queries frame could drift between the two runs,
     // probing cells outside the collected IN-filter snapshot
-    val qCells = Checkpoints.local(q.crossJoin(cents)
-      .withColumn("__sim", Proximity.cosine(col("__qv"), col("centroid")))
-      .withColumn("__rank", row_number().over(
-        Window.partitionBy("id").orderBy(desc("__sim"), asc("cell"))))
-      .filter(col("__rank") <= nProbe)
-      .select(col("id"), col("__qv"), col("cell")))
+    val qCells = Checkpoints.local(Proximity.probeCells(q,
+      spark.read.parquet(s"$path/centroids"), nProbe))
     val probed = qCells.select("cell").distinct()
       .collect().map(_.getInt(0)).sorted
     val vecs = spark.read.parquet(s"$path/vectors")
       .filter(col("cell").isin(probed.toIndexedSeq: _*))
       .select(col("id").as("neighbor_id"), col("vec"), col("cell"))
-    val w = Window.partitionBy(col("id"))
-      .orderBy(desc("similarity"), asc("neighbor_id"))
-    qCells.join(vecs, Seq("cell"))
+    Proximity.keepBest(qCells.join(vecs, Seq("cell"))
       .filter(col("id") =!= col("neighbor_id"))
       .select(col("id"), col("neighbor_id"),
-        Proximity.cosine(col("__qv"), col("vec")).as("similarity"))
-      .withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .drop("__rank")
+        Proximity.cosine(col("__qv"), col("vec")).as("similarity")),
+      desc("similarity"), k)
   }
 }

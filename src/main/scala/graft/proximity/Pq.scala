@@ -5,7 +5,6 @@ import org.apache.spark.sql.GraftExprBridge
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
@@ -36,12 +35,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * precedent).
   */
 object Pq {
+  import Proximity.{keepBest, toD}
 
   /** [m][k][d/m] centroid table — plan-constant metadata (8×16×8
     * doubles = 8 KB at the defaults), shipped inside the expressions. */
   type Codebooks = IndexedSeq[IndexedSeq[IndexedSeq[Double]]]
-
-  private def toD(c: Column): Column = transform(c, x => x.cast("double"))
 
   /** L2-unit-normalize an array<double> column (zero vectors pass
     * through unscaled rather than dividing by zero).
@@ -194,16 +192,11 @@ object Pq {
       .select(col("id").as("neighbor_id"), col("pq_code"))
     val q = queries.select(col(idCol).as("id"),
       unitize(toD(col(vecCol))).as("__qv"))
-    val w = Window.partitionBy(col("id"))
-      .orderBy(desc("pq_similarity"), asc("neighbor_id"))
-    q.crossJoin(codes)
+    keepBest(q.crossJoin(codes)
       .filter(col("id") =!= col("neighbor_id"))
       .select(col("id"), col("neighbor_id"),
         round(adcCosineRaw(col("__qv"), col("pq_code"), books), 6)
-          .as("pq_similarity"))
-      .withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .drop("__rank")
+          .as("pq_similarity")), desc("pq_similarity"), k)
   }
 
   /** Query-size-adaptive ADC top-k — the [[Proximity.knnJoinAdaptive]]
@@ -221,17 +214,14 @@ object Pq {
                       bruteMaxQueries: Long = 65536,
                       queryCountHint: Option[Long] = None,
                       nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    val n = queryCountHint.getOrElse(queries.count())
-    val brute = n <= bruteMaxQueries
-    graft.core.Routing.record("pq-adc", if (brute) "flat" else "ivf", n)
-    if (brute) adcTopK(queries, refs, idCol, vecCol, k, books)
-    else {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"adcTopKAdaptive: $n query rows > bruteMaxQueries=$bruteMaxQueries " +
-          s"— routing to IVF-pruned ADC (nCells=$nCells, nProbe=$nProbe); " +
-          "pass bruteMaxQueries=Long.MaxValue to pin the flat scan")
-      ivfPqTopK(queries, refs, idCol, vecCol, k, books, nCells, nProbe)
+    val flat = Proximity.routeBySize("pq-adc", "flat", "ivf", queries,
+        bruteMaxQueries, queryCountHint) { n =>
+      s"adcTopKAdaptive: $n query rows > bruteMaxQueries=$bruteMaxQueries " +
+        s"— routing to IVF-pruned ADC (nCells=$nCells, nProbe=$nProbe); " +
+        "pass bruteMaxQueries=Long.MaxValue to pin the flat scan"
     }
+    if (flat) adcTopK(queries, refs, idCol, vecCol, k, books)
+    else ivfPqTopK(queries, refs, idCol, vecCol, k, books, nCells, nProbe)
   }
 
   /** ADC shortlist + exact re-rank (the FAISS "refine" stage): the
@@ -253,16 +243,11 @@ object Pq {
     val cand = adcTopKAdaptive(queries, refs, idCol, vecCol, shortlist, books,
         bruteMaxQueries, queryCountHint)
       .select(col("id"), col("neighbor_id"))
-    val q = queries.select(col(idCol).as("id"), toD(col(vecCol)).as("__qv"))
-    val r = refs.select(col(idCol).as("neighbor_id"), toD(col(vecCol)).as("__rv"))
-    val w = Window.partitionBy(col("id"))
-      .orderBy(desc("similarity"), asc("neighbor_id"))
-    cand.join(q, "id").join(r, "neighbor_id")
+    val (q, r) = Proximity.sides(queries, refs, idCol, toD(col(vecCol)))
+    keepBest(cand.join(q, "id").join(r, "neighbor_id")
       .select(col("id"), col("neighbor_id"),
-        round(Proximity.cosine(col("__qv"), col("__rv")), 6).as("similarity"))
-      .withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .drop("__rank")
+        round(Proximity.cosine(col("__qv"), col("__rv")), 6).as("similarity")),
+      desc("similarity"), k)
   }
 
   /** IVF + PQ: coarse cells prune which codes a query scores (the
@@ -282,22 +267,11 @@ object Pq {
         encodeCol(col("vec"), books).as("pq_code"), col("__cell"))
     val q = queries.select(col(idCol).cast("long").as("id"),
       unitize(toD(col(vecCol))).as("__qv"))
-    val qCells = q.crossJoin(broadcast(cents))
-      .withColumn("__sim", Proximity.cosine(col("__qv"), col("__centroid")))
-      .withColumn("__rank", row_number().over(
-        Window.partitionBy("id").orderBy(desc("__sim"), asc("__cell"))))
-      .filter(col("__rank") <= nProbe)
-      .select(col("id"), col("__qv"), col("__cell"))
-    val w = Window.partitionBy(col("id"))
-      .orderBy(desc("pq_similarity"), asc("neighbor_id"))
-    qCells.join(rCells, Seq("__cell"))
+    keepBest(Proximity.probeCells(q, cents, nProbe).join(rCells, Seq("__cell"))
       .filter(col("id") =!= col("neighbor_id"))
       .select(col("id"), col("neighbor_id"),
         round(adcCosineRaw(col("__qv"), col("pq_code"), books), 6)
-          .as("pq_similarity"))
-      .withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .drop("__rank")
+          .as("pq_similarity")), desc("pq_similarity"), k)
   }
 }
 

@@ -1,7 +1,7 @@
 package graft.proximity
 
+import graft.core.TopK
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Proximity / KNN operator pack.
@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * as Spark joins so they distribute:
   *
   *  - exact top-k: broadcast the (small) query side, crossJoin against the
-  *    reference side, window rank per query id. The reference side is never
+  *    reference side, keep each query id's k best with [[graft.core.TopK]]
+  *    (distance, then neighbor id, as tie-break). The reference side is never
   *    collected — scales to arbitrarily large reference sets as long as the
   *    query batch is broadcast-able (mirrors the reference's 1024-row query
   *    chunking, fingerprint_proximity.py:32-45).
@@ -25,6 +26,44 @@ import org.apache.spark.sql.functions._
   * (proximity.py:201-271).
   */
 object Proximity {
+
+  /** Every element of a numeric-array column as a double. */
+  private[graft] def toD(vec: Column): Column = transform(vec, x => x.cast("double"))
+
+  /** The reference's near-zero clamp: a distance below 1e-6 reads 0. */
+  private def clamp(d: Column): Column = when(d < 1e-6, 0.0).otherwise(d)
+
+  /** The query side as (id, __qv) and the reference side as
+    * (neighbor_id, __rv), both projecting `vec`. */
+  private[proximity] def sides(queries: DataFrame, refs: DataFrame, idCol: String,
+                               vec: Column): (DataFrame, DataFrame) =
+    (queries.select(col(idCol).as("id"), vec.as("__qv")),
+      refs.select(col(idCol).as("neighbor_id"), vec.as("__rv")))
+
+  /** Every (query, reference) pair but self-pairs, scored: the query side
+    * is broadcast and the reference side streamed. */
+  private def allPairs(q: DataFrame, r: DataFrame, score: Column): DataFrame =
+    r.crossJoin(broadcast(q))
+      .filter(col("id") =!= col("neighbor_id"))
+      .select(col("id"), col("neighbor_id"), score)
+
+  /** Each query id's `k` best candidates by `score`, ties to the lower
+    * neighbor id. */
+  private[proximity] def keepBest(pairs: DataFrame, score: Column, k: Int): DataFrame =
+    TopK(pairs, Seq(col("id")), Seq(score, asc("neighbor_id")), k)
+
+  /** The `nProbe` cells whose centroids are most cosine-similar to each
+    * (id, __qv) query, ties to the lower cell id, as (id, __qv, cell).
+    * `centroids` is the small (cell id, centroid) frame, in that column
+    * order; it is broadcast, and the cell column keeps its name. */
+  private[proximity] def probeCells(queries: DataFrame, centroids: DataFrame,
+                                    nProbe: Int): DataFrame = {
+    val Array(cell, centroid) = centroids.columns
+    TopK(queries.crossJoin(broadcast(centroids))
+        .withColumn("__sim", cosine(col("__qv"), col(centroid))),
+      Seq(col("id")), Seq(desc("__sim"), asc(cell)), nProbe)
+      .select(col("id"), col("__qv"), col(cell))
+  }
 
   /** Cosine similarity between two double-array columns. Computed with
     * codegen'd higher-order functions (zip_with/aggregate) — no UDF.
@@ -60,31 +99,18 @@ object Proximity {
     */
   def knnJoin(queries: DataFrame, refs: DataFrame, idCol: String, vecCol: String,
               k: Int, distance: (Column, Column) => Column): DataFrame = {
-    val q = queries.select(col(idCol).as("id"), col(vecCol).as("__qv"))
-    val r = refs.select(col(idCol).as("neighbor_id"), col(vecCol).as("__rv"))
+    val (q, r) = sides(queries, refs, idCol, col(vecCol))
     val d = distance(col("__qv"), col("__rv"))
-    val pairs = r.crossJoin(broadcast(q))
-      .filter(col("id") =!= col("neighbor_id"))
-      .select(col("id"), col("neighbor_id"),
-        when(d < 1e-6, 0.0).otherwise(d).as("distance"))
-    val w = Window.partitionBy(col("id")).orderBy(asc("distance"), asc("neighbor_id"))
-    pairs.withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .drop("__rank")
+    keepBest(allPairs(q, r, clamp(d).as("distance")), asc("distance"), k)
   }
 
   /** Radius variant: all neighbors within `radius`
     * (reference: fingerprint_proximity.py:142-160). */
   def radiusJoin(queries: DataFrame, refs: DataFrame, idCol: String, vecCol: String,
                  radius: Double, distance: (Column, Column) => Column): DataFrame = {
-    val q = queries.select(col(idCol).as("id"), col(vecCol).as("__qv"))
-    val r = refs.select(col(idCol).as("neighbor_id"), col(vecCol).as("__rv"))
+    val (q, r) = sides(queries, refs, idCol, col(vecCol))
     val d = distance(col("__qv"), col("__rv"))
-    r.crossJoin(broadcast(q))
-      .filter(col("id") =!= col("neighbor_id"))
-      .select(col("id"), col("neighbor_id"),
-        when(d < 1e-6, 0.0).otherwise(d).as("distance"))
-      .filter(col("distance") <= radius)
+    allPairs(q, r, clamp(d).as("distance")).filter(col("distance") <= radius)
   }
 
   /** Brute-force cosine top-k similarity search over an embedding column —
@@ -93,17 +119,9 @@ object Proximity {
     */
   def cosineTopK(queries: DataFrame, refs: DataFrame, idCol: String, vecCol: String,
                  k: Int): DataFrame = {
-    val toD: Column => Column = c => transform(c, x => x.cast("double"))
-    val q = queries.select(col(idCol).as("id"), toD(col(vecCol)).as("__qv"))
-    val r = refs.select(col(idCol).as("neighbor_id"), toD(col(vecCol)).as("__rv"))
+    val (q, r) = sides(queries, refs, idCol, toD(col(vecCol)))
     val sim = cosine(col("__qv"), col("__rv"))
-    val pairs = r.crossJoin(broadcast(q))
-      .filter(col("id") =!= col("neighbor_id"))
-      .select(col("id"), col("neighbor_id"), sim.as("similarity"))
-    val w = Window.partitionBy(col("id")).orderBy(desc("similarity"), asc("neighbor_id"))
-    pairs.withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .drop("__rank")
+    keepBest(allPairs(q, r, sim.as("similarity")), desc("similarity"), k)
   }
 
   /** Scaled-Euclidean feature-space KNN — the reference's
@@ -181,31 +199,17 @@ object Proximity {
   def cosineTopKIvf(queries: DataFrame, refs: DataFrame, idCol: String, vecCol: String,
                     k: Int, nCells: Int = 16, nProbe: Int = 4,
                     seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.feature.VectorAssembler
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-    val toD: Column => Column = c => transform(c, x => x.cast("double"))
-    val r = refs.select(col(idCol).as("neighbor_id"), toD(col(vecCol)).as("__rv"))
-    val q = queries.select(col(idCol).as("id"), toD(col(vecCol)).as("__qv"))
+    import org.apache.spark.ml.functions.array_to_vector
+    val (q, r) = sides(queries, refs, idCol, toD(col(vecCol)))
     val (km, cents) = fitQuantizer(
       r.select(col("neighbor_id").as("id"), col("__rv").as("vec")), nCells, seed)
-    val centDf = broadcast(cents)
     // assign refs to their cell; queries fan out to their nProbe cells
     val rCells = km.transform(r.withColumn("__vec", array_to_vector(col("__rv"))))
       .select(col("neighbor_id"), col("__rv"), col("__cell"))
-    val qCells = q.crossJoin(centDf)
-      .withColumn("__sim", cosine(col("__qv"), col("__centroid")))
-      .withColumn("__rank", row_number().over(
-        Window.partitionBy("id").orderBy(desc("__sim"), asc("__cell"))))
-      .filter(col("__rank") <= nProbe)
-      .select(col("id"), col("__qv"), col("__cell"))
-    val w = Window.partitionBy(col("id")).orderBy(desc("similarity"), asc("neighbor_id"))
-    qCells.join(rCells, Seq("__cell"))
+    keepBest(probeCells(q, cents, nProbe).join(rCells, Seq("__cell"))
       .filter(col("id") =!= col("neighbor_id"))
-      .select(col("id"), col("neighbor_id"), cosine(col("__qv"), col("__rv")).as("similarity"))
-      .withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .drop("__rank")
+      .select(col("id"), col("neighbor_id"), cosine(col("__qv"), col("__rv")).as("similarity")),
+      desc("similarity"), k)
   }
 
   /** LSH-bucketed approximate cosine top-k — the 100 TB scale path.
@@ -260,25 +264,46 @@ object Proximity {
                       vecCol: String, k: Int, metric: String, dim: Int,
                       bruteMaxQueries: Long = 65536,
                       queryCountHint: Option[Long] = None): DataFrame = {
-    val n = queryCountHint.getOrElse(queries.count())
-    val brute = n <= bruteMaxQueries
-    graft.core.Routing.record("knn-" + metric,
-      if (brute) "exact" else "bucketed", n)
-    if (!brute) org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      s"knnJoinAdaptive: $n query rows > bruteMaxQueries=$bruteMaxQueries — " +
-        s"routing '$metric' to the bucketed APPROXIMATE path (measured " +
-        "recall ~0.7+); pass bruteMaxQueries=Long.MaxValue to pin exact")
-    metric match {
-      case "euclidean" =>
-        if (brute) knnJoin(queries, refs, idCol, vecCol, k, euclidean)
-        else knnJoinBucketedEuclidean(queries, refs, idCol, vecCol, k, dim)
-      case "ruzicka" =>
-        if (brute) knnJoin(queries, refs, idCol, vecCol, k, ruzicka)
-        else knnJoinBucketedRuzicka(queries, refs, idCol, vecCol, k)
+    val distance: (Column, Column) => Column = metric match {
+      case "euclidean" => euclidean
+      case "ruzicka" => ruzicka
       case other => throw new IllegalArgumentException(
         s"unknown metric '$other' (euclidean | ruzicka)")
     }
+    val brute = routeBySize("knn-" + metric, "exact", "bucketed", queries,
+        bruteMaxQueries, queryCountHint) { n =>
+      s"knnJoinAdaptive: $n query rows > bruteMaxQueries=$bruteMaxQueries — " +
+        s"routing '$metric' to the bucketed APPROXIMATE path (measured " +
+        "recall ~0.7+); pass bruteMaxQueries=Long.MaxValue to pin exact"
+    }
+    if (brute) knnJoin(queries, refs, idCol, vecCol, k, distance)
+    else if (metric == "euclidean")
+      knnJoinBucketedEuclidean(queries, refs, idCol, vecCol, k, dim)
+    else knnJoinBucketedRuzicka(queries, refs, idCol, vecCol, k)
   }
+
+  /** The size-routing step the adaptive operators share: count the query
+    * rows (unless `queryCountHint` gives them), record `op=exact` or
+    * `op=approx` in [[graft.core.Routing]], and log `warning(n)` at warn
+    * level when the approximate path takes over. Returns whether the
+    * exact path runs. */
+  private[proximity] def routeBySize(op: String, exact: String, approx: String,
+                                     queries: DataFrame, bruteMaxQueries: Long,
+                                     queryCountHint: Option[Long])(
+                                     warning: Long => String): Boolean = {
+    val n = queryCountHint.getOrElse(queries.count())
+    val brute = n <= bruteMaxQueries
+    graft.core.Routing.record(op, if (brute) exact else approx, n)
+    if (!brute) org.slf4j.LoggerFactory.getLogger(getClass).warn(warning(n))
+    brute
+  }
+
+  /** The hot-bucket guard of the bucketed paths: at most `maxBucket`
+    * reference rows per `__key` bucket, lowest neighbor ids first
+    * (`maxBucket <= 0` keeps all). */
+  private def capBuckets(rb: DataFrame, maxBucket: Int): DataFrame =
+    if (maxBucket > 0) TopK(rb, Seq(col("__key")), Seq(col("neighbor_id")), maxBucket)
+    else rb
 
   /** Deterministic seeded random projection: dot of `vec` with a
     * MurmurHash3-derived plane. Shares the coefficient scheme of
@@ -321,9 +346,7 @@ object Proximity {
                                cellWidth: Option[Double] = None,
                                maxBucket: Int = 10000,
                                tableOffset: Int = 0): DataFrame = {
-    val toD: Column => Column = c => transform(c, x => x.cast("double"))
-    val q = queries.select(col(idCol).as("id"), toD(col(vecCol)).as("__qv"))
-    val r = refs.select(col(idCol).as("neighbor_id"), toD(col(vecCol)).as("__rv"))
+    val (q, r) = sides(queries, refs, idCol, toD(col(vecCol)))
     // data-derived cell width: stddev of the first projection over the
     // reference side (ONE aggregate → a broadcast literal, the bounded
     // two-phase pattern used throughout)
@@ -345,26 +368,15 @@ object Proximity {
       hash(lit(t) +: cells: _*)
     }
     val cand = (tableOffset until tableOffset + nTables).map { t =>
-      val rb = r.withColumn("__key", cellKey(col("__rv"), t))
-      // hot-bucket guard: keep at most maxBucket refs per cell
-      val rCapped =
-        if (maxBucket > 0)
-          rb.withColumn("__bn", row_number().over(
-              Window.partitionBy("__key").orderBy("neighbor_id")))
-            .filter(col("__bn") <= maxBucket).drop("__bn")
-        else rb
+      val rCapped = capBuckets(r.withColumn("__key", cellKey(col("__rv"), t)), maxBucket)
       q.withColumn("__key", cellKey(col("__qv"), t))
         .join(rCapped, Seq("__key"))
         .filter(col("id") =!= col("neighbor_id"))
         .select(col("id"), col("neighbor_id"), col("__qv"), col("__rv"))
     }.reduce(_ unionByName _).dropDuplicates("id", "neighbor_id")
     val d = euclidean(col("__qv"), col("__rv"))
-    val w2 = Window.partitionBy(col("id")).orderBy(asc("distance"), asc("neighbor_id"))
-    cand.select(col("id"), col("neighbor_id"),
-        when(d < 1e-6, 0.0).otherwise(d).as("distance"))
-      .withColumn("__rank", row_number().over(w2))
-      .filter(col("__rank") <= k)
-      .drop("__rank")
+    keepBest(cand.select(col("id"), col("neighbor_id"), clamp(d).as("distance")),
+      asc("distance"), k)
   }
 
   /** Banded-MinHash approximate Ruzicka KNN — the fingerprint self-KNN
@@ -386,7 +398,6 @@ object Proximity {
                              tableOffset: Int = 0): DataFrame = {
     require(nHashes % bandSize == 0, "nHashes must be a multiple of bandSize")
     val nBands = nHashes / bandSize
-    val toD: Column => Column = c => transform(c, x => x.cast("double"))
     // transform's (element, index) overload exposes the support index;
     // MinHash value h = min over the support of hash(h, index); the
     // tableOffset shifts the hash-function family (an independent "seed")
@@ -395,53 +406,37 @@ object Proximity {
         transform(vec, (x, i) => when(x > 0, hash(lit(h + tableOffset * nHashes), i))),
         c => c.isNotNull))
     }: _*)
-    val q = queries.select(col(idCol).as("id"), toD(col(vecCol)).as("__qv"))
-      .withColumn("__sig", sigIdx(col("__qv")))
-    val r = refs.select(col(idCol).as("neighbor_id"), toD(col(vecCol)).as("__rv"))
-      .withColumn("__sig", sigIdx(col("__rv")))
+    val (qv, rv) = sides(queries, refs, idCol, toD(col(vecCol)))
+    val q = qv.withColumn("__sig", sigIdx(col("__qv")))
+    val r = rv.withColumn("__sig", sigIdx(col("__rv")))
     val cand = (0 until nBands).map { b =>
       def bandKey(sigCol: Column): Column =
         hash(lit(b) +: (0 until bandSize).map(j =>
           sigCol.getItem(b * bandSize + j)): _*)
-      val rb = r.withColumn("__key", bandKey(col("__sig")))
-      val rCapped =
-        if (maxBucket > 0)
-          rb.withColumn("__bn", row_number().over(
-              Window.partitionBy("__key").orderBy("neighbor_id")))
-            .filter(col("__bn") <= maxBucket).drop("__bn")
-        else rb
+      val rCapped = capBuckets(r.withColumn("__key", bandKey(col("__sig"))), maxBucket)
       q.withColumn("__key", bandKey(col("__sig")))
         .join(rCapped.drop("__sig"), Seq("__key"))
         .filter(col("id") =!= col("neighbor_id"))
         .select(col("id"), col("neighbor_id"), col("__qv"), col("__rv"))
     }.reduce(_ unionByName _).dropDuplicates("id", "neighbor_id")
     val d = ruzicka(col("__qv"), col("__rv"))
-    val w = Window.partitionBy(col("id")).orderBy(asc("distance"), asc("neighbor_id"))
-    cand.select(col("id"), col("neighbor_id"),
-        when(d < 1e-6, 0.0).otherwise(d).as("distance"))
-      .withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .drop("__rank")
+    keepBest(cand.select(col("id"), col("neighbor_id"), clamp(d).as("distance")),
+      asc("distance"), k)
   }
 
   def cosineTopKLsh(queries: DataFrame, refs: DataFrame, idCol: String, vecCol: String,
                     k: Int, dim: Int, nPlanes: Int = 8, nTables: Int = 4,
                     tableOffset: Int = 0): DataFrame = {
-    val toD: Column => Column = c => transform(c, x => x.cast("double"))
     def signature(vec: Column, t: Int): Column =
       hyperplaneSignature(vec, t, nPlanes, dim)
     val cand = (tableOffset until tableOffset + nTables).map { t =>
-      val q = queries.select(col(idCol).as("id"), toD(col(vecCol)).as("__qv"))
-        .withColumn("__sig", signature(col("__qv"), t))
-      val r = refs.select(col(idCol).as("neighbor_id"), toD(col(vecCol)).as("__rv"))
-        .withColumn("__sig", signature(col("__rv"), t))
-      r.join(q, Seq("__sig")).filter(col("id") =!= col("neighbor_id"))
+      val (q, r) = sides(queries, refs, idCol, toD(col(vecCol)))
+      r.withColumn("__sig", signature(col("__rv"), t))
+        .join(q.withColumn("__sig", signature(col("__qv"), t)), Seq("__sig"))
+        .filter(col("id") =!= col("neighbor_id"))
         .select(col("id"), col("neighbor_id"), col("__qv"), col("__rv"))
     }.reduce(_ unionByName _).dropDuplicates("id", "neighbor_id")
-    val w = Window.partitionBy(col("id")).orderBy(desc("similarity"), asc("neighbor_id"))
-    cand.select(col("id"), col("neighbor_id"), cosine(col("__qv"), col("__rv")).as("similarity"))
-      .withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .drop("__rank")
+    keepBest(cand.select(col("id"), col("neighbor_id"),
+      cosine(col("__qv"), col("__rv")).as("similarity")), desc("similarity"), k)
   }
 }

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.TopK
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -35,7 +36,6 @@ object Bm25 {
   def search(docs: DataFrame, idCol: String, textCol: String,
              queries: DataFrame, queryIdCol: String, queryTextCol: String,
              k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (postings, docLen) = index(docs, idCol, textCol)
     val n = docLen.count().toDouble
     if (n == 0) // empty corpus: no postings, no hits — schema-correct empty
@@ -62,7 +62,7 @@ object Bm25 {
       // math but can differ by float-summation order — rounding collapses
       // them so the (score, id) tie-break is engine-stable
       .agg(round(sum("__s"), 6).as("bm25"))
-    val w = Window.partitionBy(queryIdCol).orderBy(col("bm25").desc, col(idCol).asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    TopK(scored, Seq(col(queryIdCol)), Seq(col("bm25").desc, col(idCol).asc), k,
+      Some("rank"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, TopK}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -54,12 +54,8 @@ object Distinctive {
       // float divergence between engines cannot reorder the cut
       .withColumn("__z", round(col("__lo") /
         sqrt(lit(1.0) / (col("y_sw") + a) + lit(1.0) / (col("__yr") + a)), 6))
-    val w = Window.partitionBy("source")
-      .orderBy(col("__z").desc, col("term"))
-    Checkpoints.local(scored
-      .filter(col("y_sw") >= minCount)
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= topK)
+    Checkpoints.local(TopK(scored.filter(col("y_sw") >= minCount),
+        Seq(col("source")), Seq(col("__z").desc, col("term")), topK)
       .select(col("source"), col("term"), col("y_sw").as("n_source"),
         col("__yr").as("n_rest"), round(col("__lo"), 6).as("log_odds"),
         col("__z").as("z")))

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.TopK
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -63,16 +64,13 @@ object NegativeSampling {
     val anc = anchors.select(col(idCol).as("anchor_id"),
       col(sourceCol).as("__asrc"),
       hexd(col(idCol), ":probe").as("__b"))
-    import org.apache.spark.sql.expressions.Window
-    anc.join(cand, "__b")
-      .filter(col("__cid") =!= col("anchor_id") &&
-        col("neg_source") =!= col("__asrc"))
-      .withColumn("__draw",
-        md5(concat(col("anchor_id").cast("string"), lit(":"),
-          col("__cid").cast("string"))))
-      .withColumn("neg_rank", row_number().over(
-        Window.partitionBy("anchor_id").orderBy(col("__draw"), col("__cid"))))
-      .filter(col("neg_rank") <= k)
+    TopK(anc.join(cand, "__b")
+        .filter(col("__cid") =!= col("anchor_id") &&
+          col("neg_source") =!= col("__asrc"))
+        .withColumn("__draw",
+          md5(concat(col("anchor_id").cast("string"), lit(":"),
+            col("__cid").cast("string")))),
+      Seq(col("anchor_id")), Seq(col("__draw"), col("__cid")), k, Some("neg_rank"))
       .select(col("anchor_id"), col("neg_rank"), col("__cid").as("neg_id"),
         col("neg_source"))
   }

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.core.TopK
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -47,7 +48,6 @@ object Rake {
   def keywordsBySource(docs: DataFrame, srcCol: String, textCol: String,
                        lang: String = "en", maxLen: Int = 4,
                        topK: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val inst = docs.filter(col(textCol).isNotNull)
       .select(col(srcCol).as("source"),
         explode(phraseArray(col(textCol), lang, maxLen)).as("phrase"))
@@ -68,10 +68,8 @@ object Rake {
       .agg(min("__plen").as("n_words"),
         min("n_occurrences").as("n_occurrences"),
         sum("__ws").as("__s6"))
-    val w = Window.partitionBy("source")
-      .orderBy(col("__s6").desc, col("phrase"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
+    TopK(scored, Seq(col("source")), Seq(col("__s6").desc, col("phrase")), topK,
+        Some("rank"))
       .select(col("source"), col("phrase"), col("n_words"),
         col("n_occurrences"),
         round(col("__s6").cast("double") / 1e6, 6).as("score"),

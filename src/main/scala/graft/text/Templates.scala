@@ -1,7 +1,7 @@
 package graft.text
 
+import graft.core.TopK
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Template / boilerplate-HEADER detection by shared document prefixes
@@ -39,10 +39,7 @@ object Templates {
       .agg(count(lit(1)).as("__c"))
     val nd = base.groupBy(col(srcCol).as("source"))
       .agg(count(lit(1)).as("n_docs"))
-    val w = Window.partitionBy("source")
-      .orderBy(col("__c").desc, col("__p").desc)
-    val top = g.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
+    val top = TopK(g, Seq(col("source")), Seq(col("__c").desc, col("__p").desc), 1)
       .select(col("source"), col("__p").as("top_prefix"),
         col("__c").as("top_count"))
     val agg = g.groupBy("source")

@@ -1,5 +1,6 @@
 package graft.views
 
+import graft.core.TopK
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -82,11 +83,7 @@ object Views {
     * (reference: src/workbench/core/artifacts/feature_set_core.py:370-391).
     */
   def snapshot(df: DataFrame, idColumn: String, orderCols: Seq[Column]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(idColumn)).orderBy(orderCols: _*)
     val deleted = if (df.columns.contains("is_deleted")) col("is_deleted") else lit(false)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && !deleted)
-      .drop("__rn")
+    TopK(df, Seq(col(idColumn)), orderCols, 1).filter(!deleted)
   }
 }

@@ -22,6 +22,19 @@ class ProximitySpec extends SparkSpec {
     }
   }
 
+  test("knnJoinAdaptive: an unknown metric throws before it counts or records a route") {
+    val q = emb.filter(col("vec_id") < 10)
+    graft.core.Routing.drain()
+    val jobs = jobsDuring {
+      intercept[IllegalArgumentException] {
+        Proximity.knnJoinAdaptive(q, emb, "vec_id", "embedding", 3, "cosine", 64)
+      }
+      ()
+    }
+    assert(jobs == 0)
+    assert(graft.core.Routing.drain().isEmpty)
+  }
+
   test("cosineTopK: most similar first, in [-1, 1]") {
     val res = Proximity.cosineTopK(emb.filter(col("vec_id") < 2), emb, "vec_id", "embedding", 3).collect()
     assert(res.length == 6)
